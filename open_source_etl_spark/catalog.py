@@ -127,9 +127,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
-def load_table_compute(
-    spark: SparkSession, sf_dir: str, name: str, *, heavy: bool = True
-) -> DataFrame:
+def load_table_compute(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan for CPU-bound kernels (minhash signatures, pairwise Jaccard,
     edit distance, vector math): when the file yields fewer splits than
     cores — a small table stored as one row group — a round-robin
@@ -141,17 +139,8 @@ def load_table_compute(
     pays the shuffle.  Only a scan too small to split (where the shuffle
     is trivially cheap, but the serial CPU cost is not) gets widened —
     measured 4-7× on the sf0.1 dedup family on local[32].
-
-    ``heavy=False`` declares a CHEAP per-row kernel (header parse,
-    block-mean, frame slice, histogram): there the per-row work is on
-    the order of the scan itself, so the round-robin shuffle costs more
-    than the widened kernel saves and the scan is returned as-is.  The
-    gate is cost-based, not scale-based — at cluster scale both paths
-    read the same multi-split scan.
     """
     df = load_table(spark, sf_dir, name)
-    if not heavy:
-        return df
     target = spark.sparkContext.defaultParallelism
     if _scan_splits(spark, sf_dir, name, df) < target:
         return df.repartition(target)

@@ -37,7 +37,7 @@ import struct
 from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from .schema import IMAGE_META_SCHEMA
 
@@ -312,12 +312,9 @@ class _KernelCapture:
     """Duck-typed DataFrame stand-in that records a builder's single
     ``select(...).mapInPandas(kernel, schema)`` call so the kernel can
     be re-hosted (``fuse_synth_decode``).  Any other DataFrame method
-    raises AttributeError, which the fuser treats as "not capturable"
-    and falls back to the two-stage composition.  The selected columns
-    are recorded too (ADVICE r14): the fused stage feeds the synth
-    kernel batches carrying ONLY doc_id, so a synth builder selecting
-    anything else must fall back to the two-stage form instead of
-    KeyError-ing inside the worker."""
+    raises AttributeError, which the fuser reports as a TypeError
+    naming the builder.  The selected columns are recorded too: the
+    fused stage feeds the synth kernel batches carrying ONLY doc_id."""
 
     __slots__ = ("kernel", "schema", "select_cols")
 
@@ -336,6 +333,24 @@ class _KernelCapture:
         return self
 
 
+def _name(builder) -> str:
+    return getattr(builder, "__qualname__", repr(builder))
+
+
+def _capture(builder) -> _KernelCapture:
+    cap = _KernelCapture()
+    name = _name(builder)
+    try:
+        shaped = builder(cap) is cap and cap.kernel is not None
+    except AttributeError as exc:
+        raise TypeError(
+            f"fuse_synth_decode: {name} is not a select().mapInPandas() builder"
+        ) from exc
+    if not shaped:
+        raise TypeError(f"fuse_synth_decode: {name} did not call mapInPandas")
+    return cap
+
+
 def fuse_synth_decode(docs_df: DataFrame, synthesize_fn, decode_fn) -> DataFrame:
     """Compose a ``synthesize_X`` / ``decode_X`` pair into ONE Python
     stage: the synthesized payload bytes stay inside the Python worker
@@ -347,30 +362,68 @@ def fuse_synth_decode(docs_df: DataFrame, synthesize_fn, decode_fn) -> DataFrame
 
     Both builders keep their public DataFrame-in/DataFrame-out
     contract for tests and composition elsewhere; this helper only
-    captures their kernels (``_KernelCapture``).  Any builder that
-    does more than ``select().mapInPandas()`` silently falls back to
-    the original two-stage form, so fusion can never change what a
-    query computes."""
-    try:
-        cs, cd = _KernelCapture(), _KernelCapture()
-        if synthesize_fn(cs) is not cs or decode_fn(cd) is not cd:
-            raise TypeError("builder shape not capturable")
-        if cs.select_cols != ("doc_id",):
-            # the fused input carries only doc_id; a synth kernel that
-            # selected more would fail inside the worker, so fall back
-            raise TypeError("synth builder selects beyond doc_id")
-        synth_kernel = cs.kernel
-        decode_kernel = cd.kernel
-        out_schema = cd.schema
-        if synth_kernel is None or decode_kernel is None or out_schema is None:
-            raise TypeError("builder did not call mapInPandas")
-    except Exception:
-        return decode_fn(synthesize_fn(docs_df))
+    captures their kernels (``_KernelCapture``).  A builder that does
+    more than ``select().mapInPandas()``, or a synth builder that
+    selects anything but ``doc_id``, raises TypeError naming it: there
+    is no silent two-stage fallback."""
+    cs, cd = _capture(synthesize_fn), _capture(decode_fn)
+    if cs.select_cols != ("doc_id",):
+        raise TypeError(
+            f"fuse_synth_decode: {_name(synthesize_fn)} selects "
+            f"{cs.select_cols}, but the fused stage carries only doc_id"
+        )
+    synth_kernel, decode_kernel = cs.kernel, cd.kernel
 
     def fused(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         return decode_kernel(synth_kernel(batches))
 
-    return docs_df.select("doc_id").mapInPandas(fused, out_schema)
+    return docs_df.select("doc_id").mapInPandas(fused, cd.schema)
+
+
+def doc_range_query(
+    spark: SparkSession, sf_dir: str, build, *order: str, docs_fn=None
+) -> DataFrame:
+    """``build`` over ``documents`` range-partitioned by ``doc_id``,
+    sorted within each partition by ``order`` — the same rows, in the
+    same order, as ``build(docs).orderBy(*order)``, for any ``build``
+    whose output rows carry their input row's ``doc_id`` (every media
+    kernel does): partition i holds the i-th ``doc_id`` range, so the
+    partitions concatenate in order.
+
+    ``orderBy`` on a kernel's output puts ``Exchange rangepartitioning``
+    directly above the Python stage, and ``RangePartitioner`` samples
+    by running its whole child once before the shuffle map stage runs
+    it again: every kernel ran twice.  Partitioning the scan instead
+    samples a cheap projection, runs the kernel once, and shuffles
+    input rows (8-byte ids, for ``docs_fn=None``) rather than decoded
+    ones.  The width is explicit so AQE cannot coalesce the tiny id
+    shuffle into one partition (one core doing all the Python work),
+    and never narrower than the scan's own split count.
+
+    ``docs_fn`` maps the scan to the rows ``build`` reads (default:
+    ``doc_id`` only)."""
+    if not order or order[0] != "doc_id":
+        raise ValueError(f"doc_range_query: order must start with doc_id, got {order}")
+    from ..catalog import _scan_splits, load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    n = max(
+        spark.sparkContext.defaultParallelism,
+        _scan_splits(spark, sf_dir, "documents", docs),
+    )
+    rows = docs.select("doc_id") if docs_fn is None else docs_fn(docs)
+    return build(rows.repartitionByRange(n, "doc_id")).sortWithinPartitions(*order)
+
+
+def media_query(
+    spark: SparkSession, sf_dir: str, synthesize_fn, decode_fn, *order: str
+) -> DataFrame:
+    """A fused synth→decode media query over ``documents``, ordered by
+    ``order`` (which starts with ``doc_id``): ``fuse_synth_decode``
+    under ``doc_range_query``, so each kernel runs once per doc."""
+    return doc_range_query(
+        spark, sf_dir, lambda ids: fuse_synth_decode(ids, synthesize_fn, decode_fn), *order
+    )
 
 
 WAV_META_SCHEMA = (

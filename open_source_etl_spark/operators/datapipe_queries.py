@@ -1261,9 +1261,11 @@ def datapipe_boilerplate_prune(
                     for doc_id, text, n in zip(
                         pdf["doc_id"], pdf["text"], pdf["n_chars"]
                     ):
-                        n = int(n)
-                        if n < 20:
+                        # NULL text or n_chars yields no shingle, as in
+                        # the string form and the oracle SQL
+                        if text is None or pd.isna(n) or int(n) < 20:
                             continue
+                        n = int(n)
                         if len(text) != n or not text.isascii():
                             # generic fallback: same polynomial over
                             # each CHAR window's UTF-8 bytes (identical
@@ -1306,7 +1308,7 @@ def datapipe_boilerplate_prune(
             "doc_id",
             F.explode(
                 F.when(
-                    F.col("n_chars") >= 20,
+                    (F.col("n_chars") >= 20) & F.col("text").isNotNull(),
                     F.expr(
                         "array_distinct(transform(sequence(1, n_chars - 19), "
                         "i -> substring(text, i, 20)))"

@@ -13,8 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, load_table_compute
-from ..multimodal.decode import fuse_synth_decode
+from ..catalog import load_table
+from ..multimodal.decode import doc_range_query, media_query
 from ..multimodal import decode_image_meta, perceptual_hash, sample_frames, with_media_payload
 from ..registry import query
 
@@ -50,9 +50,10 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     + typed metadata) → ``mapInPandas`` decode kernel.  Deterministic fake
     header parse (dimensions are a pure function of byte length); the real
     codec site raises ``NotImplementedError`` (no image libs here)."""
-    docs = load_table_compute(spark, sf_dir, "documents", heavy=False)
-    media = with_media_payload(docs)
-    return decode_image_meta(media, codec="fake").orderBy("doc_id")
+    return doc_range_query(
+        spark, sf_dir, lambda d: decode_image_meta(with_media_payload(d)), "doc_id",
+        docs_fn=lambda d: d.select("doc_id", "text"),
+    )
 
 
 @query(
@@ -77,11 +78,11 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video-frame sampling shape: the payload is treated as fixed-size
     frames and every 10th frame is emitted — a row-EXPANDING mapInPandas
     kernel (1 media row → n_frames/stride frame rows), the plumbing real
-    frame extraction uses.  Zero shuffle; embarrassingly parallel."""
-    docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
-    media = with_media_payload(docs)
-    return sample_frames(media, frame_bytes=100, stride=10).orderBy(
-        "doc_id", "frame_idx"
+    frame extraction uses.  Embarrassingly parallel; the one shuffle
+    range-partitions the input docs (``doc_range_query``)."""
+    return doc_range_query(
+        spark, sf_dir, lambda d: sample_frames(with_media_payload(d), frame_bytes=100, stride=10),
+        "doc_id", "frame_idx", docs_fn=_ascii_docs,
     )
 
 
@@ -112,10 +113,9 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas kernel (the VAD/loudness pre-filter shape)."""
     from ..multimodal.decode import audio_chunk_energy
 
-    docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
-    media = with_media_payload(docs)
-    return audio_chunk_energy(media, chunk_samples=400).orderBy(
-        "doc_id", "chunk_idx"
+    return doc_range_query(
+        spark, sf_dir, lambda d: audio_chunk_energy(with_media_payload(d), chunk_samples=400),
+        "doc_id", "chunk_idx", docs_fn=_ascii_docs,
     )
 
 
@@ -156,12 +156,13 @@ def multimodal_resize_blockmean(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot sort list cells (CORRECTNESS_r01 nested-output class)."""
     from ..multimodal.decode import block_mean_resize
 
-    docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
-    media = with_media_payload(docs)
-    out = block_mean_resize(media, factor=8)
-    return out.withColumn(
-        "head", F.array_join(F.transform("head", lambda x: x.cast("string")), ",")
-    ).orderBy("doc_id")
+    return doc_range_query(
+        spark, sf_dir,
+        lambda d: block_mean_resize(with_media_payload(d), factor=8).withColumn(
+            "head", F.array_join(F.transform("head", lambda x: x.cast("string")), ",")
+        ),
+        "doc_id", docs_fn=_ascii_docs,
+    )
 
 
 @query(
@@ -188,18 +189,19 @@ def multimodal_resize_blockmean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_feature_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-extraction kernel: fixed-width 16-bin byte histogram per
     media row (the embed/classify step of a multimodal pipeline) with an
-    argmax ``top_bin``; vectorized numpy inside mapInPandas, zero shuffle.
+    argmax ``top_bin``; vectorized numpy inside mapInPandas.
 
     ``hist`` ships as a comma-joined string — the driver's pandas hasher
     cannot sort list cells (CORRECTNESS_r01 nested-output class)."""
     from ..multimodal.decode import byte_histogram
 
-    docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
-    media = with_media_payload(docs)
-    out = byte_histogram(media)
-    return out.withColumn(
-        "hist", F.array_join(F.transform("hist", lambda x: x.cast("string")), ",")
-    ).orderBy("doc_id")
+    return doc_range_query(
+        spark, sf_dir,
+        lambda d: byte_histogram(with_media_payload(d)).withColumn(
+            "hist", F.array_join(F.transform("hist", lambda x: x.cast("string")), ",")
+        ),
+        "doc_id", docs_fn=_ascii_docs,
+    )
 
 
 @query(
@@ -259,7 +261,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     size — bound the pairwise term, same argument as the LSH band join."""
     from pyspark.sql import functions as F
 
-    docs = _ascii_docs(load_table_compute(spark, sf_dir, "documents", heavy=False))
+    docs = _ascii_docs(load_table(spark, sf_dir, "documents"))
     hashes = perceptual_hash(with_media_payload(docs), codec="fake")
     a = hashes.select(F.col("doc_id").alias("doc_a"), "phash")
     b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"))
@@ -295,14 +297,14 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode: spec-compliant RIFF/WAVE payloads (written by
     the stdlib ``wave`` module) parsed back by a mapInPandas kernel —
     chunk walk for framerate/channels/width/frames plus exact integer
-    peak and RMS from the PCM samples.  Two chained Python stages
-    (synthesize standing in for binaryFile ingest, then decode), zero
-    shuffle; compressed audio (MP3/AAC) stays behind the declared
-    ``NotImplementedError`` sites in ``multimodal/decode.py``."""
+    peak and RMS from the PCM samples.  Synthesize (standing in for
+    binaryFile ingest) and decode fused into one Python stage, one
+    8-byte doc_id shuffle (``media_query``); compressed audio
+    (MP3/AAC) stays behind the declared ``NotImplementedError`` sites
+    in ``multimodal/decode.py``."""
     from ..multimodal.decode import decode_wav_real, synthesize_wav
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav, decode_wav_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_wav, decode_wav_real, "doc_id")
 
 
 @query(
@@ -333,8 +335,7 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual bytes.  JPEG/PNG remain behind ``NotImplementedError``."""
     from ..multimodal.decode import decode_bmp_real, synthesize_bmp
 
-    docs = load_table_compute(spark, sf_dir, "documents", heavy=False)
-    return fuse_synth_decode(docs, synthesize_bmp, decode_bmp_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_bmp, decode_bmp_real, "doc_id")
 
 
 @query(
@@ -367,10 +368,7 @@ def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine RIFF/WAVE bytes end to end."""
     from ..multimodal.decode import synthesize_wav, wav_window_features
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav, wav_window_features).orderBy(
-        "doc_id", "window_idx"
-    )
+    return media_query(spark, sf_dir, synthesize_wav, wav_window_features, "doc_id", "window_idx")
 
 
 @query(
@@ -403,8 +401,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels (a wrong unfilter implementation shifts every mean)."""
     from ..multimodal.decode import decode_png_real, synthesize_png
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png, decode_png_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_png, decode_png_real, "doc_id")
 
 
 @query(
@@ -439,8 +436,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     or IDCT scale shifts every mean).  MP3 remains a declared stub."""
     from ..multimodal.decode import decode_jpeg_real, synthesize_jpeg
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg, decode_jpeg_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_jpeg, decode_jpeg_real, "doc_id")
 
 
 @query(
@@ -488,8 +484,7 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain stubs (no codec libs in this container)."""
     from ..multimodal.decode import decode_gif_real, synthesize_gif
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif, decode_gif_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_gif, decode_gif_real, "doc_id")
 
 
 @query(
@@ -530,8 +525,7 @@ def multimodal_avi_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     without new codec work (H.264 stays a declared stub)."""
     from ..multimodal.decode import decode_avi_mjpeg, synthesize_avi
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_avi, decode_avi_mjpeg).orderBy("doc_id", "frame_idx")
+    return media_query(spark, sf_dir, synthesize_avi, decode_avi_mjpeg, "doc_id", "frame_idx")
 
 
 @query(
@@ -589,8 +583,7 @@ def multimodal_avi_av_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejects these valid files)."""
     from ..multimodal.decode import decode_avi_av, synthesize_avi_av
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_avi_av, decode_avi_av).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_avi_av, decode_avi_av, "doc_id")
 
 
 @query(
@@ -664,8 +657,7 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     without decoding audio."""
     from ..multimodal.decode import decode_mp3_frames, synthesize_mp3
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3, decode_mp3_frames).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3, decode_mp3_frames, "doc_id")
 
 
 @query(
@@ -747,8 +739,7 @@ def multimodal_h264_nal_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stripping is real, not a start-code count."""
     from ..multimodal.decode import decode_h264_nals, synthesize_h264
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264, decode_h264_nals).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_h264, decode_h264_nals, "doc_id")
 
 
 @query(
@@ -798,9 +789,8 @@ def multimodal_h264_ipcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the header-level ``multimodal_h264_nal_walk``."""
     from ..multimodal.decode import decode_h264_ipcm, synthesize_h264_ipcm
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_ipcm, decode_h264_ipcm).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_ipcm, decode_h264_ipcm, "doc_id", "frame_idx"
     )
 
 
@@ -871,10 +861,7 @@ def multimodal_jpeg_progressive_decode(
         synthesize_jpeg_prog,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_prog, decode_jpeg_progressive).orderBy(
-        "doc_id"
-    )
+    return media_query(spark, sf_dir, synthesize_jpeg_prog, decode_jpeg_progressive, "doc_id")
 
 
 @query(
@@ -957,8 +944,7 @@ def multimodal_jpeg_color_decode(
         synthesize_jpeg_color,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_color, decode_jpeg_color).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_jpeg_color, decode_jpeg_color, "doc_id")
 
 
 @query(
@@ -1041,8 +1027,7 @@ def multimodal_jpeg_color_restart_decode(
         synthesize_jpeg_cdri,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_cdri, decode_jpeg_color).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_jpeg_cdri, decode_jpeg_color, "doc_id")
 
 
 @query(
@@ -1178,8 +1163,7 @@ def multimodal_h264_cavlc_decode(
         synthesize_h264_cavlc,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_cavlc, decode_h264_cavlc).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_h264_cavlc, decode_h264_cavlc, "doc_id")
 
 
 @query(
@@ -1231,8 +1215,7 @@ def multimodal_jpeg_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds."""
     from ..multimodal.decode import decode_jpeg_exif, synthesize_jpeg_exif
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_exif, decode_jpeg_exif).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_jpeg_exif, decode_jpeg_exif, "doc_id")
 
 
 @query(
@@ -1288,8 +1271,7 @@ def multimodal_aac_adts_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds."""
     from ..multimodal.decode import decode_aac_adts, synthesize_aac_adts
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_aac_adts, decode_aac_adts).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_aac_adts, decode_aac_adts, "doc_id")
 
 
 @query(
@@ -1336,10 +1318,7 @@ def multimodal_mp3_id3v1_tags(
         synthesize_mp3_id3v1,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_id3v1, decode_mp3_id3v1).orderBy(
-        "doc_id"
-    )
+    return media_query(spark, sf_dir, synthesize_mp3_id3v1, decode_mp3_id3v1, "doc_id")
 
 
 @query(
@@ -1412,8 +1391,7 @@ def multimodal_wav_g711_decode(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_wav_g711, synthesize_wav_g711
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav_g711, decode_wav_g711).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_wav_g711, decode_wav_g711, "doc_id")
 
 
 @query(
@@ -1472,8 +1450,7 @@ def multimodal_gif_interlaced_decode(
         synthesize_gif_interlaced,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_interlaced, decode_gif_interlaced).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_gif_interlaced, decode_gif_interlaced, "doc_id")
 
 
 @query(
@@ -1550,8 +1527,7 @@ def multimodal_heif_box_walk(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_heif, synthesize_heif
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_heif, decode_heif).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_heif, decode_heif, "doc_id")
 
 
 @query(
@@ -1635,8 +1611,7 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface the brief adds."""
     from ..multimodal.decode import decode_mp4, synthesize_mp4
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp4, decode_mp4).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp4, decode_mp4, "doc_id")
 
 
 @query(
@@ -1716,8 +1691,7 @@ def multimodal_mp4_frag_flags_walk(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp4, synthesize_mp4_fflags
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp4_fflags, decode_mp4).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp4_fflags, decode_mp4, "doc_id")
 
 
 @query(
@@ -1802,8 +1776,7 @@ def multimodal_webm_ebml_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds."""
     from ..multimodal.decode import decode_webm, synthesize_webm
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webm, decode_webm).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_webm, decode_webm, "doc_id")
 
 
 @query(
@@ -1884,8 +1857,7 @@ def multimodal_ogg_opus_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds."""
     from ..multimodal.decode import decode_ogg_opus, synthesize_ogg_opus
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_ogg_opus, decode_ogg_opus).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_ogg_opus, decode_ogg_opus, "doc_id")
 
 
 @query(
@@ -2049,8 +2021,7 @@ def multimodal_mp3_maindata_decode(spark: SparkSession, sf_dir: str) -> DataFram
     count1-table-A dispatch in ``multimodal_mp3_hufftables_decode``."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_md
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_md, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_md, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2170,8 +2141,7 @@ def multimodal_mp3_short_block_decode(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_sb
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_sb, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_sb, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2303,8 +2273,7 @@ def multimodal_mp3_hufftables_decode(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ht
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ht, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_ht, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2447,8 +2416,7 @@ def multimodal_mp3_linbits_decode(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_lb
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_lb, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_lb, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2533,9 +2501,8 @@ def multimodal_h264_multiref_decode(
         synthesize_h264_multiref,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_multiref, decode_h264_multiref).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_multiref, decode_h264_multiref, "doc_id", "frame_idx"
     )
 
 
@@ -2601,10 +2568,7 @@ def multimodal_jpeg_prog_restart_decode(
         synthesize_jpeg_prog_rst,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_jpeg_prog_rst, decode_jpeg_progressive).orderBy(
-        "doc_id"
-    )
+    return media_query(spark, sf_dir, synthesize_jpeg_prog_rst, decode_jpeg_progressive, "doc_id")
 
 
 @query(
@@ -2719,9 +2683,8 @@ def multimodal_h264_p8x8_decode(
         synthesize_h264_p8x8,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_p8x8, decode_h264_p8x8).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_p8x8, decode_h264_p8x8, "doc_id", "frame_idx"
     )
 
 
@@ -2820,9 +2783,8 @@ def multimodal_h264_tdirect_decode(
         synthesize_h264_tdirect,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_tdirect, decode_h264_tdirect).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_tdirect, decode_h264_tdirect, "doc_id", "frame_idx"
     )
 
 
@@ -3016,9 +2978,8 @@ def multimodal_h264_fracpel_decode(
         synthesize_h264_fracpel,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_fracpel, decode_h264_fracpel).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_fracpel, decode_h264_fracpel, "doc_id", "frame_idx"
     )
 
 
@@ -3191,9 +3152,8 @@ def multimodal_h264_bpixel_decode(
         synthesize_h264_bpixel,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_bpixel, decode_h264_bpixel).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_bpixel, decode_h264_bpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3357,9 +3317,8 @@ def multimodal_h264_dpixel_decode(
         synthesize_h264_dpixel,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_dpixel, decode_h264_dpixel).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_dpixel, decode_h264_dpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3527,9 +3486,8 @@ def multimodal_h264_wpixel_decode(
         synthesize_h264_wpixel,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_wpixel, decode_h264_wpixel).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_wpixel, decode_h264_wpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3704,9 +3662,8 @@ def multimodal_h264_chroma_decode(
         synthesize_h264_chroma,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_chroma, decode_h264_chroma).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_chroma, decode_h264_chroma, "doc_id", "frame_idx"
     )
 
 
@@ -3869,9 +3826,8 @@ def multimodal_h264_submb_decode(
         synthesize_h264_submb,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_submb, decode_h264_submb).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_submb, decode_h264_submb, "doc_id", "frame_idx"
     )
 
 
@@ -4010,8 +3966,7 @@ def multimodal_mp3_requant_exact(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rq
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rq, decode_mp3_requant).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_rq, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4149,8 +4104,7 @@ def multimodal_mp3_requant_wide(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqw
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqw, decode_mp3_requant).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_rqw, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4289,8 +4243,7 @@ def multimodal_mp3_requant_escape(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqe
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqe, decode_mp3_requant).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_rqe, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4339,8 +4292,7 @@ def multimodal_mp3_id3_tags(
     of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_id3, synthesize_mp3_id3
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_id3, decode_mp3_id3).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_id3, decode_mp3_id3, "doc_id")
 
 
 @query(
@@ -4422,8 +4374,7 @@ def multimodal_webp_vp8l_decode(
     part of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_webp, synthesize_webp
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webp, decode_webp).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_webp, decode_webp, "doc_id")
 
 
 @query(
@@ -4517,8 +4468,7 @@ def multimodal_webp_vp8l_transform_decode(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_webp, synthesize_webp_transform
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_webp_transform, decode_webp).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_webp_transform, decode_webp, "doc_id")
 
 
 @query(
@@ -4625,8 +4575,9 @@ def multimodal_h264_weighted_decode(
         synthesize_h264_weighted,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_weighted, decode_h264_weighted).orderBy("doc_id", "frame_idx")
+    return media_query(
+        spark, sf_dir, synthesize_h264_weighted, decode_h264_weighted, "doc_id", "frame_idx"
+    )
 
 
 @query(
@@ -4712,9 +4663,8 @@ def multimodal_h264_bframe_decode(
         synthesize_h264_bframe,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_bframe, decode_h264_bframe).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_bframe, decode_h264_bframe, "doc_id", "frame_idx"
     )
 
 
@@ -4780,8 +4730,7 @@ def multimodal_png_colortypes_decode(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_png_ct, synthesize_png_ct
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_ct, decode_png_ct).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_png_ct, decode_png_ct, "doc_id")
 
 
 @query(
@@ -4921,8 +4870,7 @@ def multimodal_mp3_requant_ms_stereo(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_requant_ms, synthesize_mp3_ms
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ms, decode_mp3_requant_ms).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_ms, decode_mp3_requant_ms, "doc_id")
 
 
 @query(
@@ -5075,10 +5023,7 @@ def multimodal_mp3_requant_is_stereo(
         synthesize_mp3_is,
     )
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_is, decode_mp3_requant_is).orderBy(
-        "doc_id"
-    )
+    return media_query(spark, sf_dir, synthesize_mp3_is, decode_mp3_requant_is, "doc_id")
 
 
 @query(
@@ -5203,8 +5148,7 @@ def multimodal_mp3_requant_short(
     surface the brief adds."""
     from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqs
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_rqs, decode_mp3_requant).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_rqs, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -5421,8 +5365,7 @@ def multimodal_mp3_imdct_synth(
     adds."""
     from ..multimodal.decode import decode_mp3_imdct, synthesize_mp3_imdct
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_imdct, decode_mp3_imdct).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_imdct, decode_mp3_imdct, "doc_id")
 
 
 @query(
@@ -5546,8 +5489,7 @@ def multimodal_mp3_wswitch_regions_decode(
     of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ws
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_ws, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_ws, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5672,8 +5614,7 @@ def multimodal_mp3_b8_regions_decode(
     of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_b8
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_b8, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_b8, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5793,8 +5734,7 @@ def multimodal_mp3_mixed_block_decode(
     training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_mx
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_mp3_mx, decode_mp3_maindata).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_mp3_mx, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5870,10 +5810,7 @@ def multimodal_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``decode.py:_parse_pskip_slice``)."""
     from ..multimodal.decode import decode_h264_gop, synthesize_h264_gop
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_gop, decode_h264_gop).orderBy(
-        "doc_id", "frame_idx"
-    )
+    return media_query(spark, sf_dir, synthesize_h264_gop, decode_h264_gop, "doc_id", "frame_idx")
 
 
 @query(
@@ -5930,8 +5867,7 @@ def multimodal_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``multimodal_png_decode``."""
     from ..multimodal.decode import decode_png_adam7, synthesize_png_adam7
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_adam7, decode_png_adam7).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_png_adam7, decode_png_adam7, "doc_id")
 
 
 @query(
@@ -6011,10 +5947,7 @@ def multimodal_gif_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``multimodal_gif_{disposal,lct}_decode`` fixtures."""
     from ..multimodal.decode import decode_gif_anim, synthesize_gif_anim
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_anim, decode_gif_anim).orderBy(
-        "doc_id", "frame_idx"
-    )
+    return media_query(spark, sf_dir, synthesize_gif_anim, decode_gif_anim, "doc_id", "frame_idx")
 
 
 @query(
@@ -6090,9 +6023,8 @@ def multimodal_gif_disposal_decode(spark: SparkSession, sf_dir: str) -> DataFram
     (``decode.py:decode_gif_anim``)."""
     from ..multimodal.decode import decode_gif_anim, synthesize_gif_disposal
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_disposal, decode_gif_anim).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_gif_disposal, decode_gif_anim, "doc_id", "frame_idx"
     )
 
 
@@ -6145,8 +6077,7 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tiled TIFFs raise at the declared boundary."""
     from ..multimodal.decode import decode_tiff_real, synthesize_tiff
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_tiff, decode_tiff_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_tiff, decode_tiff_real, "doc_id")
 
 
 @query(
@@ -6207,8 +6138,7 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits in ``multimodal_flac_vbs_decode``."""
     from ..multimodal.decode import decode_flac_real, synthesize_flac
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac, decode_flac_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_flac, decode_flac_real, "doc_id")
 
 
 @query(
@@ -6275,8 +6205,7 @@ def multimodal_flac_vbs_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface the brief adds."""
     from ..multimodal.decode import decode_flac_real, synthesize_flac_vbs
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac_vbs, decode_flac_real).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_flac_vbs, decode_flac_real, "doc_id")
 
 
 @query(
@@ -6340,10 +6269,7 @@ def multimodal_gif_lct_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlace, and now per-frame palettes."""
     from ..multimodal.decode import decode_gif_anim, synthesize_gif_lct
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_gif_lct, decode_gif_anim).orderBy(
-        "doc_id", "frame_idx"
-    )
+    return media_query(spark, sf_dir, synthesize_gif_lct, decode_gif_anim, "doc_id", "frame_idx")
 
 
 @query(
@@ -6393,8 +6319,7 @@ def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     (``multimodal_png_adam7_decode``)."""
     from ..multimodal.decode import decode_png_palette, synthesize_png_palette
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_png_palette, decode_png_palette).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_png_palette, decode_png_palette, "doc_id")
 
 
 @query(
@@ -6430,8 +6355,7 @@ def multimodal_wav_extended_decode(spark: SparkSession, sf_dir: str) -> DataFram
     ``multimodal_wav_decode``."""
     from ..multimodal.decode import decode_wav_ext, synthesize_wav_ext
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_wav_ext, decode_wav_ext).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_wav_ext, decode_wav_ext, "doc_id")
 
 
 @query(
@@ -6485,8 +6409,7 @@ def multimodal_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     (``decode.py:decode_flac_stereo``)."""
     from ..multimodal.decode import decode_flac_stereo, synthesize_flac_stereo
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_flac_stereo, decode_flac_stereo).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_flac_stereo, decode_flac_stereo, "doc_id")
 
 
 @query(
@@ -6545,8 +6468,7 @@ def multimodal_bmp_rle8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is unchanged."""
     from ..multimodal.decode import decode_bmp_rle8, synthesize_bmp_rle8
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_bmp_rle8, decode_bmp_rle8).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_bmp_rle8, decode_bmp_rle8, "doc_id")
 
 
 @query(
@@ -6616,8 +6538,7 @@ def multimodal_bmp_rle4_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     part of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_bmp_rle4, synthesize_bmp_rle4
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_bmp_rle4, decode_bmp_rle4).orderBy("doc_id")
+    return media_query(spark, sf_dir, synthesize_bmp_rle4, decode_bmp_rle4, "doc_id")
 
 
 @query(
@@ -6706,7 +6627,6 @@ def multimodal_h264_inter_decode(
     part of the training-data-pipeline surface the brief adds."""
     from ..multimodal.decode import decode_h264_inter, synthesize_h264_inter
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return fuse_synth_decode(docs, synthesize_h264_inter, decode_h264_inter).orderBy(
-        "doc_id", "frame_idx"
+    return media_query(
+        spark, sf_dir, synthesize_h264_inter, decode_h264_inter, "doc_id", "frame_idx"
     )

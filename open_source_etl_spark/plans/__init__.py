@@ -15,6 +15,7 @@ from .inspect import (
     plan_audit,
     pushed_filters,
     python_stage_count,
+    python_under_range_exchange,
     scan_read_schema,
 )
 
@@ -25,5 +26,6 @@ __all__ = [
     "broadcast_join_count",
     "exchange_count",
     "python_stage_count",
+    "python_under_range_exchange",
     "plan_audit",
 ]

@@ -29,6 +29,7 @@ _PY_NODES = (
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapGroupsInPandasWithState",
+    "FlatMapCoGroupsInPandas",
     "AggregateInPandas",
     "MapInArrow",
     "PythonMapInArrow",
@@ -98,6 +99,54 @@ def python_stage_count(df: DataFrame, plan: str | None = None) -> int:
     return sum(_node_count(plan, n) for n in _PY_NODES)
 
 
+_TREE_NODE = re.compile(r"^([ :+\-|]*)(\S.*?) \((\d+)\)$")
+
+
+def _tree_parents(plan: str) -> dict[str, tuple[str, str | None]]:
+    """Operator id → (node name, parent operator id) from the indented
+    trees of the formatted plan (the main plan and each subquery)."""
+    nodes: dict[str, tuple[str, str | None]] = {}
+    in_tree, stack = False, []  # stack: (column, operator id) of open nodes
+    for line in plan.splitlines():
+        if line.startswith("== Physical Plan ==") or line.startswith("Subquery:"):
+            in_tree, stack = True, []
+            continue
+        if not line.strip():
+            in_tree = False
+            continue
+        m = _TREE_NODE.match(line) if in_tree else None
+        if m is None:
+            continue
+        col, name, op = len(m.group(1)), m.group(2).split(" ")[0], m.group(3)
+        while stack and stack[-1][0] >= col:
+            stack.pop()
+        nodes[op] = (name, stack[-1][1] if stack else None)
+        stack.append((col, op))
+    return nodes
+
+
+def python_under_range_exchange(df: DataFrame, plan: str | None = None) -> int:
+    """Python nodes whose nearest ``Exchange`` ancestor range-partitions
+    (an ``orderBy`` straight over a kernel's output).  Spark's
+    ``RangePartitioner`` samples by running that exchange's child, so
+    each such kernel runs twice: once for the sample, once for the
+    shuffle map stage."""
+    plan = formatted_plan(df) if plan is None else plan
+    args = dict(
+        re.findall(r"^\((\d+)\) Exchange\n(?:.+\n)*?Arguments: (\w+)", plan, re.MULTILINE)
+    )
+    nodes = _tree_parents(plan)
+    count = 0
+    for name, parent in nodes.values():
+        if name not in _PY_NODES:
+            continue
+        while parent is not None and nodes[parent][0] != "Exchange":
+            parent = nodes[parent][1]
+        if parent is not None and args.get(parent) == "rangepartitioning":
+            count += 1
+    return count
+
+
 @dataclass
 class PlanFacts:
     name: str
@@ -106,6 +155,7 @@ class PlanFacts:
     broadcast_joins: int = 0
     exchanges: int = 0
     python_stages: int = 0
+    python_under_range_exchange: int = 0
     plan: str = ""  # full formatted plan, for ad-hoc node assertions
 
 
@@ -123,5 +173,6 @@ def plan_audit(name: str, df: DataFrame) -> PlanFacts:
         broadcast_joins=broadcast_join_count(df, plan),
         exchanges=exchange_count(df, plan),
         python_stages=python_stage_count(df, plan),
+        python_under_range_exchange=python_under_range_exchange(df, plan),
         plan=plan,
     )

@@ -52,3 +52,38 @@ def test_hashed_shingle_plan_carries_no_strings(spark):
     df2 = datapipe_contamination_ngram(spark, SF, hash_shingles=True)
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "xxhash64" in plan2
+
+
+def test_boilerplate_prune_skips_null_text_and_length(spark, tmp_path):
+    """NULL ``text`` or ``n_chars`` yields no shingles in the Arrow
+    kernel, the string form and the DuckDB oracle alike: such a doc
+    keeps with zero counts instead of failing the kernel."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from open_source_etl_spark.registry import all_oracles
+
+    docs = pq.read_table(f"{SF}/documents.parquet").to_pandas()
+    docs["text"] = docs["text"].astype(object)
+    docs["n_chars"] = docs["n_chars"].astype("Int64")
+    docs.loc[docs.index[:5], "text"] = None
+    docs.loc[docs.index[5:10], "n_chars"] = None
+    null_ids = set(docs["doc_id"].iloc[:10])
+    pq.write_table(pa.Table.from_pandas(docs, preserve_index=False),
+                   tmp_path / "documents.parquet")
+    sf = str(tmp_path)
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
+    )
+    oracle = sorted(
+        tuple(r) for r in con.execute(all_oracles()["datapipe_boilerplate_prune"]).fetchall()
+    )
+    hashed = _rows(datapipe_boilerplate_prune(spark, sf, hash_shingles=True))
+    string = _rows(datapipe_boilerplate_prune(spark, sf, hash_shingles=False))
+    assert hashed == oracle
+    assert string == oracle
+    nulls = [r for r in hashed if r[0] in null_ids]
+    assert len(nulls) == 10 and all(r[1:] == (0, 0, True) for r in nulls)

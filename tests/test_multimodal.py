@@ -5928,3 +5928,110 @@ def test_mp3_requant_wide_magnitudes(spark):
     assert len(p43) == 8207  # full 13-linbits escape range, round 14
     for v in range(16):
         assert p43[v] == int(math.floor(4096 * v ** (4 / 3) + 0.5))
+
+
+def _counting_synth(acc):
+    """A doc_id-only synth builder whose kernel counts the rows it sees."""
+
+    def synthesize_counted(docs_df):
+        def kernel(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return docs_df.select("doc_id").mapInPandas(kernel, "doc_id long")
+
+    return synthesize_counted
+
+
+def _passthrough_decode(media_df):
+    return media_df.select("doc_id").mapInPandas(lambda it: it, "doc_id long")
+
+
+def test_media_query_runs_each_kernel_once(spark, sf_dir):
+    """``media_query`` range-partitions the doc_id scan BELOW the fused
+    kernel, so the kernel sees every doc exactly once.  The old shape,
+    ``orderBy`` over the kernel's output, ran it a second time for the
+    RangePartitioner's sample."""
+    from open_source_etl_spark.multimodal.decode import fuse_synth_decode, media_query
+
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    acc = spark.sparkContext.accumulator(0)
+    out = media_query(
+        spark, sf_dir, _counting_synth(acc), _passthrough_decode, "doc_id"
+    ).toPandas()
+    assert len(out) == n_docs
+    assert out["doc_id"].is_monotonic_increasing
+    assert acc.value == n_docs
+
+    old = spark.sparkContext.accumulator(0)
+    docs = load_table(spark, sf_dir, "documents")
+    fuse_synth_decode(docs, _counting_synth(old), _passthrough_decode).orderBy(
+        "doc_id"
+    ).toPandas()
+    assert old.value > n_docs
+
+
+@pytest.mark.parametrize("splits", [None, 13])
+def test_media_query_order_matches_orderby(spark, sf_dir, monkeypatch, splits):
+    """A multi-row-per-doc query (one row per AVI frame) comes back
+    row-for-row in ``orderBy("doc_id", "frame_idx")`` order at two
+    range-partition widths: defaultParallelism, and a wider scan split
+    count the helper must not narrow."""
+    import re
+
+    from open_source_etl_spark import catalog
+    from open_source_etl_spark.multimodal.decode import (
+        decode_avi_mjpeg,
+        fuse_synth_decode,
+        media_query,
+        synthesize_avi,
+    )
+    from open_source_etl_spark.plans import formatted_plan
+
+    if splits is not None:
+        monkeypatch.setattr(catalog, "_scan_splits", lambda *a: splits)
+    got = media_query(
+        spark, sf_dir, synthesize_avi, decode_avi_mjpeg, "doc_id", "frame_idx"
+    )
+    # read before collect: an executed AQE plan also lists its final form
+    width = re.findall(r"rangepartitioning\(doc_id#\d+L ASC NULLS FIRST, (\d+)\)",
+                       formatted_plan(got))
+    docs = load_table(spark, sf_dir, "documents")
+    want = fuse_synth_decode(docs, synthesize_avi, decode_avi_mjpeg).orderBy(
+        "doc_id", "frame_idx"
+    )
+    got_rows, want_rows = got.collect(), want.collect()
+    assert len(got_rows) > docs.count()
+    assert got_rows == want_rows
+    assert width == [str(splits or spark.sparkContext.defaultParallelism)]
+
+
+def test_media_query_requires_doc_id_first(spark, sf_dir):
+    from open_source_etl_spark.multimodal.decode import media_query
+
+    with pytest.raises(ValueError, match="doc_id"):
+        media_query(spark, sf_dir, _counting_synth(None), _passthrough_decode, "frame_idx")
+
+
+def test_fuse_synth_decode_fails_loud_on_uncapturable_builder(spark):
+    """A builder that is not a bare select().mapInPandas() raises a
+    TypeError naming it: no silent two-stage fallback."""
+    from open_source_etl_spark.multimodal.decode import fuse_synth_decode
+
+    ids = spark.range(3).withColumnRenamed("id", "doc_id")
+
+    def synthesize_filtered(docs_df):
+        return docs_df.filter("doc_id > 0").select("doc_id").mapInPandas(
+            lambda it: it, "doc_id long"
+        )
+
+    def synthesize_wide(docs_df):
+        return docs_df.select("doc_id", "text").mapInPandas(lambda it: it, "doc_id long")
+
+    with pytest.raises(TypeError, match="synthesize_filtered"):
+        fuse_synth_decode(ids, synthesize_filtered, _passthrough_decode)
+    with pytest.raises(TypeError, match="synthesize_wide"):
+        fuse_synth_decode(ids, synthesize_wide, _passthrough_decode)
+    with pytest.raises(TypeError, match="mapInPandas"):
+        fuse_synth_decode(ids, _counting_synth(None), lambda df: df)

@@ -93,20 +93,56 @@ def test_python_stages_only_where_designed(audit):
 ])
 def test_round14_media_queries_keep_the_arrow_tier_shape(audit, name):
     """Every round-14 media/container query keeps the established
-    scale shape: ONE fused Python stage (the optimization round's
-    ``fuse_synth_decode`` composes the synthesize and decode Arrow
-    kernels inside a single mapInPandas, so payload bytes never
-    cross the JVM boundary), no data shuffle beyond the fixed synth
-    repartition + final orderBy (PLANS shuffles <= 2), one scan
-    column (doc_id), and no broadcast joins — per-row kernels with
-    no cross-row state cannot regress into shuffling pipelines (or
-    back into the two-stage payload round-trip) without tripping
-    this pin."""
+    scale shape: ONE fused Python stage (``fuse_synth_decode`` composes
+    the synthesize and decode Arrow kernels inside a single
+    mapInPandas, so payload bytes never cross the JVM boundary),
+    exactly one shuffle (``media_query`` range-partitions the doc_id
+    scan below the kernel; the output is only sorted within
+    partitions), one scan column (doc_id), and no broadcast joins —
+    per-row kernels with no cross-row state cannot regress into
+    shuffling pipelines (or back into the two-stage payload
+    round-trip) without tripping this pin."""
     facts = audit(name)
     assert facts.python_stages == 1, (name, facts.python_stages)
-    assert facts.exchanges <= 2, (name, facts.exchanges)
+    assert facts.exchanges == 1, (name, facts.exchanges)
     assert facts.broadcast_joins == 0, name
     assert len(facts.read_columns) <= 1, (name, facts.read_columns)
+
+
+def test_python_under_range_exchange_counts_the_double_run_shape(spark):
+    """The fact counts a kernel whose nearest exchange range-partitions
+    (orderBy over its output), and not one whose input is partitioned."""
+    from open_source_etl_spark.plans import python_under_range_exchange
+
+    ids = spark.range(64)
+
+    def kernel(batches):
+        yield from batches
+
+    over = ids.mapInPandas(kernel, "id long").orderBy("id")
+    under = ids.repartitionByRange(4, "id").mapInPandas(kernel, "id long")
+    hashed = ids.mapInPandas(kernel, "id long").groupBy("id").count().orderBy("id")
+    assert python_under_range_exchange(over) == 1
+    assert python_under_range_exchange(under.sortWithinPartitions("id")) == 0
+    assert python_under_range_exchange(hashed) == 0
+
+
+# every multimodal_* query but phash_dedup, whose order comes out of a join
+PORTED_MEDIA = sorted(
+    n for n in QUERIES
+    if n.startswith("multimodal_") and n != "multimodal_phash_dedup"
+)
+
+
+@pytest.mark.parametrize("name", PORTED_MEDIA)
+def test_media_kernels_run_once(audit, name):
+    """No media kernel sits under a range-partitioning exchange: Spark's
+    RangePartitioner samples by running the exchange's child, so a
+    kernel there runs twice (``doc_range_query`` partitions the input
+    docs instead)."""
+    facts = audit(name)
+    assert facts.python_stages == 1, (name, facts.python_stages)
+    assert facts.python_under_range_exchange == 0, (name, facts.plan)
 
 
 def test_partitioned_landing_prunes_at_plan_time(spark, tmp_path):

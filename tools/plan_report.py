@@ -3,7 +3,9 @@
 Usage: python tools/plan_report.py [sf_dir]
 
 For each query: shuffle-exchange count, broadcast joins, Python stages,
-whether any filter reached the parquet scan, and the scan column count.
+Python stages under a range-partitioning exchange (each runs twice: once
+for the range sample, once for the shuffle), whether any filter reached
+the parquet scan, and the scan column count.
 This is the evidence trail for the scale posture — reviewed per round,
 regression-pinned by tests/test_plans.py for the headline queries.
 """
@@ -34,8 +36,8 @@ def main() -> None:
         "coalesce further at runtime, never add).  Streaming queries are",
         "audited on their batch twins (same builder, batch input).",
         "",
-        "| query | oracle | shuffles | bcast joins | py stages | pushdown | scan cols |",
-        "|---|---|---|---|---|---|---|",
+        "| query | oracle | shuffles | bcast joins | py stages | py under range | pushdown | scan cols |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     skipped: list[str] = []
     for name, fn in sorted(all_queries().items()):
@@ -46,12 +48,12 @@ def main() -> None:
             df = fn(spark, sf_dir)
             facts = plan_audit(name, df)
         except Exception as exc:  # pragma: no cover
-            lines.append(f"| {name} | — | plan failed: {type(exc).__name__} | | | | |")
+            lines.append(f"| {name} | — | plan failed: {type(exc).__name__} | | | | | |")
             continue
         lines.append(
             f"| {name} | {'sql' if name in oracles else 'rows'} "
             f"| {facts.exchanges} | {facts.broadcast_joins} "
-            f"| {facts.python_stages} "
+            f"| {facts.python_stages} | {facts.python_under_range_exchange} "
             f"| {'yes' if facts.pushed else '—'} | {len(facts.read_columns)} |"
         )
     if skipped:
