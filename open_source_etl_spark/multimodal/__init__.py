@@ -16,10 +16,16 @@ integer-pel inter (multi-ref, B/weighted/direct) — with the remaining
 depth (CABAC, fractional-pel motion, and kin) behind declared
 ``NotImplementedError`` boundaries that name their spec clause and
 carry rejection tests — while everything Spark-side is real and tested: the struct
-schemas, the binary payload plumbing, the mapInPandas batch iteration,
-row expansion (frame sampling), and the partitioning posture (media rows
-are large → size partitions by bytes, never collect payloads to the
-driver).
+schemas, the binary payload plumbing, row expansion (frame sampling), and
+the partitioning posture (media rows are large → size partitions by
+bytes, never collect payloads to the driver).
+
+Each codec is two pure row functions: ``make_X_bytes(doc_id) -> bytes``
+in ``synth.py`` and an ``@decoder(SCHEMA)`` factory returning ``(doc_id,
+raw) -> rows``.  ``host.py`` holds the one ``mapInPandas`` batch loop
+around them; ``decode.media_frame(docs, make, decode_X)`` runs both in a
+single Python stage, and ``decode_X(media_df)`` decodes a ``doc_id,
+payload`` frame.
 """
 
 from .schema import (
@@ -33,7 +39,7 @@ from .schema import (
 # as a side effect of this package's __init__.
 _DECODE_NAMES = frozenset({
     "audio_chunk_energy", "decode_bmp_real", "decode_wav_real",
-    "synthesize_bmp", "synthesize_wav", "wav_window_features",
+    "wav_window_features",
     "block_mean_resize", "byte_histogram", "perceptual_hash",
     "decode_image_meta", "sample_frames",
 })
@@ -61,8 +67,6 @@ __all__ = [
     "decode_image_meta",
     "decode_wav_real",
     "decode_bmp_real",
-    "synthesize_wav",
-    "synthesize_bmp",
     "wav_window_features",
     "sample_frames",
 ]

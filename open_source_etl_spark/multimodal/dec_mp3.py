@@ -2,16 +2,7 @@
 
 from __future__ import annotations
 
-import hashlib
-import struct
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
-
+from .host import decoder
 
 
 MP3_META_SCHEMA = (
@@ -130,7 +121,8 @@ def parse_mp3_side_info_full(
     return mdb, granules
 
 
-def decode_mp3_frames(media_df: DataFrame) -> DataFrame:
+@decoder(MP3_META_SCHEMA)
+def decode_mp3_frames():
     """REAL MPEG-1 Layer III frame-header walk: skip the ID3v2 tag
     (syncsafe size), then step frame to frame by decoding each 4-byte
     header (sync, version, layer, bitrate index, sample-rate index,
@@ -151,133 +143,93 @@ def decode_mp3_frames(media_df: DataFrame) -> DataFrame:
     frame, a frame too short to carry its side info, trailing garbage)
     raise rather than yielding silently wrong durations."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from .synth import MP3_BITRATES_KBPS, MP3_SAMPLE_RATES, MP3_SAMPLES_PER_FRAME
 
-        from .synth import MP3_BITRATES_KBPS, MP3_SAMPLE_RATES, MP3_SAMPLES_PER_FRAME
-
-        def walk(doc_id: int, raw: bytes):
-            pos = 0
-            if raw[:3] == b"ID3":
-                if len(raw) < 10:
-                    raise ValueError(f"doc {doc_id}: truncated ID3v2 header")
-                size = (
-                    (raw[6] << 21) | (raw[7] << 14) | (raw[8] << 7) | raw[9]
-                )
-                pos = 10 + size
-            n_frames = n_padded = n_crc = 0
-            kbps_sum = mdb_sum = mdb_max = 0
-            p23_sum = bv_sum = gg_sum = 0
-            kbps_seen: set[int] = set()
-            sr = None
-            while pos < len(raw):
-                if pos + 4 > len(raw):
-                    raise ValueError(f"doc {doc_id}: truncated frame header")
-                h0, h1, h2, _h3 = raw[pos : pos + 4]
-                if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
-                    raise ValueError(f"doc {doc_id}: lost sync at {pos}")
-                if (h1 >> 3) & 0x3 != 0x3 or (h1 >> 1) & 0x3 != 0x1:
-                    raise ValueError(
-                        f"doc {doc_id}: not MPEG-1 Layer III at {pos}"
-                    )
-                br_idx = h2 >> 4
-                sr_idx = (h2 >> 2) & 0x3
-                padding = (h2 >> 1) & 0x1
-                if br_idx in (0, 15) or sr_idx == 3:
-                    raise ValueError(
-                        f"doc {doc_id}: reserved bitrate/samplerate at {pos}"
-                    )
-                this_sr = MP3_SAMPLE_RATES[sr_idx]
-                if sr is None:
-                    sr = this_sr
-                elif sr != this_sr:
-                    raise ValueError(f"doc {doc_id}: sample-rate change at {pos}")
-                kbps = MP3_BITRATES_KBPS[br_idx]
-                frame_len = (144 * kbps * 1000) // this_sr + padding
-                if pos + frame_len > len(raw):
-                    raise ValueError(f"doc {doc_id}: truncated final frame")
-                # protection_absent 0: a 16-bit CRC (poly 0x8005,
-                # init 0xFFFF) over header bytes 2-3 + the side info
-                # sits between the header and the side info — VERIFIED
-                protected = (h1 & 1) == 0
-                crc_len = 2 if protected else 0
-                if frame_len < 4 + crc_len + 17:
-                    raise ValueError(
-                        f"doc {doc_id}: frame at {pos} too short for side info"
-                    )
-                si_at = pos + 4 + crc_len
-                if protected:
-                    want = (raw[pos + 4] << 8) | raw[pos + 5]
-                    got = mp3_crc16(
-                        raw[pos + 2 : pos + 4]
-                        + raw[si_at : si_at + 17]
-                    )
-                    if got != want:
-                        raise ValueError(
-                            f"doc {doc_id}: frame CRC mismatch at {pos}"
-                        )
-                    n_crc += 1
-                mdb, granules = parse_mp3_side_info(
-                    int(doc_id), raw[si_at : si_at + 17]
-                )
-                mdb_sum += mdb
-                mdb_max = max(mdb_max, mdb)
-                for part2_3, big_values, global_gain in granules:
-                    p23_sum += part2_3
-                    bv_sum += big_values
-                    gg_sum += global_gain
-                n_frames += 1
-                n_padded += padding
-                kbps_sum += kbps
-                kbps_seen.add(kbps)
-                pos += frame_len
-            if n_frames == 0 or sr is None:
-                raise ValueError(f"doc {doc_id}: no MP3 frames")
-            duration_ms = (n_frames * MP3_SAMPLES_PER_FRAME * 1000) // sr
-            return (
-                n_frames, sr, duration_ms, kbps_sum // n_frames,
-                len(kbps_seen) > 1, n_padded, n_crc, mdb_sum, mdb_max,
-                p23_sum, bv_sum, gg_sum,
+    def walk(doc_id: int, raw: bytes):
+        pos = 0
+        if raw[:3] == b"ID3":
+            if len(raw) < 10:
+                raise ValueError(f"doc {doc_id}: truncated ID3v2 header")
+            size = (
+                (raw[6] << 21) | (raw[7] << 14) | (raw[8] << 7) | raw[9]
             )
-
-        cols = (
-            "doc_id", "n_frames", "sample_rate", "duration_ms",
-            "avg_kbps", "is_vbr", "n_padded", "n_crc_frames",
-            "sum_main_data_begin",
-            "max_main_data_begin", "sum_part2_3_length",
-            "sum_big_values", "sum_global_gain",
+            pos = 10 + size
+        n_frames = n_padded = n_crc = 0
+        kbps_sum = mdb_sum = mdb_max = 0
+        p23_sum = bv_sum = gg_sum = 0
+        kbps_seen: set[int] = set()
+        sr = None
+        while pos < len(raw):
+            if pos + 4 > len(raw):
+                raise ValueError(f"doc {doc_id}: truncated frame header")
+            h0, h1, h2, _h3 = raw[pos : pos + 4]
+            if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
+                raise ValueError(f"doc {doc_id}: lost sync at {pos}")
+            if (h1 >> 3) & 0x3 != 0x3 or (h1 >> 1) & 0x3 != 0x1:
+                raise ValueError(
+                    f"doc {doc_id}: not MPEG-1 Layer III at {pos}"
+                )
+            br_idx = h2 >> 4
+            sr_idx = (h2 >> 2) & 0x3
+            padding = (h2 >> 1) & 0x1
+            if br_idx in (0, 15) or sr_idx == 3:
+                raise ValueError(
+                    f"doc {doc_id}: reserved bitrate/samplerate at {pos}"
+                )
+            this_sr = MP3_SAMPLE_RATES[sr_idx]
+            if sr is None:
+                sr = this_sr
+            elif sr != this_sr:
+                raise ValueError(f"doc {doc_id}: sample-rate change at {pos}")
+            kbps = MP3_BITRATES_KBPS[br_idx]
+            frame_len = (144 * kbps * 1000) // this_sr + padding
+            if pos + frame_len > len(raw):
+                raise ValueError(f"doc {doc_id}: truncated final frame")
+            # protection_absent 0: a 16-bit CRC (poly 0x8005,
+            # init 0xFFFF) over header bytes 2-3 + the side info
+            # sits between the header and the side info — VERIFIED
+            protected = (h1 & 1) == 0
+            crc_len = 2 if protected else 0
+            if frame_len < 4 + crc_len + 17:
+                raise ValueError(
+                    f"doc {doc_id}: frame at {pos} too short for side info"
+                )
+            si_at = pos + 4 + crc_len
+            if protected:
+                want = (raw[pos + 4] << 8) | raw[pos + 5]
+                got = mp3_crc16(
+                    raw[pos + 2 : pos + 4]
+                    + raw[si_at : si_at + 17]
+                )
+                if got != want:
+                    raise ValueError(
+                        f"doc {doc_id}: frame CRC mismatch at {pos}"
+                    )
+                n_crc += 1
+            mdb, granules = parse_mp3_side_info(
+                int(doc_id), raw[si_at : si_at + 17]
+            )
+            mdb_sum += mdb
+            mdb_max = max(mdb_max, mdb)
+            for part2_3, big_values, global_gain in granules:
+                p23_sum += part2_3
+                bv_sum += big_values
+                gg_sum += global_gain
+            n_frames += 1
+            n_padded += padding
+            kbps_sum += kbps
+            kbps_seen.add(kbps)
+            pos += frame_len
+        if n_frames == 0 or sr is None:
+            raise ValueError(f"doc {doc_id}: no MP3 frames")
+        duration_ms = (n_frames * MP3_SAMPLES_PER_FRAME * 1000) // sr
+        return (
+            n_frames, sr, duration_ms, kbps_sum // n_frames,
+            len(kbps_seen) > 1, n_padded, n_crc, mdb_sum, mdb_max,
+            p23_sum, bv_sum, gg_sum,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, MP3_META_SCHEMA)
-
-
-def synthesize_mp3(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL MPEG-1 Layer III byte stream."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [make_mp3_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 MP3_MAINDATA_SCHEMA = (
@@ -303,7 +255,7 @@ MP3_MAINDATA_SCHEMA = (
 # hlen(y,x) and strictly decreasing same-length hcod along rows).
 # Round 13 closed the 16x16 tier for tables 15 and 24: both passed
 # the full gate after the hole-tiling reconstruction of their last
-# row/column (tools/mp3_table_workbench.py, round-13 record) — the
+# row/column (round-13 record) — the
 # inner 15x15 recall blocks validated clean standalone, and the 31
 # edge cells were solved as an exact cover of the uncovered leaf
 # space under the observed style invariants, with the recalled edge
@@ -315,7 +267,7 @@ MP3_MAINDATA_SCHEMA = (
 # (rows 1/13 + one row-14 cell solved against the 13-row trusted
 # block), unlocking 16-23.  Table 13 — the last B.7 gap — cleared in
 # round 14 when a fresh full-table sitting passed the complete gate
-# verbatim (tools/mp3_t13_round14.py): its trusted block reproduced
+# verbatim: its trusted block reproduced
 # the committed round-13 hole/anchor record exactly, and the
 # round-13 corner tie turned out to be a solver artifact (the edge
 # solve capped lengths at 18, excluding t13's two real 19-bit codes
@@ -371,7 +323,8 @@ MP3_HUFF_TABLES: dict[int, dict[tuple[int, int], tuple[int, int]]] = {
 
 # Tables 8-12, entered exactly as the spec prints them — hlen[x][y]
 # and hcod[x][y] matrices — and expanded into MP3_HUFF_TABLES below.
-# Transcription notes (tools/mp3_table_workbench.py is the gate):
+# Transcription notes (the gate is
+# tests/test_multimodal.py::test_mp3_huffman_tables_are_valid_complete_codes):
 #   t8: first-pass recall was one leaf short at length 9 with a
 #       duplicate 10-bit code between (4,5) and (5,3); the Kraft
 #       arithmetic admits exactly two single-cell repairs, and the
@@ -482,8 +435,8 @@ _MP3_B7_MATRICES: dict[int, tuple[list, list]] = {
          [27, 12, 8, 12, 6, 3, 1, 0]],
     ),
     # Tables 15 and 24 (16x16), validated round 13.  Method (the
-    # round-11 hole-tiling reconstruction, scaled up — full record in
-    # tools/mp3_table_workbench.py):
+    # round-11 hole-tiling reconstruction, scaled up; gated by
+    # test_mp3_huffman_tables_are_valid_complete_codes):
     #   1. the recalled inner 15x15 block of each table validated
     #      standalone (0 prefix conflicts, 0 duplicates, and a Kraft
     #      deficit exactly equal to the uncovered leaf mass);
@@ -514,7 +467,7 @@ _MP3_B7_MATRICES: dict[int, tuple[list, list]] = {
     #      equal-length swap between style-tied cells.
     # Table 13 (16x16, the largest non-linbits table and the only
     # B.7 table with 19-bit codes), validated round 14 by a fresh
-    # full-table double entry (tools/mp3_t13_round14.py): the new
+    # full-table double entry: the new
     # sitting's 256-cell transcription passed the complete gate
     # VERBATIM — grid coverage, 0 prefix conflicts, Kraft exactly 1
     # — with no repairs, and its trusted block reproduced the
@@ -523,7 +476,7 @@ _MP3_B7_MATRICES: dict[int, tuple[list, list]] = {
     # confirmed by two independent sittings and the rest by
     # completeness (any single wrong cell must collide or leave a
     # hole).  The round-13 4486-way corner tie is explained, not
-    # contradicted: tools/mp3_t13_solver.py capped edge lengths at
+    # contradicted: the round-13 edge solver capped edge lengths at
     # 18 and enforced |hlen(x,y)-hlen(y,x)| <= 1 as HARD, excluding
     # the true corner — the table's two 19-bit codes 19/0 and 19/1
     # sit at (15,14)/(15,12) (hole 16/0 splits into the ladder
@@ -810,9 +763,10 @@ def _mp3_bv_table(
     linbits) pair: ids 16-23 share table 16's code matrix and 25-31
     share table 24's (B.7 prints each block once with a linbits
     column); 4 and 14 are reserved.  As of round 14 every B.7 table
-    (1-3, 5-13, 15 and both linbits families) is validated through
-    the workbench gate and ships — table 13, the last gap, cleared
-    via the fresh-sitting double entry in tools/mp3_t13_round14.py."""
+    (1-3, 5-13, 15 and both linbits families) passes the
+    grid/prefix/Kraft gate
+    (``test_mp3_huffman_tables_are_valid_complete_codes``) and ships —
+    table 13, the last gap, cleared via a fresh-sitting double entry."""
     if tsel in (4, 14):
         raise ValueError(
             f"doc {doc_id}: table_select {tsel} is reserved "
@@ -952,7 +906,8 @@ MP3_SFB_LONG = {
 }
 
 
-def decode_mp3_maindata(media_df: DataFrame) -> DataFrame:
+@decoder(MP3_MAINDATA_SCHEMA)
+def decode_mp3_maindata():
     """REAL MPEG-1 Layer III main-data entropy decode (the layer below
     the frame walk): reassemble the bit reservoir from the physical
     frame regions, seek each frame's main data ``main_data_begin``
@@ -962,402 +917,357 @@ def decode_mp3_maindata(media_df: DataFrame) -> DataFrame:
     REAL scfsi handling — granule 1 reuses granule 0's values for
     every scalefactor band group whose scfsi bit is set and transmits
     nothing for it — the big-values spectrum region — pair codes through the per-region
-    ``table_select`` (B.7 tables 1/2/3 and 5-12 shipped, each
-    validated complete + prefix-free on its exact grid; table 0
-    regions transmit nothing), sign bits after each code, region
-    boundaries from Table
+    ``table_select`` (every B.7 table: 1-3, 5-13, 15 and the linbits
+    escape tables 16-31, each validated complete + prefix-free on its
+    exact grid by ``test_mp3_huffman_tables_are_valid_complete_codes``;
+    table 0 regions transmit nothing; an ESC coordinate is extended by
+    the table's linbits field before its sign bit), sign bits after
+    each code, region boundaries from Table
     B.8 when the three tables differ — and the count1 region in either
     code: Huffman table A (``count1table_select = 0``, uncomplemented
     patterns) or the fixed-length table-B code (4 complement bits per
     quadruple + one sign bit per nonzero value), asserting EXACT
     ``part2_3_length`` consumption.
 
-    Honest stub boundary: the 16x16 B.7 Huffman tables 13/15 and the
-    linbits escape tables 16-31 (their clean-room transcriptions
-    still fail the grid/prefix/Kraft validation — see
-    tools/mp3_table_workbench.py — so they raise rather than risk a
-    silently-wrong table) raise ``NotImplementedError``
-    at the exact site a codec library would take over — everything
-    this decoder emits it computed from the entropy bitstream itself.
+    Declared stub boundary: region-dependent table switching at a
+    sample rate without a shipped B.8 row raises
+    ``NotImplementedError`` — everything this decoder emits it
+    computed from the entropy bitstream itself.
     Malformed streams (reservoir pointer before stream start, granule
     bits overrunning part2_3_length, invalid Huffman codes, truncated
     regions) raise."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    from .synth import MP3_BITRATES_KBPS, MP3_SAMPLE_RATES, MP3_SLEN
 
-        from .synth import MP3_BITRATES_KBPS, MP3_SAMPLE_RATES, MP3_SLEN
+    lutA = _mp3_c1a_lut()
 
-        lutA = _mp3_c1a_lut()
-
-        def walk(doc_id: int, raw: bytes):
-            pos = 0
-            if raw[:3] == b"ID3":
-                size = (
-                    (raw[6] << 21) | (raw[7] << 14) | (raw[8] << 7) | raw[9]
+    def walk(doc_id: int, raw: bytes):
+        pos = 0
+        if raw[:3] == b"ID3":
+            size = (
+                (raw[6] << 21) | (raw[7] << 14) | (raw[8] << 7) | raw[9]
+            )
+            pos = 10 + size
+        frames = []  # (region_start_in_stream, mdb, granule dicts)
+        stream = bytearray()
+        while pos < len(raw):
+            if pos + 4 > len(raw):
+                raise ValueError(f"doc {doc_id}: truncated frame header")
+            h0, h1, h2, _h3 = raw[pos : pos + 4]
+            if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
+                raise ValueError(f"doc {doc_id}: lost sync at {pos}")
+            br_idx = h2 >> 4
+            sr_idx = (h2 >> 2) & 0x3
+            padding = (h2 >> 1) & 0x1
+            if br_idx in (0, 15) or sr_idx == 3:
+                raise ValueError(
+                    f"doc {doc_id}: reserved bitrate/samplerate at {pos}"
                 )
-                pos = 10 + size
-            frames = []  # (region_start_in_stream, mdb, granule dicts)
-            stream = bytearray()
-            while pos < len(raw):
-                if pos + 4 > len(raw):
-                    raise ValueError(f"doc {doc_id}: truncated frame header")
-                h0, h1, h2, _h3 = raw[pos : pos + 4]
-                if h0 != 0xFF or (h1 & 0xE0) != 0xE0:
-                    raise ValueError(f"doc {doc_id}: lost sync at {pos}")
-                br_idx = h2 >> 4
-                sr_idx = (h2 >> 2) & 0x3
-                padding = (h2 >> 1) & 0x1
-                if br_idx in (0, 15) or sr_idx == 3:
-                    raise ValueError(
-                        f"doc {doc_id}: reserved bitrate/samplerate at {pos}"
-                    )
-                sr = MP3_SAMPLE_RATES[sr_idx]
-                kbps = MP3_BITRATES_KBPS[br_idx]
-                frame_len = (144 * kbps * 1000) // sr + padding
-                if pos + frame_len > len(raw) or frame_len < 21:
-                    raise ValueError(f"doc {doc_id}: truncated frame at {pos}")
-                mdb, granules = parse_mp3_side_info_full(
-                    doc_id, raw[pos + 4 : pos + 21]
+            sr = MP3_SAMPLE_RATES[sr_idx]
+            kbps = MP3_BITRATES_KBPS[br_idx]
+            frame_len = (144 * kbps * 1000) // sr + padding
+            if pos + frame_len > len(raw) or frame_len < 21:
+                raise ValueError(f"doc {doc_id}: truncated frame at {pos}")
+            mdb, granules = parse_mp3_side_info_full(
+                doc_id, raw[pos + 4 : pos + 21]
+            )
+            frames.append((len(stream), mdb, sr, granules))
+            stream += raw[pos + 21 : pos + frame_len]
+            pos += frame_len
+        if not frames:
+            raise ValueError(f"doc {doc_id}: no MP3 frames")
+
+        sum_sf = n_quads = sum_abs = sum_signed = max_resv = 0
+        n_pairs = sum_bv_abs = sum_bv_signed = 0
+        for region_start, mdb, sr, granules in frames:
+            if mdb > region_start:
+                raise ValueError(
+                    f"doc {doc_id}: reservoir pointer {mdb} reaches "
+                    f"before the main-data stream start"
                 )
-                frames.append((len(stream), mdb, sr, granules))
-                stream += raw[pos + 21 : pos + frame_len]
-                pos += frame_len
-            if not frames:
-                raise ValueError(f"doc {doc_id}: no MP3 frames")
+            max_resv = max(max_resv, mdb)
+            bp = (region_start - mdb) * 8  # bit cursor into stream
 
-
-            sum_sf = n_quads = sum_abs = sum_signed = max_resv = 0
-            n_pairs = sum_bv_abs = sum_bv_signed = 0
-            for region_start, mdb, sr, granules in frames:
-                if mdb > region_start:
+            g0_bands: list | None = None
+            for gi, g in enumerate(granules):
+                short = (
+                    g["windows_switching_flag"]
+                    and g["block_type"] == 2
+                )
+                mixed = short and g["mixed_block_flag"]
+                p23 = g["part2_3_length"]
+                # One bigint per granule, fields extracted by shift
+                # (a per-bit Python reader here dominated the sf0.1
+                # bench).  The slice rounds up to byte edges, so a
+                # final quadruple may legally read a few bits past
+                # p23 before the overrun check rejects it.
+                off = bp & 7
+                base = bp >> 3
+                nbytes = (off + p23 + 7) // 8
+                if base + nbytes > len(stream):
                     raise ValueError(
-                        f"doc {doc_id}: reservoir pointer {mdb} reaches "
-                        f"before the main-data stream start"
+                        f"doc {doc_id}: main data ends mid-field"
                     )
-                max_resv = max(max_resv, mdb)
-                bp = (region_start - mdb) * 8  # bit cursor into stream
+                # take() reads straight from the stream bytes:
+                # the previous whole-granule bigint paid an
+                # O(granule-size) shift per field read
 
-                g0_bands: list | None = None
-                for gi, g in enumerate(granules):
-                    short = (
-                        g["windows_switching_flag"]
-                        and g["block_type"] == 2
-                    )
-                    mixed = short and g["mixed_block_flag"]
-                    p23 = g["part2_3_length"]
-                    # One bigint per granule, fields extracted by shift
-                    # (a per-bit Python reader here dominated the sf0.1
-                    # bench).  The slice rounds up to byte edges, so a
-                    # final quadruple may legally read a few bits past
-                    # p23 before the overrun check rejects it.
-                    off = bp & 7
-                    base = bp >> 3
-                    nbytes = (off + p23 + 7) // 8
-                    if base + nbytes > len(stream):
+                tot = nbytes * 8
+                used = 0
+
+                def take(n: int) -> int:
+                    nonlocal used
+                    end = off + used + n
+                    if end > tot:
                         raise ValueError(
                             f"doc {doc_id}: main data ends mid-field"
                         )
-                    # take() reads straight from the stream bytes:
-                    # the previous whole-granule bigint paid an
-                    # O(granule-size) shift per field read
+                    p = (base << 3) + off + used
+                    used = end - off
+                    if n == 1:
+                        return (stream[p >> 3] >> (7 - (p & 7))) & 1
+                    pe = p + n
+                    val = int.from_bytes(
+                        stream[p >> 3 : (pe + 7) >> 3], "big"
+                    )
+                    return (val >> ((-pe) & 7)) & ((1 << n) - 1)
 
-                    tot = nbytes * 8
-                    used = 0
-
-                    def take(n: int) -> int:
-                        nonlocal used
-                        end = off + used + n
-                        if end > tot:
-                            raise ValueError(
-                                f"doc {doc_id}: main data ends mid-field"
-                            )
-                        p = (base << 3) + off + used
-                        used = end - off
-                        if n == 1:
-                            return (stream[p >> 3] >> (7 - (p & 7))) & 1
-                        pe = p + n
-                        val = int.from_bytes(
-                            stream[p >> 3 : (pe + 7) >> 3], "big"
+                # scalefactors (2.4.2.7): long granules transmit
+                # 21 bands (granule 1 REUSES granule 0's values
+                # for every band group whose scfsi bit is set and
+                # transmits nothing for it); short granules
+                # (block_type 2, mixed off) transmit 12 bands x 3
+                # windows — bands 0-5 at slen1, 6-11 at slen2 —
+                # and scfsi MUST be all-zero for them
+                sl1, sl2 = MP3_SLEN[g["scalefac_compress"]]
+                if short:
+                    if g["scfsi"]:
+                        raise ValueError(
+                            f"doc {doc_id}: scfsi set on a "
+                            "short-block granule"
                         )
-                        return (val >> ((-pe) & 7)) & ((1 << n) - 1)
-
-                    # scalefactors (2.4.2.7): long granules transmit
-                    # 21 bands (granule 1 REUSES granule 0's values
-                    # for every band group whose scfsi bit is set and
-                    # transmits nothing for it); short granules
-                    # (block_type 2, mixed off) transmit 12 bands x 3
-                    # windows — bands 0-5 at slen1, 6-11 at slen2 —
-                    # and scfsi MUST be all-zero for them
-                    sl1, sl2 = MP3_SLEN[g["scalefac_compress"]]
-                    if short:
-                        if g["scfsi"]:
-                            raise ValueError(
-                                f"doc {doc_id}: scfsi set on a "
-                                "short-block granule"
-                            )
-                        total = 0
-                        if mixed:
-                            # mixed partition (2.4.2.7): 8 LONG bands
-                            # at slen1, then short bands 3-5 at slen1
-                            # and 6-11 at slen2, 3 windows each — the
-                            # spec's 17*slen1 + 18*slen2 part2 layout
-                            for _bnd in range(8):
-                                total += take(sl1)
-                            for bnd in range(3, 12):
-                                slen = sl1 if bnd < 6 else sl2
-                                for _w in range(3):
-                                    total += take(slen)
-                        else:
-                            for bnd in range(12):
-                                slen = sl1 if bnd < 6 else sl2
-                                for _w in range(3):
-                                    total += take(slen)
-                        sum_sf += total
+                    total = 0
+                    if mixed:
+                        # mixed partition (2.4.2.7): 8 LONG bands
+                        # at slen1, then short bands 3-5 at slen1
+                        # and 6-11 at slen2, 3 windows each — the
+                        # spec's 17*slen1 + 18*slen2 part2 layout
+                        for _bnd in range(8):
+                            total += take(sl1)
+                        for bnd in range(3, 12):
+                            slen = sl1 if bnd < 6 else sl2
+                            for _w in range(3):
+                                total += take(slen)
                     else:
-                        groups = ((0, 6, sl1), (6, 5, sl1),
-                                  (11, 5, sl2), (16, 5, sl2))
-                        bands = [0] * 21
-                        for g_idx, (b_start, b_n, slen) in enumerate(
-                            groups
-                        ):
-                            reuse = gi == 1 and (
-                                (g["scfsi"] >> (3 - g_idx)) & 1
-                            )
-                            if reuse:
-                                if g0_bands is None:
-                                    raise ValueError(
-                                        f"doc {doc_id}: scfsi "
-                                        "reuse without a long "
-                                        "granule 0"
-                                    )
-                                bands[b_start : b_start + b_n] = (
-                                    g0_bands[b_start : b_start + b_n]
+                        for bnd in range(12):
+                            slen = sl1 if bnd < 6 else sl2
+                            for _w in range(3):
+                                total += take(slen)
+                    sum_sf += total
+                else:
+                    groups = ((0, 6, sl1), (6, 5, sl1),
+                              (11, 5, sl2), (16, 5, sl2))
+                    bands = [0] * 21
+                    for g_idx, (b_start, b_n, slen) in enumerate(
+                        groups
+                    ):
+                        reuse = gi == 1 and (
+                            (g["scfsi"] >> (3 - g_idx)) & 1
+                        )
+                        if reuse:
+                            if g0_bands is None:
+                                raise ValueError(
+                                    f"doc {doc_id}: scfsi "
+                                    "reuse without a long "
+                                    "granule 0"
                                 )
-                            else:
-                                # one read per band GROUP (same bits,
-                                # same mid-field raise), split by shift
-                                v = take(b_n * slen)
-                                msk = (1 << slen) - 1
-                                for i in range(b_n):
-                                    bands[b_start + i] = (
-                                        v >> ((b_n - 1 - i) * slen)
-                                    ) & msk
-                        sum_sf += sum(bands)
-                        if gi == 0:
-                            g0_bands = bands
-                    # big-values region: pairs Huffman-decoded through
-                    # the region's table_select, x's sign then y's sign
-                    # after each pair code (ISO 2.4.2.7).  Region
-                    # boundaries only matter when the three tables
-                    # differ — then they come from the rate's Table
-                    # B.8 row (all three MPEG-1 rows shipped); uniform
-                    # table_selects decode without boundary knowledge.
-                    nbv = g["big_values"]
-                    if nbv:
-                        tsels = g["table_select"]
-                        if len(set(tsels)) == 1:
-                            regions = [(nbv, tsels[0])]
-                        elif g["windows_switching_flag"]:
-                            # window-switching granules carry IMPLIED
-                            # region boundaries (2.4.2.7): two regions,
-                            # region0 ending at sample 36 — fixed for
-                            # block_type-2 (short) granules, and equal
-                            # to the long layout's 8th boundary for
-                            # start/stop blocks (types 1/3), which is
-                            # ALSO 36 on every MPEG-1 B.8 row (the
-                            # rows agree through b[8])
-                            r0 = min(nbv, 18)
-                            regions = [
-                                (r0, tsels[0]),
-                                (nbv - r0, tsels[1]),
-                            ]
+                            bands[b_start : b_start + b_n] = (
+                                g0_bands[b_start : b_start + b_n]
+                            )
                         else:
-                            b = MP3_SFB_LONG.get(sr)
-                            if b is None:
-                                raise NotImplementedError(
-                                    "region-dependent table switching "
-                                    f"needs the ISO B.8 row for "
-                                    f"{sr} Hz (MPEG-1 rows shipped)"
-                                )
-                            r0 = min(
-                                nbv, b[g["region0_count"] + 1] // 2
+                            # one read per band GROUP (same bits,
+                            # same mid-field raise), split by shift
+                            v = take(b_n * slen)
+                            msk = (1 << slen) - 1
+                            for i in range(b_n):
+                                bands[b_start + i] = (
+                                    v >> ((b_n - 1 - i) * slen)
+                                ) & msk
+                    sum_sf += sum(bands)
+                    if gi == 0:
+                        g0_bands = bands
+                # big-values region: pairs Huffman-decoded through
+                # the region's table_select, x's sign then y's sign
+                # after each pair code (ISO 2.4.2.7).  Region
+                # boundaries only matter when the three tables
+                # differ — then they come from the rate's Table
+                # B.8 row (all three MPEG-1 rows shipped); uniform
+                # table_selects decode without boundary knowledge.
+                nbv = g["big_values"]
+                if nbv:
+                    tsels = g["table_select"]
+                    if len(set(tsels)) == 1:
+                        regions = [(nbv, tsels[0])]
+                    elif g["windows_switching_flag"]:
+                        # window-switching granules carry IMPLIED
+                        # region boundaries (2.4.2.7): two regions,
+                        # region0 ending at sample 36 — fixed for
+                        # block_type-2 (short) granules, and equal
+                        # to the long layout's 8th boundary for
+                        # start/stop blocks (types 1/3), which is
+                        # ALSO 36 on every MPEG-1 B.8 row (the
+                        # rows agree through b[8])
+                        r0 = min(nbv, 18)
+                        regions = [
+                            (r0, tsels[0]),
+                            (nbv - r0, tsels[1]),
+                        ]
+                    else:
+                        b = MP3_SFB_LONG.get(sr)
+                        if b is None:
+                            raise NotImplementedError(
+                                "region-dependent table switching "
+                                f"needs the ISO B.8 row for "
+                                f"{sr} Hz (MPEG-1 rows shipped)"
                             )
-                            r1 = min(
-                                nbv,
-                                b[
-                                    g["region0_count"]
-                                    + g["region1_count"]
-                                    + 2
-                                ]
-                                // 2,
-                            )
-                            regions = [
-                                (r0, tsels[0]),
-                                (r1 - r0, tsels[1]),
-                                (nbv - r1, tsels[2]),
+                        r0 = min(
+                            nbv, b[g["region0_count"] + 1] // 2
+                        )
+                        r1 = min(
+                            nbv,
+                            b[
+                                g["region0_count"]
+                                + g["region1_count"]
+                                + 2
                             ]
-                        for count, tsel in regions:
-                            if count <= 0:
-                                continue
-                            if tsel == 0:
-                                # table 0: the region is all zeros and
-                                # transmits nothing
-                                n_pairs += count
-                                continue
-                            lut, kk, linbits = _mp3_bv_lut_sel(
-                                tsel, doc_id
-                            )
-                            for _ in range(count):
-                                # one peek-LUT probe per pair code
-                                # (complete table: every kk-bit
-                                # pattern resolves); the bound check
-                                # is take()'s, verbatim
-                                e = lut[
-                                    _mp3_peek(
-                                        stream,
-                                        (base << 3) + off + used,
-                                        kk,
-                                    )
-                                ]
-                                ln = e >> 8
-                                if off + used + ln > tot:
-                                    raise ValueError(
-                                        f"doc {doc_id}: main data "
-                                        "ends mid-field"
-                                    )
-                                used += ln
-                                x = (e >> 4) & 15
-                                y = e & 15
-                                # linbits escape: a decoded 15 is
-                                # extended by the raw linbits field
-                                # BEFORE its sign bit (2.4.2.7 order:
-                                # code, linbits-x, sign-x, linbits-y,
-                                # sign-y) — all four fields in ONE
-                                # take (same bits, same raise)
-                                lx = linbits if x == 15 else 0
-                                ly = linbits if y == 15 else 0
-                                ex = (
-                                    lx + (1 if x else 0)
-                                    + ly + (1 if y else 0)
-                                )
-                                if ex:
-                                    bits = take(ex)
-                                    rem = ex
-                                    if x:
-                                        if lx:
-                                            rem -= lx
-                                            x += (bits >> rem) & (
-                                                (1 << lx) - 1
-                                            )
-                                        rem -= 1
-                                        sum_bv_abs += x
-                                        sum_bv_signed += (
-                                            -x if (bits >> rem) & 1
-                                            else x
-                                        )
-                                    if y:
-                                        if ly:
-                                            rem -= ly
-                                            y += (bits >> rem) & (
-                                                (1 << ly) - 1
-                                            )
-                                        rem -= 1
-                                        sum_bv_abs += y
-                                        sum_bv_signed += (
-                                            -y if (bits >> rem) & 1
-                                            else y
-                                        )
-                                n_pairs += 1
-                                if used > p23:
-                                    raise ValueError(
-                                        f"doc {doc_id}: big-values "
-                                        "region overran part2_3_length"
-                                    )
-                    count1a = not g["count1table_select"]
-                    while used < p23:
-                        if count1a:
-                            # table A: Huffman-coded quadruple pattern,
-                            # transmitted UNcomplemented (max code 6
-                            # bits) — 6-bit peek LUT, complete code
-                            e = lutA[
+                            // 2,
+                        )
+                        regions = [
+                            (r0, tsels[0]),
+                            (r1 - r0, tsels[1]),
+                            (nbv - r1, tsels[2]),
+                        ]
+                    for count, tsel in regions:
+                        if count <= 0:
+                            continue
+                        if tsel == 0:
+                            # table 0: the region is all zeros and
+                            # transmits nothing
+                            n_pairs += count
+                            continue
+                        lut, kk, linbits = _mp3_bv_lut_sel(
+                            tsel, doc_id
+                        )
+                        for _ in range(count):
+                            # one peek-LUT probe per pair code
+                            # (complete table: every kk-bit
+                            # pattern resolves); the bound check
+                            # is take()'s, verbatim
+                            e = lut[
                                 _mp3_peek(
                                     stream,
                                     (base << 3) + off + used,
-                                    6,
+                                    kk,
                                 )
                             ]
-                            ln = e >> 4
+                            ln = e >> 8
                             if off + used + ln > tot:
                                 raise ValueError(
                                     f"doc {doc_id}: main data "
                                     "ends mid-field"
                                 )
                             used += ln
-                            quad = e & 15
-                        else:
-                            # table B: fixed-length, complemented
-                            quad = take(4) ^ 0xF
-                        nz = quad.bit_count()
-                        if nz:
-                            # the quad's sign bits in one read (v,w,x,y
-                            # order = MSB-first in the read value)
-                            bits = take(nz)
-                            sum_abs += nz
-                            sum_signed += nz - 2 * bits.bit_count()
-                        n_quads += 1
-                        if used > p23:
-                            raise ValueError(
-                                f"doc {doc_id}: count1 quadruple overran "
-                                f"part2_3_length"
+                            x = (e >> 4) & 15
+                            y = e & 15
+                            # linbits escape: a decoded 15 is
+                            # extended by the raw linbits field
+                            # BEFORE its sign bit (2.4.2.7 order:
+                            # code, linbits-x, sign-x, linbits-y,
+                            # sign-y) — all four fields in ONE
+                            # take (same bits, same raise)
+                            lx = linbits if x == 15 else 0
+                            ly = linbits if y == 15 else 0
+                            ex = (
+                                lx + (1 if x else 0)
+                                + ly + (1 if y else 0)
                             )
-                    bp += p23
-            return (
-                len(frames), max_resv, sum_sf, n_pairs, sum_bv_abs,
-                sum_bv_signed, n_quads, sum_abs, sum_signed,
-            )
-
-        cols = (
-            "doc_id", "n_frames", "max_reservoir", "sum_scalefac",
-            "n_pairs", "sum_bv_abs", "sum_bv_signed",
-            "n_quads", "sum_quad_abs", "sum_quad_signed",
+                            if ex:
+                                bits = take(ex)
+                                rem = ex
+                                if x:
+                                    if lx:
+                                        rem -= lx
+                                        x += (bits >> rem) & (
+                                            (1 << lx) - 1
+                                        )
+                                    rem -= 1
+                                    sum_bv_abs += x
+                                    sum_bv_signed += (
+                                        -x if (bits >> rem) & 1
+                                        else x
+                                    )
+                                if y:
+                                    if ly:
+                                        rem -= ly
+                                        y += (bits >> rem) & (
+                                            (1 << ly) - 1
+                                        )
+                                    rem -= 1
+                                    sum_bv_abs += y
+                                    sum_bv_signed += (
+                                        -y if (bits >> rem) & 1
+                                        else y
+                                    )
+                            n_pairs += 1
+                            if used > p23:
+                                raise ValueError(
+                                    f"doc {doc_id}: big-values "
+                                    "region overran part2_3_length"
+                                )
+                count1a = not g["count1table_select"]
+                while used < p23:
+                    if count1a:
+                        # table A: Huffman-coded quadruple pattern,
+                        # transmitted UNcomplemented (max code 6
+                        # bits) — 6-bit peek LUT, complete code
+                        e = lutA[
+                            _mp3_peek(
+                                stream,
+                                (base << 3) + off + used,
+                                6,
+                            )
+                        ]
+                        ln = e >> 4
+                        if off + used + ln > tot:
+                            raise ValueError(
+                                f"doc {doc_id}: main data "
+                                "ends mid-field"
+                            )
+                        used += ln
+                        quad = e & 15
+                    else:
+                        # table B: fixed-length, complemented
+                        quad = take(4) ^ 0xF
+                    nz = quad.bit_count()
+                    if nz:
+                        # the quad's sign bits in one read (v,w,x,y
+                        # order = MSB-first in the read value)
+                        bits = take(nz)
+                        sum_abs += nz
+                        sum_signed += nz - 2 * bits.bit_count()
+                    n_quads += 1
+                    if used > p23:
+                        raise ValueError(
+                            f"doc {doc_id}: count1 quadruple overran "
+                            f"part2_3_length"
+                        )
+                bp += p23
+        return (
+            len(frames), max_resv, sum_sf, n_pairs, sum_bv_abs,
+            sum_bv_signed, n_quads, sum_abs, sum_signed,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, MP3_MAINDATA_SCHEMA
-    )
-
-
-def synthesize_mp3_md(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a reservoir-using, decodable-main-data
-    MPEG-1 Layer III stream (``make_mp3_md_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_md_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_md_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 # ISO 11172-3 Table B.9 alias-reduction coefficients ci — the hybrid
@@ -1428,7 +1338,11 @@ def _mp3_fb_tables():
     return _MP3_FB_TABLES
 
 
-def decode_mp3_imdct(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, n_granules long, sum_pcm_signed long, "
+    "sum_pcm_abs long, n_nonzero_samples long"
+)
+def decode_mp3_imdct():
     """REAL MPEG-1 Layer III hybrid synthesis filterbank (ISO 11172-3
     2.4.3.4) — the layer between the entropy/requantization decode
     and the polyphase subband filter: entropy-decode each granule's
@@ -1454,315 +1368,296 @@ def decode_mp3_imdct(media_df: DataFrame) -> DataFrame:
     (Table B.3's 512-coefficient window) stay declared
     boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    cos36, cos12, windows, sin12, cs, ca = _mp3_fb_tables()
+    q = _MP3_FB_Q
 
-        cos36, cos12, windows, sin12, cs, ca = _mp3_fb_tables()
-        q = _MP3_FB_Q
+    def granule_levels(doc_id, data, bitpos, g_fields):
+        """Entropy-decode one granule to its 576 integer levels."""
+        bt, _mixed, p23, bv, tsels, rc, rc2, c1a = g_fields
+        take_base = bitpos
+        nbits = len(data) << 3
+        lutA = _mp3_c1a_lut()
 
-        def granule_levels(doc_id, data, bitpos, g_fields):
-            """Entropy-decode one granule to its 576 integer levels."""
-            bt, _mixed, p23, bv, tsels, rc, rc2, c1a = g_fields
-            take_base = bitpos
-            nbits = len(data) << 3
-            lutA = _mp3_c1a_lut()
+        def take(n):
+            # byte-level read (same values; same IndexError when a
+            # consumed bit lies past the final byte)
+            nonlocal bitpos
+            if n == 1:
+                out = (data[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
+                bitpos += 1
+                return out
+            if not n:
+                return 0
+            end = bitpos + n
+            if (end - 1) >> 3 >= len(data):
+                raise IndexError("index out of range")
+            out = (
+                int.from_bytes(
+                    data[bitpos >> 3 : (end + 7) >> 3], "big"
+                )
+                >> ((-end) & 7)
+            ) & ((1 << n) - 1)
+            bitpos = end
+            return out
 
-            def take(n):
-                # byte-level read (same values; same IndexError when a
-                # consumed bit lies past the final byte)
-                nonlocal bitpos
-                if n == 1:
-                    out = (data[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-                    bitpos += 1
-                    return out
-                if not n:
-                    return 0
-                end = bitpos + n
-                if (end - 1) >> 3 >= len(data):
+        levels = [0] * 576
+        if bt == 0:
+            b = MP3_SFB_LONG[44100]
+            if rc + 1 >= len(b) or rc + rc2 + 2 >= len(b):
+                raise ValueError(
+                    f"doc {doc_id}: region counts overrun Table B.8"
+                )
+            r0 = min(bv, b[rc + 1] // 2)
+            r1 = min(bv, b[rc + rc2 + 2] // 2)
+            regions = (
+                (r0, tsels[0]), (r1 - r0, tsels[1]),
+                (bv - r1, tsels[2]),
+            )
+        else:
+            # window-switching granules: the IMPLIED two-region
+            # split at sample 36 (2.4.2.7)
+            r0 = min(bv, 18)
+            regions = ((r0, tsels[0]), (bv - r0, tsels[1]))
+        pos = 0
+        for count, tsel in regions:
+            if count <= 0:
+                continue
+            if tsel == 0:
+                pos += 2 * count
+                continue
+            lut, kk, linbits = _mp3_bv_lut_sel(tsel, doc_id)
+            for _ in range(count):
+                # peek-LUT pair decode; bound check reproduces the
+                # per-bit read's IndexError site
+                e = lut[_mp3_peek(data, bitpos, kk)]
+                if bitpos + (e >> 8) > nbits:
                     raise IndexError("index out of range")
-                out = (
-                    int.from_bytes(
-                        data[bitpos >> 3 : (end + 7) >> 3], "big"
-                    )
-                    >> ((-end) & 7)
-                ) & ((1 << n) - 1)
-                bitpos = end
-                return out
-
-            levels = [0] * 576
-            if bt == 0:
-                b = MP3_SFB_LONG[44100]
-                if rc + 1 >= len(b) or rc + rc2 + 2 >= len(b):
-                    raise ValueError(
-                        f"doc {doc_id}: region counts overrun Table B.8"
-                    )
-                r0 = min(bv, b[rc + 1] // 2)
-                r1 = min(bv, b[rc + rc2 + 2] // 2)
-                regions = (
-                    (r0, tsels[0]), (r1 - r0, tsels[1]),
-                    (bv - r1, tsels[2]),
-                )
-            else:
-                # window-switching granules: the IMPLIED two-region
-                # split at sample 36 (2.4.2.7)
-                r0 = min(bv, 18)
-                regions = ((r0, tsels[0]), (bv - r0, tsels[1]))
-            pos = 0
-            for count, tsel in regions:
-                if count <= 0:
+                bitpos += e >> 8
+                x = (e >> 4) & 15
+                y = e & 15
+                if x <= 1 and y <= 1:
+                    # the unit-magnitude fast path: both sign
+                    # bits in one read (the >1 boundary path
+                    # below keeps field-at-a-time reads so its
+                    # raise sits between the same reads)
+                    ex = x + y
+                    if ex:
+                        bits = take(ex)
+                        if x:
+                            levels[pos] = (
+                                -1 if (bits >> (ex - 1)) & 1 else 1
+                            )
+                        if y:
+                            levels[pos + 1] = -1 if bits & 1 else 1
+                    pos += 2
                     continue
-                if tsel == 0:
-                    pos += 2 * count
-                    continue
-                lut, kk, linbits = _mp3_bv_lut_sel(tsel, doc_id)
-                for _ in range(count):
-                    # peek-LUT pair decode; bound check reproduces the
-                    # per-bit read's IndexError site
-                    e = lut[_mp3_peek(data, bitpos, kk)]
-                    if bitpos + (e >> 8) > nbits:
-                        raise IndexError("index out of range")
-                    bitpos += e >> 8
-                    x = (e >> 4) & 15
-                    y = e & 15
-                    if x <= 1 and y <= 1:
-                        # the unit-magnitude fast path: both sign
-                        # bits in one read (the >1 boundary path
-                        # below keeps field-at-a-time reads so its
-                        # raise sits between the same reads)
-                        ex = x + y
-                        if ex:
-                            bits = take(ex)
-                            if x:
-                                levels[pos] = (
-                                    -1 if (bits >> (ex - 1)) & 1 else 1
-                                )
-                            if y:
-                                levels[pos + 1] = -1 if bits & 1 else 1
-                        pos += 2
-                        continue
-                    for v in (x, y):
-                        if v == 15 and linbits:
-                            v += take(linbits)
-                        if v > 1:
-                            raise NotImplementedError(
-                                "non-unit quantized magnitudes (the "
-                                "irrational |is|^(4/3) power) not "
-                                "implemented in the exact filterbank"
-                            )
-                        if v:
-                            levels[pos] = -v if take(1) else v
-                        pos += 1
-            while bitpos - take_base < p23:
-                if pos + 4 > 576:
-                    raise ValueError(
-                        f"doc {doc_id}: count1 overruns the spectrum"
-                    )
-                if c1a:
-                    e = lutA[_mp3_peek(data, bitpos, 6)]
-                    if bitpos + (e >> 4) > nbits:
-                        raise IndexError("index out of range")
-                    bitpos += e >> 4
-                    quad = e & 15
-                else:
-                    quad = take(4) ^ 0xF
-                nz = quad.bit_count()
-                if nz:
-                    bits = take(nz)
-                    rem = nz
-                    for idx, shift in enumerate((3, 2, 1, 0)):
-                        if (quad >> shift) & 1:
-                            rem -= 1
-                            levels[pos + idx] = (
-                                -1 if (bits >> rem) & 1 else 1
-                            )
-                if bitpos - take_base > p23:
-                    raise ValueError(
-                        f"doc {doc_id}: count1 overran part2_3_length"
-                    )
-                pos += 4
-            if bitpos - take_base != p23:
-                raise ValueError(
-                    f"doc {doc_id}: part2_3_length not exactly consumed"
-                )
-            return levels, bitpos
-
-        def filterbank(doc_id, granules):
-            """Exact integer hybrid filterbank over the granule
-            sequence; returns (sum_signed, sum_abs, n_nonzero)."""
-            prev = [[0] * 36 for _ in range(32)]
-            s_signed = s_abs = nnz = 0
-            for bt, mixed, levels in granules:
-                for sb in range(32):
-                    base = 18 * sb
-                    # mixed granules (2.4.3.4.6): subbands 0-1 run
-                    # the LONG path under the normal window with
-                    # alias reduction restricted to the long-long
-                    # boundary; subbands 2+ run the short path
-                    short_sb = bt == 2 and not (mixed and sb < 2)
-                    if short_sb:
-                        # short blocks: NO alias reduction; three
-                        # 12-point IMDCTs (window-major 6-line
-                        # groups) windowed and overlapped at
-                        # 6-sample stride from sample 6 (2.4.3.4.6)
-                        z = [0] * 36
-                        if any(levels[base : base + 18]):
-                            for w_ in range(3):
-                                for m in range(12):
-                                    y = sum(
-                                        levels[base + 6 * w_ + k] * q
-                                        * cos12[m][k]
-                                        for k in range(6)
-                                    )
-                                    z[6 + 6 * w_ + m] += y * sin12[m]
-                    else:
-                        win = windows[0 if bt == 2 else bt]
-                        # alias-reduction butterflies feeding this
-                        # subband use the RAW neighbour lines, so
-                        # build the aliased 18 lines here (scale q);
-                        # a mixed granule's long part only
-                        # butterflies at the boundary between its
-                        # two long subbands
-                        long_top = 1 if bt == 2 else 31
-                        xa = [levels[base + k] * q for k in range(18)]
-                        if sb >= 1:
-                            for i in range(8):
-                                va = levels[base - 1 - i]
-                                vb = levels[base + i]
-                                xa[i] = vb * cs[i] + va * ca[i]
-                        if sb < long_top:
-                            for i in range(8):
-                                va = levels[base + 17 - i]
-                                vb = levels[base + 18 + i]
-                                xa[17 - i] = va * cs[i] - vb * ca[i]
-                        if any(xa) or any(prev[sb][18:]):
-                            z = [
-                                sum(
-                                    xa[k] * cos36[n][k]
-                                    for k in range(18)
-                                ) * win[n]
-                                for n in range(36)
-                            ]
-                        else:
-                            z = [0] * 36
-                    for n in range(18):
-                        v = z[n] + prev[sb][18 + n]
-                        if sb % 2 and n % 2:
-                            v = -v
-                        s_signed += v
-                        s_abs += abs(v)
-                        if v:
-                            nnz += 1
-                    prev[sb] = z
-            return s_signed, s_abs, nnz
-
-        def walk(doc_id: int, raw: bytes):
-            if len(raw) < 21 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
-                raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
-            if (raw[2] >> 2) & 0x3 != 0:
-                # this walker hardcodes the 44.1 kHz Table B.8 rows;
-                # silently banding a 48/32 kHz frame with them would
-                # be WRONG, so reject loudly instead
-                raise NotImplementedError(
-                    "exact requantization at non-44.1 kHz rates not "
-                    "implemented (Table B.8 row dispatch; the "
-                    "main-data walker carries all three MPEG-1 rows)"
-                )
-            side = raw[4:21]
-            bitpos = 0
-
-            def sbits(n):
-                nonlocal bitpos
-                out = 0
-                for _ in range(n):
-                    out = (out << 1) | (
-                        (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-                    )
-                    bitpos += 1
-                return out
-
-            if sbits(9):
-                raise ValueError(
-                    f"doc {doc_id}: filterbank fixture uses no "
-                    "reservoir"
-                )
-            sbits(5)
-            if sbits(4):
-                raise ValueError(f"doc {doc_id}: scfsi must be 0")
-            gfields = []
-            for _g in range(2):
-                p23 = sbits(12)
-                bv = sbits(9)
-                if sbits(8) != 210:
-                    raise NotImplementedError(
-                        "non-unit requantization (global_gain != "
-                        "210) not implemented in the exact filterbank"
-                    )
-                if sbits(4):
-                    raise NotImplementedError(
-                        "nonzero scalefactors not implemented in the "
-                        "exact filterbank (slen 0/0 only)"
-                    )
-                mixed = False
-                if sbits(1):  # window_switching_flag
-                    bt = sbits(2)
-                    if bt == 0:
-                        raise ValueError(
-                            f"doc {doc_id}: window switching with "
-                            "block_type 0 is forbidden"
-                        )
-                    if sbits(1):
-                        if bt != 2:
-                            raise ValueError(
-                                f"doc {doc_id}: mixed_block_flag on "
-                                f"block_type {bt}"
-                            )
-                        mixed = True
-                    tsels = tuple(sbits(5) for _ in range(2))
-                    if any(sbits(3) for _ in range(3)):
+                for v in (x, y):
+                    if v == 15 and linbits:
+                        v += take(linbits)
+                    if v > 1:
                         raise NotImplementedError(
-                            "nonzero subblock_gain (non-unit "
-                            "requantization) not implemented in the "
-                            "exact filterbank"
+                            "non-unit quantized magnitudes (the "
+                            "irrational |is|^(4/3) power) not "
+                            "implemented in the exact filterbank"
                         )
-                    rc = rc2 = 0
-                else:
-                    bt = 0
-                    tsels = tuple(sbits(5) for _ in range(3))
-                    rc = sbits(4)
-                    rc2 = sbits(3)
-                if sbits(1):
-                    raise ValueError(f"doc {doc_id}: preflag set with "
-                                     "zero scalefactors")
-                sbits(1)  # scalefac_scale: moot at zero scalefactors
-                c1a = sbits(1) == 0
-                gfields.append(
-                    (bt, mixed, p23, bv, tsels, rc, rc2, c1a)
+                    if v:
+                        levels[pos] = -v if take(1) else v
+                    pos += 1
+        while bitpos - take_base < p23:
+            if pos + 4 > 576:
+                raise ValueError(
+                    f"doc {doc_id}: count1 overruns the spectrum"
                 )
-            granules = []
-            dpos = 21 * 8
-            for gf in gfields:
-                levels, dpos = granule_levels(doc_id, raw, dpos, gf)
-                granules.append((gf[0], gf[1], levels))
-            s_signed, s_abs, nnz = filterbank(doc_id, granules)
-            return len(granules), s_signed, s_abs, nnz
+            if c1a:
+                e = lutA[_mp3_peek(data, bitpos, 6)]
+                if bitpos + (e >> 4) > nbits:
+                    raise IndexError("index out of range")
+                bitpos += e >> 4
+                quad = e & 15
+            else:
+                quad = take(4) ^ 0xF
+            nz = quad.bit_count()
+            if nz:
+                bits = take(nz)
+                rem = nz
+                for idx, shift in enumerate((3, 2, 1, 0)):
+                    if (quad >> shift) & 1:
+                        rem -= 1
+                        levels[pos + idx] = (
+                            -1 if (bits >> rem) & 1 else 1
+                        )
+            if bitpos - take_base > p23:
+                raise ValueError(
+                    f"doc {doc_id}: count1 overran part2_3_length"
+                )
+            pos += 4
+        if bitpos - take_base != p23:
+            raise ValueError(
+                f"doc {doc_id}: part2_3_length not exactly consumed"
+            )
+        return levels, bitpos
 
-        cols = (
-            "doc_id", "n_granules", "sum_pcm_signed", "sum_pcm_abs",
-            "n_nonzero_samples",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
+    def filterbank(doc_id, granules):
+        """Exact integer hybrid filterbank over the granule
+        sequence; returns (sum_signed, sum_abs, n_nonzero)."""
+        prev = [[0] * 36 for _ in range(32)]
+        s_signed = s_abs = nnz = 0
+        for bt, mixed, levels in granules:
+            for sb in range(32):
+                base = 18 * sb
+                # mixed granules (2.4.3.4.6): subbands 0-1 run
+                # the LONG path under the normal window with
+                # alias reduction restricted to the long-long
+                # boundary; subbands 2+ run the short path
+                short_sb = bt == 2 and not (mixed and sb < 2)
+                if short_sb:
+                    # short blocks: NO alias reduction; three
+                    # 12-point IMDCTs (window-major 6-line
+                    # groups) windowed and overlapped at
+                    # 6-sample stride from sample 6 (2.4.3.4.6)
+                    z = [0] * 36
+                    if any(levels[base : base + 18]):
+                        for w_ in range(3):
+                            for m in range(12):
+                                y = sum(
+                                    levels[base + 6 * w_ + k] * q
+                                    * cos12[m][k]
+                                    for k in range(6)
+                                )
+                                z[6 + 6 * w_ + m] += y * sin12[m]
+                else:
+                    win = windows[0 if bt == 2 else bt]
+                    # alias-reduction butterflies feeding this
+                    # subband use the RAW neighbour lines, so
+                    # build the aliased 18 lines here (scale q);
+                    # a mixed granule's long part only
+                    # butterflies at the boundary between its
+                    # two long subbands
+                    long_top = 1 if bt == 2 else 31
+                    xa = [levels[base + k] * q for k in range(18)]
+                    if sb >= 1:
+                        for i in range(8):
+                            va = levels[base - 1 - i]
+                            vb = levels[base + i]
+                            xa[i] = vb * cs[i] + va * ca[i]
+                    if sb < long_top:
+                        for i in range(8):
+                            va = levels[base + 17 - i]
+                            vb = levels[base + 18 + i]
+                            xa[17 - i] = va * cs[i] - vb * ca[i]
+                    if any(xa) or any(prev[sb][18:]):
+                        z = [
+                            sum(
+                                xa[k] * cos36[n][k]
+                                for k in range(18)
+                            ) * win[n]
+                            for n in range(36)
+                        ]
+                    else:
+                        z = [0] * 36
+                for n in range(18):
+                    v = z[n] + prev[sb][18 + n]
+                    if sb % 2 and n % 2:
+                        v = -v
+                    s_signed += v
+                    s_abs += abs(v)
+                    if v:
+                        nnz += 1
+                prev[sb] = z
+        return s_signed, s_abs, nnz
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, n_granules long, sum_pcm_signed long, "
-        "sum_pcm_abs long, n_nonzero_samples long",
-    )
+    def walk(doc_id: int, raw: bytes):
+        if len(raw) < 21 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
+            raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
+        if (raw[2] >> 2) & 0x3 != 0:
+            # this walker hardcodes the 44.1 kHz Table B.8 rows;
+            # silently banding a 48/32 kHz frame with them would
+            # be WRONG, so reject loudly instead
+            raise NotImplementedError(
+                "exact requantization at non-44.1 kHz rates not "
+                "implemented (Table B.8 row dispatch; the "
+                "main-data walker carries all three MPEG-1 rows)"
+            )
+        side = raw[4:21]
+        bitpos = 0
+
+        def sbits(n):
+            nonlocal bitpos
+            out = 0
+            for _ in range(n):
+                out = (out << 1) | (
+                    (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
+                )
+                bitpos += 1
+            return out
+
+        if sbits(9):
+            raise ValueError(
+                f"doc {doc_id}: filterbank fixture uses no "
+                "reservoir"
+            )
+        sbits(5)
+        if sbits(4):
+            raise ValueError(f"doc {doc_id}: scfsi must be 0")
+        gfields = []
+        for _g in range(2):
+            p23 = sbits(12)
+            bv = sbits(9)
+            if sbits(8) != 210:
+                raise NotImplementedError(
+                    "non-unit requantization (global_gain != "
+                    "210) not implemented in the exact filterbank"
+                )
+            if sbits(4):
+                raise NotImplementedError(
+                    "nonzero scalefactors not implemented in the "
+                    "exact filterbank (slen 0/0 only)"
+                )
+            mixed = False
+            if sbits(1):  # window_switching_flag
+                bt = sbits(2)
+                if bt == 0:
+                    raise ValueError(
+                        f"doc {doc_id}: window switching with "
+                        "block_type 0 is forbidden"
+                    )
+                if sbits(1):
+                    if bt != 2:
+                        raise ValueError(
+                            f"doc {doc_id}: mixed_block_flag on "
+                            f"block_type {bt}"
+                        )
+                    mixed = True
+                tsels = tuple(sbits(5) for _ in range(2))
+                if any(sbits(3) for _ in range(3)):
+                    raise NotImplementedError(
+                        "nonzero subblock_gain (non-unit "
+                        "requantization) not implemented in the "
+                        "exact filterbank"
+                    )
+                rc = rc2 = 0
+            else:
+                bt = 0
+                tsels = tuple(sbits(5) for _ in range(3))
+                rc = sbits(4)
+                rc2 = sbits(3)
+            if sbits(1):
+                raise ValueError(f"doc {doc_id}: preflag set with "
+                                 "zero scalefactors")
+            sbits(1)  # scalefac_scale: moot at zero scalefactors
+            c1a = sbits(1) == 0
+            gfields.append(
+                (bt, mixed, p23, bv, tsels, rc, rc2, c1a)
+            )
+        granules = []
+        dpos = 21 * 8
+        for gf in gfields:
+            levels, dpos = granule_levels(doc_id, raw, dpos, gf)
+            granules.append((gf[0], gf[1], levels))
+        s_signed, s_abs, nnz = filterbank(doc_id, granules)
+        return len(granules), s_signed, s_abs, nnz
+
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 _MP3_RQ_TABLES = None
@@ -1851,7 +1746,11 @@ def _mp3_rq_tables():
     return _MP3_RQ_TABLES
 
 
-def decode_mp3_requant(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, n_granules long, sum_rq_signed long, "
+    "sum_rq_abs long, n_nonzero long, sum_pos_signed long"
+)
+def decode_mp3_requant():
     """REAL MPEG-1 Layer III requantization (ISO 11172-3 2.4.3.4) in
     EXACT integer arithmetic — the layer the unit-gain filterbank
     fixture bypassed: decode the slen-coded scalefactors (both
@@ -1875,313 +1774,294 @@ def decode_mp3_requant(media_df: DataFrame) -> DataFrame:
     13-linbits range, verified tie-free against exact integer
     cube-root arithmetic and DuckDB's ROUND(POW(...))."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    p43, gain_tab, sfhalf = _mp3_rq_tables()
+    b8 = MP3_SFB_LONG[44100]
+    bs = MP3_SFB_SHORT[44100]
 
-        p43, gain_tab, sfhalf = _mp3_rq_tables()
-        b8 = MP3_SFB_LONG[44100]
-        bs = MP3_SFB_SHORT[44100]
+    def walk(doc_id: int, raw: bytes):
+        if len(raw) < 21 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
+            raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
+        if (raw[2] >> 2) & 0x3 != 0:
+            # this walker hardcodes the 44.1 kHz Table B.8 rows;
+            # silently banding a 48/32 kHz frame with them would
+            # be WRONG, so reject loudly instead
+            raise NotImplementedError(
+                "exact requantization at non-44.1 kHz rates not "
+                "implemented (Table B.8 row dispatch; the "
+                "main-data walker carries all three MPEG-1 rows)"
+            )
+        side = raw[4:21]
+        bitpos = 0
 
-        def walk(doc_id: int, raw: bytes):
-            if len(raw) < 21 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
-                raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
-            if (raw[2] >> 2) & 0x3 != 0:
-                # this walker hardcodes the 44.1 kHz Table B.8 rows;
-                # silently banding a 48/32 kHz frame with them would
-                # be WRONG, so reject loudly instead
+        def sbits(n):
+            nonlocal bitpos
+            out = 0
+            for _ in range(n):
+                out = (out << 1) | (
+                    (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
+                )
+                bitpos += 1
+            return out
+
+        from .synth import MP3_SLEN
+
+        if sbits(9):
+            raise ValueError(f"doc {doc_id}: requant fixture uses "
+                             "no reservoir")
+        sbits(5)
+        if sbits(4):
+            raise ValueError(f"doc {doc_id}: scfsi must be 0")
+        gfields = []
+        for _g in range(2):
+            p23 = sbits(12)
+            bv = sbits(9)
+            gg = sbits(8)
+            if not 198 <= gg <= 222:
                 raise NotImplementedError(
-                    "exact requantization at non-44.1 kHz rates not "
-                    "implemented (Table B.8 row dispatch; the "
-                    "main-data walker carries all three MPEG-1 rows)"
+                    f"global_gain {gg} outside the 198..222 "
+                    "exact-Q12 band"
                 )
-            side = raw[4:21]
-            bitpos = 0
-
-            def sbits(n):
-                nonlocal bitpos
-                out = 0
-                for _ in range(n):
-                    out = (out << 1) | (
-                        (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-                    )
-                    bitpos += 1
-                return out
-
-            from .synth import MP3_SLEN
-
-            if sbits(9):
-                raise ValueError(f"doc {doc_id}: requant fixture uses "
-                                 "no reservoir")
-            sbits(5)
-            if sbits(4):
-                raise ValueError(f"doc {doc_id}: scfsi must be 0")
-            gfields = []
-            for _g in range(2):
-                p23 = sbits(12)
-                bv = sbits(9)
-                gg = sbits(8)
-                if not 198 <= gg <= 222:
-                    raise NotImplementedError(
-                        f"global_gain {gg} outside the 198..222 "
-                        "exact-Q12 band"
-                    )
-                sl1, sl2 = MP3_SLEN[sbits(4)]
-                if sbits(1):  # window_switching_flag
-                    bt = sbits(2)
-                    if bt == 0:
-                        raise ValueError(
-                            f"doc {doc_id}: window switching with "
-                            "block_type 0 is forbidden"
-                        )
-                    if sbits(1):
-                        raise NotImplementedError(
-                            "mixed-block requantization (split "
-                            "long/short band layouts) not implemented"
-                        )
-                    tsels = tuple(sbits(5) for _ in range(2)) + (0,)
-                    ssg = tuple(sbits(3) for _ in range(3))
-                    rc = rc2 = 0
-                else:
-                    bt = 0
-                    tsels = tuple(sbits(5) for _ in range(3))
-                    ssg = (0, 0, 0)
-                    rc = sbits(4)
-                    rc2 = sbits(3)
-                pre = sbits(1)
-                if pre and bt == 2:
-                    # ISO 11172-3 2.4.3.4: "preflag is never used if
-                    # block_type is 2" — a short-block granule with
-                    # preflag set is a spec violation, not a missing
-                    # feature (start/stop blocks, types 1/3, use the
-                    # LONG scalefactor layout and requantize with
-                    # pretab through the normal path below)
-                    raise ValueError(
-                        f"doc {doc_id}: preflag set on a short-block "
-                        "granule (illegal per 2.4.3.4)"
-                    )
-                sfs = sbits(1)
-                c1a = sbits(1) == 0
-                gfields.append(
-                    (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
-                     bt, ssg, pre)
-                )
-
-            dpos = 21 * 8
-            nbits = len(raw) << 3
-            lutA = _mp3_c1a_lut()
-
-            def take(n):
-                # byte-level read (same values; same IndexError when a
-                # consumed bit lies past the final byte)
-                nonlocal dpos
-                if n == 1:
-                    out = (raw[dpos >> 3] >> (7 - (dpos & 7))) & 1
-                    dpos += 1
-                    return out
-                if not n:
-                    return 0
-                end = dpos + n
-                if (end - 1) >> 3 >= len(raw):
-                    raise IndexError("index out of range")
-                out = (
-                    int.from_bytes(
-                        raw[dpos >> 3 : (end + 7) >> 3], "big"
-                    )
-                    >> ((-end) & 7)
-                ) & ((1 << n) - 1)
-                dpos = end
-                return out
-
-            s_signed = s_abs = nnz = pos_signed = 0
-            for (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
-                 bt, ssg, pre) in gfields:
-                start = dpos
-                mult2 = 2 if sfs else 1  # exponent in HALF steps
-                if bt == 2:
-                    # short layout: per-window scalefactors, bands
-                    # 0-5 under slen1 then 6-11 under slen2
-                    sfac_s = [
-                        [take(sl1) for _w in range(3)]
-                        for _b in range(6)
-                    ] + [
-                        [take(sl2) for _w in range(3)]
-                        for _b in range(6)
-                    ]
-
-                    def sf_index(pos: int) -> int:
-                        if pos >= 3 * bs[12]:
-                            raise NotImplementedError(
-                                "the unscaled short zone's window "
-                                "interleave not implemented"
-                            )
-                        for sfb in range(12):
-                            if pos < 3 * bs[sfb + 1]:
-                                width = bs[sfb + 1] - bs[sfb]
-                                w_ = (pos - 3 * bs[sfb]) // width
-                                return (
-                                    sfac_s[sfb][w_] * mult2
-                                    + 4 * ssg[w_]
-                                )
-                        raise AssertionError
-                else:
-                    # 21 slen-coded bands in two reads, split by shift
-                    v1, v2 = take(11 * sl1), take(10 * sl2)
-                    m1, m2 = (1 << sl1) - 1, (1 << sl2) - 1
-                    sfac = [
-                        (v1 >> ((10 - i) * sl1)) & m1 for i in range(11)
-                    ]
-                    sfac += [
-                        (v2 >> ((9 - i) * sl2)) & m2 for i in range(10)
-                    ]
-
-                    def sf_index(pos: int) -> int:
-                        # scalefactor band of a line; the zone above
-                        # b8[21] carries no scalefactor (factor 1);
-                        # preflag adds Table B.6's pretab
-                        for sfb in range(21):
-                            if pos < b8[sfb + 1]:
-                                return (
-                                    sfac[sfb]
-                                    + (MP3_PRETAB[sfb] if pre else 0)
-                                ) * mult2
-                        return 0
-
+            sl1, sl2 = MP3_SLEN[sbits(4)]
+            if sbits(1):  # window_switching_flag
+                bt = sbits(2)
                 if bt == 0:
-                    if rc + 1 >= len(b8) or rc + rc2 + 2 >= len(b8):
-                        raise ValueError(
-                            f"doc {doc_id}: region counts overrun B.8"
-                        )
-                    r0 = min(bv, b8[rc + 1] // 2)
-                    r1 = min(bv, b8[rc + rc2 + 2] // 2)
-                else:
-                    # window-switching: the implied split at sample 36
-                    r0 = min(bv, 18)
-                    r1 = bv
-                pos = 0
-                levels: list[tuple[int, int]] = []
-                for count, tsel in (
-                    (r0, tsels[0]), (r1 - r0, tsels[1]),
-                    (bv - r1, tsels[2]),
-                ):
-                    if count <= 0:
-                        continue
-                    if tsel == 0:
-                        pos += 2 * count
-                        continue
-                    lut, kk, linbits = _mp3_bv_lut_sel(tsel, doc_id)
-                    for _ in range(count):
-                        e = lut[_mp3_peek(raw, dpos, kk)]
-                        if dpos + (e >> 8) > nbits:
-                            raise IndexError("index out of range")
-                        dpos += e >> 8
-                        x = (e >> 4) & 15
-                        y = e & 15
-                        # linbits + sign fields for both values in ONE
-                        # read (2.4.2.7 order preserved; same
-                        # IndexError site on truncation)
-                        lx = linbits if x == 15 else 0
-                        ly = linbits if y == 15 else 0
-                        ex = lx + (1 if x else 0) + ly + (1 if y else 0)
-                        if ex:
-                            bits = take(ex)
-                            rem = ex
-                            if x:
-                                if lx:
-                                    rem -= lx
-                                    x += (bits >> rem) & ((1 << lx) - 1)
-                                rem -= 1
-                                levels.append(
-                                    (pos, -x if (bits >> rem) & 1 else x)
-                                )
-                            pos += 1
-                            if y:
-                                if ly:
-                                    rem -= ly
-                                    y += (bits >> rem) & ((1 << ly) - 1)
-                                rem -= 1
-                                levels.append(
-                                    (pos, -y if (bits >> rem) & 1 else y)
-                                )
-                            pos += 1
-                        else:
-                            pos += 2
-                while dpos - start < p23:
-                    if pos + 4 > 576:
-                        raise ValueError(
-                            f"doc {doc_id}: count1 overruns spectrum"
-                        )
-                    if c1a:
-                        e = lutA[_mp3_peek(raw, dpos, 6)]
-                        if dpos + (e >> 4) > nbits:
-                            raise IndexError("index out of range")
-                        dpos += e >> 4
-                        quad = e & 15
-                    else:
-                        quad = take(4) ^ 0xF
-                    nz = quad.bit_count()
-                    if nz:
-                        # the quad's sign bits in one read, split in
-                        # v,w,x,y order (MSB-first)
-                        bits = take(nz)
-                        rem = nz
-                        for idx, shift in enumerate((3, 2, 1, 0)):
-                            if (quad >> shift) & 1:
-                                rem -= 1
-                                levels.append(
-                                    (
-                                        pos + idx,
-                                        -1 if (bits >> rem) & 1 else 1,
-                                    )
-                                )
-                    if dpos - start > p23:
-                        raise ValueError(
-                            f"doc {doc_id}: count1 overran "
-                            "part2_3_length"
-                        )
-                    pos += 4
-                if dpos - start != p23:
                     raise ValueError(
-                        f"doc {doc_id}: part2_3_length not exactly "
-                        "consumed"
+                        f"doc {doc_id}: window switching with "
+                        "block_type 0 is forbidden"
                     )
-                for pos, v in levels:
-                    mag = abs(v)
-                    if mag >= len(p43):
-                        raise ValueError(
-                            f"doc {doc_id}: magnitude {mag} past the "
-                            "13-linbits ceiling 8206"
-                        )
-                    k = sf_index(pos)
-                    if k >= len(sfhalf):
+                if sbits(1):
+                    raise NotImplementedError(
+                        "mixed-block requantization (split "
+                        "long/short band layouts) not implemented"
+                    )
+                tsels = tuple(sbits(5) for _ in range(2)) + (0,)
+                ssg = tuple(sbits(3) for _ in range(3))
+                rc = rc2 = 0
+            else:
+                bt = 0
+                tsels = tuple(sbits(5) for _ in range(3))
+                ssg = (0, 0, 0)
+                rc = sbits(4)
+                rc2 = sbits(3)
+            pre = sbits(1)
+            if pre and bt == 2:
+                # ISO 11172-3 2.4.3.4: "preflag is never used if
+                # block_type is 2" — a short-block granule with
+                # preflag set is a spec violation, not a missing
+                # feature (start/stop blocks, types 1/3, use the
+                # LONG scalefactor layout and requantize with
+                # pretab through the normal path below)
+                raise ValueError(
+                    f"doc {doc_id}: preflag set on a short-block "
+                    "granule (illegal per 2.4.3.4)"
+                )
+            sfs = sbits(1)
+            c1a = sbits(1) == 0
+            gfields.append(
+                (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
+                 bt, ssg, pre)
+            )
+
+        dpos = 21 * 8
+        nbits = len(raw) << 3
+        lutA = _mp3_c1a_lut()
+
+        def take(n):
+            # byte-level read (same values; same IndexError when a
+            # consumed bit lies past the final byte)
+            nonlocal dpos
+            if n == 1:
+                out = (raw[dpos >> 3] >> (7 - (dpos & 7))) & 1
+                dpos += 1
+                return out
+            if not n:
+                return 0
+            end = dpos + n
+            if (end - 1) >> 3 >= len(raw):
+                raise IndexError("index out of range")
+            out = (
+                int.from_bytes(
+                    raw[dpos >> 3 : (end + 7) >> 3], "big"
+                )
+                >> ((-end) & 7)
+            ) & ((1 << n) - 1)
+            dpos = end
+            return out
+
+        s_signed = s_abs = nnz = pos_signed = 0
+        for (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
+             bt, ssg, pre) in gfields:
+            start = dpos
+            mult2 = 2 if sfs else 1  # exponent in HALF steps
+            if bt == 2:
+                # short layout: per-window scalefactors, bands
+                # 0-5 under slen1 then 6-11 under slen2
+                sfac_s = [
+                    [take(sl1) for _w in range(3)]
+                    for _b in range(6)
+                ] + [
+                    [take(sl2) for _w in range(3)]
+                    for _b in range(6)
+                ]
+
+                def sf_index(pos: int) -> int:
+                    if pos >= 3 * bs[12]:
                         raise NotImplementedError(
-                            f"half-step scalefactor index {k} past "
-                            "the derived Q14 table"
+                            "the unscaled short zone's window "
+                            "interleave not implemented"
                         )
-                    rq = p43[mag] * gain_tab[gg] * sfhalf[k]
-                    rq = -rq if v < 0 else rq
-                    s_signed += rq
-                    s_abs += abs(rq)
-                    nnz += 1
-                    pos_signed += pos if v > 0 else -pos
-            return 2, s_signed, s_abs, nnz, pos_signed
+                    for sfb in range(12):
+                        if pos < 3 * bs[sfb + 1]:
+                            width = bs[sfb + 1] - bs[sfb]
+                            w_ = (pos - 3 * bs[sfb]) // width
+                            return (
+                                sfac_s[sfb][w_] * mult2
+                                + 4 * ssg[w_]
+                            )
+                    raise AssertionError
+            else:
+                # 21 slen-coded bands in two reads, split by shift
+                v1, v2 = take(11 * sl1), take(10 * sl2)
+                m1, m2 = (1 << sl1) - 1, (1 << sl2) - 1
+                sfac = [
+                    (v1 >> ((10 - i) * sl1)) & m1 for i in range(11)
+                ]
+                sfac += [
+                    (v2 >> ((9 - i) * sl2)) & m2 for i in range(10)
+                ]
 
-        cols = (
-            "doc_id", "n_granules", "sum_rq_signed", "sum_rq_abs",
-            "n_nonzero", "sum_pos_signed",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
+                def sf_index(pos: int) -> int:
+                    # scalefactor band of a line; the zone above
+                    # b8[21] carries no scalefactor (factor 1);
+                    # preflag adds Table B.6's pretab
+                    for sfb in range(21):
+                        if pos < b8[sfb + 1]:
+                            return (
+                                sfac[sfb]
+                                + (MP3_PRETAB[sfb] if pre else 0)
+                            ) * mult2
+                    return 0
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, n_granules long, sum_rq_signed long, "
-        "sum_rq_abs long, n_nonzero long, sum_pos_signed long",
-    )
+            if bt == 0:
+                if rc + 1 >= len(b8) or rc + rc2 + 2 >= len(b8):
+                    raise ValueError(
+                        f"doc {doc_id}: region counts overrun B.8"
+                    )
+                r0 = min(bv, b8[rc + 1] // 2)
+                r1 = min(bv, b8[rc + rc2 + 2] // 2)
+            else:
+                # window-switching: the implied split at sample 36
+                r0 = min(bv, 18)
+                r1 = bv
+            pos = 0
+            levels: list[tuple[int, int]] = []
+            for count, tsel in (
+                (r0, tsels[0]), (r1 - r0, tsels[1]),
+                (bv - r1, tsels[2]),
+            ):
+                if count <= 0:
+                    continue
+                if tsel == 0:
+                    pos += 2 * count
+                    continue
+                lut, kk, linbits = _mp3_bv_lut_sel(tsel, doc_id)
+                for _ in range(count):
+                    e = lut[_mp3_peek(raw, dpos, kk)]
+                    if dpos + (e >> 8) > nbits:
+                        raise IndexError("index out of range")
+                    dpos += e >> 8
+                    x = (e >> 4) & 15
+                    y = e & 15
+                    # linbits + sign fields for both values in ONE
+                    # read (2.4.2.7 order preserved; same
+                    # IndexError site on truncation)
+                    lx = linbits if x == 15 else 0
+                    ly = linbits if y == 15 else 0
+                    ex = lx + (1 if x else 0) + ly + (1 if y else 0)
+                    if ex:
+                        bits = take(ex)
+                        rem = ex
+                        if x:
+                            if lx:
+                                rem -= lx
+                                x += (bits >> rem) & ((1 << lx) - 1)
+                            rem -= 1
+                            levels.append(
+                                (pos, -x if (bits >> rem) & 1 else x)
+                            )
+                        pos += 1
+                        if y:
+                            if ly:
+                                rem -= ly
+                                y += (bits >> rem) & ((1 << ly) - 1)
+                            rem -= 1
+                            levels.append(
+                                (pos, -y if (bits >> rem) & 1 else y)
+                            )
+                        pos += 1
+                    else:
+                        pos += 2
+            while dpos - start < p23:
+                if pos + 4 > 576:
+                    raise ValueError(
+                        f"doc {doc_id}: count1 overruns spectrum"
+                    )
+                if c1a:
+                    e = lutA[_mp3_peek(raw, dpos, 6)]
+                    if dpos + (e >> 4) > nbits:
+                        raise IndexError("index out of range")
+                    dpos += e >> 4
+                    quad = e & 15
+                else:
+                    quad = take(4) ^ 0xF
+                nz = quad.bit_count()
+                if nz:
+                    # the quad's sign bits in one read, split in
+                    # v,w,x,y order (MSB-first)
+                    bits = take(nz)
+                    rem = nz
+                    for idx, shift in enumerate((3, 2, 1, 0)):
+                        if (quad >> shift) & 1:
+                            rem -= 1
+                            levels.append(
+                                (
+                                    pos + idx,
+                                    -1 if (bits >> rem) & 1 else 1,
+                                )
+                            )
+                if dpos - start > p23:
+                    raise ValueError(
+                        f"doc {doc_id}: count1 overran "
+                        "part2_3_length"
+                    )
+                pos += 4
+            if dpos - start != p23:
+                raise ValueError(
+                    f"doc {doc_id}: part2_3_length not exactly "
+                    "consumed"
+                )
+            for pos, v in levels:
+                mag = abs(v)
+                if mag >= len(p43):
+                    raise ValueError(
+                        f"doc {doc_id}: magnitude {mag} past the "
+                        "13-linbits ceiling 8206"
+                    )
+                k = sf_index(pos)
+                if k >= len(sfhalf):
+                    raise NotImplementedError(
+                        f"half-step scalefactor index {k} past "
+                        "the derived Q14 table"
+                    )
+                rq = p43[mag] * gain_tab[gg] * sfhalf[k]
+                rq = -rq if v < 0 else rq
+                s_signed += rq
+                s_abs += abs(rq)
+                nnz += 1
+                pos_signed += pos if v > 0 else -pos
+        return 2, s_signed, s_abs, nnz, pos_signed
+
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 def _mp3_granule_long(
@@ -2332,7 +2212,12 @@ def _mp3_granule_long(
     return sfac, fp, dpos
 
 
-def decode_mp3_requant_ms(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, n_granules long, sum_left_signed long, "
+    "sum_left_abs long, sum_right_signed long, "
+    "sum_right_abs long, n_nonzero_lines long"
+)
+def decode_mp3_requant_ms():
     """MS JOINT-STEREO requantization (ISO 11172-3 2.4.3.4.9.2): a
     stereo frame's 32-byte side info (granule-major, channel-minor),
     per-channel long-block requantization exactly as the mono query
@@ -2346,135 +2231,120 @@ def decode_mp3_requant_ms(media_df: DataFrame) -> DataFrame:
     stereo frames, window-switching granules, and preflag raise this
     walker's declared boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
+    import math
 
-        import pandas as pd
+    p43, gain_tab, _sfhalf14 = _mp3_rq_tables()
+    # Q8 scalefactor curve keeps the stereo product inside int64
+    sf8 = [
+        int(math.floor(256 * 2 ** (-k / 2) + 0.5)) for k in range(31)
+    ]
+    rs = int(math.floor(16384 / math.sqrt(2) + 0.5))  # 11585
+    b8 = MP3_SFB_LONG[44100]
 
-        p43, gain_tab, _sfhalf14 = _mp3_rq_tables()
-        # Q8 scalefactor curve keeps the stereo product inside int64
-        sf8 = [
-            int(math.floor(256 * 2 ** (-k / 2) + 0.5)) for k in range(31)
-        ]
-        rs = int(math.floor(16384 / math.sqrt(2) + 0.5))  # 11585
-        b8 = MP3_SFB_LONG[44100]
+    def walk(doc_id: int, raw: bytes):
+        from .synth import MP3_SLEN
 
-        def walk(doc_id: int, raw: bytes):
-            from .synth import MP3_SLEN
+        if len(raw) < 36 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
+            raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
+        if (raw[2] >> 2) & 0x3 != 0:
+            raise NotImplementedError(
+                "exact stereo requantization at non-44.1 kHz "
+                "rates not implemented (Table B.8 row dispatch)"
+            )
+        mode = (raw[3] >> 6) & 3
+        mode_ext = (raw[3] >> 4) & 3
+        if mode != 1:
+            raise NotImplementedError(
+                "MS requantization needs a joint-stereo frame "
+                f"(mode {mode})"
+            )
+        if mode_ext != 2:
+            raise NotImplementedError(
+                "intensity stereo / non-MS joint modes not "
+                "implemented (mode_extension 10 only)"
+            )
+        side = raw[4:36]
+        bitpos = 0
 
-            if len(raw) < 36 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
-                raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
-            if (raw[2] >> 2) & 0x3 != 0:
+        def sbits(n):
+            nonlocal bitpos
+            out = 0
+            for _ in range(n):
+                out = (out << 1) | (
+                    (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
+                )
+                bitpos += 1
+            return out
+
+        if sbits(9):
+            raise ValueError(
+                f"doc {doc_id}: MS fixture uses no reservoir"
+            )
+        sbits(3)
+        if sbits(8):
+            raise ValueError(f"doc {doc_id}: scfsi must be 0")
+        gfields = []
+        for _gch in range(4):
+            p23 = sbits(12)
+            bv = sbits(9)
+            gg = sbits(8)
+            if not 198 <= gg <= 222:
                 raise NotImplementedError(
-                    "exact stereo requantization at non-44.1 kHz "
-                    "rates not implemented (Table B.8 row dispatch)"
+                    f"global_gain {gg} outside the 198..222 "
+                    "exact-Q12 band"
                 )
-            mode = (raw[3] >> 6) & 3
-            mode_ext = (raw[3] >> 4) & 3
-            if mode != 1:
+            sl1, sl2 = MP3_SLEN[sbits(4)]
+            if sbits(1):
                 raise NotImplementedError(
-                    "MS requantization needs a joint-stereo frame "
-                    f"(mode {mode})"
+                    "MS requantization for window-switching "
+                    "granules not implemented"
                 )
-            if mode_ext != 2:
+            tsels = tuple(sbits(5) for _ in range(3))
+            rc = sbits(4)
+            rc2 = sbits(3)
+            if sbits(1):
                 raise NotImplementedError(
-                    "intensity stereo / non-MS joint modes not "
-                    "implemented (mode_extension 10 only)"
+                    "preflag requantization not implemented"
                 )
-            side = raw[4:36]
-            bitpos = 0
+            sfs = sbits(1)
+            c1a = sbits(1) == 0
+            gfields.append(
+                (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a)
+            )
 
-            def sbits(n):
-                nonlocal bitpos
-                out = 0
-                for _ in range(n):
-                    out = (out << 1) | (
-                        (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-                    )
-                    bitpos += 1
-                return out
-
-            if sbits(9):
-                raise ValueError(
-                    f"doc {doc_id}: MS fixture uses no reservoir"
+        dpos = 36 * 8
+        sum_l = abs_l = sum_r = abs_r = nnz = 0
+        for g in (0, 1):
+            spectra = []
+            for ch in (0, 1):
+                fields = gfields[2 * g + ch] + (0,)  # preflag 0
+                _sfac, fp, dpos = _mp3_granule_long(
+                    doc_id, raw, dpos, fields, p43, gain_tab,
+                    sf8, b8,
                 )
-            sbits(3)
-            if sbits(8):
-                raise ValueError(f"doc {doc_id}: scfsi must be 0")
-            gfields = []
-            for _gch in range(4):
-                p23 = sbits(12)
-                bv = sbits(9)
-                gg = sbits(8)
-                if not 198 <= gg <= 222:
-                    raise NotImplementedError(
-                        f"global_gain {gg} outside the 198..222 "
-                        "exact-Q12 band"
-                    )
-                sl1, sl2 = MP3_SLEN[sbits(4)]
-                if sbits(1):
-                    raise NotImplementedError(
-                        "MS requantization for window-switching "
-                        "granules not implemented"
-                    )
-                tsels = tuple(sbits(5) for _ in range(3))
-                rc = sbits(4)
-                rc2 = sbits(3)
-                if sbits(1):
-                    raise NotImplementedError(
-                        "preflag requantization not implemented"
-                    )
-                sfs = sbits(1)
-                c1a = sbits(1) == 0
-                gfields.append(
-                    (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a)
-                )
+                spectra.append(fp)
+            mid, sid = spectra
+            for pos_ in set(mid) | set(sid):
+                m = mid.get(pos_, 0)
+                s_ = sid.get(pos_, 0)
+                left = (m + s_) * rs
+                right = (m - s_) * rs
+                sum_l += left
+                abs_l += abs(left)
+                sum_r += right
+                abs_r += abs(right)
+                nnz += 1
+        return 2, sum_l, abs_l, sum_r, abs_r, nnz
 
-            dpos = 36 * 8
-            sum_l = abs_l = sum_r = abs_r = nnz = 0
-            for g in (0, 1):
-                spectra = []
-                for ch in (0, 1):
-                    fields = gfields[2 * g + ch] + (0,)  # preflag 0
-                    _sfac, fp, dpos = _mp3_granule_long(
-                        doc_id, raw, dpos, fields, p43, gain_tab,
-                        sf8, b8,
-                    )
-                    spectra.append(fp)
-                mid, sid = spectra
-                for pos_ in set(mid) | set(sid):
-                    m = mid.get(pos_, 0)
-                    s_ = sid.get(pos_, 0)
-                    left = (m + s_) * rs
-                    right = (m - s_) * rs
-                    sum_l += left
-                    abs_l += abs(left)
-                    sum_r += right
-                    abs_r += abs(right)
-                    nnz += 1
-            return 2, sum_l, abs_l, sum_r, abs_r, nnz
-
-        cols = (
-            "doc_id", "n_granules", "sum_left_signed", "sum_left_abs",
-            "sum_right_signed", "sum_right_abs", "n_nonzero_lines",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, n_granules long, sum_left_signed long, "
-        "sum_left_abs long, sum_right_signed long, "
-        "sum_right_abs long, n_nonzero_lines long",
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
-def decode_mp3_requant_is(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, n_granules long, sum_left_signed long, "
+    "sum_left_abs long, sum_right_signed long, "
+    "sum_right_abs long, n_is_lines long, n_off_lines long"
+)
+def decode_mp3_requant_is():
     """INTENSITY-STEREO requantization (ISO 11172-3 2.4.3.4.9.3) —
     the last stereo mode (header mode 01, mode_extension 01): the
     left channel requantizes normally (INCLUDING preflag — Table
@@ -2493,369 +2363,146 @@ def decode_mp3_requant_is(media_df: DataFrame) -> DataFrame:
     granules, MS+intensity combined (mode_extension 11), gains
     outside the exact-Q12 band."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
+    import math
 
-        import pandas as pd
+    p43, gain_tab, _sfhalf14 = _mp3_rq_tables()
+    sf8 = [
+        int(math.floor(256 * 2 ** (-k / 2) + 0.5)) for k in range(41)
+    ]
+    kl_tab, kr_tab = _mp3_is_tables()
+    b8 = MP3_SFB_LONG[44100]
 
-        p43, gain_tab, _sfhalf14 = _mp3_rq_tables()
-        sf8 = [
-            int(math.floor(256 * 2 ** (-k / 2) + 0.5)) for k in range(41)
-        ]
-        kl_tab, kr_tab = _mp3_is_tables()
-        b8 = MP3_SFB_LONG[44100]
+    def walk(doc_id: int, raw: bytes):
+        from .synth import MP3_SLEN
 
-        def walk(doc_id: int, raw: bytes):
-            from .synth import MP3_SLEN
+        if len(raw) < 36 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
+            raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
+        if (raw[2] >> 2) & 0x3 != 0:
+            raise NotImplementedError(
+                "exact stereo requantization at non-44.1 kHz "
+                "rates not implemented (Table B.8 row dispatch)"
+            )
+        mode = (raw[3] >> 6) & 3
+        mode_ext = (raw[3] >> 4) & 3
+        if mode != 1:
+            raise NotImplementedError(
+                "intensity requantization needs a joint-stereo "
+                f"frame (mode {mode})"
+            )
+        if mode_ext != 1:
+            raise NotImplementedError(
+                "MS / combined joint modes belong to the MS "
+                "walker (mode_extension 01 only here)"
+            )
+        side = raw[4:36]
+        bitpos = 0
 
-            if len(raw) < 36 or raw[0] != 0xFF or (raw[1] & 0xFE) != 0xFA:
-                raise ValueError(f"doc {doc_id}: not an MPEG-1 L3 frame")
-            if (raw[2] >> 2) & 0x3 != 0:
+        def sbits(n):
+            nonlocal bitpos
+            out = 0
+            for _ in range(n):
+                out = (out << 1) | (
+                    (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
+                )
+                bitpos += 1
+            return out
+
+        if sbits(9):
+            raise ValueError(
+                f"doc {doc_id}: intensity fixture uses no reservoir"
+            )
+        sbits(3)
+        if sbits(8):
+            raise ValueError(f"doc {doc_id}: scfsi must be 0")
+        gfields = []
+        for _gch in range(4):
+            p23 = sbits(12)
+            bv = sbits(9)
+            gg = sbits(8)
+            if not 198 <= gg <= 222:
                 raise NotImplementedError(
-                    "exact stereo requantization at non-44.1 kHz "
-                    "rates not implemented (Table B.8 row dispatch)"
+                    f"global_gain {gg} outside the 198..222 "
+                    "exact-Q12 band"
                 )
-            mode = (raw[3] >> 6) & 3
-            mode_ext = (raw[3] >> 4) & 3
-            if mode != 1:
+            sl1, sl2 = MP3_SLEN[sbits(4)]
+            if sbits(1):
                 raise NotImplementedError(
-                    "intensity requantization needs a joint-stereo "
-                    f"frame (mode {mode})"
+                    "intensity requantization for window-"
+                    "switching granules not implemented"
                 )
-            if mode_ext != 1:
-                raise NotImplementedError(
-                    "MS / combined joint modes belong to the MS "
-                    "walker (mode_extension 01 only here)"
-                )
-            side = raw[4:36]
-            bitpos = 0
+            tsels = tuple(sbits(5) for _ in range(3))
+            rc = sbits(4)
+            rc2 = sbits(3)
+            pre = sbits(1)
+            sfs = sbits(1)
+            c1a = sbits(1) == 0
+            gfields.append(
+                (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
+                 pre)
+            )
 
-            def sbits(n):
-                nonlocal bitpos
-                out = 0
-                for _ in range(n):
-                    out = (out << 1) | (
-                        (side[bitpos >> 3] >> (7 - (bitpos & 7))) & 1
-                    )
-                    bitpos += 1
-                return out
-
-            if sbits(9):
-                raise ValueError(
-                    f"doc {doc_id}: intensity fixture uses no reservoir"
-                )
-            sbits(3)
-            if sbits(8):
-                raise ValueError(f"doc {doc_id}: scfsi must be 0")
-            gfields = []
-            for _gch in range(4):
-                p23 = sbits(12)
-                bv = sbits(9)
-                gg = sbits(8)
-                if not 198 <= gg <= 222:
-                    raise NotImplementedError(
-                        f"global_gain {gg} outside the 198..222 "
-                        "exact-Q12 band"
-                    )
-                sl1, sl2 = MP3_SLEN[sbits(4)]
-                if sbits(1):
-                    raise NotImplementedError(
-                        "intensity requantization for window-"
-                        "switching granules not implemented"
-                    )
-                tsels = tuple(sbits(5) for _ in range(3))
-                rc = sbits(4)
-                rc2 = sbits(3)
-                pre = sbits(1)
-                sfs = sbits(1)
-                c1a = sbits(1) == 0
-                gfields.append(
-                    (p23, bv, gg, sl1, sl2, tsels, rc, rc2, sfs, c1a,
-                     pre)
-                )
-
-            dpos = 36 * 8
-            sum_l = abs_l = sum_r = abs_r = 0
-            n_is = n_off = 0
-            for g in (0, 1):
-                _sfl, fp_l, dpos = _mp3_granule_long(
-                    doc_id, raw, dpos, gfields[2 * g], p43, gain_tab,
-                    sf8, b8,
-                )
-                sfr, fp_r, dpos = _mp3_granule_long(
-                    doc_id, raw, dpos, gfields[2 * g + 1], p43,
-                    gain_tab, sf8, b8,
-                )
-                # intensity bound: the first scalefactor band past
-                # the right channel's last nonzero line
-                last = max(fp_r) + 1 if fp_r else 0
-                bound = 0
-                while bound < 22 and b8[bound] < last:
-                    bound += 1
-                for pos_, v in fp_l.items():
-                    sfb = 21
-                    for i_ in range(21):
-                        if pos_ < b8[i_ + 1]:
-                            sfb = i_
-                            break
-                    if sfb < bound:  # both channels coded normally
+        dpos = 36 * 8
+        sum_l = abs_l = sum_r = abs_r = 0
+        n_is = n_off = 0
+        for g in (0, 1):
+            _sfl, fp_l, dpos = _mp3_granule_long(
+                doc_id, raw, dpos, gfields[2 * g], p43, gain_tab,
+                sf8, b8,
+            )
+            sfr, fp_r, dpos = _mp3_granule_long(
+                doc_id, raw, dpos, gfields[2 * g + 1], p43,
+                gain_tab, sf8, b8,
+            )
+            # intensity bound: the first scalefactor band past
+            # the right channel's last nonzero line
+            last = max(fp_r) + 1 if fp_r else 0
+            bound = 0
+            while bound < 22 and b8[bound] < last:
+                bound += 1
+            for pos_, v in fp_l.items():
+                sfb = 21
+                for i_ in range(21):
+                    if pos_ < b8[i_ + 1]:
+                        sfb = i_
+                        break
+                if sfb < bound:  # both channels coded normally
+                    left = v << 15
+                    right = fp_r.get(pos_, 0) << 15
+                else:
+                    if sfb >= 21:
+                        raise NotImplementedError(
+                            "intensity into scalefactor band 21 "
+                            "(no is_pos field) not implemented"
+                        )
+                    is_pos = sfr[sfb]
+                    if is_pos > 7:
+                        raise ValueError(
+                            f"doc {doc_id}: is_pos {is_pos} past "
+                            "the MPEG-1 maximum 7"
+                        )
+                    if is_pos == 7:  # intensity off: left only
                         left = v << 15
-                        right = fp_r.get(pos_, 0) << 15
+                        right = 0
+                        n_off += 1
                     else:
-                        if sfb >= 21:
-                            raise NotImplementedError(
-                                "intensity into scalefactor band 21 "
-                                "(no is_pos field) not implemented"
-                            )
-                        is_pos = sfr[sfb]
-                        if is_pos > 7:
-                            raise ValueError(
-                                f"doc {doc_id}: is_pos {is_pos} past "
-                                "the MPEG-1 maximum 7"
-                            )
-                        if is_pos == 7:  # intensity off: left only
-                            left = v << 15
-                            right = 0
-                            n_off += 1
-                        else:
-                            left = v * kl_tab[is_pos]
-                            right = v * kr_tab[is_pos]
-                            n_is += 1
-                    sum_l += left
-                    abs_l += abs(left)
-                    sum_r += right
-                    abs_r += abs(right)
-                for pos_, v in fp_r.items():
-                    if pos_ in fp_l:
-                        continue  # handled above
-                    # right-only lines sit below the intensity bound
-                    # by construction of the bound
-                    right = v << 15
-                    sum_r += right
-                    abs_r += abs(right)
-            return 2, sum_l, abs_l, sum_r, abs_r, n_is, n_off
+                        left = v * kl_tab[is_pos]
+                        right = v * kr_tab[is_pos]
+                        n_is += 1
+                sum_l += left
+                abs_l += abs(left)
+                sum_r += right
+                abs_r += abs(right)
+            for pos_, v in fp_r.items():
+                if pos_ in fp_l:
+                    continue  # handled above
+                # right-only lines sit below the intensity bound
+                # by construction of the bound
+                right = v << 15
+                sum_r += right
+                abs_r += abs(right)
+        return 2, sum_l, abs_l, sum_r, abs_r, n_is, n_off
 
-        cols = (
-            "doc_id", "n_granules", "sum_left_signed", "sum_left_abs",
-            "sum_right_signed", "sum_right_abs", "n_is_lines",
-            "n_off_lines",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, n_granules long, sum_left_signed long, "
-        "sum_left_abs long, sum_right_signed long, "
-        "sum_right_abs long, n_is_lines long, n_off_lines long",
-    )
-
-
-def synthesize_mp3_is(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the intensity-stereo stream
-    (``make_mp3_is_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_is_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_is_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_ms(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the MS joint-stereo stream
-    (``make_mp3_ms_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_ms_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_ms_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_rqs(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the SHORT-block requantization
-    stream (``make_mp3_rqs_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_rqs_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_rqs_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_rqw(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the WIDE requantization fixture
-    (``make_mp3_rqw_bytes``: table 15, magnitudes 0..15)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_rqw_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_rqw_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_rqe(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the ESCAPE requantization fixture
-    (``make_mp3_rqe_bytes``: linbits tables 24/23/22 + table 15,
-    magnitudes sweeping past 15 into linbits territory)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_rqe_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_rqe_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_rq(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the general-requantization stream
-    (``make_mp3_rq_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_rq_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_rq_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_imdct(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the unit-magnitude filterbank
-    stream (``make_mp3_imdct_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_imdct_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_imdct_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_ws(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an MPEG-1 Layer III stream whose
-    short-block granules switch Huffman tables at the IMPLIED
-    window-switching region boundary (``make_mp3_ws_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_ws_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_ws_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 def parse_id3v2(
@@ -3036,7 +2683,8 @@ ID3V1_SCHEMA = (
 )
 
 
-def decode_mp3_id3v1(media_df: DataFrame) -> DataFrame:
+@decoder(ID3V1_SCHEMA)
+def decode_mp3_id3v1():
     """Double-tag reconciliation: parse BOTH the leading ID3v2 tag
     (``parse_id3v2``) and the trailing ID3v1.1 tag (``parse_id3v1``)
     of each file and cross-check the shared fields — the consistency
@@ -3044,245 +2692,29 @@ def decode_mp3_id3v1(media_df: DataFrame) -> DataFrame:
     the two tags routinely disagree (here they must agree, and the
     emitted flag proves both parsers ran)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            (tc, ac, alc, year, track, genre, is_v11) = parse_id3v1(
-                doc_id, raw
-            )
-            # the v2 parser must not see the trailer as audio
-            (_ver, _nt, _ns, v2_tc, v2_ac, v2_alc, v2_track, v2_year,
-             _audio) = parse_id3v2(doc_id, raw[:-128])
-            matches = (
-                tc == v2_tc and ac == v2_ac and alc == v2_alc
-                and track == v2_track and year == v2_year
-            )
-            return (tc, ac, alc, year, track, genre, is_v11, matches)
-
-        cols = (
-            "doc_id", "v1_title_chars", "v1_artist_chars",
-            "v1_album_chars", "v1_year", "v1_track", "genre",
-            "is_v11", "matches_v2",
+    def walk(doc_id: int, raw: bytes):
+        (tc, ac, alc, year, track, genre, is_v11) = parse_id3v1(
+            doc_id, raw
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
+        # the v2 parser must not see the trailer as audio
+        (_ver, _nt, _ns, v2_tc, v2_ac, v2_alc, v2_track, v2_year,
+         _audio) = parse_id3v2(doc_id, raw[:-128])
+        matches = (
+            tc == v2_tc and ac == v2_ac and alc == v2_alc
+            and track == v2_track and year == v2_year
+        )
+        return (tc, ac, alc, year, track, genre, is_v11, matches)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, ID3V1_SCHEMA
-    )
-
-
-def synthesize_mp3_id3v1(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a double-tagged MP3
-    (``make_mp3_id3v1_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_id3v1_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_id3v1_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
-def synthesize_mp3_id3(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an ID3v2-tagged MP3
-    (``make_mp3_id3_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_id3_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_id3_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_mp3_id3(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, version long, n_text_frames long, "
+    "n_skipped_frames long, title_chars long, artist_chars long, "
+    "album_chars long, track long, year long, audio_bytes long"
+)
+def decode_mp3_id3():
     """Distributed ID3v2 tag extraction (``parse_id3v2``) as an
     Arrow kernel over binary rows."""
+    return lambda doc_id, raw: [parse_id3v2(doc_id, raw)]
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "version", "n_text_frames", "n_skipped_frames",
-            "title_chars", "artist_chars", "album_chars", "track",
-            "year", "audio_bytes",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_id3v2(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, version long, n_text_frames long, "
-        "n_skipped_frames long, title_chars long, artist_chars long, "
-        "album_chars long, track long, year long, audio_bytes long",
-    )
-
-
-def synthesize_mp3_b8(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an MPEG-1 Layer III stream whose
-    region boundaries exercise all three B.8 rate rows at their
-    diverging entries (``make_mp3_b8_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_b8_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_b8_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_mx(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an MPEG-1 Layer III stream whose
-    granules carry the MIXED long/short scalefactor partition
-    (``make_mp3_ws_bytes(doc_id, mixed=True)``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_ws_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_ws_bytes(int(d), mixed=True)
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_ht(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an MPEG-1 Layer III stream whose
-    big-values regions cycle EVERY shipped B.7 Huffman table and whose
-    count1 regions alternate Huffman table A with fixed-length table B
-    (``make_mp3_ht_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_ht_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_ht_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_lb(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an MPEG-1 Layer III stream whose
-    big-values regions cycle the complete 18-id 16x16 tier — tables
-    13/15 and both linbits families 16-31 (``make_mp3_lb_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_lb_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_lb_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp3_sb(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a SHORT-BLOCK (windows_switching,
-    block_type 2) Layer III stream (``make_mp3_sb_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp3_sb_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_mp3_sb_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )

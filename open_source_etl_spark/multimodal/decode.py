@@ -1,8 +1,11 @@
 """Decode / feature-extract kernels over binary media columns.
 
-Each kernel is an Arrow-batched ``mapInPandas`` stage: payload bytes
-stream through the Python worker in columnar batches, never through the
-driver.  Two tiers coexist:
+Each codec decoder is an ``@decoder(SCHEMA)`` factory (``host.py``):
+its body is the per-task setup and it returns a row function ``(doc_id,
+raw) -> rows``; the one host loop streams payload bytes through the
+Python worker in Arrow batches, never through the driver.  The six
+``media.payload`` feature kernels at the top keep their own loops.  Two
+tiers coexist:
 
 - REAL pure-stdlib decoders, implemented from the public specs and
   value-checked against closed-form oracles: PNG (zlib/filters), JPEG
@@ -39,6 +42,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .host import Decoder, decoder, host, indexed
 from .schema import IMAGE_META_SCHEMA
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -308,76 +312,13 @@ def perceptual_hash(media_df: DataFrame, codec: str = "fake") -> DataFrame:
 # while MP3/H.264 stay behind the NotImplementedError sites above.
 # ---------------------------------------------------------------------------
 
-class _KernelCapture:
-    """Duck-typed DataFrame stand-in that records a builder's single
-    ``select(...).mapInPandas(kernel, schema)`` call so the kernel can
-    be re-hosted (``fuse_synth_decode``).  Any other DataFrame method
-    raises AttributeError, which the fuser reports as a TypeError
-    naming the builder.  The selected columns are recorded too: the
-    fused stage feeds the synth kernel batches carrying ONLY doc_id."""
-
-    __slots__ = ("kernel", "schema", "select_cols")
-
-    def __init__(self) -> None:
-        self.kernel = None
-        self.schema = None
-        self.select_cols = None
-
-    def select(self, *cols):
-        self.select_cols = cols
-        return self
-
-    def mapInPandas(self, kernel, schema):
-        self.kernel = kernel
-        self.schema = schema
-        return self
-
-
-def _name(builder) -> str:
-    return getattr(builder, "__qualname__", repr(builder))
-
-
-def _capture(builder) -> _KernelCapture:
-    cap = _KernelCapture()
-    name = _name(builder)
-    try:
-        shaped = builder(cap) is cap and cap.kernel is not None
-    except AttributeError as exc:
-        raise TypeError(
-            f"fuse_synth_decode: {name} is not a select().mapInPandas() builder"
-        ) from exc
-    if not shaped:
-        raise TypeError(f"fuse_synth_decode: {name} did not call mapInPandas")
-    return cap
-
-
-def fuse_synth_decode(docs_df: DataFrame, synthesize_fn, decode_fn) -> DataFrame:
-    """Compose a ``synthesize_X`` / ``decode_X`` pair into ONE Python
-    stage: the synthesized payload bytes stay inside the Python worker
-    and feed the decode kernel directly, instead of crossing the
-    JVM↔Python Arrow boundary twice between two chained mapInPandas
-    runners (guide §4.1 — control how many columns/bytes cross).
-    Results are identical by construction: the decode kernel consumes
-    the exact frames the synth kernel yields.
-
-    Both builders keep their public DataFrame-in/DataFrame-out
-    contract for tests and composition elsewhere; this helper only
-    captures their kernels (``_KernelCapture``).  A builder that does
-    more than ``select().mapInPandas()``, or a synth builder that
-    selects anything but ``doc_id``, raises TypeError naming it: there
-    is no silent two-stage fallback."""
-    cs, cd = _capture(synthesize_fn), _capture(decode_fn)
-    if cs.select_cols != ("doc_id",):
-        raise TypeError(
-            f"fuse_synth_decode: {_name(synthesize_fn)} selects "
-            f"{cs.select_cols}, but the fused stage carries only doc_id"
-        )
-    synth_kernel, decode_kernel = cs.kernel, cd.kernel
-
-    def fused(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        return decode_kernel(synth_kernel(batches))
-
-    return docs_df.select("doc_id").mapInPandas(fused, cd.schema)
+def media_frame(docs_df: DataFrame, make, dec: Decoder) -> DataFrame:
+    """``dec`` over payloads ``make(doc_id)`` builds for each of
+    ``docs_df``'s rows, in ONE Python stage: the payload bytes stay
+    inside the worker instead of crossing the JVM↔Python Arrow boundary
+    twice between two chained mapInPandas runners (guide §4.1 — control
+    how many columns/bytes cross)."""
+    return docs_df.select("doc_id").mapInPandas(host(dec, make), dec.schema)
 
 
 def doc_range_query(
@@ -416,14 +357,12 @@ def doc_range_query(
 
 
 def media_query(
-    spark: SparkSession, sf_dir: str, synthesize_fn, decode_fn, *order: str
+    spark: SparkSession, sf_dir: str, make, dec: Decoder, *order: str
 ) -> DataFrame:
     """A fused synth→decode media query over ``documents``, ordered by
-    ``order`` (which starts with ``doc_id``): ``fuse_synth_decode``
-    under ``doc_range_query``, so each kernel runs once per doc."""
-    return doc_range_query(
-        spark, sf_dir, lambda ids: fuse_synth_decode(ids, synthesize_fn, decode_fn), *order
-    )
+    ``order`` (which starts with ``doc_id``): ``media_frame`` under
+    ``doc_range_query``, so each kernel runs once per doc."""
+    return doc_range_query(spark, sf_dir, lambda ids: media_frame(ids, make, dec), *order)
 
 
 WAV_META_SCHEMA = (
@@ -436,189 +375,102 @@ BMP_META_SCHEMA = (
 )
 
 
-def synthesize_wav(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL RIFF/WAVE payload (mapInPandas:
-    synthesis is the ingest stand-in; a deployment reads with
-    ``spark.read.format("binaryFile")``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_wav_bytes
-
-        for pdf in batches:
-            payloads = [make_wav_bytes(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": payloads,
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_wav_real(media_df: DataFrame) -> DataFrame:
+@decoder(WAV_META_SCHEMA)
+def decode_wav_real():
     """REAL WAV decode: the stdlib ``wave`` module walks the RIFF chunks
     for format metadata, then the PCM frames are unpacked for exact
     integer peak/RMS (the fixture is a ±A square wave, so RMS == A with
     no float in the ground truth)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import math
-        import wave
+    import io
+    import math
+    import wave
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_bytes", "framerate", "n_channels",
-                "sampwidth", "n_frames", "peak_amplitude", "rms_amplitude",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                with wave.open(io.BytesIO(raw)) as w:
-                    nch, sw, fr, nf = (
-                        w.getnchannels(), w.getsampwidth(),
-                        w.getframerate(), w.getnframes(),
-                    )
-                    frames = w.readframes(nf)
-                samples = np.frombuffer(frames, dtype="<i2").astype(np.int64)
-                peak = int(np.abs(samples).max()) if len(samples) else 0
-                rms = (
-                    math.isqrt(int((samples * samples).sum()) // len(samples))
-                    if len(samples) else 0
-                )
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(raw))
-                out["framerate"].append(fr)
-                out["n_channels"].append(nch)
-                out["sampwidth"].append(sw)
-                out["n_frames"].append(nf)
-                out["peak_amplitude"].append(peak)
-                out["rms_amplitude"].append(rms)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, WAV_META_SCHEMA)
-
-
-def synthesize_bmp(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL uncompressed 24-bit BMP payload."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_bmp_bytes
-
-        for pdf in batches:
-            payloads = [make_bmp_bytes(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": payloads,
-                }
+    def row(doc_id: int, raw: bytes):
+        with wave.open(io.BytesIO(raw)) as w:
+            nch, sw, fr, nf = (
+                w.getnchannels(), w.getsampwidth(),
+                w.getframerate(), w.getnframes(),
             )
+            frames = w.readframes(nf)
+        samples = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+        peak = int(np.abs(samples).max()) if len(samples) else 0
+        rms = (
+            math.isqrt(int((samples * samples).sum()) // len(samples))
+            if len(samples) else 0
+        )
+        return len(raw), fr, nch, sw, nf, peak, rms
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [row(doc_id, raw)]
 
 
-def decode_bmp_real(media_df: DataFrame) -> DataFrame:
+@decoder(BMP_META_SCHEMA)
+def decode_bmp_real():
     """REAL BMP decode by hand: BITMAPFILEHEADER magic + pixel offset,
     BITMAPINFOHEADER width/height/bpp, then the bottom-up padded pixel
     array averaged per channel (exact ints on the solid-color fixture).
     Handles the 4-byte row padding every real BMP carries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_bytes", "width", "height", "bpp",
-                "mean_r", "mean_g", "mean_b",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                magic, _file_size, _, _, offset = struct.unpack_from("<2sIHHI", raw, 0)
-                if magic != b"BM":
-                    raise ValueError(f"doc {doc_id}: not a BMP payload")
-                _hdr, width, height, _planes, bpp = struct.unpack_from("<IiiHH", raw, 14)
-                h = abs(height)
-                stride = (width * (bpp // 8) + 3) & ~3
-                # vectorized: view the padded pixel array as (h, stride),
-                # slice off the padding, reshape to (n_px, 3) BGR triples
-                px = (
-                    np.frombuffer(raw, np.uint8, count=stride * h, offset=offset)
-                    .reshape(h, stride)[:, : width * 3]
-                    .reshape(-1, 3)
-                    .astype(np.int64)
-                )
-                tb, tg, tr = (int(x) for x in px.sum(axis=0))
-                n_px = width * h
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(raw))
-                out["width"].append(width)
-                out["height"].append(h)
-                out["bpp"].append(bpp)
-                out["mean_r"].append(tr // n_px)
-                out["mean_g"].append(tg // n_px)
-                out["mean_b"].append(tb // n_px)
-            yield pd.DataFrame(out)
+    def row(doc_id: int, raw: bytes):
+        magic, _file_size, _, _, offset = struct.unpack_from("<2sIHHI", raw, 0)
+        if magic != b"BM":
+            raise ValueError(f"doc {doc_id}: not a BMP payload")
+        _hdr, width, height, _planes, bpp = struct.unpack_from("<IiiHH", raw, 14)
+        h = abs(height)
+        stride = (width * (bpp // 8) + 3) & ~3
+        # vectorized: view the padded pixel array as (h, stride),
+        # slice off the padding, reshape to (n_px, 3) BGR triples
+        px = (
+            np.frombuffer(raw, np.uint8, count=stride * h, offset=offset)
+            .reshape(h, stride)[:, : width * 3]
+            .reshape(-1, 3)
+            .astype(np.int64)
+        )
+        tb, tg, tr = (int(x) for x in px.sum(axis=0))
+        n_px = width * h
+        return len(raw), width, h, bpp, tr // n_px, tg // n_px, tb // n_px
 
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, BMP_META_SCHEMA)
+    return lambda doc_id, raw: [row(doc_id, raw)]
 
 
 WAV_WINDOW_SCHEMA = (
     "doc_id long, window_idx long, n_samples long, rms long, zero_crossings long"
 )
+WAV_WINDOW = 250  # samples per analysis window
 
 
-def wav_window_features(media_df: DataFrame, window: int = 250) -> DataFrame:
+@decoder(WAV_WINDOW_SCHEMA)
+def wav_window_features():
     """REAL audio feature extraction: fixed-size analysis windows over the
     decoded PCM stream, per-window RMS and zero-crossing count — the
     row-EXPANDING kernel shape (1 media row → n_windows feature rows)
     that real DSP featurization (MFCC frames, VAD windows) rides on.
     numpy-vectorized; zero shuffle."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import io
-        import math
-        import wave
+    import io
+    import math
+    import wave
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "window_idx", "n_samples", "rms", "zero_crossings",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(b))) as w:
-                    frames = w.readframes(w.getnframes())
-                samples = np.frombuffer(frames, dtype="<i2").astype(np.int64)
-                for wi in range(0, len(samples), window):
-                    chunk = samples[wi : wi + window]
-                    n = len(chunk)
-                    rms = math.isqrt(int((chunk * chunk).sum()) // n)
-                    zc = int((np.signbit(chunk[1:]) != np.signbit(chunk[:-1])).sum())
-                    out["doc_id"].append(doc_id)
-                    out["window_idx"].append(wi // window)
-                    out["n_samples"].append(n)
-                    out["rms"].append(rms)
-                    out["zero_crossings"].append(zc)
-            yield pd.DataFrame(out)
+    def rows(doc_id: int, raw: bytes):
+        with wave.open(io.BytesIO(raw)) as w:
+            frames = w.readframes(w.getnframes())
+        samples = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+        for wi in range(0, len(samples), WAV_WINDOW):
+            chunk = samples[wi : wi + WAV_WINDOW]
+            n = len(chunk)
+            rms = math.isqrt(int((chunk * chunk).sum()) // n)
+            zc = int((np.signbit(chunk[1:]) != np.signbit(chunk[:-1])).sum())
+            yield wi // WAV_WINDOW, n, rms, zc
 
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, WAV_WINDOW_SCHEMA)
+    return rows
 
 
 PNG_META_SCHEMA = (
@@ -627,31 +479,8 @@ PNG_META_SCHEMA = (
 )
 
 
-def synthesize_png(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL compressed PNG payload
-    (zlib-deflated IDAT, per-row filter cycling, CRC'd chunks)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_png_bytes
-
-        for pdf in batches:
-            payloads = [make_png_bytes(int(d)) for d in pdf["doc_id"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": payloads,
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_png_real(media_df: DataFrame) -> DataFrame:
+@decoder(PNG_META_SCHEMA)
+def decode_png_real():
     """REAL compressed-image decode in pure stdlib: PNG signature check,
     chunk walk with CRC-32 verification, IHDR geometry, zlib inflate of
     the concatenated IDAT stream, then per-scanline UNFILTERING — all
@@ -660,86 +489,69 @@ def decode_png_real(media_df: DataFrame) -> DataFrame:
     color type 2 (truecolor RGB) is supported: that is the fixture's
     shape; interlace or other color types raise."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    from .synth import _paeth
 
-        from .synth import _paeth
+    def row(doc_id: int, raw: bytes):
+        if raw[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError(f"doc {doc_id}: not a PNG payload")
+        pos, ihdr, idat = 8, None, b""
+        while pos < len(raw):
+            (length,) = struct.unpack_from(">I", raw, pos)
+            typ = raw[pos + 4 : pos + 8]
+            data = raw[pos + 8 : pos + 8 + length]
+            (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
+            if zlib.crc32(typ + data) != crc:
+                raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
+            if typ == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif typ == b"IDAT":
+                idat += data
+            elif typ == b"IEND":
+                break
+            pos += 12 + length
+        if ihdr is None:
+            raise ValueError(f"doc {doc_id}: missing IHDR")
+        width, height, depth, ctype, _comp, _filt, interlace = ihdr
+        if depth != 8 or ctype != 2 or interlace != 0:
+            raise ValueError(
+                f"doc {doc_id}: only 8-bit non-interlaced RGB supported"
+            )
+        bpp, stride = 3, width * 3
+        plain = zlib.decompress(idat)
+        prev = bytearray(stride)
+        tr = tg = tb = 0
+        for y in range(height):
+            off = y * (stride + 1)
+            f = plain[off]
+            line = bytearray(plain[off + 1 : off + 1 + stride])
+            if f == 1:  # Sub
+                for x in range(bpp, stride):
+                    line[x] = (line[x] + line[x - bpp]) & 0xFF
+            elif f == 2:  # Up
+                for x in range(stride):
+                    line[x] = (line[x] + prev[x]) & 0xFF
+            elif f == 3:  # Average
+                for x in range(stride):
+                    left = line[x - bpp] if x >= bpp else 0
+                    line[x] = (line[x] + (left + prev[x]) // 2) & 0xFF
+            elif f == 4:  # Paeth
+                for x in range(stride):
+                    left = line[x - bpp] if x >= bpp else 0
+                    up_left = prev[x - bpp] if x >= bpp else 0
+                    line[x] = (line[x] + _paeth(left, prev[x], up_left)) & 0xFF
+            elif f != 0:
+                raise ValueError(f"doc {doc_id}: bad filter {f}")
+            tr += sum(line[0::3])
+            tg += sum(line[1::3])
+            tb += sum(line[2::3])
+            prev = line
+        n_px = width * height
+        return width, height, depth, ctype, tr // n_px, tg // n_px, tb // n_px
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "bit_depth", "color_type",
-                "mean_r", "mean_g", "mean_b",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                if raw[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError(f"doc {doc_id}: not a PNG payload")
-                pos, ihdr, idat = 8, None, b""
-                while pos < len(raw):
-                    (length,) = struct.unpack_from(">I", raw, pos)
-                    typ = raw[pos + 4 : pos + 8]
-                    data = raw[pos + 8 : pos + 8 + length]
-                    (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
-                    if zlib.crc32(typ + data) != crc:
-                        raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
-                    if typ == b"IHDR":
-                        ihdr = struct.unpack(">IIBBBBB", data)
-                    elif typ == b"IDAT":
-                        idat += data
-                    elif typ == b"IEND":
-                        break
-                    pos += 12 + length
-                if ihdr is None:
-                    raise ValueError(f"doc {doc_id}: missing IHDR")
-                width, height, depth, ctype, _comp, _filt, interlace = ihdr
-                if depth != 8 or ctype != 2 or interlace != 0:
-                    raise ValueError(
-                        f"doc {doc_id}: only 8-bit non-interlaced RGB supported"
-                    )
-                bpp, stride = 3, width * 3
-                plain = zlib.decompress(idat)
-                prev = bytearray(stride)
-                tr = tg = tb = 0
-                for y in range(height):
-                    off = y * (stride + 1)
-                    f = plain[off]
-                    line = bytearray(plain[off + 1 : off + 1 + stride])
-                    if f == 1:  # Sub
-                        for x in range(bpp, stride):
-                            line[x] = (line[x] + line[x - bpp]) & 0xFF
-                    elif f == 2:  # Up
-                        for x in range(stride):
-                            line[x] = (line[x] + prev[x]) & 0xFF
-                    elif f == 3:  # Average
-                        for x in range(stride):
-                            left = line[x - bpp] if x >= bpp else 0
-                            line[x] = (line[x] + (left + prev[x]) // 2) & 0xFF
-                    elif f == 4:  # Paeth
-                        for x in range(stride):
-                            left = line[x - bpp] if x >= bpp else 0
-                            up_left = prev[x - bpp] if x >= bpp else 0
-                            line[x] = (line[x] + _paeth(left, prev[x], up_left)) & 0xFF
-                    elif f != 0:
-                        raise ValueError(f"doc {doc_id}: bad filter {f}")
-                    tr += sum(line[0::3])
-                    tg += sum(line[1::3])
-                    tb += sum(line[2::3])
-                    prev = line
-                n_px = width * height
-                out["doc_id"].append(doc_id)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["bit_depth"].append(depth)
-                out["color_type"].append(ctype)
-                out["mean_r"].append(tr // n_px)
-                out["mean_g"].append(tg // n_px)
-                out["mean_b"].append(tb // n_px)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, PNG_META_SCHEMA)
+    return lambda doc_id, raw: [row(doc_id, raw)]
 
 
 JPEG_META_SCHEMA = (
@@ -1589,83 +1401,12 @@ JPEG_COLOR_SCHEMA = (
 )
 
 
-def synthesize_jpeg_color(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an interleaved YCbCr baseline JPEG
-    (``make_jpeg_color_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_color_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_jpeg_color_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_jpeg_cdri(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with an interleaved YCbCr baseline JPEG
-    carrying DRI/RSTn restart intervals (``make_jpeg_cdri_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_cdri_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_jpeg_cdri_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_jpeg_color(media_df: DataFrame) -> DataFrame:
+@decoder(JPEG_COLOR_SCHEMA)
+def decode_jpeg_color():
     """Distributed interleaved-YCbCr JPEG decode: the generic MCU
     walker (``jpeg_decode_color``) as an Arrow kernel over binary
     payload rows — per-row decode, no cross-row state."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "width", "height", "n_mcus", "samp_h", "samp_v",
-            "n_units_y", "sum_dc_y", "sum_dc_cb", "sum_dc_cr",
-            "sum_ac_y", "sum_ac_cb", "sum_ac_cr",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (
-                    int(doc_id),
-                    *jpeg_decode_color(int(doc_id), bytes(b)),
-                )
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, JPEG_COLOR_SCHEMA
-    )
+    return lambda doc_id, raw: [jpeg_decode_color(doc_id, raw)]
 
 
 JPEG_PROG_SCHEMA = (
@@ -1674,88 +1415,17 @@ JPEG_PROG_SCHEMA = (
 )
 
 
-def synthesize_jpeg_prog(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a 6-scan progressive JPEG
-    (``make_jpeg_prog_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_prog_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_jpeg_prog_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_jpeg_prog_rst(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a progressive JPEG whose every scan
-    is split by DRI/RSTn restart intervals
-    (``make_jpeg_prog_rst_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_prog_rst_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_jpeg_prog_rst_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_jpeg_progressive(media_df: DataFrame) -> DataFrame:
+@decoder(JPEG_PROG_SCHEMA)
+def decode_jpeg_progressive():
     """Distributed progressive-JPEG decode: the Annex-G scan-script
     state machine (``jpeg_decode_progressive``) as an Arrow kernel over
     binary payload rows — per-row decode, no cross-row state, the same
     100 TB posture as every media kernel here."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "width", "height", "n_blocks", "n_scans",
-            "sum_dc", "sum_ac_signed", "sum_ac_abs", "n_nonzero_ac",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (
-                    int(doc_id),
-                    *jpeg_decode_progressive(int(doc_id), bytes(b)),
-                )
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, JPEG_PROG_SCHEMA
-    )
+    return lambda doc_id, raw: [jpeg_decode_progressive(doc_id, raw)]
 
 
-def decode_jpeg_real(media_df: DataFrame) -> DataFrame:
+@decoder(JPEG_META_SCHEMA)
+def decode_jpeg_real():
     """REAL entropy-coded image decode in pure stdlib: baseline
     sequential JPEG (ISO/IEC 10918-1) — marker walk, DQT/SOF0/DHT/SOS
     parsing, canonical Huffman decode of the scan (byte-stuffing aware),
@@ -1765,47 +1435,7 @@ def decode_jpeg_real(media_df: DataFrame) -> DataFrame:
     (one component) without restart markers is supported — the
     fixture's shape; the per-payload core is ``jpeg_decode_gray``."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "n_blocks", "mean_gray",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w_, h_, nb, mean = jpeg_decode_gray(int(doc_id), bytes(b))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w_)
-                out["height"].append(h_)
-                out["n_blocks"].append(nb)
-                out["mean_gray"].append(mean)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, JPEG_META_SCHEMA)
-
-
-def synthesize_jpeg(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL entropy-coded baseline JPEG
-    payload (DC differential Huffman coding, byte stuffing, CRC-free
-    marker framing per the spec)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [make_jpeg_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [jpeg_decode_gray(doc_id, raw)]
 
 
 GIF_META_SCHEMA = (
@@ -1878,7 +1508,8 @@ def gif_lzw_decode(
     return out
 
 
-def decode_gif_real(media_df: DataFrame) -> DataFrame:
+@decoder(GIF_META_SCHEMA)
+def decode_gif_real():
     """REAL LZW-compressed image decode in pure stdlib: GIF89a header
     walk (logical screen descriptor, global color table, image
     descriptor), sub-block reassembly, variable-width LZW decode with
@@ -1888,79 +1519,60 @@ def decode_gif_real(media_df: DataFrame) -> DataFrame:
     with a global color table is supported — the fixture's shape;
     interlaced or local-color-table streams raise."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def decode_one(doc_id: int, raw: bytes):
-            if raw[:6] not in (b"GIF89a", b"GIF87a"):
-                raise ValueError(f"doc {doc_id}: not a GIF payload")
-            sw, sh = struct.unpack_from("<HH", raw, 6)
-            packed = raw[10]
-            if not packed & 0x80:
-                raise ValueError(f"doc {doc_id}: global color table required")
-            n_colors = 2 << (packed & 0x07)
-            pos = 13
-            palette = [
-                tuple(raw[pos + 3 * i : pos + 3 * i + 3]) for i in range(n_colors)
-            ]
-            pos += 3 * n_colors
-            while raw[pos] == 0x21:  # extension blocks: skip sub-blocks
-                pos += 2
-                while raw[pos]:
-                    pos += raw[pos] + 1
-                pos += 1
-            if raw[pos] != 0x2C:
-                raise ValueError(f"doc {doc_id}: missing image descriptor")
-            left, top, w_, h_ = struct.unpack_from("<HHHH", raw, pos + 1)
-            ipacked = raw[pos + 9]
-            if ipacked & 0x80:
-                raise ValueError(f"doc {doc_id}: local color table unsupported")
-            if ipacked & 0x40:
-                raise ValueError(f"doc {doc_id}: interlaced GIF unsupported")
-            pos += 10
-            min_code_size = raw[pos]
-            pos += 1
-            lzw = bytearray()
+    def decode_one(doc_id: int, raw: bytes):
+        if raw[:6] not in (b"GIF89a", b"GIF87a"):
+            raise ValueError(f"doc {doc_id}: not a GIF payload")
+        sw, sh = struct.unpack_from("<HH", raw, 6)
+        packed = raw[10]
+        if not packed & 0x80:
+            raise ValueError(f"doc {doc_id}: global color table required")
+        n_colors = 2 << (packed & 0x07)
+        pos = 13
+        palette = [
+            tuple(raw[pos + 3 * i : pos + 3 * i + 3]) for i in range(n_colors)
+        ]
+        pos += 3 * n_colors
+        while raw[pos] == 0x21:  # extension blocks: skip sub-blocks
+            pos += 2
             while raw[pos]:
-                n = raw[pos]
-                lzw += raw[pos + 1 : pos + 1 + n]
-                pos += n + 1
+                pos += raw[pos] + 1
             pos += 1
-            if raw[pos] != 0x3B:
-                raise ValueError(f"doc {doc_id}: missing trailer")
-            indices = gif_lzw_decode(bytes(lzw), min_code_size, w_ * h_, doc_id)
-            if len(indices) != w_ * h_:
-                raise ValueError(
-                    f"doc {doc_id}: LZW yielded {len(indices)} of {w_ * h_} pixels"
-                )
-            tr = tg = tb = 0
-            for idx in indices:
-                r, g, b = palette[idx]
-                tr += r
-                tg += g
-                tb += b
-            n_px = w_ * h_
-            return w_, h_, n_colors, tr // n_px, tg // n_px, tb // n_px
+        if raw[pos] != 0x2C:
+            raise ValueError(f"doc {doc_id}: missing image descriptor")
+        left, top, w_, h_ = struct.unpack_from("<HHHH", raw, pos + 1)
+        ipacked = raw[pos + 9]
+        if ipacked & 0x80:
+            raise ValueError(f"doc {doc_id}: local color table unsupported")
+        if ipacked & 0x40:
+            raise ValueError(f"doc {doc_id}: interlaced GIF unsupported")
+        pos += 10
+        min_code_size = raw[pos]
+        pos += 1
+        lzw = bytearray()
+        while raw[pos]:
+            n = raw[pos]
+            lzw += raw[pos + 1 : pos + 1 + n]
+            pos += n + 1
+        pos += 1
+        if raw[pos] != 0x3B:
+            raise ValueError(f"doc {doc_id}: missing trailer")
+        indices = gif_lzw_decode(bytes(lzw), min_code_size, w_ * h_, doc_id)
+        if len(indices) != w_ * h_:
+            raise ValueError(
+                f"doc {doc_id}: LZW yielded {len(indices)} of {w_ * h_} pixels"
+            )
+        tr = tg = tb = 0
+        for idx in indices:
+            r, g, b = palette[idx]
+            tr += r
+            tg += g
+            tb += b
+        n_px = w_ * h_
+        return w_, h_, n_colors, tr // n_px, tg // n_px, tb // n_px
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "n_colors",
-                "mean_r", "mean_g", "mean_b",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                w_, h_, nc, mr, mg, mb = decode_one(int(doc_id), bytes(b))
-                out["doc_id"].append(doc_id)
-                out["width"].append(w_)
-                out["height"].append(h_)
-                out["n_colors"].append(nc)
-                out["mean_r"].append(mr)
-                out["mean_g"].append(mg)
-                out["mean_b"].append(mb)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, GIF_META_SCHEMA)
+    return lambda doc_id, raw: [decode_one(doc_id, raw)]
 
 
 GIF_INTERLACE_SCHEMA = (
@@ -1970,7 +1582,8 @@ GIF_INTERLACE_SCHEMA = (
 )
 
 
-def decode_gif_interlaced(media_df: DataFrame) -> DataFrame:
+@decoder(GIF_INTERLACE_SCHEMA)
+def decode_gif_interlaced():
     """INTERLACED GIF decode (GIF89a spec Appendix E): the image
     descriptor's interlace flag routes the LZW-decoded rows through
     the 4-pass reordering — pass 1 rows 0,8,16..., pass 2 rows
@@ -1979,146 +1592,81 @@ def decode_gif_interlaced(media_df: DataFrame) -> DataFrame:
     1/2/4/8 (one probe per pass) plus a row-weighted palette-index
     sum, both of which a decoder that ignores the flag gets wrong."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct as _s
+    import struct as _s
 
-        import pandas as pd
-
-        def decode_one(doc_id: int, raw: bytes):
-            if raw[:6] not in (b"GIF89a", b"GIF87a"):
-                raise ValueError(f"doc {doc_id}: not a GIF payload")
-            packed = raw[10]
-            if not packed & 0x80:
-                raise ValueError(
-                    f"doc {doc_id}: global color table required"
-                )
-            n_colors = 2 << (packed & 0x07)
-            pos = 13
-            palette = [
-                tuple(raw[pos + 3 * i : pos + 3 * i + 3])
-                for i in range(n_colors)
-            ]
-            pos += 3 * n_colors
-            if raw[pos] != 0x2C:
-                raise ValueError(f"doc {doc_id}: missing image descriptor")
-            _l, _t, w_, h_ = _s.unpack_from("<HHHH", raw, pos + 1)
-            ipacked = raw[pos + 9]
-            if not ipacked & 0x40:
-                raise ValueError(
-                    f"doc {doc_id}: fixture image must be interlaced"
-                )
-            pos += 10
-            min_code_size = raw[pos]
-            pos += 1
-            lzw = bytearray()
-            while True:
-                if pos >= len(raw):
-                    raise ValueError(
-                        f"doc {doc_id}: truncated LZW sub-block chain"
-                    )
-                if not raw[pos]:
-                    break
-                n = raw[pos]
-                if pos + 1 + n > len(raw):
-                    raise ValueError(
-                        f"doc {doc_id}: truncated LZW sub-block"
-                    )
-                lzw += raw[pos + 1 : pos + 1 + n]
-                pos += n + 1
-            pos += 1
-            if pos >= len(raw) or raw[pos] != 0x3B:
-                raise ValueError(f"doc {doc_id}: missing trailer")
-            seq = gif_lzw_decode(bytes(lzw), min_code_size, w_ * h_, doc_id)
-            if len(seq) != w_ * h_:
-                raise ValueError(
-                    f"doc {doc_id}: LZW yielded {len(seq)} of "
-                    f"{w_ * h_} pixels"
-                )
-            # de-interlace: storage rows land on display rows in the
-            # 4-pass order
-            img = [None] * h_
-            at = 0
-            for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-                for y in range(start, h_, step):
-                    img[y] = seq[at * w_ : (at + 1) * w_]
-                    at += 1
-            if at != h_ or any(row is None for row in img):
-                raise ValueError(
-                    f"doc {doc_id}: interlace passes did not cover "
-                    "every row"
-                )
-            probes = [
-                palette[img[y][0]][0] if y < h_ else -1
-                for y in (1, 2, 4, 8)
-            ]
-            wsum = sum(
-                (y + 1) * sum(img[y]) for y in range(h_)
+    def decode_one(doc_id: int, raw: bytes):
+        if raw[:6] not in (b"GIF89a", b"GIF87a"):
+            raise ValueError(f"doc {doc_id}: not a GIF payload")
+        packed = raw[10]
+        if not packed & 0x80:
+            raise ValueError(
+                f"doc {doc_id}: global color table required"
             )
-            return (w_, h_, *probes, wsum)
-
-        cols = (
-            "doc_id", "width", "height", "probe_r1", "probe_r2",
-            "probe_r4", "probe_r8", "weighted_idx_sum",
+        n_colors = 2 << (packed & 0x07)
+        pos = 13
+        palette = [
+            tuple(raw[pos + 3 * i : pos + 3 * i + 3])
+            for i in range(n_colors)
+        ]
+        pos += 3 * n_colors
+        if raw[pos] != 0x2C:
+            raise ValueError(f"doc {doc_id}: missing image descriptor")
+        _l, _t, w_, h_ = _s.unpack_from("<HHHH", raw, pos + 1)
+        ipacked = raw[pos + 9]
+        if not ipacked & 0x40:
+            raise ValueError(
+                f"doc {doc_id}: fixture image must be interlaced"
+            )
+        pos += 10
+        min_code_size = raw[pos]
+        pos += 1
+        lzw = bytearray()
+        while True:
+            if pos >= len(raw):
+                raise ValueError(
+                    f"doc {doc_id}: truncated LZW sub-block chain"
+                )
+            if not raw[pos]:
+                break
+            n = raw[pos]
+            if pos + 1 + n > len(raw):
+                raise ValueError(
+                    f"doc {doc_id}: truncated LZW sub-block"
+                )
+            lzw += raw[pos + 1 : pos + 1 + n]
+            pos += n + 1
+        pos += 1
+        if pos >= len(raw) or raw[pos] != 0x3B:
+            raise ValueError(f"doc {doc_id}: missing trailer")
+        seq = gif_lzw_decode(bytes(lzw), min_code_size, w_ * h_, doc_id)
+        if len(seq) != w_ * h_:
+            raise ValueError(
+                f"doc {doc_id}: LZW yielded {len(seq)} of "
+                f"{w_ * h_} pixels"
+            )
+        # de-interlace: storage rows land on display rows in the
+        # 4-pass order
+        img = [None] * h_
+        at = 0
+        for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
+            for y in range(start, h_, step):
+                img[y] = seq[at * w_ : (at + 1) * w_]
+                at += 1
+        if at != h_ or any(row is None for row in img):
+            raise ValueError(
+                f"doc {doc_id}: interlace passes did not cover "
+                "every row"
+            )
+        probes = [
+            palette[img[y][0]][0] if y < h_ else -1
+            for y in (1, 2, 4, 8)
+        ]
+        wsum = sum(
+            (y + 1) * sum(img[y]) for y in range(h_)
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *decode_one(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
+        return (w_, h_, *probes, wsum)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, GIF_INTERLACE_SCHEMA
-    )
-
-
-def synthesize_gif_interlaced(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an interlaced GIF
-    (``make_gif_interlaced_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_gif_interlaced_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_gif_interlaced_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_gif(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL LZW-compressed GIF89a payload."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_gif_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [make_gif_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [decode_one(doc_id, raw)]
 
 
 AVI_FRAME_SCHEMA = (
@@ -2126,7 +1674,8 @@ AVI_FRAME_SCHEMA = (
 )
 
 
-def decode_avi_mjpeg(media_df: DataFrame) -> DataFrame:
+@decoder(AVI_FRAME_SCHEMA)
+def decode_avi_mjpeg():
     """REAL video-container decode: RIFF/AVI chunk walk (hdrl: avih main
     header + vids/MJPG stream header + BITMAPINFOHEADER; movi: 00dc
     frame chunks with word alignment; idx1 index), each frame handed to
@@ -2143,125 +1692,109 @@ def decode_avi_mjpeg(media_df: DataFrame) -> DataFrame:
     a malformed container raises rather than yielding silently wrong
     frames."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def parse_hdrl(doc_id: int, raw: bytes, pos: int, end: int):
-            dims = None
-            stream_ok = False
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if fourcc == b"avih":
-                    vals = struct.unpack_from("<14I", raw, body)
-                    dims = (vals[8], vals[9], vals[4])  # width, height, frames
-                elif fourcc == b"LIST" and raw[body : body + 4] == b"strl":
-                    # stream type is scoped to THIS strl LIST: only the
-                    # video stream's strf carries a BITMAPINFOHEADER whose
-                    # biCompression must be MJPG.  A later audio strl's
-                    # strf (WAVEFORMATEX) must not be checked against it.
-                    this_is_video = False
-                    p = body + 4
-                    while p + 8 <= body + size:
-                        sub = raw[p : p + 4]
-                        (ssz,) = struct.unpack_from("<I", raw, p + 4)
-                        if sub == b"strh":
-                            if raw[p + 8 : p + 12] == b"vids":
-                                if raw[p + 12 : p + 16] != b"MJPG":
-                                    raise ValueError(
-                                        f"doc {doc_id}: non-MJPEG video stream"
-                                    )
-                                this_is_video = True
-                                stream_ok = True
-                        elif sub == b"strf" and this_is_video:
-                            comp = raw[p + 8 + 16 : p + 8 + 20]
-                            if comp != b"MJPG":
+    def parse_hdrl(doc_id: int, raw: bytes, pos: int, end: int):
+        dims = None
+        stream_ok = False
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if fourcc == b"avih":
+                vals = struct.unpack_from("<14I", raw, body)
+                dims = (vals[8], vals[9], vals[4])  # width, height, frames
+            elif fourcc == b"LIST" and raw[body : body + 4] == b"strl":
+                # stream type is scoped to THIS strl LIST: only the
+                # video stream's strf carries a BITMAPINFOHEADER whose
+                # biCompression must be MJPG.  A later audio strl's
+                # strf (WAVEFORMATEX) must not be checked against it.
+                this_is_video = False
+                p = body + 4
+                while p + 8 <= body + size:
+                    sub = raw[p : p + 4]
+                    (ssz,) = struct.unpack_from("<I", raw, p + 4)
+                    if sub == b"strh":
+                        if raw[p + 8 : p + 12] == b"vids":
+                            if raw[p + 12 : p + 16] != b"MJPG":
                                 raise ValueError(
-                                    f"doc {doc_id}: strf compression {comp!r}"
+                                    f"doc {doc_id}: non-MJPEG video stream"
                                 )
-                        p += 8 + ssz + (ssz & 1)
-                pos = body + size + (size & 1)
-            if dims is None or not stream_ok:
-                raise ValueError(f"doc {doc_id}: missing avih or vids stream")
-            return dims
+                            this_is_video = True
+                            stream_ok = True
+                    elif sub == b"strf" and this_is_video:
+                        comp = raw[p + 8 + 16 : p + 8 + 20]
+                        if comp != b"MJPG":
+                            raise ValueError(
+                                f"doc {doc_id}: strf compression {comp!r}"
+                            )
+                    p += 8 + ssz + (ssz & 1)
+            pos = body + size + (size & 1)
+        if dims is None or not stream_ok:
+            raise ValueError(f"doc {doc_id}: missing avih or vids stream")
+        return dims
 
-        def parse_movi(doc_id: int, raw: bytes, pos: int, end: int):
-            frames = []
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if body + size > end:
-                    raise ValueError(f"doc {doc_id}: movi chunk truncated")
-                if fourcc == b"00dc":
-                    frames.append(raw[body : body + size])
-                pos = body + size + (size & 1)
-            return frames
+    def parse_movi(doc_id: int, raw: bytes, pos: int, end: int):
+        frames = []
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if body + size > end:
+                raise ValueError(f"doc {doc_id}: movi chunk truncated")
+            if fourcc == b"00dc":
+                frames.append(raw[body : body + size])
+            pos = body + size + (size & 1)
+        return frames
 
-        def decode_one(doc_id: int, raw: bytes):
-            if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-                raise ValueError(f"doc {doc_id}: not an AVI payload")
-            (riff_len,) = struct.unpack_from("<I", raw, 4)
-            if 8 + riff_len > len(raw):
-                raise ValueError(f"doc {doc_id}: RIFF size overruns payload")
-            pos, end = 12, 8 + riff_len
-            header = None
-            frames: list[bytes] = []
-            n_indexed = None
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if body + size > end:
-                    raise ValueError(f"doc {doc_id}: chunk {fourcc!r} truncated")
-                if fourcc == b"LIST":
-                    subtype = raw[body : body + 4]
-                    if subtype == b"hdrl":
-                        header = parse_hdrl(doc_id, raw, body + 4, body + size)
-                    elif subtype == b"movi":
-                        frames = parse_movi(doc_id, raw, body + 4, body + size)
-                elif fourcc == b"idx1":
-                    n_indexed = size // 16
-                pos = body + size + (size & 1)
-            if header is None:
-                raise ValueError(f"doc {doc_id}: missing hdrl")
-            width, height, total = header
-            if len(frames) != total:
+    def decode_one(doc_id: int, raw: bytes):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
+            raise ValueError(f"doc {doc_id}: not an AVI payload")
+        (riff_len,) = struct.unpack_from("<I", raw, 4)
+        if 8 + riff_len > len(raw):
+            raise ValueError(f"doc {doc_id}: RIFF size overruns payload")
+        pos, end = 12, 8 + riff_len
+        header = None
+        frames: list[bytes] = []
+        n_indexed = None
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if body + size > end:
+                raise ValueError(f"doc {doc_id}: chunk {fourcc!r} truncated")
+            if fourcc == b"LIST":
+                subtype = raw[body : body + 4]
+                if subtype == b"hdrl":
+                    header = parse_hdrl(doc_id, raw, body + 4, body + size)
+                elif subtype == b"movi":
+                    frames = parse_movi(doc_id, raw, body + 4, body + size)
+            elif fourcc == b"idx1":
+                n_indexed = size // 16
+            pos = body + size + (size & 1)
+        if header is None:
+            raise ValueError(f"doc {doc_id}: missing hdrl")
+        width, height, total = header
+        if len(frames) != total:
+            raise ValueError(
+                f"doc {doc_id}: {len(frames)} frames, header says {total}"
+            )
+        if n_indexed is not None and n_indexed != len(frames):
+            raise ValueError(
+                f"doc {doc_id}: idx1 indexes {n_indexed} of {len(frames)}"
+            )
+        out = []
+        for k, frame in enumerate(frames):
+            w_, h_, _nb, mean = jpeg_decode_gray(doc_id, frame)
+            if (w_, h_) != (width, height):
                 raise ValueError(
-                    f"doc {doc_id}: {len(frames)} frames, header says {total}"
+                    f"doc {doc_id}: frame {k} is {w_}x{h_}, "
+                    f"container says {width}x{height}"
                 )
-            if n_indexed is not None and n_indexed != len(frames):
-                raise ValueError(
-                    f"doc {doc_id}: idx1 indexes {n_indexed} of {len(frames)}"
-                )
-            out = []
-            for k, frame in enumerate(frames):
-                w_, h_, _nb, mean = jpeg_decode_gray(doc_id, frame)
-                if (w_, h_) != (width, height):
-                    raise ValueError(
-                        f"doc {doc_id}: frame {k} is {w_}x{h_}, "
-                        f"container says {width}x{height}"
-                    )
-                out.append((k, w_, h_, mean))
-            return out
+            out.append((k, w_, h_, mean))
+        return out
 
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in (
-                "doc_id", "frame_idx", "width", "height", "mean_gray",
-            )}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for k, w_, h_, mean in decode_one(int(doc_id), bytes(b)):
-                    cols["doc_id"].append(doc_id)
-                    cols["frame_idx"].append(k)
-                    cols["width"].append(w_)
-                    cols["height"].append(h_)
-                    cols["mean_gray"].append(mean)
-            yield pd.DataFrame(cols)
-
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, AVI_FRAME_SCHEMA)
+    return decode_one
 
 
 AVI_AV_SCHEMA = (
@@ -2271,7 +1804,8 @@ AVI_AV_SCHEMA = (
 )
 
 
-def decode_avi_av(media_df: DataFrame) -> DataFrame:
+@decoder(AVI_AV_SCHEMA)
+def decode_avi_av():
     """REAL A/V container demux: a two-stream RIFF/AVI (MJPEG video +
     u8 mono PCM audio) is split back into its streams — each ``00dc``
     frame decoded by the production baseline-JPEG decoder
@@ -2284,199 +1818,139 @@ def decode_avi_av(media_df: DataFrame) -> DataFrame:
     dimensions against the headers, total audio samples against the
     audio ``strh``'s dwLength."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def parse_hdrl(doc_id: int, raw: bytes, pos: int, end: int):
-            dims = None
-            n_streams = None
-            video_ok = False
-            audio = None
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if fourcc == b"avih":
-                    vals = struct.unpack_from("<14I", raw, body)
-                    dims = (vals[8], vals[9], vals[4])
-                    n_streams = vals[6]
-                elif fourcc == b"LIST" and raw[body : body + 4] == b"strl":
-                    this_type = None
-                    audio_len = None
-                    p = body + 4
-                    while p + 8 <= body + size:
-                        sub = raw[p : p + 4]
-                        (ssz,) = struct.unpack_from("<I", raw, p + 4)
-                        if sub == b"strh":
-                            this_type = raw[p + 8 : p + 12]
-                            if this_type == b"vids":
-                                if raw[p + 12 : p + 16] != b"MJPG":
-                                    raise ValueError(
-                                        f"doc {doc_id}: non-MJPEG video"
-                                    )
-                                video_ok = True
-                            elif this_type == b"auds":
-                                # dwLength (samples) at struct offset 32
-                                (audio_len,) = struct.unpack_from(
-                                    "<I", raw, p + 8 + 32
+    def parse_hdrl(doc_id: int, raw: bytes, pos: int, end: int):
+        dims = None
+        n_streams = None
+        video_ok = False
+        audio = None
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if fourcc == b"avih":
+                vals = struct.unpack_from("<14I", raw, body)
+                dims = (vals[8], vals[9], vals[4])
+                n_streams = vals[6]
+            elif fourcc == b"LIST" and raw[body : body + 4] == b"strl":
+                this_type = None
+                audio_len = None
+                p = body + 4
+                while p + 8 <= body + size:
+                    sub = raw[p : p + 4]
+                    (ssz,) = struct.unpack_from("<I", raw, p + 4)
+                    if sub == b"strh":
+                        this_type = raw[p + 8 : p + 12]
+                        if this_type == b"vids":
+                            if raw[p + 12 : p + 16] != b"MJPG":
+                                raise ValueError(
+                                    f"doc {doc_id}: non-MJPEG video"
                                 )
-                        elif sub == b"strf":
-                            if this_type == b"vids":
-                                if raw[p + 8 + 16 : p + 8 + 20] != b"MJPG":
-                                    raise ValueError(
-                                        f"doc {doc_id}: video strf not MJPG"
-                                    )
-                            elif this_type == b"auds":
-                                tag, ch, rate, _bps, _ba, bits = (
-                                    struct.unpack_from("<HHIIHH", raw, p + 8)
+                            video_ok = True
+                        elif this_type == b"auds":
+                            # dwLength (samples) at struct offset 32
+                            (audio_len,) = struct.unpack_from(
+                                "<I", raw, p + 8 + 32
+                            )
+                    elif sub == b"strf":
+                        if this_type == b"vids":
+                            if raw[p + 8 + 16 : p + 8 + 20] != b"MJPG":
+                                raise ValueError(
+                                    f"doc {doc_id}: video strf not MJPG"
                                 )
-                                if (tag, ch, bits) != (1, 1, 8):
-                                    raise ValueError(
-                                        f"doc {doc_id}: not u8 mono PCM "
-                                        f"(tag={tag} ch={ch} bits={bits})"
-                                    )
-                                audio = (rate, audio_len)
-                        p += 8 + ssz + (ssz & 1)
-                pos = body + size + (size & 1)
-            if dims is None or not video_ok or audio is None:
-                raise ValueError(f"doc {doc_id}: missing avih/vids/auds")
-            if n_streams != 2:
-                raise ValueError(
-                    f"doc {doc_id}: avih dwStreams {n_streams}, demuxed 2"
-                )
-            return dims, audio
+                        elif this_type == b"auds":
+                            tag, ch, rate, _bps, _ba, bits = (
+                                struct.unpack_from("<HHIIHH", raw, p + 8)
+                            )
+                            if (tag, ch, bits) != (1, 1, 8):
+                                raise ValueError(
+                                    f"doc {doc_id}: not u8 mono PCM "
+                                    f"(tag={tag} ch={ch} bits={bits})"
+                                )
+                            audio = (rate, audio_len)
+                    p += 8 + ssz + (ssz & 1)
+            pos = body + size + (size & 1)
+        if dims is None or not video_ok or audio is None:
+            raise ValueError(f"doc {doc_id}: missing avih/vids/auds")
+        if n_streams != 2:
+            raise ValueError(
+                f"doc {doc_id}: avih dwStreams {n_streams}, demuxed 2"
+            )
+        return dims, audio
 
-        def parse_movi(doc_id: int, raw: bytes, pos: int, end: int):
-            frames, chunks = [], []
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if body + size > end:
-                    raise ValueError(f"doc {doc_id}: movi chunk truncated")
-                if fourcc == b"00dc":
-                    frames.append(raw[body : body + size])
-                elif fourcc == b"01wb":
-                    chunks.append(raw[body : body + size])
-                pos = body + size + (size & 1)
-            return frames, chunks
+    def parse_movi(doc_id: int, raw: bytes, pos: int, end: int):
+        frames, chunks = [], []
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if body + size > end:
+                raise ValueError(f"doc {doc_id}: movi chunk truncated")
+            if fourcc == b"00dc":
+                frames.append(raw[body : body + size])
+            elif fourcc == b"01wb":
+                chunks.append(raw[body : body + size])
+            pos = body + size + (size & 1)
+        return frames, chunks
 
-        def demux(doc_id: int, raw: bytes):
-            if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-                raise ValueError(f"doc {doc_id}: not an AVI payload")
-            (riff_len,) = struct.unpack_from("<I", raw, 4)
-            if 8 + riff_len > len(raw):
-                raise ValueError(f"doc {doc_id}: RIFF size overruns payload")
-            pos, end = 12, 8 + riff_len
-            header = audio_meta = None
-            frames: list[bytes] = []
-            chunks: list[bytes] = []
-            while pos + 8 <= end:
-                fourcc = raw[pos : pos + 4]
-                (size,) = struct.unpack_from("<I", raw, pos + 4)
-                body = pos + 8
-                if body + size > end:
-                    raise ValueError(f"doc {doc_id}: chunk {fourcc!r} truncated")
-                if fourcc == b"LIST":
-                    subtype = raw[body : body + 4]
-                    if subtype == b"hdrl":
-                        header, audio_meta = parse_hdrl(
-                            doc_id, raw, body + 4, body + size
-                        )
-                    elif subtype == b"movi":
-                        frames, chunks = parse_movi(
-                            doc_id, raw, body + 4, body + size
-                        )
-                pos = body + size + (size & 1)
-            if header is None:
-                raise ValueError(f"doc {doc_id}: missing hdrl")
-            width, height, total = header
-            rate, audio_len = audio_meta
-            if len(frames) != total:
-                raise ValueError(
-                    f"doc {doc_id}: {len(frames)} frames, header says {total}"
-                )
-            sum_gray = 0
-            for frame in frames:
-                f_w, f_h, _nb, mean = jpeg_decode_gray(doc_id, frame)
-                if (f_w, f_h) != (width, height):
-                    raise ValueError(
-                        f"doc {doc_id}: frame {f_w}x{f_h} vs header "
-                        f"{width}x{height}"
+    def demux(doc_id: int, raw: bytes):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
+            raise ValueError(f"doc {doc_id}: not an AVI payload")
+        (riff_len,) = struct.unpack_from("<I", raw, 4)
+        if 8 + riff_len > len(raw):
+            raise ValueError(f"doc {doc_id}: RIFF size overruns payload")
+        pos, end = 12, 8 + riff_len
+        header = audio_meta = None
+        frames: list[bytes] = []
+        chunks: list[bytes] = []
+        while pos + 8 <= end:
+            fourcc = raw[pos : pos + 4]
+            (size,) = struct.unpack_from("<I", raw, pos + 4)
+            body = pos + 8
+            if body + size > end:
+                raise ValueError(f"doc {doc_id}: chunk {fourcc!r} truncated")
+            if fourcc == b"LIST":
+                subtype = raw[body : body + 4]
+                if subtype == b"hdrl":
+                    header, audio_meta = parse_hdrl(
+                        doc_id, raw, body + 4, body + size
                     )
-                sum_gray += mean
-            n_samples = sum(len(c) for c in chunks)
-            if audio_len is not None and n_samples != audio_len:
+                elif subtype == b"movi":
+                    frames, chunks = parse_movi(
+                        doc_id, raw, body + 4, body + size
+                    )
+            pos = body + size + (size & 1)
+        if header is None:
+            raise ValueError(f"doc {doc_id}: missing hdrl")
+        width, height, total = header
+        rate, audio_len = audio_meta
+        if len(frames) != total:
+            raise ValueError(
+                f"doc {doc_id}: {len(frames)} frames, header says {total}"
+            )
+        sum_gray = 0
+        for frame in frames:
+            f_w, f_h, _nb, mean = jpeg_decode_gray(doc_id, frame)
+            if (f_w, f_h) != (width, height):
                 raise ValueError(
-                    f"doc {doc_id}: {n_samples} audio samples, strh says "
-                    f"{audio_len}"
+                    f"doc {doc_id}: frame {f_w}x{f_h} vs header "
+                    f"{width}x{height}"
                 )
-            sample_sum = sum(sum(c) for c in chunks)
-            return (
-                len(frames), width, height, sum_gray, len(chunks), rate,
-                n_samples, sample_sum,
+            sum_gray += mean
+        n_samples = sum(len(c) for c in chunks)
+        if audio_len is not None and n_samples != audio_len:
+            raise ValueError(
+                f"doc {doc_id}: {n_samples} audio samples, strh says "
+                f"{audio_len}"
             )
-
-        cols = (
-            "doc_id", "n_frames", "width", "height", "sum_frame_gray",
-            "n_audio_chunks", "audio_rate", "n_audio_samples",
-            "audio_sample_sum",
+        sample_sum = sum(sum(c) for c in chunks)
+        return (
+            len(frames), width, height, sum_gray, len(chunks), rate,
+            n_samples, sample_sum,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *demux(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, AVI_AV_SCHEMA)
-
-
-def synthesize_avi_av(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a REAL two-stream (MJPEG + PCM) AVI."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_avi_av_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [make_avi_av_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_avi(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL MJPEG-in-AVI payload."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_avi_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [make_avi_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [demux(doc_id, raw)]
 
 
 H264_META_SCHEMA = (
@@ -2784,7 +2258,8 @@ def h264_unescape(doc_id: int, payload: bytes) -> bytes:
     return bytes(out)
 
 
-def decode_h264_nals(media_df: DataFrame) -> DataFrame:
+@decoder(H264_META_SCHEMA)
+def decode_h264_nals():
     """REAL H.264 Annex-B NAL-layer parse: split the byte stream on
     both 3- and 4-byte start codes, read each NAL header (checking the
     forbidden_zero_bit), strip emulation-prevention bytes per ITU-T
@@ -2800,67 +2275,51 @@ def decode_h264_nals(media_df: DataFrame) -> DataFrame:
     forbidden-bit violation, an invalid 00 00 02 escape sequence, a
     truncated SPS, or a missing SPS raises."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    split_nals, unescape = h264_split_nals, h264_unescape
 
-        split_nals, unescape = h264_split_nals, h264_unescape
-
-        def parse(doc_id: int, raw: bytes):
-            counts = {7: 0, 8: 0, 5: 0, 1: 0}
-            n_nal = n_epb = rbsp_bytes = 0
-            sum_frame_num = sum_idr_pic_id = 0
-            sps = pps = None
-            for unit in split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                header = unit[0]
-                if header & 0x80:
-                    raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
-                nal_type = header & 0x1F
-                rbsp = unescape(doc_id, unit[1:])
-                n_nal += 1
-                n_epb += len(unit) - 1 - len(rbsp)
-                rbsp_bytes += len(rbsp)
-                if nal_type in counts:
-                    counts[nal_type] += 1
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type in (1, 5):
-                    if sps is None:
-                        raise ValueError(f"doc {doc_id}: slice before SPS")
-                    _st, frame_num, idr_pic_id = parse_slice_header(
-                        doc_id, rbsp, nal_type, sps["frame_num_bits"]
-                    )
-                    sum_frame_num += frame_num
-                    if idr_pic_id is not None:
-                        sum_idr_pic_id += idr_pic_id
-            if sps is None:
-                raise ValueError(f"doc {doc_id}: stream carries no SPS")
-            if pps is None:
-                raise ValueError(f"doc {doc_id}: stream carries no PPS")
-            return (
-                n_nal, counts[7], counts[8], counts[5], counts[1],
-                n_epb, rbsp_bytes, sps["profile_idc"], sps["level_idc"],
-                sps["width"], sps["height"], pps[1], sum_frame_num,
-                sum_idr_pic_id,
-            )
-
-        cols = (
-            "doc_id", "n_nal", "n_sps", "n_pps", "n_idr", "n_non_idr",
-            "n_epb", "rbsp_bytes", "profile_idc", "level_idc", "width",
-            "height", "pic_init_qp", "sum_frame_num", "sum_idr_pic_id",
+    def parse(doc_id: int, raw: bytes):
+        counts = {7: 0, 8: 0, 5: 0, 1: 0}
+        n_nal = n_epb = rbsp_bytes = 0
+        sum_frame_num = sum_idr_pic_id = 0
+        sps = pps = None
+        for unit in split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            header = unit[0]
+            if header & 0x80:
+                raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
+            nal_type = header & 0x1F
+            rbsp = unescape(doc_id, unit[1:])
+            n_nal += 1
+            n_epb += len(unit) - 1 - len(rbsp)
+            rbsp_bytes += len(rbsp)
+            if nal_type in counts:
+                counts[nal_type] += 1
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type in (1, 5):
+                if sps is None:
+                    raise ValueError(f"doc {doc_id}: slice before SPS")
+                _st, frame_num, idr_pic_id = parse_slice_header(
+                    doc_id, rbsp, nal_type, sps["frame_num_bits"]
+                )
+                sum_frame_num += frame_num
+                if idr_pic_id is not None:
+                    sum_idr_pic_id += idr_pic_id
+        if sps is None:
+            raise ValueError(f"doc {doc_id}: stream carries no SPS")
+        if pps is None:
+            raise ValueError(f"doc {doc_id}: stream carries no PPS")
+        return (
+            n_nal, counts[7], counts[8], counts[5], counts[1],
+            n_epb, rbsp_bytes, sps["profile_idc"], sps["level_idc"],
+            sps["width"], sps["height"], pps[1], sum_frame_num,
+            sum_idr_pic_id,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(kernel, H264_META_SCHEMA)
+    return lambda doc_id, raw: [parse(doc_id, raw)]
 
 
 H264_IPCM_SCHEMA = (
@@ -3266,7 +2725,14 @@ def _cavlc_residual(
     return levels
 
 
-def decode_h264_cavlc(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, width long, height long, n_frames long, "
+    "n_mbs long, sum_dc_signed long, sum_dc_abs long, "
+    "sum_ac_signed long, sum_ac_abs long, sum_cdc_signed long, "
+    "sum_cdc_abs long, sum_cac_signed long, sum_cac_abs long, "
+    "n_trailing_ones long"
+)
+def decode_h264_cavlc():
     """REAL CAVLC-entropy H.264 decode (ITU-T H.264 9.2) — the layer
     the I_PCM and motion fixtures bypass: every IDR slice carries
     Intra_16x16 macroblocks (mb_type 15: DC prediction,
@@ -3288,238 +2754,190 @@ def decode_h264_cavlc(media_df: DataFrame) -> DataFrame:
     Declared stubs: non-I_16x16 entropy-coded macroblocks and
     CABAC."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        n_frames = 0
+        n_mb_total = 0
+        sum_dc = sum_dc_abs = sum_ac = sum_ac_abs = n_t1 = 0
+        sum_cdc = sum_cdc_abs = sum_cac = sum_cac_abs = 0
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+                if pps[0] != 0:
+                    raise NotImplementedError(
+                        "CABAC slice data not implemented"
+                    )
+            elif nal_type == 5:
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
+                    )
+                mb_w = sps["width"] // 16
+                n_mbs = mb_w * (sps["height"] // 16)
+                r = _H264BitReader(rbsp, doc_id)
+                if r.ue() != 0:
+                    raise ValueError(
+                        f"doc {doc_id}: multi-slice CAVLC picture"
+                    )
+                if r.ue() != 7:
+                    raise ValueError(f"doc {doc_id}: non-I slice")
+                r.ue()  # pps id
+                r.u(sps["frame_num_bits"])
+                idr_pic_id = r.ue()
+                if idr_pic_id != n_frames:
+                    raise ValueError(
+                        f"doc {doc_id}: idr_pic_id out of order"
+                    )
+                r.u(2)  # dec_ref_pic_marking flags
+                r.se()  # slice_qp_delta
+                # per-picture 4x4 nonzero-count grid (9.2.1): each
+                # decoded AC block's TotalCoeff feeds later blocks'
+                # nC through the left/top neighbor average
+                nzc: dict[tuple[int, int], int] = {}
 
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            n_frames = 0
-            n_mb_total = 0
-            sum_dc = sum_dc_abs = sum_ac = sum_ac_abs = n_t1 = 0
-            sum_cdc = sum_cdc_abs = sum_cac = sum_cac_abs = 0
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                    if pps[0] != 0:
+                def zidx(zx: int, zy: int) -> int:
+                    return (
+                        ((zy & 2) << 2) | ((zx & 2) << 1)
+                        | ((zy & 1) << 1) | (zx & 1)
+                    )
+
+                def n_c(m: int, blk: int) -> int:
+                    zx = ((blk >> 2) & 1) * 2 + (blk & 1)
+                    zy = ((blk >> 3) & 1) * 2 + ((blk >> 1) & 1)
+                    n_a = n_b = None
+                    if zx > 0:
+                        n_a = nzc[(m, zidx(zx - 1, zy))]
+                    elif m % mb_w > 0:
+                        n_a = nzc[(m - 1, zidx(3, zy))]
+                    if zy > 0:
+                        n_b = nzc[(m, zidx(zx, zy - 1))]
+                    elif m // mb_w > 0:
+                        n_b = nzc[(m - mb_w, zidx(zx, 3))]
+                    if n_a is not None and n_b is not None:
+                        return (n_a + n_b + 1) >> 1
+                    if n_a is not None:
+                        return n_a
+                    if n_b is not None:
+                        return n_b
+                    return 0
+
+                # chroma 4x4 nonzero-count grids (2x2 per MB, per
+                # component) — the chroma AC nC bookkeeping
+                cnzc: dict[tuple[int, int, int], int] = {}
+
+                def c_n_c(m: int, comp: int, blk: int) -> int:
+                    cx, cy = blk % 2, blk // 2
+                    n_a = n_b = None
+                    if cx > 0:
+                        n_a = cnzc[(m, comp, blk - 1)]
+                    elif m % mb_w > 0:
+                        n_a = cnzc[(m - 1, comp, blk + 1)]
+                    if cy > 0:
+                        n_b = cnzc[(m, comp, blk - 2)]
+                    elif m // mb_w > 0:
+                        n_b = cnzc[(m - mb_w, comp, blk + 2)]
+                    if n_a is not None and n_b is not None:
+                        return (n_a + n_b + 1) >> 1
+                    if n_a is not None:
+                        return n_a
+                    if n_b is not None:
+                        return n_b
+                    return 0
+
+                for m in range(n_mbs):
+                    mb_type = r.ue()
+                    # I_16x16 with DC prediction and
+                    # CodedBlockPatternLuma 15 (7.4.5 Table 7-11):
+                    # mb_type = 1 + 2 + 4*cbp_chroma + 12
+                    if mb_type not in (15, 19, 23):
                         raise NotImplementedError(
-                            "CABAC slice data not implemented"
+                            f"entropy-coded mb_type {mb_type} not "
+                            "implemented (Intra_16x16 DC/cbp-luma-"
+                            "15 shapes only)"
                         )
-                elif nal_type == 5:
-                    if sps is None or pps is None:
+                    cbp_chroma = (mb_type - 15) // 4
+                    if r.ue() > 3:
                         raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
+                            f"doc {doc_id}: bad chroma pred mode"
                         )
-                    mb_w = sps["width"] // 16
-                    n_mbs = mb_w * (sps["height"] // 16)
-                    r = _H264BitReader(rbsp, doc_id)
-                    if r.ue() != 0:
-                        raise ValueError(
-                            f"doc {doc_id}: multi-slice CAVLC picture"
+                    r.se()  # mb_qp_delta
+
+                    dc = _cavlc_residual(r, n_c(m, 0), 16, doc_id)
+                    sum_dc += sum(dc)
+                    sum_dc_abs += sum(abs(v) for v in dc)
+                    n_t1 += sum(1 for v in dc[:3] if abs(v) == 1)
+                    for blk in range(16):
+                        ac = _cavlc_residual(
+                            r, n_c(m, blk), 15, doc_id
                         )
-                    if r.ue() != 7:
-                        raise ValueError(f"doc {doc_id}: non-I slice")
-                    r.ue()  # pps id
-                    r.u(sps["frame_num_bits"])
-                    idr_pic_id = r.ue()
-                    if idr_pic_id != n_frames:
-                        raise ValueError(
-                            f"doc {doc_id}: idr_pic_id out of order"
+                        nzc[(m, blk)] = len(ac)
+                        sum_ac += sum(ac)
+                        sum_ac_abs += sum(abs(v) for v in ac)
+                        n_t1 += sum(
+                            1 for v in ac[:3] if abs(v) == 1
                         )
-                    r.u(2)  # dec_ref_pic_marking flags
-                    r.se()  # slice_qp_delta
-                    # per-picture 4x4 nonzero-count grid (9.2.1): each
-                    # decoded AC block's TotalCoeff feeds later blocks'
-                    # nC through the left/top neighbor average
-                    nzc: dict[tuple[int, int], int] = {}
-
-                    def zidx(zx: int, zy: int) -> int:
-                        return (
-                            ((zy & 2) << 2) | ((zx & 2) << 1)
-                            | ((zy & 1) << 1) | (zx & 1)
-                        )
-
-                    def n_c(m: int, blk: int) -> int:
-                        zx = ((blk >> 2) & 1) * 2 + (blk & 1)
-                        zy = ((blk >> 3) & 1) * 2 + ((blk >> 1) & 1)
-                        n_a = n_b = None
-                        if zx > 0:
-                            n_a = nzc[(m, zidx(zx - 1, zy))]
-                        elif m % mb_w > 0:
-                            n_a = nzc[(m - 1, zidx(3, zy))]
-                        if zy > 0:
-                            n_b = nzc[(m, zidx(zx, zy - 1))]
-                        elif m // mb_w > 0:
-                            n_b = nzc[(m - mb_w, zidx(zx, 3))]
-                        if n_a is not None and n_b is not None:
-                            return (n_a + n_b + 1) >> 1
-                        if n_a is not None:
-                            return n_a
-                        if n_b is not None:
-                            return n_b
-                        return 0
-
-                    # chroma 4x4 nonzero-count grids (2x2 per MB, per
-                    # component) — the chroma AC nC bookkeeping
-                    cnzc: dict[tuple[int, int, int], int] = {}
-
-                    def c_n_c(m: int, comp: int, blk: int) -> int:
-                        cx, cy = blk % 2, blk // 2
-                        n_a = n_b = None
-                        if cx > 0:
-                            n_a = cnzc[(m, comp, blk - 1)]
-                        elif m % mb_w > 0:
-                            n_a = cnzc[(m - 1, comp, blk + 1)]
-                        if cy > 0:
-                            n_b = cnzc[(m, comp, blk - 2)]
-                        elif m // mb_w > 0:
-                            n_b = cnzc[(m - mb_w, comp, blk + 2)]
-                        if n_a is not None and n_b is not None:
-                            return (n_a + n_b + 1) >> 1
-                        if n_a is not None:
-                            return n_a
-                        if n_b is not None:
-                            return n_b
-                        return 0
-
-                    for m in range(n_mbs):
-                        mb_type = r.ue()
-                        # I_16x16 with DC prediction and
-                        # CodedBlockPatternLuma 15 (7.4.5 Table 7-11):
-                        # mb_type = 1 + 2 + 4*cbp_chroma + 12
-                        if mb_type not in (15, 19, 23):
-                            raise NotImplementedError(
-                                f"entropy-coded mb_type {mb_type} not "
-                                "implemented (Intra_16x16 DC/cbp-luma-"
-                                "15 shapes only)"
-                            )
-                        cbp_chroma = (mb_type - 15) // 4
-                        if r.ue() > 3:
-                            raise ValueError(
-                                f"doc {doc_id}: bad chroma pred mode"
-                            )
-                        r.se()  # mb_qp_delta
-
-                        dc = _cavlc_residual(r, n_c(m, 0), 16, doc_id)
-                        sum_dc += sum(dc)
-                        sum_dc_abs += sum(abs(v) for v in dc)
-                        n_t1 += sum(1 for v in dc[:3] if abs(v) == 1)
-                        for blk in range(16):
-                            ac = _cavlc_residual(
-                                r, n_c(m, blk), 15, doc_id
-                            )
-                            nzc[(m, blk)] = len(ac)
-                            sum_ac += sum(ac)
-                            sum_ac_abs += sum(abs(v) for v in ac)
+                    # chroma residuals (7.3.5.3.3 ordering): both
+                    # components' DC blocks, then both components'
+                    # AC blocks when cbp_chroma == 2
+                    if cbp_chroma:
+                        for _comp in range(2):
+                            cdc = _cavlc_residual(r, -1, 4, doc_id)
+                            sum_cdc += sum(cdc)
+                            sum_cdc_abs += sum(abs(v) for v in cdc)
                             n_t1 += sum(
-                                1 for v in ac[:3] if abs(v) == 1
+                                1 for v in cdc[:3] if abs(v) == 1
                             )
-                        # chroma residuals (7.3.5.3.3 ordering): both
-                        # components' DC blocks, then both components'
-                        # AC blocks when cbp_chroma == 2
-                        if cbp_chroma:
-                            for _comp in range(2):
-                                cdc = _cavlc_residual(r, -1, 4, doc_id)
-                                sum_cdc += sum(cdc)
-                                sum_cdc_abs += sum(abs(v) for v in cdc)
-                                n_t1 += sum(
-                                    1 for v in cdc[:3] if abs(v) == 1
+                    for comp in range(2):
+                        for blk in range(4):
+                            if cbp_chroma == 2:
+                                cac = _cavlc_residual(
+                                    r, c_n_c(m, comp, blk), 15,
+                                    doc_id,
                                 )
-                        for comp in range(2):
-                            for blk in range(4):
-                                if cbp_chroma == 2:
-                                    cac = _cavlc_residual(
-                                        r, c_n_c(m, comp, blk), 15,
-                                        doc_id,
-                                    )
-                                    sum_cac += sum(cac)
-                                    sum_cac_abs += sum(
-                                        abs(v) for v in cac
-                                    )
-                                    n_t1 += sum(
-                                        1 for v in cac[:3]
-                                        if abs(v) == 1
-                                    )
-                                    cnzc[(m, comp, blk)] = len(cac)
-                                else:
-                                    cnzc[(m, comp, blk)] = 0
-                        n_mb_total += 1
-                    # rbsp_trailing_bits: stop bit then zero padding
-                    if r.u(1) != 1:
+                                sum_cac += sum(cac)
+                                sum_cac_abs += sum(
+                                    abs(v) for v in cac
+                                )
+                                n_t1 += sum(
+                                    1 for v in cac[:3]
+                                    if abs(v) == 1
+                                )
+                                cnzc[(m, comp, blk)] = len(cac)
+                            else:
+                                cnzc[(m, comp, blk)] = 0
+                    n_mb_total += 1
+                # rbsp_trailing_bits: stop bit then zero padding
+                if r.u(1) != 1:
+                    raise ValueError(
+                        f"doc {doc_id}: missing rbsp stop bit"
+                    )
+                while r.pos % 8:
+                    if r.u(1):
                         raise ValueError(
-                            f"doc {doc_id}: missing rbsp stop bit"
+                            f"doc {doc_id}: nonzero rbsp padding"
                         )
-                    while r.pos % 8:
-                        if r.u(1):
-                            raise ValueError(
-                                f"doc {doc_id}: nonzero rbsp padding"
-                            )
-                    if r.pos != 8 * len(rbsp):
-                        raise ValueError(
-                            f"doc {doc_id}: slice carries trailing bytes"
-                        )
-                    n_frames += 1
-            if sps is None or n_frames == 0:
-                raise ValueError(f"doc {doc_id}: no CAVLC frames decoded")
-            return (
-                sps["width"], sps["height"], n_frames, n_mb_total,
-                sum_dc, sum_dc_abs, sum_ac, sum_ac_abs,
-                sum_cdc, sum_cdc_abs, sum_cac, sum_cac_abs, n_t1,
-            )
-
-        cols = (
-            "doc_id", "width", "height", "n_frames", "n_mbs",
-            "sum_dc_signed", "sum_dc_abs", "sum_ac_signed",
-            "sum_ac_abs", "sum_cdc_signed", "sum_cdc_abs",
-            "sum_cac_signed", "sum_cac_abs", "n_trailing_ones",
+                if r.pos != 8 * len(rbsp):
+                    raise ValueError(
+                        f"doc {doc_id}: slice carries trailing bytes"
+                    )
+                n_frames += 1
+        if sps is None or n_frames == 0:
+            raise ValueError(f"doc {doc_id}: no CAVLC frames decoded")
+        return (
+            sps["width"], sps["height"], n_frames, n_mb_total,
+            sum_dc, sum_dc_abs, sum_ac, sum_ac_abs,
+            sum_cdc, sum_cdc_abs, sum_cac, sum_cac_abs, n_t1,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, width long, height long, n_frames long, "
-        "n_mbs long, sum_dc_signed long, sum_dc_abs long, "
-        "sum_ac_signed long, sum_ac_abs long, sum_cdc_signed long, "
-        "sum_cdc_abs long, sum_cac_signed long, sum_cac_abs long, "
-        "n_trailing_ones long",
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
-def synthesize_h264_cavlc(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a CAVLC-residual all-I_16x16 H.264
-    stream (``make_h264_cavlc_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_cavlc_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_cavlc_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_h264_ipcm(media_df: DataFrame) -> DataFrame:
+@decoder(H264_IPCM_SCHEMA)
+def decode_h264_ipcm():
     """REAL pixel-level H.264 decode for all-I_PCM streams: the NAL
     walk + SPS/PPS parses, then every IDR slice's macroblock layer —
     I_PCM macroblocks carry raw samples after a pcm_alignment, the one
@@ -3533,71 +2951,55 @@ def decode_h264_ipcm(media_df: DataFrame) -> DataFrame:
     init this decoder does not implement), and frame indices are
     cross-checked against each IDR's idr_pic_id."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            frames = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                if unit[0] & 0x80:
-                    raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                    if pps[0] != 0:
-                        raise ValueError(
-                            f"doc {doc_id}: CABAC stream (I_PCM-only "
-                            "decoder is CAVLC-mode)"
-                        )
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    idr_pic_id, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        frames = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            if unit[0] & 0x80:
+                raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+                if pps[0] != 0:
+                    raise ValueError(
+                        f"doc {doc_id}: CABAC stream (I_PCM-only "
+                        "decoder is CAVLC-mode)"
                     )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial slice in the "
-                            "single-slice I_PCM stream"
-                        )
-                    mean_luma = sum(mb_sums) // (256 * n_mbs)
-                    if idr_pic_id != len(frames):
-                        raise ValueError(
-                            f"doc {doc_id}: idr_pic_id {idr_pic_id} out of "
-                            f"order at frame {len(frames)}"
-                        )
-                    frames.append(mean_luma)
-            if sps is None or not frames:
-                raise ValueError(f"doc {doc_id}: no decodable I_PCM frames")
-            return sps["width"], sps["height"], frames
+            elif nal_type == 5:
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
+                    )
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                idr_pic_id, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial slice in the "
+                        "single-slice I_PCM stream"
+                    )
+                mean_luma = sum(mb_sums) // (256 * n_mbs)
+                if idr_pic_id != len(frames):
+                    raise ValueError(
+                        f"doc {doc_id}: idr_pic_id {idr_pic_id} out of "
+                        f"order at frame {len(frames)}"
+                    )
+                frames.append(mean_luma)
+        if sps is None or not frames:
+            raise ValueError(f"doc {doc_id}: no decodable I_PCM frames")
+        return sps["width"], sps["height"], frames
 
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in ("doc_id", "frame_idx", "width", "height", "mean_luma")
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                width, height, frames = walk(int(doc_id), bytes(b))
-                for f_idx, mean_luma in enumerate(frames):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(f_idx)
-                    out["width"].append(width)
-                    out["height"].append(height)
-                    out["mean_luma"].append(mean_luma)
-            yield pd.DataFrame(out)
+    def rows(doc_id: int, raw: bytes):
+        width, height, frames = walk(doc_id, raw)
+        return [(f_idx, width, height, luma) for f_idx, luma in enumerate(frames)]
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_IPCM_SCHEMA
-    )
+    return rows
 
 
 H264_GOP_SCHEMA = (
@@ -3674,7 +3076,8 @@ def _parse_pskip_slice(
     return frame_num, refreshed
 
 
-def decode_h264_gop(media_df: DataFrame) -> DataFrame:
+@decoder(H264_GOP_SCHEMA)
+def decode_h264_gop():
     """REAL inter-frame H.264 decode for IDR+P GOP streams: IDR
     pictures decode pixel-exact via the I_PCM path; P pictures decode
     through PER-MACROBLOCK reference state — skipped macroblocks copy
@@ -3689,187 +3092,95 @@ def decode_h264_gop(media_df: DataFrame) -> DataFrame:
     P rows' luma values exist only because the decoder carried
     reference state across NAL units."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []  # (frame_type, mean_luma, n_skipped)
-            ref_mbs = None  # per-macroblock luma sums of the reference
-            pending = None  # partially assembled multi-slice IDR
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                if unit[0] & 0x80:
-                    raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                    if pps[0] != 0:
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []  # (frame_type, mean_luma, n_skipped)
+        ref_mbs = None  # per-macroblock luma sums of the reference
+        pending = None  # partially assembled multi-slice IDR
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            if unit[0] & 0x80:
+                raise ValueError(f"doc {doc_id}: forbidden_zero_bit set")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+                if pps[0] != 0:
+                    raise ValueError(
+                        f"doc {doc_id}: CABAC stream (CAVLC-mode decoder)"
+                    )
+            elif nal_type in (1, 5):
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
+                    )
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                if nal_type == 5:
+                    _idr_pic_id, first_mb, mb_sums = _parse_ipcm_slice(
+                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                    )
+                    # multi-slice IDR assembly: slice N must start
+                    # exactly where slice N-1 stopped; the picture
+                    # emits (and becomes the reference) only when
+                    # every macroblock has arrived
+                    if first_mb == 0:
+                        pending = [None] * n_mbs
+                    elif pending is None or first_mb != sum(
+                        v is not None for v in pending
+                    ):
                         raise ValueError(
-                            f"doc {doc_id}: CABAC stream (CAVLC-mode decoder)"
+                            f"doc {doc_id}: slice starting at mb "
+                            f"{first_mb} does not continue its "
+                            "picture"
                         )
-                elif nal_type in (1, 5):
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    if nal_type == 5:
-                        _idr_pic_id, first_mb, mb_sums = _parse_ipcm_slice(
-                            doc_id, rbsp, sps["frame_num_bits"], n_mbs
-                        )
-                        # multi-slice IDR assembly: slice N must start
-                        # exactly where slice N-1 stopped; the picture
-                        # emits (and becomes the reference) only when
-                        # every macroblock has arrived
-                        if first_mb == 0:
-                            pending = [None] * n_mbs
-                        elif pending is None or first_mb != sum(
-                            v is not None for v in pending
-                        ):
-                            raise ValueError(
-                                f"doc {doc_id}: slice starting at mb "
-                                f"{first_mb} does not continue its "
-                                "picture"
-                            )
-                        for i, v in enumerate(mb_sums):
-                            pending[first_mb + i] = v
-                        if all(v is not None for v in pending):
-                            ref_mbs = pending
-                            pending = None
-                            rows.append(
-                                ("I", sum(ref_mbs) // (256 * n_mbs), 0)
-                            )
-                    else:
-                        if pending is not None:
-                            raise ValueError(
-                                f"doc {doc_id}: P slice before the IDR "
-                                "picture completed"
-                            )
-                        if ref_mbs is None:
-                            raise ValueError(
-                                f"doc {doc_id}: P slice with no reference "
-                                "picture (stream must open with an IDR)"
-                            )
-                        _frame_num, refreshed = _parse_pskip_slice(
-                            doc_id, rbsp, sps["frame_num_bits"], n_mbs
-                        )
-                        # reconstruct: skipped MBs copy the reference,
-                        # refreshed MBs take their PCM pixels — and the
-                        # picture becomes the reference for the next one
-                        ref_mbs = list(ref_mbs)
-                        for i, luma_sum in refreshed.items():
-                            ref_mbs[i] = luma_sum
+                    for i, v in enumerate(mb_sums):
+                        pending[first_mb + i] = v
+                    if all(v is not None for v in pending):
+                        ref_mbs = pending
+                        pending = None
                         rows.append(
-                            (
-                                "P",
-                                sum(ref_mbs) // (256 * n_mbs),
-                                n_mbs - len(refreshed),
-                            )
+                            ("I", sum(ref_mbs) // (256 * n_mbs), 0)
                         )
-            if pending is not None:
-                raise ValueError(
-                    f"doc {doc_id}: stream ends mid-picture (incomplete "
-                    "multi-slice IDR)"
-                )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no decodable pictures")
-            return rows
-
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "frame_idx", "frame_type", "mean_luma",
-                    "n_skipped_mbs",
-                )
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for f_idx, (ftype, luma, skipped) in enumerate(
-                    walk(int(doc_id), bytes(b))
-                ):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(f_idx)
-                    out["frame_type"].append(ftype)
-                    out["mean_luma"].append(luma)
-                    out["n_skipped_mbs"].append(skipped)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_GOP_SCHEMA
-    )
-
-
-def synthesize_h264_gop(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an IDR+P_Skip GOP H.264 stream."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_gop_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_gop_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
+                else:
+                    if pending is not None:
+                        raise ValueError(
+                            f"doc {doc_id}: P slice before the IDR "
+                            "picture completed"
+                        )
+                    if ref_mbs is None:
+                        raise ValueError(
+                            f"doc {doc_id}: P slice with no reference "
+                            "picture (stream must open with an IDR)"
+                        )
+                    _frame_num, refreshed = _parse_pskip_slice(
+                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                    )
+                    # reconstruct: skipped MBs copy the reference,
+                    # refreshed MBs take their PCM pixels — and the
+                    # picture becomes the reference for the next one
+                    ref_mbs = list(ref_mbs)
+                    for i, luma_sum in refreshed.items():
+                        ref_mbs[i] = luma_sum
+                    rows.append(
+                        (
+                            "P",
+                            sum(ref_mbs) // (256 * n_mbs),
+                            n_mbs - len(refreshed),
+                        )
+                    )
+        if pending is not None:
+            raise ValueError(
+                f"doc {doc_id}: stream ends mid-picture (incomplete "
+                "multi-slice IDR)"
             )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no decodable pictures")
+        return rows
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_h264_ipcm(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a REAL all-I_PCM H.264 stream."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_ipcm_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [make_h264_ipcm_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_h264(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 Annex-B byte stream."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [make_h264_bytes(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 def parse_jpeg_exif(
@@ -4009,53 +3320,11 @@ JPEG_EXIF_SCHEMA = (
 )
 
 
-def synthesize_jpeg_exif(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an Exif-tagged baseline JPEG
-    (``make_jpeg_exif_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_jpeg_exif_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_jpeg_exif_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_jpeg_exif(media_df: DataFrame) -> DataFrame:
+@decoder(JPEG_EXIF_SCHEMA)
+def decode_jpeg_exif():
     """Distributed Exif extraction + pixel cross-check
     (``parse_jpeg_exif``) as an Arrow kernel over binary rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "big_endian", "orientation", "iso", "exif_width",
-            "exif_height", "make_chars", "mean_gray", "thumb_mean",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_jpeg_exif(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, JPEG_EXIF_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_jpeg_exif(doc_id, raw)]
 
 
 def parse_png_ct(
@@ -4169,54 +3438,13 @@ def parse_png_ct(
     return width, height, ct, depth, sum_first, sum_alpha
 
 
-def synthesize_png_ct(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a gray/gray+alpha/RGBA PNG
-    (``make_png_ct_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_png_ct_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_png_ct_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_png_ct(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, width long, height long, color_type long, "
+    "bit_depth long, sum_first long, sum_alpha long"
+)
+def decode_png_ct():
     """Distributed color-type PNG decode (``parse_png_ct``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "width", "height", "color_type", "bit_depth",
-            "sum_first", "sum_alpha",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_png_ct(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, width long, height long, color_type long, "
-        "bit_depth long, sum_first long, sum_alpha long",
-    )
+    return lambda doc_id, raw: [parse_png_ct(doc_id, raw)]
 
 
 VP8L_CL_ORDER = (
@@ -4820,84 +4048,14 @@ def parse_webp_vp8l(
     return width, height, n_lit, n_back, sum_g, sum_r, sum_b
 
 
-def synthesize_webp(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a lossless WebP
-    (``make_webp_vp8l_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_webp_vp8l_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_webp_vp8l_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_webp_transform(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a lossless WebP exercising the
-    transform surface (``make_webp_vp8l_transform_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_webp_vp8l_transform_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_webp_vp8l_transform_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_webp(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, width long, height long, n_literals long, "
+    "n_backref long, sum_green long, sum_red long, sum_blue long"
+)
+def decode_webp():
     """Distributed VP8L decode (``parse_webp_vp8l``) as an Arrow
     kernel over binary rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "width", "height", "n_literals", "n_backref",
-            "sum_green", "sum_red", "sum_blue",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (
-                    int(doc_id), *parse_webp_vp8l(int(doc_id), bytes(b))
-                )
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, width long, height long, n_literals long, "
-        "n_backref long, sum_green long, sum_red long, sum_blue long",
-    )
+    return lambda doc_id, raw: [parse_webp_vp8l(doc_id, raw)]
 
 
 def parse_aac_adts(
@@ -4960,53 +4118,11 @@ AAC_SCHEMA = (
 )
 
 
-def synthesize_aac_adts(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an ADTS AAC stream
-    (``make_aac_adts_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_aac_adts_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_aac_adts_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_aac_adts(media_df: DataFrame) -> DataFrame:
+@decoder(AAC_SCHEMA)
+def decode_aac_adts():
     """Distributed ADTS frame walk (``parse_aac_adts``) as an Arrow
     kernel over binary payload rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "sum_profile", "sum_channels",
-            "total_raw_blocks", "payload_bytes", "sum_sample_rate",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_aac_adts(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, AAC_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_aac_adts(doc_id, raw)]
 
 
 def parse_mp4(
@@ -5800,54 +4916,11 @@ HEIF_SCHEMA = (
 )
 
 
-def synthesize_heif(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a HEIF/AVIF still image
-    (``make_heif_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_heif_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_heif_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_heif(media_df: DataFrame) -> DataFrame:
+@decoder(HEIF_SCHEMA)
+def decode_heif():
     """Distributed HEIF/AVIF walk (``parse_heif``) as an Arrow kernel
     over binary rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "is_avif", "n_items", "n_image_items",
-            "primary_id", "primary_w", "primary_h", "rot",
-            "payload_sum", "n_extents", "n_props",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_heif(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, HEIF_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_heif(doc_id, raw)]
 
 
 MP4_SCHEMA = (
@@ -5857,78 +4930,11 @@ MP4_SCHEMA = (
 )
 
 
-def synthesize_mp4(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an ISO-BMFF MP4 (``make_mp4_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp4_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_mp4_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_mp4_fflags(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the fragmented MP4 with tfhd/trun
-    flag variants and a size-0 final mdat (``make_mp4_frag_flags``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_mp4_frag_flags
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_mp4_frag_flags(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_mp4(media_df: DataFrame) -> DataFrame:
+@decoder(MP4_SCHEMA)
+def decode_mp4():
     """Distributed ISO-BMFF box walk (``parse_mp4``) as an Arrow kernel
     over binary payload rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_boxes", "n_tracks", "n_video_tracks",
-            "total_samples", "sum_sample_bytes", "duration_ms",
-            "max_track_duration", "mdat_bytes",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_mp4(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, MP4_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_mp4(doc_id, raw)]
 
 
 def parse_webm(
@@ -6206,53 +5212,11 @@ WEBM_SCHEMA = (
 )
 
 
-def synthesize_webm(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a WebM stream (``make_webm_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_webm_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_webm_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_webm(media_df: DataFrame) -> DataFrame:
+@decoder(WEBM_SCHEMA)
+def decode_webm():
     """Distributed WebM/EBML container walk (``parse_webm``) as an
     Arrow kernel over binary payload rows."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_tracks", "n_video_tracks", "n_clusters",
-            "n_blocks", "n_frames", "n_keyframes", "sum_abs_ts",
-            "payload_bytes", "duration_ms",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_webm(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, WEBM_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_webm(doc_id, raw)]
 
 
 def parse_ogg_opus(
@@ -6429,55 +5393,12 @@ OGG_OPUS_SCHEMA = (
 )
 
 
-def synthesize_ogg_opus(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an Ogg-encapsulated Opus stream
-    (``make_ogg_opus_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_ogg_opus_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_ogg_opus_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_ogg_opus(media_df: DataFrame) -> DataFrame:
+@decoder(OGG_OPUS_SCHEMA)
+def decode_ogg_opus():
     """Distributed Ogg/Opus container walk (``parse_ogg_opus``) as an
     Arrow kernel over binary payload rows — per-row decode, no
     cross-row state."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_pages", "n_audio_packets", "channels",
-            "preskip", "total_samples", "total_frames", "sum_config",
-            "n_stereo", "n_spanning",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_ogg_opus(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, OGG_OPUS_SCHEMA
-    )
+    return lambda doc_id, raw: [parse_ogg_opus(doc_id, raw)]
 
 
 PNG_ADAM7_SCHEMA = (
@@ -6492,7 +5413,8 @@ PNG_ADAM7_SCHEMA = (
 _ADAM7_PROBES = ((0, 0), (4, 0), (0, 4), (2, 0), (0, 2), (1, 0), (0, 1))
 
 
-def decode_png_adam7(media_df: DataFrame) -> DataFrame:
+@decoder(PNG_ADAM7_SCHEMA)
+def decode_png_adam7():
     """REAL Adam7-interlaced PNG decode (PNG spec 8.2 / interlace
     method 1): chunk walk with CRC verification, zlib inflate of the
     single IDAT datastream, then SEVEN sub-image reconstructions — each
@@ -6505,146 +5427,104 @@ def decode_png_adam7(media_df: DataFrame) -> DataFrame:
     whole-image mean survives.  Non-interlaced streams take the
     ``decode_png_real`` path; here interlace must be 1."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    from .synth import PNG_ADAM7, _paeth
 
-        from .synth import PNG_ADAM7, _paeth
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError(f"doc {doc_id}: not a PNG payload")
-            pos, ihdr, idat = 8, None, b""
-            while pos < len(raw):
-                (length,) = struct.unpack_from(">I", raw, pos)
-                typ = raw[pos + 4 : pos + 8]
-                data = raw[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
-                if zlib.crc32(typ + data) != crc:
-                    raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
-                if typ == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", data)
-                elif typ == b"IDAT":
-                    idat += data
-                elif typ == b"IEND":
-                    break
-                pos += 12 + length
-            if ihdr is None:
-                raise ValueError(f"doc {doc_id}: missing IHDR")
-            width, height, depth, ctype, _comp, _filt, interlace = ihdr
-            if depth != 8 or ctype != 2:
-                raise ValueError(f"doc {doc_id}: only 8-bit RGB supported")
-            if interlace != 1:
-                raise ValueError(
-                    f"doc {doc_id}: interlace method {interlace} is not "
-                    "Adam7 (non-interlaced streams take decode_png_real)"
-                )
-            bpp = 3
-            plain = zlib.decompress(idat)
-            img = [bytearray(width * bpp) for _ in range(height)]
-            off = 0
-            n_passes = 0
-            for x0, dx, y0, dy in PNG_ADAM7:
-                if x0 >= width or y0 >= height:
-                    continue
-                n_passes += 1
-                xs = range(x0, width, dx)
-                stride = len(xs) * bpp
-                prev = bytearray(stride)
-                for y in range(y0, height, dy):
-                    if off >= len(plain):
-                        raise ValueError(
-                            f"doc {doc_id}: pass data ends mid-image"
-                        )
-                    f = plain[off]
-                    line = bytearray(plain[off + 1 : off + 1 + stride])
-                    if len(line) != stride:
-                        raise ValueError(
-                            f"doc {doc_id}: truncated pass scanline"
-                        )
-                    off += 1 + stride
-                    if f == 1:
-                        for i in range(bpp, stride):
-                            line[i] = (line[i] + line[i - bpp]) & 0xFF
-                    elif f == 2:
-                        for i in range(stride):
-                            line[i] = (line[i] + prev[i]) & 0xFF
-                    elif f == 3:
-                        for i in range(stride):
-                            left = line[i - bpp] if i >= bpp else 0
-                            line[i] = (line[i] + (left + prev[i]) // 2) & 0xFF
-                    elif f == 4:
-                        for i in range(stride):
-                            left = line[i - bpp] if i >= bpp else 0
-                            up_left = prev[i - bpp] if i >= bpp else 0
-                            line[i] = (
-                                line[i] + _paeth(left, prev[i], up_left)
-                            ) & 0xFF
-                    elif f != 0:
-                        raise ValueError(f"doc {doc_id}: bad filter {f}")
-                    for i, x in enumerate(xs):
-                        img[y][x * bpp : (x + 1) * bpp] = line[
-                            i * bpp : (i + 1) * bpp
-                        ]
-                    prev = line
-            if off != len(plain):
-                raise ValueError(
-                    f"doc {doc_id}: {len(plain) - off} bytes after last pass"
-                )
-            tr = tg = tb = 0
-            for row in img:
-                tr += sum(row[0::3])
-                tg += sum(row[1::3])
-                tb += sum(row[2::3])
-            n_px = width * height
-            probes = [img[y][x * bpp] for x, y in _ADAM7_PROBES]
-            return (
-                width, height, n_passes,
-                tr // n_px, tg // n_px, tb // n_px, *probes,
+    def walk(doc_id: int, raw: bytes):
+        if raw[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError(f"doc {doc_id}: not a PNG payload")
+        pos, ihdr, idat = 8, None, b""
+        while pos < len(raw):
+            (length,) = struct.unpack_from(">I", raw, pos)
+            typ = raw[pos + 4 : pos + 8]
+            data = raw[pos + 8 : pos + 8 + length]
+            (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
+            if zlib.crc32(typ + data) != crc:
+                raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
+            if typ == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif typ == b"IDAT":
+                idat += data
+            elif typ == b"IEND":
+                break
+            pos += 12 + length
+        if ihdr is None:
+            raise ValueError(f"doc {doc_id}: missing IHDR")
+        width, height, depth, ctype, _comp, _filt, interlace = ihdr
+        if depth != 8 or ctype != 2:
+            raise ValueError(f"doc {doc_id}: only 8-bit RGB supported")
+        if interlace != 1:
+            raise ValueError(
+                f"doc {doc_id}: interlace method {interlace} is not "
+                "Adam7 (non-interlaced streams take decode_png_real)"
             )
-
-        cols = (
-            "doc_id", "width", "height", "n_passes", "mean_r", "mean_g",
-            "mean_b", "probe_p1", "probe_p2", "probe_p3", "probe_p4",
-            "probe_p5", "probe_p6", "probe_p7",
+        bpp = 3
+        plain = zlib.decompress(idat)
+        img = [bytearray(width * bpp) for _ in range(height)]
+        off = 0
+        n_passes = 0
+        for x0, dx, y0, dy in PNG_ADAM7:
+            if x0 >= width or y0 >= height:
+                continue
+            n_passes += 1
+            xs = range(x0, width, dx)
+            stride = len(xs) * bpp
+            prev = bytearray(stride)
+            for y in range(y0, height, dy):
+                if off >= len(plain):
+                    raise ValueError(
+                        f"doc {doc_id}: pass data ends mid-image"
+                    )
+                f = plain[off]
+                line = bytearray(plain[off + 1 : off + 1 + stride])
+                if len(line) != stride:
+                    raise ValueError(
+                        f"doc {doc_id}: truncated pass scanline"
+                    )
+                off += 1 + stride
+                if f == 1:
+                    for i in range(bpp, stride):
+                        line[i] = (line[i] + line[i - bpp]) & 0xFF
+                elif f == 2:
+                    for i in range(stride):
+                        line[i] = (line[i] + prev[i]) & 0xFF
+                elif f == 3:
+                    for i in range(stride):
+                        left = line[i - bpp] if i >= bpp else 0
+                        line[i] = (line[i] + (left + prev[i]) // 2) & 0xFF
+                elif f == 4:
+                    for i in range(stride):
+                        left = line[i - bpp] if i >= bpp else 0
+                        up_left = prev[i - bpp] if i >= bpp else 0
+                        line[i] = (
+                            line[i] + _paeth(left, prev[i], up_left)
+                        ) & 0xFF
+                elif f != 0:
+                    raise ValueError(f"doc {doc_id}: bad filter {f}")
+                for i, x in enumerate(xs):
+                    img[y][x * bpp : (x + 1) * bpp] = line[
+                        i * bpp : (i + 1) * bpp
+                    ]
+                prev = line
+        if off != len(plain):
+            raise ValueError(
+                f"doc {doc_id}: {len(plain) - off} bytes after last pass"
+            )
+        tr = tg = tb = 0
+        for row in img:
+            tr += sum(row[0::3])
+            tg += sum(row[1::3])
+            tb += sum(row[2::3])
+        n_px = width * height
+        probes = [img[y][x * bpp] for x, y in _ADAM7_PROBES]
+        return (
+            width, height, n_passes,
+            tr // n_px, tg // n_px, tb // n_px, *probes,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, PNG_ADAM7_SCHEMA
-    )
-
-
-def synthesize_png_adam7(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an Adam7-interlaced gradient PNG."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_png_adam7_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_png_adam7_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 GIF_ANIM_SCHEMA = (
@@ -6653,7 +5533,8 @@ GIF_ANIM_SCHEMA = (
 )
 
 
-def decode_gif_anim(media_df: DataFrame) -> DataFrame:
+@decoder(GIF_ANIM_SCHEMA)
+def decode_gif_anim():
     """REAL animated-GIF decode with frame COMPOSITION: GIF89a block
     walk (application extensions skipped by sub-block structure, one
     Graphic Control Extension per frame), every frame's sub-rectangle
@@ -6671,229 +5552,163 @@ def decode_gif_anim(media_df: DataFrame) -> DataFrame:
     compose correctly); remaining boundary: none — the GIF89a frame
     lifecycle is fully implemented."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:6] not in (b"GIF89a", b"GIF87a"):
-                raise ValueError(f"doc {doc_id}: not a GIF payload")
-            width, height = struct.unpack_from("<HH", raw, 6)
-            flags = raw[10]
-            if not flags & 0x80:
-                raise ValueError(f"doc {doc_id}: no global color table")
-            gct_size = 2 << (flags & 0x7)
-            pos = 13
-            palette = [
-                tuple(raw[pos + 3 * i : pos + 3 * i + 3])
-                for i in range(gct_size)
-            ]
-            pos += 3 * gct_size
-            bg_index = raw[11]
-            if bg_index >= gct_size:
-                raise ValueError(
-                    f"doc {doc_id}: background index {bg_index} outside "
-                    "the global color table"
-                )
-            # the canvas stores RGB tuples, not palette indices: with
-            # per-frame LOCAL color tables an index has no stable
-            # meaning across frames
-            canvas = [[palette[0]] * width for _ in range(height)]
-            frames = []  # (patch_w, patch_h, mean_r, mean_g, mean_b)
-            pending_disposal = 0
-            transparent_idx = None
-            # disposal of the PREVIOUSLY drawn frame, applied when the
-            # next image arrives: (method, rect, saved-region rows)
-            last: tuple | None = None
-            while pos < len(raw):
-                block = raw[pos]
-                if block == 0x3B:  # trailer
-                    break
-                if block == 0x21:  # extension
-                    label = raw[pos + 1]
-                    pos += 2
-                    if label == 0xF9:  # Graphic Control Extension
-                        size = raw[pos]
-                        if size != 4:
-                            raise ValueError(
-                                f"doc {doc_id}: bad GCE block size {size}"
-                            )
-                        packed = raw[pos + 1]
-                        pending_disposal = (packed >> 2) & 0x7
-                        if pending_disposal > 3:
-                            raise ValueError(
-                                f"doc {doc_id}: reserved disposal method "
-                                f"{pending_disposal}"
-                            )
-                        transparent_idx = (
-                            raw[pos + 4] if packed & 0x1 else None
-                        )
-                        pos += 1 + size
-                    # skip remaining sub-blocks (any extension type)
-                    while raw[pos] != 0:
-                        pos += 1 + raw[pos]
-                    pos += 1
-                elif block == 0x2C:  # image descriptor
-                    left, top, w, h = struct.unpack_from("<HHHH", raw, pos + 1)
-                    iflags = raw[pos + 9]
-                    frame_palette = palette
-                    lct_len = 0
-                    if iflags & 0x80:  # local color table overrides GCT
-                        n_local = 2 << (iflags & 0x7)
-                        at = pos + 10
-                        frame_palette = [
-                            tuple(raw[at + 3 * i : at + 3 * i + 3])
-                            for i in range(n_local)
-                        ]
-                        lct_len = 3 * n_local
-                    # GIF interlace: frame data rows arrive in the
-                    # four-pass order (rows 0,8,..; 4,12,..; 2,6,..;
-                    # 1,3,..) and must be PLACED back — a decoder that
-                    # ignores the flag scrambles every later composite
-                    if iflags & 0x40:
-                        row_map = [
-                            y
-                            for s0, st in ((0, 8), (4, 8), (2, 4), (1, 2))
-                            for y in range(s0, h, st)
-                        ]
-                    else:
-                        row_map = list(range(h))
-                    if left + w > width or top + h > height:
+    def walk(doc_id: int, raw: bytes):
+        if raw[:6] not in (b"GIF89a", b"GIF87a"):
+            raise ValueError(f"doc {doc_id}: not a GIF payload")
+        width, height = struct.unpack_from("<HH", raw, 6)
+        flags = raw[10]
+        if not flags & 0x80:
+            raise ValueError(f"doc {doc_id}: no global color table")
+        gct_size = 2 << (flags & 0x7)
+        pos = 13
+        palette = [
+            tuple(raw[pos + 3 * i : pos + 3 * i + 3])
+            for i in range(gct_size)
+        ]
+        pos += 3 * gct_size
+        bg_index = raw[11]
+        if bg_index >= gct_size:
+            raise ValueError(
+                f"doc {doc_id}: background index {bg_index} outside "
+                "the global color table"
+            )
+        # the canvas stores RGB tuples, not palette indices: with
+        # per-frame LOCAL color tables an index has no stable
+        # meaning across frames
+        canvas = [[palette[0]] * width for _ in range(height)]
+        frames = []  # (patch_w, patch_h, mean_r, mean_g, mean_b)
+        pending_disposal = 0
+        transparent_idx = None
+        # disposal of the PREVIOUSLY drawn frame, applied when the
+        # next image arrives: (method, rect, saved-region rows)
+        last: tuple | None = None
+        while pos < len(raw):
+            block = raw[pos]
+            if block == 0x3B:  # trailer
+                break
+            if block == 0x21:  # extension
+                label = raw[pos + 1]
+                pos += 2
+                if label == 0xF9:  # Graphic Control Extension
+                    size = raw[pos]
+                    if size != 4:
                         raise ValueError(
-                            f"doc {doc_id}: frame rect outside logical screen"
+                            f"doc {doc_id}: bad GCE block size {size}"
                         )
-                    # apply the previous frame's disposal before this
-                    # one draws (GIF89a 23.c.viii): 0/1 leave the
-                    # canvas, 2 restores its rect to the background
-                    # index, 3 restores the pixels it overdrew
-                    if last is not None:
-                        d, (l0, t0, w0, h0), saved = last
-                        if d == 2:
-                            for j in range(h0):
-                                canvas[t0 + j][l0 : l0 + w0] = (
-                                    [palette[bg_index]] * w0
-                                )
-                        elif d == 3:
-                            for j in range(h0):
-                                canvas[t0 + j][l0 : l0 + w0] = saved[j]
-                    saved_region = (
-                        [list(canvas[top + j][left : left + w])
-                         for j in range(h)]
-                        if pending_disposal == 3
-                        else None
-                    )
-                    pos += 10 + lct_len
-                    mcs = raw[pos]
-                    pos += 1
-                    lzw = bytearray()
-                    while raw[pos] != 0:
-                        n = raw[pos]
-                        lzw += raw[pos + 1 : pos + 1 + n]
-                        pos += 1 + n
-                    pos += 1
-                    idx = gif_lzw_decode(bytes(lzw), mcs, w * h, doc_id)
-                    if len(idx) != w * h:
+                    packed = raw[pos + 1]
+                    pending_disposal = (packed >> 2) & 0x7
+                    if pending_disposal > 3:
                         raise ValueError(
-                            f"doc {doc_id}: frame decodes {len(idx)} of "
-                            f"{w * h} pixels"
+                            f"doc {doc_id}: reserved disposal method "
+                            f"{pending_disposal}"
                         )
-                    for j in range(h):
-                        row = canvas[top + row_map[j]]
-                        for i in range(w):
-                            v = idx[j * w + i]
-                            if v != transparent_idx:
-                                if v >= len(frame_palette):
-                                    raise ValueError(
-                                        f"doc {doc_id}: pixel index {v} "
-                                        "outside the frame's color table"
-                                    )
-                                row[left + i] = frame_palette[v]
-                    last = (
-                        pending_disposal, (left, top, w, h), saved_region
+                    transparent_idx = (
+                        raw[pos + 4] if packed & 0x1 else None
                     )
-                    pending_disposal = 0
-                    transparent_idx = None
-                    tr = tg = tb = 0
-                    for row in canvas:
-                        for r, g, b in row:
-                            tr += r
-                            tg += g
-                            tb += b
-                    n_px = width * height
-                    frames.append((w, h, tr // n_px, tg // n_px, tb // n_px))
+                    pos += 1 + size
+                # skip remaining sub-blocks (any extension type)
+                while raw[pos] != 0:
+                    pos += 1 + raw[pos]
+                pos += 1
+            elif block == 0x2C:  # image descriptor
+                left, top, w, h = struct.unpack_from("<HHHH", raw, pos + 1)
+                iflags = raw[pos + 9]
+                frame_palette = palette
+                lct_len = 0
+                if iflags & 0x80:  # local color table overrides GCT
+                    n_local = 2 << (iflags & 0x7)
+                    at = pos + 10
+                    frame_palette = [
+                        tuple(raw[at + 3 * i : at + 3 * i + 3])
+                        for i in range(n_local)
+                    ]
+                    lct_len = 3 * n_local
+                # GIF interlace: frame data rows arrive in the
+                # four-pass order (rows 0,8,..; 4,12,..; 2,6,..;
+                # 1,3,..) and must be PLACED back — a decoder that
+                # ignores the flag scrambles every later composite
+                if iflags & 0x40:
+                    row_map = [
+                        y
+                        for s0, st in ((0, 8), (4, 8), (2, 4), (1, 2))
+                        for y in range(s0, h, st)
+                    ]
                 else:
+                    row_map = list(range(h))
+                if left + w > width or top + h > height:
                     raise ValueError(
-                        f"doc {doc_id}: unknown block 0x{block:02x}"
+                        f"doc {doc_id}: frame rect outside logical screen"
                     )
-            if not frames:
-                raise ValueError(f"doc {doc_id}: no frames")
-            return frames
+                # apply the previous frame's disposal before this
+                # one draws (GIF89a 23.c.viii): 0/1 leave the
+                # canvas, 2 restores its rect to the background
+                # index, 3 restores the pixels it overdrew
+                if last is not None:
+                    d, (l0, t0, w0, h0), saved = last
+                    if d == 2:
+                        for j in range(h0):
+                            canvas[t0 + j][l0 : l0 + w0] = (
+                                [palette[bg_index]] * w0
+                            )
+                    elif d == 3:
+                        for j in range(h0):
+                            canvas[t0 + j][l0 : l0 + w0] = saved[j]
+                saved_region = (
+                    [list(canvas[top + j][left : left + w])
+                     for j in range(h)]
+                    if pending_disposal == 3
+                    else None
+                )
+                pos += 10 + lct_len
+                mcs = raw[pos]
+                pos += 1
+                lzw = bytearray()
+                while raw[pos] != 0:
+                    n = raw[pos]
+                    lzw += raw[pos + 1 : pos + 1 + n]
+                    pos += 1 + n
+                pos += 1
+                idx = gif_lzw_decode(bytes(lzw), mcs, w * h, doc_id)
+                if len(idx) != w * h:
+                    raise ValueError(
+                        f"doc {doc_id}: frame decodes {len(idx)} of "
+                        f"{w * h} pixels"
+                    )
+                for j in range(h):
+                    row = canvas[top + row_map[j]]
+                    for i in range(w):
+                        v = idx[j * w + i]
+                        if v != transparent_idx:
+                            if v >= len(frame_palette):
+                                raise ValueError(
+                                    f"doc {doc_id}: pixel index {v} "
+                                    "outside the frame's color table"
+                                )
+                            row[left + i] = frame_palette[v]
+                last = (
+                    pending_disposal, (left, top, w, h), saved_region
+                )
+                pending_disposal = 0
+                transparent_idx = None
+                tr = tg = tb = 0
+                for row in canvas:
+                    for r, g, b in row:
+                        tr += r
+                        tg += g
+                        tb += b
+                n_px = width * height
+                frames.append((w, h, tr // n_px, tg // n_px, tb // n_px))
+            else:
+                raise ValueError(
+                    f"doc {doc_id}: unknown block 0x{block:02x}"
+                )
+        if not frames:
+            raise ValueError(f"doc {doc_id}: no frames")
+        return frames
 
-        cols = (
-            "doc_id", "frame_idx", "patch_w", "patch_h",
-            "mean_r", "mean_g", "mean_b",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for f_idx, vals in enumerate(walk(int(doc_id), bytes(b))):
-                    for col, v in zip(cols, (int(doc_id), f_idx, *vals)):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, GIF_ANIM_SCHEMA
-    )
-
-
-def synthesize_gif_anim(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an animated (multi-frame) GIF."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_gif_anim_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_gif_anim_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_gif_disposal(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a disposal-2/3 + transparency GIF."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_gif_disposal_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_gif_disposal_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 TIFF_SCHEMA = (
@@ -6990,7 +5805,8 @@ def _packbits_decode(doc_id: int, buf: bytes, expected: int) -> bytes:
     return bytes(out)
 
 
-def decode_tiff_real(media_df: DataFrame) -> DataFrame:
+@decoder(TIFF_SCHEMA)
+def decode_tiff_real():
     """REAL baseline TIFF 6.0 decode in pure stdlib: byte-order
     dispatch from the II/MM magic (both orders live in the corpus),
     the 42 check, IFD entry walk with SHORT-in-slot vs offset-stored
@@ -7004,176 +5820,135 @@ def decode_tiff_real(media_df: DataFrame) -> DataFrame:
     compressions, tiled, paletted, or non-8-bit TIFFs raise at
     declared boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:2] == b"II":
-                e, be = "<", False
-            elif raw[:2] == b"MM":
-                e, be = ">", True
+    def walk(doc_id: int, raw: bytes):
+        if raw[:2] == b"II":
+            e, be = "<", False
+        elif raw[:2] == b"MM":
+            e, be = ">", True
+        else:
+            raise ValueError(f"doc {doc_id}: not a TIFF byte-order mark")
+        if struct.unpack_from(e + "H", raw, 2)[0] != 42:
+            raise ValueError(f"doc {doc_id}: TIFF magic 42 missing")
+        (ifd_off,) = struct.unpack_from(e + "I", raw, 4)
+        (n_entries,) = struct.unpack_from(e + "H", raw, ifd_off)
+        tags: dict[int, tuple[int, int, int]] = {}
+        for i in range(n_entries):
+            at = ifd_off + 2 + 12 * i
+            tag, typ, count = struct.unpack_from(e + "HHI", raw, at)
+            if typ == 3 and count == 1:
+                (value,) = struct.unpack_from(e + "H", raw, at + 8)
             else:
-                raise ValueError(f"doc {doc_id}: not a TIFF byte-order mark")
-            if struct.unpack_from(e + "H", raw, 2)[0] != 42:
-                raise ValueError(f"doc {doc_id}: TIFF magic 42 missing")
-            (ifd_off,) = struct.unpack_from(e + "I", raw, 4)
-            (n_entries,) = struct.unpack_from(e + "H", raw, ifd_off)
-            tags: dict[int, tuple[int, int, int]] = {}
-            for i in range(n_entries):
-                at = ifd_off + 2 + 12 * i
-                tag, typ, count = struct.unpack_from(e + "HHI", raw, at)
-                if typ == 3 and count == 1:
-                    (value,) = struct.unpack_from(e + "H", raw, at + 8)
-                else:
-                    (value,) = struct.unpack_from(e + "I", raw, at + 8)
-                tags[tag] = (typ, count, value)
+                (value,) = struct.unpack_from(e + "I", raw, at + 8)
+            tags[tag] = (typ, count, value)
 
-            def arr(tag: int) -> list[int]:
-                typ, count, value = tags[tag]
-                width = 2 if typ == 3 else 4
-                if count * width <= 4:
-                    return [value]
-                fmt = "H" if typ == 3 else "I"
-                return list(
-                    struct.unpack_from(e + fmt * count, raw, value)
+        def arr(tag: int) -> list[int]:
+            typ, count, value = tags[tag]
+            width = 2 if typ == 3 else 4
+            if count * width <= 4:
+                return [value]
+            fmt = "H" if typ == 3 else "I"
+            return list(
+                struct.unpack_from(e + fmt * count, raw, value)
+            )
+
+        for required in (256, 257, 258, 259, 262, 273, 277, 278, 279):
+            if required not in tags:
+                raise ValueError(
+                    f"doc {doc_id}: missing required TIFF tag {required}"
                 )
+        width = tags[256][2]
+        height = tags[257][2]
+        if arr(258) != [8, 8, 8] or tags[277][2] != 3:
+            raise ValueError(
+                f"doc {doc_id}: only 8-bit 3-sample RGB supported"
+            )
+        compression = tags[259][2]
+        if compression not in (1, 5, 8, 32773):
+            raise NotImplementedError(
+                f"compressed TIFF compression {compression} not "
+                "implemented (baseline, LZW, Adobe deflate, and "
+                "PackBits only)"
+            )
+        predictor = tags[317][2] if 317 in tags else 1
+        if predictor not in (1, 2):
+            raise NotImplementedError(
+                f"TIFF predictor {predictor} not implemented "
+                "(none and horizontal differencing only)"
+            )
+        if predictor == 2 and compression == 1:
+            raise ValueError(
+                f"doc {doc_id}: Predictor 2 on uncompressed strips "
+                "is not a meaningful encoding"
+            )
+        if tags[262][2] != 2:
+            raise ValueError(f"doc {doc_id}: non-RGB photometric")
+        offsets = arr(273)
+        counts = arr(279)
+        if len(offsets) != len(counts):
+            raise ValueError(
+                f"doc {doc_id}: StripOffsets/ByteCounts length mismatch"
+            )
+        rows_per_strip = tags[278][2]
+        data = bytearray()
+        for s, (o, c) in enumerate(zip(offsets, counts)):
+            if o + c > len(raw):
+                raise ValueError(f"doc {doc_id}: strip beyond EOF")
+            strip = raw[o : o + c]
+            rows = min(rows_per_strip, height - s * rows_per_strip)
+            if compression == 32773:
+                strip = _packbits_decode(
+                    doc_id, strip, rows * width * 3
+                )
+            elif compression == 5:
+                strip = _tiff_lzw_decode(
+                    doc_id, strip, rows * width * 3
+                )
+            elif compression == 8:
+                # Adobe deflate (TIFF TN2): one zlib stream per
+                # strip
+                import zlib
 
-            for required in (256, 257, 258, 259, 262, 273, 277, 278, 279):
-                if required not in tags:
+                try:
+                    strip = zlib.decompress(strip)
+                except zlib.error as exc:
                     raise ValueError(
-                        f"doc {doc_id}: missing required TIFF tag {required}"
+                        f"doc {doc_id}: bad deflate strip: {exc}"
+                    ) from None
+                if len(strip) != rows * width * 3:
+                    raise ValueError(
+                        f"doc {doc_id}: deflate strip carries "
+                        f"{len(strip)} bytes for {rows} rows"
                     )
-            width = tags[256][2]
-            height = tags[257][2]
-            if arr(258) != [8, 8, 8] or tags[277][2] != 3:
-                raise ValueError(
-                    f"doc {doc_id}: only 8-bit 3-sample RGB supported"
-                )
-            compression = tags[259][2]
-            if compression not in (1, 5, 8, 32773):
-                raise NotImplementedError(
-                    f"compressed TIFF compression {compression} not "
-                    "implemented (baseline, LZW, Adobe deflate, and "
-                    "PackBits only)"
-                )
-            predictor = tags[317][2] if 317 in tags else 1
-            if predictor not in (1, 2):
-                raise NotImplementedError(
-                    f"TIFF predictor {predictor} not implemented "
-                    "(none and horizontal differencing only)"
-                )
-            if predictor == 2 and compression == 1:
-                raise ValueError(
-                    f"doc {doc_id}: Predictor 2 on uncompressed strips "
-                    "is not a meaningful encoding"
-                )
-            if tags[262][2] != 2:
-                raise ValueError(f"doc {doc_id}: non-RGB photometric")
-            offsets = arr(273)
-            counts = arr(279)
-            if len(offsets) != len(counts):
-                raise ValueError(
-                    f"doc {doc_id}: StripOffsets/ByteCounts length mismatch"
-                )
-            rows_per_strip = tags[278][2]
-            data = bytearray()
-            for s, (o, c) in enumerate(zip(offsets, counts)):
-                if o + c > len(raw):
-                    raise ValueError(f"doc {doc_id}: strip beyond EOF")
-                strip = raw[o : o + c]
-                rows = min(rows_per_strip, height - s * rows_per_strip)
-                if compression == 32773:
-                    strip = _packbits_decode(
-                        doc_id, strip, rows * width * 3
-                    )
-                elif compression == 5:
-                    strip = _tiff_lzw_decode(
-                        doc_id, strip, rows * width * 3
-                    )
-                elif compression == 8:
-                    # Adobe deflate (TIFF TN2): one zlib stream per
-                    # strip
-                    import zlib
-
-                    try:
-                        strip = zlib.decompress(strip)
-                    except zlib.error as exc:
-                        raise ValueError(
-                            f"doc {doc_id}: bad deflate strip: {exc}"
-                        ) from None
-                    if len(strip) != rows * width * 3:
-                        raise ValueError(
-                            f"doc {doc_id}: deflate strip carries "
-                            f"{len(strip)} bytes for {rows} rows"
-                        )
-                if predictor == 2:
-                    # undo horizontal differencing per row: cumulative
-                    # sum mod 256 at the sample stride
-                    und = bytearray(strip)
-                    stride = width * 3
-                    for r_ in range(rows):
-                        base = r_ * stride
-                        for x in range(3, stride):
-                            und[base + x] = (
-                                und[base + x] + und[base + x - 3]
-                            ) & 0xFF
-                    strip = bytes(und)
-                data += strip
-            if len(data) != width * height * 3:
-                raise ValueError(
-                    f"doc {doc_id}: strips carry {len(data)} bytes for a "
-                    f"{width}x{height} RGB image"
-                )
-            tr = sum(data[0::3])
-            tg = sum(data[1::3])
-            tb = sum(data[2::3])
-            n_px = width * height
-            return (
-                width, height, be, len(offsets),
-                tr // n_px, tg // n_px, tb // n_px, data[-3],
+            if predictor == 2:
+                # undo horizontal differencing per row: cumulative
+                # sum mod 256 at the sample stride
+                und = bytearray(strip)
+                stride = width * 3
+                for r_ in range(rows):
+                    base = r_ * stride
+                    for x in range(3, stride):
+                        und[base + x] = (
+                            und[base + x] + und[base + x - 3]
+                        ) & 0xFF
+                strip = bytes(und)
+            data += strip
+        if len(data) != width * height * 3:
+            raise ValueError(
+                f"doc {doc_id}: strips carry {len(data)} bytes for a "
+                f"{width}x{height} RGB image"
             )
-
-        cols = (
-            "doc_id", "width", "height", "big_endian", "n_strips",
-            "mean_r", "mean_g", "mean_b", "probe_last_r",
+        tr = sum(data[0::3])
+        tg = sum(data[1::3])
+        tb = sum(data[2::3])
+        n_px = width * height
+        return (
+            width, height, be, len(offsets),
+            tr // n_px, tg // n_px, tb // n_px, data[-3],
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, TIFF_SCHEMA
-    )
-
-
-def synthesize_tiff(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a baseline TIFF (mixed byte order)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_tiff_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_tiff_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 FLAC_SCHEMA = (
@@ -7316,7 +6091,8 @@ _FLAC_SAMPLE_RATES = {
 }
 
 
-def decode_flac_real(media_df: DataFrame) -> DataFrame:
+@decoder(FLAC_SCHEMA)
+def decode_flac_real():
     """REAL FLAC decode across all four subframe types: magic and
     STREAMINFO parse (20-bit rate, 36-bit total-sample packing), frame
     walk with 14-bit sync, code-table blocksize/rate/bps resolution,
@@ -7337,201 +6113,159 @@ def decode_flac_real(media_df: DataFrame) -> DataFrame:
     (§9.2.2) via the shared subframe reader.  Stereo streams take
     ``decode_flac_stereo`` (all four channel assignments)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-        import struct
+    import hashlib
+    import struct
 
-        import pandas as pd
+    from .synth import flac_crc8, flac_crc16
 
-        from .synth import flac_crc8, flac_crc16
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:4] != b"fLaC":
-                raise ValueError(f"doc {doc_id}: not a FLAC stream")
-            pos, streaminfo = 4, None
-            while True:
-                head = raw[pos]
-                length = int.from_bytes(raw[pos + 1 : pos + 4], "big")
-                if head & 0x7F == 0:
-                    streaminfo = raw[pos + 4 : pos + 4 + length]
-                pos += 4 + length
-                if head & 0x80:
-                    break
-            if streaminfo is None or len(streaminfo) != 34:
-                raise ValueError(f"doc {doc_id}: missing STREAMINFO")
-            word = int.from_bytes(streaminfo[:18], "big")
-            # 16+16+24+24 = 80 bits of block/frame sizes, then rate(20)
-            # channels-1(3) bps-1(5) total(36)
-            rate = (word >> (144 - 80 - 20)) & 0xFFFFF
-            n_ch = ((word >> (144 - 100 - 3)) & 0x7) + 1
-            bps = ((word >> (144 - 103 - 5)) & 0x1F) + 1
-            total_claim = word & ((1 << 36) - 1)
-            md5_claim = streaminfo[18:34]
-            if n_ch != 1 or bps != 16:
+    def walk(doc_id: int, raw: bytes):
+        if raw[:4] != b"fLaC":
+            raise ValueError(f"doc {doc_id}: not a FLAC stream")
+        pos, streaminfo = 4, None
+        while True:
+            head = raw[pos]
+            length = int.from_bytes(raw[pos + 1 : pos + 4], "big")
+            if head & 0x7F == 0:
+                streaminfo = raw[pos + 4 : pos + 4 + length]
+            pos += 4 + length
+            if head & 0x80:
+                break
+        if streaminfo is None or len(streaminfo) != 34:
+            raise ValueError(f"doc {doc_id}: missing STREAMINFO")
+        word = int.from_bytes(streaminfo[:18], "big")
+        # 16+16+24+24 = 80 bits of block/frame sizes, then rate(20)
+        # channels-1(3) bps-1(5) total(36)
+        rate = (word >> (144 - 80 - 20)) & 0xFFFFF
+        n_ch = ((word >> (144 - 100 - 3)) & 0x7) + 1
+        bps = ((word >> (144 - 103 - 5)) & 0x1F) + 1
+        total_claim = word & ((1 << 36) - 1)
+        md5_claim = streaminfo[18:34]
+        if n_ch != 1 or bps != 16:
+            raise NotImplementedError(
+                "this path decodes 16-bit mono FLAC; stereo streams "
+                "take decode_flac_stereo"
+            )
+        n_frames = sum_c = sum_v = sum_f = 0
+        total_decoded = 0
+        last_sample = 0
+        md5 = hashlib.md5()
+        while pos < len(raw):
+            start = pos
+            h0 = int.from_bytes(raw[pos : pos + 2], "big")
+            if h0 >> 2 != 0b11111111111110:
+                raise ValueError(f"doc {doc_id}: lost frame sync at {pos}")
+            if h0 & 0x2:
+                raise ValueError(f"doc {doc_id}: reserved bit set")
+            # blocking strategy (RFC 9639 §9.1.1): 0 = fixed
+            # blocksize, coded number is the frame index; 1 =
+            # variable blocksize, coded number is the frame's
+            # first-sample offset
+            variable = h0 & 0x1
+            b2 = raw[pos + 2]
+            bs_code, sr_code = b2 >> 4, b2 & 0xF
+            b3 = raw[pos + 3]
+            ch_code, ss_code = b3 >> 4, (b3 >> 1) & 0x7
+            if ch_code != 0:
                 raise NotImplementedError(
-                    "this path decodes 16-bit mono FLAC; stereo streams "
-                    "take decode_flac_stereo"
+                    "stereo channel assignments not implemented"
                 )
-            n_frames = sum_c = sum_v = sum_f = 0
-            total_decoded = 0
-            last_sample = 0
-            md5 = hashlib.md5()
-            while pos < len(raw):
-                start = pos
-                h0 = int.from_bytes(raw[pos : pos + 2], "big")
-                if h0 >> 2 != 0b11111111111110:
-                    raise ValueError(f"doc {doc_id}: lost frame sync at {pos}")
-                if h0 & 0x2:
-                    raise ValueError(f"doc {doc_id}: reserved bit set")
-                # blocking strategy (RFC 9639 §9.1.1): 0 = fixed
-                # blocksize, coded number is the frame index; 1 =
-                # variable blocksize, coded number is the frame's
-                # first-sample offset
-                variable = h0 & 0x1
-                b2 = raw[pos + 2]
-                bs_code, sr_code = b2 >> 4, b2 & 0xF
-                b3 = raw[pos + 3]
-                ch_code, ss_code = b3 >> 4, (b3 >> 1) & 0x7
-                if ch_code != 0:
-                    raise NotImplementedError(
-                        "stereo channel assignments not implemented"
-                    )
-                if ss_code != 4:
-                    raise ValueError(
-                        f"doc {doc_id}: sample-size code {ss_code} is not "
-                        "16-bit"
-                    )
-                pos += 4
-                # UTF-8-style coded frame number
-                first = raw[pos]
-                if first < 0x80:
-                    frame_num = first
-                    pos += 1
-                else:
-                    n_cont = 0
-                    probe = first
-                    while probe & 0x40:
-                        n_cont += 1
-                        probe <<= 1
-                    frame_num = first & (0x3F >> n_cont)
-                    for i in range(n_cont):
-                        cont = raw[pos + 1 + i]
-                        if cont >> 6 != 0b10:
-                            raise ValueError(
-                                f"doc {doc_id}: bad frame-number "
-                                "continuation byte"
-                            )
-                        frame_num = (frame_num << 6) | (cont & 0x3F)
-                    pos += 1 + n_cont
-                if bs_code in (6, 7):
-                    width = 1 if bs_code == 6 else 2
-                    blocksize = int.from_bytes(raw[pos : pos + width], "big") + 1
-                    pos += width
-                elif bs_code in _FLAC_BLOCKSIZES:
-                    blocksize = _FLAC_BLOCKSIZES[bs_code]
-                else:
-                    raise ValueError(f"doc {doc_id}: reserved blocksize code")
-                if sr_code == 0:
-                    frame_rate = rate
-                elif sr_code in _FLAC_SAMPLE_RATES:
-                    frame_rate = _FLAC_SAMPLE_RATES[sr_code]
-                else:
-                    raise ValueError(f"doc {doc_id}: bad sample-rate code")
-                if frame_rate != rate:
-                    raise ValueError(
-                        f"doc {doc_id}: frame rate {frame_rate} disagrees "
-                        f"with STREAMINFO {rate}"
-                    )
-                expect = total_decoded if variable else n_frames
-                if frame_num != expect:
-                    raise ValueError(
-                        f"doc {doc_id}: coded number {frame_num} != "
-                        f"expected {expect} "
-                        f"({'sample offset' if variable else 'frame index'})"
-                    )
-                if flac_crc8(raw[start:pos]) != raw[pos]:
-                    raise ValueError(f"doc {doc_id}: frame-header CRC-8 bad")
-                pos += 1
-                # subframe (all four types + wasted bits) through the
-                # shared bit-level reader; mono frames have exactly one
-                br = _FlacBits(raw, pos)
-                stype, samples = _flac_read_subframe(
-                    doc_id, br, blocksize, 16
-                )
-                pos = br.align()
-                if any(not -0x8000 <= s <= 0x7FFF for s in samples):
-                    raise ValueError(
-                        f"doc {doc_id}: predictor output exceeds "
-                        "16-bit range"
-                    )
-                if stype == 0:
-                    sum_c += samples[0] * blocksize
-                elif stype == 1:
-                    sum_v += sum(samples)
-                else:
-                    sum_f += sum(samples)
-                # frame CRC-16 over everything since the sync
-                if struct.unpack_from(">H", raw, pos)[0] != flac_crc16(
-                    raw[start:pos]
-                ):
-                    raise ValueError(f"doc {doc_id}: frame CRC-16 bad")
-                pos += 2
-                md5.update(struct.pack(f"<{len(samples)}h", *samples))
-                last_sample = samples[-1]
-                n_frames += 1
-                total_decoded += len(samples)
-            if n_frames == 0:
-                raise ValueError(f"doc {doc_id}: no FLAC frames")
-            if total_claim != total_decoded:
+            if ss_code != 4:
                 raise ValueError(
-                    f"doc {doc_id}: STREAMINFO total {total_claim} != "
-                    f"decoded {total_decoded}"
+                    f"doc {doc_id}: sample-size code {ss_code} is not "
+                    "16-bit"
                 )
-            return (
-                n_frames, rate, total_decoded, sum_c, sum_v, sum_f,
-                last_sample, md5.digest() == md5_claim,
+            pos += 4
+            # UTF-8-style coded frame number
+            first = raw[pos]
+            if first < 0x80:
+                frame_num = first
+                pos += 1
+            else:
+                n_cont = 0
+                probe = first
+                while probe & 0x40:
+                    n_cont += 1
+                    probe <<= 1
+                frame_num = first & (0x3F >> n_cont)
+                for i in range(n_cont):
+                    cont = raw[pos + 1 + i]
+                    if cont >> 6 != 0b10:
+                        raise ValueError(
+                            f"doc {doc_id}: bad frame-number "
+                            "continuation byte"
+                        )
+                    frame_num = (frame_num << 6) | (cont & 0x3F)
+                pos += 1 + n_cont
+            if bs_code in (6, 7):
+                width = 1 if bs_code == 6 else 2
+                blocksize = int.from_bytes(raw[pos : pos + width], "big") + 1
+                pos += width
+            elif bs_code in _FLAC_BLOCKSIZES:
+                blocksize = _FLAC_BLOCKSIZES[bs_code]
+            else:
+                raise ValueError(f"doc {doc_id}: reserved blocksize code")
+            if sr_code == 0:
+                frame_rate = rate
+            elif sr_code in _FLAC_SAMPLE_RATES:
+                frame_rate = _FLAC_SAMPLE_RATES[sr_code]
+            else:
+                raise ValueError(f"doc {doc_id}: bad sample-rate code")
+            if frame_rate != rate:
+                raise ValueError(
+                    f"doc {doc_id}: frame rate {frame_rate} disagrees "
+                    f"with STREAMINFO {rate}"
+                )
+            expect = total_decoded if variable else n_frames
+            if frame_num != expect:
+                raise ValueError(
+                    f"doc {doc_id}: coded number {frame_num} != "
+                    f"expected {expect} "
+                    f"({'sample offset' if variable else 'frame index'})"
+                )
+            if flac_crc8(raw[start:pos]) != raw[pos]:
+                raise ValueError(f"doc {doc_id}: frame-header CRC-8 bad")
+            pos += 1
+            # subframe (all four types + wasted bits) through the
+            # shared bit-level reader; mono frames have exactly one
+            br = _FlacBits(raw, pos)
+            stype, samples = _flac_read_subframe(
+                doc_id, br, blocksize, 16
             )
-
-        cols = (
-            "doc_id", "n_frames", "sample_rate", "total_samples",
-            "sum_constant", "sum_verbatim", "sum_fixed", "last_sample",
-            "md5_ok",
+            pos = br.align()
+            if any(not -0x8000 <= s <= 0x7FFF for s in samples):
+                raise ValueError(
+                    f"doc {doc_id}: predictor output exceeds "
+                    "16-bit range"
+                )
+            if stype == 0:
+                sum_c += samples[0] * blocksize
+            elif stype == 1:
+                sum_v += sum(samples)
+            else:
+                sum_f += sum(samples)
+            # frame CRC-16 over everything since the sync
+            if struct.unpack_from(">H", raw, pos)[0] != flac_crc16(
+                raw[start:pos]
+            ):
+                raise ValueError(f"doc {doc_id}: frame CRC-16 bad")
+            pos += 2
+            md5.update(struct.pack(f"<{len(samples)}h", *samples))
+            last_sample = samples[-1]
+            n_frames += 1
+            total_decoded += len(samples)
+        if n_frames == 0:
+            raise ValueError(f"doc {doc_id}: no FLAC frames")
+        if total_claim != total_decoded:
+            raise ValueError(
+                f"doc {doc_id}: STREAMINFO total {total_claim} != "
+                f"decoded {total_decoded}"
+            )
+        return (
+            n_frames, rate, total_decoded, sum_c, sum_v, sum_f,
+            last_sample, md5.digest() == md5_claim,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, FLAC_SCHEMA
-    )
-
-
-def synthesize_flac(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a constant/verbatim FLAC stream."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_flac_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_flac_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 BMP_RLE8_SCHEMA = (
@@ -7540,7 +6274,8 @@ BMP_RLE8_SCHEMA = (
 )
 
 
-def decode_bmp_rle8(media_df: DataFrame) -> DataFrame:
+@decoder(BMP_RLE8_SCHEMA)
+def decode_bmp_rle8():
     """REAL RLE8-compressed BMP decode: header/palette parse
     (BI_RLE8, 8 bpp, biClrUsed palette), then the run-length stream —
     encoded runs, ABSOLUTE-mode segments with their word-boundary
@@ -7553,180 +6288,139 @@ def decode_bmp_rle8(media_df: DataFrame) -> DataFrame:
     GDI zero-canvas convention the RLE4 walker already applied —
     and rejects when it jumps off the raster."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
+    def walk(doc_id: int, raw: bytes):
+        if raw[:2] != b"BM":
+            raise ValueError(f"doc {doc_id}: not a BMP payload")
+        (_m, _fsize, _r1, _r2, offset) = struct.unpack_from("<2sIHHI", raw, 0)
+        (
+            hsz, width, height, _planes, bpp, comp, _isize,
+            _xp, _yp, n_used, _imp,
+        ) = struct.unpack_from("<IiiHHIIiiII", raw, 14)
+        if hsz != 40 or bpp != 8:
+            raise ValueError(f"doc {doc_id}: not an 8-bit BITMAPINFOHEADER")
+        if comp != 1:
+            raise NotImplementedError(
+                "only BI_RLE8 handled here (uncompressed BMPs take "
+                "decode_bmp_real)"
+            )
+        if height <= 0:
+            raise ValueError(f"doc {doc_id}: top-down RLE8 is invalid")
+        n_pal = n_used or 256
+        pal_at = 14 + hsz
+        palette = [
+            tuple(raw[pal_at + 4 * i : pal_at + 4 * i + 3])  # B, G, R
+            for i in range(n_pal)
+        ]
+        # the emitted stats need only per-palette-index pixel
+        # COUNTS plus the two probe pixels — RLE never overwrites
+        # a pixel (the cursor only advances), so runs accumulate
+        # counts in O(runs), absolute segments through a C-speed
+        # Counter, and unwritten pixels settle to index 0 at the
+        # end; no O(width*height) image materializes
+        from collections import Counter
 
-        def walk(doc_id: int, raw: bytes):
-            if raw[:2] != b"BM":
-                raise ValueError(f"doc {doc_id}: not a BMP payload")
-            (_m, _fsize, _r1, _r2, offset) = struct.unpack_from("<2sIHHI", raw, 0)
-            (
-                hsz, width, height, _planes, bpp, comp, _isize,
-                _xp, _yp, n_used, _imp,
-            ) = struct.unpack_from("<IiiHHIIiiII", raw, 14)
-            if hsz != 40 or bpp != 8:
-                raise ValueError(f"doc {doc_id}: not an 8-bit BITMAPINFOHEADER")
-            if comp != 1:
-                raise NotImplementedError(
-                    "only BI_RLE8 handled here (uncompressed BMPs take "
-                    "decode_bmp_real)"
-                )
-            if height <= 0:
-                raise ValueError(f"doc {doc_id}: top-down RLE8 is invalid")
-            n_pal = n_used or 256
-            pal_at = 14 + hsz
-            palette = [
-                tuple(raw[pal_at + 4 * i : pal_at + 4 * i + 3])  # B, G, R
-                for i in range(n_pal)
-            ]
-            # the emitted stats need only per-palette-index pixel
-            # COUNTS plus the two probe pixels — RLE never overwrites
-            # a pixel (the cursor only advances), so runs accumulate
-            # counts in O(runs), absolute segments through a C-speed
-            # Counter, and unwritten pixels settle to index 0 at the
-            # end; no O(width*height) image materializes
-            from collections import Counter
-
-            counts = [0] * n_pal
-            # probes: top-left = storage row height-1 col 0,
-            # bottom-right = storage row 0 col width-1 (bottom-up)
-            tl = br = 0
-            pos, x, y = offset, 0, 0  # y counts storage rows (bottom-up)
-            ended = False
-            while pos < len(raw):
-                if pos + 2 > len(raw):
-                    raise ValueError(f"doc {doc_id}: truncated RLE pair")
-                b0, b1 = raw[pos], raw[pos + 1]
-                pos += 2
-                if b0 == 0:
-                    if b1 == 0:  # end of line
-                        x, y = 0, y + 1
-                    elif b1 == 1:  # end of bitmap
-                        ended = True
-                        break
-                    elif b1 == 2:
-                        # delta escape (00 02 dx dy): the cursor
-                        # jumps; skipped pixels stay palette index 0
-                        # on the zero-initialized canvas (the GDI
-                        # convention, same as the RLE4 walker) —
-                        # which the counting model already implements
-                        # via the final unwritten-pixels settle
-                        if pos + 2 > len(raw):
-                            raise ValueError(
-                                f"doc {doc_id}: truncated delta escape"
-                            )
-                        dx, dy = raw[pos], raw[pos + 1]
-                        pos += 2
-                        x += dx
-                        y += dy
-                        if x > width or y > height:
-                            raise ValueError(
-                                f"doc {doc_id}: delta jumps off the "
-                                "raster"
-                            )
-                    else:  # absolute mode: b1 literal indices
-                        if y >= height or x + b1 > width:
-                            raise ValueError(
-                                f"doc {doc_id}: absolute run past row edge"
-                            )
-                        seg = raw[pos : pos + b1]
-                        if len(seg) < b1:
-                            raise ValueError(
-                                f"doc {doc_id}: truncated absolute run"
-                            )
-                        if max(seg) >= n_pal:
-                            raise ValueError(
-                                f"doc {doc_id}: palette index "
-                                f"{max(seg)} out of range"
-                            )
-                        for v, c in Counter(seg).items():
-                            counts[v] += c
-                        if y == height - 1 and x == 0:
-                            tl = seg[0]
-                        if y == 0 and x <= width - 1 < x + b1:
-                            br = seg[width - 1 - x]
-                        x += b1
-                        pos += b1 + (b1 % 2)  # word-boundary padding
-                else:  # encoded run: b0 copies of index b1
-                    if y >= height or x + b0 > width:
+        counts = [0] * n_pal
+        # probes: top-left = storage row height-1 col 0,
+        # bottom-right = storage row 0 col width-1 (bottom-up)
+        tl = br = 0
+        pos, x, y = offset, 0, 0  # y counts storage rows (bottom-up)
+        ended = False
+        while pos < len(raw):
+            if pos + 2 > len(raw):
+                raise ValueError(f"doc {doc_id}: truncated RLE pair")
+            b0, b1 = raw[pos], raw[pos + 1]
+            pos += 2
+            if b0 == 0:
+                if b1 == 0:  # end of line
+                    x, y = 0, y + 1
+                elif b1 == 1:  # end of bitmap
+                    ended = True
+                    break
+                elif b1 == 2:
+                    # delta escape (00 02 dx dy): the cursor
+                    # jumps; skipped pixels stay palette index 0
+                    # on the zero-initialized canvas (the GDI
+                    # convention, same as the RLE4 walker) —
+                    # which the counting model already implements
+                    # via the final unwritten-pixels settle
+                    if pos + 2 > len(raw):
                         raise ValueError(
-                            f"doc {doc_id}: encoded run past row edge"
+                            f"doc {doc_id}: truncated delta escape"
                         )
-                    if b1 >= n_pal:
+                    dx, dy = raw[pos], raw[pos + 1]
+                    pos += 2
+                    x += dx
+                    y += dy
+                    if x > width or y > height:
                         raise ValueError(
-                            f"doc {doc_id}: palette index {b1} out of range"
+                            f"doc {doc_id}: delta jumps off the "
+                            "raster"
                         )
-                    counts[b1] += b0
+                else:  # absolute mode: b1 literal indices
+                    if y >= height or x + b1 > width:
+                        raise ValueError(
+                            f"doc {doc_id}: absolute run past row edge"
+                        )
+                    seg = raw[pos : pos + b1]
+                    if len(seg) < b1:
+                        raise ValueError(
+                            f"doc {doc_id}: truncated absolute run"
+                        )
+                    if max(seg) >= n_pal:
+                        raise ValueError(
+                            f"doc {doc_id}: palette index "
+                            f"{max(seg)} out of range"
+                        )
+                    for v, c in Counter(seg).items():
+                        counts[v] += c
                     if y == height - 1 and x == 0:
-                        tl = b1
-                    if y == 0 and x <= width - 1 < x + b0:
-                        br = b1
-                    x += b0
-            if not ended:
-                raise ValueError(f"doc {doc_id}: missing end-of-bitmap escape")
-            if pos != len(raw):
-                raise ValueError(f"doc {doc_id}: trailing bytes after bitmap")
-            n_px = width * height
-            written = sum(counts)
-            if written > n_px:
-                raise ValueError(
-                    f"doc {doc_id}: RLE writes {written} pixels into "
-                    f"a {n_px}-pixel bitmap"
-                )
-            counts[0] += n_px - written  # undefined pixels are index 0
-            tr = tg = tb = 0
-            for v, c in enumerate(counts):
-                if c:
-                    b, g, r = palette[v]
-                    tr += r * c
-                    tg += g * c
-                    tb += b * c
-            return (
-                width, height, tr // n_px, tg // n_px, tb // n_px,
-                palette[tl][2], palette[br][2],
+                        tl = seg[0]
+                    if y == 0 and x <= width - 1 < x + b1:
+                        br = seg[width - 1 - x]
+                    x += b1
+                    pos += b1 + (b1 % 2)  # word-boundary padding
+            else:  # encoded run: b0 copies of index b1
+                if y >= height or x + b0 > width:
+                    raise ValueError(
+                        f"doc {doc_id}: encoded run past row edge"
+                    )
+                if b1 >= n_pal:
+                    raise ValueError(
+                        f"doc {doc_id}: palette index {b1} out of range"
+                    )
+                counts[b1] += b0
+                if y == height - 1 and x == 0:
+                    tl = b1
+                if y == 0 and x <= width - 1 < x + b0:
+                    br = b1
+                x += b0
+        if not ended:
+            raise ValueError(f"doc {doc_id}: missing end-of-bitmap escape")
+        if pos != len(raw):
+            raise ValueError(f"doc {doc_id}: trailing bytes after bitmap")
+        n_px = width * height
+        written = sum(counts)
+        if written > n_px:
+            raise ValueError(
+                f"doc {doc_id}: RLE writes {written} pixels into "
+                f"a {n_px}-pixel bitmap"
             )
-
-        cols = (
-            "doc_id", "width", "height", "mean_r", "mean_g", "mean_b",
-            "probe_tl", "probe_br",
+        counts[0] += n_px - written  # undefined pixels are index 0
+        tr = tg = tb = 0
+        for v, c in enumerate(counts):
+            if c:
+                b, g, r = palette[v]
+                tr += r * c
+                tg += g * c
+                tb += b * c
+        return (
+            width, height, tr // n_px, tg // n_px, tb // n_px,
+            palette[tl][2], palette[br][2],
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, BMP_RLE8_SCHEMA
-    )
-
-
-def synthesize_bmp_rle8(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying an RLE8-compressed BMP."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_bmp_rle8_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_bmp_rle8_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 FLAC_STEREO_SCHEMA = (
@@ -7820,7 +6514,8 @@ def _flac_read_subframe(
     raise ValueError(f"doc {doc_id}: reserved subframe type {stype}")
 
 
-def decode_flac_stereo(media_df: DataFrame) -> DataFrame:
+@decoder(FLAC_STEREO_SCHEMA)
+def decode_flac_stereo():
     """REAL stereo FLAC decode across all four channel assignments
     (RFC 9639 §4.2): independent L/R, left/side, right/side, and
     mid/side — side subframes read at bps+1 bits, mid's dropped low
@@ -7832,188 +6527,146 @@ def decode_flac_stereo(media_df: DataFrame) -> DataFrame:
     claim — a decoder that skips the decorrelation cannot fake any of
     the per-channel sums or ``md5_ok``."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-        import struct
+    import hashlib
+    import struct
 
-        import pandas as pd
+    from .synth import flac_crc8, flac_crc16
 
-        from .synth import flac_crc8, flac_crc16
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:4] != b"fLaC":
-                raise ValueError(f"doc {doc_id}: not a FLAC stream")
-            pos, streaminfo = 4, None
-            while True:
-                head = raw[pos]
-                length = int.from_bytes(raw[pos + 1 : pos + 4], "big")
-                if head & 0x7F == 0:
-                    streaminfo = raw[pos + 4 : pos + 4 + length]
-                pos += 4 + length
-                if head & 0x80:
-                    break
-            if streaminfo is None or len(streaminfo) != 34:
-                raise ValueError(f"doc {doc_id}: missing STREAMINFO")
-            word = int.from_bytes(streaminfo[:18], "big")
-            rate = (word >> (144 - 80 - 20)) & 0xFFFFF
-            n_ch = ((word >> (144 - 100 - 3)) & 0x7) + 1
-            bps = ((word >> (144 - 103 - 5)) & 0x1F) + 1
-            total_claim = word & ((1 << 36) - 1)
-            md5_claim = streaminfo[18:34]
-            if n_ch != 2 or bps != 16:
+    def walk(doc_id: int, raw: bytes):
+        if raw[:4] != b"fLaC":
+            raise ValueError(f"doc {doc_id}: not a FLAC stream")
+        pos, streaminfo = 4, None
+        while True:
+            head = raw[pos]
+            length = int.from_bytes(raw[pos + 1 : pos + 4], "big")
+            if head & 0x7F == 0:
+                streaminfo = raw[pos + 4 : pos + 4 + length]
+            pos += 4 + length
+            if head & 0x80:
+                break
+        if streaminfo is None or len(streaminfo) != 34:
+            raise ValueError(f"doc {doc_id}: missing STREAMINFO")
+        word = int.from_bytes(streaminfo[:18], "big")
+        rate = (word >> (144 - 80 - 20)) & 0xFFFFF
+        n_ch = ((word >> (144 - 100 - 3)) & 0x7) + 1
+        bps = ((word >> (144 - 103 - 5)) & 0x1F) + 1
+        total_claim = word & ((1 << 36) - 1)
+        md5_claim = streaminfo[18:34]
+        if n_ch != 2 or bps != 16:
+            raise NotImplementedError(
+                "stereo decoder expects 2-channel 16-bit streams "
+                "(mono takes decode_flac_real)"
+            )
+        n_frames = sum_l = sum_r = 0
+        last_l = last_r = 0
+        md5 = hashlib.md5()
+        while pos < len(raw):
+            start = pos
+            h0 = int.from_bytes(raw[pos : pos + 2], "big")
+            if h0 >> 2 != 0b11111111111110:
+                raise ValueError(f"doc {doc_id}: lost frame sync at {pos}")
+            if h0 & 0x2:
+                raise ValueError(f"doc {doc_id}: reserved bit set")
+            if h0 & 0x1:
                 raise NotImplementedError(
-                    "stereo decoder expects 2-channel 16-bit streams "
-                    "(mono takes decode_flac_real)"
+                    "variable-blocksize streams not implemented"
                 )
-            n_frames = sum_l = sum_r = 0
-            last_l = last_r = 0
-            md5 = hashlib.md5()
-            while pos < len(raw):
-                start = pos
-                h0 = int.from_bytes(raw[pos : pos + 2], "big")
-                if h0 >> 2 != 0b11111111111110:
-                    raise ValueError(f"doc {doc_id}: lost frame sync at {pos}")
-                if h0 & 0x2:
-                    raise ValueError(f"doc {doc_id}: reserved bit set")
-                if h0 & 0x1:
-                    raise NotImplementedError(
-                        "variable-blocksize streams not implemented"
-                    )
-                b2 = raw[pos + 2]
-                bs_code, sr_code = b2 >> 4, b2 & 0xF
-                b3 = raw[pos + 3]
-                ch_code, ss_code = b3 >> 4, (b3 >> 1) & 0x7
-                if ch_code not in (1, 8, 9, 10):
-                    raise NotImplementedError(
-                        f"channel assignment {ch_code} not implemented "
-                        "(2-channel codes only)"
-                    )
-                if ss_code != 4:
-                    raise ValueError(
-                        f"doc {doc_id}: sample-size code {ss_code} is "
-                        "not 16-bit"
-                    )
-                pos += 4
-                frame_num = raw[pos]
-                if frame_num >= 0x80:
-                    raise ValueError(
-                        f"doc {doc_id}: multi-byte frame number "
-                        "unexpected in this fixture"
-                    )
-                pos += 1
-                if bs_code != 8 or sr_code not in _FLAC_SAMPLE_RATES:
-                    raise ValueError(
-                        f"doc {doc_id}: unexpected blocksize/rate code"
-                    )
-                blocksize = 256
-                if _FLAC_SAMPLE_RATES[sr_code] != rate:
-                    raise ValueError(
-                        f"doc {doc_id}: frame rate disagrees with "
-                        "STREAMINFO"
-                    )
-                if frame_num != n_frames:
-                    raise ValueError(
-                        f"doc {doc_id}: frame number out of order"
-                    )
-                if flac_crc8(raw[start:pos]) != raw[pos]:
-                    raise ValueError(f"doc {doc_id}: frame-header CRC-8 bad")
-                pos += 1
-                br = _FlacBits(raw, pos)
-                # the SIDE subframe (channel 1 for left/side and
-                # mid/side, channel 0 for right/side) carries bps+1
-                side_ch = {1: None, 8: 1, 9: 0, 10: 1}[ch_code]
-                subs = []
-                for ch in (0, 1):
-                    ch_bps = 17 if ch == side_ch else 16
-                    subs.append(
-                        _flac_read_subframe(doc_id, br, blocksize, ch_bps)[1]
-                    )
-                pos = br.align()
-                if struct.unpack_from(">H", raw, pos)[0] != flac_crc16(
-                    raw[start:pos]
-                ):
-                    raise ValueError(f"doc {doc_id}: frame CRC-16 bad")
-                pos += 2
-                if ch_code == 1:
-                    left, right = subs
-                elif ch_code == 8:  # left/side: R = L - side
-                    left = subs[0]
-                    right = [l - s for l, s in zip(left, subs[1])]
-                elif ch_code == 9:  # right/side: L = R + side
-                    right = subs[1]
-                    left = [r + s for r, s in zip(right, subs[0])]
-                else:  # mid/side: L+R = mid<<1 | side&1
-                    left = [
-                        ((m << 1 | (s & 1)) + s) >> 1
-                        for m, s in zip(subs[0], subs[1])
-                    ]
-                    right = [l - s for l, s in zip(left, subs[1])]
-                if left and (
-                    min(min(left), min(right)) < -0x8000
-                    or max(max(left), max(right)) > 0x7FFF
-                ):
-                    raise ValueError(
-                        f"doc {doc_id}: decorrelated output exceeds "
-                        "16-bit range"
-                    )
-                inter = [v for pair in zip(left, right) for v in pair]
-                md5.update(struct.pack(f"<{len(inter)}h", *inter))
-                sum_l += sum(left)
-                sum_r += sum(right)
-                last_l, last_r = left[-1], right[-1]
-                n_frames += 1
-            if n_frames == 0:
-                raise ValueError(f"doc {doc_id}: no FLAC frames")
-            if total_claim != n_frames * 256:
+            b2 = raw[pos + 2]
+            bs_code, sr_code = b2 >> 4, b2 & 0xF
+            b3 = raw[pos + 3]
+            ch_code, ss_code = b3 >> 4, (b3 >> 1) & 0x7
+            if ch_code not in (1, 8, 9, 10):
+                raise NotImplementedError(
+                    f"channel assignment {ch_code} not implemented "
+                    "(2-channel codes only)"
+                )
+            if ss_code != 4:
                 raise ValueError(
-                    f"doc {doc_id}: STREAMINFO total disagrees with "
-                    "decoded frames"
+                    f"doc {doc_id}: sample-size code {ss_code} is "
+                    "not 16-bit"
                 )
-            return (
-                n_frames, rate, n_frames * 256, sum_l, sum_r,
-                last_l, last_r, md5.digest() == md5_claim,
+            pos += 4
+            frame_num = raw[pos]
+            if frame_num >= 0x80:
+                raise ValueError(
+                    f"doc {doc_id}: multi-byte frame number "
+                    "unexpected in this fixture"
+                )
+            pos += 1
+            if bs_code != 8 or sr_code not in _FLAC_SAMPLE_RATES:
+                raise ValueError(
+                    f"doc {doc_id}: unexpected blocksize/rate code"
+                )
+            blocksize = 256
+            if _FLAC_SAMPLE_RATES[sr_code] != rate:
+                raise ValueError(
+                    f"doc {doc_id}: frame rate disagrees with "
+                    "STREAMINFO"
+                )
+            if frame_num != n_frames:
+                raise ValueError(
+                    f"doc {doc_id}: frame number out of order"
+                )
+            if flac_crc8(raw[start:pos]) != raw[pos]:
+                raise ValueError(f"doc {doc_id}: frame-header CRC-8 bad")
+            pos += 1
+            br = _FlacBits(raw, pos)
+            # the SIDE subframe (channel 1 for left/side and
+            # mid/side, channel 0 for right/side) carries bps+1
+            side_ch = {1: None, 8: 1, 9: 0, 10: 1}[ch_code]
+            subs = []
+            for ch in (0, 1):
+                ch_bps = 17 if ch == side_ch else 16
+                subs.append(
+                    _flac_read_subframe(doc_id, br, blocksize, ch_bps)[1]
+                )
+            pos = br.align()
+            if struct.unpack_from(">H", raw, pos)[0] != flac_crc16(
+                raw[start:pos]
+            ):
+                raise ValueError(f"doc {doc_id}: frame CRC-16 bad")
+            pos += 2
+            if ch_code == 1:
+                left, right = subs
+            elif ch_code == 8:  # left/side: R = L - side
+                left = subs[0]
+                right = [l - s for l, s in zip(left, subs[1])]
+            elif ch_code == 9:  # right/side: L = R + side
+                right = subs[1]
+                left = [r + s for r, s in zip(right, subs[0])]
+            else:  # mid/side: L+R = mid<<1 | side&1
+                left = [
+                    ((m << 1 | (s & 1)) + s) >> 1
+                    for m, s in zip(subs[0], subs[1])
+                ]
+                right = [l - s for l, s in zip(left, subs[1])]
+            if left and (
+                min(min(left), min(right)) < -0x8000
+                or max(max(left), max(right)) > 0x7FFF
+            ):
+                raise ValueError(
+                    f"doc {doc_id}: decorrelated output exceeds "
+                    "16-bit range"
+                )
+            inter = [v for pair in zip(left, right) for v in pair]
+            md5.update(struct.pack(f"<{len(inter)}h", *inter))
+            sum_l += sum(left)
+            sum_r += sum(right)
+            last_l, last_r = left[-1], right[-1]
+            n_frames += 1
+        if n_frames == 0:
+            raise ValueError(f"doc {doc_id}: no FLAC frames")
+        if total_claim != n_frames * 256:
+            raise ValueError(
+                f"doc {doc_id}: STREAMINFO total disagrees with "
+                "decoded frames"
             )
-
-        cols = (
-            "doc_id", "n_frames", "sample_rate", "total_samples",
-            "sum_left", "sum_right", "last_left", "last_right", "md5_ok",
+        return (
+            n_frames, rate, n_frames * 256, sum_l, sum_r,
+            last_l, last_r, md5.digest() == md5_claim,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, FLAC_STEREO_SCHEMA
-    )
-
-
-def synthesize_flac_stereo(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a four-assignment stereo FLAC."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_flac_stereo_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_flac_stereo_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 def g711_ulaw_to_linear(code: int) -> int:
@@ -8046,7 +6699,8 @@ WAV_G711_SCHEMA = (
 )
 
 
-def decode_wav_g711(media_df: DataFrame) -> DataFrame:
+@decoder(WAV_G711_SCHEMA)
+def decode_wav_g711():
     """G.711 companded WAV decode (format tags 7 = mu-law, 6 =
     A-law) — the telephony/voicemail audio a crawl corpus still
     carries: the RIFF walk, an 8-bit mono fmt gate, and per-byte
@@ -8055,93 +6709,50 @@ def decode_wav_g711(media_df: DataFrame) -> DataFrame:
     and half-step segment 0) to linear PCM — pure integer
     arithmetic the SQL oracle restates byte for byte."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                raise ValueError(f"doc {doc_id}: not a RIFF/WAVE payload")
-            pos = 12
-            fmt = data = None
-            while pos + 8 <= len(raw):
-                tag = raw[pos : pos + 4]
-                (clen,) = struct.unpack_from("<I", raw, pos + 4)
-                payload = raw[pos + 8 : pos + 8 + clen]
-                if len(payload) != clen:
-                    raise ValueError(
-                        f"doc {doc_id}: chunk {tag!r} truncated"
-                    )
-                if tag == b"fmt ":
-                    fmt = payload
-                elif tag == b"data":
-                    data = payload
-                pos += 8 + clen + (clen % 2)
-            if fmt is None or data is None:
-                raise ValueError(f"doc {doc_id}: missing fmt/data chunk")
-            fmt_tag, channels, _rate, _bps, _align, bits = (
-                struct.unpack_from("<HHIIHH", fmt)
-            )
-            if fmt_tag not in (6, 7):
+    def walk(doc_id: int, raw: bytes):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
+            raise ValueError(f"doc {doc_id}: not a RIFF/WAVE payload")
+        pos = 12
+        fmt = data = None
+        while pos + 8 <= len(raw):
+            tag = raw[pos : pos + 4]
+            (clen,) = struct.unpack_from("<I", raw, pos + 4)
+            payload = raw[pos + 8 : pos + 8 + clen]
+            if len(payload) != clen:
                 raise ValueError(
-                    f"doc {doc_id}: format tag {fmt_tag} is not G.711"
+                    f"doc {doc_id}: chunk {tag!r} truncated"
                 )
-            if channels != 1 or bits != 8:
-                raise ValueError(
-                    f"doc {doc_id}: G.711 fixture must be 8-bit mono"
-                )
-            expand = (
-                g711_ulaw_to_linear if fmt_tag == 7
-                else g711_alaw_to_linear
-            )
-            s_sum = s_abs = peak = 0
-            for c in data:
-                v = expand(c)
-                s_sum += v
-                s_abs += abs(v)
-                peak = max(peak, abs(v))
-            return fmt_tag, len(data), s_sum, s_abs, peak
-
-        cols = (
-            "doc_id", "format_tag", "n_samples", "sum_signed",
-            "sum_abs", "peak",
+            if tag == b"fmt ":
+                fmt = payload
+            elif tag == b"data":
+                data = payload
+            pos += 8 + clen + (clen % 2)
+        if fmt is None or data is None:
+            raise ValueError(f"doc {doc_id}: missing fmt/data chunk")
+        fmt_tag, channels, _rate, _bps, _align, bits = (
+            struct.unpack_from("<HHIIHH", fmt)
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, WAV_G711_SCHEMA
-    )
-
-
-def synthesize_wav_g711(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a G.711 WAV
-    (``make_wav_g711_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_wav_g711_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_wav_g711_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
+        if fmt_tag not in (6, 7):
+            raise ValueError(
+                f"doc {doc_id}: format tag {fmt_tag} is not G.711"
             )
+        if channels != 1 or bits != 8:
+            raise ValueError(
+                f"doc {doc_id}: G.711 fixture must be 8-bit mono"
+            )
+        expand = (
+            g711_ulaw_to_linear if fmt_tag == 7
+            else g711_alaw_to_linear
+        )
+        s_sum = s_abs = peak = 0
+        for c in data:
+            v = expand(c)
+            s_sum += v
+            s_abs += abs(v)
+            peak = max(peak, abs(v))
+        return fmt_tag, len(data), s_sum, s_abs, peak
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 WAV_EXT_SCHEMA = (
@@ -8150,7 +6761,8 @@ WAV_EXT_SCHEMA = (
 )
 
 
-def decode_wav_ext(media_df: DataFrame) -> DataFrame:
+@decoder(WAV_EXT_SCHEMA)
+def decode_wav_ext():
     """REAL extended-WAV decode by hand (no stdlib ``wave``): RIFF
     chunk walk honoring the even-alignment pad rule and skipping
     unknown/LIST chunks, fmt parse for PCM (16/24-bit), IEEE float
@@ -8162,128 +6774,87 @@ def decode_wav_ext(media_df: DataFrame) -> DataFrame:
     peak/RMS are bit-identical across containers.  Unknown format
     tags and truncated chunks raise."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import math
-        import struct
+    import math
+    import struct
 
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                raise ValueError(f"doc {doc_id}: not a RIFF/WAVE payload")
-            (riff_len,) = struct.unpack_from("<I", raw, 4)
-            if 8 + riff_len != len(raw):
-                raise ValueError(f"doc {doc_id}: RIFF length mismatch")
-            pos = 12
-            fmt = data = None
-            while pos + 8 <= len(raw):
-                tag = raw[pos : pos + 4]
-                (clen,) = struct.unpack_from("<I", raw, pos + 4)
-                payload = raw[pos + 8 : pos + 8 + clen]
-                if len(payload) != clen:
-                    raise ValueError(
-                        f"doc {doc_id}: chunk {tag!r} truncated"
-                    )
-                if tag == b"fmt ":
-                    fmt = payload
-                elif tag == b"data":
-                    data = payload
-                pos += 8 + clen + (clen % 2)  # even-alignment pad
-            if fmt is None or data is None:
-                raise ValueError(f"doc {doc_id}: missing fmt or data chunk")
-            tag16, nch, framerate, _brate, block, bits = struct.unpack_from(
-                "<HHIIHH", fmt, 0
-            )
-            if tag16 == 0xFFFE:
-                (cb,) = struct.unpack_from("<H", fmt, 16)
-                if cb < 22:
-                    raise ValueError(
-                        f"doc {doc_id}: EXTENSIBLE cbSize {cb} too small"
-                    )
-                guid = fmt[24:40]
-                if guid[4:] != bytes(
-                    (0x00, 0x00, 0x10, 0x00, 0x80, 0x00, 0x00, 0xAA,
-                     0x00, 0x38, 0x9B, 0x71)
-                ):
-                    raise ValueError(
-                        f"doc {doc_id}: unknown EXTENSIBLE subformat GUID"
-                    )
-                (tag16,) = struct.unpack_from("<H", guid, 0)
-            if nch != 1:
-                raise NotImplementedError(
-                    "multi-channel extended WAV not implemented"
+    def walk(doc_id: int, raw: bytes):
+        if raw[:4] != b"RIFF" or raw[8:12] != b"WAVE":
+            raise ValueError(f"doc {doc_id}: not a RIFF/WAVE payload")
+        (riff_len,) = struct.unpack_from("<I", raw, 4)
+        if 8 + riff_len != len(raw):
+            raise ValueError(f"doc {doc_id}: RIFF length mismatch")
+        pos = 12
+        fmt = data = None
+        while pos + 8 <= len(raw):
+            tag = raw[pos : pos + 4]
+            (clen,) = struct.unpack_from("<I", raw, pos + 4)
+            payload = raw[pos + 8 : pos + 8 + clen]
+            if len(payload) != clen:
+                raise ValueError(
+                    f"doc {doc_id}: chunk {tag!r} truncated"
                 )
-            if len(data) % block:
-                raise ValueError(f"doc {doc_id}: data not frame-aligned")
-            n_frames = len(data) // block
-            if tag16 == 1 and bits == 16:
-                samples = list(struct.unpack(f"<{n_frames}h", data))
-                q15 = samples
-            elif tag16 == 1 and bits == 24:
-                q15 = []
-                for i in range(0, len(data), 3):
-                    v = int.from_bytes(data[i : i + 3], "little", signed=True)
-                    q15.append(v >> 8)  # arithmetic: exact on the fixture
-            elif tag16 == 3 and bits == 32:
-                floats = struct.unpack(f"<{n_frames}f", data)
-                q15 = []
-                for f in floats:
-                    if not -1.0 <= f <= 1.0:
-                        raise ValueError(
-                            f"doc {doc_id}: float sample out of range"
-                        )
-                    q15.append(round(f * 32768.0))
-            else:
-                raise NotImplementedError(
-                    f"WAV format tag {tag16} at {bits} bits not "
-                    "implemented (PCM 16/24, float 32)"
-                )
-            peak = max((abs(s) for s in q15), default=0)
-            rms = (
-                math.isqrt(sum(s * s for s in q15) // len(q15))
-                if q15 else 0
-            )
-            return tag16, bits, framerate, n_frames, peak, rms
-
-        cols = (
-            "doc_id", "format_tag", "bits", "framerate", "n_frames",
-            "peak_q15", "rms_q15",
+            if tag == b"fmt ":
+                fmt = payload
+            elif tag == b"data":
+                data = payload
+            pos += 8 + clen + (clen % 2)  # even-alignment pad
+        if fmt is None or data is None:
+            raise ValueError(f"doc {doc_id}: missing fmt or data chunk")
+        tag16, nch, framerate, _brate, block, bits = struct.unpack_from(
+            "<HHIIHH", fmt, 0
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, WAV_EXT_SCHEMA
-    )
-
-
-def synthesize_wav_ext(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a 24-bit / float / EXTENSIBLE WAV."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_wav_ext_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_wav_ext_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
+        if tag16 == 0xFFFE:
+            (cb,) = struct.unpack_from("<H", fmt, 16)
+            if cb < 22:
+                raise ValueError(
+                    f"doc {doc_id}: EXTENSIBLE cbSize {cb} too small"
+                )
+            guid = fmt[24:40]
+            if guid[4:] != bytes(
+                (0x00, 0x00, 0x10, 0x00, 0x80, 0x00, 0x00, 0xAA,
+                 0x00, 0x38, 0x9B, 0x71)
+            ):
+                raise ValueError(
+                    f"doc {doc_id}: unknown EXTENSIBLE subformat GUID"
+                )
+            (tag16,) = struct.unpack_from("<H", guid, 0)
+        if nch != 1:
+            raise NotImplementedError(
+                "multi-channel extended WAV not implemented"
             )
+        if len(data) % block:
+            raise ValueError(f"doc {doc_id}: data not frame-aligned")
+        n_frames = len(data) // block
+        if tag16 == 1 and bits == 16:
+            samples = list(struct.unpack(f"<{n_frames}h", data))
+            q15 = samples
+        elif tag16 == 1 and bits == 24:
+            q15 = []
+            for i in range(0, len(data), 3):
+                v = int.from_bytes(data[i : i + 3], "little", signed=True)
+                q15.append(v >> 8)  # arithmetic: exact on the fixture
+        elif tag16 == 3 and bits == 32:
+            floats = struct.unpack(f"<{n_frames}f", data)
+            q15 = []
+            for f in floats:
+                if not -1.0 <= f <= 1.0:
+                    raise ValueError(
+                        f"doc {doc_id}: float sample out of range"
+                    )
+                q15.append(round(f * 32768.0))
+        else:
+            raise NotImplementedError(
+                f"WAV format tag {tag16} at {bits} bits not "
+                "implemented (PCM 16/24, float 32)"
+            )
+        peak = max((abs(s) for s in q15), default=0)
+        rms = (
+            math.isqrt(sum(s * s for s in q15) // len(q15))
+            if q15 else 0
+        )
+        return tag16, bits, framerate, n_frames, peak, rms
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 PNG_PALETTE_SCHEMA = (
@@ -8292,7 +6863,8 @@ PNG_PALETTE_SCHEMA = (
 )
 
 
-def decode_png_palette(media_df: DataFrame) -> DataFrame:
+@decoder(PNG_PALETTE_SCHEMA)
+def decode_png_palette():
     """REAL paletted-PNG decode (color type 3): chunk walk with CRC-32
     verification, PLTE parse (length must be a multiple of 3), tRNS
     alpha table with the spec's default-opaque tail, all five
@@ -8302,224 +6874,110 @@ def decode_png_palette(media_df: DataFrame) -> DataFrame:
     diverges immediately.  Indices beyond the palette, bad depths,
     and oversized tRNS raise."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
-        import zlib
+    import struct
+    import zlib
 
-        import pandas as pd
+    from .synth import _paeth
 
-        from .synth import _paeth
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:8] != b"\x89PNG\r\n\x1a\n":
-                raise ValueError(f"doc {doc_id}: not a PNG payload")
-            pos, ihdr, idat = 8, None, b""
-            plte = trns = None
-            while pos < len(raw):
-                (length,) = struct.unpack_from(">I", raw, pos)
-                typ = raw[pos + 4 : pos + 8]
-                data = raw[pos + 8 : pos + 8 + length]
-                (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
-                if zlib.crc32(typ + data) != crc:
-                    raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
-                if typ == b"IHDR":
-                    ihdr = struct.unpack(">IIBBBBB", data)
-                elif typ == b"PLTE":
-                    if length % 3:
-                        raise ValueError(
-                            f"doc {doc_id}: PLTE length not a multiple of 3"
-                        )
-                    plte = [
-                        tuple(data[i : i + 3]) for i in range(0, length, 3)
-                    ]
-                elif typ == b"tRNS":
-                    trns = data
-                elif typ == b"IDAT":
-                    idat += data
-                elif typ == b"IEND":
-                    break
-                pos += 12 + length
-            if ihdr is None:
-                raise ValueError(f"doc {doc_id}: missing IHDR")
-            width, height, depth, ctype, _c, _f, interlace = ihdr
-            if depth != 8 or ctype != 3 or interlace != 0:
-                raise ValueError(
-                    f"doc {doc_id}: palette path needs 8-bit color type 3"
-                )
-            if plte is None:
-                raise ValueError(f"doc {doc_id}: color type 3 without PLTE")
-            if trns is not None and len(trns) > len(plte):
-                raise ValueError(
-                    f"doc {doc_id}: tRNS longer than the palette"
-                )
-            alpha = [
-                trns[i] if trns is not None and i < len(trns) else 255
-                for i in range(len(plte))
-            ]
-            plain = zlib.decompress(idat)
-            if len(plain) != height * (width + 1):
-                raise ValueError(
-                    f"doc {doc_id}: IDAT decodes {len(plain)} bytes for "
-                    f"{width}x{height} indices"
-                )
-            prev = bytearray(width)
-            tr = tg = tb = ta = 0
-            for y in range(height):
-                off = y * (width + 1)
-                f = plain[off]
-                line = bytearray(plain[off + 1 : off + 1 + width])
-                if f == 1:  # Sub, bpp = 1
-                    for x in range(1, width):
-                        line[x] = (line[x] + line[x - 1]) & 0xFF
-                elif f == 2:  # Up
-                    for x in range(width):
-                        line[x] = (line[x] + prev[x]) & 0xFF
-                elif f == 3:  # Average
-                    for x in range(width):
-                        left = line[x - 1] if x else 0
-                        line[x] = (line[x] + (left + prev[x]) // 2) & 0xFF
-                elif f == 4:  # Paeth
-                    for x in range(width):
-                        left = line[x - 1] if x else 0
-                        ul = prev[x - 1] if x else 0
-                        line[x] = (
-                            line[x] + _paeth(left, prev[x], ul)
-                        ) & 0xFF
-                elif f != 0:
-                    raise ValueError(f"doc {doc_id}: bad filter {f}")
-                for v in line:
-                    if v >= len(plte):
-                        raise ValueError(
-                            f"doc {doc_id}: palette index {v} out of range"
-                        )
-                    r, g, b = plte[v]
-                    tr += r
-                    tg += g
-                    tb += b
-                    ta += alpha[v]
-                prev = line
-            n_px = width * height
-            return (
-                width, height, len(plte),
-                tr // n_px, tg // n_px, tb // n_px, ta,
+    def walk(doc_id: int, raw: bytes):
+        if raw[:8] != b"\x89PNG\r\n\x1a\n":
+            raise ValueError(f"doc {doc_id}: not a PNG payload")
+        pos, ihdr, idat = 8, None, b""
+        plte = trns = None
+        while pos < len(raw):
+            (length,) = struct.unpack_from(">I", raw, pos)
+            typ = raw[pos + 4 : pos + 8]
+            data = raw[pos + 8 : pos + 8 + length]
+            (crc,) = struct.unpack_from(">I", raw, pos + 8 + length)
+            if zlib.crc32(typ + data) != crc:
+                raise ValueError(f"doc {doc_id}: bad CRC in {typ!r}")
+            if typ == b"IHDR":
+                ihdr = struct.unpack(">IIBBBBB", data)
+            elif typ == b"PLTE":
+                if length % 3:
+                    raise ValueError(
+                        f"doc {doc_id}: PLTE length not a multiple of 3"
+                    )
+                plte = [
+                    tuple(data[i : i + 3]) for i in range(0, length, 3)
+                ]
+            elif typ == b"tRNS":
+                trns = data
+            elif typ == b"IDAT":
+                idat += data
+            elif typ == b"IEND":
+                break
+            pos += 12 + length
+        if ihdr is None:
+            raise ValueError(f"doc {doc_id}: missing IHDR")
+        width, height, depth, ctype, _c, _f, interlace = ihdr
+        if depth != 8 or ctype != 3 or interlace != 0:
+            raise ValueError(
+                f"doc {doc_id}: palette path needs 8-bit color type 3"
             )
-
-        cols = (
-            "doc_id", "width", "height", "n_palette",
-            "mean_r", "mean_g", "mean_b", "sum_alpha",
+        if plte is None:
+            raise ValueError(f"doc {doc_id}: color type 3 without PLTE")
+        if trns is not None and len(trns) > len(plte):
+            raise ValueError(
+                f"doc {doc_id}: tRNS longer than the palette"
+            )
+        alpha = [
+            trns[i] if trns is not None and i < len(trns) else 255
+            for i in range(len(plte))
+        ]
+        plain = zlib.decompress(idat)
+        if len(plain) != height * (width + 1):
+            raise ValueError(
+                f"doc {doc_id}: IDAT decodes {len(plain)} bytes for "
+                f"{width}x{height} indices"
+            )
+        prev = bytearray(width)
+        tr = tg = tb = ta = 0
+        for y in range(height):
+            off = y * (width + 1)
+            f = plain[off]
+            line = bytearray(plain[off + 1 : off + 1 + width])
+            if f == 1:  # Sub, bpp = 1
+                for x in range(1, width):
+                    line[x] = (line[x] + line[x - 1]) & 0xFF
+            elif f == 2:  # Up
+                for x in range(width):
+                    line[x] = (line[x] + prev[x]) & 0xFF
+            elif f == 3:  # Average
+                for x in range(width):
+                    left = line[x - 1] if x else 0
+                    line[x] = (line[x] + (left + prev[x]) // 2) & 0xFF
+            elif f == 4:  # Paeth
+                for x in range(width):
+                    left = line[x - 1] if x else 0
+                    ul = prev[x - 1] if x else 0
+                    line[x] = (
+                        line[x] + _paeth(left, prev[x], ul)
+                    ) & 0xFF
+            elif f != 0:
+                raise ValueError(f"doc {doc_id}: bad filter {f}")
+            for v in line:
+                if v >= len(plte):
+                    raise ValueError(
+                        f"doc {doc_id}: palette index {v} out of range"
+                    )
+                r, g, b = plte[v]
+                tr += r
+                tg += g
+                tb += b
+                ta += alpha[v]
+            prev = line
+        n_px = width * height
+        return (
+            width, height, len(plte),
+            tr // n_px, tg // n_px, tb // n_px, ta,
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, PNG_PALETTE_SCHEMA
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
-def synthesize_png_palette(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a paletted (type 3 + tRNS) PNG."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_png_palette_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_png_palette_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_gif_lct(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a local-color-table GIF."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_gif_lct_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_gif_lct_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_flac_vbs(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a VARIABLE-blocksize FLAC stream
-    whose subframes exercise the wasted-bits-per-sample layer."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_flac_vbs_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["audio"] * len(pdf),
-                    "payload": [
-                        make_flac_vbs_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_bmp_rle4(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a BI_RLE4-compressed BMP."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_bmp_rle4_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["image"] * len(pdf),
-                    "payload": [
-                        make_bmp_rle4_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_bmp_rle4(media_df: DataFrame) -> DataFrame:
+@decoder(BMP_RLE8_SCHEMA)
+def decode_bmp_rle4():
     """REAL RLE4-compressed BMP decode — the 4-bit sibling of
     ``decode_bmp_rle8`` with the rules that are RLE4-specific: encoded
     runs alternate the count across the color byte's HIGH and LOW
@@ -8531,142 +6989,125 @@ def decode_bmp_rle4(media_df: DataFrame) -> DataFrame:
     channel means plus corner probes; cursor discipline (runs past the
     row edge, truncation, missing escapes) raises."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import struct
+    import struct
 
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            if raw[:2] != b"BM":
-                raise ValueError(f"doc {doc_id}: not a BMP payload")
-            (_m, _fs, _r1, _r2, offset) = struct.unpack_from(
-                "<2sIHHI", raw, 0
+    def walk(doc_id: int, raw: bytes):
+        if raw[:2] != b"BM":
+            raise ValueError(f"doc {doc_id}: not a BMP payload")
+        (_m, _fs, _r1, _r2, offset) = struct.unpack_from(
+            "<2sIHHI", raw, 0
+        )
+        (
+            hsz, width, height, _planes, bpp, comp, _isize,
+            _xp, _yp, n_used, _imp,
+        ) = struct.unpack_from("<IiiHHIIiiII", raw, 14)
+        if hsz != 40 or bpp != 4:
+            raise ValueError(
+                f"doc {doc_id}: not a 4-bit BITMAPINFOHEADER"
             )
-            (
-                hsz, width, height, _planes, bpp, comp, _isize,
-                _xp, _yp, n_used, _imp,
-            ) = struct.unpack_from("<IiiHHIIiiII", raw, 14)
-            if hsz != 40 or bpp != 4:
-                raise ValueError(
-                    f"doc {doc_id}: not a 4-bit BITMAPINFOHEADER"
-                )
-            if comp != 2:
-                raise NotImplementedError(
-                    "only BI_RLE4 handled here (8-bit RLE takes "
-                    "decode_bmp_rle8)"
-                )
-            if height <= 0:
-                raise ValueError(f"doc {doc_id}: top-down RLE4 is invalid")
-            n_pal = n_used or 16
-            pal_at = 14 + hsz
-            palette = [
-                tuple(raw[pal_at + 4 * i : pal_at + 4 * i + 3])  # B, G, R
-                for i in range(n_pal)
-            ]
-            img = [[0] * width for _ in range(height)]
-            pos, x, y = offset, 0, 0
-            ended = False
-            while pos < len(raw):
-                if pos + 2 > len(raw):
-                    raise ValueError(f"doc {doc_id}: truncated RLE pair")
-                b0, b1 = raw[pos], raw[pos + 1]
-                pos += 2
-                if b0 == 0:
-                    if b1 == 0:  # end of line
-                        x, y = 0, y + 1
-                    elif b1 == 1:  # end of bitmap
-                        ended = True
-                        break
-                    elif b1 == 2:  # delta: cursor jump, pixels stay 0
-                        if pos + 2 > len(raw):
-                            raise ValueError(
-                                f"doc {doc_id}: truncated delta escape"
-                            )
-                        dx, dy = raw[pos], raw[pos + 1]
-                        pos += 2
-                        x += dx
-                        y += dy
-                        if x > width or y > height:
-                            raise ValueError(
-                                f"doc {doc_id}: delta jumps off the raster"
-                            )
-                    else:  # absolute mode: b1 packed nibble indices
-                        if y >= height or x + b1 > width:
-                            raise ValueError(
-                                f"doc {doc_id}: absolute run past row edge"
-                            )
-                        n_bytes = (b1 + 1) // 2
-                        seg = raw[pos : pos + n_bytes]
-                        if len(seg) < n_bytes:
-                            raise ValueError(
-                                f"doc {doc_id}: truncated absolute run"
-                            )
-                        row = img[height - 1 - y]
-                        for i in range(b1):
-                            v = (
-                                seg[i // 2] >> 4
-                                if i % 2 == 0
-                                else seg[i // 2] & 0xF
-                            )
-                            if v >= n_pal:
-                                raise ValueError(
-                                    f"doc {doc_id}: palette index {v} "
-                                    "out of range"
-                                )
-                            row[x + i] = v
-                        x += b1
-                        pos += n_bytes + (n_bytes % 2)  # word padding
-                else:  # encoded run: b0 pixels alternating b1's nibbles
-                    if y >= height or x + b0 > width:
+        if comp != 2:
+            raise NotImplementedError(
+                "only BI_RLE4 handled here (8-bit RLE takes "
+                "decode_bmp_rle8)"
+            )
+        if height <= 0:
+            raise ValueError(f"doc {doc_id}: top-down RLE4 is invalid")
+        n_pal = n_used or 16
+        pal_at = 14 + hsz
+        palette = [
+            tuple(raw[pal_at + 4 * i : pal_at + 4 * i + 3])  # B, G, R
+            for i in range(n_pal)
+        ]
+        img = [[0] * width for _ in range(height)]
+        pos, x, y = offset, 0, 0
+        ended = False
+        while pos < len(raw):
+            if pos + 2 > len(raw):
+                raise ValueError(f"doc {doc_id}: truncated RLE pair")
+            b0, b1 = raw[pos], raw[pos + 1]
+            pos += 2
+            if b0 == 0:
+                if b1 == 0:  # end of line
+                    x, y = 0, y + 1
+                elif b1 == 1:  # end of bitmap
+                    ended = True
+                    break
+                elif b1 == 2:  # delta: cursor jump, pixels stay 0
+                    if pos + 2 > len(raw):
                         raise ValueError(
-                            f"doc {doc_id}: encoded run past row edge"
+                            f"doc {doc_id}: truncated delta escape"
                         )
-                    hi, lo = b1 >> 4, b1 & 0xF
-                    if hi >= n_pal or lo >= n_pal:
+                    dx, dy = raw[pos], raw[pos + 1]
+                    pos += 2
+                    x += dx
+                    y += dy
+                    if x > width or y > height:
                         raise ValueError(
-                            f"doc {doc_id}: palette index out of range"
+                            f"doc {doc_id}: delta jumps off the raster"
+                        )
+                else:  # absolute mode: b1 packed nibble indices
+                    if y >= height or x + b1 > width:
+                        raise ValueError(
+                            f"doc {doc_id}: absolute run past row edge"
+                        )
+                    n_bytes = (b1 + 1) // 2
+                    seg = raw[pos : pos + n_bytes]
+                    if len(seg) < n_bytes:
+                        raise ValueError(
+                            f"doc {doc_id}: truncated absolute run"
                         )
                     row = img[height - 1 - y]
-                    for i in range(b0):
-                        row[x + i] = hi if i % 2 == 0 else lo
-                    x += b0
-            if not ended:
-                raise ValueError(
-                    f"doc {doc_id}: RLE stream missing end-of-bitmap"
-                )
-            if pos != len(raw):
-                raise ValueError(
-                    f"doc {doc_id}: {len(raw) - pos} trailing bytes after "
-                    "end-of-bitmap"
-                )
-            n_px = width * height
-            tr = tg = tb = 0
-            for row in img:
-                for v in row:
-                    b, g, r = palette[v]
-                    tr += r
-                    tg += g
-                    tb += b
-            return (
-                width, height, tr // n_px, tg // n_px, tb // n_px,
-                palette[img[0][0]][2], palette[img[-1][-1]][2],
+                    for i in range(b1):
+                        v = (
+                            seg[i // 2] >> 4
+                            if i % 2 == 0
+                            else seg[i // 2] & 0xF
+                        )
+                        if v >= n_pal:
+                            raise ValueError(
+                                f"doc {doc_id}: palette index {v} "
+                                "out of range"
+                            )
+                        row[x + i] = v
+                    x += b1
+                    pos += n_bytes + (n_bytes % 2)  # word padding
+            else:  # encoded run: b0 pixels alternating b1's nibbles
+                if y >= height or x + b0 > width:
+                    raise ValueError(
+                        f"doc {doc_id}: encoded run past row edge"
+                    )
+                hi, lo = b1 >> 4, b1 & 0xF
+                if hi >= n_pal or lo >= n_pal:
+                    raise ValueError(
+                        f"doc {doc_id}: palette index out of range"
+                    )
+                row = img[height - 1 - y]
+                for i in range(b0):
+                    row[x + i] = hi if i % 2 == 0 else lo
+                x += b0
+        if not ended:
+            raise ValueError(
+                f"doc {doc_id}: RLE stream missing end-of-bitmap"
             )
-
-        cols = (
-            "doc_id", "width", "height", "mean_r", "mean_g", "mean_b",
-            "probe_tl", "probe_br",
+        if pos != len(raw):
+            raise ValueError(
+                f"doc {doc_id}: {len(raw) - pos} trailing bytes after "
+                "end-of-bitmap"
+            )
+        n_px = width * height
+        tr = tg = tb = 0
+        for row in img:
+            for v in row:
+                b, g, r = palette[v]
+                tr += r
+                tg += g
+                tb += b
+        return (
+            width, height, tr // n_px, tg // n_px, tb // n_px,
+            palette[img[0][0]][2], palette[img[-1][-1]][2],
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *walk(int(doc_id), bytes(b)))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, BMP_RLE8_SCHEMA
-    )
+    return lambda doc_id, raw: [walk(doc_id, raw)]
 
 
 def _h264_mvp(
@@ -8991,7 +7432,8 @@ H264_INTER_SCHEMA = (
 )
 
 
-def decode_h264_inter(media_df: DataFrame) -> DataFrame:
+@decoder(H264_INTER_SCHEMA)
+def decode_h264_inter():
     """REAL motion-compensated H.264 decode: P_L0_16x16 macroblocks
     reconstruct by fetching the reference macroblock their decoded
     motion vector points at — MVs recovered as se(v) differences
@@ -9006,127 +7448,109 @@ def decode_h264_inter(media_df: DataFrame) -> DataFrame:
     and the summed |MV| of MOVING SKIPS (nonzero only if the decoder
     really ran the skip inference) — in full-pel units."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []
-            ref: list | None = None  # per-MB luma sums
-            expect_frame = 1
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
-                    )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR in inter fixture"
-                        )
-                    ref = list(mb_sums)
-                    rows.append(
-                        ("I", sum(ref) // (256 * n_mbs), 0, 0, 0, 0)
-                    )
-                    expect_frame = 1
-                elif nal_type == 1:
-                    if ref is None or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, _poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h,
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference slices belong to the "
-                            "multiref walker (this one holds a single "
-                            "reference picture)"
-                        )
-                    fn_wrap = 1 << sps["frame_num_bits"]
-                    if frame_num != expect_frame % fn_wrap:
-                        raise ValueError(
-                            f"doc {doc_id}: frame_num {frame_num} != "
-                            f"expected {expect_frame % fn_wrap}"
-                        )
-                    expect_frame += 1
-                    new = [0] * len(ops)
-                    n_skip = n_inter = mv_sum = skip_mv_sum = 0
-                    for idx, op in enumerate(ops):
-                        kind, val = op[0], op[1]
-                        if kind == "pcm":
-                            new[idx] = val
-                            continue
-                        mvx, mvy = val
-                        if mvx % 64 or mvy % 64:
-                            raise NotImplementedError(
-                                "sub-macroblock motion needs pixel-plane "
-                                "reference state (this walker keeps "
-                                "MB sums; decode_h264_fracpel is the "
-                                "pixel-plane tier)"
-                            )
-                        row_, col = idx // mb_w, idx % mb_w
-                        sr = row_ + mvy // 64
-                        sc = col + mvx // 64
-                        if not (0 <= sr < mb_h and 0 <= sc < mb_w):
-                            raise NotImplementedError(
-                                "motion past the picture edge needs the "
-                                "8.4.2.2.1 reference clipping (MB-sum "
-                                "walker; decode_h264_fracpel clamps "
-                                "per-pixel)"
-                            )
-                        new[idx] = ref[sr * mb_w + sc]
-                        fullpel = (abs(mvx) + abs(mvy)) // 4
-                        if kind == "inter":
-                            n_inter += 1
-                            mv_sum += fullpel
-                        else:
-                            n_skip += 1
-                            skip_mv_sum += fullpel
-                    ref = new
-                    rows.append(("P", sum(ref) // (256 * len(ops)),
-                                 n_skip, n_inter, mv_sum, skip_mv_sum))
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []
+        ref: list | None = None  # per-MB luma sums
+        expect_frame = 1
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR in inter fixture"
+                    )
+                ref = list(mb_sums)
+                rows.append(
+                    ("I", sum(ref) // (256 * n_mbs), 0, 0, 0, 0)
+                )
+                expect_frame = 1
+            elif nal_type == 1:
+                if ref is None or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, _poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h,
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference slices belong to the "
+                        "multiref walker (this one holds a single "
+                        "reference picture)"
+                    )
+                fn_wrap = 1 << sps["frame_num_bits"]
+                if frame_num != expect_frame % fn_wrap:
+                    raise ValueError(
+                        f"doc {doc_id}: frame_num {frame_num} != "
+                        f"expected {expect_frame % fn_wrap}"
+                    )
+                expect_frame += 1
+                new = [0] * len(ops)
+                n_skip = n_inter = mv_sum = skip_mv_sum = 0
+                for idx, op in enumerate(ops):
+                    kind, val = op[0], op[1]
+                    if kind == "pcm":
+                        new[idx] = val
+                        continue
+                    mvx, mvy = val
+                    if mvx % 64 or mvy % 64:
+                        raise NotImplementedError(
+                            "sub-macroblock motion needs pixel-plane "
+                            "reference state (this walker keeps "
+                            "MB sums; decode_h264_fracpel is the "
+                            "pixel-plane tier)"
+                        )
+                    row_, col = idx // mb_w, idx % mb_w
+                    sr = row_ + mvy // 64
+                    sc = col + mvx // 64
+                    if not (0 <= sr < mb_h and 0 <= sc < mb_w):
+                        raise NotImplementedError(
+                            "motion past the picture edge needs the "
+                            "8.4.2.2.1 reference clipping (MB-sum "
+                            "walker; decode_h264_fracpel clamps "
+                            "per-pixel)"
+                        )
+                    new[idx] = ref[sr * mb_w + sc]
+                    fullpel = (abs(mvx) + abs(mvy)) // 4
+                    if kind == "inter":
+                        n_inter += 1
+                        mv_sum += fullpel
+                    else:
+                        n_skip += 1
+                        skip_mv_sum += fullpel
+                ref = new
+                rows.append(("P", sum(ref) // (256 * len(ops)),
+                             n_skip, n_inter, mv_sum, skip_mv_sum))
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "mean_luma",
-            "n_skip", "n_inter", "sum_abs_mv", "sum_skip_mv",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_INTER_SCHEMA
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 def _parse_b_slice(
@@ -9314,7 +7738,8 @@ H264_BFRAME_SCHEMA = (
 )
 
 
-def decode_h264_bframe(media_df: DataFrame) -> DataFrame:
+@decoder(H264_BFRAME_SCHEMA)
+def decode_h264_bframe():
     """B-SLICE H.264 decode (ITU-T H.264 8.4.2.1/8.2.4.2.3): a
     POC-type-0 stream whose non-reference B picture sits BETWEEN its
     two references in display order while arriving last in decode
@@ -9328,156 +7753,138 @@ def decode_h264_bframe(media_df: DataFrame) -> DataFrame:
     fixture macroblocks.  Direct modes, B_Skip, partitions,
     residuals, and weighted prediction stay declared boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []
-            # (poc, per-MB flat luma VALUES) of reference pictures
-            refs: list = []
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                nal_ref = (unit[0] >> 5) & 3
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                    if sps["poc_type"] != 0:
-                        raise ValueError(
-                            f"doc {doc_id}: B stream needs POC type 0"
-                        )
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs,
-                        sps["poc_lsb_bits"],
-                    )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR in B fixture"
-                        )
-                    vals = [s // 256 for s in mb_sums]
-                    refs = [(0, vals)]
-                    rows.append(("I", sum(vals) // n_mbs, 0, 0, 0))
-                elif nal_type == 1:
-                    if not refs or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: inter slice with no "
-                            "reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    n_mbs = mb_w * mb_h
-                    # peek slice_type to route P vs B
-                    rr = _H264BitReader(rbsp, doc_id)
-                    rr.ue()
-                    stype = rr.ue() % 5
-                    if stype == 0:  # P: single-ref copy/refresh layer
-                        _fn, poc, active, mods, ops, _wt = (
-                            _parse_p_inter_slice(
-                                doc_id, rbsp, sps["frame_num_bits"],
-                                mb_w, mb_h, sps["poc_lsb_bits"],
-                            )
-                        )
-                        if active != 1 or mods:
-                            raise NotImplementedError(
-                                "multi-ref P inside the B fixture "
-                                "not implemented"
-                            )
-                        src = refs[-1][1]
-                        new = [0] * n_mbs
-                        for idx, op in enumerate(ops):
-                            if op[0] == "pcm":
-                                new[idx] = op[1] // 256
-                                continue
-                            mvx, mvy = op[1]
-                            if mvx or mvy:
-                                raise NotImplementedError(
-                                    "moving P macroblocks in the B "
-                                    "fixture not implemented"
-                                )
-                            new[idx] = src[idx]
-                        if nal_ref:
-                            refs.append((poc, new))
-                            refs.sort(key=lambda t: t[0])
-                        rows.append(
-                            ("P", sum(new) // n_mbs, 0, 0, 0)
-                        )
-                    else:  # B
-                        if nal_ref:
-                            raise NotImplementedError(
-                                "reference B pictures (marking in B "
-                                "slice headers) not implemented"
-                            )
-                        frame_num, poc, ops, _wt = _parse_b_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            sps["poc_lsb_bits"], mb_w, mb_h,
-                        )
-                        past = [p for p in refs if p[0] < poc]
-                        future = [p for p in refs if p[0] > poc]
-                        if not past or not future:
-                            raise ValueError(
-                                f"doc {doc_id}: B picture lacks a "
-                                "reference on each side"
-                            )
-                        # 8.2.4.2.3 initial lists, one entry each:
-                        # L0 = nearest past, L1 = nearest future
-                        l0 = max(past, key=lambda t: t[0])[1]
-                        l1 = min(future, key=lambda t: t[0])[1]
-                        new = [0] * n_mbs
-                        n_l0 = n_l1 = n_bi = 0
-                        for idx, (kind, mv0, mv1) in enumerate(ops):
-                            for mv in (mv0, mv1):
-                                if mv and (mv[0] or mv[1]):
-                                    raise NotImplementedError(
-                                        "moving B macroblocks need "
-                                        "pixel-plane interpolation "
-                                        "(MB-sum walker; the B pixel tier "
-                                        "is decode_h264_bpixel)"
-                                    )
-                            if kind == "l0":
-                                new[idx] = l0[idx]
-                                n_l0 += 1
-                            elif kind == "l1":
-                                new[idx] = l1[idx]
-                                n_l1 += 1
-                            else:
-                                # 8.4.2.3.2 default bi-prediction
-                                new[idx] = (l0[idx] + l1[idx] + 1) >> 1
-                                n_bi += 1
-                        rows.append(
-                            ("B", sum(new) // n_mbs, n_l0, n_l1, n_bi)
-                        )
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []
+        # (poc, per-MB flat luma VALUES) of reference pictures
+        refs: list = []
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            nal_ref = (unit[0] >> 5) & 3
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+                if sps["poc_type"] != 0:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: B stream needs POC type 0"
                     )
-            if len(rows) < 3:
-                raise ValueError(f"doc {doc_id}: incomplete B GOP")
-            return rows
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
+                    )
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs,
+                    sps["poc_lsb_bits"],
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR in B fixture"
+                    )
+                vals = [s // 256 for s in mb_sums]
+                refs = [(0, vals)]
+                rows.append(("I", sum(vals) // n_mbs, 0, 0, 0))
+            elif nal_type == 1:
+                if not refs or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: inter slice with no "
+                        "reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                n_mbs = mb_w * mb_h
+                # peek slice_type to route P vs B
+                rr = _H264BitReader(rbsp, doc_id)
+                rr.ue()
+                stype = rr.ue() % 5
+                if stype == 0:  # P: single-ref copy/refresh layer
+                    _fn, poc, active, mods, ops, _wt = (
+                        _parse_p_inter_slice(
+                            doc_id, rbsp, sps["frame_num_bits"],
+                            mb_w, mb_h, sps["poc_lsb_bits"],
+                        )
+                    )
+                    if active != 1 or mods:
+                        raise NotImplementedError(
+                            "multi-ref P inside the B fixture "
+                            "not implemented"
+                        )
+                    src = refs[-1][1]
+                    new = [0] * n_mbs
+                    for idx, op in enumerate(ops):
+                        if op[0] == "pcm":
+                            new[idx] = op[1] // 256
+                            continue
+                        mvx, mvy = op[1]
+                        if mvx or mvy:
+                            raise NotImplementedError(
+                                "moving P macroblocks in the B "
+                                "fixture not implemented"
+                            )
+                        new[idx] = src[idx]
+                    if nal_ref:
+                        refs.append((poc, new))
+                        refs.sort(key=lambda t: t[0])
+                    rows.append(
+                        ("P", sum(new) // n_mbs, 0, 0, 0)
+                    )
+                else:  # B
+                    if nal_ref:
+                        raise NotImplementedError(
+                            "reference B pictures (marking in B "
+                            "slice headers) not implemented"
+                        )
+                    frame_num, poc, ops, _wt = _parse_b_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        sps["poc_lsb_bits"], mb_w, mb_h,
+                    )
+                    past = [p for p in refs if p[0] < poc]
+                    future = [p for p in refs if p[0] > poc]
+                    if not past or not future:
+                        raise ValueError(
+                            f"doc {doc_id}: B picture lacks a "
+                            "reference on each side"
+                        )
+                    # 8.2.4.2.3 initial lists, one entry each:
+                    # L0 = nearest past, L1 = nearest future
+                    l0 = max(past, key=lambda t: t[0])[1]
+                    l1 = min(future, key=lambda t: t[0])[1]
+                    new = [0] * n_mbs
+                    n_l0 = n_l1 = n_bi = 0
+                    for idx, (kind, mv0, mv1) in enumerate(ops):
+                        for mv in (mv0, mv1):
+                            if mv and (mv[0] or mv[1]):
+                                raise NotImplementedError(
+                                    "moving B macroblocks need "
+                                    "pixel-plane interpolation "
+                                    "(MB-sum walker; the B pixel tier "
+                                    "is decode_h264_bpixel)"
+                                )
+                        if kind == "l0":
+                            new[idx] = l0[idx]
+                            n_l0 += 1
+                        elif kind == "l1":
+                            new[idx] = l1[idx]
+                            n_l1 += 1
+                        else:
+                            # 8.4.2.3.2 default bi-prediction
+                            new[idx] = (l0[idx] + l1[idx] + 1) >> 1
+                            n_bi += 1
+                    rows.append(
+                        ("B", sum(new) // n_mbs, n_l0, n_l1, n_bi)
+                    )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if len(rows) < 3:
+            raise ValueError(f"doc {doc_id}: incomplete B GOP")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "mean_luma",
-            "n_l0", "n_l1", "n_bi",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_BFRAME_SCHEMA
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_WEIGHTED_SCHEMA = (
@@ -9486,7 +7893,8 @@ H264_WEIGHTED_SCHEMA = (
 )
 
 
-def decode_h264_weighted(media_df: DataFrame) -> DataFrame:
+@decoder(H264_WEIGHTED_SCHEMA)
+def decode_h264_weighted():
     """EXPLICIT WEIGHTED PREDICTION + SPATIAL DIRECT H.264 decode:
     the PPS raises weighted_pred_flag / weighted_bipred_idc 1, so
     every P and B slice carries a pred_weight_table (7.3.3.2 — both
@@ -9503,253 +7911,183 @@ def decode_h264_weighted(media_df: DataFrame) -> DataFrame:
     Emits per picture: frame type, exact luma value sum, and
     skip/direct/explicit macroblock counts."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []
-            # reference pictures: (poc, per-MB luma values, motion)
-            refs: list = []
-            expect_fn = 1
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                nal_ref = (unit[0] >> 5) & 3
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs,
-                        sps["poc_lsb_bits"],
-                    )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR"
-                        )
-                    vals = [v // 256 for v in mb_sums]
-                    refs = [(0, vals, [(-1, (0, 0))] * n_mbs)]
-                    expect_fn = 1
-                    rows.append(("I", sum(vals), 0, 0, 0))
-                elif nal_type == 1:
-                    if not refs or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: inter slice with no "
-                            "reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    n_mbs = mb_w * mb_h
-                    rr = _H264BitReader(rbsp, doc_id)
-                    rr.ue()
-                    stype = rr.ue() % 5
-                    fn_wrap = 1 << sps["frame_num_bits"]
-                    if stype == 0:  # weighted P
-                        fn, poc, active, mods, ops, wt = (
-                            _parse_p_inter_slice(
-                                doc_id, rbsp, sps["frame_num_bits"],
-                                mb_w, mb_h, sps["poc_lsb_bits"],
-                                weighted=True,
-                            )
-                        )
-                        if active != 1 or mods:
-                            raise NotImplementedError(
-                                "multi-ref weighted P not implemented"
-                            )
-                        if fn != expect_fn % fn_wrap:
-                            raise ValueError(
-                                f"doc {doc_id}: frame_num {fn} != "
-                                f"{expect_fn % fn_wrap}"
-                            )
-                        w0, o0 = wt["l0"][0]
-                        d = wt["denom"]
-                        src = refs[-1][1]  # L0[0]: newest reference
-                        vals = [0] * n_mbs
-                        motion = [None] * n_mbs
-                        n_skip = n_exp = 0
-                        for idx, op in enumerate(ops):
-                            if op[0] == "pcm":
-                                vals[idx] = op[1] // 256
-                                motion[idx] = (-1, (0, 0))
-                                continue
-                            mvx, mvy = op[1]
-                            if mvx or mvy:
-                                raise NotImplementedError(
-                                    "moving weighted macroblocks "
-                                    "not implemented"
-                                )
-                            vals[idx] = h264_weight_uni(
-                                src[idx], w0, o0, d
-                            )
-                            motion[idx] = (0, (0, 0))
-                            if op[0] == "skip":
-                                n_skip += 1
-                            else:
-                                n_exp += 1
-                        if nal_ref:
-                            refs.append((poc, vals, motion))
-                            expect_fn += 1
-                        rows.append(
-                            ("P", sum(vals), n_skip, 0, n_exp)
-                        )
-                    else:  # weighted B with spatial direct
-                        if nal_ref:
-                            raise NotImplementedError(
-                                "reference B pictures not implemented"
-                            )
-
-                        def get_col(poc: int):
-                            future = [
-                                t for t in refs if t[0] > poc
-                            ]
-                            if not future:
-                                return None
-                            col = min(future, key=lambda t: t[0])
-                            return True, col[2]  # short-term
-
-                        fn, poc, ops, wt = _parse_b_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            sps["poc_lsb_bits"], mb_w, mb_h,
-                            weighted=True, get_col=get_col,
-                        )
-                        if fn != expect_fn % fn_wrap:
-                            raise ValueError(
-                                f"doc {doc_id}: B frame_num {fn} != "
-                                f"{expect_fn % fn_wrap}"
-                            )
-                        past = [t for t in refs if t[0] < poc]
-                        future = [t for t in refs if t[0] > poc]
-                        if not past or not future:
-                            raise ValueError(
-                                f"doc {doc_id}: B lacks a reference "
-                                "on each side"
-                            )
-                        l0 = max(past, key=lambda t: t[0])[1]
-                        l1 = min(future, key=lambda t: t[0])[1]
-                        wl0, ol0 = wt["l0"][0]
-                        wl1, ol1 = wt["l1"][0]
-                        d = wt["denom"]
-                        vals = [0] * n_mbs
-                        n_skip = n_direct = n_exp = 0
-                        for idx, (kind, mv0, mv1) in enumerate(ops):
-                            for mv in (mv0, mv1):
-                                if mv and (mv[0] or mv[1]):
-                                    raise NotImplementedError(
-                                        "moving weighted B "
-                                        "macroblocks not implemented"
-                                    )
-                            if mv0 is not None and mv1 is not None:
-                                vals[idx] = h264_weight_bi(
-                                    l0[idx], l1[idx],
-                                    wl0, ol0, wl1, ol1, d,
-                                )
-                            elif mv0 is not None:
-                                vals[idx] = h264_weight_uni(
-                                    l0[idx], wl0, ol0, d
-                                )
-                            elif mv1 is not None:
-                                vals[idx] = h264_weight_uni(
-                                    l1[idx], wl1, ol1, d
-                                )
-                            else:
-                                raise ValueError(
-                                    f"doc {doc_id}: B macroblock "
-                                    "uses no list"
-                                )
-                            if kind == "skip":
-                                n_skip += 1
-                            elif kind == "direct":
-                                n_direct += 1
-                            else:
-                                n_exp += 1
-                        rows.append(
-                            ("B", sum(vals), n_skip, n_direct, n_exp)
-                        )
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []
+        # reference pictures: (poc, per-MB luma values, motion)
+        refs: list = []
+        expect_fn = 1
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            nal_ref = (unit[0] >> 5) & 3
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if len(rows) < 4:
-                raise ValueError(
-                    f"doc {doc_id}: incomplete weighted GOP"
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs,
+                    sps["poc_lsb_bits"],
                 )
-            return rows
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR"
+                    )
+                vals = [v // 256 for v in mb_sums]
+                refs = [(0, vals, [(-1, (0, 0))] * n_mbs)]
+                expect_fn = 1
+                rows.append(("I", sum(vals), 0, 0, 0))
+            elif nal_type == 1:
+                if not refs or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: inter slice with no "
+                        "reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                n_mbs = mb_w * mb_h
+                rr = _H264BitReader(rbsp, doc_id)
+                rr.ue()
+                stype = rr.ue() % 5
+                fn_wrap = 1 << sps["frame_num_bits"]
+                if stype == 0:  # weighted P
+                    fn, poc, active, mods, ops, wt = (
+                        _parse_p_inter_slice(
+                            doc_id, rbsp, sps["frame_num_bits"],
+                            mb_w, mb_h, sps["poc_lsb_bits"],
+                            weighted=True,
+                        )
+                    )
+                    if active != 1 or mods:
+                        raise NotImplementedError(
+                            "multi-ref weighted P not implemented"
+                        )
+                    if fn != expect_fn % fn_wrap:
+                        raise ValueError(
+                            f"doc {doc_id}: frame_num {fn} != "
+                            f"{expect_fn % fn_wrap}"
+                        )
+                    w0, o0 = wt["l0"][0]
+                    d = wt["denom"]
+                    src = refs[-1][1]  # L0[0]: newest reference
+                    vals = [0] * n_mbs
+                    motion = [None] * n_mbs
+                    n_skip = n_exp = 0
+                    for idx, op in enumerate(ops):
+                        if op[0] == "pcm":
+                            vals[idx] = op[1] // 256
+                            motion[idx] = (-1, (0, 0))
+                            continue
+                        mvx, mvy = op[1]
+                        if mvx or mvy:
+                            raise NotImplementedError(
+                                "moving weighted macroblocks "
+                                "not implemented"
+                            )
+                        vals[idx] = h264_weight_uni(
+                            src[idx], w0, o0, d
+                        )
+                        motion[idx] = (0, (0, 0))
+                        if op[0] == "skip":
+                            n_skip += 1
+                        else:
+                            n_exp += 1
+                    if nal_ref:
+                        refs.append((poc, vals, motion))
+                        expect_fn += 1
+                    rows.append(
+                        ("P", sum(vals), n_skip, 0, n_exp)
+                    )
+                else:  # weighted B with spatial direct
+                    if nal_ref:
+                        raise NotImplementedError(
+                            "reference B pictures not implemented"
+                        )
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "n_skip", "n_direct", "n_explicit",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
+                    def get_col(poc: int):
+                        future = [
+                            t for t in refs if t[0] > poc
+                        ]
+                        if not future:
+                            return None
+                        col = min(future, key=lambda t: t[0])
+                        return True, col[2]  # short-term
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_WEIGHTED_SCHEMA
-    )
-
-
-def synthesize_h264_weighted(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the weighted/direct GOP
-    (``make_h264_weighted_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_weighted_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_weighted_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
+                    fn, poc, ops, wt = _parse_b_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        sps["poc_lsb_bits"], mb_w, mb_h,
+                        weighted=True, get_col=get_col,
+                    )
+                    if fn != expect_fn % fn_wrap:
+                        raise ValueError(
+                            f"doc {doc_id}: B frame_num {fn} != "
+                            f"{expect_fn % fn_wrap}"
+                        )
+                    past = [t for t in refs if t[0] < poc]
+                    future = [t for t in refs if t[0] > poc]
+                    if not past or not future:
+                        raise ValueError(
+                            f"doc {doc_id}: B lacks a reference "
+                            "on each side"
+                        )
+                    l0 = max(past, key=lambda t: t[0])[1]
+                    l1 = min(future, key=lambda t: t[0])[1]
+                    wl0, ol0 = wt["l0"][0]
+                    wl1, ol1 = wt["l1"][0]
+                    d = wt["denom"]
+                    vals = [0] * n_mbs
+                    n_skip = n_direct = n_exp = 0
+                    for idx, (kind, mv0, mv1) in enumerate(ops):
+                        for mv in (mv0, mv1):
+                            if mv and (mv[0] or mv[1]):
+                                raise NotImplementedError(
+                                    "moving weighted B "
+                                    "macroblocks not implemented"
+                                )
+                        if mv0 is not None and mv1 is not None:
+                            vals[idx] = h264_weight_bi(
+                                l0[idx], l1[idx],
+                                wl0, ol0, wl1, ol1, d,
+                            )
+                        elif mv0 is not None:
+                            vals[idx] = h264_weight_uni(
+                                l0[idx], wl0, ol0, d
+                            )
+                        elif mv1 is not None:
+                            vals[idx] = h264_weight_uni(
+                                l1[idx], wl1, ol1, d
+                            )
+                        else:
+                            raise ValueError(
+                                f"doc {doc_id}: B macroblock "
+                                "uses no list"
+                            )
+                        if kind == "skip":
+                            n_skip += 1
+                        elif kind == "direct":
+                            n_direct += 1
+                        else:
+                            n_exp += 1
+                    rows.append(
+                        ("B", sum(vals), n_skip, n_direct, n_exp)
+                    )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if len(rows) < 4:
+            raise ValueError(
+                f"doc {doc_id}: incomplete weighted GOP"
             )
+        return rows
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_h264_bframe(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the B-slice GOP
-    (``make_h264_bframe_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_bframe_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_bframe_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_MULTIREF_SCHEMA = (
@@ -9758,7 +8096,8 @@ H264_MULTIREF_SCHEMA = (
 )
 
 
-def decode_h264_multiref(media_df: DataFrame) -> DataFrame:
+@decoder(H264_MULTIREF_SCHEMA)
+def decode_h264_multiref():
     """MULTI-REFERENCE H.264 decode (ITU-T H.264 8.2.4): a sliding-
     window DPB of max_num_ref_frames decoded pictures, the default P
     reference list in descending PicNum order, te(v)-coded
@@ -9771,204 +8110,135 @@ def decode_h264_multiref(media_df: DataFrame) -> DataFrame:
     Long-term references, B slices, and sub-16x16 partitions stay
     declared boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []
-            dpb: list = []  # (frame_num, per-MB luma sums), newest first
-            expect_frame = 1
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
-                    )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR in multiref "
-                            "fixture"
-                        )
-                    dpb = [(0, list(mb_sums))]
-                    rows.append(
-                        ("I", sum(mb_sums) // (256 * n_mbs), 0, 0, 0, 0)
-                    )
-                    expect_frame = 1
-                elif nal_type == 1:
-                    if not dpb or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, _poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h,
-                        )
-                    )
-                    fn_wrap = 1 << sps["frame_num_bits"]
-                    if frame_num != expect_frame % fn_wrap:
-                        raise ValueError(
-                            f"doc {doc_id}: frame_num {frame_num} != "
-                            f"expected {expect_frame % fn_wrap}"
-                        )
-                    if active > len(dpb):
-                        raise ValueError(
-                            f"doc {doc_id}: {active} active refs with "
-                            f"only {len(dpb)} decoded pictures"
-                        )
-                    # 8.2.4.3.1: modifications move the named PicNum
-                    # to the front, shifting the rest; picNumPred
-                    # starts at CurrPicNum with MaxPicNum wrapping
-                    ref_list = list(dpb)
-                    max_pic = 1 << sps["frame_num_bits"]
-                    pic_num_pred = frame_num
-                    for at, (idc, abs_diff) in enumerate(mods):
-                        if idc == 0:
-                            pic_num = pic_num_pred - abs_diff
-                            if pic_num < 0:
-                                pic_num += max_pic
-                        else:
-                            pic_num = pic_num_pred + abs_diff
-                            if pic_num >= max_pic:
-                                pic_num -= max_pic
-                        hits = [
-                            j for j, (fn, _p) in enumerate(ref_list)
-                            if fn == pic_num
-                        ]
-                        if not hits:
-                            raise ValueError(
-                                f"doc {doc_id}: modification names "
-                                f"PicNum {pic_num} not in the DPB"
-                            )
-                        ref_list.insert(at, ref_list.pop(hits[0]))
-                        pic_num_pred = pic_num
-                    new = [0] * n_mbs
-                    n_skip = n_inter = ref_sum = 0
-                    for idx, op in enumerate(ops):
-                        kind = op[0]
-                        if kind == "pcm":
-                            new[idx] = op[1]
-                            continue
-                        mvx, mvy = op[1]
-                        ref = op[2] if kind == "inter" else 0
-                        if mvx % 64 or mvy % 64:
-                            raise NotImplementedError(
-                                "sub-macroblock motion needs pixel-"
-                                "plane reference state (MB-sum walker; "
-                                "decode_h264_fracpel is the pixel tier)"
-                            )
-                        row_, col = idx // mb_w, idx % mb_w
-                        sr = row_ + mvy // 64
-                        sc = col + mvx // 64
-                        if not (0 <= sr < mb_h and 0 <= sc < mb_w):
-                            raise NotImplementedError(
-                                "motion past the picture edge needs "
-                                "8.4.2.2.1 clipping (declared "
-                                "boundary)"
-                            )
-                        new[idx] = ref_list[ref][1][sr * mb_w + sc]
-                        if kind == "inter":
-                            n_inter += 1
-                            ref_sum += ref
-                        else:
-                            n_skip += 1
-                    # sliding-window marking: newest first, trimmed
-                    # to the SPS bound
-                    dpb.insert(0, (frame_num, new))
-                    del dpb[max(sps["max_num_ref_frames"], 1):]
-                    expect_frame += 1
-                    rows.append(
-                        ("P", sum(new) // (256 * n_mbs), n_skip,
-                         n_inter, ref_sum, len(mods))
-                    )
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []
+        dpb: list = []  # (frame_num, per-MB luma sums), newest first
+        expect_frame = 1
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR in multiref "
+                        "fixture"
+                    )
+                dpb = [(0, list(mb_sums))]
+                rows.append(
+                    ("I", sum(mb_sums) // (256 * n_mbs), 0, 0, 0, 0)
+                )
+                expect_frame = 1
+            elif nal_type == 1:
+                if not dpb or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, _poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h,
+                    )
+                )
+                fn_wrap = 1 << sps["frame_num_bits"]
+                if frame_num != expect_frame % fn_wrap:
+                    raise ValueError(
+                        f"doc {doc_id}: frame_num {frame_num} != "
+                        f"expected {expect_frame % fn_wrap}"
+                    )
+                if active > len(dpb):
+                    raise ValueError(
+                        f"doc {doc_id}: {active} active refs with "
+                        f"only {len(dpb)} decoded pictures"
+                    )
+                # 8.2.4.3.1: modifications move the named PicNum
+                # to the front, shifting the rest; picNumPred
+                # starts at CurrPicNum with MaxPicNum wrapping
+                ref_list = list(dpb)
+                max_pic = 1 << sps["frame_num_bits"]
+                pic_num_pred = frame_num
+                for at, (idc, abs_diff) in enumerate(mods):
+                    if idc == 0:
+                        pic_num = pic_num_pred - abs_diff
+                        if pic_num < 0:
+                            pic_num += max_pic
+                    else:
+                        pic_num = pic_num_pred + abs_diff
+                        if pic_num >= max_pic:
+                            pic_num -= max_pic
+                    hits = [
+                        j for j, (fn, _p) in enumerate(ref_list)
+                        if fn == pic_num
+                    ]
+                    if not hits:
+                        raise ValueError(
+                            f"doc {doc_id}: modification names "
+                            f"PicNum {pic_num} not in the DPB"
+                        )
+                    ref_list.insert(at, ref_list.pop(hits[0]))
+                    pic_num_pred = pic_num
+                new = [0] * n_mbs
+                n_skip = n_inter = ref_sum = 0
+                for idx, op in enumerate(ops):
+                    kind = op[0]
+                    if kind == "pcm":
+                        new[idx] = op[1]
+                        continue
+                    mvx, mvy = op[1]
+                    ref = op[2] if kind == "inter" else 0
+                    if mvx % 64 or mvy % 64:
+                        raise NotImplementedError(
+                            "sub-macroblock motion needs pixel-"
+                            "plane reference state (MB-sum walker; "
+                            "decode_h264_fracpel is the pixel tier)"
+                        )
+                    row_, col = idx // mb_w, idx % mb_w
+                    sr = row_ + mvy // 64
+                    sc = col + mvx // 64
+                    if not (0 <= sr < mb_h and 0 <= sc < mb_w):
+                        raise NotImplementedError(
+                            "motion past the picture edge needs "
+                            "8.4.2.2.1 clipping (declared "
+                            "boundary)"
+                        )
+                    new[idx] = ref_list[ref][1][sr * mb_w + sc]
+                    if kind == "inter":
+                        n_inter += 1
+                        ref_sum += ref
+                    else:
+                        n_skip += 1
+                # sliding-window marking: newest first, trimmed
+                # to the SPS bound
+                dpb.insert(0, (frame_num, new))
+                del dpb[max(sps["max_num_ref_frames"], 1):]
+                expect_frame += 1
+                rows.append(
+                    ("P", sum(new) // (256 * n_mbs), n_skip,
+                     n_inter, ref_sum, len(mods))
+                )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "mean_luma",
-            "n_skip", "n_inter", "sum_ref_idx", "n_list_mods",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_MULTIREF_SCHEMA
-    )
-
-
-def synthesize_h264_multiref(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying the multi-reference H.264 GOP
-    (``make_h264_multiref_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_multiref_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_multiref_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def synthesize_h264_inter(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media rows carrying a motion-compensated H.264 GOP."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_inter_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_inter_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 def _h264_qmvp(
@@ -10174,7 +8444,8 @@ H264_P8X8_SCHEMA = (
 )
 
 
-def decode_h264_p8x8(media_df: DataFrame) -> DataFrame:
+@decoder(H264_P8X8_SCHEMA)
+def decode_h264_p8x8():
     """SUB-MACROBLOCK H.264 decode: P_8x8 macroblocks carry four
     independent 8x8 motion vectors (sub_mb_type P_L0_8x8), each
     predicted from its true PARTITION neighbors by the 8.4.1.3
@@ -10192,172 +8463,123 @@ def decode_h264_p8x8(media_df: DataFrame) -> DataFrame:
     both decode for real in the pixel tier (decode_h264_submb with
     full Table 7-17 shapes and fractional per-partition MVs)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            qvals = None  # quadrant-granular flat luma state
-            rows = []
-            expect_frame = 1
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    n_mbs = mb_w * mb_h
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        qvals = None  # quadrant-granular flat luma state
+        rows = []
+        expect_frame = 1
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR in p8x8 fixture"
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                n_mbs = mb_w * mb_h
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR in p8x8 fixture"
+                    )
+                qw, qh = 2 * mb_w, 2 * mb_h
+                qvals = [[0] * qw for _ in range(qh)]
+                for idx, s in enumerate(mb_sums):
+                    v = s // 256
+                    mr, mc = idx // mb_w, idx % mb_w
+                    for i in range(4):
+                        qvals[2 * mr + i // 2][2 * mc + i % 2] = v
+                rows.append(
+                    ("I", sum(mb_sums) // (256 * n_mbs), 0, 0, 0, 0)
+                )
+                expect_frame = 1
+            elif nal_type == 1:
+                if qvals is None or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                qw, qh = 2 * mb_w, 2 * mb_h
+                frame_num, ops = _parse_p8x8_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], mb_w, mb_h
+                )
+                fn_wrap = 1 << sps["frame_num_bits"]
+                if frame_num != expect_frame % fn_wrap:
+                    raise ValueError(
+                        f"doc {doc_id}: frame_num {frame_num} != "
+                        f"expected {expect_frame % fn_wrap}"
+                    )
+                expect_frame += 1
+                new = [[0] * qw for _ in range(qh)]
+                n_skip = n_16 = n_8 = mv_sum = 0
+
+                def fetch(qr2, qc2, mvx, mvy):
+                    if mvx % 32 or mvy % 32:
+                        raise NotImplementedError(
+                            "sub-quadrant motion needs pixel-"
+                            "plane interpolation (quadrant-sum "
+                            "walker; decode_h264_fracpel is the "
+                            "pixel tier)"
                         )
-                    qw, qh = 2 * mb_w, 2 * mb_h
-                    qvals = [[0] * qw for _ in range(qh)]
-                    for idx, s in enumerate(mb_sums):
-                        v = s // 256
-                        mr, mc = idx // mb_w, idx % mb_w
+                    sr, sc = qr2 + mvy // 32, qc2 + mvx // 32
+                    if not (0 <= sr < qh and 0 <= sc < qw):
+                        raise NotImplementedError(
+                            "motion past the picture edge needs "
+                            "8.4.2.2.1 reference clipping "
+                            "(declared boundary)"
+                        )
+                    return qvals[sr][sc]
+
+                for idx, op in enumerate(ops):
+                    mr, mc = idx // mb_w, idx % mb_w
+                    kind = op[0]
+                    if kind == "pcm":
+                        v = op[1] // 256
                         for i in range(4):
-                            qvals[2 * mr + i // 2][2 * mc + i % 2] = v
-                    rows.append(
-                        ("I", sum(mb_sums) // (256 * n_mbs), 0, 0, 0, 0)
-                    )
-                    expect_frame = 1
-                elif nal_type == 1:
-                    if qvals is None or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    qw, qh = 2 * mb_w, 2 * mb_h
-                    frame_num, ops = _parse_p8x8_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], mb_w, mb_h
-                    )
-                    fn_wrap = 1 << sps["frame_num_bits"]
-                    if frame_num != expect_frame % fn_wrap:
-                        raise ValueError(
-                            f"doc {doc_id}: frame_num {frame_num} != "
-                            f"expected {expect_frame % fn_wrap}"
-                        )
-                    expect_frame += 1
-                    new = [[0] * qw for _ in range(qh)]
-                    n_skip = n_16 = n_8 = mv_sum = 0
-
-                    def fetch(qr2, qc2, mvx, mvy):
-                        if mvx % 32 or mvy % 32:
-                            raise NotImplementedError(
-                                "sub-quadrant motion needs pixel-"
-                                "plane interpolation (quadrant-sum "
-                                "walker; decode_h264_fracpel is the "
-                                "pixel tier)"
-                            )
-                        sr, sc = qr2 + mvy // 32, qc2 + mvx // 32
-                        if not (0 <= sr < qh and 0 <= sc < qw):
-                            raise NotImplementedError(
-                                "motion past the picture edge needs "
-                                "8.4.2.2.1 reference clipping "
-                                "(declared boundary)"
-                            )
-                        return qvals[sr][sc]
-
-                    for idx, op in enumerate(ops):
-                        mr, mc = idx // mb_w, idx % mb_w
-                        kind = op[0]
-                        if kind == "pcm":
-                            v = op[1] // 256
-                            for i in range(4):
-                                new[2 * mr + i // 2][2 * mc + i % 2] = v
-                            continue
-                        if kind == "p8x8":
-                            n_8 += 1
-                            for i, (mvx, mvy) in enumerate(op[1]):
-                                qr2 = 2 * mr + i // 2
-                                qc2 = 2 * mc + i % 2
-                                new[qr2][qc2] = fetch(qr2, qc2, mvx, mvy)
-                                mv_sum += abs(mvx) + abs(mvy)
-                            continue
-                        mvx, mvy = op[1]
-                        if kind == "skip":
-                            n_skip += 1
-                        else:
-                            n_16 += 1
-                        mv_sum += abs(mvx) + abs(mvy)
-                        for i in range(4):
+                            new[2 * mr + i // 2][2 * mc + i % 2] = v
+                        continue
+                    if kind == "p8x8":
+                        n_8 += 1
+                        for i, (mvx, mvy) in enumerate(op[1]):
                             qr2 = 2 * mr + i // 2
                             qc2 = 2 * mc + i % 2
                             new[qr2][qc2] = fetch(qr2, qc2, mvx, mvy)
-                    qvals = new
-                    total = sum(sum(row_) for row_ in qvals)
-                    rows.append(
-                        ("P", total // (4 * n_mbs), n_skip, n_16, n_8,
-                         mv_sum)
-                    )
-                elif nal_type not in (7, 8):
-                    raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
-                    )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                            mv_sum += abs(mvx) + abs(mvy)
+                        continue
+                    mvx, mvy = op[1]
+                    if kind == "skip":
+                        n_skip += 1
+                    else:
+                        n_16 += 1
+                    mv_sum += abs(mvx) + abs(mvy)
+                    for i in range(4):
+                        qr2 = 2 * mr + i // 2
+                        qc2 = 2 * mc + i % 2
+                        new[qr2][qc2] = fetch(qr2, qc2, mvx, mvy)
+                qvals = new
+                total = sum(sum(row_) for row_ in qvals)
+                rows.append(
+                    ("P", total // (4 * n_mbs), n_skip, n_16, n_8,
+                     mv_sum)
+                )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "frame_idx": [], "frame_type": [],
-                "mean_luma": [], "n_skip": [], "n_16x16": [],
-                "n_8x8": [], "sum_abs_mv": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, (ft, ml, ns, n16, n8, mv) in enumerate(
-                    walk(int(doc_id), bytes(payload))
-                ):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(fi)
-                    out["frame_type"].append(ft)
-                    out["mean_luma"].append(ml)
-                    out["n_skip"].append(ns)
-                    out["n_16x16"].append(n16)
-                    out["n_8x8"].append(n8)
-                    out["sum_abs_mv"].append(mv)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, H264_P8X8_SCHEMA)
-
-
-def synthesize_h264_p8x8(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose P
-    pictures carry P_8x8 sub-macroblock motion
-    (``make_h264_p8x8_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_p8x8_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_p8x8_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_TDIRECT_SCHEMA = (
@@ -10366,7 +8588,8 @@ H264_TDIRECT_SCHEMA = (
 )
 
 
-def decode_h264_tdirect(media_df: DataFrame) -> DataFrame:
+@decoder(H264_TDIRECT_SCHEMA)
+def decode_h264_tdirect():
     """TEMPORAL-DIRECT H.264 B decode (ITU-T H.264 8.4.1.2.3): the B
     picture's skip/direct macroblocks carry NO motion bits — the
     decoder fetches the co-located macroblock's motion from L1[0]
@@ -10383,225 +8606,176 @@ def decode_h264_tdirect(media_df: DataFrame) -> DataFrame:
     frame-coded short-term references; long-term references and
     negative td stay declared boundaries."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            rows = []
-            refs = []  # (poc, values, motion) of reference pictures
-            for unit in h264_split_nals(doc_id, raw):
-                nal_type = unit[0] & 0x1F
-                nal_ref = (unit[0] >> 5) & 3
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                    if sps["poc_type"] != 0:
-                        raise ValueError(
-                            f"doc {doc_id}: tdirect stream needs POC "
-                            "type 0"
-                        )
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
-                    _pid, first_mb, mb_sums = _parse_ipcm_slice(
-                        doc_id, rbsp, sps["frame_num_bits"], n_mbs,
-                        sps["poc_lsb_bits"],
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        rows = []
+        refs = []  # (poc, values, motion) of reference pictures
+        for unit in h264_split_nals(doc_id, raw):
+            nal_type = unit[0] & 0x1F
+            nal_ref = (unit[0] >> 5) & 3
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+                if sps["poc_type"] != 0:
+                    raise ValueError(
+                        f"doc {doc_id}: tdirect stream needs POC "
+                        "type 0"
                     )
-                    if first_mb != 0 or len(mb_sums) != n_mbs:
-                        raise ValueError(
-                            f"doc {doc_id}: partial IDR in tdirect "
-                            "fixture"
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: slice before parameter sets"
+                    )
+                n_mbs = (sps["width"] // 16) * (sps["height"] // 16)
+                _pid, first_mb, mb_sums = _parse_ipcm_slice(
+                    doc_id, rbsp, sps["frame_num_bits"], n_mbs,
+                    sps["poc_lsb_bits"],
+                )
+                if first_mb != 0 or len(mb_sums) != n_mbs:
+                    raise ValueError(
+                        f"doc {doc_id}: partial IDR in tdirect "
+                        "fixture"
+                    )
+                vals = [s // 256 for s in mb_sums]
+                refs = [(0, vals, [(-1, (0, 0))] * n_mbs)]
+                rows.append(("I", sum(vals) // n_mbs, 0, 0, 0, 0))
+            elif nal_type == 1:
+                if not refs or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: inter slice with no "
+                        "reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                n_mbs = mb_w * mb_h
+                rr = _H264BitReader(rbsp, doc_id)
+                rr.ue()
+                stype = rr.ue() % 5
+                if stype == 0:  # the co-located P reference
+                    _fn, poc, active, mods, ops, _wt = (
+                        _parse_p_inter_slice(
+                            doc_id, rbsp, sps["frame_num_bits"],
+                            mb_w, mb_h, sps["poc_lsb_bits"],
                         )
-                    vals = [s // 256 for s in mb_sums]
-                    refs = [(0, vals, [(-1, (0, 0))] * n_mbs)]
-                    rows.append(("I", sum(vals) // n_mbs, 0, 0, 0, 0))
-                elif nal_type == 1:
-                    if not refs or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: inter slice with no "
-                            "reference"
+                    )
+                    if active != 1 or mods:
+                        raise NotImplementedError(
+                            "multi-ref P inside the tdirect "
+                            "fixture not implemented"
                         )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    n_mbs = mb_w * mb_h
-                    rr = _H264BitReader(rbsp, doc_id)
-                    rr.ue()
-                    stype = rr.ue() % 5
-                    if stype == 0:  # the co-located P reference
-                        _fn, poc, active, mods, ops, _wt = (
-                            _parse_p_inter_slice(
-                                doc_id, rbsp, sps["frame_num_bits"],
-                                mb_w, mb_h, sps["poc_lsb_bits"],
-                            )
-                        )
-                        if active != 1 or mods:
+                    src = refs[-1][1]
+                    new = [0] * n_mbs
+                    motion = [(-1, (0, 0))] * n_mbs
+                    mv_sum = 0
+                    for idx, op in enumerate(ops):
+                        if op[0] == "pcm":
+                            new[idx] = op[1] // 256
+                            continue
+                        mvx, mvy = op[1]
+                        if mvx % 64 or mvy % 64:
                             raise NotImplementedError(
-                                "multi-ref P inside the tdirect "
-                                "fixture not implemented"
+                                "sub-macroblock motion in the "
+                                "tdirect P layer not implemented"
                             )
-                        src = refs[-1][1]
-                        new = [0] * n_mbs
-                        motion = [(-1, (0, 0))] * n_mbs
-                        mv_sum = 0
-                        for idx, op in enumerate(ops):
-                            if op[0] == "pcm":
-                                new[idx] = op[1] // 256
-                                continue
-                            mvx, mvy = op[1]
+                        row_, col_ = idx // mb_w, idx % mb_w
+                        sr = row_ + mvy // 64
+                        sc = col_ + mvx // 64
+                        if not (0 <= sr < mb_h and 0 <= sc < mb_w):
+                            raise NotImplementedError(
+                                "motion past the picture edge "
+                                "(declared boundary)"
+                            )
+                        new[idx] = src[sr * mb_w + sc]
+                        motion[idx] = (0, (mvx, mvy))
+                        mv_sum += abs(mvx) + abs(mvy)
+                    if not nal_ref:
+                        raise ValueError(
+                            f"doc {doc_id}: non-reference P in "
+                            "tdirect fixture"
+                        )
+                    refs.append((poc, new, motion))
+                    refs.sort(key=lambda t: t[0])
+                    rows.append(
+                        ("P", sum(new) // n_mbs, 0, 0, mv_sum, 0)
+                    )
+                else:  # the temporal-direct B picture
+                    if nal_ref:
+                        raise ValueError(
+                            f"doc {doc_id}: reference B not "
+                            "supported here"
+                        )
+                    # peek the POC to build the lists
+                    rr2 = _H264BitReader(rbsp, doc_id)
+                    rr2.ue(); rr2.ue(); rr2.ue()
+                    rr2.u(sps["frame_num_bits"])
+                    poc_b = rr2.u(sps["poc_lsb_bits"])
+                    past = [t for t in refs if t[0] < poc_b]
+                    future = [t for t in refs if t[0] > poc_b]
+                    if not past or not future:
+                        raise ValueError(
+                            f"doc {doc_id}: B needs references "
+                            "on both POC sides"
+                        )
+                    l0 = past[-1]
+                    l1 = future[0]
+                    _fn, _poc, ops, _wt = _parse_b_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        sps["poc_lsb_bits"], mb_w, mb_h,
+                        get_col=lambda _poc2: (True, l1[2]),
+                        poc_l0l1=(l0[0], l1[0]),
+                    )
+                    new = [0] * n_mbs
+                    n_skip = n_direct = s_l0 = s_l1 = 0
+                    for idx, (kind, mv0, mv1) in enumerate(ops):
+                        if kind not in ("skip", "direct"):
+                            raise NotImplementedError(
+                                "explicit B macroblocks in the "
+                                "tdirect fixture not implemented"
+                            )
+                        preds = []
+                        for (mvx, mvy), ref_pic in (
+                            (mv0, l0), (mv1, l1),
+                        ):
                             if mvx % 64 or mvy % 64:
                                 raise NotImplementedError(
-                                    "sub-macroblock motion in the "
-                                    "tdirect P layer not implemented"
+                                    "sub-macroblock direct "
+                                    "motion (declared boundary)"
                                 )
                             row_, col_ = idx // mb_w, idx % mb_w
                             sr = row_ + mvy // 64
                             sc = col_ + mvx // 64
-                            if not (0 <= sr < mb_h and 0 <= sc < mb_w):
-                                raise NotImplementedError(
-                                    "motion past the picture edge "
-                                    "(declared boundary)"
-                                )
-                            new[idx] = src[sr * mb_w + sc]
-                            motion[idx] = (0, (mvx, mvy))
-                            mv_sum += abs(mvx) + abs(mvy)
-                        if not nal_ref:
-                            raise ValueError(
-                                f"doc {doc_id}: non-reference P in "
-                                "tdirect fixture"
-                            )
-                        refs.append((poc, new, motion))
-                        refs.sort(key=lambda t: t[0])
-                        rows.append(
-                            ("P", sum(new) // n_mbs, 0, 0, mv_sum, 0)
-                        )
-                    else:  # the temporal-direct B picture
-                        if nal_ref:
-                            raise ValueError(
-                                f"doc {doc_id}: reference B not "
-                                "supported here"
-                            )
-                        # peek the POC to build the lists
-                        rr2 = _H264BitReader(rbsp, doc_id)
-                        rr2.ue(); rr2.ue(); rr2.ue()
-                        rr2.u(sps["frame_num_bits"])
-                        poc_b = rr2.u(sps["poc_lsb_bits"])
-                        past = [t for t in refs if t[0] < poc_b]
-                        future = [t for t in refs if t[0] > poc_b]
-                        if not past or not future:
-                            raise ValueError(
-                                f"doc {doc_id}: B needs references "
-                                "on both POC sides"
-                            )
-                        l0 = past[-1]
-                        l1 = future[0]
-                        _fn, _poc, ops, _wt = _parse_b_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            sps["poc_lsb_bits"], mb_w, mb_h,
-                            get_col=lambda _poc2: (True, l1[2]),
-                            poc_l0l1=(l0[0], l1[0]),
-                        )
-                        new = [0] * n_mbs
-                        n_skip = n_direct = s_l0 = s_l1 = 0
-                        for idx, (kind, mv0, mv1) in enumerate(ops):
-                            if kind not in ("skip", "direct"):
-                                raise NotImplementedError(
-                                    "explicit B macroblocks in the "
-                                    "tdirect fixture not implemented"
-                                )
-                            preds = []
-                            for (mvx, mvy), ref_pic in (
-                                (mv0, l0), (mv1, l1),
+                            if not (
+                                0 <= sr < mb_h and 0 <= sc < mb_w
                             ):
-                                if mvx % 64 or mvy % 64:
-                                    raise NotImplementedError(
-                                        "sub-macroblock direct "
-                                        "motion (declared boundary)"
-                                    )
-                                row_, col_ = idx // mb_w, idx % mb_w
-                                sr = row_ + mvy // 64
-                                sc = col_ + mvx // 64
-                                if not (
-                                    0 <= sr < mb_h and 0 <= sc < mb_w
-                                ):
-                                    raise NotImplementedError(
-                                        "motion past the picture "
-                                        "edge (declared boundary)"
-                                    )
-                                preds.append(ref_pic[1][sr * mb_w + sc])
-                            new[idx] = (preds[0] + preds[1] + 1) >> 1
-                            s_l0 += abs(mv0[0]) + abs(mv0[1])
-                            s_l1 += abs(mv1[0]) + abs(mv1[1])
-                            if kind == "skip":
-                                n_skip += 1
-                            else:
-                                n_direct += 1
-                        rows.append(
-                            ("B", sum(new) // n_mbs, n_skip, n_direct,
-                             s_l0, s_l1)
-                        )
-                elif nal_type not in (7, 8):
-                    raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                                raise NotImplementedError(
+                                    "motion past the picture "
+                                    "edge (declared boundary)"
+                                )
+                            preds.append(ref_pic[1][sr * mb_w + sc])
+                        new[idx] = (preds[0] + preds[1] + 1) >> 1
+                        s_l0 += abs(mv0[0]) + abs(mv0[1])
+                        s_l1 += abs(mv1[0]) + abs(mv1[1])
+                        if kind == "skip":
+                            n_skip += 1
+                        else:
+                            n_direct += 1
+                    rows.append(
+                        ("B", sum(new) // n_mbs, n_skip, n_direct,
+                         s_l0, s_l1)
                     )
-            if len(rows) < 3:
+            elif nal_type not in (7, 8):
                 raise ValueError(
-                    f"doc {doc_id}: tdirect fixture needs I, P and B"
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
                 )
-            return rows
-
-        for pdf in batches:
-            out = {
-                "doc_id": [], "frame_idx": [], "frame_type": [],
-                "mean_luma": [], "n_skip": [], "n_direct": [],
-                "sum_mv_l0": [], "sum_mv_l1": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, (ft, ml, ns, nd, s0, s1) in enumerate(
-                    walk(int(doc_id), bytes(payload))
-                ):
-                    out["doc_id"].append(int(doc_id))
-                    out["frame_idx"].append(fi)
-                    out["frame_type"].append(ft)
-                    out["mean_luma"].append(ml)
-                    out["n_skip"].append(ns)
-                    out["n_direct"].append(nd)
-                    out["sum_mv_l0"].append(s0)
-                    out["sum_mv_l1"].append(s1)
-            yield pd.DataFrame(out)
-
-    return media_df.mapInPandas(kernel, H264_TDIRECT_SCHEMA)
-
-
-def synthesize_h264_tdirect(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose B picture
-    uses TEMPORAL direct prediction (``make_h264_tdirect_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_tdirect_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_tdirect_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
+        if len(rows) < 3:
+            raise ValueError(
+                f"doc {doc_id}: tdirect fixture needs I, P and B"
             )
+        return rows
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 def _parse_ipcm_slice_plane(
@@ -11146,7 +9320,8 @@ H264_SUBMB_SCHEMA = (
 )
 
 
-def decode_h264_submb(media_df: DataFrame) -> DataFrame:
+@decoder(H264_SUBMB_SCHEMA)
+def decode_h264_submb():
     """H.264 P-slice decode at FULL partition-tree granularity over a
     real pixel plane: P_8x8 macroblocks with all four Table 7-17
     sub-partition shapes (8x8 / 8x4 / 4x8 / 4x4), each partition
@@ -11158,149 +9333,104 @@ def decode_h264_submb(media_df: DataFrame) -> DataFrame:
     its boundary.  Emits one row per picture: luma sum, partition
     count and summed |MV| (quarter-pel)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            ref = None
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    ref = _parse_ipcm_slice_plane(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                    )
-                    rows.append(("I", int(ref.sum()), 0, 0))
-                elif nal_type == 1:
-                    if ref is None or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    frame_num, ops = _parse_submb_slice(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        mb_w, sps["height"] // 16,
-                    )
-                    if frame_num != 1:
-                        raise ValueError(
-                            f"doc {doc_id}: submb P expects frame_num "
-                            f"1, got {frame_num}"
-                        )
-                    import numpy as np
-
-                    # paint per-4x4-BLOCK motion maps from the partition
-                    # tree (every partition is 4-aligned), expand to
-                    # per-pixel with one repeat, then motion-compensate
-                    # the WHOLE plane in one vectorized pass
-                    # (partition-count-independent — the per-partition
-                    # kernel-call shape was 10x slower at 5k docs; the
-                    # block-grid paint is 16x fewer stores than the
-                    # per-pixel paint it replaces, same expanded maps)
-                    bh_, bw_ = ref.shape[0] // 4, ref.shape[1] // 4
-                    ixm = np.zeros((bh_, bw_), dtype=np.int64)
-                    iym = np.zeros((bh_, bw_), dtype=np.int64)
-                    fxm = np.zeros((bh_, bw_), dtype=np.int64)
-                    fym = np.zeros((bh_, bw_), dtype=np.int64)
-
-                    def paint(x0, y0, w_, h_, mvx, mvy):
-                        ys = slice(y0 >> 2, (y0 + h_) >> 2)
-                        xs = slice(x0 >> 2, (x0 + w_) >> 2)
-                        ixm[ys, xs] = mvx >> 2
-                        iym[ys, xs] = mvy >> 2
-                        fxm[ys, xs] = mvx & 3
-                        fym[ys, xs] = mvy & 3
-
-                    n_parts = mv_abs = 0
-                    for idx, op in enumerate(ops):
-                        my = (idx // mb_w) * 16
-                        mx = (idx % mb_w) * 16
-                        kind = op[0]
-                        if kind in ("skip", "mb"):
-                            mvx, mvy = op[1]
-                            paint(mx, my, 16, 16, mvx, mvy)
-                            mv_abs += abs(mvx) + abs(mvy)
-                        else:
-                            for dx4, dy4, w4, h4, (mvx, mvy) in op[1]:
-                                paint(
-                                    mx + 4 * dx4, my + 4 * dy4,
-                                    4 * w4, 4 * h4, mvx, mvy,
-                                )
-                                n_parts += 1
-                                mv_abs += abs(mvx) + abs(mvy)
-                    ref = _h264_fracpel_plane_mapped(
-                        ref,
-                        ixm.repeat(4, 0).repeat(4, 1),
-                        iym.repeat(4, 0).repeat(4, 1),
-                        fxm.repeat(4, 0).repeat(4, 1),
-                        fym.repeat(4, 0).repeat(4, 1),
-                    )
-                    rows.append(
-                        ("P", int(ref.sum()), n_parts, mv_abs)
-                    )
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        ref = None
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                ref = _parse_ipcm_slice_plane(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                )
+                rows.append(("I", int(ref.sum()), 0, 0))
+            elif nal_type == 1:
+                if ref is None or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                frame_num, ops = _parse_submb_slice(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    mb_w, sps["height"] // 16,
+                )
+                if frame_num != 1:
+                    raise ValueError(
+                        f"doc {doc_id}: submb P expects frame_num "
+                        f"1, got {frame_num}"
+                    )
+                import numpy as np
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "n_parts", "sum_abs_mv",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
+                # paint per-4x4-BLOCK motion maps from the partition
+                # tree (every partition is 4-aligned), expand to
+                # per-pixel with one repeat, then motion-compensate
+                # the WHOLE plane in one vectorized pass
+                # (partition-count-independent — the per-partition
+                # kernel-call shape was 10x slower at 5k docs; the
+                # block-grid paint is 16x fewer stores than the
+                # per-pixel paint it replaces, same expanded maps)
+                bh_, bw_ = ref.shape[0] // 4, ref.shape[1] // 4
+                ixm = np.zeros((bh_, bw_), dtype=np.int64)
+                iym = np.zeros((bh_, bw_), dtype=np.int64)
+                fxm = np.zeros((bh_, bw_), dtype=np.int64)
+                fym = np.zeros((bh_, bw_), dtype=np.int64)
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_SUBMB_SCHEMA
-    )
+                def paint(x0, y0, w_, h_, mvx, mvy):
+                    ys = slice(y0 >> 2, (y0 + h_) >> 2)
+                    xs = slice(x0 >> 2, (x0 + w_) >> 2)
+                    ixm[ys, xs] = mvx >> 2
+                    iym[ys, xs] = mvy >> 2
+                    fxm[ys, xs] = mvx & 3
+                    fym[ys, xs] = mvy & 3
 
+                n_parts = mv_abs = 0
+                for idx, op in enumerate(ops):
+                    my = (idx // mb_w) * 16
+                    mx = (idx % mb_w) * 16
+                    kind = op[0]
+                    if kind in ("skip", "mb"):
+                        mvx, mvy = op[1]
+                        paint(mx, my, 16, 16, mvx, mvy)
+                        mv_abs += abs(mvx) + abs(mvy)
+                    else:
+                        for dx4, dy4, w4, h4, (mvx, mvy) in op[1]:
+                            paint(
+                                mx + 4 * dx4, my + 4 * dy4,
+                                4 * w4, 4 * h4, mvx, mvy,
+                            )
+                            n_parts += 1
+                            mv_abs += abs(mvx) + abs(mvy)
+                ref = _h264_fracpel_plane_mapped(
+                    ref,
+                    ixm.repeat(4, 0).repeat(4, 1),
+                    iym.repeat(4, 0).repeat(4, 1),
+                    fxm.repeat(4, 0).repeat(4, 1),
+                    fym.repeat(4, 0).repeat(4, 1),
+                )
+                rows.append(
+                    ("P", int(ref.sum()), n_parts, mv_abs)
+                )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-def synthesize_h264_submb(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose P
-    pictures carry all four sub-macroblock partition shapes with
-    fractional MVs (``make_h264_submb_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_submb_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_submb_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_BPIXEL_SCHEMA = (
@@ -11309,7 +9439,8 @@ H264_BPIXEL_SCHEMA = (
 )
 
 
-def decode_h264_bpixel(media_df: DataFrame) -> DataFrame:
+@decoder(H264_BPIXEL_SCHEMA)
+def decode_h264_bpixel():
     """B-slice bi-prediction over REAL pixel planes with FRACTIONAL
     MVs (ITU-T H.264 8.4.2.1/8.4.2.3): decode order IDR(poc 0) ->
     P(poc 4, reference) -> B(poc 2, non-reference), lists built by
@@ -11321,179 +9452,138 @@ def decode_h264_bpixel(media_df: DataFrame) -> DataFrame:
     sum-state B walker declares as its boundary.  Weighted or
     multi-reference B streams belong to the other walkers."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def walk(doc_id: int, raw: bytes):
+        import numpy as np
 
-        def walk(doc_id: int, raw: bytes):
-            import numpy as np
-
-            sps = pps = None
-            refs: list = []  # (poc, plane), decode order
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                ref_idc = unit[0] >> 5
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    plane, poc = _parse_ipcm_slice_plane(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                        poc_bits=sps["poc_lsb_bits"],
-                    )
-                    refs = [(poc, plane)]
-                    rows.append(("I", int(plane.sum()), 0, 0, 0))
-                elif nal_type == 1 and ref_idc:
-                    # P reference picture with a uniform MV
-                    if not refs or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference P not implemented in "
-                            "the B-pixel walker"
-                        )
-                    mvs = [op[1] for op in ops if op[0] != "pcm"]
-                    if len(mvs) != len(ops) or len(set(mvs)) != 1:
-                        raise NotImplementedError(
-                            "the B-pixel walker's P reference must "
-                            "carry uniform inter motion (I_PCM "
-                            "refreshes belong to the sum-state "
-                            "walkers)"
-                        )
-                    src = refs[-1][1]
-                    plane = _h264_fracpel_block(
-                        src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
-                    )
-                    refs.append((poc, plane))
-                    rows.append(("P", int(plane.sum()), 0, 0, 0))
-                elif nal_type == 1:
-                    # non-reference B picture
-                    if len(refs) < 2 or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: B slice without two "
-                            "reference pictures"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, ops, _wt = _parse_b_slice(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["poc_lsb_bits"], mb_w, mb_h,
-                    )
-                    past = [r_ for r_ in refs if r_[0] < poc]
-                    futr = [r_ for r_ in refs if r_[0] > poc]
-                    if not past or not futr:
-                        raise ValueError(
-                            f"doc {doc_id}: B poc {poc} not between "
-                            "its references"
-                        )
-                    l0 = max(past)[1]
-                    l1 = min(futr)[1]
-                    n_l0 = n_l1 = n_bi = 0
-                    for kind, _mv0, _mv1 in ops:
-                        if kind in ("skip", "direct"):
-                            raise NotImplementedError(
-                                "B_Skip / B_Direct in the pixel "
-                                "walker not implemented (the "
-                                "bframe/tdirect walkers hold the "
-                                "direct tiers)"
-                            )
-                        if kind == "l0":
-                            n_l0 += 1
-                        elif kind == "l1":
-                            n_l1 += 1
-                        else:
-                            n_bi += 1
-                    # one vectorized pass per list over the whole
-                    # plane (same arithmetic as the old per-MB
-                    # _h264_fracpel_block loop), selected per pixel
-                    # by kind mask: l0 / l1 / bi-average
-                    p0, p1, use0, use1 = _h264_b_list_planes(
-                        l0, l1, ops, mb_w
-                    )
-                    z = np.zeros_like(np.asarray(l0), dtype=np.int64)
-                    p0 = z if p0 is None else p0
-                    p1 = z if p1 is None else p1
-                    new = np.where(
-                        use0 & use1,
-                        (p0 + p1 + 1) >> 1,
-                        np.where(use0, p0, p1),
-                    )
-                    rows.append(
-                        ("B", int(new.sum()), n_l0, n_l1, n_bi)
-                    )
-                elif nal_type not in (7, 8):
+        sps = pps = None
+        refs: list = []  # (poc, plane), decode order
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            ref_idc = unit[0] >> 5
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                plane, poc = _parse_ipcm_slice_plane(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                    poc_bits=sps["poc_lsb_bits"],
+                )
+                refs = [(poc, plane)]
+                rows.append(("I", int(plane.sum()), 0, 0, 0))
+            elif nal_type == 1 and ref_idc:
+                # P reference picture with a uniform MV
+                if not refs or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference P not implemented in "
+                        "the B-pixel walker"
+                    )
+                mvs = [op[1] for op in ops if op[0] != "pcm"]
+                if len(mvs) != len(ops) or len(set(mvs)) != 1:
+                    raise NotImplementedError(
+                        "the B-pixel walker's P reference must "
+                        "carry uniform inter motion (I_PCM "
+                        "refreshes belong to the sum-state "
+                        "walkers)"
+                    )
+                src = refs[-1][1]
+                plane = _h264_fracpel_block(
+                    src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
+                )
+                refs.append((poc, plane))
+                rows.append(("P", int(plane.sum()), 0, 0, 0))
+            elif nal_type == 1:
+                # non-reference B picture
+                if len(refs) < 2 or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: B slice without two "
+                        "reference pictures"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, ops, _wt = _parse_b_slice(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["poc_lsb_bits"], mb_w, mb_h,
+                )
+                past = [r_ for r_ in refs if r_[0] < poc]
+                futr = [r_ for r_ in refs if r_[0] > poc]
+                if not past or not futr:
+                    raise ValueError(
+                        f"doc {doc_id}: B poc {poc} not between "
+                        "its references"
+                    )
+                l0 = max(past)[1]
+                l1 = min(futr)[1]
+                n_l0 = n_l1 = n_bi = 0
+                for kind, _mv0, _mv1 in ops:
+                    if kind in ("skip", "direct"):
+                        raise NotImplementedError(
+                            "B_Skip / B_Direct in the pixel "
+                            "walker not implemented (the "
+                            "bframe/tdirect walkers hold the "
+                            "direct tiers)"
+                        )
+                    if kind == "l0":
+                        n_l0 += 1
+                    elif kind == "l1":
+                        n_l1 += 1
+                    else:
+                        n_bi += 1
+                # one vectorized pass per list over the whole
+                # plane (same arithmetic as the old per-MB
+                # _h264_fracpel_block loop), selected per pixel
+                # by kind mask: l0 / l1 / bi-average
+                p0, p1, use0, use1 = _h264_b_list_planes(
+                    l0, l1, ops, mb_w
+                )
+                z = np.zeros_like(np.asarray(l0), dtype=np.int64)
+                p0 = z if p0 is None else p0
+                p1 = z if p1 is None else p1
+                new = np.where(
+                    use0 & use1,
+                    (p0 + p1 + 1) >> 1,
+                    np.where(use0, p0, p1),
+                )
+                rows.append(
+                    ("B", int(new.sum()), n_l0, n_l1, n_bi)
+                )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "n_l0", "n_l1", "n_bi",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_BPIXEL_SCHEMA
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
-def synthesize_h264_bpixel(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose B picture
-    carries fractional per-list MVs over pixel planes
-    (``make_h264_bpixel_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_bpixel_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_bpixel_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
-
-
-def decode_h264_dpixel(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, frame_idx long, frame_type string, "
+    "sum_luma long, n_direct long, n_skip long"
+)
+def decode_h264_dpixel():
     """SPATIAL DIRECT and B_Skip motion over real pixel planes
     (ITU-T H.264 8.4.1.2.2): the B picture's direct macroblocks
     transmit NOTHING — each infers per-list refIdx (MinPositive over
@@ -11507,174 +9597,127 @@ def decode_h264_dpixel(media_df: DataFrame) -> DataFrame:
     the wrong pixels.  Closes the 'B_Skip/B_Direct at pixel level'
     boundary (the sum-state bframe walker holds the flat tier)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def walk(doc_id: int, raw: bytes):
+        import numpy as np
 
-        def walk(doc_id: int, raw: bytes):
-            import numpy as np
-
-            sps = pps = None
-            refs: list = []
-            col_motion = None
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                ref_idc = unit[0] >> 5
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    plane, poc = _parse_ipcm_slice_plane(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                        poc_bits=sps["poc_lsb_bits"],
-                    )
-                    refs = [(poc, plane)]
-                    rows.append(("I", int(plane.sum()), 0, 0))
-                elif nal_type == 1 and ref_idc:
-                    if not refs or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference P not implemented in "
-                            "the direct-pixel walker"
-                        )
-                    mvs = [op[1] for op in ops if op[0] != "pcm"]
-                    if len(mvs) != len(ops) or len(set(mvs)) != 1:
-                        raise NotImplementedError(
-                            "the direct-pixel walker's P reference "
-                            "must carry uniform inter motion"
-                        )
-                    src = refs[-1][1]
-                    plane = _h264_fracpel_block(
-                        src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
-                    )
-                    # per-MB co-located motion for the B's spatial
-                    # direct colZeroFlag (8.4.1.2.2)
-                    col_motion = [(0, mvs[0])] * len(ops)
-                    refs.append((poc, plane))
-                    rows.append(("P", int(plane.sum()), 0, 0))
-                elif nal_type == 1:
-                    if len(refs) < 2 or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: B slice without two "
-                            "reference pictures"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, ops, _wt = _parse_b_slice(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["poc_lsb_bits"], mb_w, mb_h,
-                        get_col=lambda _poc: (True, col_motion),
-                    )
-                    past = [r_ for r_ in refs if r_[0] < poc]
-                    futr = [r_ for r_ in refs if r_[0] > poc]
-                    if not past or not futr:
-                        raise ValueError(
-                            f"doc {doc_id}: B poc {poc} not between "
-                            "its references"
-                        )
-                    l0 = max(past)[1]
-                    l1 = min(futr)[1]
-                    n_direct = n_skip = 0
-                    for idx, (kind, mv0, mv1) in enumerate(ops):
-                        if kind == "direct":
-                            n_direct += 1
-                        elif kind == "skip":
-                            n_skip += 1
-                        if mv0 is None and mv1 is None:
-                            raise ValueError(
-                                f"doc {doc_id}: macroblock {idx} "
-                                "uses neither list"
-                            )
-                    # one vectorized pass per list (same arithmetic
-                    # as the old per-MB _h264_fracpel_block loop),
-                    # combined per pixel by list-usage mask
-                    p0, p1, use0, use1 = _h264_b_list_planes(
-                        l0, l1, ops, mb_w
-                    )
-                    z = np.zeros_like(np.asarray(l0), dtype=np.int64)
-                    p0 = z if p0 is None else p0
-                    p1 = z if p1 is None else p1
-                    new = np.where(
-                        use0 & use1,
-                        (p0 + p1 + 1) >> 1,
-                        np.where(use0, p0, p1),
-                    )
-                    rows.append(
-                        ("B", int(new.sum()), n_direct, n_skip)
-                    )
-                elif nal_type not in (7, 8):
+        sps = pps = None
+        refs: list = []
+        col_motion = None
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            ref_idc = unit[0] >> 5
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                plane, poc = _parse_ipcm_slice_plane(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                    poc_bits=sps["poc_lsb_bits"],
+                )
+                refs = [(poc, plane)]
+                rows.append(("I", int(plane.sum()), 0, 0))
+            elif nal_type == 1 and ref_idc:
+                if not refs or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference P not implemented in "
+                        "the direct-pixel walker"
+                    )
+                mvs = [op[1] for op in ops if op[0] != "pcm"]
+                if len(mvs) != len(ops) or len(set(mvs)) != 1:
+                    raise NotImplementedError(
+                        "the direct-pixel walker's P reference "
+                        "must carry uniform inter motion"
+                    )
+                src = refs[-1][1]
+                plane = _h264_fracpel_block(
+                    src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
+                )
+                # per-MB co-located motion for the B's spatial
+                # direct colZeroFlag (8.4.1.2.2)
+                col_motion = [(0, mvs[0])] * len(ops)
+                refs.append((poc, plane))
+                rows.append(("P", int(plane.sum()), 0, 0))
+            elif nal_type == 1:
+                if len(refs) < 2 or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: B slice without two "
+                        "reference pictures"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, ops, _wt = _parse_b_slice(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["poc_lsb_bits"], mb_w, mb_h,
+                    get_col=lambda _poc: (True, col_motion),
+                )
+                past = [r_ for r_ in refs if r_[0] < poc]
+                futr = [r_ for r_ in refs if r_[0] > poc]
+                if not past or not futr:
+                    raise ValueError(
+                        f"doc {doc_id}: B poc {poc} not between "
+                        "its references"
+                    )
+                l0 = max(past)[1]
+                l1 = min(futr)[1]
+                n_direct = n_skip = 0
+                for idx, (kind, mv0, mv1) in enumerate(ops):
+                    if kind == "direct":
+                        n_direct += 1
+                    elif kind == "skip":
+                        n_skip += 1
+                    if mv0 is None and mv1 is None:
+                        raise ValueError(
+                            f"doc {doc_id}: macroblock {idx} "
+                            "uses neither list"
+                        )
+                # one vectorized pass per list (same arithmetic
+                # as the old per-MB _h264_fracpel_block loop),
+                # combined per pixel by list-usage mask
+                p0, p1, use0, use1 = _h264_b_list_planes(
+                    l0, l1, ops, mb_w
+                )
+                z = np.zeros_like(np.asarray(l0), dtype=np.int64)
+                p0 = z if p0 is None else p0
+                p1 = z if p1 is None else p1
+                new = np.where(
+                    use0 & use1,
+                    (p0 + p1 + 1) >> 1,
+                    np.where(use0, p0, p1),
+                )
+                rows.append(
+                    ("B", int(new.sum()), n_direct, n_skip)
+                )
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "n_direct", "n_skip",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, frame_idx long, frame_type string, "
-        "sum_luma long, n_direct long, n_skip long",
-    )
-
-
-def synthesize_h264_dpixel(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose B picture
-    carries spatial-direct and B_Skip macroblocks over pixel planes
-    (``make_h264_dpixel_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_dpixel_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_dpixel_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 def _h264_wuni(p, w: int, o: int, d: int):
@@ -11689,7 +9732,11 @@ def _h264_wuni(p, w: int, o: int, d: int):
     return np.clip(v, 0, 255)
 
 
-def decode_h264_wpixel(media_df: DataFrame) -> DataFrame:
+@decoder(
+    "doc_id long, frame_idx long, frame_type string, "
+    "sum_luma long, n_wmb long"
+)
+def decode_h264_wpixel():
     """EXPLICIT WEIGHTED bi-prediction over real pixel planes (ITU-T
     H.264 8.4.2.3.2): same IDR -> P -> B shape as decode_h264_bpixel
     but under a weighted PPS — every inter slice carries a
@@ -11702,189 +9749,143 @@ def decode_h264_wpixel(media_df: DataFrame) -> DataFrame:
     l0_flag 0 -> (1 << denom, 0)), keeping the reference plane the
     oracle's closed-form shift while the parse depth stays live."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def walk(doc_id: int, raw: bytes):
+        import numpy as np
 
-        def walk(doc_id: int, raw: bytes):
-            import numpy as np
-
-            sps = pps = None
-            refs: list = []
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                ref_idc = unit[0] >> 5
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    plane, poc = _parse_ipcm_slice_plane(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                        poc_bits=sps["poc_lsb_bits"],
-                    )
-                    refs = [(poc, plane)]
-                    rows.append(("I", int(plane.sum()), 0))
-                elif nal_type == 1 and ref_idc:
-                    if not refs or sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, active, mods, ops, wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
-                            weighted=True,  # weighted-PPS fixture
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference weighted P not "
-                            "implemented in the pixel walker"
-                        )
-                    mvs = [op[1] for op in ops if op[0] != "pcm"]
-                    if len(mvs) != len(ops) or len(set(mvs)) != 1:
-                        raise NotImplementedError(
-                            "the weighted pixel walker's P reference "
-                            "must carry uniform inter motion"
-                        )
-                    src = refs[-1][1]
-                    plane = _h264_fracpel_block(
-                        src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
-                    )
-                    if wt is not None:
-                        w0, o0 = wt["l0"][0]
-                        plane = _h264_wuni(
-                            np.asarray(plane), w0, o0, wt["denom"]
-                        )
-                    refs.append((poc, plane))
-                    rows.append(("P", int(plane.sum()), 0))
-                elif nal_type == 1:
-                    if len(refs) < 2 or sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: B slice without two "
-                            "reference pictures"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, poc, ops, wt = _parse_b_slice(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["poc_lsb_bits"], mb_w, mb_h,
-                        weighted=True,  # weighted_bipred_idc 1
-                    )
-                    if wt is None:
-                        raise ValueError(
-                            f"doc {doc_id}: weighted walker expects "
-                            "a pred_weight_table"
-                        )
-                    db = wt["denom"]
-                    w0, o0 = wt["l0"][0]
-                    w1, o1 = wt["l1"][0]
-                    past = [r_ for r_ in refs if r_[0] < poc]
-                    futr = [r_ for r_ in refs if r_[0] > poc]
-                    if not past or not futr:
-                        raise ValueError(
-                            f"doc {doc_id}: B poc {poc} not between "
-                            "its references"
-                        )
-                    l0 = max(past)[1]
-                    l1 = min(futr)[1]
-                    n_wmb = 0
-                    for kind, _mv0, _mv1 in ops:
-                        if kind in ("skip", "direct"):
-                            raise NotImplementedError(
-                                "B_Skip / B_Direct in the weighted "
-                                "pixel walker not implemented"
-                            )
-                        n_wmb += 1
-                    # one vectorized pass per list, then the
-                    # 8.4.2.3.2 weighted combines selected per pixel
-                    # by list-usage mask (uni eq. 8-270/8-271, bi
-                    # eq. 8-272) — same arithmetic as the old per-MB
-                    # _h264_fracpel_block loop
-                    p0, p1, use0, use1 = _h264_b_list_planes(
-                        l0, l1, ops, mb_w
-                    )
-                    z = np.zeros_like(np.asarray(l0), dtype=np.int64)
-                    p0 = (z if p0 is None else p0).astype(np.int64)
-                    p1 = (z if p1 is None else p1).astype(np.int64)
-                    bi = np.clip(
-                        ((p0 * w0 + p1 * w1 + (1 << db)) >> (db + 1))
-                        + ((o0 + o1 + 1) >> 1),
-                        0, 255,
-                    )
-                    new = np.where(
-                        use0 & use1,
-                        bi,
-                        np.where(
-                            use0,
-                            _h264_wuni(p0, w0, o0, db),
-                            _h264_wuni(p1, w1, o1, db),
-                        ),
-                    )
-                    rows.append(("B", int(new.sum()), n_wmb))
-                elif nal_type not in (7, 8):
+        sps = pps = None
+        refs: list = []
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            ref_idc = unit[0] >> 5
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                plane, poc = _parse_ipcm_slice_plane(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                    poc_bits=sps["poc_lsb_bits"],
+                )
+                refs = [(poc, plane)]
+                rows.append(("I", int(plane.sum()), 0))
+            elif nal_type == 1 and ref_idc:
+                if not refs or sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, active, mods, ops, wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h, poc_bits=sps["poc_lsb_bits"],
+                        weighted=True,  # weighted-PPS fixture
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference weighted P not "
+                        "implemented in the pixel walker"
+                    )
+                mvs = [op[1] for op in ops if op[0] != "pcm"]
+                if len(mvs) != len(ops) or len(set(mvs)) != 1:
+                    raise NotImplementedError(
+                        "the weighted pixel walker's P reference "
+                        "must carry uniform inter motion"
+                    )
+                src = refs[-1][1]
+                plane = _h264_fracpel_block(
+                    src, 0, 0, src.shape[1], src.shape[0], *mvs[0]
+                )
+                if wt is not None:
+                    w0, o0 = wt["l0"][0]
+                    plane = _h264_wuni(
+                        np.asarray(plane), w0, o0, wt["denom"]
+                    )
+                refs.append((poc, plane))
+                rows.append(("P", int(plane.sum()), 0))
+            elif nal_type == 1:
+                if len(refs) < 2 or sps is None or pps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: B slice without two "
+                        "reference pictures"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, poc, ops, wt = _parse_b_slice(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["poc_lsb_bits"], mb_w, mb_h,
+                    weighted=True,  # weighted_bipred_idc 1
+                )
+                if wt is None:
+                    raise ValueError(
+                        f"doc {doc_id}: weighted walker expects "
+                        "a pred_weight_table"
+                    )
+                db = wt["denom"]
+                w0, o0 = wt["l0"][0]
+                w1, o1 = wt["l1"][0]
+                past = [r_ for r_ in refs if r_[0] < poc]
+                futr = [r_ for r_ in refs if r_[0] > poc]
+                if not past or not futr:
+                    raise ValueError(
+                        f"doc {doc_id}: B poc {poc} not between "
+                        "its references"
+                    )
+                l0 = max(past)[1]
+                l1 = min(futr)[1]
+                n_wmb = 0
+                for kind, _mv0, _mv1 in ops:
+                    if kind in ("skip", "direct"):
+                        raise NotImplementedError(
+                            "B_Skip / B_Direct in the weighted "
+                            "pixel walker not implemented"
+                        )
+                    n_wmb += 1
+                # one vectorized pass per list, then the
+                # 8.4.2.3.2 weighted combines selected per pixel
+                # by list-usage mask (uni eq. 8-270/8-271, bi
+                # eq. 8-272) — same arithmetic as the old per-MB
+                # _h264_fracpel_block loop
+                p0, p1, use0, use1 = _h264_b_list_planes(
+                    l0, l1, ops, mb_w
+                )
+                z = np.zeros_like(np.asarray(l0), dtype=np.int64)
+                p0 = (z if p0 is None else p0).astype(np.int64)
+                p1 = (z if p1 is None else p1).astype(np.int64)
+                bi = np.clip(
+                    ((p0 * w0 + p1 * w1 + (1 << db)) >> (db + 1))
+                    + ((o0 + o1 + 1) >> 1),
+                    0, 255,
+                )
+                new = np.where(
+                    use0 & use1,
+                    bi,
+                    np.where(
+                        use0,
+                        _h264_wuni(p0, w0, o0, db),
+                        _h264_wuni(p1, w1, o1, db),
+                    ),
+                )
+                rows.append(("B", int(new.sum()), n_wmb))
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma", "n_wmb",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel,
-        "doc_id long, frame_idx long, frame_type string, "
-        "sum_luma long, n_wmb long",
-    )
-
-
-def synthesize_h264_wpixel(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL weighted-PPS H.264 stream
-    whose B picture applies explicit per-list weights over pixel
-    planes (``make_h264_wpixel_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_wpixel_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_wpixel_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_CHROMA_SCHEMA = (
@@ -11893,7 +9894,8 @@ H264_CHROMA_SCHEMA = (
 )
 
 
-def decode_h264_chroma(media_df: DataFrame) -> DataFrame:
+@decoder(H264_CHROMA_SCHEMA)
+def decode_h264_chroma():
     """H.264 CHROMA motion compensation at EIGHTH-PEL precision
     (ITU-T H.264 8.4.1.4 + 8.4.2.2.2 final equation): IDR I_PCM
     slices parse into all three planes (luma + 4:2:0 Cb/Cr), and P
@@ -11905,137 +9907,92 @@ def decode_h264_chroma(media_df: DataFrame) -> DataFrame:
     declares.  Emits one row per picture with all three plane sums
     and the chroma phase (cfx*8 + cfy, -1 for IDRs)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            planes = None
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    planes = _parse_ipcm_slice_planes3(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                    )
-                    rows.append((
-                        "I", int(planes[0].sum()), int(planes[1].sum()),
-                        int(planes[2].sum()), -1,
-                    ))
-                elif nal_type == 1:
-                    if planes is None or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, _poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h,
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference chroma slices not "
-                            "implemented (single reference)"
-                        )
-                    luma, cb, cr = planes
-                    mvs = []
-                    for op in ops:
-                        if op[0] == "pcm":
-                            raise NotImplementedError(
-                                "I_PCM refresh inside the chroma "
-                                "fixture not implemented"
-                            )
-                        mvs.append(op[1])
-                    if len(set(mvs)) != 1:
-                        raise NotImplementedError(
-                            "per-MB chroma motion not implemented in "
-                            "this walker (uniform-MV fixture; the "
-                            "submb walker holds the per-partition "
-                            "luma tier)"
-                        )
-                    mvx, mvy = mvs[0]
-                    luma = _h264_fracpel_block(
-                        luma, 0, 0, luma.shape[1], luma.shape[0],
-                        mvx, mvy,
-                    )
-                    cb = _h264_chroma_block(
-                        cb, 0, 0, cb.shape[1], cb.shape[0], mvx, mvy
-                    )
-                    cr = _h264_chroma_block(
-                        cr, 0, 0, cr.shape[1], cr.shape[0], mvx, mvy
-                    )
-                    planes = (luma, cb, cr)
-                    rows.append((
-                        "P", int(luma.sum()), int(cb.sum()),
-                        int(cr.sum()),
-                        (mvx & 7) * 8 + (mvy & 7),
-                    ))
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        planes = None
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                planes = _parse_ipcm_slice_planes3(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                )
+                rows.append((
+                    "I", int(planes[0].sum()), int(planes[1].sum()),
+                    int(planes[2].sum()), -1,
+                ))
+            elif nal_type == 1:
+                if planes is None or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, _poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h,
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference chroma slices not "
+                        "implemented (single reference)"
+                    )
+                luma, cb, cr = planes
+                mvs = []
+                for op in ops:
+                    if op[0] == "pcm":
+                        raise NotImplementedError(
+                            "I_PCM refresh inside the chroma "
+                            "fixture not implemented"
+                        )
+                    mvs.append(op[1])
+                if len(set(mvs)) != 1:
+                    raise NotImplementedError(
+                        "per-MB chroma motion not implemented in "
+                        "this walker (uniform-MV fixture; the "
+                        "submb walker holds the per-partition "
+                        "luma tier)"
+                    )
+                mvx, mvy = mvs[0]
+                luma = _h264_fracpel_block(
+                    luma, 0, 0, luma.shape[1], luma.shape[0],
+                    mvx, mvy,
+                )
+                cb = _h264_chroma_block(
+                    cb, 0, 0, cb.shape[1], cb.shape[0], mvx, mvy
+                )
+                cr = _h264_chroma_block(
+                    cr, 0, 0, cr.shape[1], cr.shape[0], mvx, mvy
+                )
+                planes = (luma, cb, cr)
+                rows.append((
+                    "P", int(luma.sum()), int(cb.sum()),
+                    int(cr.sum()),
+                    (mvx & 7) * 8 + (mvy & 7),
+                ))
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "sum_cb", "sum_cr", "mv_phase8",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_CHROMA_SCHEMA
-    )
-
-
-def synthesize_h264_chroma(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose I_PCM
-    planes carry per-pixel chroma and whose P pictures exercise
-    eighth-pel chroma motion (``make_h264_chroma_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_chroma_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_chroma_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 H264_FRACPEL_SCHEMA = (
@@ -12044,7 +10001,8 @@ H264_FRACPEL_SCHEMA = (
 )
 
 
-def decode_h264_fracpel(media_df: DataFrame) -> DataFrame:
+@decoder(H264_FRACPEL_SCHEMA)
+def decode_h264_fracpel():
     """H.264 luma motion compensation at QUARTER-PEL precision over a
     REAL pixel plane (ITU-T H.264 8.4.2.2.1/8.4.2.2.2) — the tier the
     aggregate walkers (decode_h264_inter and kin, which carry per-MB
@@ -12060,139 +10018,94 @@ def decode_h264_fracpel(media_df: DataFrame) -> DataFrame:
     Arrow batch per media row, no cross-row state, planes bounded by
     the fixture geometry (<= 64x48)."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        def walk(doc_id: int, raw: bytes):
-            sps = pps = None
-            ref = None
-            rows = []
-            for unit in h264_split_nals(doc_id, raw):
-                if not unit:
-                    raise ValueError(f"doc {doc_id}: empty NAL unit")
-                nal_type = unit[0] & 0x1F
-                rbsp = h264_unescape(doc_id, unit[1:])
-                if nal_type == 7 and sps is None:
-                    sps = _parse_sps_all(doc_id, rbsp)
-                elif nal_type == 8 and pps is None:
-                    pps = parse_pps(doc_id, rbsp)
-                elif nal_type == 5:
-                    if sps is None or pps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: slice before parameter sets"
-                        )
-                    ref = _parse_ipcm_slice_plane(
-                        doc_id, rbsp, sps["frame_num_bits"],
-                        sps["width"] // 16, sps["height"] // 16,
-                    )
-                    rows.append(("I", int(ref.sum()), -1, 0))
-                elif nal_type == 1:
-                    if ref is None or sps is None:
-                        raise ValueError(
-                            f"doc {doc_id}: P slice with no reference"
-                        )
-                    mb_w = sps["width"] // 16
-                    mb_h = sps["height"] // 16
-                    frame_num, _poc, active, mods, ops, _wt = (
-                        _parse_p_inter_slice(
-                            doc_id, rbsp, sps["frame_num_bits"],
-                            mb_w, mb_h,
-                        )
-                    )
-                    if active != 1 or mods:
-                        raise NotImplementedError(
-                            "multi-reference fractional-pel slices "
-                            "not implemented (single reference plane)"
-                        )
-                    if frame_num != 1:
-                        raise ValueError(
-                            f"doc {doc_id}: fracpel P expects "
-                            f"frame_num 1, got {frame_num}"
-                        )
-                    import numpy as np
-
-                    mvs = []
-                    for op in ops:
-                        if op[0] == "pcm":
-                            raise NotImplementedError(
-                                "I_PCM refresh inside the fracpel "
-                                "fixture not implemented"
-                            )
-                        mvs.append(op[1])
-                    mv_abs = sum(abs(x) + abs(y) for x, y in mvs)
-                    phase = (mvs[-1][0] & 3) * 4 + (mvs[-1][1] & 3)
-                    if len(set(mvs)) == 1:
-                        # uniform motion: one whole-plane vectorized
-                        # interpolation instead of per-MB blocks (the
-                        # shape a frame-sized kernel would use at
-                        # production resolutions)
-                        ref = _h264_fracpel_block(
-                            ref, 0, 0, ref.shape[1], ref.shape[0],
-                            *mvs[0],
-                        )
-                    else:
-                        new = np.zeros_like(ref)
-                        for idx, (mvx, mvy) in enumerate(mvs):
-                            my = (idx // mb_w) * 16
-                            mx = (idx % mb_w) * 16
-                            new[my : my + 16, mx : mx + 16] = (
-                                _h264_fracpel_block(
-                                    ref, mx, my, 16, 16, mvx, mvy
-                                )
-                            )
-                        ref = new
-                    rows.append(("P", int(ref.sum()), phase, mv_abs))
-                elif nal_type not in (7, 8):
+    def walk(doc_id: int, raw: bytes):
+        sps = pps = None
+        ref = None
+        rows = []
+        for unit in h264_split_nals(doc_id, raw):
+            if not unit:
+                raise ValueError(f"doc {doc_id}: empty NAL unit")
+            nal_type = unit[0] & 0x1F
+            rbsp = h264_unescape(doc_id, unit[1:])
+            if nal_type == 7 and sps is None:
+                sps = _parse_sps_all(doc_id, rbsp)
+            elif nal_type == 8 and pps is None:
+                pps = parse_pps(doc_id, rbsp)
+            elif nal_type == 5:
+                if sps is None or pps is None:
                     raise ValueError(
-                        f"doc {doc_id}: unexpected NAL type {nal_type}"
+                        f"doc {doc_id}: slice before parameter sets"
                     )
-            if not rows:
-                raise ValueError(f"doc {doc_id}: no pictures decoded")
-            return rows
+                ref = _parse_ipcm_slice_plane(
+                    doc_id, rbsp, sps["frame_num_bits"],
+                    sps["width"] // 16, sps["height"] // 16,
+                )
+                rows.append(("I", int(ref.sum()), -1, 0))
+            elif nal_type == 1:
+                if ref is None or sps is None:
+                    raise ValueError(
+                        f"doc {doc_id}: P slice with no reference"
+                    )
+                mb_w = sps["width"] // 16
+                mb_h = sps["height"] // 16
+                frame_num, _poc, active, mods, ops, _wt = (
+                    _parse_p_inter_slice(
+                        doc_id, rbsp, sps["frame_num_bits"],
+                        mb_w, mb_h,
+                    )
+                )
+                if active != 1 or mods:
+                    raise NotImplementedError(
+                        "multi-reference fractional-pel slices "
+                        "not implemented (single reference plane)"
+                    )
+                if frame_num != 1:
+                    raise ValueError(
+                        f"doc {doc_id}: fracpel P expects "
+                        f"frame_num 1, got {frame_num}"
+                    )
+                import numpy as np
 
-        cols = (
-            "doc_id", "frame_idx", "frame_type", "sum_luma",
-            "mv_phase", "sum_abs_mv",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                for fi, row in enumerate(walk(int(doc_id), bytes(b))):
-                    vals = (int(doc_id), fi, *row)
-                    for col, v in zip(cols, vals):
-                        out[col].append(v)
-            yield pd.DataFrame(out)
+                mvs = []
+                for op in ops:
+                    if op[0] == "pcm":
+                        raise NotImplementedError(
+                            "I_PCM refresh inside the fracpel "
+                            "fixture not implemented"
+                        )
+                    mvs.append(op[1])
+                mv_abs = sum(abs(x) + abs(y) for x, y in mvs)
+                phase = (mvs[-1][0] & 3) * 4 + (mvs[-1][1] & 3)
+                if len(set(mvs)) == 1:
+                    # uniform motion: one whole-plane vectorized
+                    # interpolation instead of per-MB blocks (the
+                    # shape a frame-sized kernel would use at
+                    # production resolutions)
+                    ref = _h264_fracpel_block(
+                        ref, 0, 0, ref.shape[1], ref.shape[0],
+                        *mvs[0],
+                    )
+                else:
+                    new = np.zeros_like(ref)
+                    for idx, (mvx, mvy) in enumerate(mvs):
+                        my = (idx // mb_w) * 16
+                        mx = (idx % mb_w) * 16
+                        new[my : my + 16, mx : mx + 16] = (
+                            _h264_fracpel_block(
+                                ref, mx, my, 16, 16, mvx, mvy
+                            )
+                        )
+                    ref = new
+                rows.append(("P", int(ref.sum()), phase, mv_abs))
+            elif nal_type not in (7, 8):
+                raise ValueError(
+                    f"doc {doc_id}: unexpected NAL type {nal_type}"
+                )
+        if not rows:
+            raise ValueError(f"doc {doc_id}: no pictures decoded")
+        return rows
 
-    return media_df.select("doc_id", "payload").mapInPandas(
-        kernel, H264_FRACPEL_SCHEMA
-    )
-
-
-def synthesize_h264_fracpel(docs_df: DataFrame) -> DataFrame:
-    """doc_id → media struct with a REAL H.264 stream whose P
-    pictures carry quarter-pel MVs over per-pixel I_PCM planes
-    (``make_h264_fracpel_bytes``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        from .synth import make_h264_fracpel_bytes
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "kind": ["video"] * len(pdf),
-                    "payload": [
-                        make_h264_fracpel_bytes(int(d))
-                        for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, "doc_id long, kind string, payload binary"
-    )
+    return lambda doc_id, raw: indexed(walk(doc_id, raw))
 
 
 # ---------------------------------------------------------------------------
@@ -12207,24 +10120,18 @@ def synthesize_h264_fracpel(docs_df: DataFrame) -> DataFrame:
 _FAMILY_OF = {}
 for _fam, _names in {
     "dec_mp3": (
-        "ID3V1_SCHEMA", "MP3_ALIAS_CI", "MP3_COUNT1A", "MP3_HUFF_TABLES",
-        "MP3_LINBITS", "MP3_MAINDATA_SCHEMA", "MP3_META_SCHEMA",
-        "MP3_PRETAB", "MP3_SFB_LONG", "MP3_SFB_LONG_44100",
-        "MP3_SFB_SHORT", "_MP3_B7_MATRICES", "_MP3_FB_Q",
-        "_MP3_FB_TABLES", "_MP3_IS_TABLES", "_MP3_RQ_TABLES",
-        "_mp3_bv_table", "_mp3_fb_tables", "_mp3_granule_long",
-        "_mp3_is_tables", "_mp3_rq_tables", "decode_mp3_frames",
-        "decode_mp3_id3", "decode_mp3_id3v1", "decode_mp3_imdct",
-        "decode_mp3_maindata", "decode_mp3_requant",
+        "ID3V1_SCHEMA", "MP3_ALIAS_CI", "MP3_COUNT1A",
+        "MP3_HUFF_TABLES", "MP3_LINBITS", "MP3_MAINDATA_SCHEMA",
+        "MP3_META_SCHEMA", "MP3_PRETAB", "MP3_SFB_LONG",
+        "MP3_SFB_LONG_44100", "MP3_SFB_SHORT", "_MP3_B7_MATRICES",
+        "_MP3_FB_Q", "_MP3_FB_TABLES", "_MP3_IS_TABLES",
+        "_MP3_RQ_TABLES", "_mp3_bv_table", "_mp3_fb_tables",
+        "_mp3_granule_long", "_mp3_is_tables", "_mp3_rq_tables",
+        "decode_mp3_frames", "decode_mp3_id3", "decode_mp3_id3v1",
+        "decode_mp3_imdct", "decode_mp3_maindata", "decode_mp3_requant",
         "decode_mp3_requant_is", "decode_mp3_requant_ms", "mp3_crc16",
         "parse_id3v1", "parse_id3v2", "parse_mp3_side_info",
-        "parse_mp3_side_info_full", "synthesize_mp3",
-        "synthesize_mp3_b8", "synthesize_mp3_ht", "synthesize_mp3_id3",
-        "synthesize_mp3_id3v1", "synthesize_mp3_imdct",
-        "synthesize_mp3_is", "synthesize_mp3_lb", "synthesize_mp3_md",
-        "synthesize_mp3_ms", "synthesize_mp3_mx", "synthesize_mp3_rq",
-        "synthesize_mp3_rqe", "synthesize_mp3_rqw",
-        "synthesize_mp3_rqs", "synthesize_mp3_sb", "synthesize_mp3_ws",
+        "parse_mp3_side_info_full",
     ),
 }.items():
     for _n in _names:

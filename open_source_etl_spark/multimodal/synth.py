@@ -3346,7 +3346,7 @@ def make_mp3_ht_bytes(doc_id: int) -> bytes:
 
 
 # The complete 16x16-table tier: tables 13 and 15 (no linbits, t13
-# validated round 14 — tools/mp3_t13_round14.py) plus BOTH linbits
+# validated round 14) plus BOTH linbits
 # families 16-23 and 24-31 (validated round 13).  All 18 ids cycle.
 MP3_LB_TABLES = (
     13, 15, 16, 17, 18, 19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29,
@@ -7743,6 +7743,12 @@ def make_mp3_ws_bytes(doc_id: int, mixed: bool = False) -> bytes:
                    0b11000100)) + si + region
     out += frame * n_frames
     return bytes(out)
+
+
+def make_mp3_mx_bytes(doc_id: int) -> bytes:
+    """``make_mp3_ws_bytes`` with the MIXED long/short scalefactor
+    partition."""
+    return make_mp3_ws_bytes(doc_id, mixed=True)
 
 
 def bmp_rle4_params(doc_id: int) -> tuple[int, int]:

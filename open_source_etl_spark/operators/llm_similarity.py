@@ -655,7 +655,12 @@ def _pq_topk(
     for _ in range(2):
         codebook = _pq_centroid_means(_pq_assign(subrows, codebook))
     codebook = codebook.localCheckpoint(eager=True)
+    # the code assignment is subrows' last consumer: materialize the
+    # codes (m small rows per vector) so the cache can be released here
+    # rather than held for the life of the session
     codes = _pq_assign(subrows, codebook).select("vec_id", "sub", "cell")
+    codes = codes.localCheckpoint(eager=True)
+    subrows.unpersist()
     # ADC table: the query's per-subspace dot with every codeword
     qsub = _pq_subrows(
         emb.filter(F.col("vec_id") == 0), m, sub_d

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..multimodal import synth
 from ..multimodal.decode import doc_range_query, media_query
 from ..multimodal import decode_image_meta, perceptual_hash, sample_frames, with_media_payload
 from ..registry import query
@@ -302,9 +303,9 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte doc_id shuffle (``media_query``); compressed audio
     (MP3/AAC) stays behind the declared ``NotImplementedError`` sites
     in ``multimodal/decode.py``."""
-    from ..multimodal.decode import decode_wav_real, synthesize_wav
+    from ..multimodal.decode import decode_wav_real
 
-    return media_query(spark, sf_dir, synthesize_wav, decode_wav_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_wav_bytes, decode_wav_real, "doc_id")
 
 
 @query(
@@ -333,9 +334,9 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bottom-up padded pixel array.  The oracle predicts every
     value from the generation formulas; Spark earns them by parsing the
     actual bytes.  JPEG/PNG remain behind ``NotImplementedError``."""
-    from ..multimodal.decode import decode_bmp_real, synthesize_bmp
+    from ..multimodal.decode import decode_bmp_real
 
-    return media_query(spark, sf_dir, synthesize_bmp, decode_bmp_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_bmp_bytes, decode_bmp_real, "doc_id")
 
 
 @query(
@@ -366,9 +367,11 @@ def multimodal_wav_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM with per-window RMS and zero-crossing counts — the row-expanding
     (1 → n_windows) feature kernel real DSP pipelines use, running on
     genuine RIFF/WAVE bytes end to end."""
-    from ..multimodal.decode import synthesize_wav, wav_window_features
+    from ..multimodal.decode import wav_window_features
 
-    return media_query(spark, sf_dir, synthesize_wav, wav_window_features, "doc_id", "window_idx")
+    return media_query(
+        spark, sf_dir, synth.make_wav_bytes, wav_window_features, "doc_id", "window_idx"
+    )
 
 
 @query(
@@ -399,9 +402,9 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sites.  The oracle predicts geometry and exact channel means from the
     generation formulas; Spark earns them by reconstructing actual
     pixels (a wrong unfilter implementation shifts every mean)."""
-    from ..multimodal.decode import decode_png_real, synthesize_png
+    from ..multimodal.decode import decode_png_real
 
-    return media_query(spark, sf_dir, synthesize_png, decode_png_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_png_bytes, decode_png_real, "doc_id")
 
 
 @query(
@@ -434,9 +437,9 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the exact pixel mean from the generation formulas; Spark earns
     them by decoding the bitstream (a wrong Huffman table, extend sign,
     or IDCT scale shifts every mean).  MP3 remains a declared stub."""
-    from ..multimodal.decode import decode_jpeg_real, synthesize_jpeg
+    from ..multimodal.decode import decode_jpeg_real
 
-    return media_query(spark, sf_dir, synthesize_jpeg, decode_jpeg_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_jpeg_bytes, decode_jpeg_real, "doc_id")
 
 
 @query(
@@ -482,9 +485,9 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     third compressed codec family (LZW) retired from the declared-stub
     list, beside DEFLATE (PNG) and Huffman+DCT (JPEG).  Only MP3/H.264
     remain stubs (no codec libs in this container)."""
-    from ..multimodal.decode import decode_gif_real, synthesize_gif
+    from ..multimodal.decode import decode_gif_real
 
-    return media_query(spark, sf_dir, synthesize_gif, decode_gif_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_gif_bytes, decode_gif_real, "doc_id")
 
 
 @query(
@@ -523,9 +526,9 @@ def multimodal_avi_mjpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_frames rows) frame-extraction shape on genuine container bytes;
     turns the declared-stub video area into a value-checked query
     without new codec work (H.264 stays a declared stub)."""
-    from ..multimodal.decode import decode_avi_mjpeg, synthesize_avi
+    from ..multimodal.decode import decode_avi_mjpeg
 
-    return media_query(spark, sf_dir, synthesize_avi, decode_avi_mjpeg, "doc_id", "frame_idx")
+    return media_query(spark, sf_dir, synth.make_avi_bytes, decode_avi_mjpeg, "doc_id", "frame_idx")
 
 
 @query(
@@ -581,9 +584,9 @@ def multimodal_avi_av_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     query for the round-7 multi-stream strf fix (a demuxer that
     validates the audio stream's WAVEFORMATEX against the video codec
     rejects these valid files)."""
-    from ..multimodal.decode import decode_avi_av, synthesize_avi_av
+    from ..multimodal.decode import decode_avi_av
 
-    return media_query(spark, sf_dir, synthesize_avi_av, decode_avi_av, "doc_id")
+    return media_query(spark, sf_dir, synth.make_avi_av_bytes, decode_avi_av, "doc_id")
 
 
 @query(
@@ -655,9 +658,9 @@ def multimodal_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     CBR/VBR, padded/protected-frame counts, reservoir depth,
     Huffman-region geometry) an audio data pipeline runs per file
     without decoding audio."""
-    from ..multimodal.decode import decode_mp3_frames, synthesize_mp3
+    from ..multimodal.decode import decode_mp3_frames
 
-    return media_query(spark, sf_dir, synthesize_mp3, decode_mp3_frames, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_bytes, decode_mp3_frames, "doc_id")
 
 
 @query(
@@ -737,9 +740,9 @@ def multimodal_h264_nal_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     without pixel decode; CAVLC/CABAC macroblock reconstruction remains
     the declared stub.  Byte-exact RBSP size recovery proves the EPB
     stripping is real, not a start-code count."""
-    from ..multimodal.decode import decode_h264_nals, synthesize_h264
+    from ..multimodal.decode import decode_h264_nals
 
-    return media_query(spark, sf_dir, synthesize_h264, decode_h264_nals, "doc_id")
+    return media_query(spark, sf_dir, synth.make_h264_bytes, decode_h264_nals, "doc_id")
 
 
 @query(
@@ -787,10 +790,10 @@ def multimodal_h264_ipcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked — the byte-stream-to-pixels proof for the video
     column, complementing ``multimodal_avi_mjpeg_decode`` (MJPEG) and
     the header-level ``multimodal_h264_nal_walk``."""
-    from ..multimodal.decode import decode_h264_ipcm, synthesize_h264_ipcm
+    from ..multimodal.decode import decode_h264_ipcm
 
     return media_query(
-        spark, sf_dir, synthesize_h264_ipcm, decode_h264_ipcm, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_ipcm_bytes, decode_h264_ipcm, "doc_id", "frame_idx"
     )
 
 
@@ -856,12 +859,9 @@ def multimodal_jpeg_progressive_decode(
     ``multimodal_jpeg_prog_restart_decode``.  Reference scope note: the reference delegates all
     media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_progressive,
-        synthesize_jpeg_prog,
-    )
+    from ..multimodal.decode import decode_jpeg_progressive
 
-    return media_query(spark, sf_dir, synthesize_jpeg_prog, decode_jpeg_progressive, "doc_id")
+    return media_query(spark, sf_dir, synth.make_jpeg_prog_bytes, decode_jpeg_progressive, "doc_id")
 
 
 @query(
@@ -939,12 +939,9 @@ def multimodal_jpeg_color_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_color,
-        synthesize_jpeg_color,
-    )
+    from ..multimodal.decode import decode_jpeg_color
 
-    return media_query(spark, sf_dir, synthesize_jpeg_color, decode_jpeg_color, "doc_id")
+    return media_query(spark, sf_dir, synth.make_jpeg_color_bytes, decode_jpeg_color, "doc_id")
 
 
 @query(
@@ -1022,12 +1019,9 @@ def multimodal_jpeg_color_restart_decode(
     lands wrong sums.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_color,
-        synthesize_jpeg_cdri,
-    )
+    from ..multimodal.decode import decode_jpeg_color
 
-    return media_query(spark, sf_dir, synthesize_jpeg_cdri, decode_jpeg_color, "doc_id")
+    return media_query(spark, sf_dir, synth.make_jpeg_cdri_bytes, decode_jpeg_color, "doc_id")
 
 
 @query(
@@ -1158,12 +1152,9 @@ def multimodal_h264_cavlc_decode(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import (
-        decode_h264_cavlc,
-        synthesize_h264_cavlc,
-    )
+    from ..multimodal.decode import decode_h264_cavlc
 
-    return media_query(spark, sf_dir, synthesize_h264_cavlc, decode_h264_cavlc, "doc_id")
+    return media_query(spark, sf_dir, synth.make_h264_cavlc_bytes, decode_h264_cavlc, "doc_id")
 
 
 @query(
@@ -1213,9 +1204,9 @@ def multimodal_jpeg_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: the reference delegates all media handling to its warehouse;
     this query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_jpeg_exif, synthesize_jpeg_exif
+    from ..multimodal.decode import decode_jpeg_exif
 
-    return media_query(spark, sf_dir, synthesize_jpeg_exif, decode_jpeg_exif, "doc_id")
+    return media_query(spark, sf_dir, synth.make_jpeg_exif_bytes, decode_jpeg_exif, "doc_id")
 
 
 @query(
@@ -1269,9 +1260,9 @@ def multimodal_aac_adts_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: the reference delegates all media handling to its warehouse;
     this query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_aac_adts, synthesize_aac_adts
+    from ..multimodal.decode import decode_aac_adts
 
-    return media_query(spark, sf_dir, synthesize_aac_adts, decode_aac_adts, "doc_id")
+    return media_query(spark, sf_dir, synth.make_aac_adts_bytes, decode_aac_adts, "doc_id")
 
 
 @query(
@@ -1313,12 +1304,9 @@ def multimodal_mp3_id3v1_tags(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_mp3_id3v1,
-        synthesize_mp3_id3v1,
-    )
+    from ..multimodal.decode import decode_mp3_id3v1
 
-    return media_query(spark, sf_dir, synthesize_mp3_id3v1, decode_mp3_id3v1, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_id3v1_bytes, decode_mp3_id3v1, "doc_id")
 
 
 @query(
@@ -1389,9 +1377,9 @@ def multimodal_wav_g711_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_wav_g711, synthesize_wav_g711
+    from ..multimodal.decode import decode_wav_g711
 
-    return media_query(spark, sf_dir, synthesize_wav_g711, decode_wav_g711, "doc_id")
+    return media_query(spark, sf_dir, synth.make_wav_g711_bytes, decode_wav_g711, "doc_id")
 
 
 @query(
@@ -1445,12 +1433,11 @@ def multimodal_gif_interlaced_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_gif_interlaced,
-        synthesize_gif_interlaced,
-    )
+    from ..multimodal.decode import decode_gif_interlaced
 
-    return media_query(spark, sf_dir, synthesize_gif_interlaced, decode_gif_interlaced, "doc_id")
+    return media_query(
+        spark, sf_dir, synth.make_gif_interlaced_bytes, decode_gif_interlaced, "doc_id"
+    )
 
 
 @query(
@@ -1525,9 +1512,9 @@ def multimodal_heif_box_walk(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_heif, synthesize_heif
+    from ..multimodal.decode import decode_heif
 
-    return media_query(spark, sf_dir, synthesize_heif, decode_heif, "doc_id")
+    return media_query(spark, sf_dir, synth.make_heif_bytes, decode_heif, "doc_id")
 
 
 @query(
@@ -1609,9 +1596,9 @@ def multimodal_mp4_box_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp4, synthesize_mp4
+    from ..multimodal.decode import decode_mp4
 
-    return media_query(spark, sf_dir, synthesize_mp4, decode_mp4, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp4_bytes, decode_mp4, "doc_id")
 
 
 @query(
@@ -1689,9 +1676,9 @@ def multimodal_mp4_frag_flags_walk(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp4, synthesize_mp4_fflags
+    from ..multimodal.decode import decode_mp4
 
-    return media_query(spark, sf_dir, synthesize_mp4_fflags, decode_mp4, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp4_frag_flags, decode_mp4, "doc_id")
 
 
 @query(
@@ -1774,9 +1761,9 @@ def multimodal_webm_ebml_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_webm, synthesize_webm
+    from ..multimodal.decode import decode_webm
 
-    return media_query(spark, sf_dir, synthesize_webm, decode_webm, "doc_id")
+    return media_query(spark, sf_dir, synth.make_webm_bytes, decode_webm, "doc_id")
 
 
 @query(
@@ -1855,9 +1842,9 @@ def multimodal_ogg_opus_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_ogg_opus, synthesize_ogg_opus
+    from ..multimodal.decode import decode_ogg_opus
 
-    return media_query(spark, sf_dir, synthesize_ogg_opus, decode_ogg_opus, "doc_id")
+    return media_query(spark, sf_dir, synth.make_ogg_opus_bytes, decode_ogg_opus, "doc_id")
 
 
 @query(
@@ -2019,9 +2006,9 @@ def multimodal_mp3_maindata_decode(spark: SparkSession, sf_dir: str) -> DataFram
     pure short-block granules decode in
     ``multimodal_mp3_short_block_decode`` and the widened-table +
     count1-table-A dispatch in ``multimodal_mp3_hufftables_decode``."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_md
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_md, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_md_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2139,9 +2126,9 @@ def multimodal_mp3_short_block_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_sb
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_sb, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_sb_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2271,9 +2258,9 @@ def multimodal_mp3_hufftables_decode(
     scope note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ht
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_ht, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_ht_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2397,9 +2384,9 @@ def multimodal_mp3_linbits_decode(
 ) -> DataFrame:
     """MP3 main-data decode through the COMPLETE 16x16 B.7 Huffman
     tier: granule regions cycle all 18 ids — tables 13 (validated
-    round 14, tools/mp3_t13_round14.py) and 15 plus ALL SIXTEEN
-    linbits escape tables 16-31 (validated round 13 via the
-    edge/row-tiling solves — tools/mp3_table_workbench.py; ids 17-23
+    round 14) and 15 plus ALL SIXTEEN linbits escape tables 16-31
+    (validated round 13 via the edge/row-tiling solves; every table is
+    gated by test_mp3_huffman_tables_are_valid_complete_codes; ids 17-23
     share table 16's code matrix and 25-31 share table 24's,
     differing only in MP3_LINBITS width).  A coordinate
     decoded as the ESC value 15 is extended by the table's raw
@@ -2414,9 +2401,9 @@ def multimodal_mp3_linbits_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_lb
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_lb, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_lb_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -2496,13 +2483,10 @@ def multimodal_h264_multiref_decode(
     declared boundaries.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_multiref,
-        synthesize_h264_multiref,
-    )
+    from ..multimodal.decode import decode_h264_multiref
 
     return media_query(
-        spark, sf_dir, synthesize_h264_multiref, decode_h264_multiref, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_multiref_bytes, decode_h264_multiref, "doc_id", "frame_idx"
     )
 
 
@@ -2563,12 +2547,11 @@ def multimodal_jpeg_prog_restart_decode(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_jpeg_progressive,
-        synthesize_jpeg_prog_rst,
-    )
+    from ..multimodal.decode import decode_jpeg_progressive
 
-    return media_query(spark, sf_dir, synthesize_jpeg_prog_rst, decode_jpeg_progressive, "doc_id")
+    return media_query(
+        spark, sf_dir, synth.make_jpeg_prog_rst_bytes, decode_jpeg_progressive, "doc_id"
+    )
 
 
 @query(
@@ -2678,13 +2661,10 @@ def multimodal_h264_p8x8_decode(
     boundaries.  Reference scope note: the reference delegates all
     media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_p8x8,
-        synthesize_h264_p8x8,
-    )
+    from ..multimodal.decode import decode_h264_p8x8
 
     return media_query(
-        spark, sf_dir, synthesize_h264_p8x8, decode_h264_p8x8, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_p8x8_bytes, decode_h264_p8x8, "doc_id", "frame_idx"
     )
 
 
@@ -2778,13 +2758,10 @@ def multimodal_h264_tdirect_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_tdirect,
-        synthesize_h264_tdirect,
-    )
+    from ..multimodal.decode import decode_h264_tdirect
 
     return media_query(
-        spark, sf_dir, synthesize_h264_tdirect, decode_h264_tdirect, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_tdirect_bytes, decode_h264_tdirect, "doc_id", "frame_idx"
     )
 
 
@@ -2973,13 +2950,10 @@ def multimodal_h264_fracpel_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_fracpel,
-        synthesize_h264_fracpel,
-    )
+    from ..multimodal.decode import decode_h264_fracpel
 
     return media_query(
-        spark, sf_dir, synthesize_h264_fracpel, decode_h264_fracpel, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_fracpel_bytes, decode_h264_fracpel, "doc_id", "frame_idx"
     )
 
 
@@ -3147,13 +3121,10 @@ def multimodal_h264_bpixel_decode(
     pixels by multimodal_h264_wpixel_decode.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_bpixel,
-        synthesize_h264_bpixel,
-    )
+    from ..multimodal.decode import decode_h264_bpixel
 
     return media_query(
-        spark, sf_dir, synthesize_h264_bpixel, decode_h264_bpixel, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_bpixel_bytes, decode_h264_bpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3312,13 +3283,10 @@ def multimodal_h264_dpixel_decode(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import (
-        decode_h264_dpixel,
-        synthesize_h264_dpixel,
-    )
+    from ..multimodal.decode import decode_h264_dpixel
 
     return media_query(
-        spark, sf_dir, synthesize_h264_dpixel, decode_h264_dpixel, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_dpixel_bytes, decode_h264_dpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3481,13 +3449,10 @@ def multimodal_h264_wpixel_decode(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_wpixel,
-        synthesize_h264_wpixel,
-    )
+    from ..multimodal.decode import decode_h264_wpixel
 
     return media_query(
-        spark, sf_dir, synthesize_h264_wpixel, decode_h264_wpixel, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_wpixel_bytes, decode_h264_wpixel, "doc_id", "frame_idx"
     )
 
 
@@ -3657,13 +3622,10 @@ def multimodal_h264_chroma_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_chroma,
-        synthesize_h264_chroma,
-    )
+    from ..multimodal.decode import decode_h264_chroma
 
     return media_query(
-        spark, sf_dir, synthesize_h264_chroma, decode_h264_chroma, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_chroma_bytes, decode_h264_chroma, "doc_id", "frame_idx"
     )
 
 
@@ -3821,13 +3783,10 @@ def multimodal_h264_submb_decode(
     sub-partitions.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_submb,
-        synthesize_h264_submb,
-    )
+    from ..multimodal.decode import decode_h264_submb
 
     return media_query(
-        spark, sf_dir, synthesize_h264_submb, decode_h264_submb, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_submb_bytes, decode_h264_submb, "doc_id", "frame_idx"
     )
 
 
@@ -3964,9 +3923,9 @@ def multimodal_mp3_requant_exact(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rq
+    from ..multimodal.decode import decode_mp3_requant
 
-    return media_query(spark, sf_dir, synthesize_mp3_rq, decode_mp3_requant, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_rq_bytes, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4102,9 +4061,9 @@ def multimodal_mp3_requant_wide(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqw
+    from ..multimodal.decode import decode_mp3_requant
 
-    return media_query(spark, sf_dir, synthesize_mp3_rqw, decode_mp3_requant, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_rqw_bytes, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4241,9 +4200,9 @@ def multimodal_mp3_requant_escape(
     overflow int64).  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqe
+    from ..multimodal.decode import decode_mp3_requant
 
-    return media_query(spark, sf_dir, synthesize_mp3_rqe, decode_mp3_requant, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_rqe_bytes, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -4290,9 +4249,9 @@ def multimodal_mp3_id3_tags(
     declared boundaries.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_id3, synthesize_mp3_id3
+    from ..multimodal.decode import decode_mp3_id3
 
-    return media_query(spark, sf_dir, synthesize_mp3_id3, decode_mp3_id3, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_id3_bytes, decode_mp3_id3, "doc_id")
 
 
 @query(
@@ -4372,9 +4331,9 @@ def multimodal_webp_vp8l_decode(
     Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_webp, synthesize_webp
+    from ..multimodal.decode import decode_webp
 
-    return media_query(spark, sf_dir, synthesize_webp, decode_webp, "doc_id")
+    return media_query(spark, sf_dir, synth.make_webp_vp8l_bytes, decode_webp, "doc_id")
 
 
 @query(
@@ -4466,9 +4425,9 @@ def multimodal_webp_vp8l_transform_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_webp, synthesize_webp_transform
+    from ..multimodal.decode import decode_webp
 
-    return media_query(spark, sf_dir, synthesize_webp_transform, decode_webp, "doc_id")
+    return media_query(spark, sf_dir, synth.make_webp_vp8l_transform_bytes, decode_webp, "doc_id")
 
 
 @query(
@@ -4570,13 +4529,10 @@ def multimodal_h264_weighted_decode(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_weighted,
-        synthesize_h264_weighted,
-    )
+    from ..multimodal.decode import decode_h264_weighted
 
     return media_query(
-        spark, sf_dir, synthesize_h264_weighted, decode_h264_weighted, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_weighted_bytes, decode_h264_weighted, "doc_id", "frame_idx"
     )
 
 
@@ -4658,13 +4614,10 @@ def multimodal_h264_bframe_decode(
     lists, weighted prediction.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_h264_bframe,
-        synthesize_h264_bframe,
-    )
+    from ..multimodal.decode import decode_h264_bframe
 
     return media_query(
-        spark, sf_dir, synthesize_h264_bframe, decode_h264_bframe, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_bframe_bytes, decode_h264_bframe, "doc_id", "frame_idx"
     )
 
 
@@ -4728,9 +4681,9 @@ def multimodal_png_colortypes_decode(
     sibling decoders.  Reference scope note: the reference delegates
     all media handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_png_ct, synthesize_png_ct
+    from ..multimodal.decode import decode_png_ct
 
-    return media_query(spark, sf_dir, synthesize_png_ct, decode_png_ct, "doc_id")
+    return media_query(spark, sf_dir, synth.make_png_ct_bytes, decode_png_ct, "doc_id")
 
 
 @query(
@@ -4868,9 +4821,9 @@ def multimodal_mp3_requant_ms_stereo(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant_ms, synthesize_mp3_ms
+    from ..multimodal.decode import decode_mp3_requant_ms
 
-    return media_query(spark, sf_dir, synthesize_mp3_ms, decode_mp3_requant_ms, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_ms_bytes, decode_mp3_requant_ms, "doc_id")
 
 
 @query(
@@ -5018,12 +4971,9 @@ def multimodal_mp3_requant_is_stereo(
     Reference scope note: the reference delegates all media handling
     to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import (
-        decode_mp3_requant_is,
-        synthesize_mp3_is,
-    )
+    from ..multimodal.decode import decode_mp3_requant_is
 
-    return media_query(spark, sf_dir, synthesize_mp3_is, decode_mp3_requant_is, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_is_bytes, decode_mp3_requant_is, "doc_id")
 
 
 @query(
@@ -5146,9 +5096,9 @@ def multimodal_mp3_requant_short(
     note: the reference delegates all media handling to its
     warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_requant, synthesize_mp3_rqs
+    from ..multimodal.decode import decode_mp3_requant
 
-    return media_query(spark, sf_dir, synthesize_mp3_rqs, decode_mp3_requant, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_rqs_bytes, decode_mp3_requant, "doc_id")
 
 
 @query(
@@ -5363,9 +5313,9 @@ def multimodal_mp3_imdct_synth(
     reference delegates all media handling to its warehouse; this
     query is part of the training-data-pipeline surface the brief
     adds."""
-    from ..multimodal.decode import decode_mp3_imdct, synthesize_mp3_imdct
+    from ..multimodal.decode import decode_mp3_imdct
 
-    return media_query(spark, sf_dir, synthesize_mp3_imdct, decode_mp3_imdct, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_imdct_bytes, decode_mp3_imdct, "doc_id")
 
 
 @query(
@@ -5487,9 +5437,9 @@ def multimodal_mp3_wswitch_regions_decode(
     (b[8] agrees across every MPEG-1 B.8 row).  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_ws
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_ws, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_ws_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5612,9 +5562,9 @@ def multimodal_mp3_b8_regions_decode(
     576) and by this round-trip.  Reference scope note: the reference
     delegates all media handling to its warehouse; this query is part
     of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_b8
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_b8, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_b8_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5732,9 +5682,9 @@ def multimodal_mp3_mixed_block_decode(
     pairs).  Reference scope note: the reference delegates all media
     handling to its warehouse; this query is part of the
     training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_mp3_maindata, synthesize_mp3_mx
+    from ..multimodal.decode import decode_mp3_maindata
 
-    return media_query(spark, sf_dir, synthesize_mp3_mx, decode_mp3_maindata, "doc_id")
+    return media_query(spark, sf_dir, synth.make_mp3_mx_bytes, decode_mp3_maindata, "doc_id")
 
 
 @query(
@@ -5808,9 +5758,11 @@ def multimodal_h264_gop_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     picture size.  Non-PCM coded macroblocks (real CAVLC residuals),
     CABAC, and ref-list modification raise at the declared stubs
     (``decode.py:_parse_pskip_slice``)."""
-    from ..multimodal.decode import decode_h264_gop, synthesize_h264_gop
+    from ..multimodal.decode import decode_h264_gop
 
-    return media_query(spark, sf_dir, synthesize_h264_gop, decode_h264_gop, "doc_id", "frame_idx")
+    return media_query(
+        spark, sf_dir, synth.make_h264_gop_bytes, decode_h264_gop, "doc_id", "frame_idx"
+    )
 
 
 @query(
@@ -5865,9 +5817,9 @@ def multimodal_png_adam7_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips, or mis-strides a pass fails even if the global mean
     survives.  Completes the PNG surface next to the non-interlaced
     ``multimodal_png_decode``."""
-    from ..multimodal.decode import decode_png_adam7, synthesize_png_adam7
+    from ..multimodal.decode import decode_png_adam7
 
-    return media_query(spark, sf_dir, synthesize_png_adam7, decode_png_adam7, "doc_id")
+    return media_query(spark, sf_dir, synth.make_png_adam7_bytes, decode_png_adam7, "doc_id")
 
 
 @query(
@@ -5945,9 +5897,11 @@ def multimodal_gif_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore-to-previous), transparency, Adam-style interlaced frames,
     and per-frame local color tables — exercised by the sibling
     ``multimodal_gif_{disposal,lct}_decode`` fixtures."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_anim
+    from ..multimodal.decode import decode_gif_anim
 
-    return media_query(spark, sf_dir, synthesize_gif_anim, decode_gif_anim, "doc_id", "frame_idx")
+    return media_query(
+        spark, sf_dir, synth.make_gif_anim_bytes, decode_gif_anim, "doc_id", "frame_idx"
+    )
 
 
 @query(
@@ -6021,10 +5975,10 @@ def multimodal_gif_disposal_decode(spark: SparkSession, sf_dir: str) -> DataFram
     dispose-save-draw cycle; a decoder that skips the save, fills the
     wrong rect, or draws transparent pixels diverges immediately
     (``decode.py:decode_gif_anim``)."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_disposal
+    from ..multimodal.decode import decode_gif_anim
 
     return media_query(
-        spark, sf_dir, synthesize_gif_disposal, decode_gif_anim, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_gif_disposal_bytes, decode_gif_anim, "doc_id", "frame_idx"
     )
 
 
@@ -6075,9 +6029,9 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     inventory (PNG static + Adam7, JPEG, GIF static + animated, BMP)
     with the archival/scanner format; other compressions, predictors,
     and tiled TIFFs raise at the declared boundary."""
-    from ..multimodal.decode import decode_tiff_real, synthesize_tiff
+    from ..multimodal.decode import decode_tiff_real
 
-    return media_query(spark, sf_dir, synthesize_tiff, decode_tiff_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_tiff_bytes, decode_tiff_real, "doc_id")
 
 
 @query(
@@ -6136,9 +6090,9 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lossless-codec format; stereo decorrelation lives in
     ``multimodal_flac_stereo_decode`` and variable blocking + wasted
     bits in ``multimodal_flac_vbs_decode``."""
-    from ..multimodal.decode import decode_flac_real, synthesize_flac
+    from ..multimodal.decode import decode_flac_real
 
-    return media_query(spark, sf_dir, synthesize_flac, decode_flac_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_flac_bytes, decode_flac_real, "doc_id")
 
 
 @query(
@@ -6203,9 +6157,9 @@ def multimodal_flac_vbs_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates all media handling to
     its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..multimodal.decode import decode_flac_real, synthesize_flac_vbs
+    from ..multimodal.decode import decode_flac_real
 
-    return media_query(spark, sf_dir, synthesize_flac_vbs, decode_flac_real, "doc_id")
+    return media_query(spark, sf_dir, synth.make_flac_vbs_bytes, decode_flac_real, "doc_id")
 
 
 @query(
@@ -6267,9 +6221,11 @@ def multimodal_gif_lct_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (``decode.py:decode_gif_anim``).  Completes the GIF89a
     frame-lifecycle inventory: composition, disposal, transparency,
     interlace, and now per-frame palettes."""
-    from ..multimodal.decode import decode_gif_anim, synthesize_gif_lct
+    from ..multimodal.decode import decode_gif_anim
 
-    return media_query(spark, sf_dir, synthesize_gif_lct, decode_gif_anim, "doc_id", "frame_idx")
+    return media_query(
+        spark, sf_dir, synth.make_gif_lct_bytes, decode_gif_anim, "doc_id", "frame_idx"
+    )
 
 
 @query(
@@ -6317,9 +6273,9 @@ def multimodal_png_palette_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     sum (``decode.py:decode_png_palette``).  Completes the PNG family
     beside truecolor (``multimodal_png_decode``) and Adam7
     (``multimodal_png_adam7_decode``)."""
-    from ..multimodal.decode import decode_png_palette, synthesize_png_palette
+    from ..multimodal.decode import decode_png_palette
 
-    return media_query(spark, sf_dir, synthesize_png_palette, decode_png_palette, "doc_id")
+    return media_query(spark, sf_dir, synth.make_png_palette_bytes, decode_png_palette, "doc_id")
 
 
 @query(
@@ -6353,9 +6309,9 @@ def multimodal_wav_extended_decode(spark: SparkSession, sf_dir: str) -> DataFram
     bit-identical across formats (``decode.py:decode_wav_ext``).
     Completes the WAV family beside the stdlib-path
     ``multimodal_wav_decode``."""
-    from ..multimodal.decode import decode_wav_ext, synthesize_wav_ext
+    from ..multimodal.decode import decode_wav_ext
 
-    return media_query(spark, sf_dir, synthesize_wav_ext, decode_wav_ext, "doc_id")
+    return media_query(spark, sf_dir, synth.make_wav_ext_bytes, decode_wav_ext, "doc_id")
 
 
 @query(
@@ -6407,9 +6363,9 @@ def multimodal_flac_stereo_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     recomputed against STREAMINFO's claim.  Removes the mono
     restriction that was the FLAC family's last major boundary
     (``decode.py:decode_flac_stereo``)."""
-    from ..multimodal.decode import decode_flac_stereo, synthesize_flac_stereo
+    from ..multimodal.decode import decode_flac_stereo
 
-    return media_query(spark, sf_dir, synthesize_flac_stereo, decode_flac_stereo, "doc_id")
+    return media_query(spark, sf_dir, synth.make_flac_stereo_bytes, decode_flac_stereo, "doc_id")
 
 
 @query(
@@ -6466,9 +6422,9 @@ def multimodal_bmp_rle8_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (skipped pixels settle to palette index 0, tested with a custom
     delta-bearing stream); this fixture itself never emits one, so
     the oracle is unchanged."""
-    from ..multimodal.decode import decode_bmp_rle8, synthesize_bmp_rle8
+    from ..multimodal.decode import decode_bmp_rle8
 
-    return media_query(spark, sf_dir, synthesize_bmp_rle8, decode_bmp_rle8, "doc_id")
+    return media_query(spark, sf_dir, synth.make_bmp_rle8_bytes, decode_bmp_rle8, "doc_id")
 
 
 @query(
@@ -6536,9 +6492,9 @@ def multimodal_bmp_rle4_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared 4-entry palette.  Reference scope note: the
     reference delegates media handling to its warehouse; this query is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_bmp_rle4, synthesize_bmp_rle4
+    from ..multimodal.decode import decode_bmp_rle4
 
-    return media_query(spark, sf_dir, synthesize_bmp_rle4, decode_bmp_rle4, "doc_id")
+    return media_query(spark, sf_dir, synth.make_bmp_rle4_bytes, decode_bmp_rle4, "doc_id")
 
 
 @query(
@@ -6625,8 +6581,8 @@ def multimodal_h264_inter_decode(
     residuals raise at declared boundaries.  Reference scope note:
     the reference delegates media handling to its warehouse; this is
     part of the training-data-pipeline surface the brief adds."""
-    from ..multimodal.decode import decode_h264_inter, synthesize_h264_inter
+    from ..multimodal.decode import decode_h264_inter
 
     return media_query(
-        spark, sf_dir, synthesize_h264_inter, decode_h264_inter, "doc_id", "frame_idx"
+        spark, sf_dir, synth.make_h264_inter_bytes, decode_h264_inter, "doc_id", "frame_idx"
     )

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..ingest.partitioner import partition_columns
+from .runner import await_or_raise
 
 
 def stream_csv_to_partitioned_parquet(
@@ -56,9 +57,7 @@ def stream_csv_to_partitioned_parquet(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover - only on timeout
-        q.stop()
+    await_or_raise(q, timeout_sec)
     return spark.read.parquet(landing_path)
 
 
@@ -98,6 +97,4 @@ def stream_upsert_partitions(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:  # pragma: no cover - only on timeout
-        q.stop()
+    await_or_raise(q, timeout_sec)

@@ -24,6 +24,22 @@ from pyspark.sql import DataFrame, SparkSession
 _CHECKPOINT_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
+def await_or_raise(q, timeout_sec: int) -> None:
+    """Wait up to ``timeout_sec`` for ``q`` to finish.  A query still
+    running then is stopped and raises ``TimeoutError`` naming it, since
+    its sink holds only part of the result, chained to ``q.exception()``
+    when the query recorded one.  A query that failed raises from
+    ``awaitTermination`` itself."""
+    q.awaitTermination(timeout_sec)
+    if q.isActive:
+        exc = q.exception()
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} still running after "
+            f"{timeout_sec}s; stopped, its sink is partial"
+        ) from exc
+
+
 def run_available_now(
     df: DataFrame,
     name: str,
@@ -60,9 +76,7 @@ def run_available_now(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(timeout_sec)
-        if q.isActive:  # pragma: no cover - only on timeout
-            q.stop()
+        await_or_raise(q, timeout_sec)
     finally:
         # restore only after the stream finished: micro-batches are
         # planned lazily, so restoring right after start() would race

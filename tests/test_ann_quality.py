@@ -52,6 +52,18 @@ def test_pq_recall_floor(spark, queries, exact_top10):
     assert recall >= 0.5, f"PQ recall@10 collapsed: {recall}"
 
 
+def test_pq_releases_its_subvector_cache(spark):
+    """The persisted subvector explode is released once the code
+    assignment has consumed it: building the PQ search leaves no
+    cached plan behind in the session."""
+    from open_source_etl_spark.operators.llm_similarity import _pq_topk
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    _pq_topk(spark, SF).collect()
+    assert cache.isEmpty()
+
+
 def test_pq_query_reports_floor_met(spark, queries):
     rows = queries["ann_pq_search"](spark, SF).collect()
     assert len(rows) == 1 and rows[0].recall_floor_met is True

@@ -7,6 +7,8 @@ cover the library API and the parts parity can't see (the stubbed path).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from open_source_etl_spark.functions.udfs import register_all
@@ -19,6 +21,7 @@ from open_source_etl_spark.multimodal import (
     sample_frames,
     with_media_payload,
 )
+from open_source_etl_spark.multimodal.host import decoder
 
 
 @pytest.fixture(scope="module")
@@ -150,16 +153,13 @@ def test_bmp_synth_is_spec_compliant():
 
 
 def test_wav_decode_roundtrip(spark):
-    """Kernel-level roundtrip on a tiny frame: decode(synthesize(ids))
+    """Kernel-level roundtrip on a tiny frame: the fused make→decode stage
     returns the generation parameters by actually parsing the bytes."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_wav_real,
-        synthesize_wav,
-    )
-    from open_source_etl_spark.multimodal.synth import wav_params
+    from open_source_etl_spark.multimodal.decode import decode_wav_real, media_frame
+    from open_source_etl_spark.multimodal.synth import make_wav_bytes, wav_params
 
     ids = spark.createDataFrame([(i,) for i in (0, 3, 99)], "doc_id long")
-    rows = {r.doc_id: r for r in decode_wav_real(synthesize_wav(ids)).collect()}
+    rows = {r.doc_id: r for r in media_frame(ids, make_wav_bytes, decode_wav_real).collect()}
     for i in (0, 3, 99):
         fr, nf, amp = wav_params(i)
         r = rows[i]
@@ -752,16 +752,13 @@ def test_avi_mjpeg_decode_frames(spark):
     """Every frame of every synthesized AVI decodes to the closed-form
     geometry and mean; frame means differ across frames (the per-frame
     base walk), so a decoder that replays frame 0 fails."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_avi_mjpeg,
-        synthesize_avi,
-    )
-    from open_source_etl_spark.multimodal.synth import avi_params
+    from open_source_etl_spark.multimodal.decode import decode_avi_mjpeg, media_frame
+    from open_source_etl_spark.multimodal.synth import avi_params, make_avi_bytes
 
     docs = spark.createDataFrame(
         [(d,) for d in (0, 3, 7, 11, 42)], "doc_id long"
     )
-    rows = decode_avi_mjpeg(synthesize_avi(docs)).collect()
+    rows = media_frame(docs, make_avi_bytes, decode_avi_mjpeg).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -969,26 +966,14 @@ def test_mp3_synth_is_spec_shaped():
     from open_source_etl_spark.multimodal import decode as D
     from open_source_etl_spark.multimodal.decode import mp3_crc16  # noqa: F811
 
-    kern_holder = []
-
-    class FakeDF:
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, kernel, schema):
-            kern_holder.append(kernel)
-            return None
-
-    D.decode_mp3_frames(FakeDF())
+    walk = D.decode_mp3_frames.factory()
     bad = bytearray(make_mp3_bytes(0))
     sr0 = MP3_SAMPLE_RATES[mp3_params(0)[1]]
     p0 = 10 + ((bad[6] << 21) | (bad[7] << 14) | (bad[8] << 7) | bad[9])
     f0_len = (144 * MP3_BITRATES_KBPS[1 + 0 % 14] * 1000) // sr0
     bad[p0 + f0_len + 8] ^= 0xFF  # inside protected frame 1's side info
     with pytest.raises(Exception, match="CRC"):
-        list(kern_holder[0](iter([
-            pd.DataFrame({"doc_id": [0], "payload": [bytes(bad)]})
-        ])))
+        list(walk(0, bytes(bad)))
 
 
 def test_mp3_side_info_round_trip():
@@ -1215,17 +1200,15 @@ def test_h264_ipcm_decode_frames(spark):
     """Every frame of every all-I_PCM stream decodes to the closed-form
     dimensions and mean luma; means differ across frames (the per-frame
     base walk), so a decoder replaying frame 0 fails."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_h264_ipcm,
-        synthesize_h264_ipcm,
-    )
+    from open_source_etl_spark.multimodal.decode import decode_h264_ipcm, media_frame
     from open_source_etl_spark.multimodal.synth import (
         h264_ipcm_luma,
         h264_ipcm_params,
+        make_h264_ipcm_bytes,
     )
 
     docs = spark.createDataFrame([(d,) for d in (0, 3, 7, 11, 42)], "doc_id long")
-    rows = decode_h264_ipcm(synthesize_h264_ipcm(docs)).collect()
+    rows = media_frame(docs, make_h264_ipcm_bytes, decode_h264_ipcm).collect()
     by_doc: dict[int, list] = {}
     for r in rows:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -1327,16 +1310,13 @@ def test_mp3_maindata_decode_uses_reservoir(spark):
     with a nonzero reservoir step the decoded max_reservoir must be
     positive and equal (n_frames-1)*delta, proving the decoder seeks
     backwards across physical frame boundaries."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_mp3_maindata,
-        synthesize_mp3_md,
-    )
-    from open_source_etl_spark.multimodal.synth import mp3_md_params
+    from open_source_etl_spark.multimodal.decode import decode_mp3_maindata, media_frame
+    from open_source_etl_spark.multimodal.synth import make_mp3_md_bytes, mp3_md_params
 
     docs = spark.createDataFrame([(11,), (12,)], "doc_id long")
     rows = {
         r.doc_id: r
-        for r in decode_mp3_maindata(synthesize_mp3_md(docs)).collect()
+        for r in media_frame(docs, make_mp3_md_bytes, decode_mp3_maindata).collect()
     }
     for d in (11, 12):
         n_frames, _sr, _br, delta = mp3_md_params(d)
@@ -1860,9 +1840,8 @@ def test_mp3_huffman_tables_are_valid_complete_codes():
     decides which clean-room transcriptions ship at all — tables 8-12
     cleared it in round 11 via the hole-tiling reconstruction, the
     16x16 tables 15/16/24 cleared it in round 13 via the scaled-up
-    edge-tiling solves (documented in tools/mp3_table_workbench.py),
-    and table 13 — the last gap — cleared it in round 14 when a fresh
-    full-table sitting passed verbatim (tools/mp3_t13_round14.py);
+    edge-tiling solves, and table 13 — the last gap — cleared it in
+    round 14 when a fresh full-table sitting passed verbatim;
     EVERY B.7 table now ships (16-23 share table 16's codes, 25-31
     share table 24's — MP3_LINBITS)."""
     from fractions import Fraction
@@ -2788,13 +2767,11 @@ def test_gif_disposal_semantics_pinned(spark):
     rect, so frame 2's transparent pixels must show the DISPOSED state
     (bg for doc 3: dis(1) = 2 + (3+1) % 2 = 2), not frame 1's pixels —
     and the opaque pixels must be frame 2's own values."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_gif_anim,
-        synthesize_gif_disposal,
-    )
+    from open_source_etl_spark.multimodal.decode import decode_gif_anim, media_frame
     from open_source_etl_spark.multimodal.synth import (
         gif_disposal_params,
         gif_palette,
+        make_gif_disposal_bytes,
     )
 
     doc = 3
@@ -2802,7 +2779,7 @@ def test_gif_disposal_semantics_pinned(spark):
     docs = spark.createDataFrame([(doc,)], "doc_id long")
     rows = {
         r.frame_idx: r
-        for r in decode_gif_anim(synthesize_gif_disposal(docs)).collect()
+        for r in media_frame(docs, make_gif_disposal_bytes, decode_gif_anim).collect()
     }
     assert len(rows) == nf
     pal = gif_palette(doc)
@@ -3187,10 +3164,7 @@ def test_gif_interlaced_base_frame_really_interlaced(spark):
     image descriptor flag is set, the LZW payload's row order differs
     from sequential, and the decoder still reconstructs the sequential
     canvas (frame 0 mean matches the closed form)."""
-    from open_source_etl_spark.multimodal.decode import (
-        decode_gif_anim,
-        synthesize_gif_disposal,
-    )
+    from open_source_etl_spark.multimodal.decode import decode_gif_anim, media_frame
     from open_source_etl_spark.multimodal.synth import (
         gif_disposal_params,
         gif_palette,
@@ -3209,7 +3183,7 @@ def test_gif_interlaced_base_frame_really_interlaced(spark):
     ) // (w * h)
     docs = spark.createDataFrame([(doc,)], "doc_id long")
     row = (
-        decode_gif_anim(synthesize_gif_disposal(docs))
+        media_frame(docs, make_gif_disposal_bytes, decode_gif_anim)
         .orderBy("frame_idx")
         .first()
     )
@@ -3339,20 +3313,10 @@ def test_wav_extended_rejects_malformed():
     from open_source_etl_spark.multimodal import decode as D
     from open_source_etl_spark.multimodal.synth import make_wav_ext_bytes
 
-    class FakeDF:
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, k, s):
-            return k
-
-    import pandas as pd
-
-    kernel = D.decode_wav_ext(FakeDF())
+    walk = D.decode_wav_ext.factory()
 
     def run(doc, payload):
-        pdf = pd.DataFrame({"doc_id": [doc], "payload": [payload]})
-        return list(kernel(iter([pdf])))
+        return list(walk(doc, payload))
 
     raw24 = make_wav_ext_bytes(0)   # 24-bit PCM
     rawf = make_wav_ext_bytes(1)    # float32
@@ -3396,18 +3360,10 @@ def test_png_palette_rejects_malformed():
     from open_source_etl_spark.multimodal import decode as D
     from open_source_etl_spark.multimodal.synth import make_png_palette_bytes
 
-    class FakeDF:
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, k, s):
-            return k
-
-    kernel = D.decode_png_palette(FakeDF())
+    walk = D.decode_png_palette.factory()
 
     def run(payload):
-        pdf = pd.DataFrame({"doc_id": [5], "payload": [payload]})
-        return list(kernel(iter([pdf])))
+        return list(walk(5, payload))
 
     raw = make_png_palette_bytes(5)
 
@@ -5335,23 +5291,8 @@ def test_mp3_intensity_stereo_and_pretab():
     assert MP3_PRETAB[17:20] == (3, 3, 3)
     assert MP3_PRETAB[21] == 0
 
-    kern_holder = []
-
-    class FakeDF:
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, kernel, schema):
-            kern_holder.append(kernel)
-            return None
-
-    D.decode_mp3_requant_is(FakeDF())
-    kernel = kern_holder[0]
-
     def run(doc, raw):
-        return list(kernel(iter([
-            pd.DataFrame({"doc_id": [doc], "payload": [raw]})
-        ])))[0].iloc[0]
+        return _decode_one(D.decode_mp3_requant_is, doc, raw)
 
     for d in (0, 1, 2, 6, 13):
         row = run(d, make_mp3_is_bytes(d))
@@ -5609,23 +5550,8 @@ def test_wav_g711_decode_vectors_and_rejections():
             b ^ 0x55
         )
 
-    kern_holder = []
-
-    class FakeDF:
-        def select(self, *a):
-            return self
-
-        def mapInPandas(self, kernel, schema):
-            kern_holder.append(kernel)
-            return None
-
-    D.decode_wav_g711(FakeDF())
-    kernel = kern_holder[0]
-
     def run(doc, raw):
-        return list(kernel(iter([
-            pd.DataFrame({"doc_id": [doc], "payload": [raw]})
-        ])))[0].iloc[0]
+        return _decode_one(D.decode_wav_g711, doc, raw)
 
     row = run(0, make_wav_g711_bytes(0))
     assert int(row.format_tag) == 7 and int(row.n_samples) == 200
@@ -5930,35 +5856,44 @@ def test_mp3_requant_wide_magnitudes(spark):
         assert p43[v] == int(math.floor(4096 * v ** (4 / 3) + 0.5))
 
 
-def _counting_synth(acc):
-    """A doc_id-only synth builder whose kernel counts the rows it sees."""
-
-    def synthesize_counted(docs_df):
-        def kernel(batches):
-            for pdf in batches:
-                acc.add(len(pdf))
-                yield pdf
-
-        return docs_df.select("doc_id").mapInPandas(kernel, "doc_id long")
-
-    return synthesize_counted
+def _decode_one(dec, doc, raw):
+    """``dec``'s single output row for one payload, by column name,
+    straight from its row function (no Spark)."""
+    (row,) = dec.factory()(doc, raw)
+    return SimpleNamespace(**dict(zip(dec.columns, (doc, *row))))
 
 
-def _passthrough_decode(media_df):
-    return media_df.select("doc_id").mapInPandas(lambda it: it, "doc_id long")
+def _counting_make(acc):
+    """A ``make`` that counts the payloads it builds."""
+
+    def make(doc_id):
+        acc.add(1)
+        return b""
+
+    return make
+
+
+def _passthrough():
+    """A decoder emitting one row (its input doc_id) per payload."""
+
+    @decoder("doc_id long")
+    def passthrough():
+        return lambda doc_id, raw: [()]
+
+    return passthrough
 
 
 def test_media_query_runs_each_kernel_once(spark, sf_dir):
     """``media_query`` range-partitions the doc_id scan BELOW the fused
-    kernel, so the kernel sees every doc exactly once.  The old shape,
-    ``orderBy`` over the kernel's output, ran it a second time for the
+    kernel, so ``make`` runs once per doc.  The old shape, ``orderBy``
+    over the kernel's output, ran it a second time for the
     RangePartitioner's sample."""
-    from open_source_etl_spark.multimodal.decode import fuse_synth_decode, media_query
+    from open_source_etl_spark.multimodal.decode import media_frame, media_query
 
     n_docs = load_table(spark, sf_dir, "documents").count()
     acc = spark.sparkContext.accumulator(0)
     out = media_query(
-        spark, sf_dir, _counting_synth(acc), _passthrough_decode, "doc_id"
+        spark, sf_dir, _counting_make(acc), _passthrough(), "doc_id"
     ).toPandas()
     assert len(out) == n_docs
     assert out["doc_id"].is_monotonic_increasing
@@ -5966,9 +5901,7 @@ def test_media_query_runs_each_kernel_once(spark, sf_dir):
 
     old = spark.sparkContext.accumulator(0)
     docs = load_table(spark, sf_dir, "documents")
-    fuse_synth_decode(docs, _counting_synth(old), _passthrough_decode).orderBy(
-        "doc_id"
-    ).toPandas()
+    media_frame(docs, _counting_make(old), _passthrough()).orderBy("doc_id").toPandas()
     assert old.value > n_docs
 
 
@@ -5983,22 +5916,22 @@ def test_media_query_order_matches_orderby(spark, sf_dir, monkeypatch, splits):
     from open_source_etl_spark import catalog
     from open_source_etl_spark.multimodal.decode import (
         decode_avi_mjpeg,
-        fuse_synth_decode,
+        media_frame,
         media_query,
-        synthesize_avi,
     )
+    from open_source_etl_spark.multimodal.synth import make_avi_bytes
     from open_source_etl_spark.plans import formatted_plan
 
     if splits is not None:
         monkeypatch.setattr(catalog, "_scan_splits", lambda *a: splits)
     got = media_query(
-        spark, sf_dir, synthesize_avi, decode_avi_mjpeg, "doc_id", "frame_idx"
+        spark, sf_dir, make_avi_bytes, decode_avi_mjpeg, "doc_id", "frame_idx"
     )
     # read before collect: an executed AQE plan also lists its final form
     width = re.findall(r"rangepartitioning\(doc_id#\d+L ASC NULLS FIRST, (\d+)\)",
                        formatted_plan(got))
     docs = load_table(spark, sf_dir, "documents")
-    want = fuse_synth_decode(docs, synthesize_avi, decode_avi_mjpeg).orderBy(
+    want = media_frame(docs, make_avi_bytes, decode_avi_mjpeg).orderBy(
         "doc_id", "frame_idx"
     )
     got_rows, want_rows = got.collect(), want.collect()
@@ -6011,27 +5944,71 @@ def test_media_query_requires_doc_id_first(spark, sf_dir):
     from open_source_etl_spark.multimodal.decode import media_query
 
     with pytest.raises(ValueError, match="doc_id"):
-        media_query(spark, sf_dir, _counting_synth(None), _passthrough_decode, "frame_idx")
+        media_query(spark, sf_dir, _counting_make(None), _passthrough(), "frame_idx")
 
 
-def test_fuse_synth_decode_fails_loud_on_uncapturable_builder(spark):
-    """A builder that is not a bare select().mapInPandas() raises a
-    TypeError naming it: no silent two-stage fallback."""
-    from open_source_etl_spark.multimodal.decode import fuse_synth_decode
+def test_decoder_schema_must_start_with_doc_id():
+    """``@decoder`` refuses, when the factory is declared, a schema
+    whose first column is not the doc_id the host prepends."""
+    with pytest.raises(ValueError, match="misdeclared.*must be doc_id"):
 
-    ids = spark.range(3).withColumnRenamed("id", "doc_id")
+        @decoder("frame_idx long, doc_id long")
+        def misdeclared():
+            return lambda doc_id, raw: []
 
-    def synthesize_filtered(docs_df):
-        return docs_df.filter("doc_id > 0").select("doc_id").mapInPandas(
-            lambda it: it, "doc_id long"
+
+def test_host_rejects_rows_that_do_not_fit_the_schema():
+    """A row function yielding more values than the schema has after
+    doc_id fails the batch instead of dropping columns."""
+    import pandas as pd
+
+    from open_source_etl_spark.multimodal.host import host
+
+    @decoder("doc_id long, a long")
+    def too_wide():
+        return lambda doc_id, raw: [(1, 2)]
+
+    batch = pd.DataFrame({"doc_id": [0], "payload": [b""]})
+    with pytest.raises(ValueError, match="too_wide: rows have 2 values, schema has 1"):
+        list(host(too_wide)(iter([batch])))
+
+
+class _NoSession:
+    """A stand-in session: any use of it raises ``Touched``."""
+
+    class Touched(Exception):
+        pass
+
+    def __getattr__(self, name):
+        raise _NoSession.Touched(name)
+
+
+def test_every_media_query_row_function_matches_its_schema(monkeypatch):
+    """Spark-free arity check over every fused media query: record the
+    ``(make, decoder)`` each ``multimodal_*`` query hands ``media_query``,
+    then run the decoder's row function on ``make(d)`` for a few docs;
+    every row plus the host's doc_id must fill the schema exactly."""
+    from open_source_etl_spark.operators import multimodal_queries as MQ
+    from open_source_etl_spark.registry import all_queries
+
+    pairs = {}
+    for name, fn in sorted(all_queries().items()):
+        if not name.startswith("multimodal_"):
+            continue
+        monkeypatch.setattr(
+            MQ, "media_query",
+            lambda spark, sf_dir, make, dec, *order, name=name: pairs.setdefault(
+                name, (make, dec)
+            ),
         )
-
-    def synthesize_wide(docs_df):
-        return docs_df.select("doc_id", "text").mapInPandas(lambda it: it, "doc_id long")
-
-    with pytest.raises(TypeError, match="synthesize_filtered"):
-        fuse_synth_decode(ids, synthesize_filtered, _passthrough_decode)
-    with pytest.raises(TypeError, match="synthesize_wide"):
-        fuse_synth_decode(ids, synthesize_wide, _passthrough_decode)
-    with pytest.raises(TypeError, match="mapInPandas"):
-        fuse_synth_decode(ids, _counting_synth(None), lambda df: df)
+        try:
+            fn(_NoSession(), "unused")
+        except _NoSession.Touched:
+            pass  # an unfused query builds its own plan on the session
+    assert len(pairs) == 69
+    for name, (make, dec) in pairs.items():
+        walk = dec.factory()
+        for d in (0, 1, 7):
+            rows = list(walk(d, make(d)))
+            assert rows, (name, d)
+            assert {len(r) + 1 for r in rows} == {len(dec.columns)}, (name, d)

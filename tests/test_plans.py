@@ -93,8 +93,8 @@ def test_python_stages_only_where_designed(audit):
 ])
 def test_round14_media_queries_keep_the_arrow_tier_shape(audit, name):
     """Every round-14 media/container query keeps the established
-    scale shape: ONE fused Python stage (``fuse_synth_decode`` composes
-    the synthesize and decode Arrow kernels inside a single
+    scale shape: ONE fused Python stage (``media_frame`` hosts
+    ``make_X_bytes`` and the decoder's row function inside a single
     mapInPandas, so payload bytes never cross the JVM boundary),
     exactly one shuffle (``media_query`` range-partitions the doc_id
     scan below the kernel; the output is only sorted within

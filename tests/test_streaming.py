@@ -69,3 +69,46 @@ def test_transform_with_state_plan_and_fallback(spark, sf_dir):
         .count()
     )
     assert got.count() == want.count()
+
+
+class _StuckQuery:
+    """A streaming query stand-in whose ``awaitTermination`` returns
+    while the query is still running (a timeout)."""
+
+    name, id = "stuck_replay", "0000-stuck"
+
+    def __init__(self, exc=None):
+        self.isActive, self.stopped, self._exc = True, False, exc
+
+    def awaitTermination(self, timeout):
+        return False
+
+    def exception(self):
+        return self._exc
+
+    def stop(self):
+        self.stopped, self.isActive = True, False
+
+
+def test_streaming_timeout_stops_and_raises():
+    """A run that outlives its timeout is stopped and raises, naming the
+    query and chaining the query's own exception, instead of returning
+    the partial sink as if it were complete."""
+    import pytest
+
+    from open_source_etl_spark.streaming.runner import await_or_raise
+
+    q = _StuckQuery()
+    with pytest.raises(TimeoutError, match="stuck_replay still running after 7s"):
+        await_or_raise(q, 7)
+    assert q.stopped
+
+    cause = RuntimeError("state store lost")
+    with pytest.raises(TimeoutError) as info:
+        await_or_raise(_StuckQuery(cause), 7)
+    assert info.value.__cause__ is cause
+
+    done = _StuckQuery()
+    done.isActive = False
+    await_or_raise(done, 7)
+    assert not done.stopped

@@ -3,9 +3,9 @@ final collect (guide §1.4 — noop sink so the sink never bills the
 computation; §1.5 — labeled jobs).
 
 For each named media family this times, on one warm local session:
-  synth   — synthesize_X(docs) → noop
-  decode  — decode_X(synthesize_X(docs)) → noop  (includes synth cost)
-  query   — the declared registry query → noop   (adds orderBy etc.)
+  synth   — make_X_bytes per doc in the media stage, no decode → noop
+  decode  — media_frame(docs, make_X_bytes, decode_X) → noop  (includes synth cost)
+  query   — the declared registry query → noop   (adds the doc_id range shuffle)
 
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
        python tools/profile_media_kernels.py [name ...]
@@ -21,26 +21,26 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# family → (synthesize fn name, decode fn name) in multimodal.decode
+# family → (make fn name in multimodal.synth, decode fn name in multimodal.decode)
 FAMILIES = {
     "multimodal_webp_vp8l_transform_decode": (
-        "synthesize_webp_transform", "decode_webp"),
+        "make_webp_vp8l_transform_bytes", "decode_webp"),
     "multimodal_h264_dpixel_decode": (
-        "synthesize_h264_dpixel", "decode_h264_dpixel"),
+        "make_h264_dpixel_bytes", "decode_h264_dpixel"),
     "multimodal_h264_submb_decode": (
-        "synthesize_h264_submb", "decode_h264_submb"),
+        "make_h264_submb_bytes", "decode_h264_submb"),
     "multimodal_h264_bpixel_decode": (
-        "synthesize_h264_bpixel", "decode_h264_bpixel"),
+        "make_h264_bpixel_bytes", "decode_h264_bpixel"),
     "multimodal_h264_wpixel_decode": (
-        "synthesize_h264_wpixel", "decode_h264_wpixel"),
+        "make_h264_wpixel_bytes", "decode_h264_wpixel"),
     "multimodal_h264_cavlc_decode": (
-        "synthesize_h264_cavlc", "decode_h264_cavlc"),
+        "make_h264_cavlc_bytes", "decode_h264_cavlc"),
     "multimodal_h264_chroma_decode": (
-        "synthesize_h264_chroma", "decode_h264_chroma"),
+        "make_h264_chroma_bytes", "decode_h264_chroma"),
     "multimodal_h264_fracpel_decode": (
-        "synthesize_h264_fracpel", "decode_h264_fracpel"),
+        "make_h264_fracpel_bytes", "decode_h264_fracpel"),
     "multimodal_flac_stereo_decode": (
-        "synthesize_flac_stereo", "decode_flac_stereo"),
+        "make_flac_stereo_bytes", "decode_flac_stereo"),
 }
 
 
@@ -57,6 +57,8 @@ def main() -> None:
     from open_source_etl_spark.catalog import load_table_compute
     from open_source_etl_spark.conf import EngineConfig
     from open_source_etl_spark.multimodal import decode as D
+    from open_source_etl_spark.multimodal import synth as S
+    from open_source_etl_spark.multimodal.host import decoder
     from open_source_etl_spark.registry import all_queries
     from open_source_etl_spark.session import build_session
 
@@ -71,17 +73,20 @@ def main() -> None:
     queries = all_queries()
     docs = load_table_compute(spark, sf_dir, "documents")
 
+    @decoder("doc_id long")
+    def payload_only():
+        return lambda doc_id, raw: ()
+
     print(f"{'query':44s} {'synth':>8s} {'decode':>8s} {'full':>8s}")
     for name in names:
         fam = FAMILIES.get(name)
         t_s = t_d = float("nan")
         if fam:
-            synth = getattr(D, fam[0])
-            dec = getattr(D, fam[1])
+            make, dec = getattr(S, fam[0]), getattr(D, fam[1])
             sc.setJobDescription(f"profile:{name}:synth")
-            t_s = noop(synth(docs))
+            t_s = noop(D.media_frame(docs, make, payload_only))
             sc.setJobDescription(f"profile:{name}:decode")
-            t_d = noop(dec(synth(docs)))
+            t_d = noop(D.media_frame(docs, make, dec))
         sc.setJobDescription(f"profile:{name}:full")
         t_q = noop(queries[name](spark, sf_dir))
         sc.setJobDescription(None)
