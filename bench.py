@@ -73,10 +73,13 @@ def main() -> None:
         2, "id"
     ).saveAsTable(_warm_tbl)
     spark.sql(f"DROP TABLE {_warm_tbl}")
-    # Arrow/pandas python-worker spin-up (~1s) and the streaming python
+    # Python worker daemon start-up (~1s) and the streaming python
     # state-runner spin-up (~4.5s): both are one-time session costs that
     # would otherwise bill to the first pandas-UDF / stateful-streaming
-    # query; warm them on a minimal sf0.001 run
+    # query; warm them on a minimal sf0.001 run.  What each Python TASK
+    # pays before its first row (worker hand-off, setup_spark_files,
+    # whose pyspark.zip re-reads _pydaemon.py removes) recurs on every
+    # query and no warm-up removes it
     spark.range(100).mapInPandas(lambda it: it, "id long").collect()
     from open_source_etl_spark.streaming import (
         run_available_now,

@@ -3,16 +3,45 @@ runs the query with Spark's SQL UDF profiler enabled and prints the
 aggregated per-UDF stats, so the hot lines inside mapInPandas kernels are
 measured where they run instead of guessed at.
 
+The UDF profiler sees only time inside UDFs, not what a Python task
+pays before its first row (worker hand-off, ``setup_spark_files``), so
+first it always prints one line: the median duration of an identity
+``mapInPandas`` task over ``defaultParallelism`` partitions.
+
 Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-       python tools/profile_udf_worker.py <query> [<query> ...] [--top N]
+       python tools/profile_udf_worker.py [<query> ...] [--top N]
 """
 
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def python_task_seconds(spark, runs: int = 7) -> list[float]:
+    """Durations (s) of identity ``mapInPandas`` tasks, one per core, over
+    ``runs`` jobs after one warm-up job that starts the worker daemon;
+    read from the SparkContext's status store."""
+    sc = spark.sparkContext
+    parts = sc.defaultParallelism
+    df = spark.range(parts * 100, numPartitions=parts)
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    to_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    seconds: list[float] = []
+    for run in range(runs + 1):
+        before = set(tracker.getJobIdsForGroup())
+        df.mapInPandas(lambda it: it, df.schema).write.format("noop").mode("overwrite").save()
+        if run == 0:
+            continue
+        for job in set(tracker.getJobIdsForGroup()) - before:
+            for stage in tracker.getJobInfo(job).stageIds:
+                for task in to_java(store.taskList(stage, 0, 1 << 30)):
+                    seconds.append(task.duration().get() / 1000)
+    return seconds
 
 
 def main() -> None:
@@ -31,6 +60,11 @@ def main() -> None:
     cfg = EngineConfig(master=f"local[{cpus}]", shuffle_partitions=max(int(cpus), 8))
     spark = build_session(cfg)
     spark.sparkContext.setLogLevel("ERROR")
+    tasks = python_task_seconds(spark)
+    print(
+        f"identity mapInPandas: median {statistics.median(tasks):.3f} s per task "
+        f"({len(tasks)} tasks, {spark.sparkContext.defaultParallelism} per job)"
+    )
     spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
 
     queries = all_queries()
