@@ -25,7 +25,11 @@ in ``synth.py`` and an ``@decoder(SCHEMA)`` factory returning ``(doc_id,
 raw) -> rows``.  ``host.py`` holds the one ``mapInPandas`` batch loop
 around them; ``decode.media_frame(docs, make, decode_X)`` runs both in a
 single Python stage, and ``decode_X(media_df)`` decodes a ``doc_id,
-payload`` frame.
+payload`` frame.  The six ``media.payload`` feature kernels
+(``decode_image_meta``, ``sample_frames``, ``audio_chunk_energy``,
+``block_mean_resize``, ``byte_histogram``, ``perceptual_hash``) are
+decoders of the same shape: feed them
+``with_media_payload(df).select("doc_id", "media.payload")``.
 """
 
 from .schema import (

@@ -13,38 +13,20 @@ MP3_META_SCHEMA = (
 )
 
 
-_MP3_CRC16_TAB: list[int] | None = None
-
-
-def _mp3_crc16_tab() -> list[int]:
-    """256-entry byte-at-a-time table for the MPEG CRC-16 (guide
-    §4.2 — hoist per-bit work out of the per-byte loop): T[v] is the
-    register after clocking byte v through the bitwise recurrence
-    with zero data bits, the standard table-driven MSB-first form.
-    Built once per process; fuzz-pinned against the bitwise reference
-    in tests/test_multimodal.py."""
-    global _MP3_CRC16_TAB
-    if _MP3_CRC16_TAB is None:
-        tab = []
-        for v in range(256):
-            crc = v << 8
-            for _ in range(8):
-                crc = ((crc << 1) ^ 0x8005 if crc & 0x8000 else crc << 1) & 0xFFFF
-            tab.append(crc)
-        _MP3_CRC16_TAB = tab
-    return _MP3_CRC16_TAB
-
-
 def mp3_crc16(data: bytes) -> int:
     """The MPEG audio CRC-16 (ISO 11172-3 2.4.3.1 / A.9): polynomial
     x^16 + x^15 + x^2 + 1 (0x8005), initial value 0xFFFF, MSB-first,
-    no final inversion.  For Layer III the protected span is header
-    bytes 2-3 followed by the complete side information.  Table-driven
-    byte-at-a-time form of the bitwise recurrence (identical values)."""
+    no final inversion (the CRC-16/CMS catalogue entry).  For Layer III
+    the protected span is header bytes 2-3 followed by the complete
+    side information.  Byte-at-a-time over the same 0x8005 table as
+    ``synth.flac_crc16`` (FLAC differs only in its zero initial value);
+    tests/test_multimodal.py pins the catalogue check values and a
+    bitwise reference."""
+    from .synth import _CRC16_TABLE
+
     crc = 0xFFFF
-    tab = _mp3_crc16_tab()
     for b in data:
-        crc = ((crc << 8) & 0xFFFF) ^ tab[(crc >> 8) ^ b]
+        crc = ((crc << 8) & 0xFFFF) ^ _CRC16_TABLE[(crc >> 8) ^ b]
     return crc
 
 
@@ -137,8 +119,8 @@ def decode_mp3_frames():
     (big_values ≤ 288, no reserved block_type).
     The stream-structure layer of an audio pipeline's metadata pass
     (duration, CBR/VBR, average bitrate) with NO audio decode: the
-    Huffman/IMDCT sample reconstruction stays a declared stub
-    (``audio_chunk_energy``'s codec='real' site).  Malformed streams
+    Huffman/IMDCT sample reconstruction belongs to
+    ``decode_mp3_maindata`` / ``decode_mp3_imdct``.  Malformed streams
     (bad sync, reserved bitrate/sample-rate indices, truncated final
     frame, a frame too short to carry its side info, trailing garbage)
     raise rather than yielding silently wrong durations."""

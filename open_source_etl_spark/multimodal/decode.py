@@ -3,9 +3,8 @@
 Each codec decoder is an ``@decoder(SCHEMA)`` factory (``host.py``):
 its body is the per-task setup and it returns a row function ``(doc_id,
 raw) -> rows``; the one host loop streams payload bytes through the
-Python worker in Arrow batches, never through the driver.  The six
-``media.payload`` feature kernels at the top keep their own loops.  Two
-tiers coexist:
+Python worker in Arrow batches, never through the driver.  Two tiers
+coexist:
 
 - REAL pure-stdlib decoders, implemented from the public specs and
   value-checked against closed-form oracles: PNG (zlib/filters), JPEG
@@ -15,16 +14,15 @@ tiers coexist:
   per-granule Huffman-region geometry), and the H.264 Annex-B NAL walk
   + SPS/PPS/slice-header parses (exp-Golomb, emulation-prevention
   stripping).
-- Library-shaped stubs for what genuinely needs a codec/DSP library or
-  entropy-model tables this container lacks: ``codec="real"`` raises
-  ``NotImplementedError`` at the exact call site PIL/librosa/av would
-  occupy (generic image open, PCM DSP); the MP3 16x16 Huffman tables
-  (13/15, linbits 16-31), the polyphase synthesis window, and the
-  H.264 CABAC path remain declared stubs (CAVLC and the hybrid
-  filterbank ship); ``codec="fake"`` runs a deterministic,
-  oracle-checkable
-  stand-in so the entire Spark-side pipeline — schema, batching, row
-  expansion, partitioning — is tested either way.
+- Stand-ins where a codec/DSP library would run: the six
+  ``media.payload`` feature kernels at the top (``decode_image_meta``,
+  ``sample_frames``, ``audio_chunk_energy``, ``block_mean_resize``,
+  ``byte_histogram``, ``perceptual_hash``) compute deterministic,
+  oracle-checkable features at the call sites PIL/librosa/av would
+  occupy, so the Spark-side pipeline — schema, batching, row
+  expansion, partitioning — is tested end to end.  What this package
+  does not decode (the H.264 CABAC path, and kin) sits behind declared
+  ``NotImplementedError`` boundaries.
 
 Scale posture: media rows are big, so upstream reads should size input
 splits by bytes (``spark.sql.files.maxPartitionBytes``) and the kernels
@@ -37,158 +35,87 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 
 from .host import Decoder, decoder, host, indexed
 from .schema import IMAGE_META_SCHEMA
 
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
-
 FRAME_SCHEMA = "doc_id long, frame_idx long, frame_sha string"
+FRAME_BYTES = 100  # sample_frames: bytes per fake video frame
+FRAME_STRIDE = 10  # sample_frames: emit every 10th frame
 
 
-def _fake_image_meta(payload: bytes) -> tuple[str, int, int, int]:
-    """Deterministic stand-in for an image header parse: dimensions are a
-    pure function of the byte length (also computable in SQL, which is
-    what makes the pipeline oracle-checkable)."""
-    n = len(payload)
-    sha = hashlib.sha256(payload).hexdigest()
-    width = 64 + n % 577
-    height = 64 + (n * 31) % 421
-    return sha, width, height, 3
+@decoder(IMAGE_META_SCHEMA)
+def decode_image_meta():
+    """Image metadata from the payload: a deterministic stand-in for an
+    image header parse (where ``PIL.Image.open`` would run) — the sha256
+    plus dimensions that are a pure function of the byte length (also
+    computable in SQL, which is what makes the pipeline
+    oracle-checkable)."""
+
+    def row(doc_id: int, raw: bytes):
+        n = len(raw)
+        sha = hashlib.sha256(raw).hexdigest()
+        return [(n, sha, 64 + n % 577, 64 + (n * 31) % 421, 3)]
+
+    return row
 
 
-def decode_image_meta(
-    media_df: DataFrame, codec: str = "fake"
-) -> DataFrame:
-    """Extract image metadata from ``media.payload`` via ``mapInPandas``.
-
-    ``codec="real"`` marks where ``PIL.Image.open(io.BytesIO(b))`` would
-    run; this container has no codec libraries, so it raises.
-    """
-    if codec not in ("fake", "real"):
-        raise ValueError(f"unknown codec: {codec}")
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real image decode requires an image library (e.g. PIL); "
-                    "not available in this environment — use codec='fake'"
-                )
-            metas = [_fake_image_meta(bytes(b)) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_bytes": [len(bytes(b)) for b in pdf["payload"]],
-                    "sha": [m[0] for m in metas],
-                    "width": [m[1] for m in metas],
-                    "height": [m[2] for m in metas],
-                    "n_channels": [m[3] for m in metas],
-                }
-            )
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, IMAGE_META_SCHEMA)
-
-
-def sample_frames(
-    media_df: DataFrame, frame_bytes: int = 100, stride: int = 10, codec: str = "fake"
-) -> DataFrame:
-    """Treat the payload as a "video" of fixed-size frames and emit every
-    ``stride``-th frame — the row-EXPANDING kernel shape (1 input row →
-    n_frames/stride output rows) real frame extraction uses.
+@decoder(FRAME_SCHEMA)
+def sample_frames():
+    """Treat the payload as a "video" of ``FRAME_BYTES``-byte frames and
+    emit every ``FRAME_STRIDE``-th frame — the row-EXPANDING kernel
+    shape (1 input row → n_frames/stride output rows) real frame
+    extraction uses.
 
     The fake "frame" is the sha of the frame's byte slice; a real kernel
     would hand the slice to a video codec here.
     """
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def rows(doc_id: int, raw: bytes):
+        for idx in range(0, len(raw) // FRAME_BYTES, FRAME_STRIDE):
+            chunk = raw[idx * FRAME_BYTES : (idx + 1) * FRAME_BYTES]
+            yield idx, hashlib.sha256(chunk).hexdigest()
 
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real frame extraction requires a video library (e.g. av)"
-                )
-            doc_ids: list[int] = []
-            frame_idxs: list[int] = []
-            shas: list[str] = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                payload = bytes(b)
-                n_frames = len(payload) // frame_bytes
-                for idx in range(0, n_frames, stride):
-                    chunk = payload[idx * frame_bytes : (idx + 1) * frame_bytes]
-                    doc_ids.append(doc_id)
-                    frame_idxs.append(idx)
-                    shas.append(hashlib.sha256(chunk).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": doc_ids, "frame_idx": frame_idxs, "frame_sha": shas}
-            )
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, FRAME_SCHEMA)
+    return rows
 
 
 AUDIO_SCHEMA = "doc_id long, chunk_idx long, n_samples int, energy bigint, peak int"
+AUDIO_CHUNK = 400  # audio_chunk_energy: samples per chunk
 
 
-def audio_chunk_energy(
-    media_df: DataFrame, chunk_samples: int = 400, codec: str = "fake"
-) -> DataFrame:
+@decoder(AUDIO_SCHEMA)
+def audio_chunk_energy():
     """Audio feature extraction shape: treat the payload as a PCM sample
-    stream, window it into fixed chunks, emit per-chunk energy/peak —
-    the VAD/loudness pre-filter of a speech-data pipeline.
+    stream, window it into ``AUDIO_CHUNK``-sample chunks, emit per-chunk
+    energy/peak — the VAD/loudness pre-filter of a speech-data pipeline.
 
-    The fake codec reads one unsigned byte per sample (a real kernel
-    would ``np.frombuffer(b, dtype='<i2')`` and hand frames to a DSP
-    lib); energy = sum of samples, peak = max.  Vectorized numpy inside
-    the batch loop; zero shuffle.
+    One unsigned byte per sample (a real kernel would
+    ``np.frombuffer(b, dtype='<i2')`` and hand frames to a DSP lib);
+    energy = sum of samples, peak = max.  Vectorized numpy per chunk;
+    zero shuffle.
     """
+    import numpy as np
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def rows(doc_id: int, raw: bytes):
+        samples = np.frombuffer(raw, dtype=np.uint8)
+        for i in range(len(samples) // AUDIO_CHUNK):
+            chunk = samples[i * AUDIO_CHUNK : (i + 1) * AUDIO_CHUNK]
+            yield i, len(chunk), int(chunk.sum()), int(chunk.max())
 
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real audio decode requires an audio library (e.g. librosa)"
-                )
-            out: dict[str, list] = {
-                "doc_id": [], "chunk_idx": [], "n_samples": [], "energy": [], "peak": [],
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(b), dtype=np.uint8)
-                n_chunks = len(samples) // chunk_samples
-                for i in range(n_chunks):
-                    chunk = samples[i * chunk_samples : (i + 1) * chunk_samples]
-                    out["doc_id"].append(doc_id)
-                    out["chunk_idx"].append(i)
-                    out["n_samples"].append(len(chunk))
-                    out["energy"].append(int(chunk.sum()))
-                    out["peak"].append(int(chunk.max()))
-            yield pd.DataFrame(out)
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, AUDIO_SCHEMA)
+    return rows
 
 
 RESIZE_SCHEMA = "doc_id long, n_in int, n_out int, checksum bigint, head array<bigint>"
+RESIZE_FACTOR = 8  # block_mean_resize: input bytes per output byte
 
 
-def block_mean_resize(
-    media_df: DataFrame, factor: int = 8, codec: str = "fake"
-) -> DataFrame:
+@decoder(RESIZE_SCHEMA)
+def block_mean_resize():
     """Resize/downsample kernel shape: block-mean the payload byte stream
-    by ``factor`` (the 1-D analogue of thumbnail generation — a real
-    kernel would ``PIL.Image.resize`` the decoded pixel grid here).
+    by ``RESIZE_FACTOR`` (the 1-D analogue of thumbnail generation — a
+    real kernel would ``PIL.Image.resize`` the decoded pixel grid here).
 
     Output byte i = floor(mean of input block i) computed as integer
     ``sum // factor`` so the result is exactly reproducible in SQL.
@@ -196,73 +123,43 @@ def block_mean_resize(
     first 8 resized values; the full resized payload would be carried as
     binary in production — the summary keeps the oracle cheap.
     """
+    import numpy as np
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id: int, raw: bytes):
+        samples = np.frombuffer(raw, dtype=np.uint8)
+        n_out = len(samples) // RESIZE_FACTOR
+        blocks = samples[: n_out * RESIZE_FACTOR].reshape(n_out, RESIZE_FACTOR)
+        resized = blocks.sum(axis=1, dtype=np.int64) // RESIZE_FACTOR
+        return [(len(samples), n_out, int(resized.sum()),
+                 [int(x) for x in resized[:8]])]
 
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real resize requires an image library (e.g. PIL)"
-                )
-            out: dict[str, list] = {
-                "doc_id": [], "n_in": [], "n_out": [], "checksum": [], "head": [],
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(b), dtype=np.uint8)
-                n_out = len(samples) // factor
-                blocks = samples[: n_out * factor].reshape(n_out, factor)
-                resized = blocks.sum(axis=1, dtype=np.int64) // factor
-                out["doc_id"].append(doc_id)
-                out["n_in"].append(len(samples))
-                out["n_out"].append(n_out)
-                out["checksum"].append(int(resized.sum()))
-                out["head"].append([int(x) for x in resized[:8]])
-            yield pd.DataFrame(out)
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, RESIZE_SCHEMA)
+    return row
 
 
 HISTOGRAM_SCHEMA = "doc_id long, n_bytes int, hist array<bigint>, top_bin int"
 
 
-def byte_histogram(media_df: DataFrame, codec: str = "fake") -> DataFrame:
+@decoder(HISTOGRAM_SCHEMA)
+def byte_histogram():
     """Feature-extraction kernel shape: a fixed-width feature vector per
     media row — the 16-bin high-nibble byte histogram (a real kernel
     would emit CNN embeddings or MFCCs here).  ``top_bin`` is the argmax
     bin (first on ties), the classify-by-feature step."""
+    import numpy as np
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id: int, raw: bytes):
+        samples = np.frombuffer(raw, dtype=np.uint8)
+        hist = np.bincount(samples >> 4, minlength=16)[:16]
+        return [(len(samples), [int(x) for x in hist], int(hist.argmax()))]
 
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real feature extraction requires a model runtime"
-                )
-            out: dict[str, list] = {
-                "doc_id": [], "n_bytes": [], "hist": [], "top_bin": [],
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(b), dtype=np.uint8)
-                hist = np.bincount(samples >> 4, minlength=16)[:16]
-                out["doc_id"].append(doc_id)
-                out["n_bytes"].append(len(samples))
-                out["hist"].append([int(x) for x in hist])
-                out["top_bin"].append(int(hist.argmax()))
-            yield pd.DataFrame(out)
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, HISTOGRAM_SCHEMA)
+    return row
 
 
 PHASH_SCHEMA = "doc_id long, phash string"
 
 
-def perceptual_hash(media_df: DataFrame, codec: str = "fake") -> DataFrame:
+@decoder(PHASH_SCHEMA)
+def perceptual_hash():
     """Perceptual-hash kernel shape: a 16-bit block-brightness signature
     per media payload (a real kernel would DCT the decoded pixel grid —
     classic pHash — here the 1-D block analogue over the byte stream).
@@ -274,31 +171,19 @@ def perceptual_hash(media_df: DataFrame, codec: str = "fake") -> DataFrame:
     Near-duplicate payloads (crops, re-encodes with stable brightness
     profile) collide on the hash; see multimodal_phash_dedup for the
     bucket-join dedup built on it."""
+    import numpy as np
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id: int, raw: bytes):
+        samples = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        n = len(samples)
+        blk = (np.arange(n) * 16) // max(n, 1)
+        block_sum = np.bincount(blk, weights=samples, minlength=16)[:16]
+        n_block = np.bincount(blk, minlength=16)[:16]
+        total = int(samples.sum())
+        bits = (block_sum.astype(np.int64) * n) > (total * n_block)
+        return [("".join("1" if x else "0" for x in bits),)]
 
-        for pdf in batches:
-            if codec == "real":  # pragma: no cover - no codec libs here
-                raise NotImplementedError(
-                    "real perceptual hashing requires an image library"
-                )
-            out: dict[str, list] = {"doc_id": [], "phash": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                samples = np.frombuffer(bytes(b), dtype=np.uint8).astype(np.int64)
-                n = len(samples)
-                blk = (np.arange(n) * 16) // max(n, 1)
-                block_sum = np.bincount(blk, weights=samples, minlength=16)[:16]
-                n_block = np.bincount(blk, minlength=16)[:16]
-                total = int(samples.sum())
-                bits = (block_sum.astype(np.int64) * n) > (total * n_block)
-                out["doc_id"].append(doc_id)
-                out["phash"].append("".join("1" if x else "0" for x in bits))
-            yield pd.DataFrame(out)
-
-    flat = media_df.select("doc_id", "media.payload")
-    return flat.mapInPandas(kernel, PHASH_SCHEMA)
+    return row
 
 
 # ---------------------------------------------------------------------------
@@ -308,8 +193,7 @@ def perceptual_hash(media_df: DataFrame, codec: str = "fake") -> DataFrame:
 # (canonical Huffman + dequantization + IDCT), and GIF (variable-width
 # LZW) need no codec library, so these kernels do genuine format
 # decoding — RIFF chunk walk, DIB header fields, BMP row padding, PNG
-# chunk CRCs, JPEG marker/bitstream walk, GIF sub-block reassembly —
-# while MP3/H.264 stay behind the NotImplementedError sites above.
+# chunk CRCs, JPEG marker/bitstream walk, GIF sub-block reassembly.
 # ---------------------------------------------------------------------------
 
 def media_frame(docs_df: DataFrame, make, dec: Decoder) -> DataFrame:
@@ -2268,10 +2152,9 @@ def decode_h264_nals():
     (``parse_sps``): profile_idc / level_idc and the exp-Golomb-coded
     picture dimensions per 7.3.2.1.1 — the stream-structure layer a
     video pipeline's keyframe-density / GOP-stats / resolution pass
-    needs, with NO pixel decode: CAVLC/CABAC slice reconstruction stays
-    a declared stub (``sample_frames``'s codec='real' site; the I_PCM
-    path, which bypasses entropy coding, IS decoded —
-    ``decode_h264_ipcm``).  A stream not starting with a start code, a
+    needs, with NO pixel decode: slice reconstruction belongs to the
+    I_PCM and CAVLC decoders (``decode_h264_ipcm``, ...), and CABAC
+    stays a declared stub.  A stream not starting with a start code, a
     forbidden-bit violation, an invalid 00 00 02 escape sequence, a
     truncated SPS, or a missing SPS raises."""
 

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -30,16 +29,10 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-# output of the image-decode kernel
-IMAGE_META_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("sha", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_channels", IntegerType()),
-    ]
+# output of the image-decode kernel (``decode.decode_image_meta``)
+IMAGE_META_SCHEMA = (
+    "doc_id long, n_bytes long, sha string, width int, height int, "
+    "n_channels int"
 )
 
 

@@ -1527,8 +1527,9 @@ def h264_sps_fields(doc_id: int) -> tuple[int, int, int, int]:
 
 
 class _BitPacker:
-    """MSB-first bit packer (shared by the H.264 RBSP and MP3
-    side-info encoders).
+    """MSB-first bit packer (shared by the H.264 RBSP, FLAC and
+    MPEG-1 Layer III frame writers — MP3 side info and granule main
+    data alike, see ``_mp3_frame``).
 
     Bits accumulate MSB-first in one integer (``acc``, ``nbits`` valid
     bits) instead of a per-bit Python list — same stream, an order of
@@ -1556,14 +1557,17 @@ class _BitPacker:
             nbits = 0
         self.nbits = nbits
 
+    def tell(self) -> int:
+        """Bits written so far."""
+        return len(self._done) * 8 + self.nbits
+
     def align(self) -> None:
-        rem = (len(self._done) * 8 + self.nbits) & 7
+        rem = self.tell() & 7
         if rem:
             self.u(0, 8 - rem)
 
     def to_bytes(self) -> bytes:
-        total = len(self._done) * 8 + self.nbits
-        assert total % 8 == 0, "bitstream not byte-aligned"
+        assert self.tell() % 8 == 0, "bitstream not byte-aligned"
         return bytes(self._done) + self.acc.to_bytes(self.nbits // 8, "big")
 
 
@@ -2939,6 +2943,250 @@ MP3_SLEN = (
 )
 
 
+# ---- MPEG-1 Layer III frame writer ---------------------------------
+# The make_mp3_*_bytes fixtures below write their frames through these
+# (the walker fixture make_mp3_bytes, with its CRC and VBR padding,
+# keeps its own loop): the granule coders append one granule's main
+# data to a _BitPacker and return nothing, the caller takes
+# part2_3_length from ``tell()``, and ``_mp3_frame`` lays out header,
+# side info and zero-filled main data.
+
+# Header byte 3 per channel mode (ISO 11172-3 2.4.1.3): mode(2)
+# mode_extension(2) copyright(1) original(1) emphasis(2).
+MP3_MONO = 0b11000100      # single channel
+MP3_JOINT_MS = 0b01100100  # joint stereo, mode_extension 10: MS on
+MP3_JOINT_IS = 0b01010100  # joint stereo, mode_extension 01: intensity on
+
+# (slen1-coded, slen2-coded) scalefactor counts of each granule
+# partition (ISO 11172-3 2.4.2.7): long bands 0-10 / 11-20; short
+# bands 0-5 / 6-11 x 3 windows; mixed: 8 long bands + short bands 3-5
+# x 3 windows / short bands 6-11 x 3 windows.
+MP3_SF_LONG = (11, 10)
+MP3_SF_SHORT = (18, 18)
+MP3_SF_MIXED = (17, 18)
+
+
+def _mp3_region_bytes(br_idx: int, sr_idx: int, mode: int = MP3_MONO) -> int:
+    """Main-data bytes of an unpadded frame: the Layer III length
+    ``144 * bitrate / sample_rate`` less the 4-byte header and the side
+    info (17 bytes mono, 32 stereo)."""
+    kbps, sr = MP3_BITRATES_KBPS[br_idx], MP3_SAMPLE_RATES[sr_idx]
+    return (144 * kbps * 1000) // sr - 4 - (17 if mode >> 6 == 3 else 32)
+
+
+def _mp3_main_data(data: "_BitPacker | bytes", n_bytes: int) -> bytes:
+    """Granule data zero-filled to ``n_bytes`` (a packer's bits are
+    first zero-padded to a byte boundary)."""
+    if isinstance(data, _BitPacker):
+        data.align()
+        data = data.to_bytes()
+    if len(data) > n_bytes:
+        raise ValueError("granule data overran the frame region")
+    return data + bytes(n_bytes - len(data))
+
+
+def _mp3_put_gr_info(
+    w: _BitPacker, part2_3_length: int, big_values: int, global_gain: int,
+    scalefac_compress: int, table_select: tuple, region0_count: int = 0,
+    region1_count: int = 0, block_type: int = 0, mixed_block_flag: int = 0,
+    subblock_gain: tuple = (0, 0, 0), preflag: int = 0,
+    scalefac_scale: int = 0, count1table_select: int = 1,
+) -> None:
+    """One granule's (one channel's) 59 side-info bits (ISO 11172-3
+    2.4.1.7).  ``block_type`` 0 writes the long-block branch (three
+    table_selects, region counts); any other block_type sets
+    windows_switching_flag and writes block_type, mixed_block_flag, two
+    table_selects and three subblock_gains."""
+    w.u(part2_3_length, 12)
+    w.u(big_values, 9)
+    w.u(global_gain, 8)
+    w.u(scalefac_compress, 4)
+    if block_type == 0:
+        w.u(0, 1)
+        for t in table_select:
+            w.u(t, 5)
+        w.u(region0_count, 4)
+        w.u(region1_count, 3)
+    else:
+        w.u(1, 1)
+        w.u(block_type, 2)
+        w.u(mixed_block_flag, 1)
+        for t in table_select:
+            w.u(t, 5)
+        for gain in subblock_gain:
+            w.u(gain, 3)
+    w.u(preflag, 1)
+    w.u(scalefac_scale, 1)
+    w.u(count1table_select, 1)
+
+
+def _mp3_frame(
+    br_idx: int, sr_idx: int, mode: int, gr_info: list[dict],
+    main: "_BitPacker | bytes", main_data_begin: int = 0, scfsi: int = 0,
+) -> bytes:
+    """One unpadded, unprotected MPEG-1 Layer III frame: the 4-byte
+    header (sync, MPEG-1, Layer III, no CRC, ``br_idx``, ``sr_idx``, no
+    padding, then the ``mode`` byte), the side info — main_data_begin,
+    private_bits, scfsi (4 bits per channel), then one
+    ``_mp3_put_gr_info`` field dict per granule, granule-major and
+    channel-minor in stereo — and the main data zero-filled to the
+    frame length.  ``main`` is the granule packer, or the frame's
+    main-data bytes where a bit-reservoir fixture cuts them from a
+    stream."""
+    si = _BitPacker()
+    si.u(main_data_begin, 9)
+    if mode >> 6 == 3:
+        si.u(0, 5)  # private_bits
+        si.u(scfsi, 4)
+    else:
+        si.u(3, 3)  # private_bits
+        si.u(scfsi, 8)
+    for fields in gr_info:
+        _mp3_put_gr_info(si, **fields)
+    header = bytes((0xFF, 0b11111011, (br_idx << 4) | (sr_idx << 2), mode))
+    return header + si.to_bytes() + _mp3_main_data(
+        main, _mp3_region_bytes(br_idx, sr_idx, mode)
+    )
+
+
+def _mp3_put_scalefacs(w: _BitPacker, sfc: int, part: tuple, sf_a, sf_b) -> None:
+    """A granule's scalefactors (part2): ``part``'s (n1, n2) counts at
+    scalefac_compress ``sfc``'s (slen1, slen2) bits (Table 2.4.2.7).
+    ``sf_a`` / ``sf_b`` give the slen1 / slen2 group's values: one int
+    for every scalefactor of the group, or a function of the
+    scalefactor's index within it."""
+    for slen, n, sf in zip(MP3_SLEN[sfc], part, (sf_a, sf_b)):
+        if slen:
+            for i in range(n):
+                w.u(sf(i) if callable(sf) else sf, slen)
+
+
+def _mp3_put_pairs(w: _BitPacker, pairs, sign_base: int) -> None:
+    """The big-values region: per pair ``(table, |x|, |y|)``, the B.7
+    code of the pair (magnitudes clamped to the ESC value 15), then x's
+    linbits extension and sign bit, then y's (the 2.4.2.7 order).  Pair
+    q's sign bits are ``(sign_base + q) % 2`` for x and ``(sign_base +
+    q + 1) % 2`` for y (1 = negative), the closed form every fixture
+    shares.  Table-0 pairs are all zero and transmit nothing."""
+    from .dec_mp3 import MP3_LINBITS
+
+    enc = _mp3_ht_enc()[0]
+    u = w.u
+    for q, (t, x, y) in enumerate(pairs):
+        if not t:
+            continue
+        # ids 17-23 share table 16's code matrix and 25-31 table 24's
+        # (only linbits differ)
+        cx, cy = min(x, 15), min(y, 15)
+        hlen, hcode = enc[t if t < 16 else (16 if t < 24 else 24)][(cx, cy)]
+        u(hcode, hlen)
+        lb = MP3_LINBITS.get(t, 0)
+        if lb and cx == 15:
+            u(x - 15, lb)
+        if x:
+            u((sign_base + q) % 2, 1)
+        if lb and cy == 15:
+            u(y - 15, lb)
+        if y:
+            u((sign_base + q + 1) % 2, 1)
+
+
+def _mp3_put_quads(w: _BitPacker, quads, table_a: bool = False) -> None:
+    """The count1 region: per quadruple ``(pattern, neg)`` — pattern's
+    bits 3..0 are the |v w x y| flags — the table A Huffman code of the
+    pattern or table B's fixed 4 complemented bits, then one sign bit
+    ``neg`` per nonzero value."""
+    c1a = _mp3_ht_enc()[1] if table_a else None
+    u = w.u
+    for pattern, neg in quads:
+        if table_a:
+            hlen, hcode = c1a[pattern]
+            u(hcode, hlen)
+        else:
+            u(pattern ^ 0xF, 4)
+        nz = bin(pattern).count("1")
+        u(((1 << nz) - 1) if neg else 0, nz)
+
+
+def _mp3_c1_quads(doc_id: int, g: int, n: int) -> list[tuple[int, int]]:
+    """The count1 closed form most fixtures share: quadruple j of
+    granule g is pattern (doc + 5g + j) % 16 with sign (doc + j) % 2."""
+    return [((doc_id + 5 * g + j) % 16, (doc_id + j) % 2) for j in range(n)]
+
+
+def _mp3_live_region(rc: int, nbv: int) -> tuple[int, int]:
+    """(region0 pairs, region1_count) of a 44.1 kHz long granule whose
+    region0 — the silent table-0 span up to B.8[rc + 1] — is followed
+    by ``nbv`` live pairs that region1 must hold: region1_count is
+    clamped so the B.8 index stays in range and region2 is empty."""
+    from .dec_mp3 import MP3_SFB_LONG_44100
+
+    rc2 = min(7, 20 - rc)
+    r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
+    if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
+        raise ValueError("live pairs overrun region1")
+    return r0_pairs, rc2
+
+
+def _mp3_table_granule(
+    w: _BitPacker, doc_id: int, g: int, part: tuple, pairs: list,
+    n_quads: int, table_a: bool = False,
+) -> dict:
+    """Granule g of a Huffman-table fixture (ht, lb, b8, ws): ``part``'s
+    scalefactors under scalefac_compress (doc + 2g) % 16 with values
+    (doc + g) / (doc + 7 + g) mod 2^slen, ``pairs`` (signs based at
+    doc + g), and ``n_quads`` count1 quadruples in table A or B.
+    Returns the side-info fields the main data fixes."""
+    sfc = (doc_id + 2 * g) % 16
+    sl1, sl2 = MP3_SLEN[sfc]
+    start = w.tell()
+    _mp3_put_scalefacs(w, sfc, part, (doc_id + g) % (1 << sl1),
+                       (doc_id + 7 + g) % (1 << sl2))
+    _mp3_put_pairs(w, pairs, doc_id + g)
+    _mp3_put_quads(w, _mp3_c1_quads(doc_id, g, n_quads), table_a)
+    return dict(part2_3_length=w.tell() - start, big_values=len(pairs),
+                scalefac_compress=sfc,
+                count1table_select=0 if table_a else 1)
+
+
+def _mp3_reservoir_bytes(
+    doc_id: int, n_frames: int, sr_idx: int, br_idx: int, delta: int,
+    put_granule, scfsi: int = 0,
+) -> bytes:
+    """The live bit reservoir of the main-data fixtures: CBR frames
+    whose side info points ``main_data_begin = k * delta`` bytes back
+    into the concatenated main-data regions.  Frame k's logical blob is
+    granule 0 || granule 1 bit-contiguous, zero-filled to ``cap -
+    delta`` bytes; the blobs lie back to back with stuffing at the
+    tail, and each frame carries the next ``cap`` bytes of that stream.
+    ``put_granule(w, g, parity, cap)`` writes granule g's main data,
+    which depends on frame k only through k's parity (the sign bits),
+    and returns its side-info fields but part2_3_length and
+    global_gain ((doc + 29k + 17g) % 256)."""
+    cap = _mp3_region_bytes(br_idx, sr_idx)
+    blobs, fields = {}, {}
+    for parity in (0, 1):
+        w = _BitPacker()
+        for g in (0, 1):
+            start = w.tell()
+            fields[g] = put_granule(w, g, parity, cap)
+            fields[g]["part2_3_length"] = w.tell() - start
+        blobs[parity] = _mp3_main_data(w, cap - delta)
+    stream = b"".join(blobs[k % 2] for k in range(n_frames))
+    stream += bytes(n_frames * cap - len(stream))
+    return b"".join(
+        _mp3_frame(
+            br_idx, sr_idx, MP3_MONO,
+            [dict(fields[g], global_gain=(doc_id + 29 * k + 17 * g) % 256)
+             for g in (0, 1)],
+            stream[k * cap : (k + 1) * cap],
+            main_data_begin=k * delta,
+            scfsi=scfsi,
+        )
+        for k in range(n_frames)
+    )
+
+
 def mp3_md_params(doc_id: int) -> tuple[int, int, int, int]:
     """(n_frames, sample_rate_index, bitrate_index, reservoir_step) for
     the main-data MP3 fixture (``make_mp3_md_bytes``).  CBR so every
@@ -2956,8 +3204,9 @@ def mp3_md_params(doc_id: int) -> tuple[int, int, int, int]:
 
 
 # ISO 11172-3 Table B.7, Huffman code table 1 (2x2, no linbits) —
-# (x, y) -> (code_length, code).  The one big-values table this
-# clean-room implementation ships; see decode.MP3_HUFF_TABLES.
+# (x, y) -> (code_length, code), restated for the bit-count closed
+# forms (``mp3_bv_bits``, ``mp3_sb_granule``); the frame writer encodes
+# through ``_mp3_ht_enc``, which inverts dec_mp3.MP3_HUFF_TABLES.
 MP3_HUFF1_ENC = {(0, 0): (1, 0b1), (1, 0): (2, 0b01),
                  (0, 1): (3, 0b001), (1, 1): (3, 0b000)}
 
@@ -3061,123 +3310,30 @@ def make_mp3_md_bytes(doc_id: int) -> bytes:
     Huffman tables 2-31 (including all linbits tables) remain the
     decoder's declared stub."""
     n_frames, sr_idx, br_idx, delta = mp3_md_params(doc_id)
-    sr = MP3_SAMPLE_RATES[sr_idx]
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // sr
-    cap = frame_len - 4 - 17
-    blob_len = cap - delta
+    tsels = mp3_bv_tables(doc_id)
 
-    def granule_bits(g: int, k: int) -> tuple[int, int]:
-        """(value, n_bits) of granule g's entropy data — accumulated
-        field-at-a-time into one int (C-level bigint shifts; a per-bit
-        Python packer here dominated the sf0.1 bench)."""
+    def put_granule(w: _BitPacker, g: int, parity: int, cap: int) -> dict:
         sfc, sf_a, sf_b, pattern, n_quads, _p23 = mp3_md_granule(
             doc_id, g, cap, delta
         )
-        sl1, sl2 = MP3_SLEN[sfc]
-        n1, n2 = mp3_sf_counts(doc_id, g)
-        acc = nb = 0
-        for _band in range(n1):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(n2):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        # big-values region: per pair one table-1 Huffman code, then a
-        # sign bit per nonzero value (x's, then y's — ISO 2.4.2.7's
-        # decode order); the table-0 pairs of the region-switching
-        # docs transmit nothing.
-        for q, (x, y) in enumerate(mp3_bv_pairs(doc_id, g)):
-            if doc_id % 6 == 0 and 2 <= q < 4:
-                continue
-            hlen, hcode = MP3_HUFF1_ENC[(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + k + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + k + g + 1) % 2)
-                nb += 1
-        neg = (doc_id + g + k) % 2
-        vals = ((pattern >> 3) & 1, (pattern >> 2) & 1,
-                (pattern >> 1) & 1, pattern & 1)
-        # one quadruple's bits: 4 complement bits + a sign per nonzero
-        qv = qn = 0
-        for v in vals:
-            qv = (qv << 1) | (v ^ 1)  # table B: transmitted = complement
-            qn += 1
-        for v in vals:
-            if v:
-                qv = (qv << 1) | neg  # sign bit: 1 = negative
-                qn += 1
-        for _q in range(n_quads):
-            acc = (acc << qn) | qv
-            nb += qn
-        return acc, nb
+        # granule 1 omits the scfsi-reused band groups
+        _mp3_put_scalefacs(w, sfc, mp3_sf_counts(doc_id, g), sf_a, sf_b)
+        # pair q draws from its region's table (44.1 kHz B.8 boundaries
+        # at count fields 0): the region-switching docs' table-0 pairs
+        # transmit nothing
+        pairs = mp3_bv_pairs(doc_id, g)
+        _mp3_put_pairs(w, [
+            (tsels[0 if q < 2 else (1 if q < 4 else 2)], x, y)
+            for q, (x, y) in enumerate(pairs)
+        ], doc_id + parity + g)
+        _mp3_put_quads(w, [(pattern, (doc_id + g + parity) % 2)] * n_quads)
+        return dict(big_values=len(pairs), scalefac_compress=sfc,
+                    table_select=tsels)
 
-    # Logical blob per frame: granule0 || granule1 bit-contiguous, then
-    # zero ancillary bits up to blob_len bytes.
-    blobs = []
-    # Frame content depends only on k's parity (the count1 sign bit),
-    # so two packed variants serve every frame.
-    packed: dict[int, bytes] = {}
-    for parity in (0, 1):
-        a0, n0 = granule_bits(0, parity)
-        a1, n1 = granule_bits(1, parity)
-        acc = (a0 << n1) | a1
-        nb = n0 + n1
-        pad = (8 - nb % 8) % 8
-        acc <<= pad
-        packed[parity] = acc.to_bytes((nb + pad) // 8, "big")
-        assert len(packed[parity]) <= blob_len, "granule data overran blob"
-    for k in range(n_frames):
-        head = packed[k % 2]
-        blobs.append(head + bytes(blob_len - len(head)))
-    # Physical main-data stream: blobs laid contiguously, stuffing at
-    # the tail so the total matches n_frames regions of cap bytes.
-    stream = b"".join(blobs)
-    stream += bytes(n_frames * cap - len(stream))
-
-    out = bytearray()
-    # frame-invariant granule fields (pure in (doc_id, g)): computed
-    # once, not once per frame
-    g_fields = {}
-    for g in (0, 1):
-        sfc_g, _a, _b, _p, _nq, p23_g = mp3_md_granule(
-            doc_id, g, cap, delta
-        )
-        g_fields[g] = (sfc_g, p23_g, len(mp3_bv_pairs(doc_id, g)))
-    scfsi = mp3_scfsi(doc_id)
-    tsels = tuple(mp3_bv_tables(doc_id))
-    for k in range(n_frames):
-        out += bytes((
-            0xFF, 0b11111011,
-            (br_idx << 4) | (sr_idx << 2), 0b11000100,
-        ))
-        w = _BitPacker()
-        w.u(k * delta, 9)   # main_data_begin: the real reservoir offset
-        w.u(0, 5)
-        w.u(scfsi, 4)  # scfsi: granule-1 scalefactor reuse
-        for g in (0, 1):
-            sfc, p23, n_bv = g_fields[g]
-            w.u(p23, 12)
-            w.u(n_bv, 9)  # big_values (pairs)
-            w.u((doc_id + 29 * k + 17 * g) % 256, 8)
-            w.u(sfc, 4)
-            w.u(0, 1)       # long blocks
-            for t in tsels:
-                w.u(t, 5)   # table_select per region
-            w.u(0, 4)       # region0_count
-            w.u(0, 3)       # region1_count
-            w.u(0, 1)       # preflag
-            w.u(0, 1)       # scalefac_scale
-            w.u(1, 1)       # count1table_select = 1: fixed-length table B
-        si = w.to_bytes()
-        assert len(si) == 17
-        out += si
-        out += stream[k * cap : (k + 1) * cap]
-    return bytes(out)
+    return _mp3_reservoir_bytes(
+        doc_id, n_frames, sr_idx, br_idx, delta, put_granule,
+        scfsi=mp3_scfsi(doc_id),
+    )
 
 
 # The B.7 table ids the fixtures cycle through and each table's x/y
@@ -3197,11 +3353,11 @@ _MP3_HT_ENC_CACHE: dict | None = None
 
 def _mp3_ht_enc() -> tuple[dict, dict]:
     """Encoder mirrors of the decoder's shipped table data — inverted
-    from ``decode.MP3_HUFF_TABLES`` / ``decode.MP3_COUNT1A`` so the
+    from ``dec_mp3.MP3_HUFF_TABLES`` / ``dec_mp3.MP3_COUNT1A`` so the
     spec tables have exactly one source of truth in the repo."""
     global _MP3_HT_ENC_CACHE
     if _MP3_HT_ENC_CACHE is None:
-        from .decode import MP3_COUNT1A, MP3_HUFF_TABLES
+        from .dec_mp3 import MP3_COUNT1A, MP3_HUFF_TABLES
 
         _MP3_HT_ENC_CACHE = (
             {
@@ -3259,90 +3415,22 @@ def make_mp3_ht_bytes(doc_id: int) -> bytes:
     patterns + sign bits) and fixed-length table B by (doc + g)
     parity.  Every value is a closed form a SQL oracle restates;
     ``part2_3_length`` is the exact bit count."""
-    enc, c1a_enc = _mp3_ht_enc()
-    n_frames = 2 + doc_id % 3
-    br_idx = 7 + doc_id % 3  # 96/112/128 kbps
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // 44100
-    cap = frame_len - 4 - 17
-
-    def granule_bits(g: int) -> tuple[int, int, int]:
-        """(acc, n_bits, part2_3) of granule g's entropy data."""
-        sfc = (doc_id + 2 * g) % 16
-        sl1, sl2 = MP3_SLEN[sfc]
-        sf_a = (doc_id + g) % (1 << sl1)
-        sf_b = (doc_id + 7 + g) % (1 << sl2)
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q, (t, x, y) in enumerate(mp3_ht_pairs(doc_id, g)):
-            hlen, hcode = enc[t][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        use_a = (doc_id + g) % 2 == 0
-        for j in range(3 + (doc_id + g) % 4):
-            pattern = (doc_id + 5 * g + j) % 16
-            if use_a:
-                hlen, hcode = c1a_enc[pattern]
-                acc = (acc << hlen) | hcode
-                nb += hlen
-            else:
-                acc = (acc << 4) | (pattern ^ 0xF)
-                nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb, nb
-
-    a0, n0, p23_0 = granule_bits(0)
-    a1, n1, p23_1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    acc <<= pad
-    packed = acc.to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-    region = packed + bytes(cap - len(packed))
-
-    out = bytearray()
+    w = _BitPacker()
+    gr_info = [
+        dict(
+            _mp3_table_granule(
+                w, doc_id, g, MP3_SF_LONG, mp3_ht_pairs(doc_id, g),
+                3 + (doc_id + g) % 4, table_a=(doc_id + g) % 2 == 0,
+            ),
+            global_gain=(doc_id + 31 * g) % 256,
+            table_select=mp3_ht_tsels(doc_id, g),
+        )
+        for g in (0, 1)
+    ]
     # every frame is byte-identical (no reservoir, k-independent side
     # info): build one frame, repeat it — same bytes, golden-hash gated
-    w = _BitPacker()
-    w.u(0, 9)   # main_data_begin: no reservoir in this fixture
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, p23_0), (1, p23_1)):
-        w.u(p23, 12)
-        w.u(len(mp3_ht_pairs(doc_id, g)), 9)
-        w.u((doc_id + 31 * g) % 256, 8)  # global_gain
-        w.u((doc_id + 2 * g) % 16, 4)    # scalefac_compress
-        w.u(0, 1)                        # long blocks
-        for t in mp3_ht_tsels(doc_id, g):
-            w.u(t, 5)
-        w.u(0, 4)   # region0_count
-        w.u(0, 3)   # region1_count
-        w.u(0, 1)   # preflag
-        w.u(0, 1)   # scalefac_scale
-        w.u(0 if (doc_id + g) % 2 == 0 else 1, 1)  # count1 A/B
-    si = w.to_bytes()
-    assert len(si) == 17
-    frame = bytes((0xFF, 0b11111011, (br_idx << 4) | (0 << 2),
-                   0b11000100)) + si + region
-    out += frame * n_frames
-    return bytes(out)
+    # (tests/test_synth_golden.py)
+    return _mp3_frame(7 + doc_id % 3, 0, MP3_MONO, gr_info, w) * (2 + doc_id % 3)
 
 
 # The complete 16x16-table tier: tables 13 and 15 (no linbits, t13
@@ -3398,96 +3486,21 @@ def make_mp3_lb_bytes(doc_id: int) -> bytes:
     table B.  Every value is a closed form the SQL oracle restates;
     ``part2_3_length`` is the exact bit count, so one wrong code or a
     missed linbits read desyncs the stream and fails accounting."""
-    enc, _ = _mp3_ht_enc()
-    n_frames = 2 + doc_id % 3
-    br_idx = 7 + doc_id % 3  # 96/112/128 kbps
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // 44100
-    cap = frame_len - 4 - 17
-
-    from .decode import MP3_LINBITS
-
-    def granule_bits(g: int) -> tuple[int, int, int]:
-        sfc = (doc_id + 2 * g) % 16
-        sl1, sl2 = MP3_SLEN[sfc]
-        sf_a = (doc_id + g) % (1 << sl1)
-        sf_b = (doc_id + 7 + g) % (1 << sl2)
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        t = mp3_lb_table(doc_id, g)
-        lb = MP3_LINBITS.get(t, 0)
-        # ids 17-23 share table 16's code matrix and 25-31 share
-        # table 24's (only linbits differ)
-        enc_t = enc[16 if 16 <= t <= 23 else (24 if 24 <= t <= 31 else t)]
-        for q, (x, y, ex_x, ex_y) in enumerate(mp3_lb_pairs(doc_id, g)):
-            hlen, hcode = enc_t[(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if lb and x == 15:
-                acc = (acc << lb) | ex_x
-                nb += lb
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if lb and y == 15:
-                acc = (acc << lb) | ex_y
-                nb += lb
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(2 + (doc_id + g) % 3):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb, nb
-
-    a0, n0, p23_0 = granule_bits(0)
-    a1, n1, p23_1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    acc <<= pad
-    packed = acc.to_bytes((nb + pad) // 8, "big") if nb else b""
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-    region = packed + bytes(cap - len(packed))
-
-    out = bytearray()
-    # identical frames: build once, repeat (bytes unchanged)
     w = _BitPacker()
-    w.u(0, 9)   # main_data_begin
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, p23_0), (1, p23_1)):
-        w.u(p23, 12)
-        w.u(len(mp3_lb_pairs(doc_id, g)), 9)
-        w.u((doc_id + 31 * g) % 256, 8)  # global_gain
-        w.u((doc_id + 2 * g) % 16, 4)    # scalefac_compress
-        w.u(0, 1)                        # long blocks
+    gr_info = []
+    for g in (0, 1):
         t = mp3_lb_table(doc_id, g)
-        for _r in range(3):
-            w.u(t, 5)                    # uniform table_select
-        w.u(0, 4)   # region0_count
-        w.u(0, 3)   # region1_count
-        w.u(0, 1)   # preflag
-        w.u(0, 1)   # scalefac_scale
-        w.u(1, 1)   # count1: fixed-length table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    frame = bytes((0xFF, 0b11111011, (br_idx << 4) | (0 << 2),
-                   0b11000100)) + si + region
-    out += frame * n_frames
-    return bytes(out)
+        # an escaped coordinate's magnitude is 15 + its linbits extension
+        pairs = [(t, x + ex_x, y + ex_y)
+                 for x, y, ex_x, ex_y in mp3_lb_pairs(doc_id, g)]
+        gr_info.append(dict(
+            _mp3_table_granule(w, doc_id, g, MP3_SF_LONG, pairs,
+                               2 + (doc_id + g) % 3),
+            global_gain=(doc_id + 31 * g) % 256,
+            table_select=(t, t, t),
+        ))
+    # identical frames: build once, repeat (bytes unchanged)
+    return _mp3_frame(7 + doc_id % 3, 0, MP3_MONO, gr_info, w) * (2 + doc_id % 3)
 
 
 def mp3_imdct_block_type(doc_id: int, g: int) -> int:
@@ -3572,91 +3585,35 @@ def make_mp3_imdct_bytes(doc_id: int) -> bytes:
     ±1 pairs through B.7 table 1, then count1 table B quadruples.
     Every quantized value is 0 or ±1, so the requantized spectrum IS
     the integer level array and the filterbank runs integer-exact."""
-    from .decode import MP3_SFB_LONG_44100
-
-    def granule_bits(g: int) -> tuple[int, int]:
-        rc, r0_pairs, nbv, nq = mp3_imdct_geometry(doc_id, g)
-        # regions 1+2 must hold all live pairs (no clipping surprises);
-        # region1_count is clamped so the B.8 index stays in range
-        rc2 = min(7, 20 - rc)
-        if (
-            mp3_imdct_block_type(doc_id, g) == 0
-            and r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2
-        ):
-            raise ValueError("live pairs overrun region1")
-        acc = nb = 0
-        for q in range(nbv):
-            x = (doc_id + 3 * q + g) % 2
-            y = (2 * doc_id + q + g) % 2
-            hlen, hcode = MP3_HUFF1_ENC[(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)  # table B: complemented
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9  # 128 kbps
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap = frame_len - 4 - 17
-    a0, n0 = granule_bits(0)
-    a1, n1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-
     w = _BitPacker()
-    w.u(0, 9)   # main_data_begin
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, n0), (1, n1)):
-        rc, r0_pairs, nbv, _nq = mp3_imdct_geometry(doc_id, g)
+    gr_info = []
+    for g in (0, 1):
+        rc, r0_pairs, nbv, nq = mp3_imdct_geometry(doc_id, g)
         bt = mp3_imdct_block_type(doc_id, g)
-        w.u(p23, 12)
-        w.u(r0_pairs + nbv, 9)   # big_values
-        w.u(210, 8)              # global_gain: exact 2^0
-        w.u(0, 4)                # scalefac_compress: slen 0/0
         if bt == 0:
-            w.u(0, 1)            # long blocks: normal layout
-            for t in (0, 1, 1):
-                w.u(t, 5)
-            w.u(rc, 4)           # region0_count
-            w.u(min(7, 20 - rc), 3)  # region1_count: region2 empty
+            # regions 1+2 must hold all live pairs; region2 stays empty
+            _r0, rc2 = _mp3_live_region(rc, nbv)
+            side = dict(table_select=(0, 1, 1), region0_count=rc,
+                        region1_count=rc2)
         else:
+            # mixed: region0 (the long part) is LIVE table 1; other ws
+            # granules keep it silent via table 0
             mixed = mp3_imdct_mixed(doc_id, g)
-            w.u(1, 1)            # window_switching_flag
-            w.u(bt, 2)           # block_type 1/2/3
-            w.u(1 if mixed else 0, 1)  # mixed_block_flag
-            # mixed: region0 (the long part) is LIVE table 1; other
-            # ws granules keep it silent via table 0
-            for t in ((1, 1) if mixed else (0, 1)):
-                w.u(t, 5)
-            for _sb in range(3):
-                w.u(0, 3)        # subblock_gain: 0 keeps exactness
-        w.u(0, 1)                # preflag
-        w.u(0, 1)                # scalefac_scale
-        w.u(1, 1)                # count1table_select: table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b11000100))
-        + si + packed + bytes(cap - len(packed))
-    )
+            side = dict(table_select=(1, 1) if mixed else (0, 1),
+                        block_type=bt, mixed_block_flag=int(mixed))
+        start = w.tell()
+        _mp3_put_pairs(w, [
+            (1, (doc_id + 3 * q + g) % 2, (2 * doc_id + q + g) % 2)
+            for q in range(nbv)
+        ], doc_id + g)
+        _mp3_put_quads(w, _mp3_c1_quads(doc_id, g, nq))
+        gr_info.append(dict(
+            side, part2_3_length=w.tell() - start,
+            big_values=r0_pairs + nbv,
+            global_gain=210,       # exact 2^0
+            scalefac_compress=0,   # slen 0/0: no scalefactor bits
+        ))
+    return _mp3_frame(9, 0, MP3_MONO, gr_info, w)  # 128 kbps, 44.1 kHz
 
 
 def mp3_rq_fields(doc_id: int, g: int) -> tuple[int, int, int, int, int]:
@@ -3736,6 +3693,33 @@ def mp3_rqw_spectrum(doc_id: int, g: int) -> dict[int, int]:
     return out
 
 
+def _mp3_rq_bytes(doc_id: int, tables: tuple[int, int], mags) -> bytes:
+    """The single-frame long-block requantization fixture behind
+    ``make_mp3_rq_bytes`` / ``_rqw_`` / ``_rqe_``: 44.1 kHz 128 kbps,
+    granule g per ``mp3_rq_fields``, region0 the silent table-0 span up
+    to B.8[rc + 1], then 9 + (doc + g) % 7 pairs of magnitudes
+    ``mags(g, q)`` through table ``tables[g]`` and table-B count1
+    quadruples."""
+    w = _BitPacker()
+    gr_info = []
+    for g in (0, 1):
+        rc, gg, sfs, sf_a, sf_b = mp3_rq_fields(doc_id, g)
+        sfc = (doc_id + g) % 16
+        nbv = 9 + (doc_id + g) % 7
+        r0_pairs, rc2 = _mp3_live_region(rc, nbv)
+        t = tables[g]
+        start = w.tell()
+        _mp3_put_scalefacs(w, sfc, MP3_SF_LONG, sf_a, sf_b)
+        _mp3_put_pairs(w, [(t, *mags(g, q)) for q in range(nbv)], doc_id + g)
+        _mp3_put_quads(w, _mp3_c1_quads(doc_id, g, 3 + (doc_id + g) % 3))
+        gr_info.append(dict(
+            part2_3_length=w.tell() - start, big_values=r0_pairs + nbv,
+            global_gain=gg, scalefac_compress=sfc, table_select=(0, t, t),
+            region0_count=rc, region1_count=rc2, scalefac_scale=sfs,
+        ))
+    return _mp3_frame(9, 0, MP3_MONO, gr_info, w)
+
+
 def make_mp3_rqw_bytes(doc_id: int) -> bytes:
     """Single-frame MPEG-1 Layer III stream for WIDE exact
     requantization: identical geometry to ``make_mp3_rq_bytes`` but
@@ -3743,87 +3727,9 @@ def make_mp3_rqw_bytes(doc_id: int) -> bytes:
     B.7 table 15 with magnitudes 0..15 — the full non-escape range —
     so the extended |is|^(4/3) Q12 table does real work at every
     index."""
-    from .decode import MP3_SFB_LONG_44100
-
-    enc, _c1a = _mp3_ht_enc()
-
-    def granule_bits(g: int) -> tuple[int, int]:
-        rc, _gg, _sfs, sf_a, sf_b = mp3_rq_fields(doc_id, g)
-        sl1, sl2 = MP3_SLEN[(doc_id + g) % 16]
-        nbv = 9 + (doc_id + g) % 7
-        nq = 3 + (doc_id + g) % 3
-        rc2 = min(7, 20 - rc)
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
-            raise ValueError("live pairs overrun region1")
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q in range(nbv):
-            x = (doc_id + 3 * q + g) % 16
-            y = (2 * doc_id + q + g) % 16
-            hlen, hcode = enc[15][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap = frame_len - 4 - 17
-    a0, n0 = granule_bits(0)
-    a1, n1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-
-    w = _BitPacker()
-    w.u(0, 9)
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, n0), (1, n1)):
-        rc, gg, sfs, _a, _b = mp3_rq_fields(doc_id, g)
-        nbv = 9 + (doc_id + g) % 7
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        w.u(p23, 12)
-        w.u(r0_pairs + nbv, 9)
-        w.u(gg, 8)
-        w.u((doc_id + g) % 16, 4)
-        w.u(0, 1)                    # long blocks
-        for t in (0, 15, 15):
-            w.u(t, 5)
-        w.u(rc, 4)
-        w.u(min(7, 20 - rc), 3)
-        w.u(0, 1)                    # preflag
-        w.u(sfs, 1)
-        w.u(1, 1)                    # count1table_select: table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b11000100))
-        + si + packed + bytes(cap - len(packed))
-    )
+    return _mp3_rq_bytes(doc_id, (15, 15), lambda g, q: (
+        (doc_id + 3 * q + g) % 16, (2 * doc_id + q + g) % 16
+    ))
 
 
 # The escape-requantization fixture's granule table cycle: linbits
@@ -3890,100 +3796,12 @@ def make_mp3_rqe_bytes(doc_id: int) -> bytes:
     ``MP3_RQE_TABLES`` and transmits magnitudes >= 15 as the ESC code
     15 plus a raw linbits extension (2.4.2.7), so requantization must
     evaluate |is|^(4/3) far beyond the 16-entry table."""
-    from .decode import MP3_LINBITS, MP3_SFB_LONG_44100
-
-    enc, _c1a = _mp3_ht_enc()
-
-    def granule_bits(g: int) -> tuple[int, int]:
-        rc, _gg, _sfs, sf_a, sf_b = mp3_rq_fields(doc_id, g)
-        sl1, sl2 = MP3_SLEN[(doc_id + g) % 16]
-        nbv = 9 + (doc_id + g) % 7
-        nq = 3 + (doc_id + g) % 3
-        rc2 = min(7, 20 - rc)
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
-            raise ValueError("live pairs overrun region1")
-        tsel = mp3_rqe_table(doc_id, g)
-        lb = MP3_LINBITS.get(tsel, 0)
-        mcap = _mp3_rqe_mod(tsel)
-        enc_t = enc[16 if 16 <= tsel <= 23 else
-                    (24 if 24 <= tsel <= 31 else tsel)]
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q in range(nbv):
-            mx = (37 * doc_id + 113 * q + 61 * g) % mcap
-            my = (53 * doc_id + 97 * q + 29 * g + 17) % mcap
-            cx, cy = min(mx, 15), min(my, 15)
-            hlen, hcode = enc_t[(cx, cy)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if cx == 15 and lb:
-                acc = (acc << lb) | (mx - 15)
-                nb += lb
-            if mx:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if cy == 15 and lb:
-                acc = (acc << lb) | (my - 15)
-                nb += lb
-            if my:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap = frame_len - 4 - 17
-    a0, n0 = granule_bits(0)
-    a1, n1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-
-    w = _BitPacker()
-    w.u(0, 9)
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, n0), (1, n1)):
-        rc, gg, sfs, _a, _b = mp3_rq_fields(doc_id, g)
-        nbv = 9 + (doc_id + g) % 7
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        w.u(p23, 12)
-        w.u(r0_pairs + nbv, 9)
-        w.u(gg, 8)
-        w.u((doc_id + g) % 16, 4)
-        w.u(0, 1)                    # long blocks
-        tsel = mp3_rqe_table(doc_id, g)
-        for t in (0, tsel, tsel):
-            w.u(t, 5)
-        w.u(rc, 4)
-        w.u(min(7, 20 - rc), 3)
-        w.u(0, 1)                    # preflag
-        w.u(sfs, 1)
-        w.u(1, 1)                    # count1table_select: table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b11000100))
-        + si + packed + bytes(cap - len(packed))
-    )
+    tables = (mp3_rqe_table(doc_id, 0), mp3_rqe_table(doc_id, 1))
+    mods = [_mp3_rqe_mod(t) for t in tables]
+    return _mp3_rq_bytes(doc_id, tables, lambda g, q: (
+        (37 * doc_id + 113 * q + 61 * g) % mods[g],
+        (53 * doc_id + 97 * q + 29 * g + 17) % mods[g],
+    ))
 
 
 def make_mp3_rq_bytes(doc_id: int) -> bytes:
@@ -3996,87 +3814,9 @@ def make_mp3_rq_bytes(doc_id: int) -> bytes:
     factors all do real work.  preflag stays 0 (Table B.6's pretab is
     an empirical table with no self-validating structure, so it is
     excluded rather than shipped unvalidated)."""
-    from .decode import MP3_SFB_LONG_44100
-
-    enc, _c1a = _mp3_ht_enc()
-
-    def granule_bits(g: int) -> tuple[int, int]:
-        rc, _gg, _sfs, sf_a, sf_b = mp3_rq_fields(doc_id, g)
-        sl1, sl2 = MP3_SLEN[(doc_id + g) % 16]
-        nbv = 9 + (doc_id + g) % 7
-        nq = 3 + (doc_id + g) % 3
-        rc2 = min(7, 20 - rc)
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
-            raise ValueError("live pairs overrun region1")
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q in range(nbv):
-            x = (doc_id + 3 * q + g) % 8
-            y = (2 * doc_id + q + g) % 8
-            hlen, hcode = enc[10][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap = frame_len - 4 - 17
-    a0, n0 = granule_bits(0)
-    a1, n1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-
-    w = _BitPacker()
-    w.u(0, 9)
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi
-    for g, p23 in ((0, n0), (1, n1)):
-        rc, gg, sfs, _a, _b = mp3_rq_fields(doc_id, g)
-        nbv = 9 + (doc_id + g) % 7
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        w.u(p23, 12)
-        w.u(r0_pairs + nbv, 9)
-        w.u(gg, 8)                   # global_gain: the 198..222 band
-        w.u((doc_id + g) % 16, 4)    # scalefac_compress
-        w.u(0, 1)                    # long blocks
-        for t in (0, 10, 10):
-            w.u(t, 5)
-        w.u(rc, 4)
-        w.u(min(7, 20 - rc), 3)
-        w.u(0, 1)                    # preflag: pretab excluded
-        w.u(sfs, 1)                  # scalefac_scale
-        w.u(1, 1)                    # count1table_select: table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b11000100))
-        + si + packed + bytes(cap - len(packed))
-    )
+    return _mp3_rq_bytes(doc_id, (10, 10), lambda g, q: (
+        (doc_id + 3 * q + g) % 8, (2 * doc_id + q + g) % 8
+    ))
 
 
 def mp3_ms_fields(
@@ -4124,6 +3864,33 @@ def mp3_ms_spectrum(doc_id: int, g: int, ch: int) -> dict[int, int]:
     return out
 
 
+def _mp3_stereo_granule(
+    w: _BitPacker, k: int, rc: int, gg: int, sfs: int, base_a: int,
+    base_b: int, nbv: int, nq: int, preflag: int = 0,
+) -> dict:
+    """One long-block table-10 channel granule of the joint-stereo
+    fixtures, keyed by k (``mp3_ms_fields`` / ``mp3_is_fields``):
+    scalefactors base mod min(2^slen, 8 or 16) under scalefac_compress
+    k % 16, pairs ((k + 3q) % 8, (2k + q) % 8) after the silent region0,
+    and count1 quadruples ((k + 5j) % 16, sign (k + j) % 2).  Writes
+    the main data to w and returns the side-info fields."""
+    sl1, sl2 = MP3_SLEN[k % 16]
+    cap = 8 if sfs else 16
+    r0_pairs, rc2 = _mp3_live_region(rc, nbv)
+    start = w.tell()
+    _mp3_put_scalefacs(w, k % 16, MP3_SF_LONG, base_a % min(1 << sl1, cap),
+                       base_b % min(1 << sl2, cap))
+    _mp3_put_pairs(w, [(10, (k + 3 * q) % 8, (2 * k + q) % 8)
+                       for q in range(nbv)], k)
+    _mp3_put_quads(w, [((k + 5 * j) % 16, (k + j) % 2) for j in range(nq)])
+    return dict(
+        part2_3_length=w.tell() - start, big_values=r0_pairs + nbv,
+        global_gain=gg, scalefac_compress=k % 16, table_select=(0, 10, 10),
+        region0_count=rc, region1_count=rc2, preflag=preflag,
+        scalefac_scale=sfs,
+    )
+
+
 def make_mp3_ms_bytes(doc_id: int) -> bytes:
     """Single-frame JOINT-STEREO MPEG-1 Layer III stream with MS
     stereo on (header mode 01, mode_extension 10): a 32-byte stereo
@@ -4131,102 +3898,14 @@ def make_mp3_ms_bytes(doc_id: int) -> bytes:
     granules with real slen-coded scalefactors, gains in the 198..222
     band, and table-10 spectra whose mid and side lines differ — the
     layer that forces a decoder to run the (M±S)/sqrt(2) matrix."""
-    from .decode import MP3_SFB_LONG_44100
-
-    enc, _c1a = _mp3_ht_enc()
-
-    def granule_bits(g: int, ch: int) -> tuple[int, int]:
-        rc, _gg, sfs, base_a, base_b, nbv, nq = mp3_ms_fields(
-            doc_id, g, ch
-        )
-        k = doc_id + g + 5 * ch
-        sl1, sl2 = MP3_SLEN[k % 16]
-        cap = 8 if sfs else 16
-        rc2 = min(7, 20 - rc)
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
-            raise ValueError("live pairs overrun region1")
-        sf_a = base_a % min(1 << sl1, cap) if sl1 else 0
-        sf_b = base_b % min(1 << sl2, cap) if sl2 else 0
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q in range(nbv):
-            x = (k + 3 * q) % 8
-            y = (2 * k + q) % 8
-            hlen, hcode = enc[10][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((k + q) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((k + q + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (k + 5 * j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (k + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap_bytes = frame_len - 4 - 32
-    acc = nb = 0
-    p23s = []
-    for g in (0, 1):
-        for ch in (0, 1):
-            a, n = granule_bits(g, ch)
-            acc = (acc << n) | a
-            nb += n
-            p23s.append(n)
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap_bytes:
-        raise ValueError("granule data overran the frame region")
-
     w = _BitPacker()
-    w.u(0, 9)   # main_data_begin
-    w.u(3, 3)   # private_bits (3 for stereo)
-    w.u(0, 8)   # scfsi, both channels
-    i = 0
-    for g in (0, 1):
-        for ch in (0, 1):
-            rc, gg, sfs, _a, _b, nbv, _nq = mp3_ms_fields(
-                doc_id, g, ch
-            )
-            k = doc_id + g + 5 * ch
-            r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-            w.u(p23s[i], 12)
-            w.u(r0_pairs + nbv, 9)
-            w.u(gg, 8)
-            w.u(k % 16, 4)
-            w.u(0, 1)        # long blocks
-            for t in (0, 10, 10):
-                w.u(t, 5)
-            w.u(rc, 4)
-            w.u(min(7, 20 - rc), 3)
-            w.u(0, 1)        # preflag
-            w.u(sfs, 1)
-            w.u(1, 1)        # count1table_select: table B
-            i += 1
-    si = w.to_bytes()
-    assert len(si) == 32
-    # header: MPEG-1 L3, 128 kbps, 44.1 kHz, JOINT STEREO (mode 01),
-    # mode_extension 10 (MS on, intensity off)
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b01100100))
-        + si + packed + bytes(cap_bytes - len(packed))
-    )
+    gr_info = [
+        _mp3_stereo_granule(w, doc_id + g + 5 * ch,
+                            *mp3_ms_fields(doc_id, g, ch))
+        for g in (0, 1)
+        for ch in (0, 1)
+    ]
+    return _mp3_frame(9, 0, MP3_JOINT_MS, gr_info, w)  # 128 kbps, 44.1 kHz
 
 
 def mp3_is_fields(
@@ -4266,121 +3945,26 @@ def make_mp3_is_bytes(doc_id: int) -> bytes:
     including 7s (intensity off).  The whole spectrum is therefore
     the intensity region and every left line splits L/R by the
     derived Q15 tan-ratio table."""
-    from .decode import MP3_SFB_LONG_44100
-
-    enc, _c1a = _mp3_ht_enc()
-
-    def left_granule_bits(g: int) -> tuple[int, int]:
-        rc, _gg, sfs, _pre, base_a, base_b, nbv, nq = mp3_is_fields(
-            doc_id, g
-        )
-        k = doc_id + 7 * g
-        sl1, sl2 = MP3_SLEN[k % 16]
-        cap = 8 if sfs else 16
-        rc2 = min(7, 20 - rc)
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        if r0_pairs + nbv > MP3_SFB_LONG_44100[rc + rc2 + 2] // 2:
-            raise ValueError("live pairs overrun region1")
-        sf_a = base_a % min(1 << sl1, cap) if sl1 else 0
-        sf_b = base_b % min(1 << sl2, cap) if sl2 else 0
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q in range(nbv):
-            x = (k + 3 * q) % 8
-            y = (2 * k + q) % 8
-            hlen, hcode = enc[10][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((k + q) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((k + q + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (k + 5 * j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (k + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    def right_granule_bits(g: int) -> tuple[int, int]:
-        # 21 x 3-bit is_pos scalefactors, no spectral data
-        acc = nb = 0
-        for band in range(21):
-            acc = (acc << 3) | mp3_is_pos(doc_id, g, band)
-            nb += 3
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap_bytes = frame_len - 4 - 32
-    acc = nb = 0
-    p23s = []
-    for g in (0, 1):
-        for fn in (left_granule_bits, right_granule_bits):
-            a, n = fn(g)
-            acc = (acc << n) | a
-            nb += n
-            p23s.append(n)
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap_bytes:
-        raise ValueError("granule data overran the frame region")
-
     w = _BitPacker()
-    w.u(0, 9)   # main_data_begin
-    w.u(3, 3)   # private_bits
-    w.u(0, 8)   # scfsi
-    i = 0
+    gr_info = []
     for g in (0, 1):
-        rc, gg, sfs, pre, _a, _b, nbv, _nq = mp3_is_fields(doc_id, g)
-        k = doc_id + 7 * g
-        r0_pairs = MP3_SFB_LONG_44100[rc + 1] // 2
-        # left channel granule info
-        w.u(p23s[2 * g], 12)
-        w.u(r0_pairs + nbv, 9)
-        w.u(gg, 8)
-        w.u(k % 16, 4)
-        w.u(0, 1)        # long blocks
-        for t in (0, 10, 10):
-            w.u(t, 5)
-        w.u(rc, 4)
-        w.u(min(7, 20 - rc), 3)
-        w.u(pre, 1)      # PREFLAG
-        w.u(sfs, 1)
-        w.u(1, 1)        # count1table_select: table B
-        # right channel granule info: scalefactors only
-        w.u(p23s[2 * g + 1], 12)
-        w.u(0, 9)        # big_values 0
-        w.u(210, 8)      # global_gain (no data to scale)
-        w.u(13, 4)       # scalefac_compress 13 -> slen (3, 3)
-        w.u(0, 1)
-        for t in (0, 0, 0):
-            w.u(t, 5)
-        w.u(0, 4)
-        w.u(0, 3)
-        w.u(0, 1)
-        w.u(0, 1)
-        w.u(1, 1)
-        i += 2
-    si = w.to_bytes()
-    assert len(si) == 32
-    # header: MPEG-1 L3, 128 kbps, 44.1 kHz, JOINT STEREO (mode 01),
-    # mode_extension 01 (intensity on, MS off)
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b01010100))
-        + si + packed + bytes(cap_bytes - len(packed))
-    )
+        rc, gg, sfs, pre, base_a, base_b, nbv, nq = mp3_is_fields(doc_id, g)
+        gr_info.append(_mp3_stereo_granule(
+            w, doc_id + 7 * g, rc, gg, sfs, base_a, base_b, nbv, nq,
+            preflag=pre,
+        ))
+        # right channel: scalefac_compress 13 -> slen (3, 3), the 21
+        # scalefactors are the intensity positions; no spectral data
+        start = w.tell()
+        _mp3_put_scalefacs(w, 13, MP3_SF_LONG,
+                           lambda i: mp3_is_pos(doc_id, g, i),
+                           lambda i: mp3_is_pos(doc_id, g, 11 + i))
+        gr_info.append(dict(
+            part2_3_length=w.tell() - start, big_values=0,
+            global_gain=210,  # no data to scale
+            scalefac_compress=13, table_select=(0, 0, 0),
+        ))
+    return _mp3_frame(9, 0, MP3_JOINT_IS, gr_info, w)  # 128 kbps, 44.1 kHz
 
 
 def mp3_rqs_fields(
@@ -4431,89 +4015,31 @@ def make_mp3_rqs_bytes(doc_id: int) -> bytes:
     half-step index 4*ssg), the implied two-region split at sample
     36, and table-10 magnitudes 0..7 — so the short band/window
     mapping decides every line's exponent."""
-    enc, _c1a = _mp3_ht_enc()
-
-    def granule_bits(g: int) -> tuple[int, int]:
-        _gg, sfs, _ssg, base_a, base_b = mp3_rqs_fields(doc_id, g)
-        sl1, sl2 = MP3_SLEN[(doc_id + g) % 16]
+    w = _BitPacker()
+    gr_info = []
+    for g in (0, 1):
+        gg, sfs, ssg, base_a, base_b = mp3_rqs_fields(doc_id, g)
+        sfc = (doc_id + g) % 16
+        sl1, sl2 = MP3_SLEN[sfc]
         cap = 8 if sfs else 16
         nbv = 9 + (doc_id + g) % 7
-        nq = 3 + (doc_id + g) % 3
-        acc = nb = 0
-        for _b in range(6):
-            for w_ in range(3):
-                acc = (acc << sl1) | (
-                    (base_a + w_) % min(1 << sl1, cap) if sl1 else 0
-                )
-                nb += sl1
-        for _b in range(6):
-            for w_ in range(3):
-                acc = (acc << sl2) | (
-                    (base_b + w_) % min(1 << sl2, cap) if sl2 else 0
-                )
-                nb += sl2
-        for q in range(nbv):
-            x = (doc_id + 3 * q + g) % 8
-            y = (2 * doc_id + q + g) % 8
-            hlen, hcode = enc[10][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(nq):
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb
-
-    br_idx = 9
-    frame_len = (144 * MP3_BITRATES_KBPS[br_idx] * 1000) // 44100
-    cap_bytes = frame_len - 4 - 17
-    a0, n0 = granule_bits(0)
-    a1, n1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap_bytes:
-        raise ValueError("granule data overran the frame region")
-
-    w = _BitPacker()
-    w.u(0, 9)
-    w.u(0, 5)
-    w.u(0, 4)
-    for g, p23 in ((0, n0), (1, n1)):
-        gg, sfs, ssg, _a, _b = mp3_rqs_fields(doc_id, g)
-        nbv = 9 + (doc_id + g) % 7
-        w.u(p23, 12)
-        w.u(18 + nbv, 9)   # big_values: silent region0 + live pairs
-        w.u(gg, 8)
-        w.u((doc_id + g) % 16, 4)
-        w.u(1, 1)          # window_switching_flag
-        w.u(2, 2)          # block_type: short
-        w.u(0, 1)          # mixed_block_flag
-        for t in (0, 10):
-            w.u(t, 5)
-        for w_ in range(3):
-            w.u(ssg[w_], 3)
-        w.u(0, 1)          # preflag
-        w.u(sfs, 1)
-        w.u(1, 1)          # count1table_select: table B
-    si = w.to_bytes()
-    assert len(si) == 17
-    return (
-        bytes((0xFF, 0b11111011, (br_idx << 4), 0b11000100))
-        + si + packed + bytes(cap_bytes - len(packed))
-    )
+        start = w.tell()
+        # scalefactor i is band i // 3, window i % 3
+        _mp3_put_scalefacs(w, sfc, MP3_SF_SHORT,
+                           lambda i: (base_a + i % 3) % min(1 << sl1, cap),
+                           lambda i: (base_b + i % 3) % min(1 << sl2, cap))
+        _mp3_put_pairs(w, [
+            (10, (doc_id + 3 * q + g) % 8, (2 * doc_id + q + g) % 8)
+            for q in range(nbv)
+        ], doc_id + g)
+        _mp3_put_quads(w, _mp3_c1_quads(doc_id, g, 3 + (doc_id + g) % 3))
+        gr_info.append(dict(
+            part2_3_length=w.tell() - start,
+            big_values=18 + nbv,  # silent region0 + live pairs
+            global_gain=gg, scalefac_compress=sfc, table_select=(0, 10),
+            block_type=2, subblock_gain=ssg, scalefac_scale=sfs,
+        ))
+    return _mp3_frame(9, 0, MP3_MONO, gr_info, w)  # 128 kbps, 44.1 kHz
 
 
 # Ogg page CRC-32 (RFC 3533 6.): polynomial 0x04c11db7, no reflection,
@@ -7389,101 +6915,24 @@ def make_mp3_sb_bytes(doc_id: int) -> bytes:
     table-1 big-values and table-B count1 regions as the long-block
     fixture, through the same live bit reservoir."""
     n_frames, sr_idx, br_idx, delta = mp3_sb_params(doc_id)
-    sr = MP3_SAMPLE_RATES[sr_idx]
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // sr
-    cap = frame_len - 4 - 17
-    blob_len = cap - delta
 
-    def granule_bits(g: int, k: int) -> tuple[int, int]:
+    def put_granule(w: _BitPacker, g: int, parity: int, cap: int) -> dict:
         sfc, sf_a, sf_b, pattern, n_quads, _p23 = mp3_sb_granule(
             doc_id, g, cap, delta
         )
-        sl1, sl2 = MP3_SLEN[sfc]
-        acc = nb = 0
-        for bnd in range(12):
-            slen, val = (sl1, sf_a) if bnd < 6 else (sl2, sf_b)
-            for _w in range(3):
-                acc = (acc << slen) | val
-                nb += slen
-        for q, (x, y) in enumerate(mp3_sb_pairs(doc_id, g)):
-            hlen, hcode = MP3_HUFF1_ENC[(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + k + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + k + g + 1) % 2)
-                nb += 1
-        neg = (doc_id + g + k) % 2
-        vals = ((pattern >> 3) & 1, (pattern >> 2) & 1,
-                (pattern >> 1) & 1, pattern & 1)
-        qv = qn = 0
-        for v in vals:
-            qv = (qv << 1) | (v ^ 1)
-            qn += 1
-        for v in vals:
-            if v:
-                qv = (qv << 1) | neg
-                qn += 1
-        for _q in range(n_quads):
-            acc = (acc << qn) | qv
-            nb += qn
-        return acc, nb
+        _mp3_put_scalefacs(w, sfc, MP3_SF_SHORT, sf_a, sf_b)
+        pairs = mp3_sb_pairs(doc_id, g)
+        _mp3_put_pairs(w, [(1, x, y) for x, y in pairs], doc_id + parity + g)
+        _mp3_put_quads(w, [(pattern, (doc_id + g + parity) % 2)] * n_quads)
+        return dict(
+            big_values=len(pairs), scalefac_compress=sfc,
+            table_select=(1, 1), block_type=2,  # three short windows
+            subblock_gain=tuple((doc_id + g + win) % 8 for win in range(3)),
+        )
 
-    packed: dict[int, bytes] = {}
-    for parity in (0, 1):
-        a0, n0 = granule_bits(0, parity)
-        a1, n1 = granule_bits(1, parity)
-        acc = (a0 << n1) | a1
-        nb = n0 + n1
-        pad = (8 - nb % 8) % 8
-        acc <<= pad
-        packed[parity] = acc.to_bytes((nb + pad) // 8, "big")
-        if len(packed[parity]) > blob_len:
-            raise ValueError("granule data overran blob")
-    blobs = [
-        packed[k % 2] + bytes(blob_len - len(packed[k % 2]))
-        for k in range(n_frames)
-    ]
-    stream = b"".join(blobs)
-    stream += bytes(n_frames * cap - len(stream))
-
-    out = bytearray()
-    for k in range(n_frames):
-        out += bytes((
-            0xFF, 0b11111011,
-            (br_idx << 4) | (sr_idx << 2), 0b11000100,
-        ))
-        w = _BitPacker()
-        w.u(k * delta, 9)
-        w.u(0, 5)
-        w.u(0, 4)           # scfsi: all zero (short blocks)
-        for g in (0, 1):
-            sfc, _a, _b, _p, _nq, p23 = mp3_sb_granule(
-                doc_id, g, cap, delta
-            )
-            w.u(p23, 12)
-            w.u(len(mp3_sb_pairs(doc_id, g)), 9)
-            w.u((doc_id + 29 * k + 17 * g) % 256, 8)  # global_gain
-            w.u(sfc, 4)
-            w.u(1, 1)       # windows_switching_flag
-            w.u(2, 2)       # block_type 2: three short windows
-            w.u(0, 1)       # mixed_block_flag
-            w.u(1, 5)       # table_select region 0
-            w.u(1, 5)       # table_select region 1
-            for win in range(3):
-                w.u((doc_id + g + win) % 8, 3)  # subblock_gain
-            w.u(0, 1)       # preflag
-            w.u(0, 1)       # scalefac_scale
-            w.u(1, 1)       # count1table_select = 1: table B
-        si = w.to_bytes()
-        if len(si) != 17:
-            raise ValueError("side info must pack to 17 bytes")
-        out += si
-        out += stream[k * cap : (k + 1) * cap]
-    return bytes(out)
+    return _mp3_reservoir_bytes(
+        doc_id, n_frames, sr_idx, br_idx, delta, put_granule
+    )
 
 
 def mp3_ws_tables(doc_id: int, g: int) -> tuple[int, int]:
@@ -7555,85 +7004,21 @@ def make_mp3_b8_bytes(doc_id: int) -> bytes:
     cycles (44.1/48/32 kHz by doc % 3) genuinely selects which pairs
     decode through which table.  ``main_data_begin = 0``, scfsi 0,
     count1 table B."""
-    enc, _c1a = _mp3_ht_enc()
-    n_frames = 2 + doc_id % 3
-    sr_idx = doc_id % 3
-    br_idx = 7 + doc_id % 3
-    sr = MP3_SAMPLE_RATES[sr_idx]
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // sr
-    cap = frame_len - 4 - 17
-
-    def granule_bits(g: int) -> tuple[int, int, int]:
-        sfc = (doc_id + 2 * g) % 16
-        sl1, sl2 = MP3_SLEN[sfc]
-        sf_a = (doc_id + g) % (1 << sl1)
-        sf_b = (doc_id + 7 + g) % (1 << sl2)
-        acc = nb = 0
-        for _band in range(11):
-            acc = (acc << sl1) | sf_a
-            nb += sl1
-        for _band in range(10):
-            acc = (acc << sl2) | sf_b
-            nb += sl2
-        for q, (t, x, y) in enumerate(mp3_b8_pairs(doc_id, g)):
-            hlen, hcode = enc[t][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(3 + (doc_id + g) % 4):  # count1 table B
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb, nb
-
-    a0, n0, p23_0 = granule_bits(0)
-    a1, n1, p23_1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    acc <<= pad
-    packed = acc.to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-    region = packed + bytes(cap - len(packed))
-
-    out = bytearray()
-    # identical frames: build once, repeat (bytes unchanged)
     w = _BitPacker()
-    w.u(0, 9)
-    w.u(0, 5)
-    w.u(0, 4)
-    for g, p23 in ((0, p23_0), (1, p23_1)):
-        w.u(p23, 12)
-        w.u(len(mp3_b8_pairs(doc_id, g)), 9)
-        w.u((doc_id + 19 * g) % 256, 8)  # global_gain
-        w.u((doc_id + 2 * g) % 16, 4)    # scalefac_compress
-        w.u(0, 1)                        # long blocks
-        for t in mp3_b8_tsels(doc_id, g):
-            w.u(t, 5)
-        w.u(8, 4)   # region0_count
-        w.u(3, 3)   # region1_count
-        w.u(0, 1)   # preflag
-        w.u(0, 1)   # scalefac_scale
-        w.u(1, 1)   # count1table_select: table B
-    si = w.to_bytes()
-    if len(si) != 17:
-        raise ValueError("side info must pack to 17 bytes")
-    frame = bytes((0xFF, 0b11111011, (br_idx << 4) | (sr_idx << 2),
-                   0b11000100)) + si + region
-    out += frame * n_frames
-    return bytes(out)
+    gr_info = [
+        dict(
+            _mp3_table_granule(w, doc_id, g, MP3_SF_LONG,
+                               mp3_b8_pairs(doc_id, g), 3 + (doc_id + g) % 4),
+            global_gain=(doc_id + 19 * g) % 256,
+            table_select=mp3_b8_tsels(doc_id, g),
+            region0_count=8, region1_count=3,
+        )
+        for g in (0, 1)
+    ]
+    # identical frames: build once, repeat (bytes unchanged)
+    return _mp3_frame(
+        7 + doc_id % 3, doc_id % 3, MP3_MONO, gr_info, w
+    ) * (2 + doc_id % 3)
 
 
 def make_mp3_ws_bytes(doc_id: int, mixed: bool = False) -> bytes:
@@ -7652,97 +7037,25 @@ def make_mp3_ws_bytes(doc_id: int, mixed: bool = False) -> bytes:
     instead (ISO 2.4.2.7): 8 LONG bands at slen1, then short bands
     3-5 at slen1 and 6-11 at slen2 x 3 windows — the 17*slen1 +
     18*slen2 part2 layout."""
-    enc, _c1a = _mp3_ht_enc()
-    n_frames = 2 + doc_id % 3
-    sr_idx = doc_id % 3
-    br_idx = 7 + doc_id % 3
-    sr = MP3_SAMPLE_RATES[sr_idx]
-    kbps = MP3_BITRATES_KBPS[br_idx]
-    frame_len = (144 * kbps * 1000) // sr
-    cap = frame_len - 4 - 17
-
-    def granule_bits(g: int) -> tuple[int, int, int]:
-        sfc = (doc_id + 2 * g) % 16
-        sl1, sl2 = MP3_SLEN[sfc]
-        sf_a = (doc_id + g) % (1 << sl1)
-        sf_b = (doc_id + 7 + g) % (1 << sl2)
-        acc = nb = 0
-        if mixed:
-            # mixed partition: 8 long bands, then short bands 3-11
-            for _bnd in range(8):
-                acc = (acc << sl1) | sf_a
-                nb += sl1
-            for bnd in range(3, 12):
-                slen, val = (sl1, sf_a) if bnd < 6 else (sl2, sf_b)
-                for _w in range(3):
-                    acc = (acc << slen) | val
-                    nb += slen
-        else:
-            for bnd in range(12):  # short partition: 12 bands x 3 windows
-                slen, val = (sl1, sf_a) if bnd < 6 else (sl2, sf_b)
-                for _w in range(3):
-                    acc = (acc << slen) | val
-                    nb += slen
-        for q, (t, x, y) in enumerate(mp3_ws_pairs(doc_id, g)):
-            hlen, hcode = enc[t][(x, y)]
-            acc = (acc << hlen) | hcode
-            nb += hlen
-            if x:
-                acc = (acc << 1) | ((doc_id + q + g) % 2)
-                nb += 1
-            if y:
-                acc = (acc << 1) | ((doc_id + q + g + 1) % 2)
-                nb += 1
-        for j in range(3 + (doc_id + g) % 4):  # count1 table B
-            pattern = (doc_id + 5 * g + j) % 16
-            acc = (acc << 4) | (pattern ^ 0xF)
-            nb += 4
-            neg = (doc_id + j) % 2
-            for shift in (3, 2, 1, 0):
-                if (pattern >> shift) & 1:
-                    acc = (acc << 1) | neg
-                    nb += 1
-        return acc, nb, nb
-
-    a0, n0, p23_0 = granule_bits(0)
-    a1, n1, p23_1 = granule_bits(1)
-    acc = (a0 << n1) | a1
-    nb = n0 + n1
-    pad = (8 - nb % 8) % 8
-    acc <<= pad
-    packed = acc.to_bytes((nb + pad) // 8, "big")
-    if len(packed) > cap:
-        raise ValueError("granule data overran the frame region")
-    region = packed + bytes(cap - len(packed))
-
-    out = bytearray()
-    # identical frames: build once, repeat (bytes unchanged)
     w = _BitPacker()
-    w.u(0, 9)   # main_data_begin
-    w.u(0, 5)
-    w.u(0, 4)   # scfsi: all zero (short blocks)
-    for g, p23 in ((0, p23_0), (1, p23_1)):
-        w.u(p23, 12)
-        w.u(len(mp3_ws_pairs(doc_id, g)), 9)
-        w.u((doc_id + 13 * g) % 256, 8)  # global_gain
-        w.u((doc_id + 2 * g) % 16, 4)    # scalefac_compress
-        w.u(1, 1)       # windows_switching_flag
-        w.u(2, 2)       # block_type 2: three short windows
-        w.u(1 if mixed else 0, 1)  # mixed_block_flag
-        for t in mp3_ws_tables(doc_id, g):
-            w.u(t, 5)   # 2-entry table_select
-        for win in range(3):
-            w.u((doc_id + g + win) % 8, 3)  # subblock_gain
-        w.u(0, 1)       # preflag
-        w.u(0, 1)       # scalefac_scale
-        w.u(1, 1)       # count1table_select = 1: table B
-    si = w.to_bytes()
-    if len(si) != 17:
-        raise ValueError("side info must pack to 17 bytes")
-    frame = bytes((0xFF, 0b11111011, (br_idx << 4) | (sr_idx << 2),
-                   0b11000100)) + si + region
-    out += frame * n_frames
-    return bytes(out)
+    gr_info = [
+        dict(
+            _mp3_table_granule(
+                w, doc_id, g, MP3_SF_MIXED if mixed else MP3_SF_SHORT,
+                mp3_ws_pairs(doc_id, g), 3 + (doc_id + g) % 4,
+            ),
+            global_gain=(doc_id + 13 * g) % 256,
+            table_select=mp3_ws_tables(doc_id, g),
+            block_type=2,  # three short windows
+            mixed_block_flag=int(mixed),
+            subblock_gain=tuple((doc_id + g + win) % 8 for win in range(3)),
+        )
+        for g in (0, 1)
+    ]
+    # identical frames: build once, repeat (bytes unchanged)
+    return _mp3_frame(
+        7 + doc_id % 3, doc_id % 3, MP3_MONO, gr_info, w
+    ) * (2 + doc_id % 3)
 
 
 def make_mp3_mx_bytes(doc_id: int) -> bytes:

@@ -20,6 +20,12 @@ from ..multimodal import decode_image_meta, perceptual_hash, sample_frames, with
 from ..registry import query
 
 
+def _payloads(docs: DataFrame) -> DataFrame:
+    """The ``doc_id, payload`` frame a payload decoder reads, from the
+    documents' synthetic media column."""
+    return with_media_payload(docs).select("doc_id", "media.payload")
+
+
 def _ascii_docs(docs: DataFrame) -> DataFrame:
     """Non-empty pure-ASCII documents (chars == bytes): the fake-payload
     byte kernels are oracle-checked against CHARACTER-function SQL, a
@@ -49,10 +55,10 @@ def _ascii_docs(docs: DataFrame) -> DataFrame:
 def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image metadata extraction: documents → media struct (binary payload
     + typed metadata) → ``mapInPandas`` decode kernel.  Deterministic fake
-    header parse (dimensions are a pure function of byte length); the real
-    codec site raises ``NotImplementedError`` (no image libs here)."""
+    header parse (dimensions are a pure function of byte length) where an
+    image library would open the bytes."""
     return doc_range_query(
-        spark, sf_dir, lambda d: decode_image_meta(with_media_payload(d)), "doc_id",
+        spark, sf_dir, lambda d: decode_image_meta(_payloads(d)), "doc_id",
         docs_fn=lambda d: d.select("doc_id", "text"),
     )
 
@@ -82,7 +88,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame extraction uses.  Embarrassingly parallel; the one shuffle
     range-partitions the input docs (``doc_range_query``)."""
     return doc_range_query(
-        spark, sf_dir, lambda d: sample_frames(with_media_payload(d), frame_bytes=100, stride=10),
+        spark, sf_dir, lambda d: sample_frames(_payloads(d)),
         "doc_id", "frame_idx", docs_fn=_ascii_docs,
     )
 
@@ -115,7 +121,7 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..multimodal.decode import audio_chunk_energy
 
     return doc_range_query(
-        spark, sf_dir, lambda d: audio_chunk_energy(with_media_payload(d), chunk_samples=400),
+        spark, sf_dir, lambda d: audio_chunk_energy(_payloads(d)),
         "doc_id", "chunk_idx", docs_fn=_ascii_docs,
     )
 
@@ -159,7 +165,7 @@ def multimodal_resize_blockmean(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return doc_range_query(
         spark, sf_dir,
-        lambda d: block_mean_resize(with_media_payload(d), factor=8).withColumn(
+        lambda d: block_mean_resize(_payloads(d)).withColumn(
             "head", F.array_join(F.transform("head", lambda x: x.cast("string")), ",")
         ),
         "doc_id", docs_fn=_ascii_docs,
@@ -198,7 +204,7 @@ def multimodal_feature_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return doc_range_query(
         spark, sf_dir,
-        lambda d: byte_histogram(with_media_payload(d)).withColumn(
+        lambda d: byte_histogram(_payloads(d)).withColumn(
             "hist", F.array_join(F.transform("hist", lambda x: x.cast("string")), ",")
         ),
         "doc_id", docs_fn=_ascii_docs,
@@ -263,7 +269,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     docs = _ascii_docs(load_table(spark, sf_dir, "documents"))
-    hashes = perceptual_hash(with_media_payload(docs), codec="fake")
+    hashes = perceptual_hash(_payloads(docs))
     a = hashes.select(F.col("doc_id").alias("doc_a"), "phash")
     b = hashes.select(F.col("doc_id").alias("doc_b"), F.col("phash").alias("ph_b"))
     return (

@@ -1,8 +1,8 @@
 """Multimodal plumbing tests: media struct schema, decode kernels, the
-real-codec stub contract, and UDF-surface registration.
+declared ``NotImplementedError`` boundaries, and UDF-surface registration.
 
 Oracle parity for the registered queries runs in test_oracle_parity; these
-cover the library API and the parts parity can't see (the stubbed path).
+cover the library API and the parts parity can't see (the rejection paths).
 """
 
 from __future__ import annotations
@@ -29,6 +29,27 @@ def media(spark, sf_dir):
     return with_media_payload(load_table(spark, sf_dir, "documents"))
 
 
+@pytest.fixture(scope="module")
+def payloads(media):
+    """The ``doc_id, payload`` frame the payload decoders read."""
+    return media.select("doc_id", "media.payload")
+
+
+def _decode_rows(dec, doc, raw):
+    """``dec``'s output rows for one payload, by column name, straight
+    from its row function (no Spark)."""
+    return [
+        SimpleNamespace(**dict(zip(dec.columns, (doc, *row))))
+        for row in dec.factory()(doc, raw)
+    ]
+
+
+def _decode_one(dec, doc, raw):
+    """``dec``'s single output row for one payload."""
+    (row,) = _decode_rows(dec, doc, raw)
+    return row
+
+
 def test_media_struct_shape(media):
     t = media.schema["media"].dataType
     assert [f.name for f in t.fields] == ["kind", "source", "n_bytes", "payload"]
@@ -37,26 +58,12 @@ def test_media_struct_shape(media):
     assert row.n_bytes == len(row.payload)
 
 
-def test_real_codec_path_is_stubbed(media):
-    """The real decode site must raise NotImplementedError (no codec libs
-    in this container) — and raise it from inside the distributed kernel,
-    proving the plumbing reaches the codec call."""
-    df = decode_image_meta(media.limit(1), codec="real")
-    with pytest.raises(Exception, match="NotImplementedError|image library"):
-        df.collect()
-
-
-def test_unknown_codec_rejected(media):
-    with pytest.raises(ValueError, match="unknown codec"):
-        decode_image_meta(media, codec="webp")
-
-
-def test_frame_sampling_counts(media, spark):
+def test_frame_sampling_counts(media, payloads):
     """Row expansion: each doc yields floor(bytes/100) frames sampled at
     stride 10 → ceil(n_frames/10) rows."""
     import pyspark.sql.functions as F
 
-    frames = sample_frames(media, frame_bytes=100, stride=10)
+    frames = sample_frames(payloads)
     got = {r.doc_id: r.n for r in frames.groupBy("doc_id").agg(F.count("*").alias("n")).collect()}
     sizes = {r.doc_id: r.n_bytes for r in media.select("doc_id", "media.n_bytes").collect()}
     for doc_id, n_bytes in sizes.items():
@@ -65,12 +72,12 @@ def test_frame_sampling_counts(media, spark):
         assert got.get(doc_id, 0) == expected
 
 
-def test_audio_chunk_energy_matches_bytes(media):
+def test_audio_chunk_energy_matches_bytes(payloads):
     """Windowed PCM features: each 400-byte chunk's energy/peak must equal
     the plain-Python reduction over the same payload slice."""
-    one = media.orderBy("doc_id").limit(1)
-    payload = bytes(one.select("media.payload").first()[0])
-    rows = audio_chunk_energy(one, chunk_samples=400).orderBy("chunk_idx").collect()
+    one = payloads.orderBy("doc_id").limit(1)
+    payload = bytes(one.first().payload)
+    rows = audio_chunk_energy(one).orderBy("chunk_idx").collect()
     assert len(rows) == len(payload) // 400
     for r in rows:
         chunk = payload[r.chunk_idx * 400 : (r.chunk_idx + 1) * 400]
@@ -79,16 +86,10 @@ def test_audio_chunk_energy_matches_bytes(media):
         assert r.peak == max(chunk)
 
 
-def test_audio_real_codec_is_stubbed(media):
-    df = audio_chunk_energy(media.limit(1), codec="real")
-    with pytest.raises(Exception, match="NotImplementedError|audio library"):
-        df.collect()
-
-
-def test_block_mean_resize_matches_bytes(media):
-    one = media.orderBy("doc_id").limit(1)
-    payload = bytes(one.select("media.payload").first()[0])
-    r = block_mean_resize(one, factor=8).first()
+def test_block_mean_resize_matches_bytes(payloads):
+    one = payloads.orderBy("doc_id").limit(1)
+    payload = bytes(one.first().payload)
+    r = block_mean_resize(one).first()
     n_out = len(payload) // 8
     resized = [sum(payload[i * 8 : (i + 1) * 8]) // 8 for i in range(n_out)]
     assert (r.n_in, r.n_out) == (len(payload), n_out)
@@ -96,9 +97,9 @@ def test_block_mean_resize_matches_bytes(media):
     assert list(r.head) == resized[:8]
 
 
-def test_byte_histogram_matches_bytes(media):
-    one = media.orderBy("doc_id").limit(1)
-    payload = bytes(one.select("media.payload").first()[0])
+def test_byte_histogram_matches_bytes(payloads):
+    one = payloads.orderBy("doc_id").limit(1)
+    payload = bytes(one.first().payload)
     r = byte_histogram(one).first()
     hist = [0] * 16
     for b in payload:
@@ -106,6 +107,34 @@ def test_byte_histogram_matches_bytes(media):
     assert list(r.hist) == hist
     assert r.top_bin == hist.index(max(hist))
     assert r.n_bytes == len(payload)
+
+
+def test_payload_decoders_without_spark():
+    """The ``media.payload`` feature kernels are plain decoders: their row
+    functions run on bytes with no session."""
+    import hashlib
+
+    from open_source_etl_spark.multimodal import perceptual_hash
+
+    raw = bytes(range(256)) * 5  # 1280 bytes: 12 frames, 3 audio chunks
+    meta = _decode_one(decode_image_meta, 7, raw)
+    assert (meta.n_bytes, meta.width, meta.height, meta.n_channels) == (
+        1280, 64 + 1280 % 577, 64 + (1280 * 31) % 421, 3,
+    )
+    assert meta.sha == hashlib.sha256(raw).hexdigest()
+    frames = _decode_rows(sample_frames, 7, raw)
+    assert [f.frame_idx for f in frames] == [0, 10]
+    assert frames[1].frame_sha == hashlib.sha256(raw[1000:1100]).hexdigest()
+    chunks = _decode_rows(audio_chunk_energy, 7, raw)
+    assert [(c.n_samples, c.energy, c.peak) for c in chunks] == [
+        (400, sum(raw[i * 400 : (i + 1) * 400]), max(raw[i * 400 : (i + 1) * 400]))
+        for i in range(3)
+    ]
+    # a rising ramp per 256-byte period: the upper half of every block
+    # beats the mean, block by block
+    bits = _decode_one(perceptual_hash, 7, bytes(range(256))).phash
+    assert bits == "0" * 8 + "1" * 8
+    assert _decode_one(perceptual_hash, 7, b"").phash == "0" * 16
 
 
 def test_udf_surface_registers_for_sql(spark):
@@ -1015,7 +1044,38 @@ def test_mp3_side_info_round_trip():
     assert mdb == 77 and granules == [(1000, 100, 200)] * 2
 
 
-def test_mp3_frame_walk_rejects_bad_side_info(spark):
+def test_crc_check_values_and_bitwise_reference():
+    """The table-driven CRCs: the catalogue check values on
+    ``b"123456789"`` (CRC-16/CMS for MPEG audio, CRC-16/UMTS and
+    CRC-8/SMBUS for FLAC) and agreement with the bitwise MSB-first
+    recurrence on seeded random inputs, odd and even lengths."""
+    import random
+
+    from open_source_etl_spark.multimodal.dec_mp3 import mp3_crc16
+    from open_source_etl_spark.multimodal.synth import flac_crc8, flac_crc16
+
+    assert mp3_crc16(b"123456789") == 0xAEE7
+    assert flac_crc16(b"123456789") == 0xFEE8
+    assert flac_crc8(b"123456789") == 0xF4
+
+    def bitwise(data, poly, width, init):
+        top, mask = 1 << (width - 1), (1 << width) - 1
+        crc = init
+        for byte in data:
+            crc ^= byte << (width - 8)
+            for _ in range(8):
+                crc = ((crc << 1) ^ poly) & mask if crc & top else (crc << 1) & mask
+        return crc
+
+    rng = random.Random(11172)
+    for n in [*range(8), *(rng.randrange(8, 600) for _ in range(40))]:
+        data = bytes(rng.randrange(256) for _ in range(n))
+        assert mp3_crc16(data) == bitwise(data, 0x8005, 16, 0xFFFF), n
+        assert flac_crc16(data) == bitwise(data, 0x8005, 16, 0), n
+        assert flac_crc8(data) == bitwise(data, 0x07, 8, 0), n
+
+
+def test_mp3_frame_walk_rejects_bad_side_info():
     """A frame whose side info claims big_values > 288 (the spec
     ceiling) must reject — forcing the 9-bit field to all-ones by
     overwriting side-info bytes 3-4 of the first frame."""
@@ -1029,14 +1089,11 @@ def test_mp3_frame_walk_rejects_bad_side_info(spark):
     si = 10 + id3_len + 4  # first frame's side info
     raw[si + 3] = 0xFF  # bits 24..31: tail of part2_3_length + big_values head
     raw[si + 4] = 0xFF  # bits 32..39: rest of big_values -> 511
-    media = spark.createDataFrame(
-        [(11, bytes(raw), "audio")], "doc_id long, payload binary, kind string"
-    )
     with pytest.raises(Exception, match="big_values"):
-        decode_mp3_frames(media).collect()
+        _decode_rows(decode_mp3_frames, 11, bytes(raw))
 
 
-def test_mp3_frame_walk_rejects_malformed(spark):
+def test_mp3_frame_walk_rejects_malformed():
     """Corrupted streams raise: broken sync, reserved bitrate index,
     truncated final frame, trailing garbage after the last frame, and
     a mid-stream sample-rate change."""
@@ -1078,12 +1135,8 @@ def test_mp3_frame_walk_rejects_malformed(spark):
         bytes(bad_sync), bytes(reserved_bitrate), truncated, trailing,
         bytes(sr_change),
     ):
-        media = spark.createDataFrame(
-            [(11, bytes(payload), "audio")],
-            "doc_id long, payload binary, kind string",
-        )
         with pytest.raises(Exception):
-            decode_mp3_frames(media).collect()
+            _decode_rows(decode_mp3_frames, 11, bytes(payload))
 
 
 def test_h264_synth_emulation_prevention_is_real():
@@ -1305,18 +1358,17 @@ def test_h264_nal_walk_rejects_malformed(spark):
             decode_h264_nals(media).collect()
 
 
-def test_mp3_maindata_decode_uses_reservoir(spark):
+def test_mp3_maindata_decode_uses_reservoir():
     """The main-data fixture's reservoir pointers are live: for a doc
     with a nonzero reservoir step the decoded max_reservoir must be
     positive and equal (n_frames-1)*delta, proving the decoder seeks
     backwards across physical frame boundaries."""
-    from open_source_etl_spark.multimodal.decode import decode_mp3_maindata, media_frame
+    from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
     from open_source_etl_spark.multimodal.synth import make_mp3_md_bytes, mp3_md_params
 
-    docs = spark.createDataFrame([(11,), (12,)], "doc_id long")
     rows = {
-        r.doc_id: r
-        for r in media_frame(docs, make_mp3_md_bytes, decode_mp3_maindata).collect()
+        d: _decode_rows(decode_mp3_maindata, d, make_mp3_md_bytes(d))[0]
+        for d in (11, 12)
     }
     for d in (11, 12):
         n_frames, _sr, _br, delta = mp3_md_params(d)
@@ -1324,7 +1376,7 @@ def test_mp3_maindata_decode_uses_reservoir(spark):
     assert rows[11].max_reservoir > 0
 
 
-def test_mp3_maindata_decode_rejects_corruption(spark):
+def test_mp3_maindata_decode_rejects_corruption():
     """Entropy-layer corruption raises: a reservoir pointer reaching
     before the stream start, a part2_3_length that no whole number of
     quadruples can consume exactly, and a truncated final region."""
@@ -1348,12 +1400,8 @@ def test_mp3_maindata_decode_rejects_corruption(spark):
         (raw[:-5], "truncated"),
     )
     for payload, pattern in cases:
-        media = spark.createDataFrame(
-            [(11, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
         with pytest.raises(Exception, match=pattern):
-            decode_mp3_maindata(media).collect()
+            _decode_rows(decode_mp3_maindata, 11, payload)
 
 
 def _patch_mp3_side_bits(raw: bytes, frame_off: int, bit: int, width: int,
@@ -1370,7 +1418,7 @@ def _patch_mp3_side_bits(raw: bytes, frame_off: int, bit: int, width: int,
     return bytes(out)
 
 
-def test_mp3_bigvalues_table_and_region_boundaries(spark):
+def test_mp3_bigvalues_table_and_region_boundaries():
     """The big-values layer rejects at the exact sites: re-pointing
     a granule to table 13 (shipped round 14 — different code lengths
     than the written table) desyncs the stream and fails exact
@@ -1383,12 +1431,6 @@ def test_mp3_bigvalues_table_and_region_boundaries(spark):
     from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
     from open_source_etl_spark.multimodal.synth import make_mp3_md_bytes
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     # doc 6 is a region-switching 44.1 kHz doc (tables 1,0,1): its
     # region1 really is dispatched, so re-pointing region1's table to
     # the 16x16 table 13 (shipped round 14) re-parses those bits with
@@ -1400,16 +1442,14 @@ def test_mp3_bigvalues_table_and_region_boundaries(spark):
     patched = _patch_mp3_side_bits(
         make_mp3_md_bytes(6), 0, 52 + 5, 5, 13
     )
-    base_row = decode_mp3_maindata(
-        media_of(6, make_mp3_md_bytes(6))
-    ).collect()[0].asDict()
-    t13_row = decode_mp3_maindata(media_of(6, patched)).collect()[0].asDict()
+    base_row = vars(_decode_rows(decode_mp3_maindata, 6, make_mp3_md_bytes(6))[0])
+    t13_row = vars(_decode_rows(decode_mp3_maindata, 6, patched)[0])
     assert t13_row != base_row, t13_row
     reserved = _patch_mp3_side_bits(
         make_mp3_md_bytes(6), 0, 52 + 5, 5, 4
     )
     with pytest.raises(Exception, match="reserved"):
-        decode_mp3_maindata(media_of(6, reserved)).collect()
+        _decode_rows(decode_mp3_maindata, 6, reserved)
 
     # the linbits fixture: every doc where (doc+g)%9 != 0 uses an
     # escape table, and the closed-form pair grid guarantees ESC
@@ -1445,11 +1485,7 @@ def test_mp3_bigvalues_table_and_region_boundaries(spark):
         for x, y, ex_x, ex_y in mp3_lb_pairs(46, 0)
     )
     lb_raw = make_mp3_lb_bytes(46)
-    lb_df = spark.createDataFrame(
-        [(46, lb_raw, "audio")],
-        "doc_id long, payload binary, kind string",
-    )
-    decode_mp3_maindata(lb_df).collect()  # valid stream decodes
+    _decode_rows(decode_mp3_maindata, 46, lb_raw)  # valid stream decodes
     desynced = lb_raw
     for r in range(3):
         desynced = _patch_mp3_side_bits(desynced, 0, 52 + 5 * r, 5, 15)
@@ -1457,12 +1493,7 @@ def test_mp3_bigvalues_table_and_region_boundaries(spark):
         Exception,
         match="overran|not exactly consumed|invalid|mid-field",
     ):
-        decode_mp3_maindata(
-            spark.createDataFrame(
-                [(46, desynced, "audio")],
-                "doc_id long, payload binary, kind string",
-            )
-        ).collect()
+        _decode_rows(decode_mp3_maindata, 46, desynced)
 
     # doc 1 is 48 kHz with uniform tables (1,1,1) — decodes fine;
     # making the regions differ (region1 -> table 0) now DISPATCHES
@@ -1471,7 +1502,7 @@ def test_mp3_bigvalues_table_and_region_boundaries(spark):
     # part2_3 accounting rejects the stream
     diff48 = _patch_mp3_side_bits(make_mp3_md_bytes(1), 0, 52 + 5, 5, 0)
     with pytest.raises(Exception, match="overran|mid-field"):
-        decode_mp3_maindata(media_of(1, diff48)).collect()
+        _decode_rows(decode_mp3_maindata, 1, diff48)
 
 
 def test_mp3_b8_rows_are_structurally_valid():
@@ -1877,7 +1908,7 @@ def test_mp3_huffman_tables_are_valid_complete_codes():
     assert_complete_prefix_code(list(MP3_COUNT1A))
 
 
-def test_mp3_imdct_filterbank_exactness_and_boundaries(spark):
+def test_mp3_imdct_filterbank_exactness_and_boundaries():
     """The hybrid synthesis filterbank (ISO 11172-3 2.4.3.4): the
     integer Q12 pipeline tracks the real float formulas to within
     quantization error (guarding the butterfly/IMDCT/window wiring
@@ -1927,18 +1958,12 @@ def test_mp3_imdct_filterbank_exactness_and_boundaries(spark):
     for i in range(8):
         assert abs(cs[i] ** 2 + ca[i] ** 2 - q * q) < 2 * q
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     # doc 5: granule block types (1, 3); doc 6: (2, 0); doc 4:
     # (0, 2-mixed) — all four window types plus the mixed hybrid
     # round-trip through the Spark kernel
     for doc in (4, 5, 6):
         raw = make_mp3_imdct_bytes(doc)
-        ok = decode_mp3_imdct(media_of(doc, raw)).first()
+        ok = _decode_rows(decode_mp3_imdct, doc, raw)[0]
         assert ok.n_granules == 2 and ok.n_nonzero_samples > 0
 
     raw5 = make_mp3_imdct_bytes(5)
@@ -1947,35 +1972,35 @@ def test_mp3_imdct_filterbank_exactness_and_boundaries(spark):
     # global_gain (side-info bits 39..46 for granule 0) off 210
     bad_gain = _patch_mp3_side_bits(raw5, 0, 18 + 21, 8, 200)
     with pytest.raises(Exception, match="non-unit requantization"):
-        decode_mp3_imdct(media_of(5, bad_gain)).collect()
+        _decode_rows(decode_mp3_imdct, 5, bad_gain)
 
     # scalefac_compress nonzero -> nonzero-scalefactor stub
     bad_sfc = _patch_mp3_side_bits(raw5, 0, 18 + 29, 4, 3)
     with pytest.raises(Exception, match="scalefactors"):
-        decode_mp3_imdct(media_of(5, bad_sfc)).collect()
+        _decode_rows(decode_mp3_imdct, 5, bad_sfc)
 
     # granule 0 is block_type 1: a mixed_block_flag on a non-short
     # granule is a spec violation and rejects
     mixed = _patch_mp3_side_bits(raw5, 0, 18 + 36, 1, 1)
     with pytest.raises(Exception, match="mixed_block_flag"):
-        decode_mp3_imdct(media_of(5, mixed)).collect()
+        _decode_rows(decode_mp3_imdct, 5, mixed)
 
     # nonzero subblock_gain (bits 18+47..49) -> non-unit stub
     ssg = _patch_mp3_side_bits(raw5, 0, 18 + 47, 3, 5)
     with pytest.raises(Exception, match="subblock_gain"):
-        decode_mp3_imdct(media_of(5, ssg)).collect()
+        _decode_rows(decode_mp3_imdct, 5, ssg)
 
     # doc 4 granule 0 is long: forcing its window_switching_flag on
     # makes block_type read as 0 — forbidden by spec
     raw4 = make_mp3_imdct_bytes(4)
     ws0 = _patch_mp3_side_bits(raw4, 0, 18 + 33, 1, 1)
     with pytest.raises(Exception, match="forbidden"):
-        decode_mp3_imdct(media_of(4, ws0)).collect()
+        _decode_rows(decode_mp3_imdct, 4, ws0)
 
     # part2_3_length off -> exact-consumption failure
     bad_p23 = _patch_mp3_side_bits(raw5, 0, 18, 12, 1)
     with pytest.raises(Exception, match="consumed|overr|invalid"):
-        decode_mp3_imdct(media_of(5, bad_p23)).collect()
+        _decode_rows(decode_mp3_imdct, 5, bad_p23)
 
 
 def test_h264_multiref_decode_and_rejections(spark):
@@ -2089,7 +2114,7 @@ def test_mp3_sfb_short_rows_are_structurally_valid():
     assert all(r[:5] == rows[0][:5] for r in rows)
 
 
-def test_mp3_requant_short_boundaries(spark):
+def test_mp3_requant_short_boundaries():
     """Short-block requantization: round-trips, and the declared
     boundaries fire — a mixed_block_flag hits the split-layout stub,
     and block_type 0 under window switching rejects."""
@@ -2102,28 +2127,22 @@ def test_mp3_requant_short_boundaries(spark):
         make_mp3_rqs_bytes,
     )
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     raw = make_mp3_rqs_bytes(7)
-    ok = decode_mp3_requant(media_of(7, raw)).first()
+    ok = _decode_rows(decode_mp3_requant, 7, raw)[0]
     assert ok.n_granules == 2 and ok.n_nonzero > 0
 
     # mixed_block_flag is side bit 18+36 for granule 0
     mixed = _patch_mp3_side_bits(raw, 0, 18 + 36, 1, 1)
     with pytest.raises(Exception, match="mixed-block"):
-        decode_mp3_requant(media_of(7, mixed)).collect()
+        _decode_rows(decode_mp3_requant, 7, mixed)
 
     # block_type 0 under window switching is forbidden
     bt0 = _patch_mp3_side_bits(raw, 0, 18 + 34, 2, 0)
     with pytest.raises(Exception, match="forbidden"):
-        decode_mp3_requant(media_of(7, bt0)).collect()
+        _decode_rows(decode_mp3_requant, 7, bt0)
 
 
-def test_mp3_requant_exact_boundaries(spark):
+def test_mp3_requant_exact_boundaries():
     """General requantization: the derived Q12/Q12/Q14 tables match
     the float formulas to quantization error, round-trip decodes, and
     the declared boundaries fire — a gain outside the 198..222 band,
@@ -2145,36 +2164,30 @@ def test_mp3_requant_exact_boundaries(spark):
     assert gain_tab[210] == 4096 and gain_tab[214] == 8192
     assert sfhalf[0] == 16384 and sfhalf[2] == 8192
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     raw = make_mp3_rq_bytes(9)
-    ok = decode_mp3_requant(media_of(9, raw)).first()
+    ok = _decode_rows(decode_mp3_requant, 9, raw)[0]
     assert ok.n_granules == 2 and ok.n_nonzero > 0
 
     bad_gain = _patch_mp3_side_bits(raw, 0, 18 + 21, 8, 150)
     with pytest.raises(Exception, match="exact-Q12 band"):
-        decode_mp3_requant(media_of(9, bad_gain)).collect()
+        _decode_rows(decode_mp3_requant, 9, bad_gain)
 
     # preflag is side bit 18 + 12+9+8+4+1+15+4+3 = 18+56; setting it
     # now APPLIES Table B.6's pretab — the granule still decodes and
     # any line in a band with nonzero pretab shrinks (the exponent
     # grows), so the absolute sum must not increase and, with lines
     # above band 10 in this fixture, strictly decreases or holds
-    base_rows = decode_mp3_requant(media_of(9, raw)).collect()
+    base_rows = _decode_rows(decode_mp3_requant, 9, raw)
     pre = _patch_mp3_side_bits(raw, 0, 18 + 56, 1, 1)
-    pre_rows = decode_mp3_requant(media_of(9, pre)).collect()
+    pre_rows = _decode_rows(decode_mp3_requant, 9, pre)
     assert pre_rows[0].sum_rq_abs <= base_rows[0].sum_rq_abs
 
     bad_p23 = _patch_mp3_side_bits(raw, 0, 18, 12, 7)
     with pytest.raises(Exception, match="consumed|overr|invalid"):
-        decode_mp3_requant(media_of(9, bad_p23)).collect()
+        _decode_rows(decode_mp3_requant, 9, bad_p23)
 
 
-def test_mp3_preflag_on_start_block_requantizes_and_short_rejects(spark):
+def test_mp3_preflag_on_start_block_requantizes_and_short_rejects():
     """Preflag on a START block (window-switching type 1, which uses
     the LONG scalefactor layout) requantizes exactly with Table
     B.6's pretab — verified differentially against an in-process
@@ -2291,12 +2304,7 @@ def test_mp3_preflag_on_start_block_requantizes_and_short_rejects(spark):
 
     doc = 5
     raw, spectra = build(doc, 1, 1)  # START block + preflag
-    row = decode_mp3_requant(
-        spark.createDataFrame(
-            [(doc, raw, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-    ).first()
+    row = _decode_rows(decode_mp3_requant, doc, raw)[0]
     exp_signed = exp_abs = exp_nnz = 0
     for g, spec in spectra.items():
         sl1, sl2 = MP3_SLEN[(doc + g) % 16]
@@ -2321,33 +2329,18 @@ def test_mp3_preflag_on_start_block_requantizes_and_short_rejects(spark):
     # pretab really bites: band 11+ lines exist and the same stream
     # WITHOUT preflag lands a different absolute sum
     raw0, _ = build(doc, 1, 0)
-    row0 = decode_mp3_requant(
-        spark.createDataFrame(
-            [(doc, raw0, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-    ).first()
+    row0 = _decode_rows(decode_mp3_requant, doc, raw0)[0]
     assert row0.sum_rq_abs != row.sum_rq_abs
 
     # SHORT block + preflag: spec violation rejects
     with pytest.raises(Exception, match="illegal per 2.4.3.4"):
         raw2, _ = build(doc, 2, 1)
-        decode_mp3_requant(
-            spark.createDataFrame(
-                [(doc, raw2, "audio")],
-                "doc_id long, payload binary, kind string",
-            )
-        ).collect()
+        _decode_rows(decode_mp3_requant, doc, raw2)
     # and the untouched short fixture still decodes
-    decode_mp3_requant(
-        spark.createDataFrame(
-            [(doc, make_mp3_rqs_bytes(doc), "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-    ).collect()
+    _decode_rows(decode_mp3_requant, doc, make_mp3_rqs_bytes(doc))
 
 
-def test_mp3_requant_rejects_non_441_rates(spark):
+def test_mp3_requant_rejects_non_441_rates():
     """The exact-requantization walkers hardcode the 44.1 kHz Table
     B.8 rows; a 48 kHz frame header must REJECT loudly rather than
     silently banding with the wrong boundaries (round 14 — the
@@ -2363,12 +2356,6 @@ def test_mp3_requant_rejects_non_441_rates(spark):
         make_mp3_rq_bytes,
     )
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     for maker, op in (
         (make_mp3_rq_bytes, decode_mp3_requant),
         (make_mp3_ms_bytes, decode_mp3_requant_ms),
@@ -2377,7 +2364,7 @@ def test_mp3_requant_rejects_non_441_rates(spark):
         # header byte 2 bits 3:2 = sampling_frequency; 01 = 48 kHz
         raw[2] = (raw[2] & ~0x0C) | 0x04
         with pytest.raises(Exception, match="non-44.1 kHz"):
-            op(media_of(3, bytes(raw))).collect()
+            _decode_rows(op, 3, bytes(raw))
 
 
 def test_mp3_wide_p43_is_exact_over_the_full_escape_range():
@@ -2419,7 +2406,7 @@ def test_mp3_wide_p43_is_exact_over_the_full_escape_range():
         assert d == p43[v], (v, d, p43[v])
 
 
-def test_mp3_requant_escape_fixture_differential(spark):
+def test_mp3_requant_escape_fixture_differential():
     """The escape-requantization fixture round-trips: the decoded
     sums equal the values recomputed in-process from the documented
     spectrum closed forms (``mp3_rqe_spectrum``) and the derived
@@ -2474,12 +2461,7 @@ def test_mp3_requant_escape_fixture_differential(spark):
                 exp_nnz += 1
                 exp_pos += pos if v > 0 else -pos
 
-        row = decode_mp3_requant(
-            spark.createDataFrame(
-                [(doc, make_mp3_rqe_bytes(doc), "audio")],
-                "doc_id long, payload binary, kind string",
-            )
-        ).first()
+        row = _decode_rows(decode_mp3_requant, doc, make_mp3_rqe_bytes(doc))[0]
         assert row.n_granules == 2
         assert row.sum_rq_signed == exp_signed, doc
         assert row.sum_rq_abs == exp_abs, doc
@@ -2487,7 +2469,7 @@ def test_mp3_requant_escape_fixture_differential(spark):
         assert row.sum_pos_signed == exp_pos, doc
 
 
-def test_mp3_hufftables_fixture_boundaries(spark):
+def test_mp3_hufftables_fixture_boundaries():
     """The widened-table fixture rejects corruption at the exact
     sites: a region table_select re-pointed to the 16x16 table 13
     (shipped round 14) parses the written 8-bit-grid region with the
@@ -2501,38 +2483,28 @@ def test_mp3_hufftables_fixture_boundaries(spark):
     from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
     from open_source_etl_spark.multimodal.synth import make_mp3_ht_bytes
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     # doc 10 is a region-switching doc (doc % 5 = 0): all three
     # regions really dispatch, so region0's table (side-info bit 52)
     # can be re-pointed to the 16x16 table 13 — the written region
     # re-parses under t13's complete code tree, and the decoded sums
     # must DIVERGE from the unpatched decode (t13 codes consumed)
     tsel13 = _patch_mp3_side_bits(make_mp3_ht_bytes(10), 0, 52, 5, 13)
-    base_row = decode_mp3_maindata(
-        media_of(10, make_mp3_ht_bytes(10))
-    ).collect()[0].asDict()
-    t13_row = decode_mp3_maindata(
-        media_of(10, tsel13)
-    ).collect()[0].asDict()
+    base_row = vars(_decode_rows(decode_mp3_maindata, 10, make_mp3_ht_bytes(10))[0])
+    t13_row = vars(_decode_rows(decode_mp3_maindata, 10, tsel13)[0])
     assert t13_row != base_row, t13_row
 
     bad_p23 = bytearray(make_mp3_ht_bytes(7))
     bad_p23[7] ^= 0x04  # granule0 part2_3_length: off by one bit
     with pytest.raises(Exception, match="overran|mid-field"):
-        decode_mp3_maindata(media_of(7, bytes(bad_p23))).collect()
+        _decode_rows(decode_mp3_maindata, 7, bytes(bad_p23))
 
     a_to_b = bytearray(make_mp3_ht_bytes(0))
     a_to_b[13] |= 0x08  # granule0 count1table_select: A -> B
     with pytest.raises(Exception, match="overran|mid-field|invalid"):
-        decode_mp3_maindata(media_of(0, bytes(a_to_b))).collect()
+        _decode_rows(decode_mp3_maindata, 0, bytes(a_to_b))
 
 
-def test_mp3_wswitch_boundary_integrity(spark):
+def test_mp3_wswitch_boundary_integrity():
     """Window-switching enforcement after the B.8 rows landed:
     patching a short-block granule to block_type 1 (a start block —
     the LONG scalefactor layout) mis-slices part2 against the written
@@ -2547,24 +2519,18 @@ def test_mp3_wswitch_boundary_integrity(spark):
     from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
     from open_source_etl_spark.multimodal.synth import make_mp3_ws_bytes
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     # doc 1's slen pair makes the long 21-band layout a different bit
     # count than the written 36-value short partition
     start_block = _patch_mp3_side_bits(make_mp3_ws_bytes(1), 0, 52, 2, 1)
     with pytest.raises(Exception, match="overran|mid-field"):
-        decode_mp3_maindata(media_of(1, start_block)).collect()
+        _decode_rows(decode_mp3_maindata, 1, start_block)
 
     # the SECOND 5-bit table_select (bits 60-64): re-parsing that
     # region with t13's longer codes overruns part2_3_length and the
     # mid-field/accounting check rejects deterministically
     tsel13 = _patch_mp3_side_bits(make_mp3_ws_bytes(2), 0, 60, 5, 13)
     with pytest.raises(Exception, match="overran|mid-field|invalid|consumed"):
-        decode_mp3_maindata(media_of(2, tsel13)).collect()
+        _decode_rows(decode_mp3_maindata, 2, tsel13)
 
 
 def test_h264_gop_decode_rejects_corruption(spark):
@@ -3642,7 +3608,7 @@ def test_tiff_lzw_strips_decode(spark):
     assert row.mean_r == tr // (w * h)
 
 
-def test_mp3_short_block_boundaries(spark):
+def test_mp3_short_block_boundaries():
     """Short-block granule enforcement: a short-block stream whose
     scfsi bits are set raises (the spec forbids scalefactor reuse for
     block_type 2), and flipping mixed_block_flag on a pure-short
@@ -3653,21 +3619,15 @@ def test_mp3_short_block_boundaries(spark):
     from open_source_etl_spark.multimodal.decode import decode_mp3_maindata
     from open_source_etl_spark.multimodal.synth import make_mp3_sb_bytes
 
-    def media_of(payload):
-        return spark.createDataFrame(
-            [(3, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     raw = make_mp3_sb_bytes(3)
-    assert decode_mp3_maindata(media_of(raw)).first().n_frames == 3 + 3 % 4
+    assert _decode_rows(decode_mp3_maindata, 3, raw)[0].n_frames == 3 + 3 % 4
 
     # scfsi occupies side-info bits 14-17 (after 9 mdb + 5 private):
     # bit 14 is mask 0x02 of side-info byte 1 (frame header is 4 bytes)
     bad = bytearray(raw)
     bad[4 + 1] |= 0x02
     with pytest.raises(Exception, match="scfsi set on a short-block"):
-        decode_mp3_maindata(media_of(bytes(bad))).collect()
+        _decode_rows(decode_mp3_maindata, 3, bytes(bad))
 
     # granule 0's fields start at bit 18; part2_3(12) + big_values(9)
     # + global_gain(8) + sfc(4) + wsf(1) + block_type(2) put
@@ -3678,12 +3638,7 @@ def test_mp3_short_block_boundaries(spark):
     mixed = bytearray(make_mp3_sb_bytes(4))
     mixed[4 + 6] |= 0x02
     with pytest.raises(Exception, match="overran|mid-field"):
-        decode_mp3_maindata(
-            spark.createDataFrame(
-                [(4, bytes(mixed), "audio")],
-                "doc_id long, payload binary, kind string",
-            )
-        ).collect()
+        _decode_rows(decode_mp3_maindata, 4, bytes(mixed))
 
 
 def test_jpeg_progressive_roundtrip_and_rejections():
@@ -5315,7 +5270,7 @@ def test_mp3_intensity_stereo_and_pretab():
     )
 
 
-def test_mp3_requant_ms_stereo_boundaries(spark):
+def test_mp3_requant_ms_stereo_boundaries():
     """MS joint-stereo requantization: the matrix constant derives
     identically to the float formula, the round-trip decodes, and the
     boundaries fire — intensity-stereo mode_extension, a plain-stereo
@@ -5331,14 +5286,8 @@ def test_mp3_requant_ms_stereo_boundaries(spark):
 
     assert int(math.floor(16384 / math.sqrt(2) + 0.5)) == 11585
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "audio")],
-            "doc_id long, payload binary, kind string",
-        )
-
     raw = make_mp3_ms_bytes(4)
-    ok = decode_mp3_requant_ms(media_of(4, raw)).first()
+    ok = _decode_rows(decode_mp3_requant_ms, 4, raw)[0]
     assert ok.n_granules == 2 and ok.n_nonzero_lines > 0
     # the matrix really mixes: left/right sums differ
     assert ok.sum_left_signed != ok.sum_right_signed
@@ -5347,13 +5296,13 @@ def test_mp3_requant_ms_stereo_boundaries(spark):
     intensity = bytearray(raw)
     intensity[3] = (intensity[3] & 0xCF) | (1 << 4)
     with pytest.raises(Exception, match="intensity"):
-        decode_mp3_requant_ms(media_of(4, bytes(intensity))).collect()
+        _decode_rows(decode_mp3_requant_ms, 4, bytes(intensity))
 
     # plain stereo (mode 00) -> the walker needs joint stereo
     plain = bytearray(raw)
     plain[3] &= 0x3F
     with pytest.raises(Exception, match="joint-stereo"):
-        decode_mp3_requant_ms(media_of(4, bytes(plain))).collect()
+        _decode_rows(decode_mp3_requant_ms, 4, bytes(plain))
 
     # corrupt the first granule-channel's part2_3_length (side-info
     # bits 20..31 after 9 main_data_begin + 3 private + 8 scfsi)
@@ -5362,7 +5311,7 @@ def test_mp3_requant_ms_stereo_boundaries(spark):
     word ^= 1 << (256 - 20 - 12)
     bad[4:36] = word.to_bytes(32, "big")
     with pytest.raises(Exception, match="consumed|overr|invalid"):
-        decode_mp3_requant_ms(media_of(4, bytes(bad))).collect()
+        _decode_rows(decode_mp3_requant_ms, 4, bytes(bad))
 
 
 def test_png_colortypes_roundtrip_and_rejections():
@@ -5830,7 +5779,7 @@ def test_jpeg_progressive_restart_rejections():
         jpeg_decode_progressive(doc, bytes(wrong))
 
 
-def test_mp3_requant_wide_magnitudes(spark):
+def test_mp3_requant_wide_magnitudes():
     """The wide requant fixture genuinely carries magnitudes 8..15
     (unreachable through the 8x8 tables), and the escape-territory
     guard still fires above 15."""
@@ -5854,13 +5803,6 @@ def test_mp3_requant_wide_magnitudes(spark):
     assert len(p43) == 8207  # full 13-linbits escape range, round 14
     for v in range(16):
         assert p43[v] == int(math.floor(4096 * v ** (4 / 3) + 0.5))
-
-
-def _decode_one(dec, doc, raw):
-    """``dec``'s single output row for one payload, by column name,
-    straight from its row function (no Spark)."""
-    (row,) = dec.factory()(doc, raw)
-    return SimpleNamespace(**dict(zip(dec.columns, (doc, *row))))
 
 
 def _counting_make(acc):
