@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import io
 import struct
+from itertools import groupby
 import wave
 import zlib
 
@@ -1557,6 +1558,12 @@ class _BitPacker:
             nbits = 0
         self.nbits = nbits
 
+    def repeat(self, value: int, n: int, k: int) -> None:
+        """``k`` copies of the low n bits of ``value``, in one write."""
+        if n and k:
+            ones = ((1 << n * k) - 1) // ((1 << n) - 1)  # bit 0 of each copy
+            self.u((value & ((1 << n) - 1)) * ones, n * k)
+
     def tell(self) -> int:
         """Bits written so far."""
         return len(self._done) * 8 + self.nbits
@@ -3056,9 +3063,11 @@ def _mp3_put_scalefacs(w: _BitPacker, sfc: int, part: tuple, sf_a, sf_b) -> None
     for every scalefactor of the group, or a function of the
     scalefactor's index within it."""
     for slen, n, sf in zip(MP3_SLEN[sfc], part, (sf_a, sf_b)):
-        if slen:
+        if not callable(sf):
+            w.repeat(sf, slen, n)
+        elif slen:
             for i in range(n):
-                w.u(sf(i) if callable(sf) else sf, slen)
+                w.u(sf(i), slen)
 
 
 def _mp3_put_pairs(w: _BitPacker, pairs, sign_base: int) -> None:
@@ -3072,23 +3081,27 @@ def _mp3_put_pairs(w: _BitPacker, pairs, sign_base: int) -> None:
 
     enc = _mp3_ht_enc()[0]
     u = w.u
-    for q, (t, x, y) in enumerate(pairs):
+    for q, (t, x, y) in enumerate(pairs, sign_base):
         if not t:
             continue
-        # ids 17-23 share table 16's code matrix and 25-31 table 24's
-        # (only linbits differ)
-        cx, cy = min(x, 15), min(y, 15)
-        hlen, hcode = enc[t if t < 16 else (16 if t < 24 else 24)][(cx, cy)]
-        u(hcode, hlen)
-        lb = MP3_LINBITS.get(t, 0)
-        if lb and cx == 15:
-            u(x - 15, lb)
+        if t < 16:  # no linbits
+            n, v = enc[t][(x, y)]
+            lb = 0
+        else:
+            # ids 17-23 share table 16's code matrix and 25-31 table
+            # 24's (only linbits differ)
+            n, v = enc[16 if t < 24 else 24][(min(x, 15), min(y, 15))]
+            lb = MP3_LINBITS[t]
+        # the code and the fields after it go out in one write
+        if lb and x >= 15:
+            v, n = (v << lb) | (x - 15), n + lb
         if x:
-            u((sign_base + q) % 2, 1)
-        if lb and cy == 15:
-            u(y - 15, lb)
+            v, n = (v << 1) | (q & 1), n + 1
+        if lb and y >= 15:
+            v, n = (v << lb) | (y - 15), n + lb
         if y:
-            u((sign_base + q + 1) % 2, 1)
+            v, n = (v << 1) | (~q & 1), n + 1
+        u(v, n)
 
 
 def _mp3_put_quads(w: _BitPacker, quads, table_a: bool = False) -> None:
@@ -3097,15 +3110,12 @@ def _mp3_put_quads(w: _BitPacker, quads, table_a: bool = False) -> None:
     pattern or table B's fixed 4 complemented bits, then one sign bit
     ``neg`` per nonzero value."""
     c1a = _mp3_ht_enc()[1] if table_a else None
-    u = w.u
-    for pattern, neg in quads:
-        if table_a:
-            hlen, hcode = c1a[pattern]
-            u(hcode, hlen)
-        else:
-            u(pattern ^ 0xF, 4)
+    for (pattern, neg), run in groupby(quads):
+        n, v = c1a[pattern] if table_a else (4, pattern ^ 0xF)
         nz = bin(pattern).count("1")
-        u(((1 << nz) - 1) if neg else 0, nz)
+        # a run of equal quadruples goes out in one write
+        w.repeat((v << nz) | (((1 << nz) - 1) if neg else 0), n + nz,
+                 sum(1 for _ in run))
 
 
 def _mp3_c1_quads(doc_id: int, g: int, n: int) -> list[tuple[int, int]]:
