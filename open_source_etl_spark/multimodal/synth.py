@@ -2953,10 +2953,10 @@ MP3_SLEN = (
 # ---- MPEG-1 Layer III frame writer ---------------------------------
 # The make_mp3_*_bytes fixtures below write their frames through these
 # (the walker fixture make_mp3_bytes, with its CRC and VBR padding,
-# keeps its own loop): the granule coders append one granule's main
-# data to a _BitPacker and return nothing, the caller takes
-# part2_3_length from ``tell()``, and ``_mp3_frame`` lays out header,
-# side info and zero-filled main data.
+# keeps its own loop): the granule coders (``_mp3_put_scalefacs``,
+# ``_mp3_put_pairs``, ``_mp3_put_quads``) append a granule's regions to
+# a _BitPacker, the caller takes part2_3_length from ``tell()``, and
+# ``_mp3_frame`` lays out header, side info and zero-filled main data.
 
 # Header byte 3 per channel mode (ISO 11172-3 2.4.1.3): mode(2)
 # mode_extension(2) copyright(1) original(1) emphasis(2).
