@@ -3890,7 +3890,7 @@ def test_h264_cavlc_completion_tables_are_valid():
         check(list(col))
 
 
-def test_h264_cavlc_decode_boundaries(spark):
+def test_h264_cavlc_decode_boundaries():
     """CAVLC corruption handling: corrupting bytes inside a slice's
     entropy data desyncs the coeff_token/level/total_zeros/run_before
     walk and raises (invalid code, range violation, or exact-
@@ -3902,14 +3902,8 @@ def test_h264_cavlc_decode_boundaries(spark):
         make_h264_cavlc_bytes,
     )
 
-    def media_of(doc, payload):
-        return spark.createDataFrame(
-            [(doc, payload, "video")],
-            "doc_id long, payload binary, kind string",
-        )
-
     raw = make_h264_cavlc_bytes(1)
-    ok = decode_h264_cavlc(media_of(1, raw)).first()
+    ok = _decode_one(decode_h264_cavlc, 1, raw)
     assert ok.n_frames == 2 and ok.n_mbs == 4
 
     # corrupting bytes inside the first slice's entropy data must
@@ -3921,7 +3915,39 @@ def test_h264_cavlc_decode_boundaries(spark):
         corrupt = bytearray(raw)
         corrupt[slice_at + 4 + off] ^= 0xFF
         with pytest.raises(Exception):
-            decode_h264_cavlc(media_of(1, bytes(corrupt))).collect()
+            _decode_rows(decode_h264_cavlc, 1, bytes(corrupt))
+
+
+def test_h264_cavlc_corruption_golden():
+    """Raise parity of the CAVLC decoder: for doc_ids 0-63, every byte
+    of the first IDR slice's payload is flipped (XOR 0xFF) in turn and
+    the outcome — the decoded rows, or the exception's type and
+    message — is pinned by one sha256 over all 17,650 outcomes.  Any
+    change to which error a corrupt stream raises, or to the sums a
+    corrupt-but-parseable stream yields, moves the hash."""
+    import hashlib
+
+    from open_source_etl_spark.multimodal.decode import decode_h264_cavlc
+    from open_source_etl_spark.multimodal.synth import make_h264_cavlc_bytes
+
+    row_fn = decode_h264_cavlc.factory()
+    out = []
+    for doc in range(64):
+        raw = make_h264_cavlc_bytes(doc)
+        start = raw.index(b"\x00\x00\x01\x65") + 4  # after the NAL header
+        end = raw.find(b"\x00\x00\x01", start)
+        for off in range(start, len(raw) if end < 0 else end):
+            bad = bytearray(raw)
+            bad[off] ^= 0xFF
+            try:
+                got = repr(list(row_fn(doc, bytes(bad))))
+            except Exception as e:
+                got = f"{type(e).__name__}: {e}"
+            out.append(got)
+    assert len(out) == 17650
+    assert hashlib.sha256("\n".join(out).encode()).hexdigest() == (
+        "6ce57ec257f6be83185fc0ee7fdbf3c4854baa3db9408e7ea81f4eecab674763"
+    )
 
 
 def test_tiff_predictor2_decodes_and_bounds(spark):
