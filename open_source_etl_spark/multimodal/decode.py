@@ -1846,8 +1846,12 @@ H264_META_SCHEMA = (
 
 
 class _H264BitReader:
-    """MSB-first RBSP bit reader (ITU-T H.264 7.2/9.1); raises on
-    exhaustion so a truncated SPS rejects instead of mis-parsing."""
+    """MSB-first RBSP bit reader (ITU-T H.264 7.2/9.1) for the
+    fixed-width and exp-Golomb fields; raises on exhaustion so a
+    truncated SPS rejects instead of mis-parsing.  CAVLC residual
+    blocks do not go through these methods: ``_cavlc_residual`` reads
+    ``data`` from ``pos`` through its own integer window (same bits,
+    same raises) and advances ``pos`` past the block."""
 
     def __init__(self, data: bytes, doc_id: int) -> None:
         self.data = data
@@ -1909,61 +1913,6 @@ class _H264BitReader:
     def se(self) -> int:
         k = self.ue()
         return (k + 1) // 2 if k % 2 else -(k // 2)
-
-    def vlc(self, table: dict, max_len: int, what: str):
-        """Canonical-walk VLC decode against a {(length, code): value}
-        table — the inlined form of the per-bit ``u(1)`` loop every
-        CAVLC table walk used (same values, same raises: 'truncated
-        bitstream' at EOF, 'invalid <what> code' past max_len)."""
-        data = self.data
-        pos = self.pos
-        limit = self.limit
-        get = table.get
-        code = 0
-        length = 0
-        while True:
-            if pos >= limit:
-                self.pos = pos
-                raise ValueError(
-                    f"doc {self.doc_id}: truncated bitstream"
-                )
-            code = (code << 1) | ((data[pos >> 3] >> (7 - (pos & 7))) & 1)
-            pos += 1
-            length += 1
-            hit = get((length, code))
-            if hit is not None:
-                self.pos = pos
-                return hit
-            if length >= max_len:
-                self.pos = pos
-                raise ValueError(
-                    f"doc {self.doc_id}: invalid {what} code"
-                )
-
-    def unary_capped(self, cap: int, what: str) -> int:
-        """Count leading zero bits (consuming the terminating 1) with
-        the u(1)-loop's exact raise order: 'truncated bitstream' when
-        the scan hits EOF first, '<what> overflow' once more than
-        ``cap`` zeros have been consumed."""
-        data = self.data
-        pos = self.pos
-        limit = self.limit
-        zeros = 0
-        while True:
-            if pos >= limit:
-                self.pos = pos
-                raise ValueError(
-                    f"doc {self.doc_id}: truncated bitstream"
-                )
-            bit = (data[pos >> 3] >> (7 - (pos & 7))) & 1
-            pos += 1
-            if bit:
-                self.pos = pos
-                return zeros
-            zeros += 1
-            if zeros > cap:
-                self.pos = pos
-                raise ValueError(f"doc {self.doc_id}: {what} overflow")
 
 
 def parse_sps(doc_id: int, rbsp: bytes) -> tuple[int, int, int, int]:
@@ -2515,6 +2464,116 @@ H264_TOTAL_ZEROS_CHROMA_DC: dict[int, dict[tuple[int, int], int]] = {
 }
 
 
+def _cavlc_level_step(level_code: int, suffix_len: int) -> tuple[int, int]:
+    """(level, next suffixLength) for one levelCode (9.2.2.1)."""
+    mag = (level_code >> 1) + 1
+    suffix_len = suffix_len or 1
+    if suffix_len < 6 and mag > 3 << (suffix_len - 1):
+        suffix_len += 1
+    return (-mag if level_code & 1 else mag), suffix_len
+
+
+def _cavlc_level_codes() -> dict:
+    """Every level code short of the escapes (level_prefix < 14 at
+    suffixLength 0, < 15 above), as {(first, suffixLength): [(level,
+    code_length, code, next suffixLength), ...]}.  ``first`` marks the
+    first non-TrailingOnes level of a block with TrailingOnes < 3,
+    whose levelCode is coded 2 lower (9.2.2.1)."""
+    out = {}
+    for first in (0, 1):
+        for suffix_len in range(7):
+            rows = []
+            for prefix in range(15 if suffix_len else 14):
+                for suffix in range(1 << suffix_len):
+                    level, nxt = _cavlc_level_step(
+                        (prefix << suffix_len) + suffix + 2 * first,
+                        suffix_len,
+                    )
+                    rows.append((
+                        level, prefix + 1 + suffix_len,
+                        (1 << suffix_len) | suffix, nxt,
+                    ))
+            out[first, suffix_len] = rows
+    return out
+
+
+# Peek-LUT forms of the CAVLC code tables (the ``_mp3_bv_lut`` scheme):
+# a K-bit window, K the table's longest code, indexes a list whose slot
+# holds (code_length, *value) for the one code that prefixes it, or
+# None for the unused all-zeros slot of an incomplete column.  Levels
+# use an 8-bit window per (first, suffixLength) holding (code_length,
+# level, next suffixLength); longer level codes miss (None) and decode
+# through level_prefix.  Built once per process from the H264_* dicts;
+# worker reuse keeps them.
+_CAVLC_LUTS: tuple | None = None
+_CAVLC_LEVEL_BITS = 8
+
+
+def _cavlc_lut(table: dict) -> tuple[list, int]:
+    k = max(ln for ln, _ in table)
+    lut: list = [None] * (1 << k)
+    for (ln, code), val in table.items():
+        span = 1 << (k - ln)
+        entry = (ln, *val) if isinstance(val, tuple) else (ln, val)
+        lut[code * span : (code + 1) * span] = [entry] * span
+    return lut, k
+
+
+def _cavlc_luts() -> tuple:
+    """(coeff_token by nC + 1 for nC in -1..7, total_zeros by
+    TotalCoeff, chroma DC total_zeros by TotalCoeff, run_before by
+    zerosLeft 0..15, levels by [first][suffixLength]) as peek LUTs."""
+    global _CAVLC_LUTS
+    if _CAVLC_LUTS is None:
+        nc0, nc2, nc4 = (
+            _cavlc_lut(t) for t in (
+                H264_COEFF_TOKEN_NC0, H264_COEFF_TOKEN_NC2,
+                H264_COEFF_TOKEN_NC4,
+            )
+        )
+        rb = {zl: _cavlc_lut(col) for zl, col in H264_RUN_BEFORE.items()}
+        k = _CAVLC_LEVEL_BITS
+        levels: list = [[None] * 7, [None] * 7]
+        for (first, suffix_len), rows in _cavlc_level_codes().items():
+            lut: list = [None] * (1 << k)
+            for level, ln, code, nxt in rows:
+                if ln <= k:
+                    span = 1 << (k - ln)
+                    lut[code * span : (code + 1) * span] = [
+                        (ln, level, nxt)
+                    ] * span
+            levels[first][suffix_len] = lut
+        _CAVLC_LUTS = (
+            [_cavlc_lut(H264_COEFF_TOKEN_CHROMA_DC),
+             nc0, nc0, nc2, nc2, nc4, nc4, nc4, nc4],
+            {tc: _cavlc_lut(col) for tc, col in H264_TOTAL_ZEROS.items()},
+            {
+                tc: _cavlc_lut(col)
+                for tc, col in H264_TOTAL_ZEROS_CHROMA_DC.items()
+            },
+            [None] + [rb[min(zl, 7)] for zl in range(1, 16)],
+            levels,
+        )
+    return _CAVLC_LUTS
+
+
+# TrailingOnes levels by (1 << t1) | sign bits, a set bit being -1
+# (slot 0 unused)
+_CAVLC_T1 = [()] + [
+    tuple(-1 if (s >> (t1 - 1 - i)) & 1 else 1 for i in range(t1))
+    for t1 in range(4) for s in range(1 << t1)
+]
+# Bytes of RBSP one block can touch: coeff_token 16 bits, 3 sign bits,
+# 16 levels of at most 33 prefix + 29 suffix bits, total_zeros 9 bits
+# and 15 run_before codes of 11 bits make 1,185; the 33-bit
+# level_prefix peek and a start 7 bits into a byte stay under 1,280.
+_CAVLC_WINDOW = 160
+
+
+def _truncated(doc_id: int) -> ValueError:
+    return ValueError(f"doc {doc_id}: truncated bitstream")
+
+
 def _cavlc_residual(
     reader: "_H264BitReader", n_c: int, max_coeff: int, doc_id: int
 ) -> list[int]:
@@ -2528,63 +2587,106 @@ def _cavlc_residual(
     validated COMPLETE prefix code over its 17 - tc legal values),
     and the run_before walk (Table 9-10) with zerosLeft accounting —
     runs stop being coded the moment zerosLeft hits 0, exactly as
-    9.2.3 infers them."""
+    9.2.3 infers them.
+
+    The block decodes from one integer over ``_CAVLC_WINDOW`` bytes of
+    ``reader.data``, zero-padded past its end: each VLC is one peek
+    plus one LUT index (levels too, up to ``_CAVLC_LEVEL_BITS`` bits;
+    a longer level takes level_prefix from the ``bit_length`` of one
+    33-bit peek), and the sign bits are one read.  A matched code's
+    length is checked against the end afterwards (the ``_mp3_peek``
+    contract), so "truncated bitstream", "invalid <what> code" and
+    "level_prefix overflow" raise exactly where a bit-at-a-time walk
+    that checks the end before each bit would raise them."""
+    ct_luts, tz_luts, tzc_luts, rb_luts, level_luts = (
+        _CAVLC_LUTS or _cavlc_luts()
+    )
+    pos = reader.pos
+    b0 = pos >> 3
+    chunk = reader.data[b0 : b0 + _CAVLC_WINDOW]
+    top = _CAVLC_WINDOW << 3
+    win = int.from_bytes(chunk, "big") << (top - (len(chunk) << 3))
+    p = pos & 7
+    lim = reader.limit - (b0 << 3)
     if n_c >= 8:
-        code = reader.u(6)
+        if p + 6 > lim:
+            raise _truncated(doc_id)
+        code = (win >> (top - p - 6)) & 63
+        p += 6
         if code == 0b000011:
             total, t1 = 0, 0
         else:
             total, t1 = (code >> 2) + 1, code & 3
     else:
-        table = (
-            H264_COEFF_TOKEN_CHROMA_DC if n_c < 0
-            else H264_COEFF_TOKEN_NC0 if n_c < 2
-            else H264_COEFF_TOKEN_NC2 if n_c < 4
-            else H264_COEFF_TOKEN_NC4
-        )
-        total, t1 = reader.vlc(table, 16, "coeff_token")
+        lut, k = ct_luts[n_c + 1]
+        e = lut[(win >> (top - p - k)) & ((1 << k) - 1)]
+        if e is None:  # no code within the walk's 16 bits
+            raise _truncated(doc_id) if p + 16 > lim else ValueError(
+                f"doc {doc_id}: invalid coeff_token code"
+            )
+        ln, total, t1 = e
+        p += ln
+        if p > lim:
+            raise _truncated(doc_id)
     if t1 > total or total > max_coeff:
         raise ValueError(
             f"doc {doc_id}: coeff_token ({total},{t1}) out of range"
         )
-    levels = []
-    for _ in range(t1):
-        levels.append(-1 if reader.u(1) else 1)
+    # From here to the end of the levels, a read past the end raises
+    # nothing but "truncated bitstream", so one check after the levels
+    # stands for a check at every read.
+    levels = [
+        *_CAVLC_T1[(1 << t1) | ((win >> (top - p - t1)) & ((1 << t1) - 1))]
+    ]
+    p += t1
     suffix_len = 1 if total > 10 and t1 < 3 else 0
-    for i in range(t1, total):
-        prefix = reader.unary_capped(32, "level_prefix")
-        if prefix == 14 and suffix_len == 0:
-            suffix_size = 4
-        elif prefix >= 15:
-            suffix_size = prefix - 3
+    first = 1 if t1 < 3 else 0  # the first non-T1 level skips +-1
+    k = _CAVLC_LEVEL_BITS
+    for _ in range(total - t1):
+        e = level_luts[first][suffix_len][
+            (win >> (top - p - k)) & ((1 << k) - 1)
+        ]
+        if e is None:  # a code longer than k bits: level_prefix first
+            v = (win >> (top - p - 33)) & 0x1FFFFFFFF
+            if not v:  # 33 zeros, or the end, before the prefix's 1
+                raise _truncated(doc_id) if p + 33 > lim else ValueError(
+                    f"doc {doc_id}: level_prefix overflow"
+                )
+            prefix = 33 - v.bit_length()
+            p += prefix + 1
+            if prefix < 14:
+                size = suffix_len
+            else:  # the 4-bit suffix at suffixLength 0, and escapes
+                size = (suffix_len or 4) if prefix == 14 else prefix - 3
+            level_code = (min(15, prefix) << suffix_len) + 2 * first + (
+                (win >> (top - p - size)) & ((1 << size) - 1)
+            )
+            p += size
+            if prefix >= 15 and suffix_len == 0:
+                level_code += 15
+            if prefix >= 16:
+                level_code += (1 << (prefix - 3)) - 4096
+            level, suffix_len = _cavlc_level_step(level_code, suffix_len)
         else:
-            suffix_size = suffix_len
-        level_code = min(15, prefix) << suffix_len
-        if suffix_size:
-            level_code += reader.u(suffix_size)
-        if prefix >= 15 and suffix_len == 0:
-            level_code += 15
-        if prefix >= 16:
-            level_code += (1 << (prefix - 3)) - 4096
-        if i == t1 and t1 < 3:
-            level_code += 2
-        if level_code % 2 == 0:
-            level = (level_code + 2) >> 1
-        else:
-            level = -((level_code + 1) >> 1)
+            ln, level, suffix_len = e
+            p += ln
         levels.append(level)
-        if suffix_len == 0:
-            suffix_len = 1
-        if abs(level) > (3 << (suffix_len - 1)) and suffix_len < 6:
-            suffix_len += 1
+        first = 0
+    if p > lim:
+        raise _truncated(doc_id)
     if 0 < total < max_coeff:
         # total_zeros (9.2.3) through the TotalCoeff-indexed column —
         # the chroma DC block (maxNumCoeff 4) has its own Table 9-9(a)
-        tz_table = (
-            H264_TOTAL_ZEROS_CHROMA_DC[total] if max_coeff == 4
-            else H264_TOTAL_ZEROS[total]
-        )
-        tz = reader.vlc(tz_table, 10, "total_zeros")
+        lut, k = (tzc_luts if max_coeff == 4 else tz_luts)[total]
+        e = lut[(win >> (top - p - k)) & ((1 << k) - 1)]
+        if e is None:  # no code within the walk's 10 bits
+            raise _truncated(doc_id) if p + 10 > lim else ValueError(
+                f"doc {doc_id}: invalid total_zeros code"
+            )
+        ln, tz = e
+        p += ln
+        if p > lim:
+            raise _truncated(doc_id)
         if tz > max_coeff - total:
             raise ValueError(
                 f"doc {doc_id}: total_zeros {tz} exceeds the "
@@ -2593,18 +2695,26 @@ def _cavlc_residual(
         # run_before (9.2.3): coded for all but the last coefficient,
         # and only while zeros remain to distribute
         zeros_left = tz
-        for _i in range(total - 1):
+        for _ in range(total - 1):
             if zeros_left <= 0:
                 break
-            run = reader.vlc(
-                H264_RUN_BEFORE[min(zeros_left, 7)], 11, "run_before"
-            )
+            lut, k = rb_luts[zeros_left]
+            e = lut[(win >> (top - p - k)) & ((1 << k) - 1)]
+            if e is None:  # no code within the walk's 11 bits
+                raise _truncated(doc_id) if p + 11 > lim else ValueError(
+                    f"doc {doc_id}: invalid run_before code"
+                )
+            ln, run = e
+            p += ln
+            if p > lim:
+                raise _truncated(doc_id)
             if run > zeros_left:
                 raise ValueError(
                     f"doc {doc_id}: run_before {run} exceeds "
                     f"zerosLeft {zeros_left}"
                 )
             zeros_left -= run
+    reader.pos = (b0 << 3) + p
     return levels
 
 
@@ -2749,20 +2859,20 @@ def decode_h264_cavlc():
                         )
                     r.se()  # mb_qp_delta
 
+                    # n_t1 counts the +-1 levels among each block's
+                    # first three
                     dc = _cavlc_residual(r, n_c(m, 0), 16, doc_id)
                     sum_dc += sum(dc)
-                    sum_dc_abs += sum(abs(v) for v in dc)
-                    n_t1 += sum(1 for v in dc[:3] if abs(v) == 1)
+                    sum_dc_abs += sum(map(abs, dc))
+                    n_t1 += dc[:3].count(1) + dc[:3].count(-1)
                     for blk in range(16):
                         ac = _cavlc_residual(
                             r, n_c(m, blk), 15, doc_id
                         )
                         nzc[(m, blk)] = len(ac)
                         sum_ac += sum(ac)
-                        sum_ac_abs += sum(abs(v) for v in ac)
-                        n_t1 += sum(
-                            1 for v in ac[:3] if abs(v) == 1
-                        )
+                        sum_ac_abs += sum(map(abs, ac))
+                        n_t1 += ac[:3].count(1) + ac[:3].count(-1)
                     # chroma residuals (7.3.5.3.3 ordering): both
                     # components' DC blocks, then both components'
                     # AC blocks when cbp_chroma == 2
@@ -2770,10 +2880,8 @@ def decode_h264_cavlc():
                         for _comp in range(2):
                             cdc = _cavlc_residual(r, -1, 4, doc_id)
                             sum_cdc += sum(cdc)
-                            sum_cdc_abs += sum(abs(v) for v in cdc)
-                            n_t1 += sum(
-                                1 for v in cdc[:3] if abs(v) == 1
-                            )
+                            sum_cdc_abs += sum(map(abs, cdc))
+                            n_t1 += cdc[:3].count(1) + cdc[:3].count(-1)
                     for comp in range(2):
                         for blk in range(4):
                             if cbp_chroma == 2:
@@ -2782,12 +2890,9 @@ def decode_h264_cavlc():
                                     doc_id,
                                 )
                                 sum_cac += sum(cac)
-                                sum_cac_abs += sum(
-                                    abs(v) for v in cac
-                                )
-                                n_t1 += sum(
-                                    1 for v in cac[:3]
-                                    if abs(v) == 1
+                                sum_cac_abs += sum(map(abs, cac))
+                                n_t1 += (
+                                    cac[:3].count(1) + cac[:3].count(-1)
                                 )
                                 cnzc[(m, comp, blk)] = len(cac)
                             else:

@@ -1946,54 +1946,51 @@ def _cavlc_write_block(
     suffix-length-adaptive level codes, and — for partial blocks —
     the per-TotalCoeff total_zeros column code plus the run_before
     fields (coded only while zerosLeft > 0, mirroring the decoder's
-    9.2.3 accounting).  ``enc`` maps 0/2/4 to the inverted
-    coeff_token columns, "tz" to the column-indexed total_zeros
-    encoders and "rb" to the zerosLeft-indexed run_before
-    encoders."""
+    9.2.3 accounting).  ``enc`` (``_cavlc_encoders``) maps "ct" to
+    the inverted coeff_token columns by nC + 1, "tz" and "tzc" to the
+    TotalCoeff-indexed total_zeros encoders, "rb" to the run_before
+    encoders by zerosLeft and "lv" to the level encoders by [first
+    non-TrailingOnes level][suffixLength].  The block's fields
+    accumulate in one integer (``acc``, ``n`` bits) that goes to ``w``
+    in one write."""
     total = len(levels)
-    t1 = 0
-    while t1 < min(3, total) and abs(levels[t1]) == 1:
+    t1 = signs = 0
+    for v in levels[:3]:
+        if v != 1 and v != -1:
+            break
         t1 += 1
+        signs = (signs << 1) | (v < 0)
     if n_c >= 8:  # FLC: 4 bits TotalCoeff-1, 2 bits TrailingOnes
-        code = 0b000011 if total == 0 else ((total - 1) << 2) | t1
-        w.u(code, 6)
+        acc = 0b000011 if total == 0 else ((total - 1) << 2) | t1
+        n = 6
     else:
-        col = -1 if n_c < 0 else 0 if n_c < 2 else 2 if n_c < 4 else 4
-        length, code = enc[col][(total, t1)]
-        w.u(code, length)
-    for i in range(t1):
-        w.u(1 if levels[i] < 0 else 0, 1)
+        n, acc = enc["ct"][n_c + 1][(total, t1)]
+    acc = (acc << t1) | signs
+    n += t1
     suffix_len = 1 if total > 10 and t1 < 3 else 0
-    for i in range(t1, total):
-        v = levels[i]
-        level_code = 2 * (abs(v) - 1) + (0 if v > 0 else 1)
-        if i == t1 and t1 < 3:
-            level_code -= 2
-        if level_code < (15 << suffix_len) and not (
-            suffix_len == 0 and level_code >= 14
-        ):
-            prefix = level_code >> suffix_len
-            w.u(0, prefix)
-            w.u(1, 1)
-            if suffix_len:
-                w.u(level_code & ((1 << suffix_len) - 1), suffix_len)
-        else:  # pragma: no cover - fixture magnitudes never escape
+    first = 1 if t1 < 3 else 0  # the first non-T1 level skips +-1
+    level_codes = enc["lv"]
+    for v in levels[t1:]:
+        e = level_codes[first][suffix_len].get(v)
+        if e is None:  # pragma: no cover - fixtures never escape
             raise ValueError("level escape codes not exercised")
-        if suffix_len == 0:
-            suffix_len = 1
-        if abs(v) > (3 << (suffix_len - 1)) and suffix_len < 6:
-            suffix_len += 1
+        length, code, suffix_len = e
+        acc = (acc << length) | code
+        n += length
+        first = 0
     if total_zeros is not None:
-        tz_cols = enc["tzc"] if n_c < 0 else enc["tz"]
-        length, code = tz_cols[total][total_zeros]
-        w.u(code, length)
+        length, code = enc["tzc" if n_c < 0 else "tz"][total][total_zeros]
+        acc = (acc << length) | code
+        n += length
         zeros_left = total_zeros
         for r in runs or []:
             if zeros_left <= 0:
                 break
-            length, code = enc["rb"][min(zeros_left, 7)][r]
-            w.u(code, length)
+            length, code = enc["rb"][zeros_left][r]
+            acc = (acc << length) | code
+            n += length
             zeros_left -= r
+    w.u(acc, n)
 
 
 def h264_cavlc_idr_rbsp(
@@ -2124,41 +2121,66 @@ def h264_cavlc_idr_rbsp(
     return w.to_bytes()
 
 
+_CAVLC_ENC: dict | None = None
+
+
+def _cavlc_encoders() -> dict:
+    """The ``enc`` map of ``_cavlc_write_block``: the decoder's
+    validated CAVLC tables inverted to value -> (length, code), so the
+    spec data has one source of truth in the repo.  Built once per
+    process."""
+    global _CAVLC_ENC
+    if _CAVLC_ENC is None:
+        from .decode import (
+            H264_COEFF_TOKEN_CHROMA_DC,
+            H264_COEFF_TOKEN_NC0,
+            H264_COEFF_TOKEN_NC2,
+            H264_COEFF_TOKEN_NC4,
+            H264_RUN_BEFORE,
+            H264_TOTAL_ZEROS,
+            H264_TOTAL_ZEROS_CHROMA_DC,
+            _cavlc_level_codes,
+        )
+
+        def inverted(table: dict) -> dict:
+            return {val: lc for lc, val in table.items()}
+
+        nc0, nc2, nc4 = (
+            inverted(t) for t in (
+                H264_COEFF_TOKEN_NC0, H264_COEFF_TOKEN_NC2,
+                H264_COEFF_TOKEN_NC4,
+            )
+        )
+        rb = {zl: inverted(col) for zl, col in H264_RUN_BEFORE.items()}
+        levels: list = [[None] * 7, [None] * 7]
+        for (first, suffix_len), rows in _cavlc_level_codes().items():
+            levels[first][suffix_len] = {
+                level: (ln, code, nxt) for level, ln, code, nxt in rows
+            }
+        _CAVLC_ENC = {
+            "ct": [inverted(H264_COEFF_TOKEN_CHROMA_DC),
+                   nc0, nc0, nc2, nc2, nc4, nc4, nc4, nc4],
+            "tz": {
+                tc: inverted(col) for tc, col in H264_TOTAL_ZEROS.items()
+            },
+            "tzc": {
+                tc: inverted(col)
+                for tc, col in H264_TOTAL_ZEROS_CHROMA_DC.items()
+            },
+            "rb": [None] + [rb[min(zl, 7)] for zl in range(1, 16)],
+            "lv": levels,
+        }
+    return _CAVLC_ENC
+
+
 def make_h264_cavlc_bytes(doc_id: int) -> bytes:
     """REAL CAVLC-entropy H.264 Annex-B stream: every frame a
     single-slice IDR of Intra_16x16 macroblocks whose residuals are
     context-adaptive variable-length coded (ITU-T H.264 9.2) — the
     entropy layer the I_PCM and inter fixtures bypass.  Encoder
     tables are inverted from the decoder's validated transcriptions
-    so the spec data has one source of truth in the repo."""
-    from .decode import (
-        H264_COEFF_TOKEN_CHROMA_DC,
-        H264_COEFF_TOKEN_NC0,
-        H264_COEFF_TOKEN_NC2,
-        H264_COEFF_TOKEN_NC4,
-        H264_RUN_BEFORE,
-        H264_TOTAL_ZEROS,
-        H264_TOTAL_ZEROS_CHROMA_DC,
-    )
-
-    enc = {
-        -1: {tv: lc for lc, tv in H264_COEFF_TOKEN_CHROMA_DC.items()},
-        0: {tv: lc for lc, tv in H264_COEFF_TOKEN_NC0.items()},
-        2: {tv: lc for lc, tv in H264_COEFF_TOKEN_NC2.items()},
-        4: {tv: lc for lc, tv in H264_COEFF_TOKEN_NC4.items()},
-        "tz": {
-            tc: {tz: lc for lc, tz in col.items()}
-            for tc, col in H264_TOTAL_ZEROS.items()
-        },
-        "tzc": {
-            tc: {tz: lc for lc, tz in col.items()}
-            for tc, col in H264_TOTAL_ZEROS_CHROMA_DC.items()
-        },
-        "rb": {
-            zl: {run: lc for lc, run in col.items()}
-            for zl, col in H264_RUN_BEFORE.items()
-        },
-    }
+    (``_cavlc_encoders``)."""
+    enc = _cavlc_encoders()
     n_frames, mb_w, mb_h = h264_cavlc_params(doc_id)
     units = [
         _h264_nal(3, 7, _h264_sps_from_fields(66, 10, mb_w - 1, mb_h - 1), 0),

@@ -2,7 +2,13 @@
 final collect (guide §1.4 — noop sink so the sink never bills the
 computation; §1.5 — labeled jobs).
 
-For each named media family this times, on one warm local session:
+First, without Spark, the in-process kernel CPU of each named family
+(``time.process_time``, best of 3, over the fixture's ``doc_id``s read
+with pyarrow):
+  make    — make_X_bytes(doc_id) for every doc
+  decode  — the decoder's row function over those payloads (no synth)
+
+Then, for each named media family, on one warm local session:
   synth   — make_X_bytes per doc in the media stage, no decode → noop
   decode  — media_frame(docs, make_X_bytes, decode_X) → noop  (includes synth cost)
   query   — the declared registry query → noop   (adds the doc_id range shuffle)
@@ -41,7 +47,49 @@ FAMILIES = {
         "make_h264_fracpel_bytes", "decode_h264_fracpel"),
     "multimodal_flac_stereo_decode": (
         "make_flac_stereo_bytes", "decode_flac_stereo"),
+    "multimodal_mp3_wswitch_regions_decode": (
+        "make_mp3_ws_bytes", "decode_mp3_maindata"),
+    "multimodal_jpeg_exif_meta": (
+        "make_jpeg_exif_bytes", "decode_jpeg_exif"),
+    "multimodal_aac_adts_walk": (
+        "make_aac_adts_bytes", "decode_aac_adts"),
 }
+
+
+def best_cpu(fn, repeat: int = 3) -> float:
+    """Least process CPU seconds of ``repeat`` calls of ``fn()``."""
+    best = float("inf")
+    for _ in range(repeat):
+        t0 = time.process_time()
+        fn()
+        best = min(best, time.process_time() - t0)
+    return best
+
+
+def kernel_cpu(names: list[str], sf_dir: str) -> None:
+    """Print the Spark-free make/decode CPU table for ``names``."""
+    import pyarrow.parquet as pq
+
+    from open_source_etl_spark.multimodal import decode as D
+    from open_source_etl_spark.multimodal import synth as S
+
+    doc_ids = pq.read_table(
+        f"{sf_dir}/documents.parquet", columns=["doc_id"]
+    ).column("doc_id").to_pylist()
+    print(f"kernel CPU, {len(doc_ids)} docs, best of 3 (no Spark)")
+    print(f"{'query':44s} {'make':>8s} {'decode':>8s} {'total':>8s}")
+    for name in names:
+        fam = FAMILIES.get(name)
+        if not fam:
+            continue
+        make, row_fn = getattr(S, fam[0]), getattr(D, fam[1]).factory()
+        raws = [make(d) for d in doc_ids]
+        t_m = best_cpu(lambda: [make(d) for d in doc_ids])
+        t_d = best_cpu(
+            lambda: [list(row_fn(d, r)) for d, r in zip(doc_ids, raws)]
+        )
+        print(f"{name:44s} {t_m:8.3f} {t_d:8.3f} {t_m + t_d:8.3f}")
+    print()
 
 
 def noop(df) -> float:
@@ -53,6 +101,7 @@ def noop(df) -> float:
 def main() -> None:
     names = sys.argv[1:] or list(FAMILIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    kernel_cpu(names, sf_dir)
 
     from open_source_etl_spark.catalog import load_table_compute
     from open_source_etl_spark.conf import EngineConfig
