@@ -116,17 +116,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (the engine analogue of
-    the reference's CREATE EXTERNAL TABLE, ``dags/…:174-206``)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def load_table_compute(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan for CPU-bound kernels (minhash signatures, pairwise Jaccard,
     edit distance, vector math): when the file yields fewer splits than

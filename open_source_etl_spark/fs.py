@@ -23,11 +23,6 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
-def has_scheme(path: str) -> bool:
-    """True when ``path`` carries an explicit URI scheme (``s3a://…``)."""
-    return "://" in path
-
-
 def hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
     """Glob ``pattern`` through the Hadoop FileSystem that owns its
     scheme — the exact resolution Spark's readers perform.  Works for

@@ -49,11 +49,6 @@ def davg(col: Column | str, scale_type: str = DEC) -> Column:
     return F.sum(c.cast(scale_type)).cast("double") / F.count(c)
 
 
-def money(col: Column, places: int = 2) -> Column:
-    """Final presentation rounding (applied identically in the oracle)."""
-    return F.round(col, places)
-
-
 def sql_dsum(expr: str, scale_type: str = "DECIMAL(18,4)") -> str:
     """DuckDB-side twin of :func:`dsum`."""
     return f"CAST(SUM(CAST({expr} AS {scale_type})) AS DOUBLE)"

@@ -4076,25 +4076,13 @@ def make_mp3_rqs_bytes(doc_id: int) -> bytes:
 
 # Ogg page CRC-32 (RFC 3533 6.): polynomial 0x04c11db7, no reflection,
 # zero init and xorout — NOT the zlib CRC, a detail page walkers trip
-# over.  Table-driven, shared by synth and decode through this module.
-_OGG_CRC_TABLE = None
-
-
+# over.  Steps ``_CRC32_TABLE`` (``_crc_table``, below); shared by
+# synth and decode through this module.
 def ogg_crc(data: bytes) -> int:
-    global _OGG_CRC_TABLE
-    if _OGG_CRC_TABLE is None:
-        table = []
-        for i in range(256):
-            r = i << 24
-            for _ in range(8):
-                r = ((r << 1) ^ 0x04C11DB7) if r & 0x80000000 else (r << 1)
-            table.append(r & 0xFFFFFFFF)
-        _OGG_CRC_TABLE = table
+    table = _CRC32_TABLE
     crc = 0
     for byte in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ _OGG_CRC_TABLE[
-            ((crc >> 24) & 0xFF) ^ byte
-        ]
+        crc = ((crc << 8) & 0xFFFFFFFF) ^ table[(crc >> 24) ^ byte]
     return crc
 
 
@@ -6154,6 +6142,7 @@ def _crc_table(poly: int, width: int) -> tuple:
 
 _CRC8_TABLE = _crc_table(0x07, 8)
 _CRC16_TABLE = _crc_table(0x8005, 16)
+_CRC32_TABLE = _crc_table(0x04C11DB7, 32)
 
 
 def flac_crc8(data: bytes) -> int:

@@ -21,7 +21,7 @@ from datetime import date, datetime
 from typing import Any
 
 import duckdb
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .catalog import TABLES
 
@@ -215,26 +215,3 @@ def compare(
             "value mismatch (first diffs):\n" + "\n".join(diffs),
         )
     return CompareResult(name, True, len(s_pdf), len(o_pdf))
-
-
-def run_all(
-    spark: SparkSession, sf_dir: str, only: list[str] | None = None
-) -> list[CompareResult]:
-    from .registry import all_oracles, all_queries
-
-    queries = all_queries()
-    oracles = all_oracles()
-    con = duckdb_connection(sf_dir)
-    results: list[CompareResult] = []
-    for name, fn in sorted(queries.items()):
-        if only and name not in only:
-            continue
-        df = fn(spark, sf_dir)
-        if name in oracles:
-            results.append(compare(name, df, con, oracles[name]))
-        else:
-            n = df.count()
-            results.append(
-                CompareResult(name, n >= 0, n, -1, "rows-only (no oracle)")
-            )
-    return results

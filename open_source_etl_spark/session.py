@@ -82,8 +82,5 @@ def tune_session(spark: SparkSession, config: EngineConfig | None = None) -> Spa
     spark.conf.set("spark.sql.session.timeZone", cfg.session_timezone)
     spark.conf.set("spark.sql.adaptive.enabled", str(cfg.adaptive_enabled).lower())
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-    except Exception:
-        pass  # may be fixed by an active query; non-fatal
+    spark.conf.set("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
     return spark

@@ -43,3 +43,30 @@ def test_unknown_ini_keys_ignored(tmp_path):
     cfg = EngineConfig.from_env(str(ini))
     assert cfg.master == "local[2]"
     assert not hasattr(cfg, "not_a_real_key")
+
+
+def test_tune_session_rejects_invalid_shuffle_partitions(spark):
+    """A conf Spark refuses surfaces from ``tune_session`` instead of
+    leaving the session on its old value; the shared session's conf is
+    restored afterwards."""
+    import pytest
+    from pyspark.errors import IllegalArgumentException
+
+    from open_source_etl_spark.session import tune_session
+
+    keys = (
+        "spark.sql.session.timeZone",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
+        "spark.sql.shuffle.partitions",
+    )
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        with pytest.raises(
+            IllegalArgumentException, match="spark.sql.shuffle.partitions"
+        ):
+            tune_session(spark, EngineConfig(shuffle_partitions=0))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert {k: spark.conf.get(k) for k in keys} == saved

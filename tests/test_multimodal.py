@@ -1047,16 +1047,22 @@ def test_mp3_side_info_round_trip():
 def test_crc_check_values_and_bitwise_reference():
     """The table-driven CRCs: the catalogue check values on
     ``b"123456789"`` (CRC-16/CMS for MPEG audio, CRC-16/UMTS and
-    CRC-8/SMBUS for FLAC) and agreement with the bitwise MSB-first
+    CRC-8/SMBUS for FLAC, and for Ogg the CRC-32/CKSUM value without
+    its final inversion) and agreement with the bitwise MSB-first
     recurrence on seeded random inputs, odd and even lengths."""
     import random
 
     from open_source_etl_spark.multimodal.dec_mp3 import mp3_crc16
-    from open_source_etl_spark.multimodal.synth import flac_crc8, flac_crc16
+    from open_source_etl_spark.multimodal.synth import (
+        flac_crc8,
+        flac_crc16,
+        ogg_crc,
+    )
 
     assert mp3_crc16(b"123456789") == 0xAEE7
     assert flac_crc16(b"123456789") == 0xFEE8
     assert flac_crc8(b"123456789") == 0xF4
+    assert ogg_crc(b"123456789") == 0x765E7680 ^ 0xFFFFFFFF
 
     def bitwise(data, poly, width, init):
         top, mask = 1 << (width - 1), (1 << width) - 1
@@ -1073,6 +1079,7 @@ def test_crc_check_values_and_bitwise_reference():
         assert mp3_crc16(data) == bitwise(data, 0x8005, 16, 0xFFFF), n
         assert flac_crc16(data) == bitwise(data, 0x8005, 16, 0), n
         assert flac_crc8(data) == bitwise(data, 0x07, 8, 0), n
+        assert ogg_crc(data) == bitwise(data, 0x04C11DB7, 32, 0), n
 
 
 def test_mp3_frame_walk_rejects_bad_side_info():
