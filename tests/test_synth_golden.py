@@ -1,11 +1,15 @@
-"""Byte goldens for every media builder in ``multimodal/synth.py``.
+"""Byte goldens for every media builder in ``multimodal/synth.py`` and
+every container builder in ``ingest/``.
 
 Each ``make_X_bytes(doc_id)`` is the encoder half of a codec check: the
 decoders and the oracle SQL restate its closed forms, so a refactor of a
 builder must not change a single output byte. This test pins one sha256
 per builder over ``doc_id`` 0-255 (each output is length-prefixed before
-hashing, so a byte moving between docs changes the digest too). It needs
-no Spark session.
+hashing, so a byte moving between docs changes the digest too). The
+ingest builders that take the document text get each ``doc_id`` with
+three fixed strings (ASCII, empty, non-ASCII), and the zstd dictionaries
+are pinned over every id ``zstd_dict_ids`` can return. It needs no Spark
+session.
 
 To re-pin after an intended format change, recompute with ``_digest`` and
 say in the change record why the bytes moved.
@@ -17,9 +21,19 @@ import hashlib
 
 import pytest
 
+from open_source_etl_spark.ingest import archives, avro, lz4, pdf, tfrecord, warc, zstd
 from open_source_etl_spark.multimodal import synth
 
 DOC_IDS = range(256)
+TEXTS = (
+    "The quick brown fox jumps over the lazy dog, 0123456789 times.",
+    "",
+    "naïve café — 東京の夜 ✓ Ωμέγα 🙂 …",
+)
+DOC_ARGS = [(d,) for d in DOC_IDS]
+TEXT_ARGS = [(d, t) for d in DOC_IDS for t in TEXTS]
+DICT_ARGS = [(i,) for i in sorted({i for d in DOC_IDS for i in zstd.zstd_dict_ids(d)})]
+EXAMPLE_ARGS = [(t, [d * 100, d]) for d in DOC_IDS for t in TEXTS]
 
 GOLDEN = {
     "make_aac_adts_bytes": "a6bb638b36a32580b1a47fd8f591ec320f5546817e9279ad6b5a0f5787e8ead8",
@@ -91,11 +105,31 @@ GOLDEN = {
     "make_webp_vp8l_transform_bytes": "863179efc9bbaaec9962882c299cf027efa9571c234a986f0fbafba4597c4005",
 }
 
+INGEST_MODULES = (archives, avro, lz4, pdf, tfrecord, warc, zstd)
 
-def _digest(make) -> str:
+# name: (builder, inputs, sha256)
+INGEST_GOLDEN = {
+    "make_avro_bytes": (avro.make_avro_bytes, TEXT_ARGS, "f12e4257dcafb40382422fd0f5fca20738a20f61763bcbe43cea053e3831271f"),
+    "make_avro_v1_bytes": (avro.make_avro_v1_bytes, TEXT_ARGS, "82c112d387171b58e04a1317fae405dfca68fa9bb721bd1ae5c45af22e73ca73"),
+    "make_example_bytes": (tfrecord.make_example_bytes, EXAMPLE_ARGS, "c01de3d10fd090c24f8b5faec77d454a381bd5524b2f1a39444036f106af5bc1"),
+    "make_gzip_jsonl_bytes": (archives.make_gzip_jsonl_bytes, TEXT_ARGS, "aa8c5016c30ef33b9eab5b1e299ad2e51423a09f125859dd0d12daee34f60478"),
+    "make_lz4_bytes": (lz4.make_lz4_bytes, DOC_ARGS, "3f13645bc70453e2386a504c1baeb2d2ff8d24dfe10f9e354684e3aac1c01cce"),
+    "make_pdf_bytes": (pdf.make_pdf_bytes, TEXT_ARGS, "14c1d15ad550c9b1a5cc00fc3d7dc8e9b7896d275c0f69532c4f2d4508d43175"),
+    "make_subtitle_bytes": (pdf.make_subtitle_bytes, TEXT_ARGS, "99f2275533a13c1a262441d910ecfa71f8269343f2e76f8f99dc378d621767da"),
+    "make_tar_bytes": (archives.make_tar_bytes, TEXT_ARGS, "ca4e795e150523053c7c214b09304ae63a63c98e07d3ef2d12565360bd41d84a"),
+    "make_tfrecord_bytes": (tfrecord.make_tfrecord_bytes, TEXT_ARGS, "b419e0e6df0a9f4b905cc29e912e8e5b54d03611aa6cae230639c4aa5d19c908"),
+    "make_warc_bytes": (warc.make_warc_bytes, TEXT_ARGS, "6b2909fdf6c356b38138a170be906840489b92a137199a3190f7d839109a9c1e"),
+    "make_zip_bytes": (archives.make_zip_bytes, TEXT_ARGS, "7b4429daf5884871ef5c996a6b78e03636df29cca0a13b77c37606489cf8aa30"),
+    "make_zstd_bytes": (zstd.make_zstd_bytes, DOC_ARGS, "6d15c3bd785930bde161ad2eaace95f23c3c00d7cf0a11b804beaf7ca870d499"),
+    "make_zstd_dict_frames": (lambda d: zstd.make_zstd_dict_frames(d)[0], DOC_ARGS, "8ebeb7b99db915e096d1fff656aaad47ab80f77ce056aef812688aa0fa1daf90"),
+    "make_zstd_dictionary": (zstd.make_zstd_dictionary, DICT_ARGS, "374996fef738a09824d2967a37668cc6b8403fadc574f436067583114010a91b"),
+}
+
+
+def _digest(make, inputs=DOC_ARGS) -> str:
     h = hashlib.sha256()
-    for d in DOC_IDS:
-        raw = make(d)
+    for args in inputs:
+        raw = make(*args)
         h.update(len(raw).to_bytes(4, "big"))
         h.update(raw)
     return h.hexdigest()
@@ -109,3 +143,17 @@ def test_golden_covers_every_builder():
 @pytest.mark.parametrize("name", sorted(GOLDEN))
 def test_synth_bytes_golden(name):
     assert _digest(getattr(synth, name)) == GOLDEN[name]
+
+
+def test_golden_covers_every_ingest_builder():
+    names = {
+        n for m in INGEST_MODULES for n, v in vars(m).items()
+        if n.startswith("make_") and callable(v)
+    }
+    assert names == set(INGEST_GOLDEN)
+
+
+@pytest.mark.parametrize("name", sorted(INGEST_GOLDEN))
+def test_ingest_bytes_golden(name):
+    make, inputs, want = INGEST_GOLDEN[name]
+    assert _digest(make, inputs) == want
