@@ -1,7 +1,7 @@
 """Archive-container plumbing: ZIP, ustar TAR, and multi-member gzip
 JSONL — the formats dataset dumps most often arrive in, as distributed
 extraction kernels — the archive siblings of ``ingest/warc.py`` (same
-mapInPandas shape, same closed-form fixtures).
+``@decoder`` shape on the codec host, same closed-form fixtures).
 
 ZIP is parsed the only correct way: End-Of-Central-Directory record
 from the tail, then the central directory, then each member's local
@@ -29,13 +29,8 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..multimodal.host import decoder
 
 
 def archive_n_members(doc_id: int) -> int:
@@ -583,31 +578,16 @@ ARCHIVE_SCHEMA = (
 )
 
 
-def _extract_df(docs_df: DataFrame, make, parse) -> DataFrame:
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_members", "sum_content_chars", "total_size")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make(int(doc_id), str(t))
-                vals = (int(doc_id), *parse(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(kernel, ARCHIVE_SCHEMA)
+@decoder(ARCHIVE_SCHEMA)
+def decode_zip():
+    """One ZIP archive per row: ``parse_zip``'s member counts."""
+    return lambda doc_id, raw: [parse_zip(doc_id, raw)]
 
 
-def extract_zip_members(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-extract ZIP per document row."""
-    return _extract_df(docs_df, make_zip_bytes, parse_zip)
-
-
-def extract_tar_members(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-extract TAR per document row."""
-    return _extract_df(docs_df, make_tar_bytes, parse_tar)
+@decoder(ARCHIVE_SCHEMA)
+def decode_tar():
+    """One TAR archive per row: ``parse_tar``'s member counts."""
+    return lambda doc_id, raw: [parse_tar(doc_id, raw)]
 
 
 # --- multi-member gzip JSONL (the .jsonl.gz corpus shape) -------------------
@@ -752,22 +732,7 @@ def parse_gzip_jsonl(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
     return n_members, n_lines, sum_ids, sum_chars
 
 
-def extract_gzip_jsonl(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-extract one multi-member .jsonl.gz per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_members", "n_lines", "sum_ids", "sum_text_chars")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_gzip_jsonl_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_gzip_jsonl(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, GZIP_JSONL_SCHEMA
-    )
+@decoder(GZIP_JSONL_SCHEMA)
+def decode_gzip_jsonl():
+    """One multi-member .jsonl.gz per row: ``parse_gzip_jsonl``'s counts."""
+    return lambda doc_id, raw: [parse_gzip_jsonl(doc_id, raw)]

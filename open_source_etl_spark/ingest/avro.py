@@ -20,9 +20,10 @@ GENERICALLY from the parsed writer schema; per-block sync markers and
 exact byte consumption are verified, unknown codecs and unsupported
 schema forms raise at the exact boundary.
 
-Scale posture: identical to ``ingest/tfrecord.py`` — per-file kernels
-via ``mapInPandas``, no cross-row state; at 100 TB the kernels map
-over ``binaryFile`` rows of real Avro shards.
+Scale posture: identical to ``ingest/tfrecord.py`` — per-file
+decoders on the codec host (``multimodal/host.py``), no cross-row
+state; at 100 TB the decoders map over ``binaryFile`` rows of real
+Avro shards.
 """
 
 from __future__ import annotations
@@ -32,13 +33,8 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..multimodal.host import decoder
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -383,25 +379,10 @@ AVRO_EXTRACT_SCHEMA = (
 )
 
 
-def extract_avro(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-extract one Avro container per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = tuple(f.split()[0] for f in AVRO_EXTRACT_SCHEMA.split(", "))
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_avro_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_avro(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, AVRO_EXTRACT_SCHEMA
-    )
+@decoder(AVRO_EXTRACT_SCHEMA)
+def decode_avro():
+    """One Avro container per row: ``parse_avro``'s counts."""
+    return lambda doc_id, raw: [parse_avro(doc_id, raw)]
 
 
 # --- schema resolution (Avro 1.11 spec, "Schema Resolution") ----------------
@@ -682,23 +663,8 @@ AVRO_EVOLVED_SCHEMA = (
 )
 
 
-def extract_avro_evolved(docs_df: DataFrame) -> DataFrame:
-    """Synthesize a V1-written container per doc row and read it
-    through the V2 reader schema."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = tuple(f.split()[0] for f in AVRO_EVOLVED_SCHEMA.split(", "))
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_avro_v1_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_avro_evolved(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, AVRO_EVOLVED_SCHEMA
-    )
+@decoder(AVRO_EVOLVED_SCHEMA)
+def decode_avro_evolved():
+    """One V1-written Avro container per row, read through the V2
+    reader schema: ``parse_avro_evolved``'s counts."""
+    return lambda doc_id, raw: [parse_avro_evolved(doc_id, raw)]

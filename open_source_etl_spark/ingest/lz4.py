@@ -16,16 +16,15 @@ Reference scope note: the reference (sumaniitm/open-source-etl)
 delegates storage formats to its warehouse; this module is part of
 the training-data-pipeline surface the brief adds.
 
-Scale posture: per-row Arrow kernels over binary payloads — zero
-shuffle, no cross-row state; identical to the other container
-extractors (SCALE.md §9f/§9h).
+Scale posture: per-row decoders over binary payloads on the codec
+host (``multimodal/host.py``) — no cross-row state; identical to the
+other container extractors (SCALE.md §9f/§9h).
 """
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-from pyspark.sql import DataFrame
+from ..multimodal.host import decoder
 
 # XXH32 primes (the published xxHash32 constants)
 _P1 = 2654435761
@@ -458,23 +457,7 @@ LZ4_SCHEMA = (
 )
 
 
-def extract_lz4(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-walk one concatenated .lz4 file per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_skippable", "n_blocks",
-            "content_bytes", "content_sum", "n_checksums",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                raw = make_lz4_bytes(int(doc_id))
-                vals = (int(doc_id), *parse_lz4(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id").mapInPandas(kernel, LZ4_SCHEMA)
+@decoder(LZ4_SCHEMA)
+def decode_lz4():
+    """One concatenated .lz4 file per row: ``parse_lz4``'s counts."""
+    return lambda doc_id, raw: [parse_lz4(doc_id, raw)]

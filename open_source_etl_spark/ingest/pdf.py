@@ -15,21 +15,17 @@ streams, and filters other than FlateDecode raise at the declared
 boundary.
 
 Scale posture: identical to ``ingest/archives.py`` — per-document
-Arrow kernels via ``mapInPandas``, no cross-row state; at 100 TB the
-kernel maps over ``binaryFile`` rows of real PDF shards.
+decoders on the codec host (``multimodal/host.py``), no cross-row
+state; at 100 TB the decoders map over ``binaryFile`` rows of real PDF
+shards.
 """
 
 from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..multimodal.host import decoder
 
 
 def pdf_n_pages(doc_id: int) -> int:
@@ -287,27 +283,10 @@ PDF_SCHEMA = (
 )
 
 
-def extract_pdf_text(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-extract a PDF per document row (same harness
-    shape as ``ingest/archives.py``)."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_objects", "n_pages", "n_streams", "n_flate",
-            "text_chars",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_pdf_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_pdf(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(kernel, PDF_SCHEMA)
+@decoder(PDF_SCHEMA)
+def decode_pdf():
+    """One PDF per row: ``parse_pdf``'s counts."""
+    return lambda doc_id, raw: [parse_pdf(doc_id, raw)]
 
 
 # --- Subtitles (SRT / WebVTT) ------------------------------------------
@@ -442,25 +421,7 @@ SUBTITLE_SCHEMA = (
 )
 
 
-def extract_subtitles(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-parse an SRT/WebVTT file per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "is_vtt", "n_cues", "total_duration_ms",
-            "text_chars", "n_lines",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_subtitle_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_subtitles(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, SUBTITLE_SCHEMA
-    )
+@decoder(SUBTITLE_SCHEMA)
+def decode_subtitles():
+    """One SRT/WebVTT file per row: ``parse_subtitles``'s counts."""
+    return lambda doc_id, raw: [parse_subtitles(doc_id, raw)]

@@ -13,21 +13,17 @@ feature: map<string, Feature> } }`` with bytes_list / int64_list
 values.  The reader walks the wire generically — unknown fields are
 skipped by wire type, truncated varints and bad checksums raise.
 
-Scale posture: identical to ``ingest/warc.py`` — per-file kernels via
-``mapInPandas``, no cross-row state; at 100 TB the kernels map over
-``binaryFile`` rows of real training shards.
+Scale posture: identical to ``ingest/warc.py`` — per-file decoders on
+the codec host (``multimodal/host.py``), no cross-row state; at 100 TB
+the decoders map over ``binaryFile`` rows of real training shards.
 """
 
 from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..multimodal.host import decoder
 
 
 def _crc32c_table() -> tuple:
@@ -231,22 +227,7 @@ TFRECORD_SCHEMA = (
 )
 
 
-def extract_tfrecord(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-scan a TFRecord file per document row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = ("doc_id", "n_records", "sum_text_chars", "sum_ids")
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = make_tfrecord_bytes(int(doc_id), str(t))
-                vals = (int(doc_id), *parse_tfrecord(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, TFRECORD_SCHEMA
-    )
+@decoder(TFRECORD_SCHEMA)
+def decode_tfrecord():
+    """One TFRecord file per row: ``parse_tfrecord``'s counts."""
+    return lambda doc_id, raw: [parse_tfrecord(doc_id, raw)]

@@ -12,22 +12,18 @@ content-length-driven walk — one response body deliberately embeds the
 literal ``WARC/1.0`` marker, so a parser that rescans for magic instead
 of honoring Content-Length miscounts records.
 
-Scale posture: one WARC blob per row through ``mapInPandas`` — the
-walk is per-document, embarrassingly parallel, carries no cross-row
-state, and emits fixed-width columns; at 100 TB the same kernel maps
-over (path, bytes) rows from ``binaryFile`` scans of real crawl
-shards.
+Scale posture: ``make_warc_bytes`` and ``decode_warc`` are a codec
+pair on the one Arrow batch loop in ``multimodal/host.py`` — the
+synthesized WARC blob is built and walked inside one Python stage, so
+it never crosses the JVM↔Python boundary.  The walk is per-document,
+embarrassingly parallel, carries no cross-row state, and emits
+fixed-width columns; at 100 TB the same decoder maps over (path,
+bytes) rows from ``binaryFile`` scans of real crawl shards.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
-from pyspark.sql import DataFrame
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
+from ..multimodal.host import decoder
 
 
 def warc_page_params(doc_id: int, k: int, n_chars: int) -> tuple[int, int, int]:
@@ -284,45 +280,8 @@ WARC_EXTRACT_SCHEMA = (
 )
 
 
-def synthesize_warc(docs_df: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, payload) rows carrying a WARC file."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        make_warc_bytes(int(d), str(t))
-                        for d, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    return docs_df.select("doc_id", "text").mapInPandas(
-        kernel, "doc_id long, payload binary"
-    )
-
-
-def extract_warc_records(warc_df: DataFrame) -> DataFrame:
-    """Per-WARC-file record structure + visible-text extraction."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_records", "n_responses", "n_ok", "sum_text_chars",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                vals = (int(doc_id), *parse_warc(int(doc_id), bytes(b))[:4])
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return warc_df.select("doc_id", "payload").mapInPandas(
-        kernel, WARC_EXTRACT_SCHEMA
-    )
+@decoder(WARC_EXTRACT_SCHEMA)
+def decode_warc():
+    """One WARC file per row: the first four of ``parse_warc``'s
+    counts (record structure and visible text)."""
+    return lambda doc_id, raw: [parse_warc(doc_id, raw)[:4]]

@@ -19,16 +19,15 @@ Reference scope note: the reference (sumaniitm/open-source-etl)
 delegates storage formats to its warehouse; this module is part of
 the training-data-pipeline surface the brief adds.
 
-Scale posture: per-row Arrow kernels over binary payloads — zero
-shuffle, no cross-row state; identical to the other container
-extractors (SCALE.md §9f/§9h).
+Scale posture: per-row decoders over binary payloads on the codec
+host (``multimodal/host.py``) — no cross-row state; identical to the
+other container extractors (SCALE.md §9f/§9h).
 """
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-from pyspark.sql import DataFrame
+from ..multimodal.host import decoder
 
 # XXH64 (the xxHash64 primes from the reference specification)
 _P1 = 0x9E3779B185EBCA87
@@ -1426,6 +1425,12 @@ def make_zstd_dictionary(did: int) -> bytes:
     )
 
 
+def zstd_dicts(doc_id: int) -> dict[int, bytes]:
+    """{dict_id: serialized dictionary} for the two dictionaries doc
+    ``doc_id``'s frames reference."""
+    return {did: make_zstd_dictionary(did) for did in zstd_dict_ids(doc_id)}
+
+
 def zstd_dict_fields(doc_id: int) -> tuple[int, int, int, int, int, int]:
     """(n_lit, ll0, m1, m2, n_lit2, m3) closed forms of the two
     dict-keyed frames."""
@@ -1462,7 +1467,7 @@ def zstd_dict_frame1_content(doc_id: int) -> bytes:
     return lits[:4] + dc[1 : 1 + m3] + lits[4:]
 
 
-def make_zstd_dict_frames(doc_id: int) -> tuple[bytes, dict[int, bytes]]:
+def make_zstd_dict_bytes(doc_id: int) -> bytes:
     """Two dictionary-keyed frames per doc: frame 0 references a
     FORMATTED dictionary (2-byte ID field, 4-byte on every fifth
     doc) and decodes a treeless-literals + repeat-mode block whose
@@ -1470,7 +1475,7 @@ def make_zstd_dict_frames(doc_id: int) -> tuple[bytes, dict[int, bytes]]:
     sequence resolves a DICT-SEEDED repeat offset; frame 1
     references a RAW-CONTENT dictionary (1-byte ID field) and
     decodes a predefined-tables block matching into that window.
-    Returns (frames_bytes, {dict_id: dict_bytes})."""
+    The dictionaries they reference are ``zstd_dicts(doc_id)``."""
     d1, d2 = zstd_dict_ids(doc_id)
     n_lit, ll0, m1, m2, n_lit2, m3 = zstd_dict_fields(doc_id)
     dlen1 = len(zstd_dict_content(d1))
@@ -1542,9 +1547,7 @@ def make_zstd_dict_frames(doc_id: int) -> tuple[bytes, dict[int, bytes]]:
     out += block1
     out += struct.pack("<I", xxh64(content1) & 0xFFFFFFFF)
 
-    return bytes(out), {
-        d1: make_zstd_dictionary(d1), d2: make_zstd_dictionary(d2)
-    }
+    return bytes(out)
 
 
 ZSTD_SCHEMA = (
@@ -1558,52 +1561,23 @@ ZSTD_DICT_SCHEMA = (
 )
 
 
-def extract_zstd_dicts(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-walk two dictionary-keyed frames per doc row."""
+@decoder(ZSTD_DICT_SCHEMA)
+def decode_zstd_dict():
+    """Two dictionary-keyed frames per row, decoded against
+    ``zstd_dicts(doc_id)``; ``dict_ids_sum`` sums the dictionary ids
+    the frames used."""
 
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_blocks", "content_bytes",
-            "content_sum", "dict_ids_sum", "n_checksums",
+    def row(doc_id: int, raw: bytes):
+        used: list[int] = []
+        nf, _ns, nb, cb, cs, nck = parse_zstd(
+            doc_id, raw, dicts=zstd_dicts(doc_id), used_dids=used
         )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                raw, dicts = make_zstd_dict_frames(d)
-                used: list[int] = []
-                nf, _ns, nb, cb, cs, nck = parse_zstd(
-                    d, raw, dicts=dicts, used_dids=used
-                )
-                vals = (d, nf, nb, cb, cs, sum(used), nck)
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
+        return [(nf, nb, cb, cs, sum(used), nck)]
 
-    return docs_df.select("doc_id").mapInPandas(
-        kernel, ZSTD_DICT_SCHEMA
-    )
+    return row
 
 
-def extract_zstd(docs_df: DataFrame) -> DataFrame:
-    """Synthesize-and-walk one concatenated .zst file per doc row."""
-
-    def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        cols = (
-            "doc_id", "n_frames", "n_skippable", "n_blocks",
-            "content_bytes", "content_sum", "n_checksums",
-        )
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in cols}
-            for doc_id in pdf["doc_id"]:
-                raw = make_zstd_bytes(int(doc_id))
-                vals = (int(doc_id), *parse_zstd(int(doc_id), raw))
-                for col, v in zip(cols, vals):
-                    out[col].append(v)
-            yield pd.DataFrame(out)
-
-    return docs_df.select("doc_id").mapInPandas(kernel, ZSTD_SCHEMA)
+@decoder(ZSTD_SCHEMA)
+def decode_zstd():
+    """One concatenated .zst file per row: ``parse_zstd``'s counts."""
+    return lambda doc_id, raw: [parse_zstd(doc_id, raw)]

@@ -197,12 +197,14 @@ def perceptual_hash():
 # ---------------------------------------------------------------------------
 
 def media_frame(docs_df: DataFrame, make, dec: Decoder) -> DataFrame:
-    """``dec`` over payloads ``make(doc_id)`` builds for each of
-    ``docs_df``'s rows, in ONE Python stage: the payload bytes stay
-    inside the worker instead of crossing the JVM↔Python Arrow boundary
-    twice between two chained mapInPandas runners (guide §4.1 — control
-    how many columns/bytes cross)."""
-    return docs_df.select("doc_id").mapInPandas(host(dec, make), dec.schema)
+    """``dec`` over payloads ``make`` builds from each of ``docs_df``'s
+    rows, in ONE Python stage: ``make(doc_id)`` over a ``doc_id`` frame,
+    ``make(doc_id, text)`` over a ``doc_id, text`` one (``host`` passes
+    the row's columns in order).  The payload bytes stay inside the
+    worker instead of crossing the JVM↔Python Arrow boundary twice
+    between two chained mapInPandas runners (guide §4.1 — control how
+    many columns/bytes cross)."""
+    return docs_df.mapInPandas(host(dec, make), dec.schema)
 
 
 def doc_range_query(
@@ -2738,14 +2740,24 @@ def decode_h264_cavlc():
     TrailingOnes signs, runs the suffix-length-adaptive level decode,
     and — for partial blocks with any TotalCoeff — walks total_zeros
     (Tables 9-7/9-8) and run_before (Table 9-10) with zerosLeft
-    accounting, emitting coefficient-domain sums only a correct walk
-    can land.  CHROMA residuals decode too (round 11): mb_types
-    15/19/23 carry cbp_chroma 0/1/2 — both components' 2x2 DC blocks
-    through the nC = -1 coeff_token column and the Table 9-9(a)
-    total_zeros columns, then (cbp_chroma 2) both components' four
-    AC blocks with their own 2x2-grid nC neighbor bookkeeping.
+    accounting, emitting coefficient-domain sums.  CHROMA residuals
+    decode too (round 11): mb_types 15/19/23 carry cbp_chroma 0/1/2 —
+    both components' 2x2 DC blocks through the nC = -1 coeff_token
+    column and the Table 9-9(a) total_zeros columns, then
+    (cbp_chroma 2) both components' four AC blocks with their own
+    2x2-grid nC neighbor bookkeeping.
     Declared stubs: non-I_16x16 entropy-coded macroblocks and
-    CABAC."""
+    CABAC.
+
+    CAVLC carries no check bits, so a corrupt slice is caught only
+    when the walk hits an invalid code, a range violation or an
+    exact-consumption failure; otherwise it decodes to a row.  Of the
+    17,650 single-byte corruptions of the first IDR slice that
+    ``test_h264_cavlc_corruption_golden`` pins (doc_ids 0-63, each
+    payload byte XOR 0xFF), 13,054 raise and 4,596 return a row, 4,572
+    of those different from the clean row; that test pins every
+    outcome, raise or row."""
+    from .synth import h264_nc
 
     def walk(doc_id: int, raw: bytes):
         sps = pps = None
@@ -2787,59 +2799,14 @@ def decode_h264_cavlc():
                     )
                 r.u(2)  # dec_ref_pic_marking flags
                 r.se()  # slice_qp_delta
-                # per-picture 4x4 nonzero-count grid (9.2.1): each
-                # decoded AC block's TotalCoeff feeds later blocks'
-                # nC through the left/top neighbor average
-                nzc: dict[tuple[int, int], int] = {}
-
-                def zidx(zx: int, zy: int) -> int:
-                    return (
-                        ((zy & 2) << 2) | ((zx & 2) << 1)
-                        | ((zy & 1) << 1) | (zx & 1)
-                    )
-
-                def n_c(m: int, blk: int) -> int:
-                    zx = ((blk >> 2) & 1) * 2 + (blk & 1)
-                    zy = ((blk >> 3) & 1) * 2 + ((blk >> 1) & 1)
-                    n_a = n_b = None
-                    if zx > 0:
-                        n_a = nzc[(m, zidx(zx - 1, zy))]
-                    elif m % mb_w > 0:
-                        n_a = nzc[(m - 1, zidx(3, zy))]
-                    if zy > 0:
-                        n_b = nzc[(m, zidx(zx, zy - 1))]
-                    elif m // mb_w > 0:
-                        n_b = nzc[(m - mb_w, zidx(zx, 3))]
-                    if n_a is not None and n_b is not None:
-                        return (n_a + n_b + 1) >> 1
-                    if n_a is not None:
-                        return n_a
-                    if n_b is not None:
-                        return n_b
-                    return 0
-
-                # chroma 4x4 nonzero-count grids (2x2 per MB, per
-                # component) — the chroma AC nC bookkeeping
-                cnzc: dict[tuple[int, int, int], int] = {}
-
-                def c_n_c(m: int, comp: int, blk: int) -> int:
-                    cx, cy = blk % 2, blk // 2
-                    n_a = n_b = None
-                    if cx > 0:
-                        n_a = cnzc[(m, comp, blk - 1)]
-                    elif m % mb_w > 0:
-                        n_a = cnzc[(m - 1, comp, blk + 1)]
-                    if cy > 0:
-                        n_b = cnzc[(m, comp, blk - 2)]
-                    elif m // mb_w > 0:
-                        n_b = cnzc[(m - mb_w, comp, blk + 2)]
-                    if n_a is not None and n_b is not None:
-                        return (n_a + n_b + 1) >> 1
-                    if n_a is not None:
-                        return n_a
-                    if n_b is not None:
-                        return n_b
-                    return 0
+                # per-picture nonzero counts (9.2.1): each decoded AC
+                # block's TotalCoeff feeds later blocks' nC through
+                # the left/top neighbor average; chroma AC keeps a 2x2
+                # grid per MB and component.  The lists grow as blocks
+                # decode, so a corrupt SPS's picture size allocates
+                # nothing up front.
+                nzc: list[int] = []
+                cnzc: tuple[list[int], list[int]] = ([], [])
 
                 for m in range(n_mbs):
                     mb_type = r.ue()
@@ -2861,15 +2828,17 @@ def decode_h264_cavlc():
 
                     # n_t1 counts the +-1 levels among each block's
                     # first three
-                    dc = _cavlc_residual(r, n_c(m, 0), 16, doc_id)
+                    dc = _cavlc_residual(
+                        r, h264_nc(nzc, mb_w, m, 0, 4), 16, doc_id
+                    )
                     sum_dc += sum(dc)
                     sum_dc_abs += sum(map(abs, dc))
                     n_t1 += dc[:3].count(1) + dc[:3].count(-1)
                     for blk in range(16):
                         ac = _cavlc_residual(
-                            r, n_c(m, blk), 15, doc_id
+                            r, h264_nc(nzc, mb_w, m, blk, 4), 15, doc_id
                         )
-                        nzc[(m, blk)] = len(ac)
+                        nzc.append(len(ac))
                         sum_ac += sum(ac)
                         sum_ac_abs += sum(map(abs, ac))
                         n_t1 += ac[:3].count(1) + ac[:3].count(-1)
@@ -2882,22 +2851,21 @@ def decode_h264_cavlc():
                             sum_cdc += sum(cdc)
                             sum_cdc_abs += sum(map(abs, cdc))
                             n_t1 += cdc[:3].count(1) + cdc[:3].count(-1)
-                    for comp in range(2):
-                        for blk in range(4):
-                            if cbp_chroma == 2:
-                                cac = _cavlc_residual(
-                                    r, c_n_c(m, comp, blk), 15,
-                                    doc_id,
-                                )
-                                sum_cac += sum(cac)
-                                sum_cac_abs += sum(map(abs, cac))
-                                n_t1 += (
-                                    cac[:3].count(1) + cac[:3].count(-1)
-                                )
-                                cnzc[(m, comp, blk)] = len(cac)
-                            else:
-                                cnzc[(m, comp, blk)] = 0
                     n_mb_total += 1
+                    if cbp_chroma != 2:  # no chroma AC: counts are 0
+                        for counts in cnzc:
+                            counts.extend((0, 0, 0, 0))
+                        continue
+                    for counts in cnzc:
+                        for blk in range(4):
+                            cac = _cavlc_residual(
+                                r, h264_nc(counts, mb_w, m, blk, 2), 15,
+                                doc_id,
+                            )
+                            sum_cac += sum(cac)
+                            sum_cac_abs += sum(map(abs, cac))
+                            n_t1 += cac[:3].count(1) + cac[:3].count(-1)
+                            counts.append(len(cac))
                 # rbsp_trailing_bits: stop bit then zero padding
                 if r.u(1) != 1:
                     raise ValueError(

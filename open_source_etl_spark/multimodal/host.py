@@ -1,18 +1,21 @@
-"""One Arrow batch loop for every media codec.
+"""One Arrow batch loop for every codec: media and ingest containers.
 
-A codec is two pure row functions: ``make_X_bytes(doc_id) -> bytes``
-(``synth.py``) and a decoder's row function ``(doc_id, raw) -> iterable
-of row tuples``.  ``@decoder(SCHEMA)`` declares the second: it goes on a
-zero-argument factory whose body is the per-task setup (imports, lookup
-tables, inner walkers) and which returns the row function.  ``host``
-is the only ``mapInPandas`` loop around them: it calls the factory once
-per task, on the worker, feeds it each input row's payload (read from
-``payload``, or made by ``make`` inside the same Python stage), and
-prepends the input ``doc_id`` to every row the row function yields, so
-every output row carries its input's ``doc_id`` by construction.
+A codec is two pure row functions: ``make_X_bytes(doc_id[, text]) ->
+bytes`` (``synth.py``, or the ``ingest/`` container modules) and a
+decoder's row function ``(doc_id, raw) -> iterable of row tuples``.
+``@decoder(SCHEMA)`` declares the second: it goes on a zero-argument
+factory whose body is the per-task setup (imports, lookup tables, inner
+walkers) and which returns the row function.  ``host`` is the only
+``mapInPandas`` loop around them: it calls the factory once per task,
+on the worker, feeds it each input row's payload (read from
+``payload``, or made by ``make`` from the row's columns inside the same
+Python stage), and prepends the input ``doc_id`` to every row the row
+function yields, so every output row carries its input's ``doc_id`` by
+construction.
 
 Split out of ``decode.py`` so a worker running a family module's
-decoder (``dec_mp3``, ...) imports only that family and this module.
+decoder (``dec_mp3``, an ``ingest`` container, ...) imports only that
+module and this one.
 """
 
 from __future__ import annotations
@@ -73,11 +76,13 @@ def indexed(rows) -> Iterator[tuple]:
     return ((i, *row) for i, row in enumerate(rows))
 
 
-def host(dec: Decoder, make: Callable[[int], bytes] | None = None):
+def host(dec: Decoder, make: Callable[..., bytes] | None = None):
     """The ``mapInPandas`` function for ``dec``: over ``doc_id,
-    payload`` batches, or, given ``make``, over ``doc_id`` batches whose
-    payloads ``make`` builds in the same stage (the fused synth→decode
-    shape: payload bytes never cross the JVM↔Python boundary)."""
+    payload`` batches, or, given ``make``, over batches whose payloads
+    ``make`` builds in the same stage from each row's columns in order
+    (``make(doc_id)`` for a ``doc_id`` frame, ``make(doc_id, text)`` for
+    a ``doc_id, text`` one): the fused synth→decode shape, where payload
+    bytes never cross the JVM↔Python boundary."""
     width = len(dec.columns) - 1
 
     def kernel(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -86,7 +91,10 @@ def host(dec: Decoder, make: Callable[[int], bytes] | None = None):
         rows_of = dec.factory()
         for pdf in batches:
             ids = pdf["doc_id"].tolist()
-            raws = map(make, ids) if make else pdf["payload"]
+            raws = (
+                map(make, *(pdf[c].tolist() for c in pdf.columns)) if make
+                else pdf["payload"]
+            )
             out_ids: list[int] = []
             rows: list[tuple] = []
             for doc_id, raw in zip(ids, raws):

@@ -1993,6 +1993,61 @@ def _cavlc_write_block(
     w.u(acc, n)
 
 
+def _nc_neighbour_table(side: int) -> tuple[tuple[int, int, int, int], ...]:
+    """Per block of a macroblock's side x side grid, in z-scan order
+    (6.4.3; raster for the 2x2 chroma grid): (left_in, left_out,
+    top_in, top_out) — the index of neighbour A (left) / B (top) in the
+    same macroblock, -1 when it lies in the adjacent one, and its
+    index in that adjacent macroblock."""
+
+    def zidx(zx: int, zy: int) -> int:
+        return ((zy & 2) << 2) | ((zx & 2) << 1) | ((zy & 1) << 1) | (zx & 1)
+
+    table = []
+    for blk in range(side * side):
+        zx = ((blk >> 2) & 1) * 2 + (blk & 1)
+        zy = ((blk >> 3) & 1) * 2 + ((blk >> 1) & 1)
+        table.append((
+            zidx(zx - 1, zy) if zx else -1, zidx(side - 1, zy),
+            zidx(zx, zy - 1) if zy else -1, zidx(zx, side - 1),
+        ))
+    return tuple(table)
+
+
+_NC_NEIGHBOURS = {side: _nc_neighbour_table(side) for side in (2, 4)}
+
+
+def h264_nc(counts: list[int], mb_w: int, m: int, blk: int, side: int) -> int:
+    """CAVLC nC (9.2.1) of block ``blk`` (z-scan order) of macroblock
+    ``m``'s side x side grid (4: luma, 2: one chroma component's AC).
+    ``counts`` holds the nonzero counts of the grid's blocks decoded so
+    far, block ``blk`` of macroblock ``m`` at ``m * side * side + blk``.
+    nC is the rounded mean of the left (A) and top (B) neighbours'
+    counts when both are available, else the available one's, else 0;
+    a neighbour outside the picture is unavailable.  The encoder and
+    the decoder both derive nC here."""
+    n = side * side
+    base = m * n
+    left_in, left_out, top_in, top_out = _NC_NEIGHBOURS[side][blk]
+    if left_in >= 0:
+        n_a = counts[base + left_in]
+    elif m % mb_w:
+        n_a = counts[base - n + left_out]
+    else:
+        n_a = None
+    if top_in >= 0:
+        n_b = counts[base + top_in]
+    elif m >= mb_w:
+        n_b = counts[base - mb_w * n + top_out]
+    else:
+        n_b = None
+    if n_a is None:
+        return 0 if n_b is None else n_b
+    if n_b is None:
+        return n_a
+    return (n_a + n_b + 1) >> 1
+
+
 def h264_cavlc_idr_rbsp(
     doc_id: int, f: int, n_mbs: int, mb_w: int, enc: dict,
 ) -> bytes:
@@ -2012,55 +2067,12 @@ def h264_cavlc_idr_rbsp(
     w.u(0, 1)
     w.u(0, 1)
     w.se(0)        # slice_qp_delta
-    # per-picture 4x4 nonzero-count grid — the EXACT mirror of the
-    # decoder's neighbor bookkeeping (decode.decode_h264_cavlc): AC
-    # counts now span 1..15, so the re-derived nC sweeps every
-    # Table 9-5 column (nC < 2, 2-4, 4-8) plus the nC >= 8 FLC
-    nzc: dict[tuple[int, int], int] = {}
-
-    def zidx(zx: int, zy: int) -> int:
-        return ((zy & 2) << 2) | ((zx & 2) << 1) | ((zy & 1) << 1) | (zx & 1)
-
-    def n_c(mb: int, blk: int) -> int:
-        zx = ((blk >> 2) & 1) * 2 + (blk & 1)
-        zy = ((blk >> 3) & 1) * 2 + ((blk >> 1) & 1)
-        n_a = n_b = None
-        if zx > 0:
-            n_a = nzc[(mb, zidx(zx - 1, zy))]
-        elif mb % mb_w > 0:
-            n_a = nzc[(mb - 1, zidx(3, zy))]
-        if zy > 0:
-            n_b = nzc[(mb, zidx(zx, zy - 1))]
-        elif mb // mb_w > 0:
-            n_b = nzc[(mb - mb_w, zidx(zx, 3))]
-        if n_a is not None and n_b is not None:
-            return (n_a + n_b + 1) >> 1
-        if n_a is not None:
-            return n_a
-        if n_b is not None:
-            return n_b
-        return 0
-
-    cnzc: dict[tuple[int, int, int], int] = {}
-
-    def c_n_c(mb: int, comp: int, blk: int) -> int:
-        cx, cy = blk % 2, blk // 2
-        n_a = n_b = None
-        if cx > 0:
-            n_a = cnzc[(mb, comp, blk - 1)]
-        elif mb % mb_w > 0:
-            n_a = cnzc[(mb - 1, comp, blk + 1)]
-        if cy > 0:
-            n_b = cnzc[(mb, comp, blk - 2)]
-        elif mb // mb_w > 0:
-            n_b = cnzc[(mb - mb_w, comp, blk + 2)]
-        if n_a is not None and n_b is not None:
-            return (n_a + n_b + 1) >> 1
-        if n_a is not None:
-            return n_a
-        if n_b is not None:
-            return n_b
-        return 0
+    # per-picture nonzero counts — the EXACT mirror of the decoder's
+    # neighbor bookkeeping (decode.decode_h264_cavlc): AC counts span
+    # 1..15, so the re-derived nC sweeps every Table 9-5 column
+    # (nC < 2, 2-4, 4-8) plus the nC >= 8 FLC
+    nzc: list[int] = []
+    cnzc: tuple[list[int], list[int]] = ([], [])  # per chroma component
 
     for m in range(n_mbs):
         cbp_c = h264_cavlc_cbp_chroma(doc_id, f, m)
@@ -2068,7 +2080,8 @@ def h264_cavlc_idr_rbsp(
         w.ue(0)    # intra_chroma_pred_mode: DC
         w.se(0)    # mb_qp_delta
         _cavlc_write_block(
-            w, h264_cavlc_levels(doc_id, f, m, 16), n_c(m, 0), enc,
+            w, h264_cavlc_levels(doc_id, f, m, 16),
+            h264_nc(nzc, mb_w, m, 0, 4), enc,
         )
         for blk in range(16):
             levels = h264_cavlc_levels(doc_id, f, m, blk)
@@ -2080,9 +2093,9 @@ def h264_cavlc_idr_rbsp(
             else:
                 tz, runs = None, None
             _cavlc_write_block(
-                w, levels, n_c(m, blk), enc, tz, runs
+                w, levels, h264_nc(nzc, mb_w, m, blk, 4), enc, tz, runs
             )
-            nzc[(m, blk)] = len(levels)
+            nzc.append(len(levels))
         if cbp_c:
             for comp in range(2):
                 cdc = h264_cavlc_chroma_levels(doc_id, f, m, comp, 4)
@@ -2094,28 +2107,25 @@ def h264_cavlc_idr_rbsp(
                 else:
                     tz, runs = None, None
                 _cavlc_write_block(w, cdc, -1, enc, tz, runs)
+        if cbp_c != 2:  # no chroma AC: its counts are 0
+            for counts in cnzc:
+                counts.extend((0, 0, 0, 0))
+            continue
         for comp in range(2):
             for blk in range(4):
-                if cbp_c == 2:
-                    cac = h264_cavlc_chroma_levels(
-                        doc_id, f, m, comp, blk
+                cac = h264_cavlc_chroma_levels(doc_id, f, m, comp, blk)
+                if len(cac) < 15:
+                    tz = h264_cavlc_chroma_tz(doc_id, f, m, comp, blk)
+                    runs = h264_cavlc_runs(
+                        doc_id, f, m, 17 + 5 * comp + blk, len(cac), tz,
                     )
-                    if len(cac) < 15:
-                        tz = h264_cavlc_chroma_tz(
-                            doc_id, f, m, comp, blk
-                        )
-                        runs = h264_cavlc_runs(
-                            doc_id, f, m, 17 + 5 * comp + blk,
-                            len(cac), tz,
-                        )
-                    else:
-                        tz, runs = None, None
-                    _cavlc_write_block(
-                        w, cac, c_n_c(m, comp, blk), enc, tz, runs
-                    )
-                    cnzc[(m, comp, blk)] = len(cac)
                 else:
-                    cnzc[(m, comp, blk)] = 0
+                    tz, runs = None, None
+                _cavlc_write_block(
+                    w, cac, h264_nc(cnzc[comp], mb_w, m, blk, 2), enc,
+                    tz, runs,
+                )
+                cnzc[comp].append(len(cac))
     w.u(1, 1)  # rbsp_stop_one_bit
     w.align()
     return w.to_bytes()

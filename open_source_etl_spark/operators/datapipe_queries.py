@@ -25,7 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import load_table, load_table_compute
+from ..catalog import load_table
+from ..multimodal.decode import doc_range_query, media_frame, media_query
 from ..registry import query
 
 # LCG-style deterministic bucket in [0, 100): identical integer math on
@@ -1524,6 +1525,16 @@ def datapipe_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _text_container_query(spark: SparkSession, sf_dir: str, make, dec) -> DataFrame:
+    """A container scan whose builder takes the document text: ``dec``
+    over ``make(doc_id, text)`` in one Python stage, in ``doc_id``
+    order, with each kernel run once (``doc_range_query``)."""
+    return doc_range_query(
+        spark, sf_dir, lambda d: media_frame(d, make, dec), "doc_id",
+        docs_fn=lambda d: d.select("doc_id", "text"),
+    )
+
+
 @query(
     "datapipe_warc_extract",
     # formulas mirror ingest.warc: n_pages = 2 + doc_id % 3, each page
@@ -1570,13 +1581,13 @@ def datapipe_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Odd docs arrive as ``.warc.gz`` in the Common Crawl layout — every
     record its own gzip member (trailers verified, exactly one record
     per member enforced) — so both forms of the container decode.
-    Per-file work in an Arrow ``mapInPandas`` kernel with no cross-row
-    state — at 100 TB the same kernel maps over ``binaryFile`` rows of
-    real crawl shards (``ingest/warc.py``)."""
-    from ..ingest.warc import extract_warc_records, synthesize_warc
+    Per-file work in ``decode_warc`` on the one codec host
+    (``multimodal/host.py``), fused with the synth in a single Python
+    stage and with no cross-row state — at 100 TB the same decoder maps
+    over ``binaryFile`` rows of real crawl shards (``ingest/warc.py``)."""
+    from ..ingest.warc import decode_warc, make_warc_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_warc_records(synthesize_warc(docs)).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_warc_bytes, decode_warc)
 
 
 @query(
@@ -1622,12 +1633,11 @@ def datapipe_zip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the ZIP64 EOCD record + locator, and per-member sentinel
     sizes/offsets through 0x0001 extended-information extras in both
     the central and local headers (``ingest/archives.py``).  Same
-    mapInPandas shape and 100 TB posture as
+    codec-host shape (one fused Python stage) and 100 TB posture as
     ``datapipe_warc_extract``."""
-    from ..ingest.archives import extract_zip_members
+    from ..ingest.archives import decode_zip, make_zip_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_zip_members(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_zip_bytes, decode_zip)
 
 
 @query(
@@ -1675,10 +1685,9 @@ def datapipe_tar_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``ingest/archives.py``) — the tape-archive sibling of
     ``datapipe_zip_extract`` over identical member slices, so the two
     containers' extractions cross-check each other."""
-    from ..ingest.archives import extract_tar_members
+    from ..ingest.archives import decode_tar, make_tar_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_tar_members(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_tar_bytes, decode_tar)
 
 
 @query(
@@ -1717,10 +1726,9 @@ def datapipe_tfrecord_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64_list values — with unknown fields skipped by wire type
     (``ingest/tfrecord.py``).  Completes the dataset-container
     inventory: WARC in, ZIP/TAR through, TFRecord out."""
-    from ..ingest.tfrecord import extract_tfrecord
+    from ..ingest.tfrecord import decode_tfrecord, make_tfrecord_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_tfrecord(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_tfrecord_bytes, decode_tfrecord)
 
 
 @query(
@@ -1774,10 +1782,9 @@ def datapipe_avro_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrays, IEEE doubles — with exact per-block byte-consumption
     accounting (``ingest/avro.py``).  Completes the dataset-container
     inventory beside WARC/ZIP/TAR/TFRecord."""
-    from ..ingest.avro import extract_avro
+    from ..ingest.avro import decode_avro, make_avro_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_avro(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_avro_bytes, decode_avro)
 
 
 @query(
@@ -1832,10 +1839,9 @@ def datapipe_avro_evolution_scan(
     (``ingest/avro.py:resolve_decode``).  Reference scope note: the
     reference delegates format evolution to its warehouse; this is
     part of the training-data-pipeline surface the brief adds."""
-    from ..ingest.avro import extract_avro_evolved
+    from ..ingest.avro import decode_avro_evolved, make_avro_v1_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_avro_evolved(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_avro_v1_bytes, decode_avro_evolved)
 
 
 @query(
@@ -1884,10 +1890,9 @@ def datapipe_gzip_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     of every line — and the member loop itself, since readers that
     stop at the first trailer silently drop the rest of a concatenated
     file (``ingest/archives.py``)."""
-    from ..ingest.archives import extract_gzip_jsonl
+    from ..ingest.archives import decode_gzip_jsonl, make_gzip_jsonl_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_gzip_jsonl(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_gzip_jsonl_bytes, decode_gzip_jsonl)
 
 
 @query(
@@ -2010,10 +2015,9 @@ def datapipe_zstd_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates storage formats to
     its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..ingest.zstd import extract_zstd
+    from ..ingest.zstd import decode_zstd, make_zstd_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_zstd(docs).orderBy("doc_id")
+    return media_query(spark, sf_dir, make_zstd_bytes, decode_zstd, "doc_id")
 
 
 @query(
@@ -2085,10 +2089,9 @@ def datapipe_zstd_dict_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates storage formats to
     its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..ingest.zstd import extract_zstd_dicts
+    from ..ingest.zstd import decode_zstd_dict, make_zstd_dict_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_zstd_dicts(docs).orderBy("doc_id")
+    return media_query(spark, sf_dir, make_zstd_dict_bytes, decode_zstd_dict, "doc_id")
 
 
 @query(
@@ -2251,10 +2254,9 @@ def datapipe_lz4_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference scope note: the reference delegates storage formats to
     its warehouse; this query is part of the training-data-pipeline
     surface the brief adds."""
-    from ..ingest.lz4 import extract_lz4
+    from ..ingest.lz4 import decode_lz4, make_lz4_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_lz4(docs).orderBy("doc_id")
+    return media_query(spark, sf_dir, make_lz4_bytes, decode_lz4, "doc_id")
 
 
 @query(
@@ -2302,12 +2304,11 @@ def datapipe_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     escapes (parens, backslash, octal) undone.  Cross-reference
     streams (PDF 1.5+), object streams, encryption, and non-Flate
     filters raise at the declared boundary (``ingest/pdf.py``).  Same
-    mapInPandas shape and 100 TB posture as the other container
-    extractors."""
-    from ..ingest.pdf import extract_pdf_text
+    codec-host shape (one fused Python stage) and 100 TB posture as the
+    other container extractors."""
+    from ..ingest.pdf import decode_pdf, make_pdf_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_pdf_text(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_pdf_bytes, decode_pdf)
 
 
 @query(
@@ -2358,9 +2359,8 @@ def datapipe_subtitle_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     enforces end-after-start and monotone cue order, and measures the
     payload lines.  Malformed timings, out-of-sequence cue numbers,
     and cue blocks without text raise (``ingest/pdf.py``).  Same
-    mapInPandas shape and 100 TB posture as the other text
-    extractors."""
-    from ..ingest.pdf import extract_subtitles
+    codec-host shape (one fused Python stage) and 100 TB posture as the
+    other text extractors."""
+    from ..ingest.pdf import decode_subtitles, make_subtitle_bytes
 
-    docs = load_table_compute(spark, sf_dir, "documents")
-    return extract_subtitles(docs).orderBy("doc_id")
+    return _text_container_query(spark, sf_dir, make_subtitle_bytes, decode_subtitles)

@@ -3898,10 +3898,10 @@ def test_h264_cavlc_completion_tables_are_valid():
 
 
 def test_h264_cavlc_decode_boundaries():
-    """CAVLC corruption handling: corrupting bytes inside a slice's
-    entropy data desyncs the coeff_token/level/total_zeros/run_before
-    walk and raises (invalid code, range violation, or exact-
-    consumption failure) rather than fabricating coefficients."""
+    """CAVLC corruption handling: corrupting the first slice's entropy
+    data at four chosen offsets desyncs the coeff_token/level/
+    total_zeros/run_before walk and raises (invalid code, range
+    violation, or exact-consumption failure)."""
     import pytest
 
     from open_source_etl_spark.multimodal.decode import decode_h264_cavlc
@@ -3913,10 +3913,11 @@ def test_h264_cavlc_decode_boundaries():
     ok = _decode_one(decode_h264_cavlc, 1, raw)
     assert ok.n_frames == 2 and ok.n_mbs == 4
 
-    # corrupting bytes inside the first slice's entropy data must
-    # raise (desync / partial-block / range violations), never return
-    # different sums silently — try several offsets to cover the
-    # distinct failure sites
+    # corrupting the first slice's entropy data at these four offsets
+    # raises (desync / partial-block / range violations) — one offset
+    # per distinct failure site.  CAVLC has no check bits, so other
+    # offsets can decode to different sums without raising; the
+    # corruption golden below pins every offset's outcome
     slice_at = raw.index(b"\x00\x00\x01\x65")  # first IDR NAL
     for off in (8, 12, 20, 33):
         corrupt = bytearray(raw)
@@ -5875,7 +5876,7 @@ def test_media_query_runs_each_kernel_once(spark, sf_dir):
     assert acc.value == n_docs
 
     old = spark.sparkContext.accumulator(0)
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     media_frame(docs, _counting_make(old), _passthrough()).orderBy("doc_id").toPandas()
     assert old.value > n_docs
 
@@ -5905,7 +5906,7 @@ def test_media_query_order_matches_orderby(spark, sf_dir, monkeypatch, splits):
     # read before collect: an executed AQE plan also lists its final form
     width = re.findall(r"rangepartitioning\(doc_id#\d+L ASC NULLS FIRST, (\d+)\)",
                        formatted_plan(got))
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     want = media_frame(docs, make_avi_bytes, decode_avi_mjpeg).orderBy(
         "doc_id", "frame_idx"
     )
@@ -5946,6 +5947,37 @@ def test_host_rejects_rows_that_do_not_fit_the_schema():
     batch = pd.DataFrame({"doc_id": [0], "payload": [b""]})
     with pytest.raises(ValueError, match="too_wide: rows have 2 values, schema has 1"):
         list(host(too_wide)(iter([batch])))
+
+
+def test_host_feeds_make_the_batch_columns():
+    """Given ``make``, the host calls it with each row's columns in
+    order: a ``doc_id, text`` batch reaches ``make`` as ``(int, str)``
+    (the ingest container builders read the text), a ``doc_id`` batch
+    as ``(int,)``."""
+    import pandas as pd
+
+    from open_source_etl_spark.multimodal.host import host
+
+    @decoder("doc_id long, n long")
+    def length():
+        return lambda doc_id, raw: [(len(raw),)]
+
+    calls = []
+
+    def make(*args):
+        calls.append(args)
+        return args[-1].encode() if len(args) == 2 else b"x" * args[0]
+
+    batch = pd.DataFrame({"doc_id": [4, 7], "text": ["héllo", ""]})
+    (out,) = host(length, make)(iter([batch]))
+    assert calls == [(4, "héllo"), (7, "")]
+    assert [type(v) for v in calls[0]] == [int, str]
+    assert out.to_dict("list") == {"doc_id": [4, 7], "n": [6, 0]}
+
+    calls.clear()
+    (out,) = host(length, make)(iter([batch[["doc_id"]]]))
+    assert calls == [(4,), (7,)]
+    assert out.to_dict("list") == {"doc_id": [4, 7], "n": [4, 7]}
 
 
 class _NoSession:

@@ -127,19 +127,30 @@ def test_python_under_range_exchange_counts_the_double_run_shape(spark):
     assert python_under_range_exchange(hashed) == 0
 
 
-# every multimodal_* query but phash_dedup, whose order comes out of a join
-PORTED_MEDIA = sorted(
-    n for n in QUERIES
-    if n.startswith("multimodal_") and n != "multimodal_phash_dedup"
+# every query on the codec host: each multimodal_* query but phash_dedup,
+# whose order comes out of a join, and the 12 ingest container scans
+HOSTED_KERNELS = sorted(
+    [
+        n for n in QUERIES
+        if n.startswith("multimodal_") and n != "multimodal_phash_dedup"
+    ]
+    + [
+        "datapipe_warc_extract", "datapipe_zip_extract",
+        "datapipe_tar_extract", "datapipe_tfrecord_scan",
+        "datapipe_avro_scan", "datapipe_avro_evolution_scan",
+        "datapipe_gzip_jsonl_scan", "datapipe_lz4_scan",
+        "datapipe_zstd_scan", "datapipe_zstd_dict_scan",
+        "datapipe_pdf_text_extract", "datapipe_subtitle_extract",
+    ]
 )
 
 
-@pytest.mark.parametrize("name", PORTED_MEDIA)
+@pytest.mark.parametrize("name", HOSTED_KERNELS)
 def test_media_kernels_run_once(audit, name):
-    """No media kernel sits under a range-partitioning exchange: Spark's
-    RangePartitioner samples by running the exchange's child, so a
-    kernel there runs twice (``doc_range_query`` partitions the input
-    docs instead)."""
+    """No codec kernel (media or ingest container) sits under a
+    range-partitioning exchange: Spark's RangePartitioner samples by
+    running the exchange's child, so a kernel there runs twice
+    (``doc_range_query`` partitions the input docs instead)."""
     facts = audit(name)
     assert facts.python_stages == 1, (name, facts.python_stages)
     assert facts.python_under_range_exchange == 0, (name, facts.plan)

@@ -121,7 +121,7 @@ INGEST_GOLDEN = {
     "make_warc_bytes": (warc.make_warc_bytes, TEXT_ARGS, "6b2909fdf6c356b38138a170be906840489b92a137199a3190f7d839109a9c1e"),
     "make_zip_bytes": (archives.make_zip_bytes, TEXT_ARGS, "7b4429daf5884871ef5c996a6b78e03636df29cca0a13b77c37606489cf8aa30"),
     "make_zstd_bytes": (zstd.make_zstd_bytes, DOC_ARGS, "6d15c3bd785930bde161ad2eaace95f23c3c00d7cf0a11b804beaf7ca870d499"),
-    "make_zstd_dict_frames": (lambda d: zstd.make_zstd_dict_frames(d)[0], DOC_ARGS, "8ebeb7b99db915e096d1fff656aaad47ab80f77ce056aef812688aa0fa1daf90"),
+    "make_zstd_dict_bytes": (zstd.make_zstd_dict_bytes, DOC_ARGS, "8ebeb7b99db915e096d1fff656aaad47ab80f77ce056aef812688aa0fa1daf90"),
     "make_zstd_dictionary": (zstd.make_zstd_dictionary, DICT_ARGS, "374996fef738a09824d2967a37668cc6b8403fadc574f436067583114010a91b"),
 }
 

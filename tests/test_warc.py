@@ -85,17 +85,17 @@ def test_warc_rejects_malformed():
 
 
 def test_warc_extract_distributed(spark):
-    """The mapInPandas path produces one row per doc with the same
+    """The codec host over a ``doc_id, text`` frame feeds the text to
+    ``make_warc_bytes`` and produces one row per doc with the same
     values as the pure parse."""
-    from open_source_etl_spark.ingest.warc import (
-        extract_warc_records,
-        synthesize_warc,
-    )
+    from open_source_etl_spark.ingest.warc import decode_warc
+    from open_source_etl_spark.multimodal.decode import media_frame
 
     docs = spark.createDataFrame(
         [(i, "word " * (10 + i)) for i in range(6)], "doc_id long, text string"
     )
-    rows = {r.doc_id: r for r in extract_warc_records(synthesize_warc(docs)).collect()}
+    rows = {r.doc_id: r for r in media_frame(docs, make_warc_bytes, decode_warc).collect()}
+    assert len(rows) == 6
     for i in range(6):
         exp = parse_warc(i, make_warc_bytes(i, "word " * (10 + i)))[:4]
         got = (rows[i].n_records, rows[i].n_responses, rows[i].n_ok,
@@ -1109,20 +1109,20 @@ def test_zstd_dictionary_frames():
     from open_source_etl_spark.ingest.zstd import (
         DICT_MAGIC,
         _load_dictionary,
-        make_zstd_dict_frames,
+        make_zstd_dict_bytes,
         make_zstd_dictionary,
         parse_zstd,
         zstd_dict_content,
         zstd_dict_frame0_content,
         zstd_dict_frame1_content,
         zstd_dict_ids,
+        zstd_dicts,
     )
 
     for d in (0, 1, 4, 5, 7, 12, 29, 49):
-        raw, dicts = make_zstd_dict_frames(d)
         used: list[int] = []
         nf, _ns, nb, cb, cs, nck = parse_zstd(
-            d, raw, dicts=dicts, used_dids=used
+            d, make_zstd_dict_bytes(d), dicts=zstd_dicts(d), used_dids=used
         )
         c0 = zstd_dict_frame0_content(d)
         c1 = zstd_dict_frame1_content(d)
@@ -1143,7 +1143,7 @@ def test_zstd_dictionary_frames():
     assert rawd["content"] == zstd_dict_content(d2)
 
     # frame referencing a dictionary that was not provided
-    raw, dicts = make_zstd_dict_frames(3)
+    raw, dicts = make_zstd_dict_bytes(3), zstd_dicts(3)
     missing = dict(dicts)
     missing.pop(d1)
     with pytest.raises(ValueError, match="not provided"):

@@ -120,7 +120,7 @@ def main() -> None:
     # warm: JVM + python workers
     spark.range(1000).mapInPandas(lambda it: it, "id long").collect()
     queries = all_queries()
-    docs = load_table_compute(spark, sf_dir, "documents")
+    docs = load_table_compute(spark, sf_dir, "documents").select("doc_id")
 
     @decoder("doc_id long")
     def payload_only():
