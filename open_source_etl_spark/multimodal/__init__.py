@@ -23,8 +23,12 @@ bytes, never collect payloads to the driver).
 Each codec is two pure row functions: ``make_X_bytes(doc_id) -> bytes``
 in ``synth.py`` and an ``@decoder(SCHEMA)`` factory returning ``(doc_id,
 raw) -> rows``.  ``host.py`` holds the one ``mapInPandas`` batch loop
-around them; ``decode.media_frame(docs, make, decode_X)`` runs both in a
-single Python stage, and ``decode_X(media_df)`` decodes a ``doc_id,
+around them, for the ``ingest/`` dataset containers too (WARC, ZIP,
+TAR, Avro, zstd, ...), whose builders also take the document text;
+``decode.media_frame(docs, make, decode_X)`` runs both in a single
+Python stage, calling ``make`` with each row's columns in order
+(``make(doc_id)`` over a ``doc_id`` frame, ``make(doc_id, text)`` over a
+``doc_id, text`` one), and ``decode_X(media_df)`` decodes a ``doc_id,
 payload`` frame.  The six ``media.payload`` feature kernels
 (``decode_image_meta``, ``sample_frames``, ``audio_chunk_energy``,
 ``block_mean_resize``, ``byte_histogram``, ``perceptual_hash``) are
