@@ -3926,25 +3926,104 @@ def test_h264_cavlc_decode_boundaries():
             _decode_rows(decode_h264_cavlc, 1, bytes(corrupt))
 
 
-def test_h264_cavlc_corruption_golden():
-    """Raise parity of the CAVLC decoder: for doc_ids 0-63, every byte
-    of the first IDR slice's payload is flipped (XOR 0xFF) in turn and
-    the outcome — the decoded rows, or the exception's type and
-    message — is pinned by one sha256 over all 17,650 outcomes.  Any
-    change to which error a corrupt stream raises, or to the sums a
-    corrupt-but-parseable stream yields, moves the hash."""
+def _idr_slice(raw: bytes) -> range:
+    """Offsets of the first IDR slice's payload (after its NAL header)."""
+    start = raw.index(b"\x00\x00\x01\x65") + 4
+    end = raw.find(b"\x00\x00\x01", start)
+    return range(start, len(raw) if end < 0 else end)
+
+
+def _tfrecord_bytes(doc_id: int) -> bytes:
+    from open_source_etl_spark.ingest.tfrecord import make_tfrecord_bytes
+
+    return make_tfrecord_bytes(
+        doc_id, "The quick brown fox jumps over the lazy dog, 0123456789 times."
+    )
+
+
+# family: (builder module, builder, decoder module, decoder, doc_ids,
+#          offsets of one payload to flip, outcome count, sha256)
+CORRUPTION_GOLDEN = {
+    "h264_cavlc": (
+        "multimodal.synth", "make_h264_cavlc_bytes",
+        "multimodal.decode", "decode_h264_cavlc", range(64), _idr_slice, 17650,
+        "6ce57ec257f6be83185fc0ee7fdbf3c4854baa3db9408e7ea81f4eecab674763",
+    ),
+    "jpeg": (
+        "multimodal.synth", "make_jpeg_bytes",
+        "multimodal.decode", "decode_jpeg_real", range(32), None, 5148,
+        "868401a9b8be64d81d0bf94370a27aa2c07a54a2ae68ddecd4e1629e0a031eef",
+    ),
+    "jpeg_progressive": (
+        "multimodal.synth", "make_jpeg_prog_bytes",
+        "multimodal.decode", "decode_jpeg_progressive", range(8), None, 2061,
+        "4716c1bcf12bd34f44f2c79cb1bf55d4d357f90ed9d9ce9e1eb33475e0ef8553",
+    ),
+    "jpeg_color": (
+        "multimodal.synth", "make_jpeg_color_bytes",
+        "multimodal.decode", "decode_jpeg_color", range(8), None, 2881,
+        "9964e05fb9021adf3334698cab2a42dada1cf449d2550586b7bc409028779f50",
+    ),
+    "flac": (
+        "multimodal.synth", "make_flac_bytes",
+        "multimodal.decode", "decode_flac_real", range(4), None, 3496,
+        "2c3582a030cac2c03309453d014be2f5e91cf8e74b40727909a7e5b209c908b3",
+    ),
+    "flac_stereo": (
+        "multimodal.synth", "make_flac_stereo_bytes",
+        "multimodal.decode", "decode_flac_stereo", range(1), None, 3254,
+        "d285693b0a8445acdb264597d3e95c44a6a291c6aad30ee20f3164b059a682b6",
+    ),
+    "webp_vp8l_transform": (
+        "multimodal.synth", "make_webp_vp8l_transform_bytes",
+        "multimodal.decode", "decode_webp", range(4),
+        lambda raw: range(0, len(raw), 3), 808,
+        "b2f4a0d2b444283c58fa30c09ccd7115e8c4b6d69ec25405e7e2d38a8f3e9df9",
+    ),
+    "zstd": (
+        "ingest.zstd", "make_zstd_bytes",
+        "ingest.zstd", "decode_zstd", range(16), None, 2556,
+        "af81cc294045047040a20652051a28e99d0be542bf2c67df411f49150c493439",
+    ),
+    "zstd_dict": (
+        "ingest.zstd", "make_zstd_dict_bytes",
+        "ingest.zstd", "decode_zstd_dict", range(16), None, 1095,
+        "8df13a8beec8f2dd45dc5d9b18fce9e93e287f2a04d7bb28dcf156d6a9aa4241",
+    ),
+    "tfrecord": (
+        __name__, "_tfrecord_bytes",
+        "ingest.tfrecord", "decode_tfrecord", range(16), None, 3579,
+        "7eb4725089151f6a885edcf78a801cd3d7e389c65d21b9cb3474c55a9b39a608",
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(CORRUPTION_GOLDEN))
+def test_corruption_golden(family):
+    """Raise parity of the bit-level decoders: for each family, every
+    byte of each doc's payload (or of the offsets its entry names) is
+    flipped (XOR 0xFF) in turn and the outcome — the decoded rows, or
+    the exception's type and message — is pinned by one sha256 over
+    all outcomes.  Any change to which error a corrupt stream raises,
+    or to the rows a corrupt-but-parseable stream yields, moves the
+    hash.  Spark-free: the decoders' row functions run directly."""
     import hashlib
+    import importlib
 
-    from open_source_etl_spark.multimodal.decode import decode_h264_cavlc
-    from open_source_etl_spark.multimodal.synth import make_h264_cavlc_bytes
+    def load(mod: str, name: str):
+        if mod != __name__:
+            mod = "open_source_etl_spark." + mod
+        return getattr(importlib.import_module(mod), name)
 
-    row_fn = decode_h264_cavlc.factory()
+    make_mod, make, dec_mod, dec, docs, offsets, count, want = (
+        CORRUPTION_GOLDEN[family]
+    )
+    make = load(make_mod, make)
+    row_fn = load(dec_mod, dec).factory()
     out = []
-    for doc in range(64):
-        raw = make_h264_cavlc_bytes(doc)
-        start = raw.index(b"\x00\x00\x01\x65") + 4  # after the NAL header
-        end = raw.find(b"\x00\x00\x01", start)
-        for off in range(start, len(raw) if end < 0 else end):
+    for doc in docs:
+        raw = make(doc)
+        for off in offsets(raw) if offsets else range(len(raw)):
             bad = bytearray(raw)
             bad[off] ^= 0xFF
             try:
@@ -3952,10 +4031,8 @@ def test_h264_cavlc_corruption_golden():
             except Exception as e:
                 got = f"{type(e).__name__}: {e}"
             out.append(got)
-    assert len(out) == 17650
-    assert hashlib.sha256("\n".join(out).encode()).hexdigest() == (
-        "6ce57ec257f6be83185fc0ee7fdbf3c4854baa3db9408e7ea81f4eecab674763"
-    )
+    assert len(out) == count
+    assert hashlib.sha256("\n".join(out).encode()).hexdigest() == want
 
 
 def test_tiff_predictor2_decodes_and_bounds(spark):

@@ -53,6 +53,14 @@ FAMILIES = {
         "make_jpeg_exif_bytes", "decode_jpeg_exif"),
     "multimodal_aac_adts_walk": (
         "make_aac_adts_bytes", "decode_aac_adts"),
+    "multimodal_jpeg_decode": (
+        "make_jpeg_bytes", "decode_jpeg_real"),
+    "multimodal_jpeg_progressive_decode": (
+        "make_jpeg_prog_bytes", "decode_jpeg_progressive"),
+    "multimodal_flac_decode": (
+        "make_flac_bytes", "decode_flac_real"),
+    "multimodal_webp_vp8l_decode": (
+        "make_webp_vp8l_bytes", "decode_webp"),
 }
 
 
