@@ -23,20 +23,11 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
+from ..multimodal.bits import crc_table
 from ..multimodal.host import decoder
 
 
-def _crc32c_table() -> tuple:
-    table = []
-    for byte in range(256):
-        crc = byte
-        for _ in range(8):
-            crc = (crc >> 1) ^ 0x82F63B78 if crc & 1 else crc >> 1
-        table.append(crc)
-    return tuple(table)
-
-
-_CRC32C_TABLE = _crc32c_table()
+_CRC32C_TABLE = crc_table(0x82F63B78, 32, reflect=True)
 _MASK_DELTA = 0xA282EAD8
 
 

@@ -25,8 +25,12 @@ other container extractors (SCALE.md §9f/§9h).
 """
 from __future__ import annotations
 
+import functools
 import struct
 
+from ..multimodal.bits import (
+    BackReader, LsbReader, LsbWriter, MsbWriter, backward_bytes,
+)
 from ..multimodal.host import decoder
 
 # XXH64 (the xxHash64 primes from the reference specification)
@@ -177,10 +181,10 @@ def _zstd_compressed_block(
     rle_seq = (not four_stream) and k % 4 == 2
 
     def enc_stream(symbols: bytes) -> bytes:
-        w = _BackBitWriter()
+        w = MsbWriter()
         for s in symbols:
-            w.put(codes[s], nbits[s])
-        return w.to_bytes()
+            w.u(codes[s], nbits[s])
+        return backward_bytes(w)
 
     if four_stream:
         per = (n_lit + 3) // 4
@@ -204,7 +208,7 @@ def _zstd_compressed_block(
         h = (2 | (0 << 2) | (n_lit << 4) | (csize << 14)) & 0xFFFFFF
         lit_sec = struct.pack("<I", h)[:3] + body
 
-    w = _BackBitWriter()
+    w = MsbWriter()
     if rle_seq:
         # RLE-mode tables: fixed codes ll=5, ml code 7 (ml 10),
         # of code 4; both sequences' 4 extra bits select offset 15
@@ -212,8 +216,8 @@ def _zstd_compressed_block(
         seq += bytes((0x54,))        # modes: RLE / RLE / RLE
         seq += bytes((5, 4, 7))      # LL, OF, ML symbols (7.3 order)
         for _ in range(2):
-            w.put(15 + 3 - (1 << 4), 4)  # of_value 18 -> offset 15
-        seq += w.to_bytes()
+            w.u(15 + 3 - (1 << 4), 4)  # of_value 18 -> offset 15
+        seq += backward_bytes(w)
         return lit_sec_block(lit_sec, seq, last=int(last))
     ll1 = n_lit - ll0 - 4
     of1 = h_len + ll0 + 3 + ll1 - 3  # source lands at payload byte 3
@@ -243,28 +247,28 @@ def _zstd_compressed_block(
         )
         modes = (2 << 6) | (0 << 4) | (2 << 2)
     else:
-        ll_tab = _fse_decode_table(ZSTD_LL_DIST, ZSTD_LL_ACCLOG)
-        ml_tab = _fse_decode_table(ZSTD_ML_DIST, ZSTD_ML_ACCLOG)
+        ll_tab = ZSTD_LL_TABLE
+        ml_tab = ZSTD_ML_TABLE
         ll_log, ml_log = ZSTD_LL_ACCLOG, ZSTD_ML_ACCLOG
         tables = b""
         modes = 0x00
-    of_tab = _fse_decode_table(ZSTD_OF_DIST, ZSTD_OF_ACCLOG)
+    of_tab = ZSTD_OF_TABLE
     ll_states, ll_upd = _fse_pick_states(ll_tab, ll_codes, doc_id)
     of_states, of_upd = _fse_pick_states(of_tab, of_codes, doc_id)
     ml_states, ml_upd = _fse_pick_states(ml_tab, ml_codes, doc_id)
-    w.put(ll_states[0], ll_log)
-    w.put(of_states[0], ZSTD_OF_ACCLOG)
-    w.put(ml_states[0], ml_log)
+    w.u(ll_states[0], ll_log)
+    w.u(of_states[0], ZSTD_OF_ACCLOG)
+    w.u(ml_states[0], ml_log)
     for s in range(3):
-        w.put(of_vals[s] - (1 << of_codes[s]), of_codes[s])
+        w.u(of_vals[s] - (1 << of_codes[s]), of_codes[s])
         # ml/ll codes here carry no extra bits by construction
         if s < 2:
-            w.put(*ll_upd[s])
-            w.put(*ml_upd[s])
-            w.put(*of_upd[s])
+            w.u(*ll_upd[s])
+            w.u(*ml_upd[s])
+            w.u(*of_upd[s])
     # table descriptions sit between the modes byte and the bitstream,
     # in LL / OF / ML field order
-    seq = bytes((3, modes)) + tables + w.to_bytes()
+    seq = bytes((3, modes)) + tables + backward_bytes(w)
     return lit_sec_block(lit_sec, seq, last=int(last))
 
 
@@ -298,10 +302,10 @@ def _zstd_block4(doc_id: int, i: int) -> bytes:
         fse_w=k % 5 == 1
     )
     lits = bytes((k + j) % 8 for j in range(4))
-    wlit = _BackBitWriter()
+    wlit = MsbWriter()
     for sym in lits:
-        wlit.put(codes[sym], nbits[sym])
-    body = wlit.to_bytes()
+        wlit.u(codes[sym], nbits[sym])
+    body = backward_bytes(wlit)
     h = (3 | (0 << 2) | (4 << 4) | (len(body) << 14)) & 0xFFFFFF
     lit_sec = struct.pack("<I", h)[:3] + body
     # one sequence: ll 2, ml = ml1, offset reaching the RLE run
@@ -324,21 +328,21 @@ def _zstd_block4(doc_id: int, i: int) -> bytes:
         ml_tab = _fse_decode_table(custom_dist(used_ml, 5), 5)
         ll_log = ml_log = 5
     else:
-        ll_tab = _fse_decode_table(ZSTD_LL_DIST, ZSTD_LL_ACCLOG)
-        ml_tab = _fse_decode_table(ZSTD_ML_DIST, ZSTD_ML_ACCLOG)
+        ll_tab = ZSTD_LL_TABLE
+        ml_tab = ZSTD_ML_TABLE
         ll_log, ml_log = ZSTD_LL_ACCLOG, ZSTD_ML_ACCLOG
-    of_tab = _fse_decode_table(ZSTD_OF_DIST, ZSTD_OF_ACCLOG)
+    of_tab = ZSTD_OF_TABLE
     of_val = of4 + 3
     of_code = of_val.bit_length() - 1
     ll_states, _ = _fse_pick_states(ll_tab, [2], doc_id)
     of_states, _ = _fse_pick_states(of_tab, [of_code], doc_id)
     ml_states, _ = _fse_pick_states(ml_tab, [ml1 - 3], doc_id)
-    w = _BackBitWriter()
-    w.put(ll_states[0], ll_log)
-    w.put(of_states[0], ZSTD_OF_ACCLOG)
-    w.put(ml_states[0], ml_log)
-    w.put(of_val - (1 << of_code), of_code)
-    seq = bytes((1, 0xFC)) + w.to_bytes()  # modes: repeat/repeat/repeat
+    w = MsbWriter()
+    w.u(ll_states[0], ll_log)
+    w.u(of_states[0], ZSTD_OF_ACCLOG)
+    w.u(ml_states[0], ml_log)
+    w.u(of_val - (1 << of_code), of_code)
+    seq = bytes((1, 0xFC)) + backward_bytes(w)  # modes: repeat/repeat/repeat
     return lit_sec_block(lit_sec, seq, last=1)
 
 
@@ -655,116 +659,6 @@ def parse_zstd(
     return n_frames, n_skip, n_blocks, c_bytes, c_sum, n_ck
 
 
-class _BackBits:
-    """RFC 8878 backward bitstream: the encoder pads the LAST byte
-    with a 1-sentinel above the payload bits; the decoder consumes
-    from just below the sentinel toward byte 0."""
-
-    def __init__(self, doc_id: int, buf: bytes):
-        if not buf or buf[-1] == 0:
-            raise ValueError(
-                f"doc {doc_id}: backward bitstream missing its sentinel"
-            )
-        self.acc = int.from_bytes(buf, "little")
-        self.bits_left = self.acc.bit_length() - 1
-        self.doc_id = doc_id
-
-    def read(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if n > self.bits_left:
-            raise ValueError(
-                f"doc {self.doc_id}: backward bitstream exhausted"
-            )
-        self.bits_left -= n
-        return (self.acc >> self.bits_left) & ((1 << n) - 1)
-
-    def peek_padded(self, n: int) -> int:
-        """The next up-to-n bits left-aligned into an n-bit value,
-        zero-padded past the stream end (the spec's end-of-stream
-        Huffman peek semantics)."""
-        have = min(n, self.bits_left)
-        v = (self.acc >> (self.bits_left - have)) & ((1 << have) - 1)
-        return v << (n - have)
-
-
-class _BackBitWriter:
-    """Encoder twin of ``_BackBits``: append fields in DECODE order;
-    ``to_bytes`` packs them under the sentinel."""
-
-    def __init__(self) -> None:
-        self.acc = 1
-        self.nbits = 0
-
-    def put(self, value: int, n: int) -> None:
-        if n:
-            self.acc = (self.acc << n) | value
-            self.nbits += n
-
-    def to_bytes(self) -> bytes:
-        return self.acc.to_bytes((self.nbits + 8) // 8, "little")
-
-
-class _FwdBits:
-    """Forward little-endian bitstream (RFC 8878 FSE table
-    descriptions): bits are consumed LSB-first within each byte."""
-
-    def __init__(self, doc_id: int, raw: bytes, pos: int):
-        self.raw = raw
-        self.byte = pos
-        self.bit = 0
-        self.doc_id = doc_id
-
-    def read(self, n: int) -> int:
-        out = 0
-        got = 0
-        while got < n:
-            if self.byte >= len(self.raw):
-                raise ValueError(
-                    f"doc {self.doc_id}: FSE description overruns the "
-                    "block"
-                )
-            take = min(8 - self.bit, n - got)
-            out |= (
-                (self.raw[self.byte] >> self.bit) & ((1 << take) - 1)
-            ) << got
-            got += take
-            self.bit += take
-            if self.bit == 8:
-                self.bit = 0
-                self.byte += 1
-        return out
-
-    def align(self) -> int:
-        if self.bit:
-            self.bit = 0
-            self.byte += 1
-        return self.byte
-
-
-class _FwdBitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.cur = 0
-        self.bit = 0
-
-    def put(self, value: int, n: int) -> None:
-        for j in range(n):
-            self.cur |= ((value >> j) & 1) << self.bit
-            self.bit += 1
-            if self.bit == 8:
-                self.out.append(self.cur)
-                self.cur = 0
-                self.bit = 0
-
-    def to_bytes(self) -> bytes:
-        if self.bit:
-            self.out.append(self.cur)
-            self.cur = 0
-            self.bit = 0
-        return bytes(self.out)
-
-
 def _read_fse_description(
     doc_id: int, raw: bytes, pos: int, max_acclog: int
 ) -> tuple[list[int], int, int]:
@@ -780,7 +674,10 @@ def _read_fse_description(
     -1 taking one slot, and a ZERO probability is followed by 2-bit
     repeat flags counting further zero-probability symbols (value 3
     chains).  Ends byte-aligned with the budget spent exactly."""
-    br = _FwdBits(doc_id, raw, pos)
+    br = LsbReader(
+        raw, f"doc {doc_id}: FSE description overruns the block",
+        byte_offset=pos,
+    )
     acclog = 5 + br.read(4)
     if acclog > max_acclog:
         raise ValueError(
@@ -822,7 +719,7 @@ def _read_fse_description(
 
 def _write_fse_description(dist: list[int], acclog: int) -> bytes:
     """Encoder twin of ``_read_fse_description``."""
-    w = _FwdBitWriter()
+    w = LsbWriter()
     w.put(acclog - 5, 4)
     remaining = (1 << acclog) + 1
     threshold = 1 << acclog
@@ -951,7 +848,7 @@ def _fse_decode_interleaved(
     followed by that state's nb_bits update — until an update would
     over-run the stream, at which point the OTHER state's symbol is
     emitted and decoding stops."""
-    br = _BackBits(doc_id, buf)
+    br = BackReader(doc_id, buf)
     s1 = br.read(acclog)
     s2 = br.read(acclog)
     out: list[int] = []
@@ -993,15 +890,15 @@ def _fse_encode_interleaved(
     s2, u2 = _fse_pick_states(
         dtable, chain2, -1, last_needs_bits=not even
     )
-    w = _BackBitWriter()
-    w.put(s1[0], acclog)
-    w.put(s2[0], acclog)
+    w = MsbWriter()
+    w.u(s1[0], acclog)
+    w.u(s2[0], acclog)
     for j in range(max(len(u1), len(u2))):
         if j < len(u1):
-            w.put(*u1[j])
+            w.u(*u1[j])
         if j < len(u2):
-            w.put(*u2[j])
-    return w.to_bytes()
+            w.u(*u2[j])
+    return backward_bytes(w)
 
 
 # FSE distribution the fixture's compressed weight headers use
@@ -1030,6 +927,11 @@ ZSTD_OF_DIST = (
     1, 1, -1, -1, -1, -1, -1,
 )
 ZSTD_OF_ACCLOG = 5
+# ... and their decode tables, built once (tuples: shared read-only by
+# the decoder's predefined mode and the encoders)
+ZSTD_LL_TABLE = tuple(_fse_decode_table(ZSTD_LL_DIST, ZSTD_LL_ACCLOG))
+ZSTD_ML_TABLE = tuple(_fse_decode_table(ZSTD_ML_DIST, ZSTD_ML_ACCLOG))
+ZSTD_OF_TABLE = tuple(_fse_decode_table(ZSTD_OF_DIST, ZSTD_OF_ACCLOG))
 
 # literals-length and match-length code tables (RFC 3.1.1.3.2.1) —
 # baseline/extra-bit progressions
@@ -1098,7 +1000,7 @@ def _huffman_decode_stream(
     doc_id: int, buf: bytes, n_symbols: int, slots: list, nbits: list,
     max_bits: int,
 ) -> bytes:
-    br = _BackBits(doc_id, buf)
+    br = BackReader(doc_id, buf)
     out = bytearray()
     for _ in range(n_symbols):
         if br.bits_left <= 0:
@@ -1273,12 +1175,12 @@ def _decode_compressed_block(
         raise ValueError(f"doc {doc_id}: reserved sequence-mode bits")
 
     def seq_table(
-        mode: int, dist: tuple, acclog: int, max_code: int,
+        mode: int, predefined: tuple, acclog: int, max_code: int,
         max_acclog: int,
     ):
         nonlocal pos
         if mode == 0:
-            return _fse_decode_table(dist, acclog), acclog
+            return predefined, acclog
         if mode == 1:  # RLE: a degenerate one-state table
             sym = raw[pos]
             pos += 1
@@ -1301,13 +1203,13 @@ def _decode_compressed_block(
         return None  # mode 3: repeat the frame's previous table
 
     fields = []
-    for shift, dist, acclog, max_code, max_al in (
-        (6, ZSTD_LL_DIST, ZSTD_LL_ACCLOG, 35, 9),
-        (4, ZSTD_OF_DIST, ZSTD_OF_ACCLOG, 31, 8),
-        (2, ZSTD_ML_DIST, ZSTD_ML_ACCLOG, 52, 9),
+    for shift, predefined, acclog, max_code, max_al in (
+        (6, ZSTD_LL_TABLE, ZSTD_LL_ACCLOG, 35, 9),
+        (4, ZSTD_OF_TABLE, ZSTD_OF_ACCLOG, 31, 8),
+        (2, ZSTD_ML_TABLE, ZSTD_ML_ACCLOG, 52, 9),
     ):
         got = seq_table(
-            (modes >> shift) & 3, dist, acclog, max_code, max_al
+            (modes >> shift) & 3, predefined, acclog, max_code, max_al
         )
         fields.append(got)
     if any(f is None for f in fields):
@@ -1322,7 +1224,7 @@ def _decode_compressed_block(
         ]
     fstate["tables"] = fields
     (ll_tab, ll_log), (of_tab, of_log), (ml_tab, ml_log) = fields
-    br = _BackBits(doc_id, raw[pos:block_end])
+    br = BackReader(doc_id, raw[pos:block_end])
     ll_state = br.read(ll_log)
     of_state = br.read(of_log)
     ml_state = br.read(ml_log)
@@ -1405,6 +1307,7 @@ def zstd_dict_content(did: int) -> bytes:
     return bytes((did + 3 * j) % 256 for j in range(40 + did % 24))
 
 
+@functools.cache
 def make_zstd_dictionary(did: int) -> bytes:
     """Serialize dictionary ``did``: FORMATTED (RFC 8878 §5 — magic,
     ID, Huffman weights + OF/ML/LL table descriptions carrying the
@@ -1485,10 +1388,10 @@ def make_zstd_dict_bytes(doc_id: int) -> bytes:
     # ---- frame 0: formatted dict, treeless + repeat-mode block ----
     lits = bytes((doc_id + j) % 8 for j in range(n_lit))
     _hdr, codes, nbits, _mb, _slots = _zstd_huffman_enc()
-    wlit = _BackBitWriter()
+    wlit = MsbWriter()
     for s in lits:
-        wlit.put(codes[s], nbits[s])
-    body = wlit.to_bytes()
+        wlit.u(codes[s], nbits[s])
+    body = backward_bytes(wlit)
     h = (3 | (0 << 2) | (n_lit << 4) | (len(body) << 14)) & 0xFFFFFF
     lit_sec = struct.pack("<I", h)[:3] + body
     ll1 = 2
@@ -1496,23 +1399,23 @@ def make_zstd_dict_bytes(doc_id: int) -> bytes:
     ml_codes = [m1 - 3, m2 - 3]
     of_vals = [(ll0 + dlen1 - 2) + 3, 2]  # far match, then Repeat2
     of_codes = [v.bit_length() - 1 for v in of_vals]
-    ll_tab = _fse_decode_table(ZSTD_LL_DIST, ZSTD_LL_ACCLOG)
-    ml_tab = _fse_decode_table(ZSTD_ML_DIST, ZSTD_ML_ACCLOG)
-    of_tab = _fse_decode_table(ZSTD_OF_DIST, ZSTD_OF_ACCLOG)
+    ll_tab = ZSTD_LL_TABLE
+    ml_tab = ZSTD_ML_TABLE
+    of_tab = ZSTD_OF_TABLE
     ll_states, ll_upd = _fse_pick_states(ll_tab, ll_codes, doc_id)
     of_states, of_upd = _fse_pick_states(of_tab, of_codes, doc_id)
     ml_states, ml_upd = _fse_pick_states(ml_tab, ml_codes, doc_id)
-    w = _BackBitWriter()
-    w.put(ll_states[0], ZSTD_LL_ACCLOG)
-    w.put(of_states[0], ZSTD_OF_ACCLOG)
-    w.put(ml_states[0], ZSTD_ML_ACCLOG)
+    w = MsbWriter()
+    w.u(ll_states[0], ZSTD_LL_ACCLOG)
+    w.u(of_states[0], ZSTD_OF_ACCLOG)
+    w.u(ml_states[0], ZSTD_ML_ACCLOG)
     for s in range(2):
-        w.put(of_vals[s] - (1 << of_codes[s]), of_codes[s])
+        w.u(of_vals[s] - (1 << of_codes[s]), of_codes[s])
         if s < 1:
-            w.put(*ll_upd[s])
-            w.put(*ml_upd[s])
-            w.put(*of_upd[s])
-    seq = bytes((2, 0xFC)) + w.to_bytes()  # modes: repeat x3
+            w.u(*ll_upd[s])
+            w.u(*ml_upd[s])
+            w.u(*of_upd[s])
+    seq = bytes((2, 0xFC)) + backward_bytes(w)  # modes: repeat x3
     block0 = lit_sec_block(lit_sec, seq, last=1)
     content0 = zstd_dict_frame0_content(doc_id)
     did_flag = 3 if doc_id % 5 == 0 else 2
@@ -1532,12 +1435,12 @@ def make_zstd_dict_bytes(doc_id: int) -> bytes:
     ll_states2, _ = _fse_pick_states(ll_tab, [4], doc_id)
     of_states2, _ = _fse_pick_states(of_tab, [of_code2], doc_id)
     ml_states2, _ = _fse_pick_states(ml_tab, [m3 - 3], doc_id)
-    w2 = _BackBitWriter()
-    w2.put(ll_states2[0], ZSTD_LL_ACCLOG)
-    w2.put(of_states2[0], ZSTD_OF_ACCLOG)
-    w2.put(ml_states2[0], ZSTD_ML_ACCLOG)
-    w2.put(of_val2 - (1 << of_code2), of_code2)
-    seq2 = bytes((1, 0x00)) + w2.to_bytes()  # modes: predefined x3
+    w2 = MsbWriter()
+    w2.u(ll_states2[0], ZSTD_LL_ACCLOG)
+    w2.u(of_states2[0], ZSTD_OF_ACCLOG)
+    w2.u(ml_states2[0], ZSTD_ML_ACCLOG)
+    w2.u(of_val2 - (1 << of_code2), of_code2)
+    seq2 = bytes((1, 0x00)) + backward_bytes(w2)  # modes: predefined x3
     block1 = lit_sec_block(lit_sec2, seq2, last=1)
     content1 = zstd_dict_frame1_content(doc_id)
     out += struct.pack("<I", ZSTD_MAGIC)

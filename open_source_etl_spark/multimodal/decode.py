@@ -38,6 +38,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .bits import LsbReader, MsbReader
 from .host import Decoder, decoder, host, indexed
 from .schema import IMAGE_META_SCHEMA
 
@@ -485,78 +486,12 @@ def _build_huffman(counts: bytes, symbols: bytes) -> dict:
     return table
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def bit(self) -> int:
-        if not self.nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("entropy stream truncated")
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.nbits = 8
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        # multi-byte refill instead of a per-bit loop; the accumulator
-        # keeps its low `nbits` bits valid (high bits are consumed
-        # garbage, masked out on extraction) and is clamped to 32 bits
-        # so it never grows into a big integer
-        nbits = self.nbits
-        if nbits < n:
-            data = self.data
-            pos = self.pos
-            acc = self.acc
-            ln = len(data)
-            while nbits < n:
-                if pos >= ln:
-                    raise ValueError("entropy stream truncated")
-                acc = ((acc << 8) | data[pos]) & 0xFFFFFFFF
-                pos += 1
-                nbits += 8
-            self.pos = pos
-            self.acc = acc
-        self.nbits = nbits - n
-        return (self.acc >> (nbits - n)) & ((1 << n) - 1)
-
-    def huff(self, table: dict) -> int:
-        # inlined canonical walk (same values/raises as a bit() loop)
-        data = self.data
-        pos = self.pos
-        acc = self.acc
-        nbits = self.nbits
-        ln = len(data)
-        get = table.get
-        code = 0
-        length = 0
-        while length < 16:
-            if not nbits:
-                if pos >= ln:
-                    self.pos = pos
-                    self.acc = acc
-                    self.nbits = nbits
-                    raise ValueError("entropy stream truncated")
-                acc = data[pos]
-                pos += 1
-                nbits = 8
-            nbits -= 1
-            code = (code << 1) | ((acc >> nbits) & 1)
-            length += 1
-            sym = get((length, code))
-            if sym is not None:
-                self.pos = pos
-                self.acc = acc
-                self.nbits = nbits
-                return sym
-        self.pos = pos
-        self.acc = acc
-        self.nbits = nbits
-        raise ValueError("invalid Huffman code in scan")
+def _jpeg_reader(segment: bytes) -> MsbReader:
+    """An entropy-coded segment's reader (byte stuffing already
+    removed)."""
+    return MsbReader(
+        segment, "entropy stream truncated", "invalid Huffman code in scan"
+    )
 
 
 def _jpeg_extend(bits: int, size: int) -> int:
@@ -704,7 +639,7 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
                 f"doc {doc_id}: {len(segments)} restart segments for "
                 f"{n_mcu} MCUs at interval {restart_interval}"
             )
-    reader = _BitReader(bytes(segments[0]))
+    reader = _jpeg_reader(bytes(segments[0]))
     seg_idx = 0
     pred = 0
     dc_tab, ac_tab = huff_dc[td], huff_ac[ta]
@@ -720,10 +655,10 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
             ):
                 # restart: next byte-aligned segment, DC predictor reset
                 seg_idx += 1
-                reader = _BitReader(bytes(segments[seg_idx]))
+                reader = _jpeg_reader(bytes(segments[seg_idx]))
                 pred = 0
             size = reader.huff(dc_tab)
-            diff = _jpeg_extend(reader.bits(size), size)
+            diff = _jpeg_extend(reader.u(size), size)
             pred += diff
             coef_z = [0] * 64
             coef_z[0] = pred
@@ -744,7 +679,7 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
                 k += run + 1
                 if k > 63:
                     raise ValueError(f"doc {doc_id}: AC index overflow")
-                coef_z[k] = _jpeg_extend(reader.bits(size_ac), size_ac)
+                coef_z[k] = _jpeg_extend(reader.u(size_ac), size_ac)
                 any_ac = True
             if any_ac:
                 block = idct_block(coef_z, qv)
@@ -934,7 +869,7 @@ def jpeg_decode_progressive(
                 payload = (
                     raw[a_:b_].replace(b"\xff\x00", b"\xff")
                 )
-                reader = _BitReader(payload)
+                reader = _jpeg_reader(payload)
                 seg_blocks = blocks[si * ri : (si + 1) * ri]
                 if ss == 0:  # DC scan
                     if ah == 0:
@@ -942,12 +877,12 @@ def jpeg_decode_progressive(
                         pred = 0
                         for coef in seg_blocks:
                             size = reader.huff(dc_tab)
-                            diff = _jpeg_extend(reader.bits(size), size)
+                            diff = _jpeg_extend(reader.u(size), size)
                             pred += diff
                             coef[0] = pred << al
                     else:
                         for coef in seg_blocks:
-                            if reader.bit():
+                            if reader.u(1):
                                 coef[0] |= p1
                 elif ah == 0:  # AC first scan
                     ac_tab = huff_ac[ta]
@@ -964,7 +899,7 @@ def jpeg_decode_progressive(
                                 if r != 15:
                                     eobrun = (1 << r) - 1
                                     if r:
-                                        eobrun += reader.bits(r)
+                                        eobrun += reader.u(r)
                                     break
                                 k += 16  # ZRL
                                 continue
@@ -975,7 +910,7 @@ def jpeg_decode_progressive(
                                     "band"
                                 )
                             coef[k] = (
-                                _jpeg_extend(reader.bits(s), s) << al
+                                _jpeg_extend(reader.u(s), s) << al
                             )
                             k += 1
                 else:  # AC refinement scan (G.1.2.3)
@@ -985,7 +920,7 @@ def jpeg_decode_progressive(
                     def correct(
                         coef: list, k: int, reader=None
                     ) -> None:
-                        if reader.bit() and not (abs(coef[k]) & p1):
+                        if reader.u(1) and not (abs(coef[k]) & p1):
                             coef[k] += p1 if coef[k] > 0 else m1
 
                     import functools
@@ -1003,11 +938,11 @@ def jpeg_decode_progressive(
                                     if r != 15:
                                         eobrun = 1 << r
                                         if r:
-                                            eobrun += reader.bits(r)
+                                            eobrun += reader.u(r)
                                         break
                                     # ZRL: 16 zero-history positions
                                 elif s == 1:
-                                    newval = p1 if reader.bit() else m1
+                                    newval = p1 if reader.u(1) else m1
                                 else:
                                     raise ValueError(
                                         f"doc {doc_id}: refinement "
@@ -1036,15 +971,15 @@ def jpeg_decode_progressive(
                                 k += 1
                             eobrun -= 1
                 # per-segment 1-padding to the byte edge
-                while reader.nbits:
-                    if not reader.bit():
+                while reader.pos % 8:
+                    if not reader.u(1):
                         raise ValueError(
                             f"doc {doc_id}: zero bit in scan padding"
                         )
-                if reader.pos != len(payload):
+                if reader.pos != 8 * len(payload):
                     raise ValueError(
                         f"doc {doc_id}: scan segment carries "
-                        f"{len(payload) - reader.pos} undecoded bytes"
+                        f"{len(payload) - reader.pos // 8} undecoded bytes"
                     )
             pos = scan_end
             continue
@@ -1231,7 +1166,7 @@ def jpeg_decode_color(
                 f"doc {doc_id}: {len(segments)} restart segments for "
                 f"{mx * my} MCUs at interval {restart_interval}"
             )
-    reader = _BitReader(segments[0])
+    reader = _jpeg_reader(segments[0])
     seg_idx = 0
     pred = {cid: 0 for cid, *_ in comps}
     sum_dc = {cid: 0 for cid, *_ in comps}
@@ -1242,7 +1177,7 @@ def jpeg_decode_color(
             # restart: next byte-aligned segment, ALL DC predictors
             # reset (E.1.4)
             seg_idx += 1
-            reader = _BitReader(segments[seg_idx])
+            reader = _jpeg_reader(segments[seg_idx])
             for cid in pred:
                 pred[cid] = 0
         for cid, ch, cv, _tq in comps:
@@ -1250,7 +1185,7 @@ def jpeg_decode_color(
             dc_tab, ac_tab = huff_dc[td], huff_ac[ta]
             for _u in range(ch * cv):
                 size = reader.huff(dc_tab)
-                diff = _jpeg_extend(reader.bits(size), size)
+                diff = _jpeg_extend(reader.u(size), size)
                 pred[cid] += diff
                 sum_dc[cid] += pred[cid]
                 n_units[cid] += 1
@@ -1270,7 +1205,7 @@ def jpeg_decode_color(
                     k += run + 1
                     if k > 63:
                         raise ValueError(f"doc {doc_id}: AC index overflow")
-                    sum_ac[cid] += _jpeg_extend(reader.bits(s), s)
+                    sum_ac[cid] += _jpeg_extend(reader.u(s), s)
     y_id, cb_id, cr_id = (c[0] for c in comps)
     yh, yv = comps[0][1], comps[0][2]
     return (
@@ -1847,74 +1782,15 @@ H264_META_SCHEMA = (
 )
 
 
-class _H264BitReader:
-    """MSB-first RBSP bit reader (ITU-T H.264 7.2/9.1) for the
-    fixed-width and exp-Golomb fields; raises on exhaustion so a
-    truncated SPS rejects instead of mis-parsing.  CAVLC residual
-    blocks do not go through these methods: ``_cavlc_residual`` reads
-    ``data`` from ``pos`` through its own integer window (same bits,
-    same raises) and advances ``pos`` past the block."""
-
-    def __init__(self, data: bytes, doc_id: int) -> None:
-        self.data = data
-        self.pos = 0
-        self.doc_id = doc_id
-        self.limit = 8 * len(data)
-
-    def u(self, n: int) -> int:
-        # byte-level extraction (one slice + int.from_bytes) instead of
-        # a per-bit loop — same MSB-first values, same exhaustion rule
-        # (raise without consuming when the read would pass the end)
-        pos = self.pos
-        end = pos + n
-        if end > self.limit:
-            raise ValueError(f"doc {self.doc_id}: truncated bitstream")
-        self.pos = end
-        data = self.data
-        if n == 1:
-            return (data[pos >> 3] >> (7 - (pos & 7))) & 1
-        val = int.from_bytes(data[pos >> 3 : (end + 7) >> 3], "big")
-        return (val >> ((-end) & 7)) & ((1 << n) - 1)
-
-    def ue(self) -> int:
-        # inlined leading-zero scan + suffix read (same values and the
-        # same raises as the u(1)-loop form, minus the per-bit calls)
-        data = self.data
-        pos = self.pos
-        limit = self.limit
-        zeros = 0
-        while True:
-            if pos >= limit:
-                self.pos = pos
-                raise ValueError(
-                    f"doc {self.doc_id}: truncated bitstream"
-                )
-            bit = (data[pos >> 3] >> (7 - (pos & 7))) & 1
-            pos += 1
-            if bit:
-                break
-            zeros += 1
-            if zeros > 31:
-                self.pos = pos
-                raise ValueError(
-                    f"doc {self.doc_id}: exp-Golomb overflow"
-                )
-        if not zeros:
-            self.pos = pos
-            return 0
-        end = pos + zeros
-        if end > limit:
-            self.pos = pos
-            raise ValueError(f"doc {self.doc_id}: truncated bitstream")
-        self.pos = end
-        val = int.from_bytes(data[pos >> 3 : (end + 7) >> 3], "big")
-        return (1 << zeros) - 1 + (
-            (val >> ((-end) & 7)) & ((1 << zeros) - 1)
-        )
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k % 2 else -(k // 2)
+def _h264_reader(rbsp: bytes, doc_id: int) -> MsbReader:
+    """An RBSP's reader; exhaustion raises, so a truncated SPS rejects
+    instead of mis-parsing.  CAVLC residual blocks bypass its methods
+    (``_cavlc_residual`` reads ``data`` from ``pos`` through its own
+    integer window, with the same raises)."""
+    return MsbReader(
+        rbsp, f"doc {doc_id}: truncated bitstream",
+        f"doc {doc_id}: exp-Golomb overflow",
+    )
 
 
 def parse_sps(doc_id: int, rbsp: bytes) -> tuple[int, int, int, int]:
@@ -1931,7 +1807,7 @@ def parse_sps(doc_id: int, rbsp: bytes) -> tuple[int, int, int, int]:
 def _parse_sps_all(doc_id: int, rbsp: bytes) -> dict:
     """Full SPS parse; also exposes frame_num_bits (the u(v) width
     slice headers need to read frame_num) and pic_order_cnt_type."""
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     profile_idc = r.u(8)
     r.u(8)  # constraint_setN flags + reserved_zero_2bits
     level_idc = r.u(8)
@@ -1995,7 +1871,7 @@ def parse_pps(doc_id: int, rbsp: bytes) -> tuple[int, int]:
     (0) or CABAC (1) coded, and the default quantizer.  FMO slice
     groups raise (they need per-group maps this metadata pass never
     uses)."""
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     r.ue()  # pic_parameter_set_id
     r.ue()  # seq_parameter_set_id
     entropy_mode = r.u(1)  # 0: CAVLC, 1: CABAC
@@ -2025,7 +1901,7 @@ def parse_slice_header(
     keyframe-cadence pass needs, all readable without entropy-decoding
     slice data.  Cross-checks the slice type against the NAL type (an
     IDR NAL must carry an I slice) and raises on mismatch."""
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     r.ue()  # first_mb_in_slice
     slice_type = r.ue()
     if slice_type > 9:
@@ -2192,7 +2068,7 @@ def _parse_ipcm_slice(
     than a fixed count.  Returns (idr_pic_id, first_mb_in_slice,
     per-macroblock luma sums — the reference state the GOP decoder
     carries across pictures)."""
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     first_mb = r.ue()
     slice_type = r.ue()
     if slice_type % 5 != 2:
@@ -2577,7 +2453,7 @@ def _truncated(doc_id: int) -> ValueError:
 
 
 def _cavlc_residual(
-    reader: "_H264BitReader", n_c: int, max_coeff: int, doc_id: int
+    reader: MsbReader, n_c: int, max_coeff: int, doc_id: int
 ) -> list[int]:
     """One COMPLETE residual_block_cavlc (ITU-T H.264 9.2):
     coeff_token through the full nC dispatch (Table 9-5: the nC < 2,
@@ -2783,7 +2659,7 @@ def decode_h264_cavlc():
                     )
                 mb_w = sps["width"] // 16
                 n_mbs = mb_w * (sps["height"] // 16)
-                r = _H264BitReader(rbsp, doc_id)
+                r = _h264_reader(rbsp, doc_id)
                 if r.ue() != 0:
                     raise ValueError(
                         f"doc {doc_id}: multi-slice CAVLC picture"
@@ -2978,7 +2854,7 @@ def _parse_pskip_slice(
     7.4.5) — any other mb_type needs the CAVLC residual tables and
     raises at the declared stub.  Returns (frame_num, {mb_index:
     luma_sum} of the refreshed macroblocks)."""
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice picture")
     slice_type = r.ue()
@@ -3408,104 +3284,6 @@ VP8L_CL_ORDER = (
 )
 
 
-class _Vp8lBits:
-    """Forward LSB-first bit reader; Huffman codes are consumed
-    bit-by-bit MSB-of-code-first (canonical tree walk).
-
-    Reads through a whole-byte accumulator (``acc`` holds the next
-    unconsumed bits LSB-aligned) instead of a per-bit loop — the
-    same values and the same exhaustion rule (a read raises iff it
-    would consume a bit past the final byte), at a fraction of the
-    per-call cost."""
-
-    def __init__(self, doc_id: int, raw: bytes, pos: int):
-        self.raw = raw
-        self.doc_id = doc_id
-        self.pos = 8 * pos   # absolute bit position of the next bit
-        self.limit = 8 * len(raw)
-        self.acc = 0         # unconsumed bits at pos.., LSB-first
-        self.nacc = 0        # number of valid bits in acc
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        if pos + n > self.limit:
-            raise ValueError(
-                f"doc {self.doc_id}: VP8L stream exhausted"
-            )
-        acc = self.acc
-        nacc = self.nacc
-        # pos + nacc is always byte-aligned (construction is aligned,
-        # refills add 8, consumption moves both in lockstep)
-        while nacc < n:
-            acc |= self.raw[(pos + nacc) >> 3] << nacc
-            nacc += 8
-        self.acc = acc >> n
-        self.nacc = nacc - n
-        self.pos = pos + n
-        return acc & ((1 << n) - 1)
-
-    def read_symbol(self, table: dict, what: str) -> int:
-        if isinstance(table, int):  # 1-symbol simple code: zero bits
-            return table
-        if len(table) == 2:
-            # a two-leaf complete canonical code is always
-            # {(1,0), (1,1)} (Kraft): one bit decides the symbol —
-            # the shape every code-length code in the flat-tree
-            # fixtures takes
-            pos = self.pos
-            if pos >= self.limit:
-                raise ValueError(
-                    f"doc {self.doc_id}: VP8L stream exhausted"
-                )
-            nacc = self.nacc
-            if nacc:
-                bit = self.acc & 1
-                self.acc >>= 1
-                self.nacc = nacc - 1
-            else:
-                bit = self.raw[pos >> 3] & 1
-                self.acc = self.raw[pos >> 3] >> 1
-                self.nacc = 7
-            self.pos = pos + 1
-            return table[(1, bit)]
-        # inlined bit-by-bit canonical walk (same values/raises as a
-        # read(1) loop, without the per-bit attribute traffic)
-        pos = self.pos
-        acc = self.acc
-        nacc = self.nacc
-        raw = self.raw
-        limit = self.limit
-        get = table.get
-        code = length = 0
-        while True:
-            if nacc == 0:
-                # pos + nacc stays byte-aligned, so pos is aligned here
-                if pos >= limit:
-                    raise ValueError(
-                        f"doc {self.doc_id}: VP8L stream exhausted"
-                    )
-                acc = raw[pos >> 3]
-                nacc = 8
-            code = (code << 1) | (acc & 1)
-            acc >>= 1
-            nacc -= 1
-            pos += 1
-            length += 1
-            sym = get((length, code))
-            if sym is not None:
-                self.pos = pos
-                self.acc = acc
-                self.nacc = nacc
-                return sym
-            if length > 15:
-                self.pos = pos
-                self.acc = acc
-                self.nacc = nacc
-                raise ValueError(
-                    f"doc {self.doc_id}: invalid {what} Huffman code"
-                )
-
-
 def _vp8l_canonical(doc_id: int, lengths: dict, what: str) -> dict:
     """Canonical decode table {(nbits, code): symbol} with the
     completeness gate (Kraft must be exactly 1).
@@ -3532,7 +3310,7 @@ def _vp8l_canonical(doc_id: int, lengths: dict, what: str) -> dict:
     return out
 
 
-def _vp8l_prefix_value(r: "_Vp8lBits", code: int) -> int:
+def _vp8l_prefix_value(r: LsbReader, code: int) -> int:
     """LZ77 prefix decode (WebP lossless spec): code -> value >= 1."""
     if code < 4:
         return code + 1
@@ -3541,7 +3319,7 @@ def _vp8l_prefix_value(r: "_Vp8lBits", code: int) -> int:
     return offset + r.read(extra) + 1
 
 
-def _vp8l_read_code(r: "_Vp8lBits", alphabet: int, what: str):
+def _vp8l_read_code(doc_id: int, r: LsbReader, alphabet: int, what: str):
     """One Huffman code (simple or normal form).  Normal form reads
     code lengths through the code-length code with repeat symbols
     (16: repeat previous, 17/18: zero runs) and stops when the Kraft
@@ -3557,24 +3335,24 @@ def _vp8l_read_code(r: "_Vp8lBits", alphabet: int, what: str):
             return first
         second = r.read(8)
         if first == second:
-            raise ValueError(f"doc {r.doc_id}: duplicate simple symbols")
+            raise ValueError(f"doc {doc_id}: duplicate simple symbols")
         return {(1, 0): min(first, second), (1, 1): max(first, second)}
     n_cl = 4 + r.read(4)
     if n_cl > 19:
-        raise ValueError(f"doc {r.doc_id}: too many code-length codes")
+        raise ValueError(f"doc {doc_id}: too many code-length codes")
     cl_lengths = {}
     for k in range(n_cl):
         ln = r.read(3)
         if ln:
             cl_lengths[VP8L_CL_ORDER[k]] = ln
-    cl_table = _vp8l_canonical(r.doc_id, cl_lengths, "code-length")
+    cl_table = _vp8l_canonical(doc_id, cl_lengths, "code-length")
     max_symbol = alphabet
     if r.read(1):  # use_max_symbol
         length_nbits = 2 + 2 * r.read(3)
         max_symbol = 2 + r.read(length_nbits)
         if max_symbol > alphabet:
             raise ValueError(
-                f"doc {r.doc_id}: max_symbol past the {what} alphabet"
+                f"doc {doc_id}: max_symbol past the {what} alphabet"
             )
     lengths: dict = {}
     space = 1 << 15
@@ -3600,15 +3378,15 @@ def _vp8l_read_code(r: "_Vp8lBits", alphabet: int, what: str):
             sym += 11 + r.read(7)
         if sym > alphabet:
             raise ValueError(
-                f"doc {r.doc_id}: {what} code lengths overrun the "
+                f"doc {doc_id}: {what} code lengths overrun the "
                 "alphabet"
             )
     if space < 0:
         raise ValueError(
-            f"doc {r.doc_id}: {what} code lengths oversubscribe the "
+            f"doc {doc_id}: {what} code lengths oversubscribe the "
             "Kraft budget"
         )
-    return _vp8l_canonical(r.doc_id, lengths, what)
+    return _vp8l_canonical(doc_id, lengths, what)
 
 
 # WebP lossless spec distance map: plane codes 1..120 address a close
@@ -3635,7 +3413,7 @@ VP8L_DIST_MAP = (
 
 
 def _vp8l_read_argb_image(
-    r: "_Vp8lBits", width: int, height: int, allow_meta: bool
+    doc_id: int, r: LsbReader, width: int, height: int, allow_meta: bool
 ) -> tuple[list, int, int]:
     """One VP8L entropy-coded ARGB image (the spec's 'decoding of
     image data'): optional color cache, optional meta-Huffman tile
@@ -3645,7 +3423,6 @@ def _vp8l_read_argb_image(
     neighbor map for distance codes <= 120 and direct distances
     above.  Returns (pixels as packed ARGB ints, n_literals,
     n_backref_pixels)."""
-    doc_id = r.doc_id
     cache_bits = 0
     if r.read(1):  # color cache
         cache_bits = r.read(4)
@@ -3664,18 +3441,18 @@ def _vp8l_read_argb_image(
         meta_w = (width + (1 << hb) - 1) >> hb
         meta_h = (height + (1 << hb) - 1) >> hb
         meta_px, _ml, _mb = _vp8l_read_argb_image(
-            r, meta_w, meta_h, False
+            doc_id, r, meta_w, meta_h, False
         )
         meta = [((p >> 8) & 0xFFFF) for p in meta_px]
         n_groups = max(meta) + 1
     groups = []
     for _ in range(n_groups):
         groups.append((
-            _vp8l_read_code(r, 280 + cache_size, "green"),
-            _vp8l_read_code(r, 256, "red"),
-            _vp8l_read_code(r, 256, "blue"),
-            _vp8l_read_code(r, 256, "alpha"),
-            _vp8l_read_code(r, 40, "distance"),
+            _vp8l_read_code(doc_id, r, 280 + cache_size, "green"),
+            _vp8l_read_code(doc_id, r, 256, "red"),
+            _vp8l_read_code(doc_id, r, 256, "blue"),
+            _vp8l_read_code(doc_id, r, 256, "alpha"),
+            _vp8l_read_code(doc_id, r, 40, "distance"),
         ))
     n_px = width * height
     pixels: list = []
@@ -3867,7 +3644,10 @@ def parse_webp_vp8l(
         pos += 8 + size + (size & 1)
     if payload is None:
         raise ValueError(f"doc {doc_id}: no VP8L chunk")
-    r = _Vp8lBits(doc_id, payload, 0)
+    r = LsbReader(
+        payload, f"doc {doc_id}: VP8L stream exhausted",
+        f"doc {doc_id}: invalid {{}} Huffman code",
+    )
     if r.read(8) != 0x2F:
         raise ValueError(f"doc {doc_id}: bad VP8L signature")
     width = r.read(14) + 1
@@ -3889,13 +3669,17 @@ def parse_webp_vp8l(
             size_bits = 2 + r.read(3)
             tw = (coded_w + (1 << size_bits) - 1) >> size_bits
             th = (height + (1 << size_bits) - 1) >> size_bits
-            tiles, _l, _b = _vp8l_read_argb_image(r, tw, th, False)
+            tiles, _l, _b = _vp8l_read_argb_image(
+                doc_id, r, tw, th, False
+            )
             transforms.append((ttype, (size_bits, tw, tiles)))
         elif ttype == 2:  # subtract green
             transforms.append((2, None))
         else:  # color indexing (palette)
             psize = r.read(8) + 1
-            deltas, _l, _b = _vp8l_read_argb_image(r, psize, 1, False)
+            deltas, _l, _b = _vp8l_read_argb_image(
+                doc_id, r, psize, 1, False
+            )
             palette = []
             acc = 0
             for d in deltas:
@@ -3918,7 +3702,7 @@ def parse_webp_vp8l(
             coded_w = (width + (1 << wb) - 1) >> wb
             transforms.append((3, (palette, wb)))
     pixels, n_lit, n_back = _vp8l_read_argb_image(
-        r, coded_w, height, True
+        doc_id, r, coded_w, height, True
     )
     # inverse transforms, reverse read order
     for ttype, tdata in reversed(transforms):
@@ -5914,75 +5698,14 @@ FLAC_SCHEMA = (
 )
 
 
-class _FlacBits:
-    """MSB-first bit reader positioned at an absolute bit offset into
-    the whole stream, so the byte-aligned frame walk can hand off to
-    bit-level subframe decode and take the cursor back afterwards.
-    Multi-bit reads extract via one int.from_bytes per call — no
-    per-bit Python loop on the field path."""
-
-    __slots__ = ("data", "bitpos")
-
-    def __init__(self, data: bytes, byte_offset: int):
-        self.data = data
-        self.bitpos = byte_offset * 8
-
-    def u(self, n: int) -> int:
-        end = self.bitpos + n
-        if end > len(self.data) * 8:
-            raise ValueError("FLAC bitstream truncated")
-        first = self.bitpos >> 3
-        last = (end + 7) >> 3
-        chunk = int.from_bytes(self.data[first:last], "big")
-        self.bitpos = end
-        return (chunk >> (last * 8 - end)) & ((1 << n) - 1)
-
-    def u_many(self, n: int, count: int) -> list:
-        """``count`` consecutive n-bit fields in one slice +
-        int.from_bytes (bit-identical to ``[self.u(n)] * count``
-        loops, without the per-field reader calls)."""
-        total = n * count
-        end = self.bitpos + total
-        if end > len(self.data) * 8:
-            raise ValueError("FLAC bitstream truncated")
-        first = self.bitpos >> 3
-        last = (end + 7) >> 3
-        big = int.from_bytes(self.data[first:last], "big") >> (
-            last * 8 - end
-        )
-        self.bitpos = end
-        mask = (1 << n) - 1
-        return [
-            (big >> sh) & mask
-            for sh in range(total - n, -1, -n)
-        ] if n else [0] * count
-
-    def unary(self) -> int:
-        # scan whole bytes for the terminating 1 bit instead of a
-        # per-bit u(1) loop; same count, same truncation raise
-        data = self.data
-        pos = self.bitpos
-        limit = len(data) * 8
-        q = 0
-        while True:
-            if pos >= limit:
-                raise ValueError("FLAC bitstream truncated")
-            rem = 8 - (pos & 7)
-            chunk = data[pos >> 3] & ((1 << rem) - 1)
-            if chunk:
-                lead = rem - chunk.bit_length()
-                self.bitpos = pos + lead + 1
-                return q + lead
-            q += rem
-            pos += rem
-
-    def align(self) -> int:
-        """Zero-check and skip padding to the next byte edge; return
-        the byte offset there."""
-        pad = -self.bitpos % 8
-        if pad and self.u(pad) != 0:
-            raise ValueError("nonzero FLAC subframe padding")
-        return self.bitpos >> 3
+def _flac_reader(raw: bytes, byte_offset: int) -> MsbReader:
+    """A reader positioned at a byte offset into the whole stream, so
+    the byte-aligned frame walk can hand off to bit-level subframe
+    decode and take the cursor back afterwards."""
+    return MsbReader(
+        raw, "FLAC bitstream truncated", "nonzero FLAC subframe padding",
+        byte_offset,
+    )
 
 
 # reconstruction: x[i] = r[i] + sum(coef[j] * x[i-1-j]) (RFC 9639 §9.2.3)
@@ -5990,7 +5713,7 @@ _FLAC_FIXED_COEFS = ((), (1,), (2, -1), (3, -3, 1), (4, -6, 4, -1))
 
 
 def _flac_read_residuals(
-    doc_id: int, br: "_FlacBits", blocksize: int, order: int
+    doc_id: int, br: MsbReader, blocksize: int, order: int
 ) -> list:
     """Rice-coded residual section (RFC 9639 §9.2.7, shared by the
     FIXED and LPC subframes): 2-bit coding method (RICE/RICE2), 4-bit
@@ -6183,7 +5906,7 @@ def decode_flac_real():
             pos += 1
             # subframe (all four types + wasted bits) through the
             # shared bit-level reader; mono frames have exactly one
-            br = _FlacBits(raw, pos)
+            br = _flac_reader(raw, pos)
             stype, samples = _flac_read_subframe(
                 doc_id, br, blocksize, 16
             )
@@ -6387,7 +6110,7 @@ FLAC_STEREO_SCHEMA = (
 
 
 def _flac_read_subframe(
-    doc_id: int, br: "_FlacBits", blocksize: int, bps: int
+    doc_id: int, br: MsbReader, blocksize: int, bps: int
 ) -> tuple:
     """One complete subframe at an arbitrary (not byte-aligned) bit
     depth — the reader the stereo path needs, since side channels carry
@@ -6422,18 +6145,18 @@ def _flac_read_subframe(
     if stype == 0:  # CONSTANT
         return shifted([signed(br.u(bps))] * blocksize)
     if stype == 1:  # VERBATIM
-        if bps == 16 and br.bitpos % 8 == 0:
+        if bps == 16 and br.pos % 8 == 0:
             # byte-aligned 16-bit verbatim block (the common mono
             # layout: the 8-bit subframe header lands on a byte edge
             # when no wasted-bits field follows) — one C-level bulk
             # unpack instead of blocksize bit-reader calls
-            at = br.bitpos >> 3
+            at = br.pos >> 3
             if at + 2 * blocksize > len(br.data):
                 raise ValueError("FLAC bitstream truncated")
             samples = list(
                 struct.unpack_from(f">{blocksize}h", br.data, at)
             )
-            br.bitpos += 16 * blocksize
+            br.pos += 16 * blocksize
             return shifted(samples)
         return shifted(
             [signed(v) for v in br.u_many(bps, blocksize)]
@@ -6566,7 +6289,7 @@ def decode_flac_stereo():
             if flac_crc8(raw[start:pos]) != raw[pos]:
                 raise ValueError(f"doc {doc_id}: frame-header CRC-8 bad")
             pos += 1
-            br = _FlacBits(raw, pos)
+            br = _flac_reader(raw, pos)
             # the SIDE subframe (channel 1 for left/side and
             # mid/side, channel 0 for right/side) carries bps+1
             side_ch = {1: None, 8: 1, 9: 0, 10: 1}[ch_code]
@@ -7129,7 +6852,7 @@ def _h264_skip_mv(mbs: list, idx: int, mb_w: int) -> tuple[int, int]:
 
 
 def _h264_pred_weight_table(
-    doc_id: int, r: "_H264BitReader", n_l0: int, n_l1: int = 0,
+    doc_id: int, r: MsbReader, n_l0: int, n_l1: int = 0,
 ) -> dict:
     """pred_weight_table (ITU-T H.264 7.3.3.2), luma only (the
     fixtures keep chroma_weight_lX_flag 0): log2 denominators and
@@ -7269,7 +6992,7 @@ def _parse_p_inter_slice(
     in stream order; weights is the parsed pred_weight_table (None
     unless ``weighted`` — PPS weighted_pred_flag — is set)."""
     n_mbs = mb_w * mb_h
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice picture")
     slice_type = r.ue()
@@ -7535,7 +7258,7 @@ def _parse_b_slice(
     (kind 'l0'/'l1'/'bi'/'skip'/'direct', mv_l0 | None, mv_l1 |
     None) — for skip/direct a None marks the list unused."""
     n_mbs = mb_w * mb_h
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice B picture")
     if r.ue() % 5 != 1:
@@ -7753,7 +7476,7 @@ def decode_h264_bframe():
                 mb_h = sps["height"] // 16
                 n_mbs = mb_w * mb_h
                 # peek slice_type to route P vs B
-                rr = _H264BitReader(rbsp, doc_id)
+                rr = _h264_reader(rbsp, doc_id)
                 rr.ue()
                 stype = rr.ue() % 5
                 if stype == 0:  # P: single-ref copy/refresh layer
@@ -7908,7 +7631,7 @@ def decode_h264_weighted():
                 mb_w = sps["width"] // 16
                 mb_h = sps["height"] // 16
                 n_mbs = mb_w * mb_h
-                rr = _H264BitReader(rbsp, doc_id)
+                rr = _h264_reader(rbsp, doc_id)
                 rr.ue()
                 stype = rr.ue() % 5
                 fn_wrap = 1 << sps["frame_num_bits"]
@@ -8292,7 +8015,7 @@ def _parse_p8x8_slice(
     n_mbs = mb_w * mb_h
     qw = 2 * mb_w
     qmvs: list = [[None] * qw for _ in range(2 * mb_h)]
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice picture")
     if r.ue() % 5 != 0:
@@ -8606,7 +8329,7 @@ def decode_h264_tdirect():
                 mb_w = sps["width"] // 16
                 mb_h = sps["height"] // 16
                 n_mbs = mb_w * mb_h
-                rr = _H264BitReader(rbsp, doc_id)
+                rr = _h264_reader(rbsp, doc_id)
                 rr.ue()
                 stype = rr.ue() % 5
                 if stype == 0:  # the co-located P reference
@@ -8663,7 +8386,7 @@ def decode_h264_tdirect():
                             "supported here"
                         )
                     # peek the POC to build the lists
-                    rr2 = _H264BitReader(rbsp, doc_id)
+                    rr2 = _h264_reader(rbsp, doc_id)
                     rr2.ue(); rr2.ue(); rr2.ue()
                     rr2.u(sps["frame_num_bits"])
                     poc_b = rr2.u(sps["poc_lsb_bits"])
@@ -8747,7 +8470,7 @@ def _parse_ipcm_slice_plane(
     import numpy as np
 
     n_mbs = mb_w * mb_h
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice IDR in fracpel decode")
     if r.ue() % 5 != 2:
@@ -8800,7 +8523,7 @@ def _parse_ipcm_slice_planes3(
     import numpy as np
 
     n_mbs = mb_w * mb_h
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice IDR in chroma decode")
     if r.ue() % 5 != 2:
@@ -9001,7 +8724,7 @@ def _parse_submb_slice(
     n_mbs = mb_w * mb_h
     bw4 = 4 * mb_w
     bmvs: list = [[None] * bw4 for _ in range(4 * mb_h)]
-    r = _H264BitReader(rbsp, doc_id)
+    r = _h264_reader(rbsp, doc_id)
     if r.ue() != 0:
         raise ValueError(f"doc {doc_id}: multi-slice picture")
     if r.ue() % 5 != 0:

@@ -18,6 +18,8 @@ from itertools import groupby
 import wave
 import zlib
 
+from .bits import LsbWriter, MsbWriter, crc_table, stuffed_bytes
+
 
 def wav_params(doc_id: int) -> tuple[int, int, int]:
     """(framerate, n_frames, amplitude) for the square-wave fixture."""
@@ -302,34 +304,6 @@ JPEG_AC_COUNTS = bytes([0, 1]) + bytes(14 * [0])
 JPEG_AC_SYMBOLS = bytes([0x00])
 
 
-class _BitWriter:
-    """MSB-first bit accumulator with JPEG byte stuffing (a 0x00 is
-    inserted after every emitted 0xFF so entropy data can't alias a
-    marker)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits - 1, -1, -1):
-            self._acc = (self._acc << 1) | ((value >> i) & 1)
-            self._nbits += 1
-            if self._nbits == 8:
-                self.out.append(self._acc)
-                if self._acc == 0xFF:
-                    self.out.append(0x00)
-                self._acc = 0
-                self._nbits = 0
-
-    def flush(self) -> bytes:
-        if self._nbits:
-            pad = 8 - self._nbits
-            self.write((1 << pad) - 1, pad)  # 1-padding per the spec
-        return bytes(self.out)
-
-
 def _canonical_codes(counts: bytes, symbols: bytes) -> dict[int, tuple[int, int]]:
     """symbol -> (code, length) per the JPEG canonical assignment
     (Annex C): codes of each length are consecutive, doubling at each
@@ -383,16 +357,16 @@ def _jpeg_encode(
     dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
     ac_codes = _canonical_codes(JPEG_AC_COUNTS, JPEG_AC_SYMBOLS)
 
-    w = _BitWriter()
+    w = MsbWriter()
     pred = 0
     parts = []
     rst = 0
     for k in range(blocks_x * blocks_y):
         if restart_interval and k and k % restart_interval == 0:
-            parts.append(w.flush())
+            parts.append(stuffed_bytes(w))
             parts.append(bytes((0xFF, 0xD0 + rst % 8)))
             rst += 1
-            w = _BitWriter()
+            w = MsbWriter()
             pred = 0
         dc = (base + k) - 128  # quantized DC = v - 128 exactly (Q=8)
         diff = dc - pred
@@ -401,13 +375,13 @@ def _jpeg_encode(
         if diff < 0:
             size = (-diff).bit_length()
         code, length = dc_codes[size]
-        w.write(code, length)
+        w.u(code, length)
         if size:
             bits = diff if diff >= 0 else diff + (1 << size) - 1
-            w.write(bits & ((1 << size) - 1), size)
+            w.u(bits & ((1 << size) - 1), size)
         code, length = ac_codes[0x00]  # EOB: all 63 ACs are zero
-        w.write(code, length)
-    parts.append(w.flush())
+        w.u(code, length)
+    parts.append(stuffed_bytes(w))
     scan = b"".join(parts)
 
     def seg(marker: int, payload: bytes) -> bytes:
@@ -488,11 +462,11 @@ def make_jpeg_prog_rst_bytes(doc_id: int) -> bytes:
         and join the flushed segments with cycling RSTn markers."""
         parts = []
         for si in range(0, len(blocks), ri):
-            w = _BitWriter()
+            w = MsbWriter()
             encode_one(w, blocks[si : si + ri])
             if si:
                 parts.append(bytes([0xFF, 0xD0 + ((si // ri) - 1) % 8]))
-            parts.append(w.flush())
+            parts.append(stuffed_bytes(w))
         return b"".join(parts)
 
     out = bytearray()
@@ -517,10 +491,10 @@ def make_jpeg_prog_rst_bytes(doc_id: int) -> bytes:
             pred = pt
             size = abs(diff).bit_length()
             code, length = dc_codes[size]
-            w.write(code, length)
+            w.u(code, length)
             if size:
                 bits = diff if diff >= 0 else diff + (1 << size) - 1
-                w.write(bits & ((1 << size) - 1), size)
+                w.u(bits & ((1 << size) - 1), size)
 
     out += sos(0, 0, 0, 1, 0, 0) + segmented(dc_first)
 
@@ -535,7 +509,7 @@ def make_jpeg_prog_rst_bytes(doc_id: int) -> bytes:
     # scan 4: DC refinement — one raw bit per block
     def dc_refine(w, seg_blocks):
         for coef in seg_blocks:
-            w.write(coef[0] & 1, 1)
+            w.u(coef[0] & 1, 1)
 
     out += sos(0, 0, 1, 0, 0, 0) + segmented(dc_refine)
 
@@ -572,7 +546,7 @@ def jpeg_prog_coefs(doc_id: int, k: int) -> list[int]:
 
 
 def _jpeg_prog_ac_first(
-    w: "_BitWriter", ac_codes: dict, blocks: list, ss: int, se: int, al: int
+    w: MsbWriter, ac_codes: dict, blocks: list, ss: int, se: int, al: int
 ) -> None:
     """One AC spectral-selection scan at successive-approximation bit
     position ``al`` (ISO/IEC 10918-1 G.1.2.2): point-transformed
@@ -585,9 +559,9 @@ def _jpeg_prog_ac_first(
         if eobrun:
             r = eobrun.bit_length() - 1
             code, length = ac_codes[r << 4]
-            w.write(code, length)
+            w.u(code, length)
             if r:
-                w.write(eobrun - (1 << r), r)
+                w.u(eobrun - (1 << r), r)
             eobrun = 0
 
     for coef in blocks:
@@ -607,13 +581,13 @@ def _jpeg_prog_ac_first(
                 continue
             while run > 15:
                 code, length = ac_codes[0xF0]
-                w.write(code, length)
+                w.u(code, length)
                 run -= 16
             s = abs(t).bit_length()
             code, length = ac_codes[(run << 4) | s]
-            w.write(code, length)
+            w.u(code, length)
             bits = t if t >= 0 else t + (1 << s) - 1
-            w.write(bits & ((1 << s) - 1), s)
+            w.u(bits & ((1 << s) - 1), s)
             run = 0
         if run:
             eobrun += 1
@@ -621,7 +595,7 @@ def _jpeg_prog_ac_first(
 
 
 def _jpeg_prog_ac_refine(
-    w: "_BitWriter", ac_codes: dict, blocks: list, ss: int, se: int, al: int
+    w: MsbWriter, ac_codes: dict, blocks: list, ss: int, se: int, al: int
 ) -> None:
     """One AC refinement scan (G.1.2.3): newly-nonzero coefficients
     (|v| >> al == 1) as run/sign codes over ZERO-HISTORY positions,
@@ -636,11 +610,11 @@ def _jpeg_prog_ac_refine(
         if eobrun:
             r = eobrun.bit_length() - 1
             code, length = ac_codes[r << 4]
-            w.write(code, length)
+            w.u(code, length)
             if r:
-                w.write(eobrun - (1 << r), r)
+                w.u(eobrun - (1 << r), r)
             for b in pending:
-                w.write(b, 1)
+                w.u(b, 1)
             pending.clear()
             eobrun = 0
 
@@ -667,16 +641,16 @@ def _jpeg_prog_ac_refine(
                 continue
             while run > 15:
                 code, length = ac_codes[0xF0]
-                w.write(code, length)
+                w.u(code, length)
                 for b in br:
-                    w.write(b, 1)
+                    w.u(b, 1)
                 br = []
                 run -= 16
             code, length = ac_codes[(run << 4) | 1]
-            w.write(code, length)
-            w.write(1 if pos else 0, 1)
+            w.u(code, length)
+            w.u(1 if pos else 0, 1)
             for b in br:
-                w.write(b, 1)
+                w.u(b, 1)
             br = []
             run = 0
         if run or br:
@@ -730,7 +704,7 @@ def make_jpeg_prog_bytes(doc_id: int) -> bytes:
     )
 
     # scan 1: DC first, Al = 1 (arithmetic shift per G.1.2.1)
-    w = _BitWriter()
+    w = MsbWriter()
     pred = 0
     for coef in blocks:
         pt = coef[0] >> 1
@@ -738,29 +712,29 @@ def make_jpeg_prog_bytes(doc_id: int) -> bytes:
         pred = pt
         size = abs(diff).bit_length()
         code, length = dc_codes[size]
-        w.write(code, length)
+        w.u(code, length)
         if size:
             bits = diff if diff >= 0 else diff + (1 << size) - 1
-            w.write(bits & ((1 << size) - 1), size)
-    out += sos(0, 0, 0, 1, 0, 0) + w.flush()
+            w.u(bits & ((1 << size) - 1), size)
+    out += sos(0, 0, 0, 1, 0, 0) + stuffed_bytes(w)
 
     # scans 2-3: AC first per band, Al = 1
     for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
+        w = MsbWriter()
         _jpeg_prog_ac_first(w, ac_codes, blocks, ss, se, 1)
-        out += sos(ss, se, 0, 1, 0, 0) + w.flush()
+        out += sos(ss, se, 0, 1, 0, 0) + stuffed_bytes(w)
 
     # scan 4: DC refinement — one raw bit per block
-    w = _BitWriter()
+    w = MsbWriter()
     for coef in blocks:
-        w.write(coef[0] & 1, 1)
-    out += sos(0, 0, 1, 0, 0, 0) + w.flush()
+        w.u(coef[0] & 1, 1)
+    out += sos(0, 0, 1, 0, 0, 0) + stuffed_bytes(w)
 
     # scans 5-6: AC refinement per band
     for ss, se in ((1, 5), (6, 63)):
-        w = _BitWriter()
+        w = MsbWriter()
         _jpeg_prog_ac_refine(w, ac_codes, blocks, ss, se, 0)
-        out += sos(ss, se, 1, 0, 0, 0) + w.flush()
+        out += sos(ss, se, 1, 0, 0, 0) + stuffed_bytes(w)
 
     out += b"\xff\xd9"
     return bytes(out)
@@ -918,7 +892,7 @@ def _jpeg_color_encode(doc_id: int, restart_interval: int) -> bytes:
     dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
     ac_codes = _canonical_codes(JPEG_PROG_AC_COUNTS, JPEG_PROG_AC_SYMBOLS)
 
-    w = _BitWriter()
+    w = MsbWriter()
     pred = [0, 0, 0]
     counts = [0, 0, 0]  # data units emitted so far, per component
 
@@ -930,37 +904,37 @@ def _jpeg_color_encode(doc_id: int, restart_interval: int) -> bytes:
         pred[comp] = dc
         size = abs(diff).bit_length()
         code, length = dc_codes[size]
-        w.write(code, length)
+        w.u(code, length)
         if size:
             bits = diff if diff >= 0 else diff + (1 << size) - 1
-            w.write(bits & ((1 << size) - 1), size)
+            w.u(bits & ((1 << size) - 1), size)
         pos, val = jpeg_color_ac(doc_id, comp, j)
         run = pos - 1
         while run > 15:
             code, length = ac_codes[0xF0]
-            w.write(code, length)
+            w.u(code, length)
             run -= 16
         code, length = ac_codes[(run << 4) | 1]
-        w.write(code, length)
-        w.write(1 if val > 0 else 0, 1)
+        w.u(code, length)
+        w.u(1 if val > 0 else 0, 1)
         if pos < 63:
             code, length = ac_codes[0x00]  # EOB
-            w.write(code, length)
+            w.u(code, length)
 
     parts = []
     rst = 0
     for m in range(mx * my):
         if restart_interval and m and m % restart_interval == 0:
-            parts.append(w.flush())
+            parts.append(stuffed_bytes(w))
             parts.append(bytes((0xFF, 0xD0 + rst % 8)))
             rst += 1
-            w = _BitWriter()
+            w = MsbWriter()
             pred[0] = pred[1] = pred[2] = 0
         for _ in range(h * v):
             unit(0)
         unit(1)
         unit(2)
-    parts.append(w.flush())
+    parts.append(stuffed_bytes(w))
     scan = b"".join(parts)
 
     def seg(marker: int, payload: bytes) -> bytes:
@@ -1422,7 +1396,7 @@ def mp3_side_info(doc_id: int, k: int) -> bytes:
     table_select(5)x3 region0_count(4) region1_count(3)] preflag(1)
     scalefac_scale(1) count1table_select(1) — 18 + 2x59 = 136 bits,
     exactly 17 bytes, no padding."""
-    w = _BitPacker()
+    w = MsbWriter()
     w.u(mp3_main_data_begin(doc_id, k), 9)
     w.u(0, 5)  # private_bits
     w.u(0, 4)  # scfsi (no scalefactor reuse)
@@ -1527,76 +1501,6 @@ def h264_sps_fields(doc_id: int) -> tuple[int, int, int, int]:
     )
 
 
-class _BitPacker:
-    """MSB-first bit packer (shared by the H.264 RBSP, FLAC and
-    MPEG-1 Layer III frame writers — MP3 side info and granule main
-    data alike, see ``_mp3_frame``).
-
-    Bits accumulate MSB-first in one integer (``acc``, ``nbits`` valid
-    bits) instead of a per-bit Python list — same stream, an order of
-    magnitude fewer interpreter operations.  Round 15: once the
-    accumulator passes 4096 bits AND sits on a byte boundary it is
-    flushed to ``_done`` (guide §4.2 — the single growing bigint made
-    every ``u()`` O(stream length), quadratic per RBSP; flushing keeps
-    ``u()`` O(1) amortized with a byte-identical stream).  ``align()``
-    pads with zero bits to the next byte boundary of the TOTAL stream
-    (the old ``while len(w.bits) %% 8: w.bits.append(0)`` idiom)."""
-
-    def __init__(self) -> None:
-        self.acc = 0
-        self.nbits = 0
-        self._done = bytearray()
-
-    def u(self, value: int, n: int) -> None:
-        # the low n bits of value, MSB-first (value mod 2^n — exactly
-        # the bits the old per-bit loop appended)
-        nbits = self.nbits + n
-        self.acc = (self.acc << n) | (value & ((1 << n) - 1))
-        if nbits >= 4096 and not (nbits & 7):
-            self._done += self.acc.to_bytes(nbits >> 3, "big")
-            self.acc = 0
-            nbits = 0
-        self.nbits = nbits
-
-    def repeat(self, value: int, n: int, k: int) -> None:
-        """``k`` copies of the low n bits of ``value``, in one write."""
-        if n and k:
-            ones = ((1 << n * k) - 1) // ((1 << n) - 1)  # bit 0 of each copy
-            self.u((value & ((1 << n) - 1)) * ones, n * k)
-
-    def tell(self) -> int:
-        """Bits written so far."""
-        return len(self._done) * 8 + self.nbits
-
-    def align(self) -> None:
-        rem = self.tell() & 7
-        if rem:
-            self.u(0, 8 - rem)
-
-    def to_bytes(self) -> bytes:
-        assert self.tell() % 8 == 0, "bitstream not byte-aligned"
-        return bytes(self._done) + self.acc.to_bytes(self.nbits // 8, "big")
-
-
-class _H264BitWriter(_BitPacker):
-    """MSB-first bit packer for RBSP payloads (ITU-T H.264 7.3/9.1)."""
-
-    def ue(self, value: int) -> None:
-        # Exp-Golomb: M leading zeros, 1, then M-bit suffix of value+1
-        code = value + 1
-        m = code.bit_length() - 1
-        self.u(code, 2 * m + 1)  # M zeros + the (M+1)-bit code itself
-
-    def se(self, value: int) -> None:
-        # signed Exp-Golomb (9.1.1): k>0 -> 2k-1, k<=0 -> -2k
-        self.ue(2 * value - 1 if value > 0 else -2 * value)
-
-    def rbsp_trailing(self) -> bytes:
-        self.u(1, 1)  # rbsp_stop_one_bit
-        self.align()  # rbsp_alignment_zero_bits
-        return self.to_bytes()
-
-
 def h264_sps_rbsp(doc_id: int) -> bytes:
     """REAL seq_parameter_set RBSP per ITU-T H.264 7.3.2.1.1: fixed
     profile/constraint/level bytes, then exp-Golomb-coded ids, frame
@@ -1610,7 +1514,7 @@ def _h264_sps_from_fields(
     profile_idc: int, level_idc: int, w_m1: int, h_m1: int,
     max_ref: int = 1, poc_type: int = 2,
 ) -> bytes:
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.u(profile_idc, 8)
     w.u(0, 8)  # constraint_set0..5 + reserved_zero_2bits
     w.u(level_idc, 8)
@@ -1642,7 +1546,7 @@ def h264_pps_rbsp(doc_id: int) -> bytes:
     entropy coding, one slice group, default reference counts, no
     weighted prediction, a doc_id-varying pic_init_qp (signed
     exp-Golomb), and proper rbsp_trailing_bits."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)    # pic_parameter_set_id
     w.ue(0)    # seq_parameter_set_id
     w.u(0, 1)  # entropy_coding_mode_flag: CAVLC
@@ -1670,7 +1574,7 @@ def h264_slice_header_bytes(gop: int, slice_in_gop: int) -> bytes:
     synthetic slice body that stands in for the remaining header +
     entropy-coded macroblock data (a real stream continues bit-level;
     the walker only parses this prefix)."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)  # first_mb_in_slice
     idr = slice_in_gop == 0
     w.ue(7 if idr else 5)  # slice_type: I (all-slices-I) / P (all-P)
@@ -1810,7 +1714,7 @@ def h264_ipcm_idr_rbsp(
     and idr_pic_id, each starting at its first_mb_in_slice)."""
     if mb_count is None:
         mb_count = n_mbs - first_mb
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(first_mb)  # first_mb_in_slice
     w.ue(7)        # slice_type: I (all slices in stream are I)
     w.ue(0)        # pic_parameter_set_id
@@ -1936,7 +1840,7 @@ def h264_cavlc_runs(
 
 
 def _cavlc_write_block(
-    w: "_H264BitWriter", levels: list[int], n_c: int,
+    w: MsbWriter, levels: list[int], n_c: int,
     enc: "dict", total_zeros: int | None = None,
     runs: list[int] | None = None,
 ) -> None:
@@ -2058,7 +1962,7 @@ def h264_cavlc_idr_rbsp(
     Intra16x16ACLevel blocks through ``_cavlc_write_block`` — with the
     per-4x4 nzc neighbor bookkeeping that drives each block's nC
     exactly as the decoder re-derives it."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(7)        # slice_type: I
     w.ue(0)        # pic_parameter_set_id
@@ -2250,8 +2154,8 @@ def make_h264_multiref_bytes(doc_id: int) -> bytes:
 
     def p_header(
         frame_num: int, n_refs: int, modify: bool
-    ) -> "_H264BitWriter":
-        w = _H264BitWriter()
+    ) -> MsbWriter:
+        w = MsbWriter()
         w.ue(0)                 # first_mb_in_slice
         w.ue(5)                 # slice_type: P
         w.ue(0)                 # pic_parameter_set_id
@@ -2281,7 +2185,7 @@ def make_h264_multiref_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 0)]) * 256 + bytes([128]) * 128
     )
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(30)
     w2.align()
@@ -2289,7 +2193,7 @@ def make_h264_multiref_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 1)]) * 256 + bytes([128]) * 128
     )
-    w3 = _H264BitWriter()
+    w3 = MsbWriter()
     w3.ue(n_mbs - 2)
     parts.append(w3.rbsp_trailing())
     units.append(_h264_nal(2, 1, b"".join(parts), 3))
@@ -2331,7 +2235,7 @@ def h264_weighted_pps_rbsp(doc_id: int) -> bytes:
     """PPS with weighted_pred_flag 1 (P slices carry
     pred_weight_table) and weighted_bipred_idc 1 (explicit B
     weights)."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)    # pic_parameter_set_id
     w.ue(0)    # seq_parameter_set_id
     w.u(0, 1)  # entropy_coding_mode_flag: CAVLC
@@ -2381,7 +2285,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
     ]
 
     # IDR (poc 0): the affine plane
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(7)
     w.ue(0)
@@ -2404,7 +2308,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
 
     # P1 (reference, poc 4): identity weight table (flag-0 default
     # path), PCM refreshes at 0/1, the rest skip
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)
     w.ue(0)
@@ -2425,7 +2329,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 0)]) * 256 + bytes([128]) * 128
     )
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(30)
     w2.align()
@@ -2433,7 +2337,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 1)]) * 256 + bytes([128]) * 128
     )
-    w3 = _H264BitWriter()
+    w3 = MsbWriter()
     w3.ue(n_mbs - 2)         # skip the rest
     parts.append(w3.rbsp_trailing())
     units.append(_h264_nal(2, 1, b"".join(parts), 3))
@@ -2441,7 +2345,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
     # P2 (reference, poc 8): REAL uni weights over P1; a skip run of
     # doc % 3 then explicit zero-MV P_L0_16x16 macroblocks
     s = doc_id % 3
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)
     w.ue(0)
@@ -2468,7 +2372,7 @@ def make_h264_weighted_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(2, 1, w.rbsp_trailing(), 4))
 
     # B (non-reference, poc 2): spatial direct + per-list weights
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(6)                  # slice_type B
     w.ue(0)
@@ -2540,7 +2444,7 @@ def make_h264_bframe_bytes(doc_id: int) -> bytes:
     ]
 
     # IDR: the affine plane, now with a pic_order_cnt_lsb field
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(7)        # slice_type: I
     w.ue(0)        # pic_parameter_set_id
@@ -2562,7 +2466,7 @@ def make_h264_bframe_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(3, 5, b"".join(parts), 2))
 
     # P (reference, poc 4): PCM refreshes at 0/1, the rest skip
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)                  # slice_type: P
     w.ue(0)
@@ -2579,7 +2483,7 @@ def make_h264_bframe_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 0)]) * 256 + bytes([128]) * 128
     )
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(30)
     w2.align()
@@ -2587,13 +2491,13 @@ def make_h264_bframe_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_multiref_w(doc_id, 1)]) * 256 + bytes([128]) * 128
     )
-    w3 = _H264BitWriter()
+    w3 = MsbWriter()
     w3.ue(n_mbs - 2)
     parts.append(w3.rbsp_trailing())
     units.append(_h264_nal(2, 1, b"".join(parts), 3))
 
     # B (non-reference, poc 2, between the references)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(6)                  # slice_type: B (6 = B, all slices)
     w.ue(0)
@@ -2666,7 +2570,7 @@ def make_h264_p8x8_bytes(doc_id: int) -> bytes:
     ]
 
     # P1: skip / P_8x8 / zero-MV 16x16 by (doc + idx) % 4
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(5)        # slice_type P
     w.ue(0)        # pic_parameter_set_id
@@ -2712,7 +2616,7 @@ def make_h264_p8x8_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(2, 1, w.rbsp_trailing(), 3))
 
     # P2: one all-skip run (zero motion chains through 8.4.1.1)
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(5)
     w2.ue(0)
@@ -2774,7 +2678,7 @@ def make_h264_tdirect_bytes(doc_id: int) -> bytes:
     ]
 
     # IDR (poc 0): affine I_PCM plane, with the POC-type-0 field
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(7)
     w.ue(0)
@@ -2796,7 +2700,7 @@ def make_h264_tdirect_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(3, 5, b"".join(parts), 2))
 
     # P (reference, poc 4): explicit real motion everywhere
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)
     w.ue(0)
@@ -2819,7 +2723,7 @@ def make_h264_tdirect_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(2, 1, w.rbsp_trailing(), 3))
 
     # B (non-reference, poc 2): temporal skip/direct only
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(6)        # slice_type B
     w.ue(0)
@@ -2862,7 +2766,7 @@ def h264_pskip_rbsp(frame_num: int, n_mbs: int) -> bytes:
     macroblock in the picture (P_Skip: zero motion against the
     reference, no residual, NO entropy-coded macroblock layer), closed
     by rbsp_trailing_bits."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)                 # first_mb_in_slice
     w.ue(5)                 # slice_type: P (all slices in stream are P)
     w.ue(0)                 # pic_parameter_set_id
@@ -2895,7 +2799,7 @@ def h264_prefresh_rbsp(
     in a P slice = intra type 25 + 5, 7.4.5), and the closing
     mb_skip_run over the remaining macroblocks.  The one partial-skip
     shape that carries real pixels without the CAVLC residual tables."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)                 # first_mb_in_slice
     w.ue(5)                 # slice_type: P
     w.ue(0)                 # pic_parameter_set_id
@@ -2908,7 +2812,7 @@ def h264_prefresh_rbsp(
     w.ue(30)                # mb_type: I_PCM (P-slice intra offset +5)
     w.align()    # pcm_alignment_zero_bit
     parts = [w.to_bytes(), bytes([luma]) * 256 + bytes([128]) * 128]
-    tail = _H264BitWriter()
+    tail = MsbWriter()
     if refresh_mb < n_mbs - 1:
         tail.ue(n_mbs - 1 - refresh_mb)  # closing skip run
     parts.append(tail.rbsp_trailing())
@@ -2987,7 +2891,7 @@ MP3_SLEN = (
 # (the walker fixture make_mp3_bytes, with its CRC and VBR padding,
 # keeps its own loop): the granule coders (``_mp3_put_scalefacs``,
 # ``_mp3_put_pairs``, ``_mp3_put_quads``) append a granule's regions to
-# a _BitPacker, the caller takes part2_3_length from ``tell()``, and
+# an MsbWriter, the caller takes part2_3_length from ``tell()``, and
 # ``_mp3_frame`` lays out header, side info and zero-filled main data.
 
 # Header byte 3 per channel mode (ISO 11172-3 2.4.1.3): mode(2)
@@ -3013,10 +2917,10 @@ def _mp3_region_bytes(br_idx: int, sr_idx: int, mode: int = MP3_MONO) -> int:
     return (144 * kbps * 1000) // sr - 4 - (17 if mode >> 6 == 3 else 32)
 
 
-def _mp3_main_data(data: "_BitPacker | bytes", n_bytes: int) -> bytes:
+def _mp3_main_data(data: "MsbWriter | bytes", n_bytes: int) -> bytes:
     """Granule data zero-filled to ``n_bytes`` (a packer's bits are
     first zero-padded to a byte boundary)."""
-    if isinstance(data, _BitPacker):
+    if isinstance(data, MsbWriter):
         data.align()
         data = data.to_bytes()
     if len(data) > n_bytes:
@@ -3025,7 +2929,7 @@ def _mp3_main_data(data: "_BitPacker | bytes", n_bytes: int) -> bytes:
 
 
 def _mp3_put_gr_info(
-    w: _BitPacker, part2_3_length: int, big_values: int, global_gain: int,
+    w: MsbWriter, part2_3_length: int, big_values: int, global_gain: int,
     scalefac_compress: int, table_select: tuple, region0_count: int = 0,
     region1_count: int = 0, block_type: int = 0, mixed_block_flag: int = 0,
     subblock_gain: tuple = (0, 0, 0), preflag: int = 0,
@@ -3061,7 +2965,7 @@ def _mp3_put_gr_info(
 
 def _mp3_frame(
     br_idx: int, sr_idx: int, mode: int, gr_info: list[dict],
-    main: "_BitPacker | bytes", main_data_begin: int = 0, scfsi: int = 0,
+    main: "MsbWriter | bytes", main_data_begin: int = 0, scfsi: int = 0,
 ) -> bytes:
     """One unpadded, unprotected MPEG-1 Layer III frame: the 4-byte
     header (sync, MPEG-1, Layer III, no CRC, ``br_idx``, ``sr_idx``, no
@@ -3072,7 +2976,7 @@ def _mp3_frame(
     frame length.  ``main`` is the granule packer, or the frame's
     main-data bytes where a bit-reservoir fixture cuts them from a
     stream."""
-    si = _BitPacker()
+    si = MsbWriter()
     si.u(main_data_begin, 9)
     if mode >> 6 == 3:
         si.u(0, 5)  # private_bits
@@ -3088,7 +2992,7 @@ def _mp3_frame(
     )
 
 
-def _mp3_put_scalefacs(w: _BitPacker, sfc: int, part: tuple, sf_a, sf_b) -> None:
+def _mp3_put_scalefacs(w: MsbWriter, sfc: int, part: tuple, sf_a, sf_b) -> None:
     """A granule's scalefactors (part2): ``part``'s (n1, n2) counts at
     scalefac_compress ``sfc``'s (slen1, slen2) bits (Table 2.4.2.7).
     ``sf_a`` / ``sf_b`` give the slen1 / slen2 group's values: one int
@@ -3102,7 +3006,7 @@ def _mp3_put_scalefacs(w: _BitPacker, sfc: int, part: tuple, sf_a, sf_b) -> None
                 w.u(sf(i), slen)
 
 
-def _mp3_put_pairs(w: _BitPacker, pairs, sign_base: int) -> None:
+def _mp3_put_pairs(w: MsbWriter, pairs, sign_base: int) -> None:
     """The big-values region: per pair ``(table, |x|, |y|)``, the B.7
     code of the pair (magnitudes clamped to the ESC value 15), then x's
     linbits extension and sign bit, then y's (the 2.4.2.7 order).  Pair
@@ -3136,7 +3040,7 @@ def _mp3_put_pairs(w: _BitPacker, pairs, sign_base: int) -> None:
         u(v, n)
 
 
-def _mp3_put_quads(w: _BitPacker, quads, table_a: bool = False) -> None:
+def _mp3_put_quads(w: MsbWriter, quads, table_a: bool = False) -> None:
     """The count1 region: per quadruple ``(pattern, neg)`` — pattern's
     bits 3..0 are the |v w x y| flags — the table A Huffman code of the
     pattern or table B's fixed 4 complemented bits, then one sign bit
@@ -3171,7 +3075,7 @@ def _mp3_live_region(rc: int, nbv: int) -> tuple[int, int]:
 
 
 def _mp3_table_granule(
-    w: _BitPacker, doc_id: int, g: int, part: tuple, pairs: list,
+    w: MsbWriter, doc_id: int, g: int, part: tuple, pairs: list,
     n_quads: int, table_a: bool = False,
 ) -> dict:
     """Granule g of a Huffman-table fixture (ht, lb, b8, ws): ``part``'s
@@ -3208,7 +3112,7 @@ def _mp3_reservoir_bytes(
     cap = _mp3_region_bytes(br_idx, sr_idx)
     blobs, fields = {}, {}
     for parity in (0, 1):
-        w = _BitPacker()
+        w = MsbWriter()
         for g in (0, 1):
             start = w.tell()
             fields[g] = put_granule(w, g, parity, cap)
@@ -3354,7 +3258,7 @@ def make_mp3_md_bytes(doc_id: int) -> bytes:
     n_frames, sr_idx, br_idx, delta = mp3_md_params(doc_id)
     tsels = mp3_bv_tables(doc_id)
 
-    def put_granule(w: _BitPacker, g: int, parity: int, cap: int) -> dict:
+    def put_granule(w: MsbWriter, g: int, parity: int, cap: int) -> dict:
         sfc, sf_a, sf_b, pattern, n_quads, _p23 = mp3_md_granule(
             doc_id, g, cap, delta
         )
@@ -3457,7 +3361,7 @@ def make_mp3_ht_bytes(doc_id: int) -> bytes:
     patterns + sign bits) and fixed-length table B by (doc + g)
     parity.  Every value is a closed form a SQL oracle restates;
     ``part2_3_length`` is the exact bit count."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = [
         dict(
             _mp3_table_granule(
@@ -3528,7 +3432,7 @@ def make_mp3_lb_bytes(doc_id: int) -> bytes:
     table B.  Every value is a closed form the SQL oracle restates;
     ``part2_3_length`` is the exact bit count, so one wrong code or a
     missed linbits read desyncs the stream and fails accounting."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = []
     for g in (0, 1):
         t = mp3_lb_table(doc_id, g)
@@ -3627,7 +3531,7 @@ def make_mp3_imdct_bytes(doc_id: int) -> bytes:
     ±1 pairs through B.7 table 1, then count1 table B quadruples.
     Every quantized value is 0 or ±1, so the requantized spectrum IS
     the integer level array and the filterbank runs integer-exact."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = []
     for g in (0, 1):
         rc, r0_pairs, nbv, nq = mp3_imdct_geometry(doc_id, g)
@@ -3742,7 +3646,7 @@ def _mp3_rq_bytes(doc_id: int, tables: tuple[int, int], mags) -> bytes:
     to B.8[rc + 1], then 9 + (doc + g) % 7 pairs of magnitudes
     ``mags(g, q)`` through table ``tables[g]`` and table-B count1
     quadruples."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = []
     for g in (0, 1):
         rc, gg, sfs, sf_a, sf_b = mp3_rq_fields(doc_id, g)
@@ -3907,7 +3811,7 @@ def mp3_ms_spectrum(doc_id: int, g: int, ch: int) -> dict[int, int]:
 
 
 def _mp3_stereo_granule(
-    w: _BitPacker, k: int, rc: int, gg: int, sfs: int, base_a: int,
+    w: MsbWriter, k: int, rc: int, gg: int, sfs: int, base_a: int,
     base_b: int, nbv: int, nq: int, preflag: int = 0,
 ) -> dict:
     """One long-block table-10 channel granule of the joint-stereo
@@ -3940,7 +3844,7 @@ def make_mp3_ms_bytes(doc_id: int) -> bytes:
     granules with real slen-coded scalefactors, gains in the 198..222
     band, and table-10 spectra whose mid and side lines differ — the
     layer that forces a decoder to run the (M±S)/sqrt(2) matrix."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = [
         _mp3_stereo_granule(w, doc_id + g + 5 * ch,
                             *mp3_ms_fields(doc_id, g, ch))
@@ -3987,7 +3891,7 @@ def make_mp3_is_bytes(doc_id: int) -> bytes:
     including 7s (intensity off).  The whole spectrum is therefore
     the intensity region and every left line splits L/R by the
     derived Q15 tan-ratio table."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = []
     for g in (0, 1):
         rc, gg, sfs, pre, base_a, base_b, nbv, nq = mp3_is_fields(doc_id, g)
@@ -4057,7 +3961,7 @@ def make_mp3_rqs_bytes(doc_id: int) -> bytes:
     half-step index 4*ssg), the implied two-region split at sample
     36, and table-10 magnitudes 0..7 — so the short band/window
     mapping decides every line's exponent."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = []
     for g in (0, 1):
         gg, sfs, ssg, base_a, base_b = mp3_rqs_fields(doc_id, g)
@@ -4086,7 +3990,7 @@ def make_mp3_rqs_bytes(doc_id: int) -> bytes:
 
 # Ogg page CRC-32 (RFC 3533 6.): polynomial 0x04c11db7, no reflection,
 # zero init and xorout — NOT the zlib CRC, a detail page walkers trip
-# over.  Steps ``_CRC32_TABLE`` (``_crc_table``, below); shared by
+# over.  Steps ``_CRC32_TABLE`` (below); shared by
 # synth and decode through this module.
 def ogg_crc(data: bytes) -> int:
     table = _CRC32_TABLE
@@ -4401,44 +4305,6 @@ def make_mp3_id3v1_bytes(doc_id: int) -> bytes:
     return make_mp3_id3_bytes(doc_id) + tag
 
 
-class _LsbBitWriter:
-    """Forward LSB-first bit writer (the VP8L stream convention)."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.cur = 0
-        self.nbits = 0
-
-    def put(self, value: int, n: int) -> None:
-        # accumulate n LSB-first bits at once (bit j of value lands at
-        # stream position nbits+j — same layout as the old per-bit loop)
-        cur = self.cur | ((value & ((1 << n) - 1)) << self.nbits)
-        nbits = self.nbits + n
-        out = self.out
-        while nbits >= 8:
-            out.append(cur & 0xFF)
-            cur >>= 8
-            nbits -= 8
-        self.cur = cur
-        self.nbits = nbits
-
-    def put_code(self, code: int, n: int) -> None:
-        """Huffman codes go MSB-first (tree-walk order) into the
-        LSB-first stream."""
-        rev = 0
-        for _ in range(n):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.put(rev, n)
-
-    def to_bytes(self) -> bytes:
-        if self.nbits:
-            self.out.append(self.cur)
-            self.cur = 0
-            self.nbits = 0
-        return bytes(self.out)
-
-
 # VP8L code-length-code order (the WebP lossless spec's constant)
 VP8L_CL_ORDER = (
     17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
@@ -4518,7 +4384,7 @@ def make_webp_vp8l_bytes(doc_id: int) -> bytes:
     dist_prefix, dist_extra, dist_extra_n = _vp8l_prefix(dist + 120)
     red, blue = webp_red_blue(doc_id)
 
-    w = _LsbBitWriter()
+    w = LsbWriter()
     w.put(0x2F, 8)            # VP8L signature
     w.put(w_px - 1, 14)
     w.put(h_px - 1, 14)
@@ -4680,7 +4546,7 @@ def _vp8l_flat_lengths(n: int) -> dict:
     return {s: (k - 1 if s < n_short else k) for s in range(n)}
 
 
-def _vp8l_put_flat_tree(w: "_LsbBitWriter", n: int) -> dict:
+def _vp8l_put_flat_tree(w: LsbWriter, n: int) -> dict:
     """Write the flat complete tree over alphabet n in NORMAL form
     (code-length-code header + per-symbol lengths, closing the Kraft
     budget exactly at the last symbol) and return the encoder map
@@ -4788,7 +4654,7 @@ def make_webp_vp8l_transform_bytes(doc_id: int) -> bytes:
     w_px, h_px, m, psize = webp_vp8l_t_params(doc_id)
     n_px = w_px * h_px
     stratum = doc_id % 3
-    w = _LsbBitWriter()
+    w = LsbWriter()
     w.put(0x2F, 8)
     w.put(w_px - 1, 14)
     w.put(h_px - 1, 14)
@@ -6137,22 +6003,9 @@ def make_tiff_bytes(doc_id: int) -> bytes:
 FLAC_RATES = {4: 8000, 5: 16000, 6: 22050}
 
 
-def _crc_table(poly: int, width: int) -> tuple:
-    """256-entry table for a left-shifting CRC of the given width."""
-    top = 1 << (width - 1)
-    mask = (1 << width) - 1
-    table = []
-    for byte in range(256):
-        crc = byte << (width - 8)
-        for _ in range(8):
-            crc = ((crc << 1) ^ poly) & mask if crc & top else (crc << 1) & mask
-        table.append(crc)
-    return tuple(table)
-
-
-_CRC8_TABLE = _crc_table(0x07, 8)
-_CRC16_TABLE = _crc_table(0x8005, 16)
-_CRC32_TABLE = _crc_table(0x04C11DB7, 32)
+_CRC8_TABLE = crc_table(0x07, 8)
+_CRC16_TABLE = crc_table(0x8005, 16)
+_CRC32_TABLE = crc_table(0x04C11DB7, 32)
 
 
 def flac_crc8(data: bytes) -> int:
@@ -6258,7 +6111,7 @@ def flac_lpc_shape(doc_id: int) -> tuple[int, int, int, list[int]]:
 
 
 def _flac_rice_residuals(
-    w: "_BitPacker", res: list, porder: int, order: int, blocksize: int
+    w: MsbWriter, res: list, porder: int, order: int, blocksize: int
 ) -> None:
     """Rice-coded residual section (shared by the FIXED and LPC
     subframes): method 00 (4-bit parameters), partition order p, 2^p
@@ -6295,7 +6148,7 @@ def _flac_fixed_subframe(doc_id: int, k: int, samples: list) -> bytes:
         samples[i] - sum(c * samples[i - 1 - j] for j, c in enumerate(coefs))
         for i in range(order, len(samples))
     ]
-    w = _BitPacker()
+    w = MsbWriter()
     w.u((8 + order) << 1, 8)
     for s in samples[:order]:
         w.u(s & 0xFFFF, 16)
@@ -6320,7 +6173,7 @@ def _flac_lpc_subframe(doc_id: int, k: int, samples: list) -> bytes:
         - (sum(c * samples[i - 1 - j] for j, c in enumerate(coefs)) >> shift)
         for i in range(order, len(samples))
     ]
-    w = _BitPacker()
+    w = MsbWriter()
     w.u((32 + order - 1) << 1, 8)
     for s in samples[:order]:
         w.u(s & 0xFFFF, 16)
@@ -6358,7 +6211,7 @@ def make_flac_bytes(doc_id: int) -> bytes:
         # CONSTANT/VERBATIM field boundaries land on byte edges
         # (sync+codes = 4 bytes, 1-byte frame number, 1-byte subframe
         # header, 16-bit samples) so those frames assemble as plain
-        # bytes; FIXED frames pack Rice codes through _BitPacker.
+        # bytes; FIXED frames pack Rice codes through an MsbWriter.
         header = bytes((
             0xFF, 0b11111000,           # 14-bit sync + reserved + fixed
             (8 << 4) | sr_code,         # blocksize code 8 (256) | rate
@@ -6392,7 +6245,7 @@ def make_flac_bytes(doc_id: int) -> bytes:
     md5 = hashlib.md5(
         struct.pack(f"<{len(all_samples)}h", *all_samples)
     ).digest()
-    si = _BitPacker()
+    si = MsbWriter()
     si.u(FLAC_BLOCK, 16)  # min blocksize
     si.u(FLAC_BLOCK, 16)  # max blocksize
     si.u(0, 24)  # min framesize (0 = unknown)
@@ -6468,7 +6321,7 @@ def flac_stereo_values(doc_id: int, k: int) -> tuple[int, int]:
     return (doc_id * 7 + 9 * k) % 300, (doc_id * 5 + 11 * k) % 200
 
 
-def _flac_pack_subframe(w: "_BitPacker", samples: list, bps: int,
+def _flac_pack_subframe(w: MsbWriter, samples: list, bps: int,
                         constant: bool) -> None:
     """One CONSTANT or VERBATIM subframe at an arbitrary bit depth
     (side channels carry bps+1 bits, so nothing here is byte-aligned)."""
@@ -6515,7 +6368,7 @@ def make_flac_stereo_bytes(doc_id: int) -> bytes:
         ))
         header += bytes([flac_crc8(header)])
         side = [l - r for l, r in zip(left, right)]
-        w = _BitPacker()
+        w = MsbWriter()
         if mode == 0:    # independent: L verbatim, R constant
             _flac_pack_subframe(w, left, 16, constant=False)
             _flac_pack_subframe(w, right, 16, constant=True)
@@ -6539,7 +6392,7 @@ def make_flac_stereo_bytes(doc_id: int) -> bytes:
     md5 = hashlib.md5(
         struct.pack(f"<{len(interleaved)}h", *interleaved)
     ).digest()
-    si = _BitPacker()
+    si = MsbWriter()
     si.u(FLAC_BLOCK, 16)
     si.u(FLAC_BLOCK, 16)
     si.u(0, 24)
@@ -6825,7 +6678,7 @@ def make_flac_vbs_bytes(doc_id: int) -> bytes:
 
         eff = 16 - wasted
         v = flac_vbs_value(doc_id, k)
-        w = _BitPacker()
+        w = MsbWriter()
         if k % 3 == 0:  # CONSTANT
             w.u(0, 1); w.u(0, 6)
             _flac_wasted_flag(w, wasted)
@@ -6862,7 +6715,7 @@ def make_flac_vbs_bytes(doc_id: int) -> bytes:
     md5 = hashlib.md5(
         struct.pack(f"<{len(all_samples)}h", *all_samples)
     ).digest()
-    si = _BitPacker()
+    si = MsbWriter()
     si.u(192, 16)  # min blocksize
     si.u(288, 16)  # max blocksize
     si.u(0, 24); si.u(0, 24)
@@ -6878,7 +6731,7 @@ def make_flac_vbs_bytes(doc_id: int) -> bytes:
     )
 
 
-def _flac_wasted_flag(w: "_BitPacker", wasted: int) -> None:
+def _flac_wasted_flag(w: MsbWriter, wasted: int) -> None:
     """Subframe wasted-bits field: flag 0, or flag 1 + unary(k-1)."""
     if wasted == 0:
         w.u(0, 1)
@@ -6947,7 +6800,7 @@ def make_mp3_sb_bytes(doc_id: int) -> bytes:
     fixture, through the same live bit reservoir."""
     n_frames, sr_idx, br_idx, delta = mp3_sb_params(doc_id)
 
-    def put_granule(w: _BitPacker, g: int, parity: int, cap: int) -> dict:
+    def put_granule(w: MsbWriter, g: int, parity: int, cap: int) -> dict:
         sfc, sf_a, sf_b, pattern, n_quads, _p23 = mp3_sb_granule(
             doc_id, g, cap, delta
         )
@@ -7035,7 +6888,7 @@ def make_mp3_b8_bytes(doc_id: int) -> bytes:
     cycles (44.1/48/32 kHz by doc % 3) genuinely selects which pairs
     decode through which table.  ``main_data_begin = 0``, scfsi 0,
     count1 table B."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = [
         dict(
             _mp3_table_granule(w, doc_id, g, MP3_SF_LONG,
@@ -7068,7 +6921,7 @@ def make_mp3_ws_bytes(doc_id: int, mixed: bool = False) -> bytes:
     instead (ISO 2.4.2.7): 8 LONG bands at slen1, then short bands
     3-5 at slen1 and 6-11 at slen2 x 3 windows — the 17*slen1 +
     18*slen2 part2 layout."""
-    w = _BitPacker()
+    w = MsbWriter()
     gr_info = [
         dict(
             _mp3_table_granule(
@@ -7171,7 +7024,7 @@ def h264_inter_refresh_luma(doc_id: int, i: int) -> int:
 def _h264_idr_values_rbsp(idr_pic_id: int, lumas: list[int]) -> bytes:
     """All-I_PCM IDR slice RBSP whose macroblock lumas are given
     explicitly (the affine plane the inter fixture needs)."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(7)        # slice_type: I
     w.ue(0)        # pic_parameter_set_id
@@ -7230,8 +7083,8 @@ def make_h264_inter_bytes(doc_id: int) -> bytes:
     lumas = [base + 5 * r + 3 * c for r in range(mb_h) for c in range(mb_w)]
     units.append(_h264_nal(3, 5, _h264_idr_values_rbsp(0, lumas), 2))
 
-    def p_header(frame_num: int) -> "_H264BitWriter":
-        w = _H264BitWriter()
+    def p_header(frame_num: int) -> MsbWriter:
+        w = MsbWriter()
         w.ue(0)                 # first_mb_in_slice
         w.ue(5)                 # slice_type: P (all slices P)
         w.ue(0)                 # pic_parameter_set_id
@@ -7242,7 +7095,7 @@ def make_h264_inter_bytes(doc_id: int) -> bytes:
         w.se(0)                 # slice_qp_delta
         return w
 
-    def inter_mb(w: "_H264BitWriter", mvd: tuple[int, int]) -> None:
+    def inter_mb(w: MsbWriter, mvd: tuple[int, int]) -> None:
         w.ue(0)      # mb_type: P_L0_16x16
         w.se(mvd[0])  # mvd_l0 x (quarter-pel units)
         w.se(mvd[1])  # mvd_l0 y
@@ -7279,7 +7132,7 @@ def make_h264_inter_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_inter_refresh_luma(doc_id, 0)]) * 256 + bytes([128]) * 128
     )
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(30)
     w2.align()
@@ -7287,7 +7140,7 @@ def make_h264_inter_bytes(doc_id: int) -> bytes:
     parts.append(
         bytes([h264_inter_refresh_luma(doc_id, 1)]) * 256 + bytes([128]) * 128
     )
-    w3 = _H264BitWriter()
+    w3 = MsbWriter()
     w3.ue(mb_w - 3)
     inter_mb(w3, (-64, 0))
     w3.ue(0)
@@ -7334,7 +7187,7 @@ def _h264_idr_pixels_rbsp(
     pixel-exact reference state the fractional-pel walker needs.
     Optional ``cb``/``cr`` half-resolution planes fill the 4:2:0
     chroma samples (flat 128 when omitted)."""
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(7)        # slice_type: I
     w.ue(0)        # pic_parameter_set_id
@@ -7429,7 +7282,7 @@ def make_h264_submb_bytes(doc_id: int) -> bytes:
         plane = 16 + (5 * xs + 3 * ys + 13 * doc_id + 29 * f) % 200
         units.append(_h264_nal(3, 5, _h264_idr_pixels_rbsp(f, plane), idx))
         idx += 1
-        w = _H264BitWriter()
+        w = MsbWriter()
         w.ue(0)        # first_mb_in_slice
         w.ue(5)        # slice_type: P
         w.ue(0)        # pic_parameter_set_id
@@ -7524,7 +7377,7 @@ def make_h264_bpixel_bytes(doc_id: int) -> bytes:
     ]
 
     # IDR (poc 0): per-pixel plane, with the POC-type-0 lsb field
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)        # first_mb_in_slice
     w.ue(7)        # slice_type: I
     w.ue(0)        # pic_parameter_set_id
@@ -7552,7 +7405,7 @@ def make_h264_bpixel_bytes(doc_id: int) -> bytes:
 
     # P (poc 4, reference): every MB P_L0_16x16 with the uniform MV
     pmv = h264_bpixel_pmv(doc_id)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)        # slice_type: P
     w.ue(0)
@@ -7572,7 +7425,7 @@ def make_h264_bpixel_bytes(doc_id: int) -> bytes:
 
     # B (poc 2, NON-reference): kinds cycle l0/l1/bi
     mv0, mv1 = h264_bpixel_mv(doc_id, 0), h264_bpixel_mv(doc_id, 1)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(6)        # slice_type: B (6 % 5 == 1)
     w.ue(0)
@@ -7679,7 +7532,7 @@ def make_h264_dpixel_bytes(doc_id: int) -> bytes:
     arr = (16 + (7 * np.arange(w_px)[None, :]
                  + 3 * np.arange(h_px)[:, None]
                  + 13 * doc_id) % 200).astype(np.uint8)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(7); w.ue(0)
     w.u(0, 4)
     w.ue(0)
@@ -7699,7 +7552,7 @@ def make_h264_dpixel_bytes(doc_id: int) -> bytes:
     units.append(_h264_nal(3, 5, b"".join(parts), 2))
 
     pmv = h264_dpixel_pmv(doc_id)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(5); w.ue(0)
     w.u(1, 4)
     w.u(4, 4)      # pic_order_cnt_lsb = 4
@@ -7718,7 +7571,7 @@ def make_h264_dpixel_bytes(doc_id: int) -> bytes:
     bmv1 = h264_dpixel_bmv(doc_id, 1)
     col = (True, [(0, pmv)] * n_mbs)
     use_skip_form = doc_id % 2 == 1
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(6); w.ue(0)
     w.u(2, 4)
     w.u(2, 4)      # pic_order_cnt_lsb = 2
@@ -7813,7 +7666,7 @@ def make_h264_wpixel_bytes(doc_id: int) -> bytes:
     arr = (16 + (5 * np.arange(w_px)[None, :]
                  + 7 * np.arange(h_px)[:, None]
                  + 11 * doc_id) % 200).astype(np.uint8)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(7); w.ue(0)
     w.u(0, 4)
     w.ue(0)
@@ -7835,7 +7688,7 @@ def make_h264_wpixel_bytes(doc_id: int) -> bytes:
     # P (poc 4, reference): identity pred_weight_table, uniform MV
     pmv = (4 * (((3 * doc_id) % 9) - 4), 4 * ((doc_id % 7) - 3))
     dp = (doc_id + 1) % 3
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(5); w.ue(0)
     w.u(1, 4)      # frame_num
     w.u(4, 4)      # pic_order_cnt_lsb = 4
@@ -7858,7 +7711,7 @@ def make_h264_wpixel_bytes(doc_id: int) -> bytes:
     # B (poc 2, non-reference): REAL weights, kinds cycle l0/l1/bi
     db, w0, o0, w1, o1 = h264_wpixel_weights(doc_id)
     mv0, mv1 = h264_wpixel_mv(doc_id, 0), h264_wpixel_mv(doc_id, 1)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(6); w.ue(0)
     w.u(2, 4)      # frame_num
     w.u(2, 4)      # pic_order_cnt_lsb = 2
@@ -7971,7 +7824,7 @@ def make_h264_chroma_bytes(doc_id: int) -> bytes:
         )
         idx += 1
         mvx, mvy = h264_chroma_mv(doc_id, f)
-        w = _H264BitWriter()
+        w = MsbWriter()
         w.ue(0)        # first_mb_in_slice
         w.ue(5)        # slice_type: P
         w.ue(0)        # pic_parameter_set_id
@@ -8022,7 +7875,7 @@ def make_h264_fracpel_bytes(doc_id: int) -> bytes:
         units.append(_h264_nal(3, 5, _h264_idr_pixels_rbsp(f, plane), idx))
         idx += 1
         mvx, mvy = h264_fracpel_mv(doc_id, f)
-        w = _H264BitWriter()
+        w = MsbWriter()
         w.ue(0)        # first_mb_in_slice
         w.ue(5)        # slice_type: P
         w.ue(0)        # pic_parameter_set_id

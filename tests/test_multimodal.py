@@ -1011,8 +1011,8 @@ def test_mp3_side_info_round_trip():
     switching branch (which the fixture encoder never emits) also
     parses via a handcrafted granule."""
     from open_source_etl_spark.multimodal.decode import parse_mp3_side_info
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _BitPacker,
         mp3_granule_fields,
         mp3_main_data_begin,
         mp3_side_info,
@@ -1030,7 +1030,7 @@ def test_mp3_side_info_round_trip():
 
     # window-switching granule: block_type 2 (short), 2 table selects,
     # 3 subblock gains — same 22-bit width as the long-block branch
-    w = _BitPacker()
+    w = MsbWriter()
     w.u(77, 9); w.u(0, 5); w.u(0, 4)
     for _g in (0, 1):
         w.u(1000, 12); w.u(100, 9); w.u(200, 8); w.u(3, 4)
@@ -1186,8 +1186,8 @@ def test_h264_sps_parse_round_trip():
     chroma-format branch and frame cropping also parses (handcrafted —
     the fixture encoder never emits one)."""
     from open_source_etl_spark.multimodal.decode import parse_sps
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_sps_fields,
         h264_sps_rbsp,
     )
@@ -1198,7 +1198,7 @@ def test_h264_sps_parse_round_trip():
         assert got == (profile, level, 16 * (w_m1 + 1), 16 * (h_m1 + 1))
 
     # High profile (100), 4:2:0, 1920x1080 via cropping 1088 -> 1080
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.u(100, 8); w.u(0, 8); w.u(40, 8)
     w.ue(0)          # sps_id
     w.ue(1)          # chroma_format_idc = 4:2:0
@@ -1291,10 +1291,10 @@ def test_h264_ipcm_rejects_entropy_coded_and_truncated():
     import pytest
 
     from open_source_etl_spark.multimodal.decode import _parse_ipcm_slice
-    from open_source_etl_spark.multimodal.synth import _H264BitWriter
+    from open_source_etl_spark.multimodal.bits import MsbWriter
 
     def slice_bits(mb_type: int, n_samples: int = 384, tail_pad: int = 0):
-        w = _H264BitWriter()
+        w = MsbWriter()
         w.ue(0); w.ue(7); w.ue(0)  # header: mb 0, I slice, pps 0
         w.u(0, 4)                  # frame_num
         w.ue(0)                    # idr_pic_id
@@ -2057,12 +2057,12 @@ def test_h264_multiref_decode_and_rejections(spark):
     # a modification naming a PicNum absent from the DPB: the last
     # slice's abs_diff_pic_num_minus1 is ue(1) = '010'; find the
     # slice and rebuild it naming PicNum 3 - 7 (mod 16) = 12
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
         _h264_nal,
-        _H264BitWriter,
     )
 
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(5)
     w.ue(0)
@@ -2089,7 +2089,7 @@ def test_h264_multiref_decode_and_rejections(spark):
         decode_h264_multiref(media_of(bad)).collect()
 
     # three active references with a two-picture DPB rejects
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0)
     w2.ue(5)
     w2.ue(0)
@@ -2209,10 +2209,10 @@ def test_mp3_preflag_on_start_block_requantizes_and_short_rejects():
         _mp3_rq_tables,
         decode_mp3_requant,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
         MP3_BITRATES_KBPS,
         MP3_SLEN,
-        _BitPacker,
         _mp3_ht_enc,
         make_mp3_rqs_bytes,
     )
@@ -2283,7 +2283,7 @@ def test_mp3_preflag_on_start_block_requantizes_and_short_rejects():
         pad = (8 - nb % 8) % 8
         packed = (acc << pad).to_bytes((nb + pad) // 8, "big")
         assert len(packed) <= cap
-        w = _BitPacker()
+        w = MsbWriter()
         w.u(0, 9); w.u(0, 5); w.u(0, 4)
         for g, p23 in ((0, n0), (1, n1)):
             nbv = 9 + (doc + g) % 7
@@ -2604,16 +2604,16 @@ def test_h264_refresh_macroblock_persists_into_later_pictures(spark):
     the next picture's reference.  Handcrafted 2x1-MB stream: IDR
     (lumas 40, 80), P1 refreshing MB 1 to 200, P2 all-skip."""
     from open_source_etl_spark.multimodal.decode import decode_h264_gop
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
         _h264_nal,
         _h264_sps_from_fields,
-        _H264BitWriter,
         h264_pps_rbsp,
         h264_prefresh_rbsp,
         h264_pskip_rbsp,
     )
 
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(7); w.ue(0)  # first_mb, I slice, pps 0
     w.u(0, 4)                  # frame_num
     w.ue(0)                    # idr_pic_id
@@ -2955,9 +2955,9 @@ def _handcrafted_fixed_flac(order, porder, samples, escape_nbits=None):
     import hashlib
     import struct
 
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
         FLAC_FIXED_COEFS,
-        _BitPacker,
         flac_crc8,
         flac_crc16,
     )
@@ -2967,7 +2967,7 @@ def _handcrafted_fixed_flac(order, porder, samples, escape_nbits=None):
         samples[i] - sum(c * samples[i - 1 - j] for j, c in enumerate(coefs))
         for i in range(order, len(samples))
     ]
-    w = _BitPacker()
+    w = MsbWriter()
     w.u((8 + order) << 1, 8)
     for s in samples[:order]:
         w.u(s & 0xFFFF, 16)
@@ -2998,7 +2998,7 @@ def _handcrafted_fixed_flac(order, porder, samples, escape_nbits=None):
     body = header + w.to_bytes()
     body += struct.pack(">H", flac_crc16(body))
     md5 = hashlib.md5(struct.pack(f"<{len(samples)}h", *samples)).digest()
-    si = _BitPacker()
+    si = MsbWriter()
     for v, n in ((256, 16), (256, 16), (0, 24), (0, 24), (8000, 20),
                  (0, 3), (15, 5), (len(samples), 36)):
         si.u(v, n)
@@ -3517,8 +3517,8 @@ def test_flac_wasted_bits_all_consumed_rejected(spark):
     import pytest
 
     from open_source_etl_spark.multimodal.decode import decode_flac_real
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _BitPacker,
         flac_crc8,
         flac_crc16,
     )
@@ -3526,13 +3526,13 @@ def test_flac_wasted_bits_all_consumed_rejected(spark):
     # single CONSTANT frame claiming 16 wasted bits on 16-bit samples
     header = bytes((0xFF, 0b11111000, (8 << 4) | 4, (0 << 4) | (4 << 1), 0))
     header += bytes([flac_crc8(header)])
-    w = _BitPacker()
+    w = MsbWriter()
     w.u(0, 1); w.u(0, 6); w.u(1, 1)     # CONSTANT, wasted flag
     w.u(0, 15); w.u(1, 1)               # unary 15 -> wasted = 16
     w.u(0, 8)                           # filler the reader never reaches
     body = header + w.to_bytes()
     body += struct.pack(">H", flac_crc16(body))
-    si = _BitPacker()
+    si = MsbWriter()
     for v, n in ((256, 16), (256, 16), (0, 24), (0, 24), (8000, 20),
                  (0, 3), (15, 5), (256, 36)):
         si.u(v, n)
@@ -4190,8 +4190,8 @@ def test_h264_inter_boundaries(spark):
         decode_h264_inter,
         h264_split_nals,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         _h264_nal,
         _h264_sps_from_fields,
         h264_pps_rbsp,
@@ -4212,7 +4212,7 @@ def test_h264_inter_boundaries(spark):
         head = b"".join(
             b"\x00\x00\x00\x01" + u for u in units[:3]
         )  # SPS, PPS, IDR
-        w = _H264BitWriter()
+        w = MsbWriter()
         w.ue(0); w.ue(5); w.ue(0); w.u(1, 4)
         w.u(0, 1); w.u(0, 1); w.u(0, 1); w.se(0)
         w.ue(1)  # skip to MB 1 (col 1: in-bounds for a left MV)
@@ -4315,8 +4315,8 @@ def test_h264_fracpel_stream_roundtrip_and_rejections(spark):
         decode_h264_fracpel,
         h264_split_nals,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_fracpel_dims,
         h264_fracpel_luma,
         h264_fracpel_mv,
@@ -4371,14 +4371,14 @@ def test_h264_fracpel_stream_roundtrip_and_rejections(spark):
     head = b"".join(
         b"\x00\x00\x00\x01" + u for u in units[:3]
     )  # SPS, PPS, first IDR
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(5); w.ue(0); w.u(1, 4)
     w.u(0, 1); w.u(0, 1); w.u(0, 1); w.se(0)
     w.ue(0)   # skip run 0
     w.ue(30)  # I_PCM in P slice
     w.align()
     pcm = w.to_bytes() + bytes([99]) * 256 + bytes([128]) * 128
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(mb_w * mb_h - 1)  # skip the rest
     refresh = head + b"\x00\x00\x00\x01" + bytes([0x41]) + pcm + (
         w2.rbsp_trailing()
@@ -4447,8 +4447,8 @@ def test_h264_bpixel_biprediction_roundtrip_and_rejections(spark):
         decode_h264_bpixel,
         h264_split_nals,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_bpixel_dims,
         h264_bpixel_luma,
         make_h264_bpixel_bytes,
@@ -4492,7 +4492,7 @@ def test_h264_bpixel_biprediction_roundtrip_and_rejections(spark):
     # a B_Skip run: the pixel walker's declared boundary
     mb_w, mb_h = h264_bpixel_dims(3)
     head = b"".join(b"\x00\x00\x00\x01" + u for u in units[:4])
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(6); w.ue(0)
     w.u(2, 4); w.u(2, 4)
     w.u(1, 1)  # direct_spatial_mv_pred_flag
@@ -4702,8 +4702,8 @@ def test_h264_submb_shapes_roundtrip_and_rejections(spark):
         decode_h264_submb,
         h264_split_nals,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_submb_dims,
         h264_submb_luma,
         h264_submb_mv,
@@ -4754,7 +4754,7 @@ def test_h264_submb_shapes_roundtrip_and_rejections(spark):
     # rejection: sub_mb_type 4 is outside the P Table 7-17 range
     units = list(h264_split_nals(2, make_h264_submb_bytes(2)))
     head = b"".join(b"\x00\x00\x00\x01" + u for u in units[:3])
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0); w.ue(5); w.ue(0); w.u(1, 4)
     w.u(0, 1); w.u(0, 1); w.u(0, 1); w.se(0)
     w.ue(0)   # skip run
@@ -4768,7 +4768,7 @@ def test_h264_submb_shapes_roundtrip_and_rejections(spark):
 
     # rejection: an entropy-coded mb_type (P_L0_L0_16x8 = 1) stays a
     # declared boundary in this walker
-    w2 = _H264BitWriter()
+    w2 = MsbWriter()
     w2.ue(0); w2.ue(5); w2.ue(0); w2.u(1, 4)
     w2.u(0, 1); w2.u(0, 1); w2.u(0, 1); w2.se(0)
     w2.ue(0)
@@ -4928,14 +4928,14 @@ def test_h264_weighted_and_direct():
     import pytest
 
     from open_source_etl_spark.multimodal.decode import (
-        _H264BitReader,
+        _h264_reader,
         _h264_pred_weight_table,
         _parse_b_slice,
         h264_weight_bi,
         h264_weight_uni,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_inter_params,
         make_h264_weighted_bytes,
     )
@@ -4951,7 +4951,7 @@ def test_h264_weighted_and_direct():
     assert h264_weight_bi(0, 0, 1, -3, 1, 0, 0) == 0
 
     # pred_weight_table: identity default and explicit entries
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(2)      # luma denom
     w.ue(0)      # chroma denom
     w.u(0, 1)    # luma flag 0 -> identity (1 << 2, 0)
@@ -4960,12 +4960,12 @@ def test_h264_weighted_and_direct():
     w.se(-3)
     w.se(7)
     w.u(0, 1)
-    r = _H264BitReader(w.rbsp_trailing(), 0)
+    r = _h264_reader(w.rbsp_trailing(), 0)
     wt = _h264_pred_weight_table(0, r, 1, 1)
     assert wt == {"denom": 2, "l0": [(4, 0)], "l1": [(-3, 7)]}
 
     # out-of-range luma weight rejects
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(0)
     w.u(1, 1)
@@ -4974,24 +4974,24 @@ def test_h264_weighted_and_direct():
     w.u(0, 1)
     with pytest.raises(ValueError, match="weight/offset"):
         _h264_pred_weight_table(
-            0, _H264BitReader(w.rbsp_trailing(), 0), 1
+            0, _h264_reader(w.rbsp_trailing(), 0), 1
         )
 
     # chroma weighted prediction is a declared boundary
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(0)
     w.u(0, 1)
     w.u(1, 1)    # chroma_weight_l0_flag set
     with pytest.raises(NotImplementedError, match="chroma"):
         _h264_pred_weight_table(
-            0, _H264BitReader(w.rbsp_trailing(), 0), 1
+            0, _h264_reader(w.rbsp_trailing(), 0), 1
         )
 
     # temporal direct: direct_spatial_mv_pred_flag 0 with a B_Skip
     # raises the declared boundary
     mb_w, mb_h, _ = h264_inter_params(3)
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)
     w.ue(6)      # B
     w.ue(0)
@@ -5683,8 +5683,8 @@ def test_h264_p8x8_and_tdirect_boundaries():
         _parse_b_slice,
         _parse_p8x8_slice,
     )
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.synth import (
-        _H264BitWriter,
         h264_inter_params,
         h264_p8x8_quadrant_mv,
     )
@@ -5700,7 +5700,7 @@ def test_h264_p8x8_and_tdirect_boundaries():
         w.se(0)
 
     # sub_mb_type 1 (P_L0_8x4) raises the declared boundary
-    w = _H264BitWriter()
+    w = MsbWriter()
     p_header(w)
     w.ue(0)   # skip run
     w.ue(3)   # P_8x8
@@ -5709,7 +5709,7 @@ def test_h264_p8x8_and_tdirect_boundaries():
         _parse_p8x8_slice(0, w.rbsp_trailing(), 4, 4, 3)
 
     # 16x8 partition mb_type raises
-    w = _H264BitWriter()
+    w = MsbWriter()
     p_header(w)
     w.ue(0)
     w.ue(1)   # P_L0_L0_16x8
@@ -5717,7 +5717,7 @@ def test_h264_p8x8_and_tdirect_boundaries():
         _parse_p8x8_slice(0, w.rbsp_trailing(), 4, 4, 3)
 
     # temporal direct without col/poc state raises
-    w = _H264BitWriter()
+    w = MsbWriter()
     w.ue(0)      # first_mb_in_slice
     w.ue(6)      # slice_type B
     w.ue(0)      # pps id

@@ -205,6 +205,84 @@ def test_gif_lzw_roundtrips_any_index_sequence(seq):
     assert gif_lzw_decode(_lzw_encode(seq, 2), 2, len(seq)) == seq
 
 
+# (value, n) field lists: n from 0 to 40 bits, value any n-bit integer
+BIT_FIELDS = st.lists(
+    st.integers(min_value=0, max_value=40).flatmap(
+        lambda n: st.tuples(st.integers(0, (1 << n) - 1), st.just(n))
+    ),
+    max_size=60,
+)
+
+
+@given(BIT_FIELDS, st.lists(st.integers(-(1 << 20), 1 << 20), max_size=20))
+@settings(max_examples=200, deadline=None)
+def test_msb_bits_roundtrip(fields, golomb):
+    """Fields written by MsbWriter (fixed-width, then signed exp-Golomb)
+    read back equal through MsbReader; past the zero padding, one more
+    bit raises the reader's end-of-data message."""
+    import pytest
+
+    from open_source_etl_spark.multimodal.bits import MsbReader, MsbWriter
+
+    w = MsbWriter()
+    for v, n in fields:
+        w.u(v, n)
+    for v in golomb:
+        w.se(v)
+    w.align()
+    data = w.to_bytes()
+    r = MsbReader(data, "end of data")
+    assert [r.u(n) for _, n in fields] == [v for v, _ in fields]
+    assert [r.se() for _ in golomb] == golomb
+    assert r.u(8 * len(data) - r.pos) == 0
+    with pytest.raises(ValueError, match="^end of data$"):
+        r.u(1)
+
+
+@given(BIT_FIELDS)
+@settings(max_examples=200, deadline=None)
+def test_lsb_bits_roundtrip(fields):
+    """Fields written by LsbWriter read back equal through LsbReader;
+    past the zero padding, one more bit raises."""
+    import pytest
+
+    from open_source_etl_spark.multimodal.bits import LsbReader, LsbWriter
+
+    w = LsbWriter()
+    for v, n in fields:
+        w.put(v, n)
+    data = w.to_bytes()
+    r = LsbReader(data, "end of data")
+    assert [r.read(n) for _, n in fields] == [v for v, _ in fields]
+    assert r.read(8 * len(data) - r.pos) == 0
+    with pytest.raises(ValueError, match="^end of data$"):
+        r.read(1)
+
+
+@given(BIT_FIELDS)
+@settings(max_examples=200, deadline=None)
+def test_backward_bits_roundtrip(fields):
+    """Fields written in decode order through ``backward_bytes`` read
+    back equal through BackReader, which then holds no bits; one more
+    bit raises."""
+    import pytest
+
+    from open_source_etl_spark.multimodal.bits import (
+        BackReader,
+        MsbWriter,
+        backward_bytes,
+    )
+
+    w = MsbWriter()
+    for v, n in fields:
+        w.u(v, n)
+    r = BackReader(0, backward_bytes(w))
+    assert [r.read(n) for _, n in fields] == [v for v, _ in fields]
+    assert r.bits_left == 0
+    with pytest.raises(ValueError, match="backward bitstream exhausted"):
+        r.read(1)
+
+
 @given(
     profile=st.sampled_from([66, 77, 88]),
     level=st.integers(min_value=9, max_value=52),
@@ -245,10 +323,10 @@ def test_mp3_side_info_roundtrips_any_fields(mdb, fields):
     """The side-info bit layout must round-trip ANY in-range field
     values — all-ones and all-zeros patterns catch shift/mask errors
     the fixture's modular closed forms can miss."""
+    from open_source_etl_spark.multimodal.bits import MsbWriter
     from open_source_etl_spark.multimodal.decode import parse_mp3_side_info
-    from open_source_etl_spark.multimodal.synth import _BitPacker
 
-    w = _BitPacker()
+    w = MsbWriter()
     w.u(mdb, 9)
     w.u(0, 5)
     w.u(0, 4)
