@@ -34,6 +34,10 @@ payload`` frame.  The six ``media.payload`` feature kernels
 ``block_mean_resize``, ``byte_histogram``, ``perceptual_hash``) are
 decoders of the same shape: feed them
 ``with_media_payload(df).select("doc_id", "media.payload")``.
+
+Every codec's bit-level I/O and CRC tables come from ``bits.py``: one
+MSB-first and one LSB-first reader/writer pair plus zstd's backward
+reader, shared by the media codecs and the ``ingest/`` containers.
 """
 
 from .schema import (

@@ -1,5 +1,5 @@
 """Bit-stream I/O and CRC tables shared by the media codecs
-(``decode.py``, ``dec_mp3.py``, ``synth.py``) and the ingest containers
+(``decode.py``, ``synth.py``) and the ingest containers
 (``ingest/zstd.py``, ``ingest/tfrecord.py``).
 
 Five classes cover every bit layout the formats use:

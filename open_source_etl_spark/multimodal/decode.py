@@ -6152,7 +6152,7 @@ def _flac_read_subframe(
             # unpack instead of blocksize bit-reader calls
             at = br.pos >> 3
             if at + 2 * blocksize > len(br.data):
-                raise ValueError("FLAC bitstream truncated")
+                raise ValueError(br.eof)
             samples = list(
                 struct.unpack_from(f">{blocksize}h", br.data, at)
             )
