@@ -3942,7 +3942,9 @@ def _tfrecord_bytes(doc_id: int) -> bytes:
 
 
 # family: (builder module, builder, decoder module, decoder, doc_ids,
-#          offsets of one payload to flip, outcome count, sha256)
+#          offsets of one payload to flip, outcome count, sha256); module
+#          paths are under open_source_etl_spark, except ``__name__`` for
+#          this file's own TFRecord builder (it binds the text)
 CORRUPTION_GOLDEN = {
     "h264_cavlc": (
         "multimodal.synth", "make_h264_cavlc_bytes",
