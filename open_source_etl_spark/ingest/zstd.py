@@ -30,6 +30,7 @@ import struct
 
 from ..multimodal.bits import (
     BackReader, LsbReader, LsbWriter, MsbWriter, backward_bytes,
+    canonical_codes, peek_lut,
 )
 from ..multimodal.host import decoder
 
@@ -122,22 +123,16 @@ def zstd_lit_fields(doc_id: int, i: int) -> tuple[int, int, int, int, int]:
     return n_lit, ll0, ll0 + 3 + k % 7, 4 + k % 6, 3 + k % 4
 
 
-def _zstd_huffman_enc(
-    fse_w: bool = False,
-) -> tuple[bytes, list, list, int, list]:
+def _zstd_huffman_enc(fse_w: bool = False) -> tuple[bytes, dict, list]:
     """The fixture's 8-symbol (values 0..7) Huffman table: header
-    bytes, encoder codes, per-symbol bit counts, max_bits, and the
-    decoder slot table (for tests).  Direct 4-bit weights (all
-    weight 1, symbol 7 implied) by default; with ``fse_w`` the
-    weights are [2,1,1,1,1,1,1] (symbol 7's weight-4 implied) and
-    the header is FSE-COMPRESSED (RFC 4.2.1.2) — a table description
-    plus the two-state interleaved backward bitstream."""
+    bytes, encoder codes by symbol and per-symbol bit counts.  Direct
+    4-bit weights (all weight 1, symbol 7 implied) by default; with
+    ``fse_w`` the weights are [2,1,1,1,1,1,1] (symbol 7's weight-4
+    implied) and the header is FSE-COMPRESSED (RFC 4.2.1.2) — a table
+    description plus the two-state interleaved backward bitstream."""
     weights = [2, 1, 1, 1, 1, 1, 1] if fse_w else [1] * 7
-    slots, nbits, max_bits = _huffman_weights_to_table(-1, weights)
-    starts: dict[int, int] = {}
-    for idx, s in enumerate(slots):
-        starts.setdefault(s, idx)
-    codes = [starts[s] >> (max_bits - nbits[s]) for s in range(8)]
+    table, nbits = _huffman_weights_to_codes(-1, weights)
+    codes = {s: code for (_ln, code), s in table.items()}
     if fse_w:
         wtab = _fse_decode_table(
             _WEIGHTS_FSE_DIST, _WEIGHTS_FSE_ACCLOG
@@ -155,7 +150,7 @@ def _zstd_huffman_enc(
             (weights[j] << 4) | (weights[j + 1] if j + 1 < 7 else 0)
             for j in range(0, 7, 2)
         )
-    return hdr, codes, nbits, max_bits, slots
+    return hdr, codes, nbits
 
 
 def _zstd_compressed_block(
@@ -174,9 +169,7 @@ def _zstd_compressed_block(
     # every k % 5 == 1 frame ships its weights FSE-compressed (the
     # header shape real zstd encoders emit on nearly every block);
     # the literal VALUES are unchanged, so content closed forms hold
-    hdr, codes, nbits, max_bits, _slots = _zstd_huffman_enc(
-        fse_w=k % 5 == 1
-    )
+    hdr, codes, nbits = _zstd_huffman_enc(fse_w=k % 5 == 1)
     four_stream = k % 3 == 0
     rle_seq = (not four_stream) and k % 4 == 2
 
@@ -298,9 +291,7 @@ def _zstd_block4(doc_id: int, i: int) -> bytes:
     from the RLE run through the frame window."""
     k = doc_id + i
     n_lit, ll0, off0, ml1, ml2 = zstd_lit_fields(doc_id, i)
-    _hdr, codes, nbits, _max_bits, _slots = _zstd_huffman_enc(
-        fse_w=k % 5 == 1
-    )
+    _hdr, codes, nbits = _zstd_huffman_enc(fse_w=k % 5 == 1)
     lits = bytes((k + j) % 8 for j in range(4))
     wlit = MsbWriter()
     for sym in lits:
@@ -437,7 +428,23 @@ def make_zstd_bytes(doc_id: int) -> bytes:
 DICT_MAGIC = 0xEC30A437
 
 
+# Parsed dictionaries by blob, kept per process (a frame copies the
+# repeat offsets and never mutates the tables); only successful loads
+# are kept, so a bad blob raises again naming the current doc.
+_DICTIONARIES: dict[bytes, dict] = {}
+
+
 def _load_dictionary(doc_id: int, blob: bytes) -> dict:
+    """``_parse_dictionary(doc_id, blob)``, parsed once per process."""
+    got = _DICTIONARIES.get(blob)
+    if got is None:
+        if len(_DICTIONARIES) >= 256:
+            _DICTIONARIES.clear()
+        got = _DICTIONARIES[blob] = _parse_dictionary(doc_id, blob)
+    return got
+
+
+def _parse_dictionary(doc_id: int, blob: bytes) -> dict:
     """Parse a zstd dictionary (RFC 8878 §5).  With the dictionary
     magic: dict ID, entropy tables (Huffman weights in the literals-
     header serialization, then OF / ML / LL FSE table descriptions),
@@ -446,33 +453,9 @@ def _load_dictionary(doc_id: int, blob: bytes) -> dict:
     state, default repeat offsets."""
     if len(blob) >= 8 and struct.unpack_from("<I", blob)[0] == DICT_MAGIC:
         (did,) = struct.unpack_from("<I", blob, 4)
-        pos = 8
-        th = blob[pos]
-        pos += 1
-        if th < 128:
-            wend = pos + th
-            if wend > len(blob):
-                raise ValueError(
-                    f"doc {doc_id}: dictionary weight header overruns"
-                )
-            dist, wlog, pos = _read_fse_description(
-                doc_id, blob, pos, 6
-            )
-            wtab = _fse_decode_table(dist, wlog)
-            weights = _fse_decode_interleaved(
-                doc_id, blob[pos:wend], wtab, wlog
-            )
-            pos = wend
-        else:
-            n_weights = th - 127
-            weights = []
-            for j in range(n_weights):
-                byte = blob[pos + j // 2]
-                weights.append(
-                    (byte >> 4) if j % 2 == 0 else (byte & 15)
-                )
-            pos += (n_weights + 1) // 2
-        huff = _huffman_weights_to_table(doc_id, weights)
+        huff, pos = _read_huffman_table(
+            doc_id, blob, 8, len(blob), "dictionary weight header overruns"
+        )
         of_d, of_log, pos = _read_fse_description(doc_id, blob, pos, 8)
         ml_d, ml_log, pos = _read_fse_description(doc_id, blob, pos, 9)
         ll_d, ll_log, pos = _read_fse_description(doc_id, blob, pos, 9)
@@ -956,15 +939,15 @@ _ML_BITS = tuple(
 )
 
 
-def _huffman_weights_to_table(
+def _huffman_weights_to_codes(
     doc_id: int, weights: list[int]
-) -> tuple[list[int], list[int], int]:
+) -> tuple[dict, list[int]]:
     """RFC 4.2.1: explicit weights plus the implied last symbol (it
     completes the weight sum to a power of two — enforced), then the
-    canonical table: symbols take 2^(w-1) consecutive slots in a
-    2^maxBits lookup, ascending weight then ascending symbol.
-    Returns (slot_table symbol per slot, num_bits per symbol,
-    max_bits)."""
+    canonical code: a symbol of weight w > 0 takes max_bits + 1 - w
+    bits, codes assigned in ascending weight, then ascending symbol
+    order.  Returns ({(length, code): symbol}, num_bits per
+    symbol)."""
     total = sum((1 << (w - 1)) for w in weights if w > 0)
     if total == 0:
         raise ValueError(f"doc {doc_id}: empty Huffman weight set")
@@ -982,30 +965,54 @@ def _huffman_weights_to_table(
     nbits = [
         (max_bits + 1 - w) if w > 0 else 0 for w in weights
     ]
-    slots = [0] * nextpow
-    at = 0
-    for w in range(1, max_bits + 1):
-        for s, ws in enumerate(weights):
-            if ws == w:
-                span = 1 << (w - 1)
-                for j in range(at, at + span):
-                    slots[j] = s
-                at += span
-    if at != nextpow:
-        raise ValueError(f"doc {doc_id}: Huffman slots did not fill")
-    return slots, nbits, max_bits
+    order = sorted((w, s) for s, w in enumerate(weights) if w > 0)
+    return canonical_codes((s, nbits[s]) for _w, s in order), nbits
+
+
+def _read_huffman_table(
+    doc_id: int, raw: bytes, pos: int, end: int, overrun: str
+) -> tuple[tuple[list, list[int], int], int]:
+    """The Huffman tree description at ``pos`` (RFC 4.2.1.1): a header
+    byte below 128 is the size of FSE-compressed weights (RFC 4.2.1.2:
+    an FSE table description, accuracy_log <= 6, then a two-state
+    interleaved backward bitstream of weights), which must end by
+    ``end`` (else ``overrun``); 128 and above, th - 127 direct 4-bit
+    weights.  Returns ((peek table of symbols, num_bits per symbol,
+    peek bits), position after)."""
+    th = raw[pos]
+    pos += 1
+    if th < 128:
+        wend = pos + th
+        if wend > end:
+            raise ValueError(f"doc {doc_id}: {overrun}")
+        dist, wlog, pos = _read_fse_description(doc_id, raw, pos, 6)
+        wtab = _fse_decode_table(dist, wlog)
+        weights = _fse_decode_interleaved(
+            doc_id, raw[pos:wend], wtab, wlog
+        )
+        pos = wend
+    else:
+        n_weights = th - 127
+        weights = []
+        for j in range(n_weights):
+            byte = raw[pos + j // 2]
+            weights.append((byte >> 4) if j % 2 == 0 else (byte & 15))
+        pos += (n_weights + 1) // 2
+    codes, nbits = _huffman_weights_to_codes(doc_id, weights)
+    slots, k = peek_lut(codes)
+    return (slots, nbits, k), pos
 
 
 def _huffman_decode_stream(
     doc_id: int, buf: bytes, n_symbols: int, slots: list, nbits: list,
-    max_bits: int,
+    k: int,
 ) -> bytes:
     br = BackReader(doc_id, buf)
     out = bytearray()
     for _ in range(n_symbols):
         if br.bits_left <= 0:
             raise ValueError(f"doc {doc_id}: Huffman stream underflow")
-        s = slots[br.peek_padded(max_bits)]
+        s = slots[br.peek_padded(k)]
         nb = nbits[s]
         if nb == 0 or nb > br.bits_left:
             raise ValueError(f"doc {doc_id}: Huffman stream underflow")
@@ -1078,45 +1085,15 @@ def _decode_literals(
                 f"doc {doc_id}: treeless literals with no prior "
                 "Huffman table in the frame"
             )
-        slots, nbits, max_bits = fstate["huff"]
     else:
-        th = raw[pos]
-        pos += 1
-        if th < 128:
-            # FSE-compressed weights (RFC 4.2.1.2): th bytes holding
-            # an FSE table description (accuracy_log <= 6) then a
-            # two-state interleaved backward bitstream of weights
-            wend = pos + th
-            if wend > end:
-                raise ValueError(
-                    f"doc {doc_id}: compressed weight header "
-                    "overruns the literals section"
-                )
-            dist, wlog, pos = _read_fse_description(
-                doc_id, raw, pos, 6
-            )
-            wtab = _fse_decode_table(dist, wlog)
-            weights = _fse_decode_interleaved(
-                doc_id, raw[pos:wend], wtab, wlog
-            )
-            pos = wend
-        else:
-            n_weights = th - 127
-            wbytes = (n_weights + 1) // 2
-            weights = []
-            for j in range(n_weights):
-                byte = raw[pos + j // 2]
-                weights.append(
-                    (byte >> 4) if j % 2 == 0 else (byte & 15)
-                )
-            pos += wbytes
-        slots, nbits, max_bits = _huffman_weights_to_table(
-            doc_id, weights
+        fstate["huff"], pos = _read_huffman_table(
+            doc_id, raw, pos, end,
+            "compressed weight header overruns the literals section",
         )
-        fstate["huff"] = (slots, nbits, max_bits)
+    slots, nbits, k = fstate["huff"]
     if streams == 1:
         lit = _huffman_decode_stream(
-            doc_id, raw[pos:end], regen, slots, nbits, max_bits
+            doc_id, raw[pos:end], regen, slots, nbits, k
         )
         return lit, end
     # 4 streams: 6-byte jump table then the streams
@@ -1134,7 +1111,7 @@ def _decode_literals(
     lit = bytearray()
     for sz, cnt in zip(sizes, counts):
         lit += _huffman_decode_stream(
-            doc_id, raw[pos : pos + sz], cnt, slots, nbits, max_bits
+            doc_id, raw[pos : pos + sz], cnt, slots, nbits, k
         )
         pos += sz
     return bytes(lit), end
@@ -1316,7 +1293,7 @@ def make_zstd_dictionary(did: int) -> bytes:
     content = zstd_dict_content(did)
     if did < 300:
         return content
-    hdr, _codes, _nbits, _mb, _slots = _zstd_huffman_enc()
+    hdr, _codes, _nbits = _zstd_huffman_enc()
     return (
         struct.pack("<II", DICT_MAGIC, did)
         + hdr
@@ -1387,7 +1364,7 @@ def make_zstd_dict_bytes(doc_id: int) -> bytes:
 
     # ---- frame 0: formatted dict, treeless + repeat-mode block ----
     lits = bytes((doc_id + j) % 8 for j in range(n_lit))
-    _hdr, codes, nbits, _mb, _slots = _zstd_huffman_enc()
+    _hdr, codes, nbits = _zstd_huffman_enc()
     wlit = MsbWriter()
     for s in lits:
         wlit.u(codes[s], nbits[s])

@@ -37,7 +37,10 @@ decoders of the same shape: feed them
 
 Every codec's bit-level I/O and CRC tables come from ``bits.py``: one
 MSB-first and one LSB-first reader/writer pair plus zstd's backward
-reader, shared by the media codecs and the ``ingest/`` containers.
+reader, shared by the media codecs and the ``ingest/`` containers.  Its
+prefix-code layer builds every Huffman and VLC table: one canonical-code
+builder (JPEG, VP8L, zstd literals), one peek-LUT builder (those plus
+H.264 CAVLC and MP3) and one ``read_symbol`` per reader.
 """
 
 from .schema import (

@@ -15,9 +15,22 @@ Five classes cover every bit layout the formats use:
 Readers raise ``ValueError`` with the messages the caller hands in —
 ``eof`` when a read would pass the end of the data, ``bad`` when the
 bits hold no valid code — so each format keeps its own error text.
+
+The prefix-code layer serves every Huffman and VLC table:
+``canonical_codes`` builds canonical codes from (symbol, length)
+pairs (JPEG, VP8L, zstd literals), ``peek_lut`` turns any
+``{(length, code): entry}`` table into a list indexed by a k-bit peek
+(those three plus H.264 CAVLC and MP3), and each reader has one
+``read_symbol``: a zero-padded peek plus one index.  A code longer
+than the bits left raises ``eof``; bits no code matches raise ``eof``
+when fewer than 16 bits are left and ``bad`` otherwise, as a
+bit-at-a-time walk of up to 16 bits would.
 """
 
 from __future__ import annotations
+
+from functools import lru_cache
+from operator import itemgetter
 
 
 class MsbReader:
@@ -29,7 +42,7 @@ class MsbReader:
     FLAC's 16-bit PCM path unpacks whole samples from ``data``, and the
     H.264 and JPEG alignment checks test ``pos % 8``.  ``bad`` is the
     message for an exp-Golomb prefix past 31 zeros (``ue``), a Huffman
-    code no table entry matches (``huff``) and nonzero alignment
+    code no table entry matches (``read_symbol``) and nonzero alignment
     padding (``align``)."""
 
     __slots__ = ("data", "pos", "limit", "eof", "bad")
@@ -140,43 +153,36 @@ class MsbReader:
             raise ValueError(self.bad)
         return self.pos >> 3
 
-    def huff(self, table: dict) -> int:
-        """One canonical Huffman symbol, ``table`` keyed by
-        ``(length, code)`` up to 16 bits: an inlined bit walk holding
-        the current byte, its index and its unread bit count in
-        locals; indexing past the last byte is the end of data."""
+    def read_symbol(self, table: tuple) -> int:
+        """One symbol of a prefix code in ``symbol_lut`` form: a
+        zero-padded peek of the table's k bits (at most 16, so three
+        bytes hold them), one index."""
+        slots, k = table
         pos = self.pos
-        data = self.data
         i = pos >> 3
-        nbits = 8 - (pos & 7)
-        get = table.get
-        code = 0
-        length = 0
+        chunk = self.data[i : i + 3]
+        val = int.from_bytes(chunk, "big")
+        if len(chunk) < 3:
+            val <<= (3 - len(chunk)) << 3
         try:
-            acc = data[i]
-            while length < 16:
-                if not nbits:
-                    i += 1
-                    acc = data[i]
-                    nbits = 8
-                nbits -= 1
-                code = (code << 1) | ((acc >> nbits) & 1)
-                length += 1
-                sym = get((length, code))
-                if sym is not None:
-                    self.pos = 8 * i + 8 - nbits
-                    return sym
-        except IndexError:
-            self.pos = self.limit
-            raise ValueError(self.eof) from None
-        self.pos = 8 * i + 8 - nbits
-        raise ValueError(self.bad)
+            length, sym = slots[
+                (val >> (24 - (pos & 7) - k)) & ((1 << k) - 1)
+            ]
+        except TypeError:  # an unused slot
+            raise ValueError(
+                self.eof if self.limit - pos < 16 else self.bad
+            ) from None
+        pos += length
+        if pos > self.limit:
+            raise ValueError(self.eof)
+        self.pos = pos
+        return sym
 
 
 class LsbReader:
     """Forward LSB-first reader at an absolute bit position ``pos``
-    over ``data``, starting at ``byte_offset``.  Huffman codes are
-    consumed bit-by-bit MSB-of-code-first (canonical tree walk).
+    over ``data``, starting at ``byte_offset``.  Huffman codes sit
+    MSB-of-code-first in the stream (``LsbWriter.put_code``).
 
     Reads go through a whole-byte accumulator (``acc`` holds the next
     ``nacc`` unconsumed bits LSB-aligned; ``pos + nacc`` is always
@@ -211,60 +217,39 @@ class LsbReader:
         self.pos = pos + n
         return acc & ((1 << n) - 1)
 
-    def read_symbol(self, table: dict, what: str) -> int:
-        """One symbol of a canonical code keyed by ``(length, code)``;
-        an int ``table`` is a one-symbol code that takes zero bits."""
+    def read_symbol(self, table, what: str) -> int:
+        """One symbol of a prefix code in ``symbol_lut`` form, or an
+        int ``table``: a one-symbol code that takes zero bits.  The
+        accumulator holds the zero-padded peek; its k bits index the
+        table through the k-bit reversal (codes run MSB-of-code
+        first)."""
         if isinstance(table, int):
             return table
-        if len(table) == 2:
-            # a two-leaf complete canonical code is always
-            # {(1,0), (1,1)} (Kraft): one bit decides the symbol
-            pos = self.pos
-            if pos >= self.limit:
-                raise ValueError(self.eof)
-            nacc = self.nacc
-            if nacc:
-                bit = self.acc & 1
-                self.acc >>= 1
-                self.nacc = nacc - 1
-            else:
-                bit = self.data[pos >> 3] & 1
-                self.acc = self.data[pos >> 3] >> 1
-                self.nacc = 7
-            self.pos = pos + 1
-            return table[(1, bit)]
-        # inlined bit-by-bit canonical walk (same values/raises as a
-        # read(1) loop, without the per-bit attribute traffic)
-        pos = self.pos
+        slots, k = table
         acc = self.acc
         nacc = self.nacc
-        data = self.data
-        limit = self.limit
-        get = table.get
-        code = length = 0
-        while True:
-            if nacc == 0:
-                # pos + nacc stays byte-aligned, so pos is aligned here
-                if pos >= limit:
-                    raise ValueError(self.eof)
-                acc = data[pos >> 3]
-                nacc = 8
-            code = (code << 1) | (acc & 1)
-            acc >>= 1
-            nacc -= 1
-            pos += 1
-            length += 1
-            sym = get((length, code))
-            if sym is not None:
-                self.pos = pos
-                self.acc = acc
-                self.nacc = nacc
-                return sym
-            if length > 15:
-                self.pos = pos
-                self.acc = acc
-                self.nacc = nacc
-                raise ValueError(self.bad.format(what))
+        if nacc < k:
+            # load whole bytes up to k bits; past the end the bits
+            # above nacc stay zero (the padded peek)
+            data = self.data
+            at = self.pos + nacc
+            while nacc < k and at < self.limit:
+                acc |= data[at >> 3] << nacc
+                nacc += 8
+                at += 8
+        try:
+            length, sym = slots[_BIT_REVERSAL[k][acc & ((1 << k) - 1)]]
+        except TypeError:  # an unused slot
+            raise ValueError(
+                self.eof if self.limit - self.pos < 16
+                else self.bad.format(what)
+            ) from None
+        if length > nacc:  # acc holds every bit left
+            raise ValueError(self.eof)
+        self.acc = acc >> length
+        self.nacc = nacc - length
+        self.pos += length
+        return sym
 
     def align(self) -> int:
         """Skip to the next byte edge; return the byte offset there."""
@@ -415,11 +400,7 @@ class LsbWriter:
     def put_code(self, code: int, n: int) -> None:
         """Huffman codes go MSB-first (tree-walk order) into the
         LSB-first stream."""
-        rev = 0
-        for _ in range(n):
-            rev = (rev << 1) | (code & 1)
-            code >>= 1
-        self.put(rev, n)
+        self.put(_BIT_REVERSAL[n][code], n)
 
     def to_bytes(self) -> bytes:
         if self.nbits:
@@ -427,6 +408,103 @@ class LsbWriter:
             self.cur = 0
             self.nbits = 0
         return bytes(self.out)
+
+
+def canonical_codes(pairs) -> dict:
+    """Canonical prefix codes for ``(symbol, length)`` pairs taken in
+    the caller's order, as ``{(length, code): symbol}``.  The first
+    code is 0; each next one is the previous plus one, shifted by the
+    length step: left when lengths grow (JPEG's BITS/HUFFVAL order;
+    VP8L's (length, symbol) order, RFC 9649 after RFC 1951 §3.2.2),
+    right when they shrink (zstd's ascending-weight order, RFC 8878
+    §4.2.1).  A code that overflows its length (more codes of a length
+    than it has bit strings) is kept, but no bit string reaches it."""
+    codes = {}
+    code = 0
+    prev = None
+    for sym, length in pairs:
+        if length == prev:
+            code += 1
+        elif prev is not None:
+            step = length - prev
+            code = (code + 1) << step if step > 0 else (code + 1) >> -step
+        codes[length, code] = sym
+        prev = length
+    return codes
+
+
+def by_length(lengths: dict) -> tuple:
+    """A ``{symbol: length}`` map as the (symbol, length) pairs of the
+    canonical order DEFLATE defines and VP8L keeps (RFC 1951 §3.2.2):
+    by length, then by symbol."""
+    return tuple(sorted(sorted(lengths.items()), key=itemgetter(1)))
+
+
+def peek_lut(codes: dict) -> tuple[list, int]:
+    """``{(length, code): entry}`` as a peek table ``(slots, k)``, k the
+    longest length: slot i holds the entry of the one code that
+    prefixes i's k bits (MSB-first), so a k-bit window resolves a code
+    in one list index instead of a per-bit walk.  Slots no code
+    reaches hold None (a complete code, Kraft sum exactly 1, has
+    none).
+
+    Each caller packs its own entry: the readers' ``read_symbol``
+    takes ``(length, symbol)`` (``symbol_lut``); CAVLC takes
+    ``(length, *values)``, its level codes an 8-bit window of
+    ``(length, level, next suffixLength)`` whose longer codes miss and
+    decode through level_prefix; MP3's big-values tables pack
+    ``(length << 8) | (x << 4) | y`` and count1 table A ``(length <<
+    4) | quad``; zstd's literals take the bare symbol.  The fixed
+    tables are built once per process and kept by worker reuse."""
+    k = max(codes)[0] if codes else 0
+    slots: list = [None] * (1 << k)
+    for (length, code), entry in codes.items():
+        if code >> length:
+            continue  # overflowed its length: unreachable
+        if length == k:
+            slots[code] = entry
+        else:
+            span = 1 << (k - length)
+            slots[code * span : (code + 1) * span] = [entry] * span
+    return slots, k
+
+
+# The same code recurs across documents (JPEG's Annex K tables, VP8L's
+# flat trees), so both views are kept per process for the last few
+# (symbol, length) tuples; callers only read them.
+@lru_cache(maxsize=32)
+def symbol_lut(pairs: tuple) -> tuple[list, int]:
+    """The table ``MsbReader.read_symbol`` and ``LsbReader.read_symbol``
+    take: ``peek_lut`` over ``canonical_codes(pairs)`` with ``(length,
+    symbol)`` entries."""
+    return peek_lut({
+        key: (key[0], sym) for key, sym in canonical_codes(pairs).items()
+    })
+
+
+@lru_cache(maxsize=32)
+def code_book(pairs: tuple) -> dict:
+    """The encoder side: symbol -> (code, length) of
+    ``canonical_codes(pairs)``."""
+    return {
+        sym: (code, length)
+        for (length, code), sym in canonical_codes(pairs).items()
+    }
+
+
+class _BitReversal(dict):
+    """k -> the list of every k-bit value bit-reversed, built on first
+    use (``LsbReader.read_symbol``'s index into MSB-first tables)."""
+
+    def __missing__(self, k: int) -> list:
+        rev = [0] * (1 << k)
+        for i in range(1, 1 << k):
+            rev[i] = (rev[i >> 1] >> 1) | ((i & 1) << (k - 1))
+        self[k] = rev
+        return rev
+
+
+_BIT_REVERSAL = _BitReversal()
 
 
 def crc_table(poly: int, width: int, reflect: bool = False) -> tuple:

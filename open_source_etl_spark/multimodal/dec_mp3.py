@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from .bits import peek_lut
 from .host import decoder
 
 
@@ -738,60 +739,19 @@ MP3_LINBITS: dict[int, int] = {
     24: 4, 25: 5, 26: 6, 27: 7, 28: 8, 29: 9, 30: 11, 31: 13,
 }
 
-def _mp3_bv_table(
-    tsel: int, doc_id: int
-) -> tuple[dict[tuple[int, int], tuple[int, int]], int]:
-    """Resolve a big-values ``table_select`` to its (code table,
-    linbits) pair: ids 16-23 share table 16's code matrix and 25-31
-    share table 24's (B.7 prints each block once with a linbits
-    column); 4 and 14 are reserved.  As of round 14 every B.7 table
-    (1-3, 5-13, 15 and both linbits families) passes the
-    grid/prefix/Kraft gate
-    (``test_mp3_huffman_tables_are_valid_complete_codes``) and ships —
-    table 13, the last gap, cleared via a fresh-sitting double entry."""
-    if tsel in (4, 14):
-        raise ValueError(
-            f"doc {doc_id}: table_select {tsel} is reserved "
-            "('not used' in Table B.7)"
-        )
-    base = tsel
-    if 16 <= tsel <= 23:
-        base = 16
-    elif 24 <= tsel <= 31:
-        base = 24
-    return MP3_HUFF_TABLES[base], MP3_LINBITS.get(tsel, 0)
-
-
-# Peek-LUT forms of the B.7 walk (round 15, guide §4.2): every shipped
-# table is COMPLETE (Kraft sum exactly 1, asserted per table in
-# tests/test_multimodal.py), so any K-bit window — K the table's max
-# code length — resolves to exactly one codeword in one list probe,
-# replacing the per-bit shift/dict-probe walk.  Entries pack
-# (code_length << 8) | (x << 4) | y; built lazily once per process and
-# kept across tasks by worker reuse (dec_mp3 is an importable module).
+# The B.7 tables as ``bits.peek_lut`` tables, built lazily once per
+# process.  Every shipped table is complete (Kraft sum exactly 1,
+# asserted per table in tests/test_multimodal.py), so every k-bit
+# window resolves to one codeword.
 _MP3_BV_LUTS: dict[int, tuple[list[int], int]] = {}
 _MP3_C1A_LUT: tuple[list[int], int] | None = None
 
 
-def _mp3_bv_lut(base: int) -> tuple[list[int], int]:
-    got = _MP3_BV_LUTS.get(base)
-    if got is None:
-        table = MP3_HUFF_TABLES[base]
-        k = max(ln for ln, _ in table)
-        lut = [0] * (1 << k)
-        for (ln, code), (x, y) in table.items():
-            span = 1 << (k - ln)
-            start = code << (k - ln)
-            lut[start : start + span] = [(ln << 8) | (x << 4) | y] * span
-        if 0 in lut:  # pragma: no cover - completeness is test-asserted
-            raise AssertionError(f"B.7 table {base} is not complete")
-        _MP3_BV_LUTS[base] = got = (lut, k)
-    return got
-
-
 def _mp3_bv_lut_sel(tsel: int, doc_id: int) -> tuple[list[int], int, int]:
-    """``_mp3_bv_table`` with the code table in peek-LUT form:
-    (lut, peek_bits, linbits).  Same reserved-id raise."""
+    """Resolve a big-values ``table_select`` to (peek LUT, peek bits,
+    linbits): ids 16-23 share table 16's code matrix and 25-31 share
+    table 24's (B.7 prints each block once with a linbits column); 4
+    and 14 are reserved."""
     if tsel in (4, 14):
         raise ValueError(
             f"doc {doc_id}: table_select {tsel} is reserved "
@@ -802,7 +762,15 @@ def _mp3_bv_lut_sel(tsel: int, doc_id: int) -> tuple[list[int], int, int]:
         base = 16
     elif 24 <= tsel <= 31:
         base = 24
-    lut, k = _mp3_bv_lut(base)
+    got = _MP3_BV_LUTS.get(base)
+    if got is None:
+        got = _MP3_BV_LUTS[base] = peek_lut({
+            key: (key[0] << 8) | (x << 4) | y
+            for key, (x, y) in MP3_HUFF_TABLES[base].items()
+        })
+        if None in got[0]:  # pragma: no cover - completeness is test-asserted
+            raise AssertionError(f"B.7 table {base} is not complete")
+    lut, k = got
     return lut, k, MP3_LINBITS.get(tsel, 0)
 
 
@@ -811,14 +779,12 @@ def _mp3_c1a_lut() -> list[int]:
     (code_length << 4) | quad — table A is complete, same gate."""
     global _MP3_C1A_LUT
     if _MP3_C1A_LUT is None:
-        lut = [0] * 64
-        for (ln, code), quad in MP3_COUNT1A.items():
-            span = 1 << (6 - ln)
-            start = code << (6 - ln)
-            lut[start : start + span] = [(ln << 4) | quad] * span
-        if 0 in lut:  # pragma: no cover
+        got = peek_lut({
+            key: (key[0] << 4) | quad for key, quad in MP3_COUNT1A.items()
+        })
+        if None in got[0]:  # pragma: no cover
             raise AssertionError("count1 table A is not complete")
-        _MP3_C1A_LUT = (lut, 6)
+        _MP3_C1A_LUT = got
     return _MP3_C1A_LUT[0]
 
 

@@ -38,7 +38,7 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .bits import LsbReader, MsbReader
+from .bits import LsbReader, MsbReader, by_length, peek_lut, symbol_lut
 from .host import Decoder, decoder, host, indexed
 from .schema import IMAGE_META_SCHEMA
 
@@ -475,17 +475,6 @@ def _jpeg_ctx():
     return _JPEG_CTX["basis"], _JPEG_CTX["unzig"]
 
 
-def _build_huffman(counts: bytes, symbols: bytes) -> dict:
-    table, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
 def _jpeg_reader(segment: bytes) -> MsbReader:
     """An entropy-coded segment's reader (byte stuffing already
     removed)."""
@@ -516,6 +505,8 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
 
     import numpy as np
 
+    from .synth import jpeg_code_pairs
+
     basis, unzig = _jpeg_ctx()
 
     def idct_block(coef_z: list[int], q: "np.ndarray") -> "np.ndarray":
@@ -531,8 +522,8 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
         raise ValueError(f"doc {doc_id}: missing SOI")
     pos = 2
     quant: dict[int, list[int]] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
+    huff_dc: dict[int, tuple] = {}
+    huff_ac: dict[int, tuple] = {}
     sof = None
     comp_spec = None
     restart_interval = 0
@@ -579,8 +570,8 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
                 counts = data[p + 1 : p + 17]
                 nsym = sum(counts)
                 symbols = data[p + 17 : p + 17 + nsym]
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_huffman(
-                    counts, symbols
+                (huff_dc if tc == 0 else huff_ac)[th] = symbol_lut(
+                    jpeg_code_pairs(counts, symbols)
                 )
                 p += 17 + nsym
         elif marker == 0xDD:  # DRI
@@ -657,7 +648,7 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
                 seg_idx += 1
                 reader = _jpeg_reader(bytes(segments[seg_idx]))
                 pred = 0
-            size = reader.huff(dc_tab)
+            size = reader.read_symbol(dc_tab)
             diff = _jpeg_extend(reader.u(size), size)
             pred += diff
             coef_z = [0] * 64
@@ -665,7 +656,7 @@ def jpeg_decode_gray(doc_id: int, raw: bytes) -> tuple[int, int, int, int]:
             k = 0
             any_ac = False
             while k < 63:
-                sym = reader.huff(ac_tab)
+                sym = reader.read_symbol(ac_tab)
                 if sym == 0x00:  # EOB
                     break
                 run, size_ac = sym >> 4, sym & 15
@@ -722,11 +713,13 @@ def jpeg_decode_progressive(
     count exactly."""
     import struct
 
+    from .synth import jpeg_code_pairs
+
     if raw[:2] != b"\xff\xd8":
         raise ValueError(f"doc {doc_id}: missing SOI")
     pos = 2
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
+    huff_dc: dict[int, tuple] = {}
+    huff_ac: dict[int, tuple] = {}
     sof = None
     n_scans = 0
     blocks: list[list[int]] | None = None
@@ -800,8 +793,8 @@ def jpeg_decode_progressive(
                 counts = data[p + 1 : p + 17]
                 nsym = sum(counts)
                 symbols = data[p + 17 : p + 17 + nsym]
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_huffman(
-                    counts, symbols
+                (huff_dc if tc == 0 else huff_ac)[th] = symbol_lut(
+                    jpeg_code_pairs(counts, symbols)
                 )
                 p += 17 + nsym
         elif marker == 0xDA:
@@ -876,7 +869,7 @@ def jpeg_decode_progressive(
                         dc_tab = huff_dc[td]
                         pred = 0
                         for coef in seg_blocks:
-                            size = reader.huff(dc_tab)
+                            size = reader.read_symbol(dc_tab)
                             diff = _jpeg_extend(reader.u(size), size)
                             pred += diff
                             coef[0] = pred << al
@@ -893,7 +886,7 @@ def jpeg_decode_progressive(
                             continue
                         k = ss
                         while k <= se:
-                            sym = reader.huff(ac_tab)
+                            sym = reader.read_symbol(ac_tab)
                             r, s = sym >> 4, sym & 15
                             if s == 0:
                                 if r != 15:
@@ -931,7 +924,7 @@ def jpeg_decode_progressive(
                         k = ss
                         if eobrun == 0:
                             while k <= se:
-                                sym = reader.huff(ac_tab)
+                                sym = reader.read_symbol(ac_tab)
                                 r, s = sym >> 4, sym & 15
                                 newval = 0
                                 if s == 0:
@@ -1020,11 +1013,13 @@ def jpeg_decode_color(
     full spec range 1..4 (B.2.2), above which rejects."""
     import struct
 
+    from .synth import jpeg_code_pairs
+
     if raw[:2] != b"\xff\xd8":
         raise ValueError(f"doc {doc_id}: missing SOI")
     pos = 2
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
+    huff_dc: dict[int, tuple] = {}
+    huff_ac: dict[int, tuple] = {}
     quant_ids: set[int] = set()
     sof = None
     restart_interval = 0
@@ -1078,8 +1073,8 @@ def jpeg_decode_color(
                 counts = data[p + 1 : p + 17]
                 nsym = sum(counts)
                 symbols = data[p + 17 : p + 17 + nsym]
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_huffman(
-                    counts, symbols
+                (huff_dc if tc == 0 else huff_ac)[th] = symbol_lut(
+                    jpeg_code_pairs(counts, symbols)
                 )
                 p += 17 + nsym
         elif marker == 0xDD:  # DRI (E.1.4; round 14: interleaved too)
@@ -1184,14 +1179,14 @@ def jpeg_decode_color(
             td, ta = tables[cid]
             dc_tab, ac_tab = huff_dc[td], huff_ac[ta]
             for _u in range(ch * cv):
-                size = reader.huff(dc_tab)
+                size = reader.read_symbol(dc_tab)
                 diff = _jpeg_extend(reader.u(size), size)
                 pred[cid] += diff
                 sum_dc[cid] += pred[cid]
                 n_units[cid] += 1
                 k = 0
                 while k < 63:
-                    sym = reader.huff(ac_tab)
+                    sym = reader.read_symbol(ac_tab)
                     if sym == 0x00:
                         break
                     run, s = sym >> 4, sym & 15
@@ -2375,26 +2370,10 @@ def _cavlc_level_codes() -> dict:
     return out
 
 
-# Peek-LUT forms of the CAVLC code tables (the ``_mp3_bv_lut`` scheme):
-# a K-bit window, K the table's longest code, indexes a list whose slot
-# holds (code_length, *value) for the one code that prefixes it, or
-# None for the unused all-zeros slot of an incomplete column.  Levels
-# use an 8-bit window per (first, suffixLength) holding (code_length,
-# level, next suffixLength); longer level codes miss (None) and decode
-# through level_prefix.  Built once per process from the H264_* dicts;
-# worker reuse keeps them.
+# The CAVLC code tables as ``bits.peek_lut`` tables, built once per
+# process; levels take an 8-bit window.
 _CAVLC_LUTS: tuple | None = None
 _CAVLC_LEVEL_BITS = 8
-
-
-def _cavlc_lut(table: dict) -> tuple[list, int]:
-    k = max(ln for ln, _ in table)
-    lut: list = [None] * (1 << k)
-    for (ln, code), val in table.items():
-        span = 1 << (k - ln)
-        entry = (ln, *val) if isinstance(val, tuple) else (ln, val)
-        lut[code * span : (code + 1) * span] = [entry] * span
-    return lut, k
 
 
 def _cavlc_luts() -> tuple:
@@ -2403,30 +2382,32 @@ def _cavlc_luts() -> tuple:
     zerosLeft 0..15, levels by [first][suffixLength]) as peek LUTs."""
     global _CAVLC_LUTS
     if _CAVLC_LUTS is None:
+        def token(table: dict) -> tuple[list, int]:
+            return peek_lut({key: (key[0], *v) for key, v in table.items()})
+
+        def column(table: dict) -> tuple[list, int]:
+            return peek_lut({key: (key[0], v) for key, v in table.items()})
+
         nc0, nc2, nc4 = (
-            _cavlc_lut(t) for t in (
+            token(t) for t in (
                 H264_COEFF_TOKEN_NC0, H264_COEFF_TOKEN_NC2,
                 H264_COEFF_TOKEN_NC4,
             )
         )
-        rb = {zl: _cavlc_lut(col) for zl, col in H264_RUN_BEFORE.items()}
-        k = _CAVLC_LEVEL_BITS
+        rb = {zl: column(col) for zl, col in H264_RUN_BEFORE.items()}
         levels: list = [[None] * 7, [None] * 7]
         for (first, suffix_len), rows in _cavlc_level_codes().items():
-            lut: list = [None] * (1 << k)
-            for level, ln, code, nxt in rows:
-                if ln <= k:
-                    span = 1 << (k - ln)
-                    lut[code * span : (code + 1) * span] = [
-                        (ln, level, nxt)
-                    ] * span
-            levels[first][suffix_len] = lut
+            levels[first][suffix_len] = peek_lut({
+                (ln, code): (ln, level, nxt)
+                for level, ln, code, nxt in rows
+                if ln <= _CAVLC_LEVEL_BITS
+            })[0]
         _CAVLC_LUTS = (
-            [_cavlc_lut(H264_COEFF_TOKEN_CHROMA_DC),
+            [token(H264_COEFF_TOKEN_CHROMA_DC),
              nc0, nc0, nc2, nc2, nc4, nc4, nc4, nc4],
-            {tc: _cavlc_lut(col) for tc, col in H264_TOTAL_ZEROS.items()},
+            {tc: column(col) for tc, col in H264_TOTAL_ZEROS.items()},
             {
-                tc: _cavlc_lut(col)
+                tc: column(col)
                 for tc, col in H264_TOTAL_ZEROS_CHROMA_DC.items()
             },
             [None] + [rb[min(zl, 7)] for zl in range(1, 16)],
@@ -3284,32 +3265,6 @@ VP8L_CL_ORDER = (
 )
 
 
-def _vp8l_canonical(doc_id: int, lengths: dict, what: str) -> dict:
-    """Canonical decode table {(nbits, code): symbol} with the
-    completeness gate (Kraft must be exactly 1).
-
-    The Kraft sum is computed in exact integer arithmetic scaled by
-    2^15 (the max VP8L code length): sum(2^(15-l)) == 2^15 iff
-    sum(2^-l) == 1 — same gate as the previous ``Fraction`` form,
-    which profiled as ~55%% of the whole VP8L decode."""
-    if sum(1 << (15 - l) for l in lengths.values()) != 1 << 15:
-        raise ValueError(f"doc {doc_id}: {what} code is not complete")
-    # canonical assignment in one sorted pass: iterate (length, symbol)
-    # ascending, left-shifting the running code ONCE at each length
-    # change — the same convention as synth._canonical_codes_from_lengths
-    # and bit-identical to the previous per-length loops.
-    out = {}
-    code = 0
-    prev_len = None
-    for ln, sym in sorted((l, s) for s, l in lengths.items()):
-        if prev_len is not None and ln != prev_len:
-            code <<= 1
-        out[(ln, code)] = sym
-        code += 1
-        prev_len = ln
-    return out
-
-
 def _vp8l_prefix_value(r: LsbReader, code: int) -> int:
     """LZ77 prefix decode (WebP lossless spec): code -> value >= 1."""
     if code < 4:
@@ -3323,8 +3278,9 @@ def _vp8l_read_code(doc_id: int, r: LsbReader, alphabet: int, what: str):
     """One Huffman code (simple or normal form).  Normal form reads
     code lengths through the code-length code with repeat symbols
     (16: repeat previous, 17/18: zero runs) and stops when the Kraft
-    budget closes — libwebp's early-stop convention, which doubles as
-    the completeness gate."""
+    budget closes — libwebp's early-stop convention.  Both codes must
+    be complete: their Kraft sums, scaled by 2^15 (the longest VP8L
+    code) to stay in integers, must be exactly 1."""
     if r.read(1):  # simple
         n_sym = r.read(1) + 1
         if r.read(1):
@@ -3336,7 +3292,7 @@ def _vp8l_read_code(doc_id: int, r: LsbReader, alphabet: int, what: str):
         second = r.read(8)
         if first == second:
             raise ValueError(f"doc {doc_id}: duplicate simple symbols")
-        return {(1, 0): min(first, second), (1, 1): max(first, second)}
+        return symbol_lut(((min(first, second), 1), (max(first, second), 1)))
     n_cl = 4 + r.read(4)
     if n_cl > 19:
         raise ValueError(f"doc {doc_id}: too many code-length codes")
@@ -3345,7 +3301,9 @@ def _vp8l_read_code(doc_id: int, r: LsbReader, alphabet: int, what: str):
         ln = r.read(3)
         if ln:
             cl_lengths[VP8L_CL_ORDER[k]] = ln
-    cl_table = _vp8l_canonical(doc_id, cl_lengths, "code-length")
+    if sum(1 << (15 - ln) for ln in cl_lengths.values()) != 1 << 15:
+        raise ValueError(f"doc {doc_id}: code-length code is not complete")
+    cl_table = symbol_lut(by_length(cl_lengths))
     max_symbol = alphabet
     if r.read(1):  # use_max_symbol
         length_nbits = 2 + 2 * r.read(3)
@@ -3386,7 +3344,9 @@ def _vp8l_read_code(doc_id: int, r: LsbReader, alphabet: int, what: str):
             f"doc {doc_id}: {what} code lengths oversubscribe the "
             "Kraft budget"
         )
-    return _vp8l_canonical(doc_id, lengths, what)
+    if space:
+        raise ValueError(f"doc {doc_id}: {what} code is not complete")
+    return symbol_lut(by_length(lengths))
 
 
 # WebP lossless spec distance map: plane codes 1..120 address a close
@@ -9804,7 +9764,7 @@ for _fam, _names in {
         "MP3_META_SCHEMA", "MP3_PRETAB", "MP3_SFB_LONG",
         "MP3_SFB_LONG_44100", "MP3_SFB_SHORT", "_MP3_B7_MATRICES",
         "_MP3_FB_Q", "_MP3_FB_TABLES", "_MP3_IS_TABLES",
-        "_MP3_RQ_TABLES", "_mp3_bv_table", "_mp3_fb_tables",
+        "_MP3_RQ_TABLES", "_mp3_fb_tables",
         "_mp3_granule_long", "_mp3_is_tables", "_mp3_rq_tables",
         "decode_mp3_frames", "decode_mp3_id3", "decode_mp3_id3v1",
         "decode_mp3_imdct", "decode_mp3_maindata", "decode_mp3_requant",

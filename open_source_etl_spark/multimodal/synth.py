@@ -18,7 +18,14 @@ from itertools import groupby
 import wave
 import zlib
 
-from .bits import LsbWriter, MsbWriter, crc_table, stuffed_bytes
+from .bits import (
+    LsbWriter,
+    MsbWriter,
+    by_length,
+    code_book,
+    crc_table,
+    stuffed_bytes,
+)
 
 
 def wav_params(doc_id: int) -> tuple[int, int, int]:
@@ -304,19 +311,18 @@ JPEG_AC_COUNTS = bytes([0, 1]) + bytes(14 * [0])
 JPEG_AC_SYMBOLS = bytes([0x00])
 
 
-def _canonical_codes(counts: bytes, symbols: bytes) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length) per the JPEG canonical assignment
-    (Annex C): codes of each length are consecutive, doubling at each
-    length step."""
-    codes: dict[int, tuple[int, int]] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[symbols[k]] = (code, length)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
+def jpeg_code_pairs(counts: bytes, symbols: bytes) -> tuple:
+    """A DHT's BITS (code counts for lengths 1-16) and HUFFVAL as the
+    (symbol, length) pairs ``bits.canonical_codes`` takes (Annex C:
+    shortest codes first, HUFFVAL order within a length).  Indexing
+    past the end of either raises IndexError."""
+    lengths = [ln for ln in range(1, 17) for _ in range(counts[ln - 1])]
+    return tuple((symbols[k], ln) for k, ln in enumerate(lengths))
+
+
+# the fixture tables' encoder maps, symbol -> (code, length)
+JPEG_DC_CODES = code_book(jpeg_code_pairs(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS))
+JPEG_AC_CODES = code_book(jpeg_code_pairs(JPEG_AC_COUNTS, JPEG_AC_SYMBOLS))
 
 
 def make_jpeg_bytes(doc_id: int) -> bytes:
@@ -354,8 +360,7 @@ def _jpeg_encode(
     for i in range(1, 64):
         quant[i] = 16
 
-    dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
-    ac_codes = _canonical_codes(JPEG_AC_COUNTS, JPEG_AC_SYMBOLS)
+    dc_codes, ac_codes = JPEG_DC_CODES, JPEG_AC_CODES
 
     w = MsbWriter()
     pred = 0
@@ -418,6 +423,9 @@ JPEG_PROG_AC_SYMBOLS = bytes(
     + [0xF0]
 )
 JPEG_PROG_AC_COUNTS = bytes([0, 0, 0, 0, len(JPEG_PROG_AC_SYMBOLS)] + [0] * 11)
+JPEG_PROG_AC_CODES = code_book(
+    jpeg_code_pairs(JPEG_PROG_AC_COUNTS, JPEG_PROG_AC_SYMBOLS)
+)
 
 
 def jpeg_prog_rst_interval(doc_id: int) -> int:
@@ -446,8 +454,7 @@ def make_jpeg_prog_rst_bytes(doc_id: int) -> bytes:
     for i in range(1, 64):
         quant[i] = 16
 
-    dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
-    ac_codes = _canonical_codes(JPEG_PROG_AC_COUNTS, JPEG_PROG_AC_SYMBOLS)
+    dc_codes, ac_codes = JPEG_DC_CODES, JPEG_PROG_AC_CODES
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
@@ -680,8 +687,7 @@ def make_jpeg_prog_bytes(doc_id: int) -> bytes:
     for i in range(1, 64):
         quant[i] = 16
 
-    dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
-    ac_codes = _canonical_codes(JPEG_PROG_AC_COUNTS, JPEG_PROG_AC_SYMBOLS)
+    dc_codes, ac_codes = JPEG_DC_CODES, JPEG_PROG_AC_CODES
 
     def seg(marker: int, payload: bytes) -> bytes:
         return struct.pack(">HH", marker, len(payload) + 2) + payload
@@ -889,8 +895,7 @@ def _jpeg_color_encode(doc_id: int, restart_interval: int) -> bytes:
     for i in range(1, 64):
         quant[i] = 16
 
-    dc_codes = _canonical_codes(JPEG_DC_COUNTS, JPEG_DC_SYMBOLS)
-    ac_codes = _canonical_codes(JPEG_PROG_AC_COUNTS, JPEG_PROG_AC_SYMBOLS)
+    dc_codes, ac_codes = JPEG_DC_CODES, JPEG_PROG_AC_CODES
 
     w = MsbWriter()
     pred = [0, 0, 0]
@@ -4311,19 +4316,6 @@ VP8L_CL_ORDER = (
 )
 
 
-def _canonical_codes_from_lengths(lengths: dict) -> dict:
-    """symbol -> (code, nbits) per the canonical convention (shorter
-    first, ties by symbol order)."""
-    out = {}
-    code = 0
-    for ln in sorted(set(lengths.values())):
-        for sym in sorted(s for s, l in lengths.items() if l == ln):
-            out[sym] = (code, ln)
-            code += 1
-        code <<= 1
-    return out
-
-
 def _vp8l_prefix(value: int) -> tuple[int, int, int]:
     """LZ77 prefix coding (WebP lossless spec): value >= 1 ->
     (prefix_code, extra_bits_value, extra_bits_count)."""
@@ -4428,7 +4420,7 @@ def make_webp_vp8l_bytes(doc_id: int) -> bytes:
         else {18: 1, 2: 2, 3: 2}
     )
     n_cl = 7 if n_cache else 6
-    cl_codes = _canonical_codes_from_lengths(cl_lengths)
+    cl_codes = code_book(by_length(cl_lengths))
 
     def put_cl(sym: int) -> None:
         c, n = cl_codes[sym]
@@ -4481,9 +4473,9 @@ def make_webp_vp8l_bytes(doc_id: int) -> bytes:
         red_lengths = {(red - 64 - j) % 256: 2 for j in range(4)}
         blue_lengths = {(blue - 64 - j) % 256: 2 for j in range(4)}
         put_normal_tree(red_lengths)
-        red_codes = _canonical_codes_from_lengths(red_lengths)
+        red_codes = code_book(by_length(red_lengths))
         put_normal_tree(blue_lengths)
-        blue_codes = _canonical_codes_from_lengths(blue_lengths)
+        blue_codes = code_book(by_length(blue_lengths))
     else:
         put_simple_tree(red)          # RED tree
         put_simple_tree(blue)         # BLUE tree
@@ -4491,7 +4483,7 @@ def make_webp_vp8l_bytes(doc_id: int) -> bytes:
     put_simple_tree(255)          # ALPHA tree
     put_simple_tree(dist_prefix)  # DISTANCE tree
 
-    green_codes = _canonical_codes_from_lengths(green_lengths)
+    green_codes = code_book(by_length(green_lengths))
     sim_cache = [None] * (1 << cache_bits) if n_cache else None
 
     def emit_literal(p_green: int) -> None:
@@ -4564,7 +4556,7 @@ def _vp8l_put_flat_tree(w: LsbWriter, n: int) -> dict:
     for s in VP8L_CL_ORDER[:n_cl]:
         w.put(cl_lengths.get(s, 0), 3)
     w.put(0, 1)               # no max_symbol shortcut
-    cl_codes = _canonical_codes_from_lengths(cl_lengths)
+    cl_codes = code_book(by_length(cl_lengths))
     # the flat tree uses at most two adjacent lengths, so the
     # per-symbol code-length stream is at most two RUNS of one
     # repeated 1-bit code each; emit each run as a single put of the
@@ -4585,7 +4577,7 @@ def _vp8l_put_flat_tree(w: LsbWriter, n: int) -> dict:
         # rc repeated cnt times at stride nb, as one integer
         pat = rc * (((1 << (nb * cnt)) - 1) // ((1 << nb) - 1))
         w.put(pat, nb * cnt)
-    return _canonical_codes_from_lengths(lengths)
+    return code_book(by_length(lengths))
 
 
 def _vp8l_split(p: int) -> tuple[int, int, int, int]:

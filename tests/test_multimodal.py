@@ -347,7 +347,7 @@ def test_jpeg_synth_is_spec_compliant():
             assert 0xDD not in markers and not rst_seen
 
 
-def test_jpeg_decode_hand_assembled(spark):
+def test_jpeg_decode_hand_assembled():
     """Decode a JPEG assembled BY HAND in the test (not via synth.py):
     one 8x8 block with a nonzero AC coefficient, so the run/size AC
     path, extend() sign logic, dequantization, and IDCT are exercised
@@ -406,13 +406,12 @@ def test_jpeg_decode_hand_assembled(spark):
             total += max(0, min(255, px))
     exp_mean = total // 64
 
-    media = spark.createDataFrame([(3, jpg)], "doc_id long, payload binary")
-    r = decode_jpeg_real(media).collect()[0]
+    r = _decode_one(decode_jpeg_real, 3, jpg)
     assert (r.width, r.height, r.n_blocks) == (8, 8, 1)
     assert r.mean_gray == exp_mean
 
 
-def test_jpeg_decode_rejects_malformed(spark):
+def test_jpeg_decode_rejects_malformed():
     """Progressive SOF, truncated scans, and stray in-scan markers must
     raise, not decode to silently wrong pixels."""
     import pytest
@@ -429,19 +428,16 @@ def test_jpeg_decode_rejects_malformed(spark):
     stray[-6] = 0xFF  # un-stuffed FF inside the entropy stream
     stray[-5] = 0xD4
 
-    for label, payload in (
-        ("progressive", bytes(progressive)),
-        ("truncated", bytes(truncated)),
-        ("stray-marker", bytes(stray)),
+    for payload, message in (
+        (bytes(progressive), "non-baseline SOF c2"),
+        (bytes(truncated), "missing EOI"),
+        (bytes(stray), "RSTn marker without a DRI segment"),
     ):
-        media = spark.createDataFrame(
-            [(11, payload)], "doc_id long, payload binary"
-        )
-        with pytest.raises(Exception):
-            decode_jpeg_real(media).collect()
+        with pytest.raises(ValueError, match=f"^doc 11: {message}$"):
+            _decode_rows(decode_jpeg_real, 11, payload)
 
 
-def test_jpeg_decode_rejects_zrl_overflow(spark):
+def test_jpeg_decode_rejects_zrl_overflow():
     """A malformed run of ZRL (0xF0) symbols that advances the AC index
     past 63 must raise 'AC index overflow' like every other malformed
     path — the round-4 guard only covered the run/size path, so a
@@ -484,9 +480,8 @@ def test_jpeg_decode_rejects_zrl_overflow(spark):
         + b"\xff\xd9"
     )
 
-    media = spark.createDataFrame([(7, jpg)], "doc_id long, payload binary")
-    with pytest.raises(Exception, match="AC index overflow"):
-        decode_jpeg_real(media).collect()
+    with pytest.raises(ValueError, match="^doc 7: AC index overflow$"):
+        _decode_rows(decode_jpeg_real, 7, jpg)
 
 
 def test_gif_synth_is_spec_compliant():
@@ -723,7 +718,7 @@ def test_gif_decode_rejects_malformed(spark):
             decode_gif_real(media).collect()
 
 
-def test_jpeg_decode_tolerates_fill_bytes(spark):
+def test_jpeg_decode_tolerates_fill_bytes():
     """Spec-legal 0xFF padding before a marker (ISO/IEC 10918-1
     B.1.1.2) must be skipped, not treated as a bogus segment."""
     from open_source_etl_spark.multimodal.decode import decode_jpeg_real
@@ -732,8 +727,7 @@ def test_jpeg_decode_tolerates_fill_bytes(spark):
     raw = make_jpeg_bytes(23)
     sof_at = raw.index(b"\xff\xc0")
     padded = raw[:sof_at] + b"\xff\xff\xff" + raw[sof_at:]
-    media = spark.createDataFrame([(23, padded)], "doc_id long, payload binary")
-    r = decode_jpeg_real(media).collect()[0]
+    r = _decode_one(decode_jpeg_real, 23, padded)
     bx, by, base = jpeg_params(23)
     n = bx * by
     assert (r.width, r.height, r.mean_gray) == (8 * bx, 8 * by, base + (n - 1) // 2)
@@ -5164,6 +5158,33 @@ def test_webp_vp8l_decodes_and_rejects_corruption(spark):
         except Exception:
             flips_raised += 1
     assert flips_raised >= 3
+
+
+def test_vp8l_code_uses_rfc_canonical_order():
+    """VP8L's canonical codes follow DEFLATE's rule (RFC 9649 after RFC
+    1951 §3.2.2): the running code shifts by the length step, so the
+    lengths {0: 1, 1-4: 3}, which skip length 2, code symbols 0-4 as
+    0 100 101 110 111.  The bitstream is written here field by field:
+    a normal-form code whose code-length code gives lengths 1 and 3
+    the one-bit codes 0 and 1, then five symbols."""
+    from open_source_etl_spark.multimodal.bits import LsbReader, LsbWriter
+    from open_source_etl_spark.multimodal.decode import _vp8l_read_code
+
+    w = LsbWriter()
+    w.put(0, 1)  # normal form
+    w.put(6 - 4, 4)  # six code-length lengths, for kOrder 17 18 0 1 2 3
+    for ln in (0, 0, 0, 1, 0, 1):
+        w.put(ln, 3)
+    w.put(0, 1)  # no max_symbol
+    for bit in "01111":  # symbol 0 takes length 1, symbols 1-4 length 3
+        w.put(int(bit), 1)
+    rfc = {0: "0", 1: "100", 2: "101", 3: "110", 4: "111"}
+    symbols = [4, 0, 3, 1, 2, 2, 0]
+    for sym in symbols:
+        w.put_code(int(rfc[sym], 2), len(rfc[sym]))
+    r = LsbReader(w.to_bytes(), "end of data", "invalid {} code")
+    code = _vp8l_read_code(0, r, 256, "red")
+    assert [r.read_symbol(code, "red") for _ in symbols] == symbols
 
 
 def test_webp_vp8l_transforms_invert_exactly():

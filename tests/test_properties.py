@@ -283,6 +283,128 @@ def test_backward_bits_roundtrip(fields):
         r.read(1)
 
 
+@st.composite
+def prefix_codes(draw):
+    """{symbol: length} of a prefix code up to 15 bits: a complete code
+    grown by splitting leaves of a one-bit code, then, on half the
+    draws, with leaves dropped (an incomplete code)."""
+    leaves = [1, 1]
+    for _ in range(draw(st.integers(0, 48))):
+        i = draw(st.integers(0, len(leaves) - 1))
+        if leaves[i] < 15:
+            leaves[i : i + 1] = [leaves[i] + 1] * 2
+    if draw(st.booleans()):
+        keep = draw(st.lists(
+            st.booleans(), min_size=len(leaves), max_size=len(leaves)
+        ))
+        leaves = [ln for ln, k in zip(leaves, keep) if k] or leaves[:1]
+    symbols = draw(st.lists(
+        st.integers(0, 511), min_size=len(leaves), max_size=len(leaves),
+        unique=True,
+    ))
+    return dict(zip(symbols, leaves))
+
+
+# bit order: (reader, writer, the writer's code and plain writes, the
+#             reader's plain read, its ``bad`` text, the raise it gives)
+PREFIX_READERS = {
+    "msb": ("MsbReader", "MsbWriter", "u", "u", "u", "no code", "no code"),
+    "lsb": (
+        "LsbReader", "LsbWriter", "put_code", "put", "read", "no {} code",
+        "no test code",
+    ),
+}
+
+
+@given(prefix_codes(), st.sampled_from(sorted(PREFIX_READERS)), st.data())
+@settings(max_examples=300, deadline=None)
+def test_prefix_code_roundtrip(lengths, order, data):
+    """Canonical codes from ``canonical_codes``, written through
+    either writer, read back through that bit order's ``read_symbol``;
+    a stream cut mid-code raises ``eof``; bits that no code prefixes
+    raise ``bad`` exactly when 16 or more bits remain, else ``eof``."""
+    import pytest
+
+    from open_source_etl_spark.multimodal import bits
+
+    reader_name, writer_name, code_name, put_name, skip_name, bad, raised = (
+        PREFIX_READERS[order]
+    )
+    pairs = bits.by_length(lengths)
+    table = bits.symbol_lut(pairs)
+    book = bits.code_book(pairs)
+
+    def stream(symbols, lead=0, after=0):
+        """Bytes of ``lead`` zero bits, the codes of ``symbols`` (a
+        symbol or a ``(code, nbits)`` pair), then ``after`` zero bits;
+        and the bit count before ``after``."""
+        w = getattr(bits, writer_name)()
+        getattr(w, put_name)(0, lead)
+        nbits = lead
+        for s in symbols:
+            code, n = s if isinstance(s, tuple) else book[s]
+            getattr(w, code_name)(code, n)
+            nbits += n
+        getattr(w, put_name)(0, after)
+        if order == "msb":
+            w.align()
+        return w.to_bytes(), nbits
+
+    def reader(raw, lead):
+        r = getattr(bits, reader_name)(raw, "end of data", bad)
+        getattr(r, skip_name)(lead)
+        return r
+
+    def read(r):
+        if order == "msb":
+            return r.read_symbol(table)
+        return r.read_symbol(table, "test")
+
+    message = data.draw(st.lists(st.sampled_from(sorted(lengths)), max_size=40))
+    raw, at = stream(message)
+    r = reader(raw, 0)
+    assert [read(r) for _ in message] == message
+
+    # cut mid-code: the last code starts ``have`` bits before the end
+    long = [s for s in lengths if lengths[s] > 1]
+    if long:
+        last = data.draw(st.sampled_from(long))
+        have = data.draw(st.integers(1, min(lengths[last] - 1, 7)))
+        lead = (8 - have - at) % 8
+        raw, _ = stream(message + [last], lead)
+        r = reader(raw[: (lead + at + have) // 8], lead)
+        assert [read(r) for _ in message] == message
+        with pytest.raises(ValueError, match="^end of data$"):
+            read(r)
+
+    # bits no code prefixes (an unused slot), then ``after`` more bits
+    slots, k = table
+    unused = [i for i, e in enumerate(slots) if e is None]
+    if unused:
+        slot = data.draw(st.sampled_from(unused))
+        raw, _ = stream(message + [(slot, k)], 0, data.draw(st.integers(0, 24)))
+        r = reader(raw, 0)
+        assert [read(r) for _ in message] == message
+        left = 8 * len(raw) - r.pos
+        with pytest.raises(
+            ValueError, match=f"^{raised if left >= 16 else 'end of data'}$"
+        ):
+            read(r)
+
+
+def test_prefix_code_overflow_is_unreachable():
+    """More codes of a length than it has bit strings (a corrupt JPEG
+    DHT can say so): the extra code keeps its overflowed value, and no
+    slot of the peek table reaches it."""
+    from open_source_etl_spark.multimodal import bits
+
+    pairs = ((7, 1), (8, 1), (9, 1), (10, 2))
+    assert bits.canonical_codes(pairs) == {
+        (1, 0): 7, (1, 1): 8, (1, 2): 9, (2, 6): 10,
+    }
+    assert bits.symbol_lut(pairs) == ([(1, 7), (1, 7), (1, 8), (1, 8)], 2)
+
+
 @given(
     profile=st.sampled_from([66, 77, 88]),
     level=st.integers(min_value=9, max_value=52),

@@ -57,6 +57,8 @@ FAMILIES = {
         "make_jpeg_bytes", "decode_jpeg_real"),
     "multimodal_jpeg_progressive_decode": (
         "make_jpeg_prog_bytes", "decode_jpeg_progressive"),
+    "multimodal_jpeg_color_decode": (
+        "make_jpeg_color_bytes", "decode_jpeg_color"),
     "multimodal_flac_decode": (
         "make_flac_bytes", "decode_flac_real"),
     "multimodal_webp_vp8l_decode": (
