@@ -494,7 +494,8 @@ def code_book(pairs: tuple) -> dict:
 
 class _BitReversal(dict):
     """k -> the list of every k-bit value bit-reversed, built on first
-    use (``LsbReader.read_symbol``'s index into MSB-first tables)."""
+    use: MSB-first codes in LSB-first streams (``LsbReader.read_symbol``,
+    ``LsbWriter.put_code``)."""
 
     def __missing__(self, k: int) -> list:
         rev = [0] * (1 << k)
